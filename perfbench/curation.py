@@ -5,8 +5,10 @@ edits, plus 4,000 embeddings) is written as a generated table
 directory, so four registry queries run on it unchanged:
 ``corpus_curation_pipeline``, ``dedup_exact``, ``minhash_near_dups`` and
 ``embedding_cosine_topk``. One operation is one pass over the four
-(plan + execute + collect). Closed loop, one caller, passes back to back
-after one warm-up pass over a small corpus (see ``Curation``).
+(plan + execute + collect). Closed loop, one caller, passes back to back.
+There is no warm-up: a curation job runs its queries once in a fresh
+session, so the timed first pass pays the Python workers' start and the
+plans' code generation as that job does.
 
 Checks per pass: each query's rows equal ``registry.oracle_sql()`` run on
 DuckDB over the same directory, compared with ``scripts.driver_sim``'s
@@ -63,20 +65,13 @@ def _near(rng, text: str) -> str:
     return " ".join(words)
 
 
-def generate(
-    seed: int,
-    work_dir: str,
-    n_base: int = N_BASE,
-    n_exact: int = N_EXACT,
-    n_near: int = N_NEAR,
-    n_emb: int = N_EMB,
-) -> dict:
+def generate(seed: int, work_dir: str) -> dict:
     """Write the corpus as a table directory; return it with each query's
     oracle result."""
     rng = np.random.default_rng(seed)
     os.makedirs(work_dir, exist_ok=True)
     texts: list[str] = []
-    kinds = ["base"] * n_base + ["exact"] * n_exact + ["near"] * n_near
+    kinds = ["base"] * N_BASE + ["exact"] * N_EXACT + ["near"] * N_NEAR
     rng.shuffle(kinds)
     kinds[0] = "base"
     for kind in kinds:
@@ -98,11 +93,11 @@ def generate(
         }
     )
     centers = rng.normal(size=(10, DIM))
-    labels = rng.integers(0, 10, n_emb)
-    vecs = (centers[labels] + 0.6 * rng.normal(size=(n_emb, DIM))).astype(np.float32)
+    labels = rng.integers(0, 10, N_EMB)
+    vecs = (centers[labels] + 0.6 * rng.normal(size=(N_EMB, DIM))).astype(np.float32)
     emb = pa.table(
         {
-            "vec_id": pa.array(np.arange(n_emb), pa.int64()),
+            "vec_id": pa.array(np.arange(N_EMB), pa.int64()),
             "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
             "label": pa.array(labels, pa.int32()),
         }
@@ -178,15 +173,7 @@ class Curation(PassWorkload):
     def __init__(self, seed: int, work_dir: str, seconds: float):
         super().__init__()
         self.inputs = generate(seed, work_dir)
-        # The warm-up pass runs the four queries on a small corpus: it starts
-        # the Python workers (spawn + imports, seconds of disk-bound work)
-        # and compiles the plans' code before the timed pass.
-        self.small = generate(seed + 1, os.path.join(work_dir, "small"), 200, 60, 40, 200)
         self.live_caches: list[int] = []
-
-    def warmup(self, spark, tracer) -> None:
-        results, _ = one_pass(spark, self.small, tracer)
-        self.errors += check_pass(self.small, results)
 
     def run_pass(self, spark, tracer) -> dict:
         results, live = one_pass(spark, self.inputs, tracer)

@@ -35,6 +35,20 @@ def loadavg() -> list[float]:
     return list(os.getloadavg())
 
 
+def cpu_ticks() -> list[int]:
+    """The machine's CPU time so far, in ticks, from the first line of
+    /proc/stat (user, nice, system, idle, iowait, irq, softirq, steal)."""
+    with open("/proc/stat") as f:
+        return [int(v) for v in f.readline().split()[1:9]]
+
+
+def steal_share(start: list[int], end: list[int]) -> float:
+    """The share of CPU time between two ``cpu_ticks`` readings that the
+    hypervisor gave to other guests (steal)."""
+    delta = [b - a for a, b in zip(start, end)]
+    return delta[7] / max(1, sum(delta))
+
+
 def _vm_hwm_kb(pid: int) -> int:
     try:
         with open(f"/proc/{pid}/status") as f:
@@ -66,13 +80,20 @@ def jvm_pid() -> int | None:
     return None
 
 
-def peak_rss_mb() -> float:
-    """Peak resident memory (VmHWM) of this process plus its Spark JVM."""
-    kb = _vm_hwm_kb(os.getpid())
+def peak_rss_mb() -> dict:
+    """Peak resident memory (VmHWM) of this process and of its Spark JVM."""
     pid = jvm_pid()
-    if pid is not None:
-        kb += _vm_hwm_kb(pid)
-    return kb / 1024.0
+    return {
+        "python": _vm_hwm_kb(os.getpid()) / 1024.0,
+        "jvm": (_vm_hwm_kb(pid) if pid is not None else 0) / 1024.0,
+    }
+
+
+def dir_bytes(path: str) -> int:
+    """Total size of the files under ``path``."""
+    return sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, files in os.walk(path) for f in files
+    )
 
 
 def cpu_s() -> float:
@@ -111,6 +132,26 @@ def environment(spark, seed: int) -> dict:
     }
 
 
+def count_jobs(sc, group: str) -> dict:
+    """Spark job, stage and task counts of one job group so far, read from
+    the status tracker."""
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = tasks = failed = 0
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        if info is None:
+            continue
+        for sid in info.stageIds:
+            st = tracker.getStageInfo(sid)
+            if st is None:
+                continue
+            stages += 1
+            tasks += st.numTasks
+            failed += st.numFailedTasks
+    return {"jobs": len(jobs), "stages": stages, "tasks": tasks, "tasks_failed": failed}
+
+
 class JobCounter:
     """Spark job/stage/task counts per operation, read from the status
     tracker for a job group set around the operation."""
@@ -122,7 +163,10 @@ class JobCounter:
         self._n = 0
 
     @contextmanager
-    def op(self, label: str):
+    def op(self, label: str, extra_groups: list[str]):
+        """Count the jobs run in the operation's own group, plus those of
+        the groups in ``extra_groups`` when it ends (a streaming query runs
+        its jobs in a group named after its run id)."""
         if not self.enabled:
             yield
             return
@@ -133,24 +177,8 @@ class JobCounter:
             yield
         finally:
             self.sc.setJobGroup(None, None)
-            self.per_op.append({"op": label, **self.count_group(group)})
-
-    def count_group(self, group: str) -> dict:
-        tracker = self.sc.statusTracker()
-        jobs = tracker.getJobIdsForGroup(group)
-        stages = tasks = failed = 0
-        for jid in jobs:
-            info = tracker.getJobInfo(jid)
-            if info is None:
-                continue
-            for sid in info.stageIds:
-                st = tracker.getStageInfo(sid)
-                if st is None:
-                    continue
-                stages += 1
-                tasks += st.numTasks
-                failed += st.numFailedTasks
-        return {"jobs": len(jobs), "stages": stages, "tasks": tasks, "tasks_failed": failed}
+            counts = [count_jobs(self.sc, g) for g in [group, *extra_groups]]
+            self.per_op.append({"op": label, **{k: sum(c[k] for c in counts) for k in counts[0]}})
 
     def metrics(self) -> dict:
         if not self.per_op:
@@ -164,15 +192,17 @@ class JobCounter:
 
 
 class PassWorkload:
-    """A closed loop with one caller: after the subclass's ``warmup``,
-    passes run back to back until ``seconds`` have passed, at least one.
-    Subclasses provide ``warmup``, ``run_pass`` and ``check``."""
+    """A closed loop with one caller: passes run back to back until
+    ``seconds`` have passed, at least one. Subclasses provide ``run_pass``
+    and ``check``."""
 
     label = "pass"
 
     def __init__(self):
         self.errors: list[str] = []
         self.cpu: list[float] = []
+        # Job groups, besides its own, whose jobs count toward the current pass.
+        self.job_groups: list[str] = []
 
     def run_pass(self, spark, tracer):
         raise NotImplementedError
@@ -183,9 +213,6 @@ class PassWorkload:
     def instrument(self, tracer) -> None:
         pass
 
-    def warmup(self, spark, tracer) -> None:
-        raise NotImplementedError
-
     def measure(self, spark, seconds: float, tracer, jobs) -> tuple[list[float], int, int]:
         """Returns (wall time of each successful pass, attempted, failed)."""
         samples: list[float] = []
@@ -193,7 +220,8 @@ class PassWorkload:
         deadline = now() + seconds
         while attempted == 0 or now() < deadline:
             attempted += 1
-            with tracer.operation(f"{self.label}{attempted}"), jobs.op(self.label):
+            self.job_groups.clear()
+            with tracer.operation(f"{self.label}{attempted}"), jobs.op(self.label, self.job_groups):
                 t, c = now(), cpu_s()
                 try:
                     out = self.run_pass(spark, tracer)
@@ -209,9 +237,6 @@ class PassWorkload:
         if not samples:
             raise RuntimeError(f"every {self.label} failed: {self.errors[:1]}")
         return samples, attempted, failed
-
-    def end_to_end(self, samples: list[float]) -> dict:
-        return {"wall_s": (median(samples), "s")}
 
     def meta(self) -> dict:
         return {"op_cpu_s": self.cpu}

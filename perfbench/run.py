@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Repository benchmark: one workload, one seed, one result line.
 
-    python3 perfbench/run.py --workload etl_batch --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload etl_batch --seed 1 --seconds 5 --trace 0
 
 Run from the repository root. ``--trace 0`` prints the end-to-end metrics;
 ``--trace 1`` wraps the engine's layer boundaries in spans and prints the
@@ -12,6 +12,7 @@ nproc, load average, versions, input generation time, errors)."""
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import shutil
 import subprocess
@@ -25,6 +26,7 @@ from harness import (  # noqa: E402
     ROOT,
     WORK_DIR,
     JobCounter,
+    cpu_ticks,
     emit,
     environment,
     loadavg,
@@ -33,44 +35,15 @@ from harness import (  # noqa: E402
     nproc,
     peak_rss_mb,
     process_age_s,
+    steal_share,
 )
 from tracing import Tracer  # noqa: E402
 
-# Workloads BENCHMARK.json lists; track_feed runs on request only (README).
-WORKLOADS = ("etl_batch", "curation", "track_feed")
+WORKLOADS = ("etl_batch", "curation")
 
-# The per-layer metrics BENCHMARK.json lists, printed by every traced run.
-PER_LAYER = (
-    "session.get_spark_s",
-    "session.warmup_s",
-    "sources.write_csv_s",
-    "sources.write_csv.crawls_s",
-    "sources.write_feature_collection_s",
-    "sources.read_csv_s",
-    "sources.bytes_written_per_input_byte",
-    "plans.run_batch_etl_self_s",
-    "plans.run_qa_s",
-    "operators.quality_checks_s",
-    "operators.cache.live_caches_end",
-    "queries.corpus_curation_pipeline.plan_s",
-    "queries.corpus_curation_pipeline.exec_s",
-    "queries.dedup_exact.plan_s",
-    "queries.dedup_exact.exec_s",
-    "queries.minhash_near_dups.plan_s",
-    "queries.minhash_near_dups.exec_s",
-    "queries.embedding_cosine_topk.plan_s",
-    "queries.embedding_cosine_topk.exec_s",
-    "stats.hellinger_rda_s",
-    "stats.pcnm_scores_s",
-    "spark.jobs_per_op",
-    "spark.stages_per_op",
-    "spark.tasks_per_op",
-    "spark.tasks_failed",
-    "runtime.cpu_s_per_op",
-    "trace.wall_s",
-    "trace.setup_s",
-    "trace.peak_rss_mb",
-)
+# The per-layer metrics BENCHMARK.json lists, by name, with their units.
+with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+    PER_LAYER = {m["name"]: m["unit"] for m in json.load(f)["per_layer"]}
 
 
 def _workload(name: str):
@@ -78,17 +51,13 @@ def _workload(name: str):
         from etl_batch import EtlBatch
 
         return EtlBatch
-    if name == "track_feed":
-        from track_feed import TrackFeed
-
-        return TrackFeed
     from curation import Curation
 
     return Curation
 
 
 def run(args) -> int:
-    load_start = loadavg()
+    load_start, ticks_start = loadavg(), cpu_ticks()
     try:
         from ningaloo_turtle_etl_spark.session import get_spark
     except ImportError as exc:
@@ -110,24 +79,23 @@ def run(args) -> int:
         get_spark_s = now() - t
         spark.sparkContext.setLogLevel("ERROR")
         workload.instrument(tracer)
-        t = now()
-        workload.warmup(spark, tracer)
-        warmup_s = now() - t
         setup_s = process_age_s() - gen_s
 
         jobs = JobCounter(spark, enabled=tracer.enabled)
         samples, attempted, failed = workload.measure(spark, args.seconds, tracer, jobs)
-        rss = peak_rss_mb()
-        e2e = {**workload.end_to_end(samples), "setup_s": (setup_s, "s")}
+        rss_parts = peak_rss_mb()
+        rss = sum(rss_parts.values())
+        e2e = {"wall_s": (median(samples), "s"), "setup_s": (setup_s, "s")}
         meta = {
             "workload": args.workload,
             "trace": args.trace,
             **environment(spark, args.seed),
             "loadavg_start": load_start,
             "gen_s": gen_s,
-            "peak_rss_mb": rss,
             "samples": len(samples),
             "sample_values_s": samples,
+            "peak_rss_mb": rss,
+            "peak_rss_parts_mb": rss_parts,
             "ops_failed_frac": failed / max(1, attempted),
             "errors": workload.errors[:20],
             "spark_per_op": jobs.per_op,
@@ -136,21 +104,20 @@ def run(args) -> int:
         if args.trace:
             layer = {
                 "session.get_spark_s": (get_spark_s, "s"),
-                "session.warmup_s": (warmup_s, "s"),
                 **jobs.metrics(),
                 "runtime.cpu_s_per_op": (median(meta.get("op_cpu_s") or [0.0]), "s"),
                 **workload.layer_metrics(tracer),
                 **{f"trace.{k}": v for k, v in e2e.items()},
                 "trace.peak_rss_mb": (rss, "MB"),
             }
-            # Every listed metric, 0 where the workload does not run that
-            # layer, plus any the workload adds (track_feed's streaming set).
-            metrics = {k: layer.get(k, (0.0, _unit(k))) for k in PER_LAYER} | layer
+            # Every listed metric, 0 where the workload does not run that layer.
+            metrics = {k: layer.get(k, (0.0, unit)) for k, unit in PER_LAYER.items()}
             os.makedirs(OUT_DIR, exist_ok=True)
             tracer.dump(os.path.join(OUT_DIR, f"trace-{args.workload}-seed{args.seed}.json"))
         else:
             metrics = e2e
         meta["loadavg_end"] = loadavg()
+        meta["cpu_steal_share"] = steal_share(ticks_start, cpu_ticks())
         emit(not workload.errors and failed == 0, attempted, failed, metrics, meta)
         return 0
     finally:
@@ -178,10 +145,6 @@ def _stop_spark(spark) -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
-
-
-def _unit(name: str) -> str:
-    return "s" if name.endswith("_s") else "MB" if name.endswith("_mb") else "count"
 
 
 def main(argv=None) -> int:

@@ -4,7 +4,9 @@ Spans are recorded from the benchmark's own files around calls into the
 engine's layers: a layer function is wrapped where its caller looks it up
 (for example ``write_csv`` in ``plans.etl_graph``'s namespace), so the
 program files stay untouched. Each span keeps name, start, end, parent and
-operation id; spans are written out once, when the run ends. A disabled
+operation id; spans are written out once, when the run ends. One thread
+opens spans at a time: the streaming sink's callback runs on its own
+thread while the caller waits for the query. A disabled
 tracer records nothing and wraps nothing, so the untraced run measures the
 plain engine."""
 
@@ -12,7 +14,6 @@ from __future__ import annotations
 
 import functools
 import json
-import threading
 import time
 from contextlib import contextmanager
 
@@ -23,14 +24,8 @@ class Tracer:
         self.spans: list[dict] = []
         self.op_id: str | None = None
         self.ops: list[str] = []  # ids of the timed operations, in order
-        self._local = threading.local()
-        self._lock = threading.Lock()
+        self._stack: list[int] = []  # ids of the open spans
         self._patches: list[tuple[object, str, object]] = []
-
-    def _stack(self) -> list[int]:
-        if not hasattr(self._local, "stack"):
-            self._local.stack = []
-        return self._local.stack
 
     @contextmanager
     def operation(self, op_id: str):
@@ -47,25 +42,22 @@ class Tracer:
         if not self.enabled:
             yield
             return
-        stack = self._stack()
-        with self._lock:
-            sid = len(self.spans)
-            self.spans.append(
-                {
-                    "id": sid,
-                    "name": name,
-                    "parent": stack[-1] if stack else None,
-                    "op": self.op_id,
-                    "thread": threading.get_ident(),
-                    "start": time.perf_counter(),
-                    "end": None,
-                }
-            )
-        stack.append(sid)
+        sid = len(self.spans)
+        self.spans.append(
+            {
+                "id": sid,
+                "name": name,
+                "parent": self._stack[-1] if self._stack else None,
+                "op": self.op_id,
+                "start": time.perf_counter(),
+                "end": None,
+            }
+        )
+        self._stack.append(sid)
         try:
             yield
         finally:
-            stack.pop()
+            self._stack.pop()
             self.spans[sid]["end"] = time.perf_counter()
 
     def patch(self, owner: object, attr: str, make) -> None:
