@@ -763,7 +763,7 @@ def split_conformal_report(
     construction.
 
     Scale shape: the split and residuals are map-only; n_cal is one
-    driver scalar (bounded-driver list, SCALING.md); q̂ is one aggregate.
+    driver scalar (bounded driver state); q̂ is one aggregate.
     ``exact=True`` uses Spark's exact percentile at the integral order-
     statistic index — per-group memory like the exact winsorize path;
     ``exact=False`` flips to approx_percentile for corpus scale,
@@ -771,7 +771,7 @@ def split_conformal_report(
     as winsorized_value_stats)."""
     if not 0 < alpha < 1 or not 0 < calib_frac < 1:
         raise ValueError("alpha and calib_frac must be in (0, 1)")
-    from ningaloo_turtle_etl_spark.operators.trend import _md5_uniform
+    from ningaloo_turtle_etl_spark.operators.dedup import _md5_uniform
 
     u = _md5_uniform(F.col(id_col))
     resid = F.abs(

@@ -160,6 +160,18 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def _md5_uniform(*cols) -> Column:
+    """Deterministic uniform in [0, 1): first 8 md5 hex digits of the
+    '#'-joined inputs, as a 32-bit fraction. Pure integer+divide -- the
+    same double on any engine."""
+    h = F.conv(
+        F.substring(F.md5(F.concat_ws("#", *[c.cast("string") for c in cols])), 1, 8),
+        16,
+        10,
+    ).cast("long")
+    return h / F.lit(float(2**32))
+
+
 def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Fixed (a, b) pairs for the universal-hash MinHash slots, derived from
     md5 of the slot index — deterministic constants, no RNG state, shared by
@@ -215,7 +227,7 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 32) -> Column:
     xxhash64(i, s). One array column of length ``num_hashes``; entirely
     JVM-side.
 
-    Measured decision (r06 A/B, scripts/ab_minhash.py, idle host, 3 reps):
+    Measured decision (r06 A/B, idle host, 3 reps):
     this per-slot form beats the r05 "hash-once + 2-universal integer
     slots" scheme ~1.5× end-to-end (3.37 s vs 5.22 s at 20k docs;
     1.57 s vs 1.77 s at 500 docs) — xxhash64 over short strings is a fused
@@ -426,7 +438,7 @@ def minhash_near_dup_pairs(
     # Signature per family: md5 derives slots from the already-hashed
     # shingle set (one digest per shingle, then integer min-folds —
     # DuckDB-reproducible, buys the oracle row); xxhash64 re-hashes the
-    # string per slot, which the r06 A/B (scripts/ab_minhash.py) measured
+    # string per slot, which the r06 A/B measured
     # ~1.5× faster end-to-end than the integer-slot scheme AND slightly
     # higher recall. Both are computed in the SAME select as ``sh`` so the
     # string shingles never ride the cache — only (id, sh, sig) persists.

@@ -282,7 +282,7 @@ def bfs_hops(
         # lazy checkpoint would skip partitions and lose blocks).
         # Measured honestly: job count is a WASH here — the fused
         # count's final-aggregate exchange job replaces the removed
-        # isEmpty job one-for-one (JOB_COUNTS_r14: 44 → 44) — but the
+        # isEmpty job one-for-one (measured 44 → 44 jobs) — but the
         # frontier is no longer computed ahead of a probe that reads
         # one partition, and wall time reads slightly better.
         nxt = (
@@ -984,9 +984,8 @@ def _truss_edge_support(ed: DataFrame) -> DataFrame:
     (ReusedExchange only dedupes the shuffle writes feeding the joins,
     not the join/codegen work above them); the explode form enumerates
     triangles once and emits the identical (a, b) multiset, so the
-    support counts — and the k_truss oracle — are unchanged. Plan
-    evidence: plans/r14/ktruss_support_round_{before,after}.txt;
-    result pin: test_k_truss_mixed_support_and_peel_to_empty."""
+    support counts — and the k_truss oracle — are unchanged. Result
+    pin: test_k_truss_mixed_support_and_peel_to_empty."""
     xy = ed.select(F.col("a").alias("x"), F.col("b").alias("y"))
     yz = ed.select(F.col("a").alias("y"), F.col("b").alias("z"))
     xz = ed.select(F.col("a").alias("x"), F.col("b").alias("z"))

@@ -706,7 +706,7 @@ def negative_samples(
         raise ValueError("n_buckets must be >= 1")
     from pyspark.sql.window import Window
 
-    from ningaloo_turtle_etl_spark.operators.trend import _md5_uniform
+    from ningaloo_turtle_etl_spark.operators.dedup import _md5_uniform
 
     w = F.pow(F.col(weight_col).cast("double"), F.lit(float(power)))
     items = item_weights.select(

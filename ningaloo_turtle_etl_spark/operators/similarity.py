@@ -1413,6 +1413,30 @@ def _np_round_half_up_i64(y: np.ndarray) -> np.ndarray:
     return np.where(y < 0, -mag, mag)
 
 
+def _xm_matrix(batch, dim: int) -> np.ndarray:
+    """The batch's ``xm`` list column as an (n, dim) int64 matrix. Raises
+    ValueError on a NULL vector, a NULL element or a row whose length is
+    not ``dim``: reshaping the flattened child would otherwise read a NULL
+    slot as an arbitrary int64 and silently misalign ragged rows whose
+    total length happens to divide by ``dim``."""
+    import pyarrow.compute as pc
+
+    col = batch.column(0)
+    if col.null_count:
+        raise ValueError("pca: xm has NULL vectors")
+    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if (lengths != dim).any():
+        raise ValueError(f"pca: every xm vector must have length {dim}")
+    flat = col.flatten()
+    if flat.null_count:
+        raise ValueError("pca: xm has NULL elements")
+    if len(flat) == 0:
+        return np.zeros((0, dim), np.int64)
+    return flat.to_numpy(zero_copy_only=False).reshape(-1, dim).astype(
+        np.int64, copy=False
+    )
+
+
 def _pca_coord_sum_grid(base: DataFrame, dim: int, _frame_only: bool = False):
     """Per-coordinate exact int64 sums (and the row count) of the ``xm``
     micro-vector column as an Arrow partial grid: one ``mapInArrow``
@@ -1432,10 +1456,9 @@ def _pca_coord_sum_grid(base: DataFrame, dim: int, _frame_only: bool = False):
         acc = np.zeros(dim, np.int64)
         n = 0
         for batch in it:
-            flat = batch.column(0).flatten().to_numpy(zero_copy_only=False)
-            if flat.size == 0:
+            arr = _xm_matrix(batch, dim)
+            if arr.size == 0:
                 continue
-            arr = flat.reshape(-1, dim).astype(np.int64, copy=False)
             n += arr.shape[0]
             acc += arr.sum(axis=0)
         if n:
@@ -1504,11 +1527,10 @@ def _pca_cov_apply_grid(
         acc = np.zeros(dim, np.int64)
         seen = False
         for batch in it:
-            flat = batch.column(0).flatten().to_numpy(zero_copy_only=False)
-            if flat.size == 0:
+            xm = _xm_matrix(batch, dim)
+            if xm.size == 0:
                 continue
             seen = True
-            xm = flat.reshape(-1, dim).astype(np.int64, copy=False)
             c = (xm - mu[None, :]).astype(np.float64) / 1e6
             s_terms = _np_round_half_up_i64((c * vv[None, :]) * 1e6)
             sv = s_terms.sum(axis=1).astype(np.float64) / 1e6

@@ -1265,8 +1265,7 @@ def hmm_viterbi_paths(
     # Bit-identical: the products keep their association, greatest and
     # the first-match CASE compare the same doubles — and the DuckDB
     # oracle already names the products once in its `probs` CTE, so this
-    # mirrors the oracle's structure rather than changing it. Before/
-    # after plans: plans/r14/hmm_viterbi_first4_{before,after}.txt.
+    # mirrors the oracle's structure rather than changing it.
     from ningaloo_turtle_etl_spark.operators.scale import barrier_col
 
     staged = barrier_col(firsts, "_pv", F.array(*probs))

@@ -625,61 +625,6 @@ def token_entropy(
     )
 
 
-def pmi_cooccurrence(
-    df: DataFrame,
-    min_pair_count: int = 5,
-    max_df_frac: float = 0.3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Document-level pointwise mutual information between token pairs:
-    PMI(a,b) = ln(n_ab * N / (n_a * n_b)) over PRESENCE counts (a document
-    contributes each pair once) — the collocation / topic-structure
-    signal. Pairs are unordered (tok_a < tok_b).
-
-    Scale shape: per-doc DISTINCT token sets (explode + distinct agg),
-    then a within-doc self-join — cost sum(doc_distinct_tokens^2), kept
-    honest by ``max_df_frac`` (stopword-grade tokens are excluded BEFORE
-    pairing; they pair with everything and mean nothing) and by the
-    pair-count floor applied after one hash agg. The df dim broadcasts."""
-    toks = (
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
-        )
-        .distinct()
-    )
-    dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_tok"))
-    n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
-    kept = (
-        toks.join(F.broadcast(dfreq), on="tok")
-        .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("n_tok") <= F.col("n_docs") * F.lit(float(max_df_frac)))
-    )
-    a = kept.select("_id", F.col("tok").alias("tok_a"), F.col("n_tok").alias("n_a"))
-    b = kept.select("_id", F.col("tok").alias("tok_b"), F.col("n_tok").alias("n_b"))
-    pairs = (
-        a.join(b, on="_id")
-        .filter(F.col("tok_a") < F.col("tok_b"))
-        .groupBy("tok_a", "tok_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .filter(F.col("n_pair") >= int(min_pair_count))
-    )
-    return pairs.crossJoin(F.broadcast(n_docs)).select(
-        "tok_a",
-        "tok_b",
-        "n_pair",
-        F.round(
-            F.log(
-                F.col("n_pair")
-                * F.col("n_docs")
-                / (F.col("n_a") * F.col("n_b"))
-            ),
-            6,
-        ).alias("pmi"),
-    )
-
-
 def readability_scores(
     df: DataFrame,
     text_col: str = "text",

@@ -158,69 +158,6 @@ def robust_outlier_stats(
     )
 
 
-def welch_ttest_pairs(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Welch's unequal-variance t-test between every pair of groups: one
-    per-group (n, mean, var) aggregate, then the closed-form t statistic
-    and Welch-Satterthwaite degrees of freedom on the groups² pair grid
-    (groups are few; the grid is driver-trivial). The A/B-comparison
-    primitive: 'is the metric different between these segments, beyond
-    noise?'.
-
-    The per-group mean and sample variance are rounded to 6 dp BEFORE the
-    t/df formulas so both engines feed bit-identical doubles into
-    identical arithmetic — the one aggregate shuffle is the only
-    float-summation in the plan. Groups need n ≥ 2 (var_samp defined)."""
-    s = (
-        df.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(value_col), 6).alias("m"),
-            F.round(F.var_samp(value_col), 6).alias("v"),
-        )
-        .filter(F.col("n") >= 2)
-    )
-    a = s.select(
-        F.col(group_col).alias("group_a"),
-        F.col("n").alias("n_a"),
-        F.col("m").alias("mean_a"),
-        F.col("v").alias("_va"),
-    )
-    b = s.select(
-        F.col(group_col).alias("group_b"),
-        F.col("n").alias("n_b"),
-        F.col("m").alias("mean_b"),
-        F.col("v").alias("_vb"),
-    )
-    sa = F.col("_va") / F.col("n_a")
-    sb = F.col("_vb") / F.col("n_b")
-    return (
-        a.join(b, F.col("group_a") < F.col("group_b"))
-        .select(
-            "group_a",
-            "group_b",
-            "n_a",
-            "n_b",
-            "mean_a",
-            "mean_b",
-            F.round(
-                (F.col("mean_a") - F.col("mean_b")) / F.sqrt(sa + sb), 6
-            ).alias("t_stat"),
-            F.round(
-                F.pow(sa + sb, F.lit(2.0))
-                / (
-                    F.pow(sa, F.lit(2.0)) / (F.col("n_a") - 1)
-                    + F.pow(sb, F.lit(2.0)) / (F.col("n_b") - 1)
-                ),
-                6,
-            ).alias("df_welch"),
-        )
-    )
-
-
 def acf_by_group(
     series: DataFrame,
     group_cols: str | Sequence[str],
@@ -277,143 +214,6 @@ def quantile_normalize(
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     w = Window.partitionBy(*groups).orderBy(value_col)
     return df.withColumn(out_col, F.round(F.percent_rank().over(w), 6))
-
-
-# Cumulative Poisson(1) CDF values P(K <= k): the inverse-CDF ladder the
-# deterministic Poisson bootstrap draws integer weights from. Literal
-# doubles -- bit-identical constants on every engine.
-_POISSON1_CDF = (
-    0.36787944117144233,
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238462,
-    0.9963401531726563,
-    0.9994058151824183,
-    0.9999167588507119,
-    0.9999897508033253,
-)
-
-
-def _md5_uniform(*cols) -> F.Column:
-    """Deterministic uniform in [0, 1): first 8 md5 hex digits of the
-    '#'-joined inputs, as a 32-bit fraction. Pure integer+divide -- the
-    same double on any engine."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("#", *[c.cast("string") for c in cols])), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    return h / F.lit(float(2**32))
-
-
-def poisson_bootstrap_mean_ci(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    id_col: str,
-    replicates: int = 200,
-    alpha: float = 0.05,
-    hash_family: str = "md5",
-) -> DataFrame:
-    """Per-group mean with a percentile bootstrap CI via the POISSON
-    bootstrap -- the one-pass, n-free resampling scheme built for
-    distributed data: replicate b gives row i an integer weight
-    w ~ Poisson(1), drawn deterministically by inverse-CDF on an md5
-    uniform of (id, b). Integer weights x cent-scaled values make every
-    replicate numerator/denominator an EXACT integer sum (order-proof,
-    engine-portable -- no log/exp anywhere), so the whole procedure
-    replays bit-for-bit in SQL.
-
-    Output: (group, n, mean_value, ci_lo, ci_hi) -- mean exact, CI bounds
-    the percentile-by-rank (ceil(q*B)) replicate means, rounded 6dp.
-
-    Scale shape: the replicate explosion is map-only (each row emits B
-    weighted copies that partial-aggregate in place), the only shuffle
-    carries (group, b) partial sums -- B x groups rows. Driver state: none.
-    At 100 TB drop to B=50 replicates before touching anything else; the
-    CI error from B dominates long before the data does.
-
-    ``hash_family``: 'md5' (default) is the oracle-reproducible uniform;
-    'xxhash64' swaps in the JVM-native hash for the replicate weights —
-    measured ~5x faster at 100k rows x 200 replicates (the md5 string
-    digest dominates the explode) with identical statistical behavior;
-    it is the scale default, the same fast/portable split the MinHash
-    family uses."""
-    if hash_family not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
-    # The replicate fan-out multiplies rows by B; a coarsely-partitioned
-    # input (one parquet file at small SF) would push the whole explode
-    # through one task. Rebalance up front when the input has fewer
-    # partitions than the cluster has slots -- measured 3-5x at 100k rows
-    # x 200 replicates on local[32]. (At real scale inputs already carry
-    # enough partitions and this is a no-op.)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    b_dim = (
-        df.sparkSession.range(int(replicates))
-        .select(F.col("id").cast("int").alias("_b"))
-    )
-    if hash_family == "md5":
-        u = _md5_uniform(F.col(id_col), F.col("_b"))
-    else:
-        u = F.pmod(
-            F.xxhash64(F.col(id_col), F.col("_b")), F.lit(2**32)
-        ) / F.lit(float(2**32))
-    w = sum(
-        F.when(u >= F.lit(t), 1).otherwise(0) for t in _POISSON1_CDF
-    ).cast("long")
-    cents = F.round(F.col(value_col) * 100).cast("long")
-    rep = (
-        df.select(id_col, group_col, F.col(value_col))
-        .crossJoin(F.broadcast(b_dim))
-        .select(
-            F.col(group_col).alias("grp"),
-            "_b",
-            w.alias("_w"),
-            (w * cents).alias("_wx"),
-        )
-        .groupBy("grp", "_b")
-        .agg(F.sum("_w").alias("den"), F.sum("_wx").alias("num"))
-        .withColumn(
-            "mean_b",
-            F.when(
-                F.col("den") > 0, F.col("num") / (F.col("den") * F.lit(100.0))
-            ),
-        )
-        .filter(F.col("mean_b").isNotNull())
-    )
-    # Rank against the ACTUAL per-group replicate count, not the nominal
-    # `replicates`: zero-weight replicates (possible for very small
-    # groups) are filtered above, and ranking against the nominal count
-    # could place hi_rank past the last row, collapsing the CI to
-    # [lo, lo].
-    wnd = Window.partitionBy("grp").orderBy("mean_b", "_b")
-    wgrp = Window.partitionBy("grp")
-    ranked = rep.withColumn("_rn", F.row_number().over(wnd)).withColumn(
-        "_m", F.count(F.lit(1)).over(wgrp)
-    )
-    lo_rank = F.greatest(
-        F.lit(1), F.ceil(F.lit(alpha / 2) * F.col("_m"))
-    )
-    hi_rank = F.ceil(F.lit(1 - alpha / 2) * F.col("_m"))
-    ci = (
-        ranked.filter(
-            (F.col("_rn") == lo_rank) | (F.col("_rn") == hi_rank)
-        )
-        .groupBy("grp")
-        .agg(
-            F.round(F.min("mean_b"), 6).alias("ci_lo"),
-            F.round(F.max("mean_b"), 6).alias("ci_hi"),
-        )
-    )
-    base = df.groupBy(F.col(group_col).alias("grp")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(value_col), 6).alias("mean_value"),
-    )
-    return base.join(ci, on="grp").select(
-        F.col("grp").alias(group_col), "n", "mean_value", "ci_lo", "ci_hi"
-    )
 
 
 def _pooled_pair_ecdfs(
@@ -497,8 +297,7 @@ def ks_test_pairs(
     D = sup_x |F_a(x) - F_b(x)| over the pooled sample points, ECDFs
     right-evaluated (the sup of two step functions is attained at a pooled
     jump point, so maxing the right-evaluations at every pooled value is
-    exact). The nonparametric any-difference test completing the
-    parametric Welch t family.
+    exact). The nonparametric any-difference test between groups.
 
     Output: (group_a, group_b, n_a, n_b, ks_d).
 
@@ -562,351 +361,6 @@ def wasserstein_pairs(
             "n_b",
             "w1",
         )
-    )
-
-
-def cuped_lift(
-    df: DataFrame,
-    metric_col: str,
-    covariate_col: str,
-    arm_col: str,
-    treatment: str,
-    control: str,
-    metric_decimals: int = 2,
-) -> DataFrame:
-    """CUPED-adjusted lift between two experiment arms (Deng et al. 2013):
-    theta = cov(x, y)/var(x) on the pooled arms, each arm's mean metric is
-    adjusted by -theta * (mean_x_arm - mean_x_pooled), and the lift is the
-    difference of adjusted means — the industry-standard variance-reduction
-    estimator for A/B tests with a pre-period covariate.
-
-    All moments are computed as EXACT integer sums (metric scaled to
-    10^metric_decimals units, covariate cast to long), so theta, the
-    adjusted means, and the achieved variance reduction (= corr^2) are
-    bit-identical on any engine regardless of partitioning.
-
-    Output: one row — (n_treatment, n_control, lift_raw, lift_adjusted,
-    theta, var_reduction), rounded 6dp.
-
-    Scale shape: ONE conditional-aggregate pass over the fact (map-side
-    combined, no shuffle beyond the single-row final combine). Nothing
-    else."""
-    scale = 10**metric_decimals
-    arms = df.filter(F.col(arm_col).isin(treatment, control))
-    y = F.round(F.col(metric_col) * scale).cast("long")
-    x = F.col(covariate_col).cast("long")
-    is_t = (F.col(arm_col) == treatment).cast("long")
-    is_c = (F.col(arm_col) == control).cast("long")
-    agg = arms.agg(
-        F.sum(is_t).alias("nt"),
-        F.sum(is_c).alias("nc"),
-        F.sum(y).alias("sy"),
-        F.sum(x).alias("sx"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-        F.sum(is_t * y).alias("syt"),
-        F.sum(is_c * y).alias("syc"),
-        F.sum(is_t * x).alias("sxt"),
-        F.sum(is_c * x).alias("sxc"),
-    )
-    n = F.col("nt") + F.col("nc")
-    cov_num = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx_num = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary_num = n * F.col("syy") - F.col("sy") * F.col("sy")
-    theta = cov_num / varx_num.cast("double")
-    xbar = F.col("sx") / n.cast("double")
-    yt = F.col("syt") / (F.col("nt") * F.lit(float(scale)))
-    yc = F.col("syc") / (F.col("nc") * F.lit(float(scale)))
-    xt = F.col("sxt") / F.col("nt").cast("double")
-    xc = F.col("sxc") / F.col("nc").cast("double")
-    adj_t = yt - theta / scale * (xt - xbar)
-    adj_c = yc - theta / scale * (xc - xbar)
-    return agg.select(
-        F.col("nt").alias("n_treatment"),
-        F.col("nc").alias("n_control"),
-        F.round(yt - yc, 6).alias("lift_raw"),
-        F.round(adj_t - adj_c, 6).alias("lift_adjusted"),
-        F.round(theta / scale, 6).alias("theta"),
-        # squared in DOUBLE: the exact integer square of an n-scaled
-        # covariance overflows 64 bits long before the data is big
-        F.round(
-            (cov_num.cast("double") * cov_num.cast("double"))
-            / (varx_num.cast("double") * vary_num.cast("double")),
-            6,
-        ).alias("var_reduction"),
-    )
-
-
-def kaplan_meier_conversion(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    start_type: str = "view",
-    event_type: str = "purchase",
-) -> DataFrame:
-    """Kaplan-Meier survival curve for time-to-convert: cohort entry is a
-    key's FIRST ``start_type`` event, the terminal event its first
-    ``event_type`` strictly after entry, durations in whole days; keys
-    that never convert are right-censored at the corpus horizon (the
-    global max event day) — the survival-analysis answer to "how long
-    until users buy", which naive conversion rates get wrong exactly
-    because of that censoring.
-
-    S(t) = prod_{s <= t} (1 - d_s / n_s) over days s with d_s > 0
-    conversions among n_s at-risk keys. The product is computed as
-    exp of an exact-integer cumulative sum of NANO-unit-rounded log
-    factors, so summation order cannot move it (the zipf_fit micro-unit
-    pattern) and DuckDB replays it bit-for-bit.
-
-    Output: one row per day with activity — (t_days, n_risk, n_events,
-    n_censored, survival), survival rounded 6dp.
-
-    Scale shape: two key-keyed conditional-min aggs (entry, terminal) and
-    one day-grain table; every window after that runs on the ~horizon-days
-    rows. Raw events are touched twice with pushed type filters."""
-    starts = (
-        events.filter(F.col(type_col) == start_type)
-        .groupBy(F.col(key_col).alias("k"))
-        .agg(F.min(F.to_date(ts_col)).alias("d0"))
-    )
-    ends = (
-        events.filter(F.col(type_col) == event_type)
-        .select(F.col(key_col).alias("k"), F.to_date(ts_col).alias("de"))
-        .join(starts, on="k")
-        .filter(F.col("de") > F.col("d0"))
-        .groupBy("k")
-        .agg(F.min("de").alias("de"))
-    )
-    horizon = events.agg(F.max(F.to_date(ts_col)).alias("h"))
-    dur = (
-        starts.join(ends, on="k", how="left")
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            "k",
-            F.when(
-                F.col("de").isNotNull(), F.datediff("de", "d0")
-            )
-            .otherwise(F.datediff("h", "d0"))
-            .cast("int")
-            .alias("t"),
-            F.col("de").isNotNull().alias("is_event"),
-        )
-    )
-    days = dur.groupBy("t").agg(
-        F.sum(F.col("is_event").cast("long")).alias("d"),
-        F.sum((~F.col("is_event")).cast("long")).alias("c"),
-    )
-    total = starts.count()
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    wc = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    at_risk = days.withColumn(
-        "n_risk",
-        (F.lit(total) - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w),
-                                   F.lit(0))).cast("long"),
-    )
-    # nano-unit exact-integer cumulative log-survival
-    # floor the factor at 1e-12: the day everyone at risk converts has a
-    # true survival of 0, and ln(0) would poison the cumulative sum
-    ln_term = F.when(
-        F.col("d") > 0,
-        F.round(
-            F.log(
-                F.greatest(
-                    F.lit(1.0) - F.col("d") / F.col("n_risk").cast("double"),
-                    F.lit(1e-12),
-                )
-            )
-            * F.lit(1e9)
-        ).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    out = at_risk.withColumn("_ln", ln_term).withColumn(
-        "survival",
-        F.round(F.exp(F.sum("_ln").over(wc) / F.lit(1e9)), 6),
-    )
-    return out.select(
-        F.col("t").alias("t_days"),
-        "n_risk",
-        F.col("d").alias("n_events"),
-        F.col("c").alias("n_censored"),
-        "survival",
-    )
-
-
-def chi2_independence(
-    df: DataFrame, col_a: str, col_b: str
-) -> DataFrame:
-    """Pearson chi-square test of independence between two categorical
-    columns: observed cell counts vs the independence expectation
-    ``row_total * col_total / n``, summed as (O - E)^2 / E — the standard
-    are-these-dimensions-related screen (is language independent of
-    source? did event mix shift by segment?).
-
-    Output: one row — (n_rows, n_cells, dof, chi2, cramers_v); V is the
-    ``sqrt(chi2 / (n * min(k_a, k_b) - 1))`` effect size that makes the
-    statistic comparable across tables of different shape. Cells with
-    E = 0 cannot occur (margins come from the same table).
-
-    Scale shape: one (a, b) count aggregate (map-side combined), margins
-    re-aggregated from the cell table, everything after runs on the
-    cells x 1 grid. The fact is touched once."""
-    cells = df.groupBy(
-        F.col(col_a).alias("a"), F.col(col_b).alias("b")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    ra = cells.groupBy("a").agg(F.sum("o").alias("na"))
-    rb = cells.groupBy("b").agg(F.sum("o").alias("nb"))
-    tot = cells.agg(F.sum("o").alias("n"))
-    joined = (
-        cells.join(F.broadcast(ra), on="a")
-        .join(F.broadcast(rb), on="b")
-        .crossJoin(F.broadcast(tot))
-    )
-    e = F.col("na") * F.col("nb") / F.col("n").cast("double")
-    term = (F.col("o") - e) * (F.col("o") - e) / e
-    counts = joined.agg(
-        F.min("n").cast("long").alias("n_rows"),
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.countDistinct("a").alias("_ka"),
-        F.countDistinct("b").alias("_kb"),
-        F.sum(term).alias("_chi2_raw"),
-    )
-    v = F.sqrt(
-        F.col("_chi2_raw")
-        / (
-            F.col("n_rows")
-            * (F.least(F.col("_ka"), F.col("_kb")) - 1).cast("double")
-        )
-    )
-    return counts.select(
-        "n_rows",
-        "n_cells",
-        ((F.col("_ka") - 1) * (F.col("_kb") - 1)).cast("long").alias("dof"),
-        F.round(F.col("_chi2_raw"), 6).alias("chi2"),
-        F.round(v, 6).alias("cramers_v"),
-    )
-
-
-def did_lift(
-    df: DataFrame,
-    metric_col: str,
-    arm_col: str,
-    period_col,
-    treatment: str,
-    control: str,
-    metric_decimals: int = 2,
-) -> DataFrame:
-    """Difference-in-differences: (post_t - pre_t) - (post_c - pre_c) over
-    a boolean post-period column — the causal-analytics workhorse when
-    arms differ at baseline and randomization isn't available. Like
-    cuped_lift every mean comes from ONE exact integer conditional-moment
-    pass, so the estimate replays bit-for-bit in SQL.
-
-    ``period_col``: a boolean Column (True = post period).
-
-    Output: one row — (n_pre_t, n_post_t, n_pre_c, n_post_c, pre_t,
-    post_t, pre_c, post_c, did), means and did rounded 6dp."""
-    scale = 10**metric_decimals
-    arms = df.filter(F.col(arm_col).isin(treatment, control))
-    y = F.round(F.col(metric_col) * scale).cast("long")
-    post = period_col.cast("long")
-    is_t = (F.col(arm_col) == treatment).cast("long")
-
-    def cell(t_flag, p_flag, what):
-        m = (is_t == t_flag).cast("long") * F.when(
-            post == p_flag, F.lit(1)
-        ).otherwise(F.lit(0))
-        return F.sum(m * y).alias(f"s_{what}"), F.sum(m).alias(f"n_{what}")
-
-    aggs = []
-    for t_flag, p_flag, what in (
-        (1, 0, "pre_t"),
-        (1, 1, "post_t"),
-        (0, 0, "pre_c"),
-        (0, 1, "post_c"),
-    ):
-        s, n = cell(t_flag, p_flag, what)
-        aggs += [s, n]
-    a = arms.agg(*aggs)
-
-    def mean(w):
-        return F.col(f"s_{w}") / (F.col(f"n_{w}") * F.lit(float(scale)))
-
-    return a.select(
-        F.col("n_pre_t").cast("long"),
-        F.col("n_post_t").cast("long"),
-        F.col("n_pre_c").cast("long"),
-        F.col("n_post_c").cast("long"),
-        F.round(mean("pre_t"), 6).alias("pre_t"),
-        F.round(mean("post_t"), 6).alias("post_t"),
-        F.round(mean("pre_c"), 6).alias("pre_c"),
-        F.round(mean("post_c"), 6).alias("post_c"),
-        F.round(
-            (mean("post_t") - mean("pre_t")) - (mean("post_c") - mean("pre_c")),
-            6,
-        ).alias("did"),
-    )
-
-
-def mann_whitney_u(
-    df: DataFrame,
-    value_col: str,
-    arm_col: str,
-    treatment: str,
-    control: str,
-) -> DataFrame:
-    """Mann-Whitney U rank-sum test between two arms: midranks over the
-    pooled sample, U = R_t - n_t(n_t+1)/2, and the tie-corrected normal
-    approximation z = (U - n_t*n_c/2) / sigma with
-    sigma^2 = n_t*n_c/12 * ((N+1) - sum(t^3 - t)/(N(N-1))) — the
-    nonparametric location test beside welch_value_ttest (means) and
-    ks_test_pairs (any-difference), robust to the heavy tails that break
-    the t-test on metric data.
-
-    Output: one row — (n_treat, n_control, u_stat, z). No continuity
-    correction (documented; both engines replay the same formula).
-
-    Scale shape: one (value) count aggregate collapses the pooled sample
-    to the DISTINCT-value grain; midranks are one cumulative window over
-    that table (bounded by metric resolution, not row count — round the
-    metric first if it is continuous); the statistic is a single-row agg.
-    Raw rows are touched once."""
-    arms = df.filter(F.col(arm_col).isin(treatment, control)).select(
-        F.col(value_col).cast("double").alias("v"),
-        (F.col(arm_col) == treatment).cast("long").alias("is_t"),
-    )
-    vals = arms.groupBy("v").agg(
-        F.count(F.lit(1)).alias("c"), F.sum("is_t").alias("ct")
-    )
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # doubled midrank 2*cum - c + 1 is an INTEGER, so the rank sum is an
-    # exact long in both engines — no float-summation-order risk before
-    # the final closed-form statistic.
-    ranked = vals.withColumn(
-        "mid2",
-        2 * F.sum("c").over(wcum) - F.col("c") + 1,
-    )
-    s = ranked.agg(
-        F.sum("ct").cast("long").alias("n_treat"),
-        (F.sum("c") - F.sum("ct")).cast("long").alias("n_control"),
-        F.sum(F.col("ct") * F.col("mid2")).cast("long").alias("_rt2"),
-        F.sum(F.col("c") * F.col("c") * F.col("c") - F.col("c"))
-        .cast("long")
-        .alias("_ties"),
-    )
-    n1, n2 = F.col("n_treat"), F.col("n_control")
-    nn = (n1 + n2).cast("double")
-    u = F.col("_rt2") / 2.0 - n1 * (n1 + 1) / 2.0
-    sigma = F.sqrt(
-        n1 * n2 / 12.0 * ((nn + 1) - F.col("_ties") / (nn * (nn - 1)))
-    )
-    return s.select(
-        "n_treat",
-        "n_control",
-        F.round(u, 4).alias("u_stat"),
-        F.round((u - n1 * n2 / 2.0) / sigma, 6).alias("z"),
     )
 
 
@@ -1021,76 +475,6 @@ def seasonal_profile(
     return out
 
 
-def mutual_information(
-    df: DataFrame, col_a: str, col_b: str
-) -> DataFrame:
-    """Mutual information between two categorical columns in nats, with
-    the marginal entropies and the normalized MI
-    ``nmi = mi / sqrt(h_a * h_b)`` — chi2_independence's effect-size
-    companion on an information scale (0 = independent, 1 = one column
-    determines the other). MI = sum over observed cells of
-    (o/n) * ln(o*n / (na*nb)); empty cells contribute 0 by convention and
-    never appear (the cell table only holds observed pairs).
-
-    Output: one row — (n_rows, mi, h_a, h_b, nmi), 6dp.
-
-    Scale shape: identical to chi2_independence — one map-side-combined
-    (a, b) count aggregate, margins re-aggregated from the cell table,
-    closed-form arithmetic on the cells grid. The fact is touched once."""
-    cells = df.groupBy(
-        F.col(col_a).alias("a"), F.col(col_b).alias("b")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    ra = cells.groupBy("a").agg(F.sum("o").alias("na"))
-    rb = cells.groupBy("b").agg(F.sum("o").alias("nb"))
-    tot = cells.agg(F.sum("o").alias("n"))
-    joined = (
-        cells.join(F.broadcast(ra), on="a")
-        .join(F.broadcast(rb), on="b")
-        .crossJoin(F.broadcast(tot))
-    )
-    n = F.col("n").cast("double")
-    mi_term = (F.col("o") / n) * F.log(
-        F.col("o") * n / (F.col("na") * F.col("nb"))
-    )
-    # ln(na/n) summed once per a-value: divide each cell's contribution
-    # by the number of cells sharing its margin row — exact, join-free.
-    ca = Window.partitionBy("a")
-    cb = Window.partitionBy("b")
-    ha_term = (
-        -(F.col("na") / n)
-        * F.log(F.col("na") / n)
-        / F.count(F.lit(1)).over(ca)
-    )
-    hb_term = (
-        -(F.col("nb") / n)
-        * F.log(F.col("nb") / n)
-        / F.count(F.lit(1)).over(cb)
-    )
-    s = joined.select(
-        F.col("n").cast("long").alias("n_rows"),
-        mi_term.alias("_mi"),
-        ha_term.alias("_ha"),
-        hb_term.alias("_hb"),
-    ).groupBy("n_rows").agg(
-        F.sum("_mi").alias("_mi"),
-        F.sum("_ha").alias("_ha"),
-        F.sum("_hb").alias("_hb"),
-    )
-    return s.select(
-        "n_rows",
-        F.round(F.col("_mi"), 6).alias("mi"),
-        F.round(F.col("_ha"), 6).alias("h_a"),
-        F.round(F.col("_hb"), 6).alias("h_b"),
-        F.round(
-            F.when(
-                (F.col("_ha") > 0) & (F.col("_hb") > 0),
-                F.col("_mi") / F.sqrt(F.col("_ha") * F.col("_hb")),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("nmi"),
-    )
-
-
 def seasonal_anomaly_scan(
     df: DataFrame,
     ts_col: str,
@@ -1200,330 +584,6 @@ def trimmed_mean(
     )
 
 
-def cross_correlation(
-    series_a: DataFrame,
-    series_b: DataFrame,
-    time_col: str,
-    value_col: str,
-    max_lag: int = 3,
-) -> DataFrame:
-    """Lagged cross-correlation between two AGGREGATED series (one row
-    per time step each — reduce raw data first): for every lag in
-    [-max_lag, max_lag], the Pearson correlation of a(t) with b(t + lag)
-    over the overlapping steps. ACF's two-series sibling: does one
-    metric lead the other, and by how many steps? (Positive lag peak =
-    a leads b.)
-
-    Output: (lag, n_steps, ccf 6dp), one row per lag with >= 2
-    overlapping steps.
-
-    Scale shape: the lag dim (2*max_lag+1 rows) broadcasts; the shifted
-    equi-join and corr aggregate run at the series grain — work is
-    lags x steps, independent of raw row count."""
-    spark = series_a.sparkSession
-    lags = spark.range(-int(max_lag), int(max_lag) + 1).select(
-        F.col("id").cast("int").alias("lag")
-    )
-    a = series_a.select(
-        F.col(time_col).cast("long").alias("t"),
-        F.col(value_col).cast("double").alias("va"),
-    )
-    b = series_b.select(
-        F.col(time_col).cast("long").alias("tb"),
-        F.col(value_col).cast("double").alias("vb"),
-    )
-    shifted = a.crossJoin(F.broadcast(lags)).join(
-        b, on=[F.col("tb") == F.col("t") + F.col("lag")]
-    )
-    return (
-        shifted.groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).alias("n_steps"),
-            F.round(F.corr("va", "vb"), 6).alias("ccf"),
-        )
-        .filter(F.col("n_steps") >= 2)
-    )
-
-
-def two_proportion_ztest(
-    df: DataFrame,
-    arm_col: str,
-    success_col,
-    treatment: str,
-    control: str,
-) -> DataFrame:
-    """Two-proportion z-test on a binary outcome (conversion, click,
-    pass-rate): z = (p_t - p_c) / sqrt(p(1-p)(1/n_t + 1/n_c)) with the
-    pooled p — the binary-metric member of the test family (Welch/MWU
-    handle continuous metrics). ``success_col`` is a boolean Column.
-
-    Output: one row — (n_treat, n_control, x_treat, x_control, p_treat,
-    p_control, z), proportions and z 6dp. All inputs to the closed form
-    are exact integer counts, so both engines replay it bit-for-bit.
-
-    Scale shape: ONE conditional-count aggregate pass; no join, no
-    window, single-row output (the cuped_lift shape)."""
-    arms = df.filter(F.col(arm_col).isin(treatment, control))
-    is_t = (F.col(arm_col) == treatment).cast("long")
-    y = success_col.cast("long")
-    s = arms.agg(
-        F.sum(is_t).alias("n_treat"),
-        (F.count(F.lit(1)) - F.sum(is_t)).alias("n_control"),
-        F.sum(is_t * y).alias("x_treat"),
-        F.sum((1 - is_t) * y).alias("x_control"),
-    )
-    n1, n2 = F.col("n_treat"), F.col("n_control")
-    x1, x2 = F.col("x_treat"), F.col("x_control")
-    p1, p2 = x1 / n1.cast("double"), x2 / n2.cast("double")
-    pool = (x1 + x2) / (n1 + n2).cast("double")
-    z = (p1 - p2) / F.sqrt(
-        pool * (1 - pool) * (1.0 / n1 + 1.0 / n2)
-    )
-    return s.select(
-        "n_treat",
-        "n_control",
-        "x_treat",
-        "x_control",
-        F.round(p1, 6).alias("p_treat"),
-        F.round(p2, 6).alias("p_control"),
-        F.round(z, 6).alias("z"),
-    )
-
-
-def norm_ppf(p: float) -> float:
-    """Standard-normal quantile via Acklam's rational approximation
-    (|rel err| < 1.15e-9) — driver-side constant generator for the SRM
-    critical value; no scipy in this environment."""
-    if not 0.0 < p < 1.0:
-        raise ValueError("p must be in (0, 1)")
-    a = (-3.969683028665376e+01, 2.209460984245205e+02,
-         -2.759285104469687e+02, 1.383577518672690e+02,
-         -3.066479806614716e+01, 2.506628277459239e+00)
-    b = (-5.447609879822406e+01, 1.615858368580409e+02,
-         -1.556989798598866e+02, 6.680131188771972e+01,
-         -1.328068155288572e+01)
-    c = (-7.784894002430293e-03, -3.223964580411365e-01,
-         -2.400758277161838e+00, -2.549732539343734e+00,
-         4.374664141464968e+00, 2.938163982698783e+00)
-    d = (7.784695709041462e-03, 3.224671290700398e-01,
-         2.445134137142996e+00, 3.754408661907416e+00)
-    plow, phigh = 0.02425, 1 - 0.02425
-    if p < plow:
-        q = math.sqrt(-2 * math.log(p))
-        return (((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
-            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
-        )
-    if p > phigh:
-        q = math.sqrt(-2 * math.log(1 - p))
-        return -(((((c[0] * q + c[1]) * q + c[2]) * q + c[3]) * q + c[4]) * q + c[5]) / (
-            (((d[0] * q + d[1]) * q + d[2]) * q + d[3]) * q + 1
-        )
-    q = p - 0.5
-    r = q * q
-    return (((((a[0] * r + a[1]) * r + a[2]) * r + a[3]) * r + a[4]) * r + a[5]) * q / (
-        ((((b[0] * r + b[1]) * r + b[2]) * r + b[3]) * r + b[4]) * r + 1
-    )
-
-
-def srm_check(
-    df: DataFrame,
-    arm_col: str,
-    expected: dict[str, float],
-    alpha: float = 0.001,
-) -> DataFrame:
-    """Sample-ratio-mismatch check — the experimentation-platform health
-    gate run BEFORE reading any metric: chi-square goodness-of-fit of
-    observed arm counts against the declared split. A failing SRM means
-    assignment is broken (bot filtering, redirect loss, logging bias) and
-    every downstream lift number is untrustworthy.
-
-    ``expected``: arm -> ratio; must sum to ~1 (validated). Arms with
-    zero observed rows still contribute their expected mass (the oracle
-    keeps them via the ratio dim). Arms OBSERVED in the data but missing
-    from ``expected`` — the rogue-arm breakage an SRM gate exists to
-    catch — are kept via a full outer join with expected ratio 0: they
-    drive ``chi2`` to Infinity and are counted in ``n_undeclared``.
-
-    Output: one row — (n_rows, n_arms, dof, n_undeclared, chi2,
-    chi2_critical, srm_violated, max_abs_dev) where max_abs_dev is the
-    largest |observed_share - expected_share| (6dp), n_arms counts every
-    arm seen on either side, and dof is declared-arms − 1.
-
-    ``srm_violated`` is the consumer-safe boolean gate (the exact chi2 —
-    which is legitimately Infinity when an undeclared arm carries observed
-    mass — surprises JSON/BI consumers): chi2 exceeds the chi-square
-    critical value at ``alpha`` (default 0.001, the platform-standard SRM
-    threshold), OR any undeclared arm was observed. The critical value is
-    the Wilson–Hilferty cube approximation
-    dof·(1 − 2/(9·dof) + z_{1−alpha}·√(2/(9·dof)))³ — elementary
-    arithmetic over dof and a driver-side z constant, so the DuckDB oracle
-    replays the flag bit-for-bit (no chi-square CDF builtin needed).
-    In the deep alpha=0.001 tail WH overshoots the exact quantile at
-    small dof (11.157 vs 10.828 at dof=1, ~3.0% high; ~2.3% at dof=2;
-    <1% by dof≈8), so the gate is slightly CONSERVATIVE — a chi2 landing
-    between the exact and WH critical values passes — which is the safe
-    direction for a health check that exists to avoid false alarms.
-
-    Scale shape: one map-side-combined count aggregate to the arms grid;
-    the ratio dim is a broadcast literal frame. Single pass, single
-    row."""
-    if abs(sum(expected.values()) - 1.0) > 1e-9:
-        raise ValueError("expected ratios must sum to 1")
-    spark = df.sparkSession
-    dim = spark.createDataFrame(
-        [(k, float(v)) for k, v in sorted(expected.items())],
-        "arm string, ratio double",
-    )
-    obs = df.groupBy(F.col(arm_col).alias("arm")).agg(
-        F.count(F.lit(1)).alias("o")
-    )
-    joined = (
-        dim.join(obs, on="arm", how="full_outer")
-        .withColumn("_declared", F.col("ratio").isNotNull())
-        .withColumn("o", F.coalesce("o", F.lit(0)))
-        .withColumn("ratio", F.coalesce("ratio", F.lit(0.0)))
-    )
-    tot = joined.agg(F.sum("o").alias("n"))
-    e = joined.crossJoin(F.broadcast(tot)).withColumn(
-        "_e", F.col("ratio") * F.col("n")
-    )
-    term = F.when(
-        F.col("_e") > 0,
-        (F.col("o") - F.col("_e"))
-        * (F.col("o") - F.col("_e"))
-        / F.col("_e"),
-    ).otherwise(
-        # Undeclared arm with observed mass: expected count 0 → the
-        # goodness-of-fit statistic diverges. Surfacing Infinity (not
-        # silently dropping the arm) is the whole point of the gate.
-        F.when(F.col("o") > 0, F.lit(float("inf"))).otherwise(F.lit(0.0))
-    )
-    z = float(norm_ppf(1.0 - float(alpha)))
-    agg = e.agg(
-        F.min("n").cast("long").alias("n_rows"),
-        F.count(F.lit(1)).cast("long").alias("n_arms"),
-        (F.sum(F.col("_declared").cast("long")) - 1).cast("long").alias(
-            "dof"
-        ),
-        F.sum((~F.col("_declared")).cast("long")).cast("long").alias(
-            "n_undeclared"
-        ),
-        F.sum(term).alias("_chi2_raw"),
-        F.round(
-            F.max(
-                F.abs(F.col("o") / F.col("n").cast("double") - F.col("ratio"))
-            ),
-            6,
-        ).alias("max_abs_dev"),
-    )
-    dof_d = F.col("dof").cast("double")
-    wh = F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dof_d) + F.lit(z) * F.sqrt(
-        F.lit(2.0) / (F.lit(9.0) * dof_d)
-    )
-    crit = F.when(F.col("dof") >= 1, dof_d * wh * wh * wh).otherwise(F.lit(0.0))
-    return agg.select(
-        "n_rows",
-        "n_arms",
-        "dof",
-        "n_undeclared",
-        F.round("_chi2_raw", 6).alias("chi2"),
-        F.round(crit, 6).alias("chi2_critical"),
-        (
-            (F.col("_chi2_raw") > crit) | (F.col("n_undeclared") > 0)
-        ).alias("srm_violated"),
-        "max_abs_dev",
-    )
-
-
-def normal_two_sided_p(z) -> F.Column:
-    """Two-sided normal p-value from a z/t statistic via the
-    Abramowitz-Stegun 7.1.26 erf polynomial (|err| < 1.5e-7 — far inside
-    the 6dp comparison grain): p = poly(t) * exp(-x²/2) with
-    t = 1/(1 + 0.3275911·|z|/√2). Pure elementary arithmetic, so any
-    engine replays it bit-for-bit — the reason this is used instead of an
-    erf builtin Spark doesn't have."""
-    x = F.abs(z) / F.lit(math.sqrt(2.0))
-    t = 1.0 / (1.0 + F.lit(0.3275911) * x)
-    poly = t * (
-        F.lit(0.254829592)
-        + t
-        * (
-            F.lit(-0.284496736)
-            + t
-            * (
-                F.lit(1.421413741)
-                + t * (F.lit(-1.453152027) + t * F.lit(1.061405429))
-            )
-        )
-    )
-    return poly * F.exp(-x * x)
-
-
-def bh_adjust(
-    df: DataFrame,
-    p_col: str,
-    tiebreak: Sequence[str],
-) -> DataFrame:
-    """Benjamini-Hochberg FDR adjustment over a (small) table of raw
-    p-values: rank ascending (``tiebreak`` columns make the order total),
-    p_adj(i) = min(1, min_{j >= i} p(j)·m/j) via one reverse running-min
-    window (m comes from a whole-frame window count — no driver count()
-    job, the input plan executes once). The step every pairwise-test grid
-    needs before anyone reads its smallest p — at m tests, ~m·α of them
-    are false alarms uncorrected.
-
-    Adds (p_rank, p_adj 6dp). Runs at the tests grain (the pair grid),
-    never raw data."""
-    order = [F.asc(p_col)] + [F.asc(c) for c in tiebreak]
-    w_rank = Window.orderBy(*order)
-    w_all = Window.partitionBy()  # whole (tiny) test grid
-    ranked = df.withColumn("p_rank", F.row_number().over(w_rank)).withColumn(
-        "_m", F.count(F.lit(1)).over(w_all)
-    )
-    w_rev = Window.orderBy(F.desc("p_rank")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    stepped = F.col(p_col) * F.col("_m").cast("double") / F.col("p_rank")
-    return ranked.withColumn(
-        "p_adj", F.round(F.least(F.lit(1.0), F.min(stepped).over(w_rev)), 6)
-    ).drop("_m")
-
-
-def welch_pairs_bh(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-) -> DataFrame:
-    """The complete pairwise-comparison workflow: Welch t over every
-    group pair → two-sided normal-approximation p-value (exact-arithmetic
-    A&S erf polynomial; at the df these grids produce the t ≈ normal gap
-    is far below the decision threshold and identical in both engines) →
-    Benjamini-Hochberg adjustment across the grid. What a metrics
-    platform actually ships — raw pairwise p-values without FDR control
-    are how dashboards cry wolf.
-
-    Output: (group_a, group_b, t_stat, p_value 6dp, p_rank, p_adj 6dp).
-
-    Scale shape: welch_ttest_pairs' single aggregate shuffle; the p/BH
-    windows run on the groups² grid only."""
-    pairs = welch_ttest_pairs(df, group_col, value_col)
-    withp = pairs.select(
-        "group_a",
-        "group_b",
-        "t_stat",
-        normal_two_sided_p(F.col("t_stat")).alias("_p_raw"),
-    )
-    adj = bh_adjust(withp, "_p_raw", ["group_a", "group_b"])
-    return adj.select(
-        "group_a",
-        "group_b",
-        "t_stat",
-        F.round(F.col("_p_raw"), 6).alias("p_value"),
-        "p_rank",
-        "p_adj",
-    )
-
-
 def ewma_control_chart(
     series: DataFrame,
     group_cols: str | Sequence[str],
@@ -1602,109 +662,6 @@ def ewma_control_chart(
         ((F.col("ewma") < F.col("lcl")) | (F.col("ewma") > F.col("ucl"))).cast(
             "int"
         ),
-    )
-
-
-def wilson_rate_ci(
-    df: DataFrame,
-    group_cols: str | Sequence[str],
-    success_col,
-    z: float = 1.959964,
-) -> DataFrame:
-    """Per-group binary rate with the Wilson score interval — the CI that
-    stays inside [0, 1] and behaves at small n and extreme rates, where
-    the naive normal interval collapses (rate 0/5 → naive CI [0, 0];
-    Wilson correctly says [0, 0.43]). The per-segment companion to
-    two_proportion_ztest's pairwise comparison: every dashboard rate
-    should ship with these bounds.
-
-    Output: (group, n, x, rate, ci_lo, ci_hi), 6dp. ``z`` defaults to
-    the 95% literal embedded identically in the oracle.
-
-    Scale shape: one conditional-count aggregate to the groups grid;
-    the interval is closed-form arithmetic on exact integer counts."""
-    groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    s = df.groupBy(*groups).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(success_col.cast("long")).alias("x"),
-    )
-    n = F.col("n").cast("double")
-    p = F.col("x") / n
-    z2 = float(z) * float(z)
-    center = p + F.lit(z2) / (2 * n)
-    margin = F.lit(float(z)) * F.sqrt(
-        p * (1 - p) / n + F.lit(z2) / (4 * n * n)
-    )
-    denom = 1 + F.lit(z2) / n
-    return s.select(
-        *groups,
-        "n",
-        "x",
-        F.round(p, 6).alias("rate"),
-        F.round((center - margin) / denom, 6).alias("ci_lo"),
-        F.round((center + margin) / denom, 6).alias("ci_hi"),
-    )
-
-
-def quantile_treatment_effect(
-    df: DataFrame,
-    value_col: str,
-    arm_col: str,
-    treatment: str,
-    control: str,
-    probabilities: Sequence[float] = (0.1, 0.25, 0.5, 0.75, 0.9),
-) -> DataFrame:
-    """Quantile treatment effects: the per-quantile difference between
-    the treatment and control value distributions — the answer to 'WHERE
-    did the metric move?' that a mean lift hides (a change that helps the
-    p90 tail while hurting the p25 shows a zero mean effect and opposite-
-    sign QTEs).
-
-    Output: one row per probability — (p, n_treat, n_control, q_treat,
-    q_control, qte), 6dp; quantiles are rounded BEFORE the difference so
-    both engines subtract identical doubles.
-
-    Scale shape: one percentile aggregate per arm over the filtered
-    fact (exact interpolating form — the oracle-parity twin of the
-    approx-sketch path the robust family documents), then the probs-grid
-    join. Raw rows are touched once per arm."""
-    probs = [float(p) for p in probabilities]
-    if any(not 0 < p < 1 for p in probs):
-        raise ValueError("probabilities must be in (0, 1)")
-    arr = "array(" + ", ".join(repr(p) for p in probs) + ")"
-
-    def arm(name, label):
-        qs = (
-            df.filter(F.col(arm_col) == name)
-            .agg(
-                F.count(F.lit(1)).alias(f"n_{label}"),
-                F.expr(f"percentile({value_col}, {arr})").alias("_qs"),
-            )
-            .select(
-                f"n_{label}",
-                F.posexplode("_qs").alias("_i", f"_q_{label}"),
-            )
-        )
-        return qs.select(
-            "_i",
-            f"n_{label}",
-            F.round(F.col(f"_q_{label}"), 6).alias(f"q_{label}"),
-        )
-    t, c = arm(treatment, "treat"), arm(control, "control")
-    probs_df = df.sparkSession.createDataFrame(
-        [(i, p) for i, p in enumerate(probs)], "_i int, p double"
-    )
-    return (
-        t.join(c, on="_i")
-        .join(F.broadcast(probs_df), on="_i")
-        .select(
-            "p",
-            "n_treat",
-            "n_control",
-            "q_treat",
-            "q_control",
-            F.round(F.col("q_treat") - F.col("q_control"), 6).alias("qte"),
-        )
     )
 
 
@@ -1799,250 +756,6 @@ def psi_drift(
     )
 
 
-def msprt_always_valid(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    time_col: str,
-    value_col: str,
-    mu0: float,
-    sigma: float,
-    tau: float,
-    alpha: float = 0.05,
-) -> DataFrame:
-    """Always-valid inference via the mixture Sequential Probability Ratio
-    Test (mSPRT; Robbins 1970, the Howard/Johari "peeking problem"
-    machinery modern experimentation platforms ship): the fixed-n tests in
-    this module (welch/z/mwu) only control error at ONE preplanned look —
-    a dashboard that refreshes daily and stops "when significant" inflates
-    false positives severalfold. The mSPRT's mixture likelihood ratio
-    against H0: mean = ``mu0`` (normal mixture over effect sizes with
-    scale ``tau``, observation sd ``sigma``) is a martingale under H0, so
-    p_t = 1 / max_{k<=t} Λ_k is a VALID p-value at every look
-    simultaneously — monitor continuously, stop whenever.
-
-    Closed form, computed in log space (the LR overflows double precision
-    long before a real effect is interesting):
-
-        log Λ_n = ½·ln(σ²/(σ² + nτ²)) + n²·(x̄−μ0)²·τ² / (2σ²(σ² + nτ²))
-
-    Input is the raw event grain; output one row per (group, time bucket):
-    (group…, time, n_cum, mean_cum, log_lambda, p_always_valid, rejected)
-    with the running-max folded in — ``rejected`` latches once p (the
-    UNROUNDED value) crosses ``alpha`` and never un-rejects, exactly the
-    sequential-stopping semantics. μ0/σ/τ are caller-frozen constants (σ
-    estimated from pre-experiment data in practice) so the whole surface
-    is deterministic and cross-engine replayable.
-
-    Scale shape: one (group, time)-grain aggregate with map-side combine,
-    then cumulative-sum and running-max windows over the tiny grid — the
-    raw grain is touched exactly once."""
-    if sigma <= 0 or tau <= 0:
-        raise ValueError("sigma and tau must be positive")
-    g = list(group_cols)
-    daily = df.groupBy(
-        *g, F.col(time_col).alias("_t")
-    ).agg(
-        F.count(F.lit(1)).alias("_dn"),
-        F.sum(F.col(value_col).cast("double")).alias("_ds"),
-    )
-    w = Window.partitionBy(*g).orderBy("_t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    s2 = float(sigma) * float(sigma)
-    t2 = float(tau) * float(tau)
-    cum = (
-        daily.withColumn("_n", F.sum("_dn").over(w))
-        .withColumn("_sum", F.sum("_ds").over(w))
-        .withColumn("_xbar", F.col("_sum") / F.col("_n"))
-    )
-    nd = F.col("_n").cast("double")
-    dev = F.col("_xbar") - F.lit(float(mu0))
-    denom = F.lit(s2) + nd * F.lit(t2)
-    log_lam = F.lit(0.5) * F.log(F.lit(s2) / denom) + (
-        nd * nd * dev * dev * F.lit(t2)
-    ) / (F.lit(2.0 * s2) * denom)
-    scored = cum.withColumn("_ll", log_lam).withColumn(
-        "_llmax", F.max("_ll").over(w)
-    )
-    p = F.exp(-F.greatest(F.lit(0.0), F.col("_llmax")))
-    return scored.select(
-        *g,
-        F.col("_t").alias(time_col),
-        F.col("_n").cast("long").alias("n_cum"),
-        F.round("_xbar", 6).alias("mean_cum"),
-        F.round("_ll", 6).alias("log_lambda"),
-        F.round(p, 6).alias("p_always_valid"),
-        (p < F.lit(float(alpha))).alias("rejected"),
-    )
-
-
-def power_mde_table(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    rel_effects: Sequence[float] = (0.01, 0.02, 0.05, 0.10),
-    alpha: float = 0.05,
-    power: float = 0.8,
-) -> DataFrame:
-    """Experiment-planning grid: for each group's observed metric
-    (mean/sd from the data) and each candidate relative effect size,
-    the two-sample per-arm sample size the standard normal-approximation
-    power formula demands,
-
-        n_per_arm = 2σ²(z_{1−α/2} + z_{power})² / δ²,   δ = rel·mean,
-
-    plus the flip side — the minimum detectable effect the CURRENT n
-    already supports (equal split assumed):
-    mde_abs = (z_{1−α/2}+z_{power})·σ·√(4/n). The go/no-go table an
-    experimentation platform shows before anyone flips a flag: is this
-    metric sensitive enough, or would the test run for a quarter?
-
-    z constants come from the same Acklam ``norm_ppf`` the SRM gate uses,
-    so every number is elementary arithmetic over one aggregate row per
-    group and a broadcast literal grid — bit-replayable cross-engine.
-    Output per (group, rel_effect): (group…, rel_effect, n_rows, mean,
-    sd, delta_abs, n_required_per_arm, mde_abs_at_n, mde_rel_at_n),
-    doubles rounded 6dp, ``n_required_per_arm`` ceil'd to a BIGINT.
-
-    Scale shape: one map-side-combined aggregate to group grain, then a
-    literal-array explode — the grid never touches row grain."""
-    if not rel_effects:
-        raise ValueError("rel_effects must be non-empty")
-    if not 0 < alpha < 1 or not 0 < power < 1:
-        raise ValueError("alpha and power must be in (0, 1)")
-    z = norm_ppf(1.0 - float(alpha) / 2.0) + norm_ppf(float(power))
-    z2 = z * z
-    g = list(group_cols)
-    agg = df.groupBy(*g).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.avg(F.col(value_col).cast("double")).alias("_mean"),
-        F.stddev_samp(F.col(value_col).cast("double")).alias("_sd"),
-    )
-    grid = agg.select(
-        "*",
-        F.explode(
-            F.array(*[F.lit(float(r)) for r in rel_effects])
-        ).alias("rel_effect"),
-    )
-    delta = F.col("rel_effect") * F.col("_mean")
-    var2 = F.lit(2.0) * F.col("_sd") * F.col("_sd")
-    mde_abs = F.lit(z) * F.col("_sd") * F.sqrt(
-        F.lit(4.0) / F.col("n_rows").cast("double")
-    )
-    # ceil() on the raw double is cross-engine fragile: a last-ulp
-    # stddev_samp divergence (or a ratio landing exactly on an integer)
-    # flips the result by 1, and delta=0 (mean 0) makes the ratio
-    # Infinity, which an ANSI BIGINT cast rejects. Round to the 6dp
-    # release grain first and emit NULL for zero-mean groups.
-    n_req = F.when(
-        delta != F.lit(0.0),
-        F.ceil(F.round(var2 * F.lit(z2) / (delta * delta), 6)).cast("long"),
-    )
-    return grid.select(
-        *g,
-        "rel_effect",
-        "n_rows",
-        F.round("_mean", 6).alias("mean"),
-        F.round("_sd", 6).alias("sd"),
-        F.round(delta, 6).alias("delta_abs"),
-        n_req.alias("n_required_per_arm"),
-        F.round(mde_abs, 6).alias("mde_abs_at_n"),
-        # try_divide: a zero-mean group has no relative MDE (ANSI division
-        # would throw); NULL mirrors the n_required_per_arm guard.
-        F.round(F.try_divide(mde_abs, F.col("_mean")), 6).alias(
-            "mde_rel_at_n"
-        ),
-    )
-
-
-def msprt_two_sample(
-    df: DataFrame,
-    arm_col: str,
-    treat: str,
-    control: str,
-    time_col: str,
-    value_col: str,
-    sigma: float,
-    tau: float,
-    alpha: float = 0.05,
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Two-sample always-valid mSPRT — the treatment-vs-control form an
-    experimentation platform actually monitors (the one-sample
-    :func:`msprt_always_valid` is the drift/guardrail variant). Under H0
-    the cumulative mean difference d_t = x̄_T − x̄_C is
-    N(0, V_t = σ²(1/n_T + 1/n_C)); the normal-mixture likelihood ratio
-
-        log Λ_t = ½·ln(V_t/(V_t + τ²)) + d_t²·τ² / (2·V_t·(V_t + τ²))
-
-    is a martingale under H0, so p_t = 1/max_{k<=t}Λ_k is valid at every
-    look. ``rejected`` latches via the running max, same as the
-    one-sample form. Rows whose arm is neither ``treat`` nor ``control``
-    are ignored.
-
-    Output per (group…, time): (…, time, n_treat, n_control, diff,
-    log_lambda, p_always_valid, rejected). ``group_cols`` partitions
-    independent experiments/metrics; empty means one experiment — the
-    windows then run single-partition, which is safe ONLY because the
-    input to them is the bounded (group, time) grid, never row grain
-    (the raw events are reduced by one map-side-combined aggregate
-    first).
-
-    Both arms must have data by a given time bucket for the statistic to
-    exist; earlier buckets emit NULL diff/log_lambda with p = 1 and
-    rejected = false (no evidence yet — the honest sequential answer)."""
-    if sigma <= 0 or tau <= 0:
-        raise ValueError("sigma and tau must be positive")
-    g = list(group_cols)
-    is_t = F.col(arm_col) == F.lit(treat)
-    is_c = F.col(arm_col) == F.lit(control)
-    daily = (
-        df.filter(is_t | is_c)
-        .groupBy(*g, F.col(time_col).alias("_t"))
-        .agg(
-            F.sum(is_t.cast("long")).alias("_dnt"),
-            F.sum(F.when(is_t, F.col(value_col).cast("double")).otherwise(0.0)).alias("_dst"),
-            F.sum(is_c.cast("long")).alias("_dnc"),
-            F.sum(F.when(is_c, F.col(value_col).cast("double")).otherwise(0.0)).alias("_dsc"),
-        )
-    )
-    w = Window.partitionBy(*g).orderBy("_t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    s2, t2 = float(sigma) ** 2, float(tau) ** 2
-    cum = (
-        daily.withColumn("_nt", F.sum("_dnt").over(w))
-        .withColumn("_st", F.sum("_dst").over(w))
-        .withColumn("_nc", F.sum("_dnc").over(w))
-        .withColumn("_sc", F.sum("_dsc").over(w))
-    )
-    both = (F.col("_nt") > 0) & (F.col("_nc") > 0)
-    diff = F.col("_st") / F.col("_nt") - F.col("_sc") / F.col("_nc")
-    v = F.lit(s2) * (
-        F.lit(1.0) / F.col("_nt").cast("double")
-        + F.lit(1.0) / F.col("_nc").cast("double")
-    )
-    log_lam = F.when(
-        both,
-        F.lit(0.5) * F.log(v / (v + F.lit(t2)))
-        + diff * diff * F.lit(t2) / (F.lit(2.0) * v * (v + F.lit(t2))),
-    )
-    scored = cum.withColumn("_ll", log_lam).withColumn(
-        "_llmax", F.max("_ll").over(w)
-    )
-    p = F.exp(-F.greatest(F.lit(0.0), F.coalesce(F.col("_llmax"), F.lit(0.0))))
-    return scored.select(
-        *g,
-        F.col("_t").alias(time_col),
-        F.col("_nt").cast("long").alias("n_treat"),
-        F.col("_nc").cast("long").alias("n_control"),
-        F.round(F.when(both, diff), 6).alias("diff"),
-        F.round("_ll", 6).alias("log_lambda"),
-        F.round(p, 6).alias("p_always_valid"),
-        (p < F.lit(float(alpha))).alias("rejected"),
-    )
-
-
 def mann_kendall_trend(
     df: DataFrame,
     group_col: str,
@@ -2134,797 +847,6 @@ def mann_kendall_trend(
     )
 
 
-def nelson_aalen_hazard(
-    df: DataFrame,
-    group_col: str,
-    time_col: str,
-    event_flag_col: str,
-) -> DataFrame:
-    """Nelson-Aalen cumulative-hazard estimator per group:
-    Ĥ(t) = Σ_{t_i ≤ t} d_i / n_i over the distinct event times, where
-    d_i = events at t_i and n_i = subjects still at risk (not yet
-    evented and not yet censored). The hazard-scale complement of the
-    Kaplan-Meier survival curve (`kaplan_meier_conversion`): KM
-    multiplies survival factors, NA sums hazard increments — the
-    estimator a retention/conversion dashboard wants when comparing
-    hazard SLOPES (constant slope = exponential; bends = aging effects).
-
-    Input grain: one row per subject with its observed time and a 1/0
-    event flag (0 = right-censored at that time). Determinism: d and n
-    are exact integers; each increment d/n is integer-micro-quantized
-    (round(1e6·d/n)) before the cumulative sum, so the running total is
-    an exact-integer window — no float accumulation anywhere. Returns
-    (group, t, n_at_risk, n_events, hazard_step, cum_hazard), 6dp.
-
-    Scale shape: one aggregate to the (group, time) grain, then two
-    group-keyed windows on that grain — the raw subject table is
-    touched exactly once."""
-    g = F.col(group_col)
-    base = df.select(
-        g.alias("g"),
-        F.col(time_col).alias("t"),
-        F.col(event_flag_col).cast("long").alias("ev"),
-    )
-    grid = base.groupBy("g", "t").agg(
-        F.count(F.lit(1)).cast("long").alias("n_obs"),
-        F.sum("ev").cast("long").alias("d"),
-    )
-    w = Window.partitionBy("g").orderBy("t")
-    # at risk at t = total in group − all observations strictly before t
-    tot = Window.partitionBy("g")
-    at_risk = (
-        F.sum("n_obs").over(tot)
-        - F.coalesce(
-            F.sum("n_obs").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        )
-    )
-    stepped = grid.withColumn("n_at_risk", at_risk.cast("long")).withColumn(
-        "h_micro",
-        F.round(F.lit(1e6) * F.col("d") / F.col("n_at_risk"), 0).cast("long"),
-    )
-    cum = F.sum("h_micro").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return stepped.select(
-        F.col("g").alias(group_col),
-        "t",
-        "n_at_risk",
-        F.col("d").alias("n_events"),
-        F.round(F.col("h_micro") / 1e6, 6).alias("hazard_step"),
-        F.round(cum / 1e6, 6).alias("cum_hazard"),
-    )
-
-
-def stratified_ipw_ate(
-    df: DataFrame,
-    stratum_col: str,
-    treat_flag_col: str,
-    outcome_col: str,
-) -> DataFrame:
-    """Average treatment effect by stratification / inverse-propensity
-    weighting with within-stratum propensities — the observational
-    companion to the randomized-experiment stack (CUPED / DiD / QTE):
-    when treatment assignment correlates with a known confounder, the
-    naive mean difference is biased; estimating e_s = P(treat | stratum)
-    inside each stratum and averaging stratum effects by stratum weight
-    removes the confounding that the strata capture (exactly the Hajek
-    IPW estimator when the propensity model is stratum-saturated).
-
-        ATE = Σ_s (n_s / n) · (ȳ_treat,s − ȳ_control,s)
-
-    Strata with only one arm contribute nothing (no within-stratum
-    contrast) and are reported in ``n_strata_skipped``. Returns ONE row:
-    (n_strata, n_strata_skipped, ate_naive, ate_stratified, confounding
-    bias = naive − stratified), 6dp.
-
-    Scale shape: one map-side-combining aggregate to the
-    (stratum, arm) grain; everything after runs on that tiny grid."""
-    base = df.select(
-        F.col(stratum_col).alias("s"),
-        F.col(treat_flag_col).cast("int").alias("tr"),
-        F.col(outcome_col).cast("double").alias("y"),
-    )
-    cell = base.groupBy("s", "tr").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").alias("sy"),
-    )
-    piv = (
-        cell.groupBy("s")
-        .agg(
-            F.sum(F.when(F.col("tr") == 1, F.col("n"))).alias("nt"),
-            F.sum(F.when(F.col("tr") == 1, F.col("sy"))).alias("syt"),
-            F.sum(F.when(F.col("tr") == 0, F.col("n"))).alias("nc"),
-            F.sum(F.when(F.col("tr") == 0, F.col("sy"))).alias("syc"),
-        )
-    )
-    both = F.col("nt").isNotNull() & F.col("nc").isNotNull()
-    eff = F.col("syt") / F.col("nt") - F.col("syc") / F.col("nc")
-    ns = F.coalesce("nt", F.lit(0)) + F.coalesce("nc", F.lit(0))
-    agg = piv.agg(
-        F.count(F.lit(1)).cast("long").alias("n_strata"),
-        F.sum(F.when(~both, 1).otherwise(0)).cast("long").alias(
-            "n_strata_skipped"
-        ),
-        F.sum(F.when(both, ns)).alias("n_used"),
-        F.sum(F.when(both, ns * eff)).alias("wsum"),
-        F.sum("syt").alias("ty"),
-        F.sum("nt").alias("tn"),
-        F.sum("syc").alias("cy"),
-        F.sum("nc").alias("cn"),
-    )
-    naive = F.col("ty") / F.col("tn") - F.col("cy") / F.col("cn")
-    strat = F.col("wsum") / F.col("n_used")
-    return agg.select(
-        "n_strata",
-        "n_strata_skipped",
-        F.round(naive, 6).alias("ate_naive"),
-        F.round(strat, 6).alias("ate_stratified"),
-        F.round(naive - strat, 6).alias("confounding_bias"),
-    )
-
-
-def token_js_divergence(
-    docs: DataFrame,
-    group_col: str,
-    text_col: str = "text",
-) -> DataFrame:
-    """Jensen-Shannon divergence of each group's token distribution vs
-    the REST of the corpus — the bounded, symmetric distribution-drift
-    score ([0, ln 2]) a mixing pipeline uses to rank how idiosyncratic
-    each source is (KL explodes on unshared vocabulary; JSD doesn't,
-    because both sides mix toward m = (p+q)/2):
-
-        JSD(p‖q) = ½ Σ_t [p_t ln(p_t/m_t) + q_t ln(q_t/m_t)].
-
-    Determinism: token counts aggregate exactly; each token's JSD term
-    is quantized to integer NANOS (round(term·1e9)) before the per-group
-    sum, so vocabulary-order accumulation can never move the score.
-    Tokens ABSENT from the group (p=0, q>0) never materialize a
-    (group, token) row, but their total contribution is closed-form —
-    each is ½·q·ln2, so the whole tail is (ln2/2)·(1 − Σ_{t∈group} q_t),
-    computed from the same exact-integer quantized q mass (no row
-    explosion to the full group×vocab grid). Returns
-    (group, n_tokens, vocab, jsd_vs_rest), 6dp.
-
-    Scale shape: ONE token explode feeding a (group, token) count grid;
-    corpus totals derive from that grid (no second scan); the JSD sum
-    runs at (group, token) grain with map-side combine."""
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    g = F.col(group_col)
-    tok = docs.select(
-        g.alias("g"), F.explode(tokens(F.lower(F.col(text_col)))).alias("tk")
-    )
-    gt = tok.groupBy("g", "tk").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    from pyspark import StorageLevel
-
-    gt = gt.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        totals = gt.groupBy("g").agg(F.sum("c").cast("long").alias("ng"))
-        corpus_tok = gt.groupBy("tk").agg(
-            F.sum("c").cast("long").alias("ct")
-        )
-        corpus_n = gt.agg(F.sum("c").cast("long").alias("nall"))
-        j = (
-            gt.join(corpus_tok, on="tk")
-            .join(F.broadcast(totals), on="g")
-            .crossJoin(F.broadcast(corpus_n))
-        )
-        # p = group dist; q = rest-of-corpus dist (corpus minus the group)
-        p = F.col("c") / F.col("ng")
-        qc = F.col("ct") - F.col("c")
-        qn = F.col("nall") - F.col("ng")
-        q = qc / qn
-        m = (p + q) / F.lit(2.0)
-        term = (
-            F.when(F.col("c") > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
-            + F.when(qc > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
-        ) / F.lit(2.0)
-        qm_term = F.when(qc > 0, q).otherwise(F.lit(0.0))
-        out = (
-            j.withColumn(
-                "tm", F.round(term * F.lit(1e9), 0).cast("long")
-            )
-            .withColumn(
-                "qm", F.round(qm_term * F.lit(1e9), 0).cast("long")
-            )
-            .groupBy("g")
-            .agg(
-                F.max("ng").alias("n_tokens"),
-                F.count(F.lit(1)).cast("long").alias("vocab"),
-                F.sum("tm").cast("long").alias("jm"),
-                F.sum("qm").cast("long").alias("qmass"),
-            )
-            .select(
-                F.col("g").alias(group_col),
-                "n_tokens",
-                "vocab",
-                # closed-form tail: tokens with p=0 contribute 1/2·q·ln 2
-                # each; their total q-mass is 1 − Σ_{t∈group} q_t
-                F.round(
-                    (
-                        F.col("jm")
-                        + (F.lit(1e9) - F.col("qmass"))
-                        * F.lit(math.log(2.0) / 2.0)
-                    )
-                    / 1e9,
-                    6,
-                ).alias("jsd_vs_rest"),
-            )
-        )
-        rows = out.collect()
-    finally:
-        gt.unpersist()
-    spark = docs.sparkSession
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(group_col, T.StringType()),
-            T.StructField("n_tokens", T.LongType()),
-            T.StructField("vocab", T.LongType()),
-            T.StructField("jsd_vs_rest", T.DoubleType()),
-        ]
-    )
-    return spark.createDataFrame(
-        [(str(r[0]), r[1], r[2], r[3]) for r in rows], schema
-    )
-
-
-def holt_linear_forecast(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    value_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    horizon: int = 7,
-) -> DataFrame:
-    """Holt's linear-trend (double exponential) smoothing per group — the
-    level+trend forecast a monitoring pipeline runs on its daily series
-    (plain EWMA under-forecasts any trending series by a full lag step):
-
-        l_t = α·y_t + (1−α)·(l_{t−1} + b_{t−1})
-        b_t = β·(l_t − l_{t−1}) + (1−β)·b_{t−1},  l_1 = y_1, b_1 = 0
-
-    The recursion is inherently sequential, so it runs as ONE in-group
-    fold (`F.aggregate` over the order-sorted value array) — state is
-    (level, trend), each group touched once, work linear in the series
-    length; the cross-group axis stays fully parallel. Group state is
-    bounded by the series grain (days), the same per-group bound as the
-    ACF/changepoint operators. α/β default to binary-exact 1/2 and 1/4
-    so engines can't disagree on literal parsing; the fold order is the
-    series order in BOTH engines, so there is no summation-order issue
-    to quantize away.
-
-    Oracle note: the DuckDB replay is a depth-bounded RECURSIVE CTE, not
-    list_reduce — DuckDB 1.0's list_reduce evaluates struct-field lambda
-    outputs into vectors that ALIAS the accumulator, so a field written
-    earlier (l) clobbers `a.l` inside the next field's expression (b)
-    from the second merge onward; measured divergence, avoided entirely.
-
-    Returns one row per group: n_points, level, trend, forecast
-    (level + horizon·trend), each rounded to 6dp."""
-    a, b = float(alpha), float(beta)
-    series = df.groupBy(*group_cols).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).alias("o"),
-                    F.col(value_col).cast("double").alias("y"),
-                )
-            )
-        ).alias("_s")
-    )
-    first_y = F.element_at("_s", 1)["y"]
-    init = F.struct(first_y.alias("l"), F.lit(0.0).alias("b"))
-    rest = F.slice("_s", 2, F.greatest(F.size("_s") - 1, F.lit(0)))
-
-    def merge(acc, e):
-        new_l = F.lit(a) * e["y"] + F.lit(1.0 - a) * (acc["l"] + acc["b"])
-        new_b = (
-            F.lit(b)
-            * (
-                (F.lit(a) * e["y"] + F.lit(1.0 - a) * (acc["l"] + acc["b"]))
-                - acc["l"]
-            )
-            + F.lit(1.0 - b) * acc["b"]
-        )
-        return F.struct(new_l.alias("l"), new_b.alias("b"))
-
-    state = F.aggregate(rest, init, merge)
-    return series.select(
-        *group_cols,
-        F.size("_s").cast("long").alias("n_points"),
-        F.round(state["l"], 6).alias("level"),
-        F.round(state["b"], 6).alias("trend"),
-        F.round(
-            state["l"] + F.lit(float(horizon)) * state["b"], 6
-        ).alias("forecast"),
-    )
-
-
-def cmh_odds_ratio(
-    df: DataFrame,
-    stratum_col: str,
-    treat_flag_col: str,
-    outcome_flag_col: str,
-) -> DataFrame:
-    """Cochran–Mantel–Haenszel pooled odds ratio and test across the
-    strata's 2×2 tables — the BINARY-outcome rung of the observational
-    stack (stratified_ipw_ate is the continuous-outcome twin): when a
-    confounder both shifts exposure and shifts a yes/no outcome, the
-    collapsed table's odds ratio is Simpson-biased; CMH pools the
-    per-stratum tables instead.
-
-        OR_CMH = Σ_s(a·d/n) / Σ_s(b·c/n)
-        χ²_MH  = (Σa − Σ (a+b)(a+c)/n)² / Σ (a+b)(c+d)(a+c)(b+d)/(n²(n−1))
-
-    (a = treated∧outcome, b = treated∧¬outcome, c = control∧outcome,
-    d = control∧¬outcome, no continuity correction). Determinism: the
-    2×2 cells are exact integer counts; each stratum's four ratio terms
-    quantize to integer MICROS before the cross-stratum sum (micros, not
-    the usual nanos — the a·d/n terms grow with the table, and micros
-    keep the quantized sums inside int64 out to ~10¹² rows per stratum,
-    the same overflow headroom call as the PCA power terms). Strata
-    where either margin is empty (n ≤ 1 or a degenerate margin) simply
-    contribute their zero products — no row is dropped.
-
-    Returns ONE row: (n_strata, n_total, or_pooled, or_cmh, chi2_mh),
-    6dp. or_pooled is the collapsed-table odds ratio shown for the
-    Simpson contrast; NULL when a collapsed margin cell is zero (odds
-    undefined), as is or_cmh when Σb·c/n is zero.
-
-    Scale shape: one map-side-combining aggregate to the stratum grain,
-    then a second to one row — nothing after the first shuffle touches
-    fact rows."""
-    base = df.select(
-        F.col(stratum_col).alias("s"),
-        F.col(treat_flag_col).cast("int").alias("tr"),
-        F.col(outcome_flag_col).cast("int").alias("y"),
-    )
-    cell = base.groupBy("s").agg(
-        F.sum(F.col("tr") * F.col("y")).cast("long").alias("a"),
-        F.sum(F.col("tr") * (1 - F.col("y"))).cast("long").alias("b"),
-        F.sum((1 - F.col("tr")) * F.col("y")).cast("long").alias("c"),
-        F.sum((1 - F.col("tr")) * (1 - F.col("y"))).cast("long").alias("d"),
-    )
-    a, b, c, d = (F.col(x).cast("double") for x in "abcd")
-    n = a + b + c + d
-    nz = F.when(n > 0, n)  # NULL-out empty strata; terms coalesce to 0
-    # identical-operation-order convention: the oracle writes each term
-    # as round(1e6 * <product> / <den>, 0) with 1e6 multiplied FIRST and
-    # the same left-to-right factor association — mirror that exactly so
-    # a value at a half-micro boundary rounds the same on both engines
-    micros = lambda col: F.coalesce(  # noqa: E731
-        F.round(col, 0).cast("long"), F.lit(0).cast("long")
-    )
-    m6 = F.lit(1e6)
-    var_den = F.when(n > 1, n * n * (n - 1))
-    terms = cell.select(
-        (F.col("a") + F.col("b") + F.col("c") + F.col("d")).alias("nn"),
-        F.col("a").alias("ai"),
-        micros(m6 * (a * d) / nz).alias("t_ad"),
-        micros(m6 * (b * c) / nz).alias("t_bc"),
-        micros(m6 * (a + b) * (a + c) / nz).alias("t_e"),
-        micros(
-            m6 * (a + b) * (c + d) * (a + c) * (b + d) / var_den
-        ).alias("t_v"),
-    )
-    agg = terms.agg(
-        F.count(F.lit(1)).cast("long").alias("n_strata"),
-        F.sum("nn").cast("long").alias("n_total"),
-        F.sum("ai").cast("long").alias("sum_a"),
-        F.sum("t_ad").cast("long").alias("s_ad"),
-        F.sum("t_bc").cast("long").alias("s_bc"),
-        F.sum("t_e").cast("long").alias("s_e"),
-        F.sum("t_v").cast("long").alias("s_v"),
-    )
-    # Collapsed-table (pooled) odds ratio for the Simpson contrast.
-    pooled = base.agg(
-        F.sum(F.col("tr") * F.col("y")).cast("long").alias("pa"),
-        F.sum(F.col("tr") * (1 - F.col("y"))).cast("long").alias("pb"),
-        F.sum((1 - F.col("tr")) * F.col("y")).cast("long").alias("pc"),
-        F.sum((1 - F.col("tr")) * (1 - F.col("y"))).cast("long").alias("pd"),
-    )
-    joined = agg.crossJoin(F.broadcast(pooled))
-    or_pooled = F.when(
-        (F.col("pb") > 0) & (F.col("pc") > 0) & (F.col("pd") > 0),
-        (F.col("pa").cast("double") * F.col("pd"))
-        / (F.col("pb").cast("double") * F.col("pc")),
-    )
-    or_cmh = F.when(
-        F.col("s_bc") > 0, F.col("s_ad").cast("double") / F.col("s_bc")
-    )
-    diff = F.col("sum_a").cast("double") - F.col("s_e") / F.lit(1e6)
-    chi2 = F.when(F.col("s_v") > 0, diff * diff / (F.col("s_v") / F.lit(1e6)))
-    return joined.select(
-        "n_strata",
-        "n_total",
-        F.round(or_pooled, 6).alias("or_pooled"),
-        F.round(or_cmh, 6).alias("or_cmh"),
-        F.round(chi2, 6).alias("chi2_mh"),
-    )
-
-
-def holt_winters_forecast(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    value_col: str,
-    period: int = 7,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    gamma: float = 0.5,
-    horizon: int = 7,
-) -> DataFrame:
-    """Holt–Winters ADDITIVE triple exponential smoothing per group —
-    level + trend + a ``period``-slot seasonal profile, the full
-    classical decomposition forecast (Holt's linear fold under-forecasts
-    any weekly-shaped series by the seasonal amplitude):
-
-        l_t = α·(y_t − s_{t−m}[i]) + (1−α)·(l + b)
-        b_t = β·(l_t − l) + (1−β)·b
-        s_t[i] = γ·(y_t − l_t) + (1−γ)·s_{t−m}[i],  i = order mod m
-
-    l_1 = y_1, b_1 = 0, s_1 = 0⃗ (the standard cold-start; the profile
-    converges within a few periods). The seasonal slot indexes by the
-    ABSOLUTE order value mod m — not the row position — so gap days
-    cannot rotate the profile. Like holt_linear_forecast this is ONE
-    in-group `F.aggregate` fold over the order-sorted series (state is
-    (l, b, s[0..m−1])); the cross-group axis stays fully parallel and
-    the constants default binary-exact (α=1/2, β=1/4, γ=1/2), with the
-    fold order shared by both engines — nothing to quantize. The oracle
-    replays as a recursive CTE carrying the m seasonal columns (the
-    list_reduce aliasing bug documented on holt_linear applies here
-    doubly — never list_reduce a struct state).
-
-    Returns one row per group: n_points, level, trend, s0..s{m−1}
-    (the learned profile), and forecast = level + horizon·trend +
-    s[(last_order + horizon) mod m], all 6dp."""
-    a, b, g = float(alpha), float(beta), float(gamma)
-    m = int(period)
-    if m < 2:
-        raise ValueError("period must be >= 2")
-    series = df.groupBy(*group_cols).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(order_col).cast("long").alias("o"),
-                    F.col(value_col).cast("double").alias("y"),
-                )
-            )
-        ).alias("_s")
-    )
-    first = F.element_at("_s", 1)
-    init = F.struct(
-        first["y"].alias("l"),
-        F.lit(0.0).alias("b"),
-        F.array_repeat(F.lit(0.0), m).alias("s"),
-    )
-    rest = F.slice("_s", 2, F.greatest(F.size("_s") - 1, F.lit(0)))
-
-    def merge(acc, e):
-        idx = (e["o"] % m).cast("int")  # 0-based seasonal slot
-        s_prev = F.element_at(acc["s"], idx + F.lit(1))
-        new_l = F.lit(a) * (e["y"] - s_prev) + F.lit(1.0 - a) * (
-            acc["l"] + acc["b"]
-        )
-        new_b = F.lit(b) * (new_l - acc["l"]) + F.lit(1.0 - b) * acc["b"]
-        new_s = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda j: F.when(
-                j.cast("int") == idx,
-                F.lit(g) * (e["y"] - new_l) + F.lit(1.0 - g) * s_prev,
-            ).otherwise(F.element_at(acc["s"], j.cast("int") + F.lit(1))),
-        )
-        return F.struct(
-            new_l.alias("l"), new_b.alias("b"), new_s.alias("s")
-        )
-
-    state = F.aggregate(rest, init, merge)
-    last_o = F.element_at("_s", F.size("_s"))["o"]
-    f_idx = ((last_o + F.lit(int(horizon))) % m).cast("int")
-    out = [
-        F.size("_s").cast("long").alias("n_points"),
-        F.round(state["l"], 6).alias("level"),
-        F.round(state["b"], 6).alias("trend"),
-    ]
-    out += [
-        F.round(F.element_at(state["s"], j + 1), 6).alias(f"s{j}")
-        for j in range(m)
-    ]
-    out.append(
-        F.round(
-            state["l"]
-            + F.lit(float(horizon)) * state["b"]
-            + F.element_at(state["s"], f_idx + F.lit(1)),
-            6,
-        ).alias("forecast")
-    )
-    return series.select(*group_cols, *out)
-
-
-def gmm_em_1d(
-    df: DataFrame,
-    value_col: str,
-    iterations: int = 3,
-) -> DataFrame:
-    """DISTRIBUTED two-component 1-D Gaussian-mixture fit by
-    expectation-maximization — the soft-assignment counterpart of
-    kmeans_lloyd for a single metric column (bimodal latency, mixed
-    bot/human engagement values, contaminated sensor ranges): each EM
-    round is ONE map-side-combined aggregate; no per-row state ever
-    leaves the executors.
-
-    Deterministic init from the exact first two moments (the
-    moment_profile quantization: Σx at 1e-9, Σx² at 1e-6 grids, summed
-    as DECIMAL(38,0)): μ₁,₂ = mean ∓ sd, σ²₁,₂ = max(var, 1e-6),
-    w₁,₂ = 1/2. Per round, the E-step responsibility
-
-        r_i = w₁·N(x_i; μ₁, σ₁²) / (w₁·N₁ + w₂·N₂)   (0.5 when both
-        densities underflow to zero)
-
-    is a pure column expression with the parameters embedded as
-    LITERALS; the M-step sufficient statistics quantize per row
-    (r and r·x to integer nanos, r·x² to micros — per-power grids keep
-    the terms integral-double-exact) and sum as DECIMAL(38,0), so the
-    reduce is exact-integer and order-free. The component-2 sums use
-    (1−r) explicitly — round((1−r)·s) ≠ s − round(r·s) at half
-    boundaries, so deriving them by subtraction would break the replay.
-    Parameter updates are plain IEEE driver doubles, mirrored
-    operation-for-operation by the unrolled DuckDB oracle; the usual
-    1-ulp libm caveat (exp here) is absorbed by the nano grid as in
-    logistic_gd_train.
-
-    Returns two rows (component, weight, mu, variance, mean_loglik) —
-    component 1 is the lower-μ init branch; mean_loglik is the
-    per-row-nano-quantized mean log-density under the FINAL parameters,
-    identical on both rows; all 6dp.
-
-    Scale shape: init + ``iterations`` + 1 aggregates, each one corpus
-    scan to a handful of integer cells; driver state is 6 floats."""
-    import math
-
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    from pyspark import StorageLevel
-
-    x = F.col(value_col).cast("double")
-    base = df.select(x.alias("x")).where(
-        F.col("x").isNotNull()
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        init = base.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(
-                F.round(F.col("x") * F.lit(1e9), 0).cast("decimal(38,0)")
-            ).alias("q1"),
-            F.sum(
-                F.round(F.col("x") * F.col("x") * F.lit(1e6), 0).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("q2"),
-        ).collect()[0]
-        n = int(init["n"])
-        if n == 0:
-            raise ValueError("gmm_em_1d: empty input")
-        mean = (int(init["q1"]) / 1e9) / n
-        var = (int(init["q2"]) / 1e6) / n - mean * mean
-        sd = math.sqrt(max(var, 0.0))
-        v0 = max(var, 1e-6)
-        w1, mu1, v1 = 0.5, mean - sd, v0
-        w2, mu2, v2 = 0.5, mean + sd, v0
-
-        def _dens(w, mu, v):
-            return (
-                F.lit(w)
-                * F.exp(
-                    -((F.col("x") - F.lit(mu)) * (F.col("x") - F.lit(mu)))
-                    / (F.lit(2.0) * F.lit(v))
-                )
-                / F.sqrt(F.lit(2.0 * math.pi) * F.lit(v))
-            )
-
-        def _q(term, scale):
-            return F.sum(
-                F.round(term * F.lit(scale), 0).cast("decimal(38,0)")
-            )
-
-        for _ in range(int(iterations)):
-            p1 = _dens(w1, mu1, v1)
-            p2 = _dens(w2, mu2, v2)
-            r = F.when(p1 + p2 > 0, p1 / (p1 + p2)).otherwise(F.lit(0.5))
-            s = base.agg(
-                _q(r, 1e9).alias("a_r"),
-                _q(r * F.col("x"), 1e9).alias("a_rx"),
-                _q(r * F.col("x") * F.col("x"), 1e6).alias("a_rxx"),
-                _q(F.lit(1.0) - r, 1e9).alias("b_r"),
-                _q((F.lit(1.0) - r) * F.col("x"), 1e9).alias("b_rx"),
-                _q(
-                    (F.lit(1.0) - r) * F.col("x") * F.col("x"), 1e6
-                ).alias("b_rxx"),
-            ).collect()[0]
-            n1 = int(s["a_r"]) / 1e9
-            n2 = int(s["b_r"]) / 1e9
-            mu1 = (int(s["a_rx"]) / 1e9) / n1
-            mu2 = (int(s["b_rx"]) / 1e9) / n2
-            v1 = max((int(s["a_rxx"]) / 1e6) / n1 - mu1 * mu1, 1e-6)
-            v2 = max((int(s["b_rxx"]) / 1e6) / n2 - mu2 * mu2, 1e-6)
-            w1 = n1 / n
-            w2 = n2 / n
-        p1 = _dens(w1, mu1, v1)
-        p2 = _dens(w2, mu2, v2)
-        ll = base.agg(
-            F.sum(
-                F.round(
-                    F.when(p1 + p2 > 0, F.log(p1 + p2)).otherwise(
-                        F.lit(-745.0)  # ln of the smallest double, both
-                        # engines' underflow stand-in
-                    )
-                    * F.lit(1e9),
-                    0,
-                ).cast("decimal(38,0)")
-            ).alias("lls")
-        ).collect()[0]
-        mean_ll = (int(ll["lls"]) / 1e9) / n
-    finally:
-        base.unpersist()
-    rows = [
-        (1, w1, mu1, v1, mean_ll),
-        (2, w2, mu2, v2, mean_ll),
-    ]
-    return (
-        df.sparkSession.createDataFrame(
-            rows,
-            "component int, weight double, mu double, variance double, "
-            "mean_loglik double",
-        )
-        .select(
-            "component",
-            F.round("weight", 6).alias("weight"),
-            F.round("mu", 6).alias("mu"),
-            F.round("variance", 6).alias("variance"),
-            F.round("mean_loglik", 6).alias("mean_loglik"),
-        )
-        .orderBy("component")
-    )
-
-
-def cox_ph_fit(
-    df: DataFrame,
-    time_col: str,
-    event_col: str,
-    x_col: str,
-    iterations: int = 3,
-) -> DataFrame:
-    """DISTRIBUTED Cox proportional-hazards fit (single covariate,
-    Breslow tie handling) by Newton–Raphson on the partial likelihood —
-    the regression rung of the survival stack above km_curve /
-    nelson_aalen_hazard: "does covariate x shift the hazard, and by how
-    much per unit" with censoring handled exactly.
-
-        U(β) = Σ_t [ sx_t − m_t·S1(t)/S0(t) ]
-        I(β) = Σ_t   m_t·[ S2(t)/S0(t) − (S1(t)/S0(t))² ]
-        β ← β + U/I,     S_k(t) = Σ_{j: t_j ≥ t} x_j^k·e^{β·x_j}
-
-    Scale shape per Newton step: ONE map-side-combined aggregate of the
-    subject rows to the DISTINCT-TIME grain (per-row e^{βx} terms with β
-    embedded as a literal), reverse-cumulative window sums ON that tiny
-    grain (risk sets never materialize at row grain), one reduce to
-    (U, I), driver updates one float. Subject rows are scanned
-    ``iterations`` times and nothing row-grain ever shuffles twice.
-
-    Determinism: per-row terms quantize to integer grids before the
-    per-time exact sums (e^{βx} and x·e^{βx} at 1e-9, x²·e^{βx} at 1e-6
-    — the moment-profile per-power convention), cumulative risk sums are
-    exact integer window sums, each per-time U/I contribution re-
-    quantizes to nanos before the cross-time reduce, and the Newton
-    update is plain IEEE double mirrored by the unrolled oracle. The
-    1-ulp exp() caveat is absorbed by the grids as elsewhere.
-
-    Returns ONE row: (beta, hazard_ratio = e^β, score_z = U₀/√I₀ the
-    β=0 score test, n_subjects, n_events), 6dp."""
-    import math
-
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    from pyspark import StorageLevel
-    from pyspark.sql.window import Window
-
-    base = df.select(
-        F.col(time_col).cast("long").alias("t"),
-        F.col(event_col).cast("int").alias("d"),
-        F.col(x_col).cast("double").alias("x"),
-    ).where(
-        F.col("t").isNotNull() & F.col("x").isNotNull()
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        counts = base.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("d").cast("long").alias("ne"),
-        ).collect()[0]
-        n_subj, n_events = int(counts["n"]), int(counts["ne"])
-        w_risk = Window.orderBy(F.desc("t")).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        beta = 0.0
-        z0 = None
-        for step in range(int(iterations)):
-            ebx = F.exp(F.lit(beta) * F.col("x"))
-            per_t = base.groupBy("t").agg(
-                F.sum(
-                    F.round(ebx * F.lit(1e9), 0).cast("long")
-                ).alias("r0"),
-                F.sum(
-                    F.round(F.col("x") * ebx * F.lit(1e9), 0).cast("long")
-                ).alias("r1"),
-                F.sum(
-                    F.round(
-                        F.col("x") * F.col("x") * ebx * F.lit(1e6), 0
-                    ).cast("long")
-                ).alias("r2"),
-                F.sum("d").cast("long").alias("m"),
-                F.sum(
-                    F.col("d")
-                    * F.round(F.col("x") * F.lit(1e9), 0).cast("long")
-                ).alias("sx"),
-            )
-            cum = per_t.select(
-                "t",
-                "m",
-                "sx",
-                F.sum("r0").over(w_risk).alias("s0"),
-                F.sum("r1").over(w_risk).alias("s1"),
-                F.sum("r2").over(w_risk).alias("s2"),
-            ).where(F.col("m") > 0)
-            rat1 = (F.col("s1") / F.lit(1e9)) / (F.col("s0") / F.lit(1e9))
-            u_term = F.round(
-                (
-                    F.col("sx") / F.lit(1e9)
-                    - F.col("m") * rat1
-                )
-                * F.lit(1e9),
-                0,
-            ).cast("long")
-            i_term = F.round(
-                F.col("m")
-                * (
-                    (F.col("s2") / F.lit(1e6))
-                    / (F.col("s0") / F.lit(1e9))
-                    - rat1 * rat1
-                )
-                * F.lit(1e9),
-                0,
-            ).cast("long")
-            ui = cum.agg(
-                F.sum(u_term).alias("u"), F.sum(i_term).alias("i")
-            ).collect()[0]
-            u = int(ui["u"]) / 1e9
-            info = int(ui["i"]) / 1e9
-            if step == 0:
-                z0 = u / math.sqrt(info) if info > 0 else None
-            if info <= 0:
-                break
-            beta = beta + u / info
-    finally:
-        base.unpersist()
-    rows = [(beta, math.exp(beta), z0, n_subj, n_events)]
-    return (
-        df.sparkSession.createDataFrame(
-            rows,
-            "beta double, hazard_ratio double, score_z double, "
-            "n_subjects long, n_events long",
-        )
-        .select(
-            F.round("beta", 6).alias("beta"),
-            F.round("hazard_ratio", 6).alias("hazard_ratio"),
-            F.round("score_z", 6).alias("score_z"),
-            "n_subjects",
-            "n_events",
-        )
-    )
-
-
 def spearman_by_group(
     df: DataFrame,
     x_col: str,
@@ -2990,160 +912,6 @@ def spearman_by_group(
         *[F.col(c) for c in by], "n", F.round(rho, 6).alias("rho")
     ).orderBy(*[F.col(c) for c in by]) if by else agg.select(
         "n", F.round(rho, 6).alias("rho")
-    )
-
-
-def cochran_armitage_trend(
-    df: DataFrame,
-    score_col: str,
-    outcome_col: str,
-) -> DataFrame:
-    """Cochran–Armitage test for a linear trend in a binary outcome
-    across ORDERED exposure groups — the ordinal rung between
-    two_proportion_ztest (2 unordered arms) and chi2 independence
-    (k unordered arms): does P(outcome) rise or fall monotonically
-    with the integer score (dose level, priority rank, bucket index)?
-
-    Statistic: with per-row integer score s and 0/1 outcome y,
-    T = Σ s·y − p̄ Σ s and Var(T) = p̄(1−p̄)(Σ s² − (Σ s)²/N) where
-    p̄ = ΣY/N; z = T/√Var is asymptotically standard normal under no
-    trend. The five inputs (N, ΣY, Σs, Σs², Σs·y) are EXACT bigint
-    sums (s is a small integer, so Σs² ≤ s_max²·N never overflows);
-    the closed form runs in double over them with one fixed operation
-    association mirrored by the oracle.
-
-    Scale shape: ONE map-side-combined aggregate over the fact table —
-    no shuffle beyond the single-row reduce, no group-grain
-    intermediate at all (the per-group contingency table is implicit
-    in the score-weighted sums)."""
-    s = F.col(score_col).cast("long")
-    y = F.col(outcome_col).cast("long")
-    agg = df.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(y).cast("long").alias("n_pos"),
-        F.sum(s).cast("long").alias("sum_s"),
-        F.sum(s * s).cast("long").alias("sum_s2"),
-        F.sum(s * y).cast("long").alias("sum_sy"),
-    )
-    nd = F.col("n_rows").cast("double")
-    r = F.col("n_pos").cast("double")
-    s1 = F.col("sum_s").cast("double")
-    s2 = F.col("sum_s2").cast("double")
-    sy = F.col("sum_sy").cast("double")
-    pbar = r / nd
-    t = sy - pbar * s1
-    var = pbar * (F.lit(1.0) - pbar) * (s2 - s1 * s1 / nd)
-    z = F.when(var > 0, t / F.sqrt(var))
-    return agg.select(
-        "n_rows",
-        "n_pos",
-        "sum_s",
-        "sum_s2",
-        "sum_sy",
-        F.round(z, 6).alias("z"),
-    )
-
-
-def kruskal_wallis_by_group(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-) -> DataFrame:
-    """Kruskal–Wallis rank test: do k groups share one value
-    distribution? The k-group rung above mwu (2 groups) and the
-    rank-based sibling of a one-way ANOVA — H compares per-group mean
-    ranks without any normality assumption.
-
-    Exactness: ranks never materialize at row grain. Per DISTINCT
-    value v we have its total count c_v and the running count of
-    strictly smaller values lt_v, so the DOUBLED average rank
-    d_v = 2·lt_v + c_v + 1 is an exact integer on the distinct-value
-    grain; a group's doubled rank sum is Σ c_gv·d_v as DECIMAL(38,0)
-    (c·d ≤ 2N² outgrows int64 past ~2·10⁹ rows). H uses single-rank
-    units, so the doubled sums enter as (Rd/2): with per-group term
-    q_g = round(Rd_g²/n_g) quantized to the unit grid and summed
-    exactly, H = 3/(N(N+1))·Σq_g − 3(N+1) (the ¼ from squaring the
-    doubled sums folds into 12/4 = 3). Tie correction divides by
-    C = 1 − Σ(c_v³−c_v)/(N³−N), also exact-integer input.
-
-    Scale shape: one distinct-value-grain aggregate + ONE ordered
-    window over that (distinct) grain for the cumulative counts —
-    the same distinct-grain cumulative pattern as the Wasserstein and
-    KS families — then a group-grain reduce; rows shuffle only by
-    value and by (group, value), never sort globally."""
-    v = F.col(value_col)
-    dv = df.groupBy(v.alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    dv = dv.select(
-        "v",
-        "c",
-        F.coalesce(F.sum("c").over(w), F.lit(0)).cast("long").alias("lt"),
-    ).select(
-        "v",
-        "c",
-        (F.lit(2) * F.col("lt") + F.col("c") + F.lit(1))
-        .cast("long")
-        .alias("d"),
-    )
-    gv = df.groupBy(F.col(group_col).alias("g"), v.alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("cg")
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    # Group-grain (k rows) but derived from the value-grain join —
-    # eagerly truncate so the join runs once, not once per consumer
-    # (the H scalar and the per-group output both read it).
-    per_g = (
-        gv.join(dv, on="v")
-        .groupBy("g")
-        .agg(
-            F.sum("cg").cast("long").alias("n_g"),
-            F.sum(dec(F.col("cg")) * dec(F.col("d"))).alias("rd"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ties = dv.agg(
-        F.sum(dec(F.col("c")) * dec(F.col("c")) * dec(F.col("c"))
-              - dec(F.col("c"))).alias("tie_sum")
-    )
-    rd_d = F.col("rd").cast("double")
-    n_gd = F.col("n_g").cast("double")
-    # Unit-grid quantized per-group term, summed exactly so the k-group
-    # double summation order cannot differ between engines.
-    q = F.round(rd_d * rd_d / n_gd, 0).cast("decimal(38,0)")
-    tot = per_g.agg(
-        F.sum("n_g").cast("long").alias("n"),
-        F.sum(q).alias("qsum"),
-    ).crossJoin(F.broadcast(ties))
-    nd = F.col("n").cast("double")
-    h = (
-        F.lit(3.0) / (nd * (nd + F.lit(1.0)))
-        * F.col("qsum").cast("double")
-        - F.lit(3.0) * (nd + F.lit(1.0))
-    )
-    c_tie = F.lit(1.0) - F.col("tie_sum").cast("double") / (
-        nd * nd * nd - nd
-    )
-    scal = tot.select(
-        h.alias("_h"),
-        c_tie.alias("_c"),
-    )
-    avg_rank = F.col("rd").cast("double") / (
-        F.lit(2.0) * F.col("n_g").cast("double")
-    )
-    return (
-        per_g.crossJoin(F.broadcast(scal))
-        .select(
-            F.col("g").alias(group_col),
-            F.col("n_g").alias("n"),
-            F.round(avg_rank, 6).alias("avg_rank"),
-            F.round(F.col("_h"), 6).alias("h"),
-            F.round(
-                F.when(F.col("_c") > 0, F.col("_h") / F.col("_c")), 6
-            ).alias("h_tie_adj"),
-        )
-        .orderBy(group_col)
     )
 
 
@@ -3222,734 +990,4 @@ def hill_tail_index(
             F.round(alpha, 6).alias("alpha"),
         )
         .orderBy(group_col)
-    )
-
-
-def diff_in_diff(
-    df: DataFrame,
-    treat_col: str,
-    post_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Two-period × two-group difference-in-differences estimator —
-    the parallel-trends rung of the observational-causal stack next to
-    CUPED (variance reduction), IPW (confounder weighting) and CMH
-    (stratified odds): DiD = (ȳ_treat,post − ȳ_treat,pre) −
-    (ȳ_ctrl,post − ȳ_ctrl,pre).
-
-    Exactness: cell sums are centi-quantized (round(100·y) as bigint)
-    so all four cell means are exact-integer ratios; the three-way
-    subtraction runs in double over them with one fixed association
-    mirrored by the oracle.
-
-    Scale shape: ONE map-side-combined aggregate emitting the 2×2 cell
-    counts and sums — no shuffle beyond the single-row reduce."""
-    it = F.col(treat_col).cast("int")
-    po = F.col(post_col).cast("int")
-    cy = F.round(F.col(value_col) * 100, 0).cast("long")
-
-    def cell(i: int, p: int, agg, name: str):
-        cond = (it == i) & (po == p)
-        return agg(F.when(cond, cy)).alias(name) if agg is F.sum else (
-            F.sum(cond.cast("long")).alias(name)
-        )
-
-    agg = df.agg(
-        cell(1, 0, None, "n_treat_pre"),
-        cell(1, 1, None, "n_treat_post"),
-        cell(0, 0, None, "n_ctrl_pre"),
-        cell(0, 1, None, "n_ctrl_post"),
-        cell(1, 0, F.sum, "s_treat_pre"),
-        cell(1, 1, F.sum, "s_treat_post"),
-        cell(0, 0, F.sum, "s_ctrl_pre"),
-        cell(0, 1, F.sum, "s_ctrl_post"),
-    )
-
-    def mean(s: str, n: str):
-        return (
-            F.col(s).cast("double")
-            / F.lit(100.0)
-            / F.col(n).cast("double")
-        )
-
-    m_tp = mean("s_treat_pre", "n_treat_pre")
-    m_tq = mean("s_treat_post", "n_treat_post")
-    m_cp = mean("s_ctrl_pre", "n_ctrl_pre")
-    m_cq = mean("s_ctrl_post", "n_ctrl_post")
-    return agg.select(
-        "n_treat_pre",
-        "n_treat_post",
-        "n_ctrl_pre",
-        "n_ctrl_post",
-        F.round(m_tp, 6).alias("mean_treat_pre"),
-        F.round(m_tq, 6).alias("mean_treat_post"),
-        F.round(m_cp, 6).alias("mean_ctrl_pre"),
-        F.round(m_cq, 6).alias("mean_ctrl_post"),
-        F.round((m_tq - m_tp) - (m_cq - m_cp), 6).alias("did"),
-    )
-
-
-def logrank_two_group(
-    dur: DataFrame,
-    group_col: str,
-    time_col: str,
-    event_col: str,
-) -> DataFrame:
-    """Two-group log-rank test on right-censored durations — the
-    hypothesis-test rung of the survival stack (KM/Nelson–Aalen draw
-    the curves, Cox fits a covariate model, log-rank answers "do the
-    two curves differ at all"). Input: one row per subject with group
-    (0/1), integer time, and event flag (false = censored).
-
-    At each distinct EVENT time t: O₁ accumulates group-1 deaths d₁t
-    (exact bigint); the expected count E₁ and hypergeometric variance
-    V use d_t·n₁t/n_t and d_t·(n₁t/n_t)(1−n₁t/n_t)(n_t−d_t)/(n_t−1) —
-    both micro-quantized per time point and summed as exact integers
-    so the event-time summation order cannot differ between engines.
-    z = (O₁−E₁)/√ΣV, chi2 = z².
-
-    Scale shape: the subject grain collapses to the (group, time)
-    grain immediately; at-risk counts are cumulative windows over the
-    per-group time axis UNION the global event-time axis (the km
-    pattern, doubled) — no row-grain state, one ordered window per
-    group, group count is 2 by contract."""
-    g = F.col(group_col).cast("int")
-    base = dur.select(
-        g.alias("g"),
-        F.col(time_col).cast("long").alias("t"),
-        F.col(event_col).cast("boolean").alias("ev"),
-    )
-    # (g, t) grain: deaths + removals (death or censor) per time.
-    # Eagerly truncated — every downstream frame (cohort sizes, event
-    # times, the union axis) derives from this one small frame, so the
-    # subject-grain input is scanned exactly once.
-    gt = base.groupBy("g", "t").agg(
-        F.sum(F.col("ev").cast("long")).alias("d"),
-        F.count(F.lit(1)).cast("long").alias("rem"),
-    ).localCheckpoint(eager=True)
-    # Every subject appears at exactly one (g, t), so cohort sizes are
-    # a rollup of gt — no second pass over the subject grain.
-    n_g = gt.groupBy("g").agg(
-        F.sum("rem").cast("long").alias("n0")
-    )
-    # Global event times (any group) — the evaluation axis.
-    ev_times = (
-        gt.groupBy("t")
-        .agg(F.sum("d").alias("dt"))
-        .where(F.col("dt") > 0)
-        .select("t")
-    )
-    # Each group's timeline must carry a row AT every event time so the
-    # cumulative at-risk count is defined there: union in zero rows.
-    two = ev_times.crossJoin(
-        F.broadcast(n_g.select("g"))
-    ).select("g", "t", F.lit(0).cast("long").alias("d"),
-             F.lit(0).cast("long").alias("rem"))
-    axis = (
-        gt.unionByName(two)
-        .groupBy("g", "t")
-        .agg(F.sum("d").alias("d"), F.sum("rem").alias("rem"))
-    )
-    w = (
-        Window.partitionBy("g")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    risk = axis.join(n_g, on="g").select(
-        "g",
-        "t",
-        "d",
-        (
-            F.col("n0")
-            - F.coalesce(F.sum("rem").over(w), F.lit(0))
-        ).cast("long").alias("n_risk"),
-    )
-    # Pivot the two groups side by side on the event-time axis.
-    at_ev = risk.join(ev_times, on="t")
-    piv = at_ev.groupBy("t").agg(
-        F.sum(F.when(F.col("g") == 1, F.col("d"))).alias("d1"),
-        F.sum(F.when(F.col("g") == 1, F.col("n_risk"))).alias("n1"),
-        F.sum("d").alias("d"),
-        F.sum("n_risk").alias("n"),
-    )
-    nd = F.col("n").cast("double")
-    n1d = F.col("n1").cast("double")
-    dd = F.col("d").cast("double")
-    e1 = dd * n1d / nd
-    v = F.when(
-        F.col("n") > 1,
-        dd * (n1d / nd) * (F.lit(1.0) - n1d / nd)
-        * ((nd - dd) / (nd - F.lit(1.0))),
-    ).otherwise(F.lit(0.0))
-    terms = piv.select(
-        F.col("d1"),
-        F.round(e1 * 1e6, 0).cast("decimal(38,0)").alias("e1u"),
-        F.round(v * 1e6, 0).cast("decimal(38,0)").alias("vu"),
-    )
-    tot = terms.agg(
-        F.sum("d1").cast("long").alias("o1"),
-        F.sum("e1u").alias("e1s"),
-        F.sum("vu").alias("vs"),
-    )
-    counts = n_g.groupBy().pivot("g", [0, 1]).sum("n0")
-    e1d = F.col("e1s").cast("double") / F.lit(1e6)
-    vd = F.col("vs").cast("double") / F.lit(1e6)
-    z = F.when(
-        vd > 0, (F.col("o1").cast("double") - e1d) / F.sqrt(vd)
-    )
-    return (
-        tot.crossJoin(F.broadcast(counts))
-        .select(
-            F.col("0").cast("long").alias("n_ctrl"),
-            F.col("1").cast("long").alias("n_treat"),
-            F.col("o1"),
-            F.round(e1d, 6).alias("e1"),
-            F.round(vd, 6).alias("var1"),
-            F.round(z, 6).alias("z"),
-            F.round(z * z, 6).alias("chi2"),
-        )
-    )
-
-
-def anova_oneway(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-) -> DataFrame:
-    """One-way ANOVA F — the parametric twin of
-    kruskal_wallis_by_group (same k-group question, on means instead
-    of ranks): F = (SSB/(k−1)) / (SSW/(N−k)).
-
-    Exactness: values are centi-quantized so every per-group sum and
-    sum-of-squares is an exact integer (DECIMAL(38,0) — cents² sums
-    outgrow int64 fast); the per-group between/within terms s²/n and
-    ss − s²/n are computed in double from those exact integers,
-    quantized to the unit grid, and summed exactly so the k-group
-    double summation order cannot differ between engines.
-
-    Scale shape: one group-grain map-side-combined aggregate + one
-    k-row reduce; nothing ever exceeds the group grain."""
-    cy = F.round(F.col(value_col) * 100, 0).cast("decimal(38,0)")
-    # k-row group grain read by both the F scalar and the output rows —
-    # eagerly truncate so the fact scan runs once.
-    per_g = (
-        df.groupBy(F.col(group_col).alias("g"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum(cy).alias("s"),
-            F.sum(cy * cy).alias("ss"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    sd = F.col("s").cast("double")
-    nd = F.col("n_g").cast("double")
-    ssd = F.col("ss").cast("double")
-    qb = F.round(sd * sd / nd, 0).cast("decimal(38,0)")
-    qw = F.round(ssd - sd * sd / nd, 0).cast("decimal(38,0)")
-    tot = per_g.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("n_g").cast("long").alias("n"),
-        F.sum("s").alias("s_tot"),
-        F.sum(qb).alias("qb"),
-        F.sum(qw).alias("qw"),
-    )
-    n_d = F.col("n").cast("double")
-    st_d = F.col("s_tot").cast("double")
-    ssb = F.col("qb").cast("double") - st_d * st_d / n_d
-    ssw = F.col("qw").cast("double")
-    kd = F.col("k").cast("double")
-    f_stat = F.when(
-        (F.col("k") > 1) & (F.col("n") > F.col("k")) & (ssw > 0),
-        (ssb / (kd - F.lit(1.0)))
-        / (ssw / (n_d - kd)),
-    )
-    scal = tot.select(
-        (F.col("k") - 1).cast("long").alias("dof_between"),
-        (F.col("n") - F.col("k")).cast("long").alias("dof_within"),
-        F.round(f_stat, 6).alias("f_stat"),
-    )
-    mean = F.col("s").cast("double") / F.lit(100.0) / F.col("n_g").cast(
-        "double"
-    )
-    return (
-        per_g.select(
-            F.col("g").alias(group_col),
-            F.col("n_g").alias("n"),
-            F.round(mean, 6).alias("mean"),
-        )
-        .crossJoin(F.broadcast(scal))
-        .orderBy(group_col)
-    )
-
-
-def split_conformal_coverage(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_col: str,
-    alpha: float = 0.1,
-) -> DataFrame:
-    """Split-conformal prediction-interval calibration + coverage audit
-    per group (Vovk et al.; Lei et al. 2018) — the distribution-free
-    serving-quality rung for any point predictor this repo trains
-    (quantile-GD, GBM stumps, Platt): does the interval the calibration
-    half promises actually cover the held-out half at 1−α?
-
-    Relationship to ``operators/classify.py split_conformal_report``
-    (the r07 surface): that one wraps an EXTERNAL scorer's residuals
-    with ONE global q̂ (percentile aggregate, driver-scalar n_cal) and
-    slices coverage per group to expose under-covered subpopulations;
-    this one calibrates PER GROUP — per-group model, per-group q̂ via a
-    rank window at the exact order-statistic index, zero driver state —
-    the grouped-serving shape (one interval per segment). The two cover
-    the conformal surface between them, like Ed-Join vs SymSpell on the
-    linkage side.
-
-    Split rule: rows whose md5(id) first hex digit is 0-7 calibrate,
-    the rest test — the repo's deterministic hash-split primitive
-    (leakage_safe_split convention), identical in both engines. The
-    point model here is the per-group calibration mean; the conformal
-    score is |v − mean|; q̂ is the ⌈(n_cal+1)(1−α)⌉-th smallest
-    calibration score (ties by id — the finite-sample-valid quantile),
-    and coverage is the test fraction within q̂.
-
-    Determinism: values micro-quantize once (round(v·1e6) as long);
-    the mean is one exact-integer sum divided once; every score is the
-    same double in both engines, and the order statistic ranks by
-    (score, id) — total order. Scale shape: one scan splits both
-    halves map-side; calibration reduces to (group, mean) then a rank
-    window bounded by the k-th row; test coverage is one
-    map-side-combined aggregate against the broadcast (group, mean,
-    q̂) dimension. Returns (group, n_cal, n_test, q_hat, coverage),
-    6dp, q̂ in original units."""
-    vm = F.round(F.col(value_col).cast("double") * 1e6, 0).cast("long")
-    is_cal = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 1), 16, 10)
-        .cast("int")
-        < 8
-    )
-    base = df.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).alias("i"),
-        vm.alias("vm"),
-        is_cal.alias("cal"),
-    )
-    cal_stats = (
-        base.where("cal")
-        .groupBy("g")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_cal"),
-            F.sum("vm").alias("s"),
-        )
-        .withColumn("mu", F.col("s").cast("double") / F.col("n_cal"))
-    )
-    scores = (
-        base.where("cal")
-        .join(F.broadcast(cal_stats.select("g", "n_cal", "mu")), on="g")
-        .select(
-            "g",
-            "i",
-            "n_cal",
-            F.abs(F.col("vm").cast("double") - F.col("mu")).alias("r"),
-        )
-    )
-    k = F.ceil((F.col("n_cal") + 1) * F.lit(1.0 - float(alpha))).cast("long")
-    w = Window.partitionBy("g").orderBy(F.asc("r"), F.asc("i"))
-    qhat = (
-        scores.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == F.least(k, F.col("n_cal")))
-        .select("g", F.col("r").alias("qhat"))
-    )
-    dim = cal_stats.select("g", "n_cal", "mu").join(qhat, on="g")
-    test = (
-        base.where(~F.col("cal"))
-        .join(F.broadcast(dim), on="g")
-        .groupBy("g", "n_cal", "qhat")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_test"),
-            F.sum(
-                (
-                    F.abs(F.col("vm").cast("double") - F.col("mu"))
-                    <= F.col("qhat")
-                ).cast("long")
-            ).cast("long").alias("n_cov"),
-        )
-    )
-    return test.select(
-        F.col("g").alias(group_col),
-        "n_cal",
-        "n_test",
-        F.round(F.col("qhat") / F.lit(1e6), 6).alias("q_hat"),
-        F.round(
-            F.col("n_cov").cast("double") / F.col("n_test"), 6
-        ).alias("coverage"),
-    ).orderBy(group_col)
-
-
-def group_sequential_obf(
-    df: DataFrame,
-    arm_col: str,
-    value_col: str,
-    day_col,
-    treat: str,
-    control: str,
-    c_boundary: float = 2.24,
-) -> DataFrame:
-    """Group-sequential monitoring with an O'Brien–Fleming-shaped
-    boundary (Lan–DeMets spending approximation b(t) = c/√t, c = 2.24
-    for two-sided α≈0.05): the SCHEDULED-looks sibling of
-    msprt_always_valid — one look per day, cumulative Welch z per look,
-    stop the first time |z| crosses the shrinking boundary. This is the
-    classic clinical/AB design where looks are pre-planned, vs mSPRT's
-    always-valid continuous monitoring.
-
-    Determinism: values micro-quantize once; per-day sums and square
-    sums are exact integers; cumulative sums ride an unbounded
-    preceding window over the DAY grain (days are few — the window is
-    dimension-sized); z and the boundary are the same fixed double
-    association in both engines. Scale shape: one event-grain
-    map-side-combined aggregate to (day, arm), then day-grain windows —
-    nothing beyond the daily dimension ever shuffles twice.
-
-    Returns one row per look with both arms present up to that day:
-    (look, day, n_treat, n_ctrl, z, boundary, crossed, info_frac).
-
-    Split into ``group_sequential_daily_state`` (the streaming-safe
-    (day, arm) exact-moment aggregation) + ``group_sequential_looks``
-    (the read-time look computation) so the monitor runs as a
-    Structured Streaming surface too — this IS sequential monitoring,
-    the boundary consumed as days arrive (r12 verdict item 4; the
-    drift-monitor pattern: state = ONE streaming aggregation, the
-    z/boundary math computed on read from the streamed state)."""
-    return group_sequential_looks(
-        group_sequential_daily_state(
-            df, arm_col, value_col, day_col, treat, control
-        ),
-        c_boundary=c_boundary,
-    )
-
-
-def group_sequential_daily_state(
-    df: DataFrame,
-    arm_col: str,
-    value_col: str,
-    day_col,
-    treat: str,
-    control: str,
-) -> DataFrame:
-    """The (day, arm) state grain of the group-sequential monitor: one
-    event-grain map-side-combined aggregate to exact integer moments
-    (n, s=Σvm, q=Σvm²; vm = micro-quantized value). Legal as a single
-    Structured Streaming aggregation — the state table a streaming
-    deployment maintains, with looks computed on read."""
-    vm = F.round(F.col(value_col).cast("double") * 1e6, 0).cast("long")
-    return (
-        df.where(
-            F.col(value_col).isNotNull()
-            & F.col(arm_col).isin([treat, control])
-        )
-        .select(
-            day_col.alias("day"),
-            F.when(F.col(arm_col) == treat, F.lit("t"))
-            .otherwise(F.lit("c"))
-            .alias("arm"),
-            vm.alias("vm"),
-        )
-        .groupBy("day", "arm")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            # decimal(38,0): micro² terms reach 1e16 and the cumulative
-            # sums overflow int64 (DuckDB's HUGEINT mirrors this)
-            F.sum(F.col("vm").cast("decimal(38,0)")).alias("s"),
-            F.sum(
-                F.col("vm").cast("decimal(38,0)") * F.col("vm")
-            ).alias("q"),
-        )
-    )
-
-
-def group_sequential_looks(
-    daily: DataFrame,
-    c_boundary: float = 2.24,
-) -> DataFrame:
-    """Scheduled looks from a (day, arm∈{t,c}, n, s, q) daily-state
-    frame (``group_sequential_daily_state`` output — batch-computed or
-    read back from a streaming state sink): cumulative Welch z per day
-    against the O'Brien–Fleming boundary.
-
-    Shape: pivot the two arms into columns at the day grain, then ONE
-    cumulative window over the day axis — no arm-branch self-join (the
-    previous t⋈c form both re-scanned the state twice and trips Spark
-    4's conflicting-reference resolution on memory-table reads). A look
-    happens only on days where BOTH arms have events (has_t·has_c —
-    exactly the day set the old inner join produced, and what the
-    oracle's t JOIN c replays); days missing one arm still roll into
-    the cumulative moments."""
-    z_dec = F.lit(0).cast("decimal(38,0)")
-    is_t, is_c = F.col("arm") == "t", F.col("arm") == "c"
-    piv = daily.groupBy("day").agg(
-        F.sum(F.when(is_t, F.col("n")).otherwise(F.lit(0))).alias("dnt"),
-        F.sum(F.when(is_t, F.col("s")).otherwise(z_dec)).alias("dst"),
-        F.sum(F.when(is_t, F.col("q")).otherwise(z_dec)).alias("dqt"),
-        F.sum(F.when(is_c, F.col("n")).otherwise(F.lit(0))).alias("dnc"),
-        F.sum(F.when(is_c, F.col("s")).otherwise(z_dec)).alias("dsc"),
-        F.sum(F.when(is_c, F.col("q")).otherwise(z_dec)).alias("dqc"),
-        F.max(is_t.cast("int")).alias("has_t"),
-        F.max(is_c.cast("int")).alias("has_c"),
-    )
-    wday = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = piv.select(
-        "day",
-        "has_t",
-        "has_c",
-        F.sum("dnt").over(wday).alias("nt"),
-        F.sum("dst").over(wday).alias("st"),
-        F.sum("dqt").over(wday).alias("qt"),
-        F.sum("dnc").over(wday).alias("nc"),
-        F.sum("dsc").over(wday).alias("sc"),
-        F.sum("dqc").over(wday).alias("qc"),
-    )
-    # day-grain dimension; eager checkpoint so the count and the
-    # returned plan don't both re-run the event scan (the r12 fan-out
-    # sweep convention)
-    both = (
-        cum.where(
-            (F.col("has_t") == 1)
-            & (F.col("has_c") == 1)
-            & (F.col("nt") > 1)
-            & (F.col("nc") > 1)
-        )
-        .drop("has_t", "has_c")
-        .localCheckpoint(eager=True)
-    )
-    n_looks = both.count()
-    if n_looks == 0:
-        # Zero-look empty frame: derive the day field's type from the
-        # computed day-grain frame so a timestamp- or int-valued day_col
-        # gives the empty path the SAME schema as the populated path
-        # (r12 ADVICE: 'day date' was hardcoded while day_col is
-        # caller-supplied).
-        from pyspark.sql import types as T
-
-        day_type = both.schema["day"].dataType
-        spark = daily.sparkSession
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("look", T.LongType()),
-                    T.StructField("day", day_type),
-                    T.StructField("n_treat", T.LongType()),
-                    T.StructField("n_ctrl", T.LongType()),
-                    T.StructField("z", T.DoubleType()),
-                    T.StructField("boundary", T.DoubleType()),
-                    T.StructField("crossed", T.BooleanType()),
-                    T.StructField("info_frac", T.DoubleType()),
-                ]
-            ),
-        )
-    mt = F.col("st").cast("double") / F.col("nt")
-    mc = F.col("sc").cast("double") / F.col("nc")
-    vt = (
-        F.col("qt").cast("double") / F.col("nt") - mt * mt
-    ) / (F.col("nt") - 1)
-    vc = (
-        F.col("qc").cast("double") / F.col("nc") - mc * mc
-    ) / (F.col("nc") - 1)
-    z = (mt - mc) / F.sqrt(vt + vc)
-    out = both.select(
-        "day",
-        F.row_number().over(Window.orderBy("day")).cast("long").alias("look"),
-        F.col("nt").alias("n_treat"),
-        F.col("nc").alias("n_ctrl"),
-        z.alias("_z"),
-    ).withColumn(
-        "info_frac",
-        F.col("look").cast("double") / F.lit(float(n_looks)),
-    )
-    boundary = F.lit(float(c_boundary)) / F.sqrt(F.col("info_frac"))
-    return out.select(
-        "look",
-        "day",
-        "n_treat",
-        "n_ctrl",
-        F.round("_z", 6).alias("z"),
-        F.round(boundary, 6).alias("boundary"),
-        (F.abs(F.col("_z")) > boundary).alias("crossed"),
-        F.round("info_frac", 6).alias("info_frac"),
-    ).orderBy("look")
-
-
-def eb_shrunk_rates(
-    df: DataFrame,
-    group_col: str,
-    success_expr: Column,
-    min_trials: int = 1,
-) -> DataFrame:
-    """Empirical-Bayes rate shrinkage (beta-binomial method of moments,
-    the James–Stein move for proportions): per-group success rates pull
-    toward the grand prior learned FROM the groups themselves — the
-    standard fix for small-sample league tables (a 2/2 group should not
-    outrank a 480/500 one). Prior: fit Beta(α₀, β₀) by moments from the
-    per-group rate mean m and variance v (α₀+β₀ = m(1−m)/v − 1), then
-    shrunk = (x + α₀) / (n + α₀ + β₀).
-
-    Determinism: rates quantize to integer micro-units per group; m and
-    v come from exact integer sums (decimal for the squares) divided
-    once; α₀/β₀/shrunk are one fixed double association both engines
-    share. Degenerate prior (v ≥ m(1−m), or ≤ 1 group) falls back to
-    no shrinkage (α₀ = β₀ = 0), emitted identically.
-
-    Scale shape: one map-side-combined aggregate to group grain, one
-    broadcast 1-row prior, map-only shrinkage. Returns
-    (group, n_trials, n_success, rate, alpha0, beta0, shrunk_rate)."""
-    per_g = (
-        df.select(
-            F.col(group_col).alias("g"),
-            success_expr.cast("long").alias("y"),
-        )
-        .groupBy("g")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("y").cast("long").alias("x"),
-        )
-        .where(F.col("n") >= int(min_trials))
-    )
-    rm = F.round(F.col("x") / F.col("n") * 1e6, 0).cast("long")
-    # eager checkpoint at the bucket grain (tiny): the prior is an
-    # agg-of-agg and the final select both consume this frame —
-    # unmaterialized, the fact scan ran once per branch (r12 fan-out
-    # sweep class)
-    rates = per_g.select("g", "n", "x", rm.alias("rm")).localCheckpoint(
-        eager=True
-    )
-    prior = rates.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("rm").alias("srm"),
-        F.sum(F.col("rm").cast("decimal(38,0)") * F.col("rm")).alias("qrm"),
-    )
-    m = F.col("srm").cast("double") / F.col("k") / F.lit(1e6)
-    v = (
-        F.col("qrm").cast("double") / F.col("k")
-        - (F.col("srm").cast("double") / F.col("k"))
-        * (F.col("srm").cast("double") / F.col("k"))
-    ) / F.lit(1e12)
-    s0 = F.when(
-        (F.col("k") > 1) & (v > 0) & (m * (F.lit(1.0) - m) / v > 1),
-        m * (F.lit(1.0) - m) / v - F.lit(1.0),
-    ).otherwise(F.lit(0.0))
-    pr = prior.select(
-        (m * s0).alias("a0"),
-        ((F.lit(1.0) - m) * s0).alias("b0"),
-    )
-    shrunk = (F.col("x").cast("double") + F.col("a0")) / (
-        F.col("n").cast("double") + F.col("a0") + F.col("b0")
-    )
-    return (
-        rates.crossJoin(F.broadcast(pr))
-        .select(
-            F.col("g").alias(group_col),
-            F.col("n").alias("n_trials"),
-            F.col("x").alias("n_success"),
-            F.round(F.col("rm") / F.lit(1e6), 6).alias("rate"),
-            F.round("a0", 6).alias("alpha0"),
-            F.round("b0", 6).alias("beta0"),
-            F.round(shrunk, 6).alias("shrunk_rate"),
-        )
-        .orderBy(group_col)
-    )
-
-
-def seeded_permutation_test(
-    df: DataFrame,
-    value_col: str,
-    id_col: str,
-    n_perm: int = 48,
-) -> DataFrame:
-    """Randomization test for a two-group mean difference with SEEDED
-    md5 relabelings — the exact-replay answer to "is this lift real"
-    when distributional assumptions (Welch, MWU) are off the table: the
-    observed |Δmean| is compared against ``n_perm`` random relabelings,
-    each assignment being bit b of md5(id) (independent fair coins, the
-    repo's deterministic-randomness primitive — no RNG state, identical
-    in both engines).
-
-    The caller supplies df pre-filtered to the two arms with an ``_arm``
-    0/1 column; the observed split is arm 0 vs arm 1, each permutation
-    b reassigns every row by hash bit b. p = (1 + #{b : |Δ_b| ≥
-    |Δ_obs|}) / (n_perm + 1), the add-one randomization-test estimate.
-
-    Determinism: values micro-quantize once; every permutation's sums
-    are exact integers folded in ONE map-side-combined aggregate
-    (2·n_perm+2 cells), means/deltas one double association. Scale
-    shape: a single corpus scan regardless of n_perm; the permutation
-    grid lives in the aggregate buffer, never as exploded rows. Returns
-    one row: (n_a, n_b, delta_obs, n_extreme, n_perm, p_value)."""
-    if not 1 <= int(n_perm) <= 56:
-        raise ValueError("n_perm must be in [1, 56] (md5_hash60 bits)")
-    from ningaloo_turtle_etl_spark.operators.dedup import md5_hash60
-
-    vm = F.round(F.col(value_col).cast("double") * 1e6, 0).cast("long")
-    h = md5_hash60(F.col(id_col).cast("string"))
-    base = df.select(
-        F.col("_arm").cast("int").alias("arm"),
-        vm.alias("vm"),
-        h.alias("h"),
-    )
-    aggs = [
-        F.sum(F.when(F.col("arm") == 1, F.lit(1)).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_b"),
-        F.count(F.lit(1)).cast("long").alias("n_all"),
-        F.sum(F.when(F.col("arm") == 1, F.col("vm")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("s_b"),
-        F.sum("vm").cast("long").alias("s_all"),
-    ]
-    for b in range(int(n_perm)):
-        bit = F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))
-        aggs.append(
-            F.sum(F.when(bit == 1, F.lit(1)).otherwise(F.lit(0)))
-            .cast("long")
-            .alias(f"pn{b}")
-        )
-        aggs.append(
-            F.sum(F.when(bit == 1, F.col("vm")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias(f"ps{b}")
-        )
-    t = base.agg(*aggs)
-
-    def delta(nb, sb):
-        na = F.col("n_all") - nb
-        sa = F.col("s_all") - sb
-        return F.abs(
-            sb.cast("double") / nb - sa.cast("double") / na
-        )
-    d_obs = delta(F.col("n_b"), F.col("s_b"))
-    extreme = sum(
-        (
-            F.when(
-                (F.col(f"pn{b}") > 0)
-                & (F.col("n_all") - F.col(f"pn{b}") > 0)
-                & (delta(F.col(f"pn{b}"), F.col(f"ps{b}")) >= d_obs),
-                F.lit(1),
-            ).otherwise(F.lit(0))
-            for b in range(int(n_perm))
-        ),
-        start=F.lit(0),
-    )
-    return t.select(
-        (F.col("n_all") - F.col("n_b")).alias("n_a"),
-        F.col("n_b"),
-        F.round(d_obs / F.lit(1e6), 6).alias("delta_obs"),
-        extreme.cast("long").alias("n_extreme"),
-        F.lit(int(n_perm)).cast("long").alias("n_perm"),
-        F.round(
-            (extreme.cast("double") + F.lit(1.0))
-            / F.lit(float(n_perm) + 1.0),
-            6,
-        ).alias("p_value"),
     )

@@ -3327,7 +3327,7 @@ def _entity_resolution_oracle_sql(rounds: int = 16) -> str:
     flips of each other, the graph collapses toward ONE 15k-member
     cluster, and the closure hit 225M rows / 33 GB / ~an hour in
     DuckDB. Pointer jumping is node-grain per round: seconds at any
-    sf (the exact scale lesson SCALING.md teaches for the Spark side,
+    sf (the node-grain scale rule the Spark side already follows,
     applied to the oracle)."""
     parts = [
         f"""

@@ -823,7 +823,7 @@ def q_hmm_forward_first4(spark, sf_dir):
 
     # ts IS NOT NULL on BOTH sides (r11 ADVICE): Spark windows sort
     # NULLS FIRST, DuckDB NULLS LAST — a future NULL ts would silently
-    # diverge; the filter pins the convention like did_click_value.
+    # diverge; the filter pins the convention.
     ev = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
     return hmm_forward_loglik(
         ev, "user_id", "event_type", ["ts", "event_id"], steps=4

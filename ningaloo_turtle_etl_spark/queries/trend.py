@@ -1,7 +1,8 @@
 """Series-statistics queries: per-group OLS trends (SQL-standard regr_*
 aggregates), CUSUM change-point scans, cross-source rank normalization, and
-PMI collocations. All full DuckDB-oracle rows — both engines implement
-regr_slope/intercept/r2 and percent_rank with identical definitions."""
+the descriptive distribution and daily-series statistics over ``events``.
+All full DuckDB-oracle rows — both engines implement regr_slope/intercept/r2
+and percent_rank with identical definitions."""
 
 from __future__ import annotations
 
@@ -117,52 +118,6 @@ def source_quantile_norm(spark, sf_dir):
 
 
 @register(
-    "pmi_collocations",
-    r"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id AS _id,
-             unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    x -> x <> '')) AS tok
-      FROM documents
-    ),
-    dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_tok FROM toks GROUP BY 1),
-    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-    kept AS (
-      SELECT t._id, t.tok, d.n_tok FROM toks t
-      JOIN dfq d USING (tok) CROSS JOIN nd
-      WHERE d.n_tok <= n_docs * 0.95
-    ),
-    pairs AS (
-      SELECT a.tok AS tok_a, b.tok AS tok_b, a.n_tok AS n_a, b.n_tok AS n_b,
-             CAST(COUNT(*) AS BIGINT) AS n_pair
-      FROM kept a JOIN kept b ON a._id = b._id AND a.tok < b.tok
-      GROUP BY 1, 2, 3, 4
-      HAVING COUNT(*) >= 25
-    )
-    SELECT tok_a, tok_b, n_pair,
-           ROUND(ln(n_pair * n_docs * 1.0 / (n_a * n_b)), 6) AS pmi
-    FROM pairs CROSS JOIN nd
-    ORDER BY pmi DESC, tok_a, tok_b
-    LIMIT 50
-    """,
-)
-def pmi_collocations(spark, sf_dir):
-    """Top-50 token collocations by document-level PMI (df cut at
-    0.95 — this corpus's ~31-token vocabulary is nearly all high-df, so a
-    realistic 0.3 cut would empty it; real corpora use the default)
-    (`operators/text.py pmi_cooccurrence`): which words co-occur far more
-    than chance — the topic/phrase-structure probe. The df<=0.3N cut keeps
-    the within-doc pairing off stopword-grade tokens."""
-    from ningaloo_turtle_etl_spark.operators.text import pmi_cooccurrence
-
-    docs = load_table(spark, "documents", sf_dir)
-    out = pmi_cooccurrence(docs, min_pair_count=25, max_df_frac=0.95)
-    return out.orderBy(
-        F.desc("pmi"), F.asc("tok_a"), F.asc("tok_b")
-    ).limit(50)
-
-
-@register(
     "mad_outlier_stats",
     """
     WITH med AS (
@@ -208,36 +163,6 @@ def mad_outlier_stats(spark, sf_dir):
 
     ev = load_table(spark, "events", sf_dir)
     return robust_outlier_stats(ev, "event_type", "value", k=3.5)
-
-
-@register(
-    "welch_value_ttest",
-    """
-    WITH s AS (
-      SELECT event_type,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             ROUND(AVG(value), 6) AS m,
-             ROUND(var_samp(value), 6) AS v
-      FROM events GROUP BY 1 HAVING COUNT(*) >= 2
-    )
-    SELECT a.event_type AS group_a, b.event_type AS group_b,
-           a.n AS n_a, b.n AS n_b, a.m AS mean_a, b.m AS mean_b,
-           ROUND((a.m - b.m) / sqrt(a.v / a.n + b.v / b.n), 6) AS t_stat,
-           ROUND(pow(a.v / a.n + b.v / b.n, 2)
-                 / (pow(a.v / a.n, 2) / (a.n - 1)
-                    + pow(b.v / b.n, 2) / (b.n - 1)), 6) AS df_welch
-    FROM s a JOIN s b ON a.event_type < b.event_type
-    ORDER BY group_a, group_b
-    """,
-)
-def welch_value_ttest(spark, sf_dir):
-    """Welch's t-test between every pair of event types on `value`
-    (`operators/trend.py welch_ttest_pairs`): the segment-vs-segment
-    A/B primitive. One aggregate shuffle; the pair grid is groups²."""
-    from ningaloo_turtle_etl_spark.operators.trend import welch_ttest_pairs
-
-    ev = load_table(spark, "events", sf_dir)
-    return welch_ttest_pairs(ev, "event_type", "value")
 
 
 @register(
@@ -330,7 +255,7 @@ def daily_value_acf(spark, sf_dir):
 def q_value_ks_by_type(spark, sf_dir):
     """Two-sample Kolmogorov-Smirnov D between every pair of event types'
     value distributions (`operators/trend.py ks_test_pairs`) — the
-    nonparametric any-difference companion to welch_value_ttest. ECDFs at
+    nonparametric any-difference statistic. ECDFs at
     the distinct-value grain; the pair sweep forward-fills both step
     functions over the pooled points, so work is pairs x distinct values,
     never rows x rows."""
@@ -408,341 +333,6 @@ def q_wasserstein_value_by_type(spark, sf_dir):
     return wasserstein_pairs(ev, "event_type", "value").orderBy(
         "group_a", "group_b"
     )
-
-
-@register(
-    "value_bootstrap_ci",
-    """
-    WITH bdim AS (SELECT unnest(range(200)) AS b),
-    rep AS (
-        SELECT e.event_type AS grp, bdim.b AS b,
-               ('0x' || substr(md5(CAST(e.event_id AS VARCHAR) || '#'
-                                   || CAST(bdim.b AS VARCHAR)), 1, 8))::BIGINT
-                 / 4294967296.0 AS u,
-               CAST(round(e.value * 100) AS BIGINT) AS cents
-        FROM events e, bdim
-    ),
-    weighted AS (
-        SELECT grp, b,
-               (CASE WHEN u >= 0.36787944117144233 THEN 1 ELSE 0 END
-                + CASE WHEN u >= 0.7357588823428847 THEN 1 ELSE 0 END
-                + CASE WHEN u >= 0.9196986029286058 THEN 1 ELSE 0 END
-                + CASE WHEN u >= 0.9810118431238462 THEN 1 ELSE 0 END
-                + CASE WHEN u >= 0.9963401531726563 THEN 1 ELSE 0 END
-                + CASE WHEN u >= 0.9994058151824183 THEN 1 ELSE 0 END
-                + CASE WHEN u >= 0.9999167588507119 THEN 1 ELSE 0 END
-                + CASE WHEN u >= 0.9999897508033253 THEN 1 ELSE 0 END)
-                 AS w,
-               cents
-        FROM rep
-    ),
-    reps AS (
-        SELECT grp, b, CAST(SUM(w) AS BIGINT) AS den,
-               CAST(SUM(w * cents) AS BIGINT) AS num
-        FROM weighted GROUP BY 1, 2
-    ),
-    means AS (
-        SELECT grp, b, num / (den * 100.0) AS mean_b
-        FROM reps WHERE den > 0
-    ),
-    ranked AS (
-        SELECT grp, mean_b,
-               ROW_NUMBER() OVER (PARTITION BY grp ORDER BY mean_b, b) AS rn,
-               COUNT(*) OVER (PARTITION BY grp) AS m
-        FROM means
-    ),
-    ci AS (
-        SELECT grp, ROUND(MIN(mean_b), 6) AS ci_lo,
-               ROUND(MAX(mean_b), 6) AS ci_hi
-        FROM ranked
-        WHERE rn = GREATEST(1, CAST(CEIL(0.025 * m) AS BIGINT))
-           OR rn = CAST(CEIL(0.975 * m) AS BIGINT)
-        GROUP BY grp
-    ),
-    base AS (
-        SELECT event_type AS grp, CAST(COUNT(*) AS BIGINT) AS n,
-               ROUND(AVG(value), 6) AS mean_value
-        FROM events GROUP BY 1
-    )
-    SELECT base.grp AS event_type, n, mean_value, ci_lo, ci_hi
-    FROM base JOIN ci USING (grp)
-    """,
-)
-def q_value_bootstrap_ci(spark, sf_dir):
-    """Per-event-type mean value with a 95% Poisson-bootstrap CI
-    (`operators/trend.py poisson_bootstrap_mean_ci`): 200 deterministic
-    replicates whose integer weights come from inverse-CDF on md5
-    uniforms — every replicate sum is an exact integer, so the whole
-    resampling procedure replays bit-for-bit in SQL. The one-pass, n-free
-    bootstrap built for distributed data."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        poisson_bootstrap_mean_ci,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return poisson_bootstrap_mean_ci(
-        ev, "value", "event_type", "event_id", replicates=200
-    )
-
-
-@register(
-    "cuped_lift_click_vs_view",
-    """
-    WITH arms AS (
-        SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS x,
-               CAST(round(value * 100) AS BIGINT) AS y,
-               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS it,
-               CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS ic
-        FROM events WHERE event_type IN ('click', 'view')
-    ),
-    s AS (
-        SELECT CAST(SUM(it) AS BIGINT) AS nt, CAST(SUM(ic) AS BIGINT) AS nc,
-               CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(x) AS BIGINT) AS sx,
-               CAST(SUM(x * y) AS BIGINT) AS sxy,
-               CAST(SUM(x * x) AS BIGINT) AS sxx,
-               CAST(SUM(y * y) AS BIGINT) AS syy,
-               CAST(SUM(it * y) AS BIGINT) AS syt,
-               CAST(SUM(ic * y) AS BIGINT) AS syc,
-               CAST(SUM(it * x) AS BIGINT) AS sxt,
-               CAST(SUM(ic * x) AS BIGINT) AS sxc
-        FROM arms
-    ),
-    t AS (
-        SELECT s.*,
-               ((nt + nc) * sxy - sx * sy)
-                 / CAST((nt + nc) * sxx - sx * sx AS DOUBLE) AS theta_c,
-               sx / CAST(nt + nc AS DOUBLE) AS xbar
-        FROM s
-    )
-    SELECT nt AS n_treatment, nc AS n_control,
-           ROUND(syt / (nt * 100.0) - syc / (nc * 100.0), 6) AS lift_raw,
-           ROUND((syt / (nt * 100.0)
-                  - theta_c / 100 * (sxt / CAST(nt AS DOUBLE) - xbar))
-                 - (syc / (nc * 100.0)
-                    - theta_c / 100 * (sxc / CAST(nc AS DOUBLE) - xbar)),
-                 6) AS lift_adjusted,
-           ROUND(theta_c / 100, 6) AS theta,
-           ROUND((CAST((nt + nc) * sxy - sx * sy AS DOUBLE)
-                  * CAST((nt + nc) * sxy - sx * sy AS DOUBLE))
-                 / (CAST((nt + nc) * sxx - sx * sx AS DOUBLE)
-                    * CAST((nt + nc) * syy - sy * sy AS DOUBLE)),
-                 6) AS var_reduction
-    FROM t
-    """,
-)
-def q_cuped_lift(spark, sf_dir):
-    """CUPED variance-reduced lift of click vs view mean value with the
-    JSON props.k field as the covariate (`operators/trend.py cuped_lift`,
-    Deng et al. 2013): theta and both adjusted means from ONE exact
-    integer-moment pass over the fact — the experimentation-analytics
-    estimator, engine-portable to the last bit."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from ningaloo_turtle_etl_spark.operators.trend import cuped_lift
-
-    ev = load_table(spark, "events", sf_dir)
-    payload = StructType([StructField("k", IntegerType())])
-    ev = ev.withColumn("k", F.from_json("props", payload)["k"])
-    return cuped_lift(ev, "value", "k", "event_type", "click", "view")
-
-
-@register(
-    "km_conversion_curve",
-    """
-    WITH starts AS (
-        SELECT user_id AS k, MIN(CAST(ts AS DATE)) AS d0
-        FROM events WHERE event_type = 'view' GROUP BY 1
-    ),
-    ends AS (
-        SELECT e.user_id AS k, MIN(CAST(e.ts AS DATE)) AS de
-        FROM events e JOIN starts s ON e.user_id = s.k
-        WHERE e.event_type = 'purchase' AND CAST(e.ts AS DATE) > s.d0
-        GROUP BY 1
-    ),
-    h AS (SELECT MAX(CAST(ts AS DATE)) AS hd FROM events),
-    dur AS (
-        SELECT s.k,
-               CASE WHEN de IS NOT NULL THEN date_diff('day', d0, de)
-                    ELSE date_diff('day', d0, hd) END AS t,
-               de IS NOT NULL AS is_event
-        FROM starts s LEFT JOIN ends USING (k), h
-    ),
-    days AS (
-        SELECT CAST(t AS INT) AS t,
-               CAST(SUM(CASE WHEN is_event THEN 1 ELSE 0 END) AS BIGINT) AS d,
-               CAST(SUM(CASE WHEN is_event THEN 0 ELSE 1 END) AS BIGINT) AS c
-        FROM dur GROUP BY 1
-    ),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM starts),
-    risk AS (
-        SELECT t, d, c,
-               CAST(n - COALESCE(SUM(d + c) OVER (
-                   ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND 1 PRECEDING), 0) AS BIGINT) AS n_risk
-        FROM days, tot
-    ),
-    lns AS (
-        SELECT t, d, c, n_risk,
-               CASE WHEN d > 0
-                    THEN CAST(round(ln(GREATEST(
-                             1.0 - d / CAST(n_risk AS DOUBLE), 1e-12))
-                             * 1e9) AS BIGINT)
-                    ELSE 0 END AS lnv
-        FROM risk
-    )
-    SELECT t AS t_days, n_risk, d AS n_events, c AS n_censored,
-           ROUND(exp(SUM(lnv) OVER (
-               ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               / 1e9), 6) AS survival
-    FROM lns
-    """,
-)
-def q_km_conversion_curve(spark, sf_dir):
-    """Kaplan-Meier time-to-convert curve (first view -> first purchase,
-    right-censored at the corpus horizon): `operators/trend.py
-    kaplan_meier_conversion`. The KM product replays bit-for-bit via
-    exact-integer nano-unit log factors — the zipf_fit micro-unit pattern
-    applied to survival analysis."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        kaplan_meier_conversion,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return kaplan_meier_conversion(ev)
-
-
-@register(
-    "chi2_lang_source",
-    """
-    WITH cells AS (
-        SELECT lang AS a, source AS b, CAST(COUNT(*) AS BIGINT) AS o
-        FROM documents GROUP BY 1, 2
-    ),
-    ra AS (SELECT a, SUM(o) AS na FROM cells GROUP BY 1),
-    rb AS (SELECT b, SUM(o) AS nb FROM cells GROUP BY 1),
-    tot AS (SELECT SUM(o) AS n FROM cells),
-    terms AS (
-        SELECT o, na * nb / CAST(n AS DOUBLE) AS e, a, b
-        FROM cells JOIN ra USING (a) JOIN rb USING (b), tot
-    )
-    SELECT (SELECT CAST(MIN(n) AS BIGINT) FROM tot) AS n_rows,
-           CAST(COUNT(*) AS BIGINT) AS n_cells,
-           CAST((COUNT(DISTINCT a) - 1) * (COUNT(DISTINCT b) - 1) AS BIGINT)
-               AS dof,
-           ROUND(SUM((o - e) * (o - e) / e), 6) AS chi2,
-           ROUND(sqrt(SUM((o - e) * (o - e) / e)
-                      / ((SELECT MIN(n) FROM tot)
-                         * (least(COUNT(DISTINCT a), COUNT(DISTINCT b))
-                            - 1))), 6) AS cramers_v
-    FROM terms
-    """,
-)
-def q_chi2_lang_source(spark, sf_dir):
-    """Pearson chi-square independence of language x source over the
-    corpus (`operators/trend.py chi2_independence`) — the is-the-mix-
-    uniform-across-feeds screen. One cell-count aggregate; margins and
-    the statistic run on the cells grid."""
-    from ningaloo_turtle_etl_spark.operators.trend import chi2_independence
-
-    docs = load_table(spark, "documents", sf_dir)
-    return chi2_independence(docs, "lang", "source")
-
-
-@register(
-    "did_click_vs_view",
-    """
-    WITH marked AS (
-        SELECT value,
-               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS it,
-               CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16'
-                    THEN 1 ELSE 0 END AS post,
-               CAST(round(value * 100) AS BIGINT) AS y
-        FROM events WHERE event_type IN ('click', 'view')
-    ),
-    s AS (
-        SELECT
-            CAST(SUM(CASE WHEN it = 1 AND post = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pre_t,
-            CAST(SUM(CASE WHEN it = 1 AND post = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_post_t,
-            CAST(SUM(CASE WHEN it = 0 AND post = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pre_c,
-            CAST(SUM(CASE WHEN it = 0 AND post = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_post_c,
-            CAST(SUM(CASE WHEN it = 1 AND post = 0 THEN y ELSE 0 END) AS BIGINT) AS s_pre_t,
-            CAST(SUM(CASE WHEN it = 1 AND post = 1 THEN y ELSE 0 END) AS BIGINT) AS s_post_t,
-            CAST(SUM(CASE WHEN it = 0 AND post = 0 THEN y ELSE 0 END) AS BIGINT) AS s_pre_c,
-            CAST(SUM(CASE WHEN it = 0 AND post = 1 THEN y ELSE 0 END) AS BIGINT) AS s_post_c
-        FROM marked
-    )
-    SELECT n_pre_t, n_post_t, n_pre_c, n_post_c,
-           ROUND(s_pre_t / (n_pre_t * 100.0), 6) AS pre_t,
-           ROUND(s_post_t / (n_post_t * 100.0), 6) AS post_t,
-           ROUND(s_pre_c / (n_pre_c * 100.0), 6) AS pre_c,
-           ROUND(s_post_c / (n_post_c * 100.0), 6) AS post_c,
-           ROUND((s_post_t / (n_post_t * 100.0) - s_pre_t / (n_pre_t * 100.0))
-                 - (s_post_c / (n_post_c * 100.0)
-                    - s_pre_c / (n_pre_c * 100.0)), 6) AS did
-    FROM s
-    """,
-)
-def q_did_click_vs_view(spark, sf_dir):
-    """Difference-in-differences of click vs view mean value around a
-    Jan-16 cut (`operators/trend.py did_lift`): four conditional means from
-    one exact integer-moment pass — the baseline-adjusted causal estimate
-    next to cuped_lift's covariate adjustment."""
-    from ningaloo_turtle_etl_spark.operators.trend import did_lift
-
-    ev = load_table(spark, "events", sf_dir)
-    return did_lift(
-        ev,
-        "value",
-        "event_type",
-        F.to_date("ts") >= F.lit("2024-01-16").cast("date"),
-        "click",
-        "view",
-    )
-
-
-@register(
-    "mwu_click_vs_view",
-    """
-    WITH arms AS (
-        SELECT CAST(value AS DOUBLE) AS v,
-               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_t
-        FROM events WHERE event_type IN ('click', 'view')
-    ),
-    vals AS (SELECT v, COUNT(*) AS c, SUM(is_t) AS ct FROM arms GROUP BY 1),
-    ranked AS (
-        SELECT *,
-               2 * SUM(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) - c + 1 AS mid2
-        FROM vals
-    ),
-    s AS (
-        SELECT CAST(SUM(ct) AS BIGINT) AS n_treat,
-               CAST(SUM(c) - SUM(ct) AS BIGINT) AS n_control,
-               CAST(SUM(ct * mid2) AS BIGINT) AS rt2,
-               CAST(SUM(c * c * c - c) AS BIGINT) AS ties
-        FROM ranked
-    )
-    SELECT n_treat, n_control,
-           ROUND(rt2 / 2.0 - n_treat * (n_treat + 1) / 2.0, 4) AS u_stat,
-           ROUND((rt2 / 2.0 - n_treat * (n_treat + 1) / 2.0
-                  - n_treat * n_control / 2.0)
-                 / sqrt(n_treat * n_control / 12.0
-                        * ((n_treat + n_control + 1)
-                           - ties / (CAST(n_treat + n_control AS DOUBLE)
-                                     * (n_treat + n_control - 1)))),
-                 6) AS z
-    FROM s
-    """,
-)
-def q_mwu_click_vs_view(spark, sf_dir):
-    """Mann-Whitney U rank-sum of click vs view value
-    (`operators/trend.py mann_whitney_u`): midranks at the distinct-value
-    grain as exact doubled-rank integers, tie-corrected z — the
-    heavy-tail-robust location test beside welch_value_ttest."""
-    from ningaloo_turtle_etl_spark.operators.trend import mann_whitney_u
-
-    ev = load_table(spark, "events", sf_dir)
-    return mann_whitney_u(ev, "value", "event_type", "click", "view")
 
 
 @register(
@@ -836,51 +426,6 @@ def q_seasonal_profile_events(spark, sf_dir):
 
 
 @register(
-    "mi_lang_source",
-    """
-    WITH cells AS (
-        SELECT lang AS a, source AS b, CAST(COUNT(*) AS BIGINT) AS o
-        FROM documents GROUP BY 1, 2
-    ),
-    ra AS (SELECT a, SUM(o) AS na FROM cells GROUP BY 1),
-    rb AS (SELECT b, SUM(o) AS nb FROM cells GROUP BY 1),
-    tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells),
-    mi AS (
-        SELECT SUM((o / CAST(n AS DOUBLE))
-                   * ln(o * CAST(n AS DOUBLE) / (na * nb))) AS v
-        FROM cells JOIN ra USING (a) JOIN rb USING (b), tot
-    ),
-    ha AS (
-        SELECT SUM(-(na / CAST(n AS DOUBLE)) * ln(na / CAST(n AS DOUBLE)))
-            AS v
-        FROM ra, tot
-    ),
-    hb AS (
-        SELECT SUM(-(nb / CAST(n AS DOUBLE)) * ln(nb / CAST(n AS DOUBLE)))
-            AS v
-        FROM rb, tot
-    )
-    SELECT (SELECT n FROM tot) AS n_rows,
-           ROUND(mi.v, 6) AS mi,
-           ROUND(ha.v, 6) AS h_a,
-           ROUND(hb.v, 6) AS h_b,
-           ROUND(CASE WHEN ha.v > 0 AND hb.v > 0
-                      THEN mi.v / sqrt(ha.v * hb.v) ELSE 0.0 END, 6) AS nmi
-    FROM mi, ha, hb
-    """,
-)
-def q_mi_lang_source(spark, sf_dir):
-    """Mutual information of language x source in nats with normalized MI
-    (`operators/trend.py mutual_information`) — chi2_lang_source's
-    information-scale companion: how much does knowing the feed tell you
-    about the language? Same single cell-count aggregate shape."""
-    from ningaloo_turtle_etl_spark.operators.trend import mutual_information
-
-    docs = load_table(spark, "documents", sf_dir)
-    return mutual_information(docs, "lang", "source")
-
-
-@register(
     "seasonal_anomalies",
     """
     WITH hourly AS (
@@ -955,227 +500,6 @@ def q_trimmed_mean_by_type(spark, sf_dir):
     return trimmed_mean(ev, "event_type", "value", frac=0.05)
 
 
-@register(
-    "ccf_click_vs_view",
-    """
-    WITH a AS (
-        SELECT CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS DOUBLE) AS v
-        FROM events WHERE event_type = 'click' GROUP BY 1
-    ),
-    b AS (
-        SELECT CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS DOUBLE) AS v
-        FROM events WHERE event_type = 'view' GROUP BY 1
-    ),
-    lags AS (SELECT i AS lag FROM unnest(range(-3, 4)) AS u(i))
-    SELECT CAST(lag AS INT) AS lag,
-           CAST(COUNT(*) AS BIGINT) AS n_steps,
-           ROUND(corr(a.v, b.v), 6) AS ccf
-    FROM lags JOIN a ON true JOIN b ON b.t = a.t + lag
-    GROUP BY 1 HAVING COUNT(*) >= 2
-    """,
-)
-def q_ccf_click_vs_view(spark, sf_dir):
-    """Lagged cross-correlation of daily click vs view volume
-    (`operators/trend.py cross_correlation`): does one metric lead the
-    other? ACF's two-series sibling; work is lags x days, never raw
-    rows."""
-    from ningaloo_turtle_etl_spark.operators.trend import cross_correlation
-
-    ev = load_table(spark, "events", sf_dir)
-
-    def daily(t):
-        return (
-            ev.filter(F.col("event_type") == t)
-            .groupBy(
-                F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
-                .cast("long")
-                .alias("t")
-            )
-            .agg(F.count(F.lit(1)).cast("double").alias("v"))
-        )
-
-    return cross_correlation(daily("click"), daily("view"), "t", "v", 3)
-
-
-@register(
-    "two_prop_click_vs_view",
-    """
-    WITH arms AS (
-        SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS it,
-               CASE WHEN value > 35.0 THEN 1 ELSE 0 END AS y
-        FROM events WHERE event_type IN ('click', 'view')
-    ),
-    s AS (
-        SELECT CAST(SUM(it) AS BIGINT) AS n_treat,
-               CAST(COUNT(*) - SUM(it) AS BIGINT) AS n_control,
-               CAST(SUM(it * y) AS BIGINT) AS x_treat,
-               CAST(SUM((1 - it) * y) AS BIGINT) AS x_control
-        FROM arms
-    )
-    SELECT n_treat, n_control, x_treat, x_control,
-           ROUND(x_treat / CAST(n_treat AS DOUBLE), 6) AS p_treat,
-           ROUND(x_control / CAST(n_control AS DOUBLE), 6) AS p_control,
-           ROUND((x_treat / CAST(n_treat AS DOUBLE)
-                  - x_control / CAST(n_control AS DOUBLE))
-                 / sqrt(((x_treat + x_control)
-                         / CAST(n_treat + n_control AS DOUBLE))
-                        * (1 - (x_treat + x_control)
-                               / CAST(n_treat + n_control AS DOUBLE))
-                        * (1.0 / n_treat + 1.0 / n_control)), 6) AS z
-    FROM s
-    """,
-)
-def q_two_prop_click_vs_view(spark, sf_dir):
-    """Two-proportion z-test of P(value > 35) for click vs view
-    (`operators/trend.py two_proportion_ztest`): the binary-outcome
-    member of the test family — one conditional-count pass, exact
-    integer inputs to the closed form."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        two_proportion_ztest,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return two_proportion_ztest(
-        ev, "event_type", F.col("value") > 35.0, "click", "view"
-    )
-
-
-@register(
-    "srm_event_types",
-    """
-    WITH dim(arm, ratio) AS (
-        VALUES ('click', 0.2), ('error', 0.2), ('purchase', 0.2),
-               ('signup', 0.2), ('view', 0.2)
-    ),
-    obs AS (
-        SELECT event_type AS arm, CAST(COUNT(*) AS BIGINT) AS o
-        FROM events GROUP BY 1
-    ),
-    j AS (
-        SELECT COALESCE(dim.arm, obs.arm) AS arm,
-               dim.ratio IS NOT NULL AS declared,
-               COALESCE(dim.ratio, 0.0) AS ratio,
-               COALESCE(obs.o, 0) AS o
-        FROM dim FULL OUTER JOIN obs USING (arm)
-    ),
-    tot AS (SELECT SUM(o) AS n FROM j),
-    agg AS (
-        SELECT CAST(MIN(n) AS BIGINT) AS n_rows,
-               CAST(COUNT(*) AS BIGINT) AS n_arms,
-               CAST(SUM(CASE WHEN declared THEN 1 ELSE 0 END) - 1 AS BIGINT)
-                   AS dof,
-               CAST(SUM(CASE WHEN declared THEN 0 ELSE 1 END) AS BIGINT)
-                   AS n_undeclared,
-               SUM(CASE
-                   WHEN ratio * n > 0
-                       THEN (o - ratio * n) * (o - ratio * n) / (ratio * n)
-                   WHEN o > 0 THEN CAST('infinity' AS DOUBLE)
-                   ELSE 0.0 END) AS chi2_raw,
-               ROUND(MAX(abs(o / CAST(n AS DOUBLE) - ratio)), 6)
-                   AS max_abs_dev
-        FROM j, tot
-    ),
-    -- Wilson–Hilferty chi-square critical value at alpha=0.001; the z
-    -- constant is exactly what the Spark side's Acklam norm_ppf(0.999)
-    -- emits, so the flag replays bit-for-bit (wh cubed as wh*wh*wh to
-    -- mirror the Spark expression, not POWER).
-    crit AS (
-        SELECT *,
-               CASE WHEN dof >= 1 THEN
-                   dof * (1.0 - 2.0 / (9.0 * dof)
-                          + 3.090232304709404
-                            * SQRT(2.0 / (9.0 * dof)))
-                       * (1.0 - 2.0 / (9.0 * dof)
-                          + 3.090232304709404
-                            * SQRT(2.0 / (9.0 * dof)))
-                       * (1.0 - 2.0 / (9.0 * dof)
-                          + 3.090232304709404
-                            * SQRT(2.0 / (9.0 * dof)))
-               ELSE 0.0 END AS crit_raw
-        FROM agg
-    )
-    SELECT n_rows, n_arms, dof, n_undeclared,
-           ROUND(chi2_raw, 6) AS chi2,
-           ROUND(crit_raw, 6) AS chi2_critical,
-           (chi2_raw > crit_raw OR n_undeclared > 0) AS srm_violated,
-           max_abs_dev
-    FROM crit
-    """,
-)
-def q_srm_event_types(spark, sf_dir):
-    """Sample-ratio-mismatch health gate over the five event types against
-    a declared uniform split (`operators/trend.py srm_check`): the
-    chi-square goodness-of-fit run BEFORE trusting any downstream lift —
-    a failing SRM means assignment/logging is broken."""
-    from ningaloo_turtle_etl_spark.operators.trend import srm_check
-
-    ev = load_table(spark, "events", sf_dir)
-    return srm_check(
-        ev,
-        "event_type",
-        {t: 0.2 for t in ("click", "error", "purchase", "signup", "view")},
-    )
-
-
-@register(
-    "welch_pairs_bh_adjusted",
-    """
-    WITH s AS (
-      SELECT event_type,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             ROUND(AVG(value), 6) AS m,
-             ROUND(var_samp(value), 6) AS v
-      FROM events GROUP BY 1 HAVING COUNT(*) >= 2
-    ),
-    grid AS (
-      SELECT a.event_type AS group_a, b.event_type AS group_b,
-             ROUND((a.m - b.m) / sqrt(a.v / a.n + b.v / b.n), 6) AS t_stat
-      FROM s a JOIN s b ON a.event_type < b.event_type
-    ),
-    xs AS (
-      SELECT *, abs(t_stat) / sqrt(2.0) AS x,
-             1.0 / (1.0 + 0.3275911 * (abs(t_stat) / sqrt(2.0))) AS tt
-      FROM grid
-    ),
-    praw AS (
-      SELECT group_a, group_b, t_stat,
-             (tt * (0.254829592 + tt * (-0.284496736 + tt * (1.421413741
-              + tt * (-1.453152027 + tt * 1.061405429))))) * exp(-x * x)
-                 AS p_raw
-      FROM xs
-    ),
-    r AS (
-      SELECT *,
-             row_number() OVER (ORDER BY p_raw, group_a, group_b) AS p_rank,
-             COUNT(*) OVER () AS m
-      FROM praw
-    )
-    SELECT group_a, group_b, t_stat,
-           ROUND(p_raw, 6) AS p_value,
-           CAST(p_rank AS BIGINT) AS p_rank,
-           ROUND(least(1.0,
-                 MIN(p_raw * m / p_rank)
-                     OVER (ORDER BY p_rank DESC
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW)), 6) AS p_adj
-    FROM r
-    """,
-)
-def q_welch_pairs_bh_adjusted(spark, sf_dir):
-    """Welch pair grid -> two-sided normal-approx p (exact-arithmetic A&S
-    erf polynomial) -> Benjamini-Hochberg FDR adjustment
-    (`operators/trend.py welch_pairs_bh`): the complete multiple-testing
-    workflow a metrics platform ships, not just the raw statistics."""
-    from ningaloo_turtle_etl_spark.operators.trend import welch_pairs_bh
-
-    ev = load_table(spark, "events", sf_dir)
-    return welch_pairs_bh(ev, "event_type", "value")
-
-
 def _ewma_oracle_sql() -> str:
     import math as _m
 
@@ -1240,84 +564,6 @@ def q_ewma_daily_volume_chart(spark, sf_dir):
 
 
 @register(
-    "wilson_rate_by_type",
-    """
-    WITH s AS (
-        SELECT event_type,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CASE WHEN value > 35.0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS x
-        FROM events GROUP BY 1
-    )
-    SELECT event_type, n, x,
-           ROUND(x / CAST(n AS DOUBLE), 6) AS rate,
-           ROUND(((x / CAST(n AS DOUBLE) + 3.841458881296 / (2 * n))
-                  - 1.959964 * sqrt((x / CAST(n AS DOUBLE))
-                                    * (1 - x / CAST(n AS DOUBLE)) / n
-                                    + 3.841458881296 / (4 * n * n)))
-                 / (1 + 3.841458881296 / n), 6) AS ci_lo,
-           ROUND(((x / CAST(n AS DOUBLE) + 3.841458881296 / (2 * n))
-                  + 1.959964 * sqrt((x / CAST(n AS DOUBLE))
-                                    * (1 - x / CAST(n AS DOUBLE)) / n
-                                    + 3.841458881296 / (4 * n * n)))
-                 / (1 + 3.841458881296 / n), 6) AS ci_hi
-    FROM s
-    """,
-)
-def q_wilson_rate_by_type(spark, sf_dir):
-    """P(value > 35) per event type with Wilson score bounds
-    (`operators/trend.py wilson_rate_ci`): the small-n-safe CI every
-    dashboard rate should carry — closed-form arithmetic on one
-    conditional-count aggregate."""
-    from ningaloo_turtle_etl_spark.operators.trend import wilson_rate_ci
-
-    ev = load_table(spark, "events", sf_dir)
-    return wilson_rate_ci(ev, "event_type", F.col("value") > 35.0)
-
-
-@register(
-    "qte_click_vs_view",
-    """
-    WITH probs AS (
-        SELECT i, p FROM (VALUES (0, 0.1), (1, 0.25), (2, 0.5),
-                                 (3, 0.75), (4, 0.9)) v(i, p)
-    ),
-    t AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_treat,
-               quantile_cont(value, [0.1, 0.25, 0.5, 0.75, 0.9]) AS qs
-        FROM events WHERE event_type = 'click'
-    ),
-    c AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_control,
-               quantile_cont(value, [0.1, 0.25, 0.5, 0.75, 0.9]) AS qs
-        FROM events WHERE event_type = 'view'
-    ),
-    x AS (
-        SELECT probs.p, t.n_treat, c.n_control,
-               ROUND(t.qs[probs.i + 1], 6) AS q_treat,
-               ROUND(c.qs[probs.i + 1], 6) AS q_control
-        FROM probs, t, c
-    )
-    SELECT p, n_treat, n_control, q_treat, q_control,
-           ROUND(q_treat - q_control, 6) AS qte
-    FROM x
-    """,
-)
-def q_qte_click_vs_view(spark, sf_dir):
-    """Quantile treatment effects of click vs view value
-    (`operators/trend.py quantile_treatment_effect`): where in the
-    distribution the difference lives — the tail story a mean lift
-    hides."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        quantile_treatment_effect,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return quantile_treatment_effect(ev, "value", "event_type",
-                                     "click", "view")
-
-
-@register(
     "psi_value_drift",
     """
     WITH t AS (
@@ -1371,212 +617,6 @@ def q_psi_value_drift(spark, sf_dir):
         F.to_date("ts") < F.lit("2024-01-16").cast("date"),
         n_bins=10,
     )
-
-
-@register(
-    "msprt_always_valid_daily",
-    """
-    WITH daily AS (
-        SELECT event_type,
-               CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-               CAST(COUNT(*) AS BIGINT) AS dn,
-               SUM(CAST(value AS DOUBLE)) AS ds
-        FROM events GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT event_type, day,
-               SUM(dn) OVER w AS n,
-               SUM(ds) OVER w AS s
-        FROM daily
-        WINDOW w AS (PARTITION BY event_type ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
-    lam AS (
-        SELECT event_type, day, n, s / n AS xbar,
-               0.5 * ln(2500.0 / (2500.0 + n * 100.0))
-               + (n * n * (s / n - 45.0) * (s / n - 45.0) * 100.0)
-                 / (2.0 * 2500.0 * (2500.0 + n * 100.0)) AS ll
-        FROM cum
-    ),
-    runmax AS (
-        SELECT event_type, day, n, xbar, ll,
-               MAX(ll) OVER (PARTITION BY event_type ORDER BY day
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS llmax
-        FROM lam
-    )
-    SELECT event_type, day,
-           CAST(n AS BIGINT) AS n_cum,
-           ROUND(xbar, 6) AS mean_cum,
-           ROUND(ll, 6) AS log_lambda,
-           ROUND(exp(-greatest(0.0, llmax)), 6) AS p_always_valid,
-           exp(-greatest(0.0, llmax)) < 0.05 AS rejected
-    FROM runmax
-    ORDER BY event_type, day
-    """,
-)
-def q_msprt_always_valid_daily(spark, sf_dir):
-    """Always-valid sequential monitoring of mean event value against
-    mu0=45 per type (`operators/trend.py msprt_always_valid`, mixture
-    SPRT with sigma=50, tau=10): the p-value that stays valid under DAILY
-    peeking — the running-max likelihood ratio latches `rejected` the
-    first day the evidence suffices and the error guarantee survives
-    continuous dashboards, unlike the fixed-n tests it complements.
-    Grid-grain windows over the daily tally; the raw events are touched
-    once."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import msprt_always_valid
-
-    raw = load_table(spark, "events", sf_dir)
-    ev = raw.select(
-        "event_type",
-        F.floor(_epoch_seconds(raw, "ts") / F.lit(86400))
-        .cast("long")
-        .alias("day"),
-        "value",
-    )
-    return msprt_always_valid(
-        ev, ["event_type"], "day", "value",
-        mu0=45.0, sigma=50.0, tau=10.0, alpha=0.05,
-    ).orderBy("event_type", "day")
-
-
-@register(
-    "power_mde_by_type",
-    """
-    WITH s AS (
-        SELECT event_type,
-               CAST(COUNT(*) AS BIGINT) AS n_rows,
-               AVG(CAST(value AS DOUBLE)) AS m,
-               stddev_samp(CAST(value AS DOUBLE)) AS sd
-        FROM events GROUP BY 1
-    ),
-    grid AS (
-        SELECT s.*, r.rel_effect
-        FROM s CROSS JOIN (VALUES (0.01), (0.02), (0.05), (0.10))
-                          AS r(rel_effect)
-    )
-    SELECT event_type, rel_effect, n_rows,
-           ROUND(m, 6) AS mean,
-           ROUND(sd, 6) AS sd,
-           ROUND(rel_effect * m, 6) AS delta_abs,
-           -- (r·m)·(r·m) mirrors Spark's delta*delta association, the
-           -- 6dp pre-round mirrors the operator's cross-engine guard on
-           -- ceil(), and zero-mean groups emit NULL (delta 0 would make
-           -- the ratio Infinity)
-           CASE WHEN rel_effect * m <> 0.0 THEN
-               CAST(ceil(ROUND(2.0 * sd * sd * 7.848879738460949
-                     / ((rel_effect * m) * (rel_effect * m)), 6)) AS BIGINT)
-           END AS n_required_per_arm,
-           ROUND(2.8015852188468138 * sd * sqrt(4.0 / n_rows), 6)
-               AS mde_abs_at_n,
-           CASE WHEN m <> 0.0 THEN
-               ROUND(2.8015852188468138 * sd * sqrt(4.0 / n_rows) / m, 6)
-           END AS mde_rel_at_n
-    FROM grid
-    ORDER BY event_type, rel_effect
-    """,
-)
-def q_power_mde_by_type(spark, sf_dir):
-    """Experiment-planning power/MDE grid for the value metric per event
-    type (`operators/trend.py power_mde_table`, alpha=0.05, power=0.8):
-    the per-arm sample size each candidate lift needs, and the minimum
-    detectable effect the current volume already supports — the
-    feasibility table read before any flag flips. The z-sum constant
-    2.8015852188468138 (and its square 7.848879738460949) is exactly what
-    the Spark side's Acklam norm_ppf emits, so the grid replays
-    bit-for-bit; one aggregate per type + a literal grid explode."""
-    from ningaloo_turtle_etl_spark.operators.trend import power_mde_table
-
-    ev = load_table(spark, "events", sf_dir)
-    return power_mde_table(
-        ev, ["event_type"], "value",
-        rel_effects=(0.01, 0.02, 0.05, 0.10), alpha=0.05, power=0.8,
-    ).orderBy("event_type", "rel_effect")
-
-
-@register(
-    "msprt_click_vs_view",
-    """
-    WITH daily AS (
-        SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-               CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS dnt,
-               SUM(CASE WHEN event_type = 'click'
-                        THEN CAST(value AS DOUBLE) ELSE 0.0 END) AS dst,
-               CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS dnc,
-               SUM(CASE WHEN event_type = 'view'
-                        THEN CAST(value AS DOUBLE) ELSE 0.0 END) AS dsc
-        FROM events WHERE event_type IN ('click', 'view')
-        GROUP BY 1
-    ),
-    cum AS (
-        SELECT day,
-               SUM(dnt) OVER w AS nt, SUM(dst) OVER w AS st,
-               SUM(dnc) OVER w AS nc, SUM(dsc) OVER w AS sc
-        FROM daily
-        WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND CURRENT ROW)
-    ),
-    lam AS (
-        SELECT day, nt, nc,
-               CASE WHEN nt > 0 AND nc > 0
-                    THEN st / nt - sc / nc END AS d,
-               CASE WHEN nt > 0 AND nc > 0
-                    THEN 2500.0 * (1.0 / nt + 1.0 / nc) END AS v
-        FROM cum
-    ),
-    ll AS (
-        SELECT day, nt, nc, d,
-               CASE WHEN v IS NOT NULL THEN
-                   0.5 * ln(v / (v + 100.0))
-                   + d * d * 100.0 / (2.0 * v * (v + 100.0))
-               END AS ll
-        FROM lam
-    ),
-    runmax AS (
-        SELECT day, nt, nc, d, ll,
-               MAX(ll) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS llmax
-        FROM ll
-    )
-    SELECT day, CAST(nt AS BIGINT) AS n_treat, CAST(nc AS BIGINT) AS n_control,
-           ROUND(d, 6) AS diff,
-           ROUND(ll, 6) AS log_lambda,
-           ROUND(exp(-greatest(0.0, COALESCE(llmax, 0.0))), 6)
-               AS p_always_valid,
-           exp(-greatest(0.0, COALESCE(llmax, 0.0))) < 0.05 AS rejected
-    FROM runmax
-    ORDER BY day
-    """,
-)
-def q_msprt_click_vs_view(spark, sf_dir):
-    """Two-sample always-valid monitoring of click vs view mean value
-    (`operators/trend.py msprt_two_sample`, sigma=50, tau=10): the daily
-    treatment-vs-control dashboard whose p-value survives peeking. The
-    two arms come from the SAME generator, and the test says so at every
-    scale: the ~2.4-point gap visible at sf0.01 is sampling noise the
-    mixture bar never credits (p stays 1), and at sf0.1 the gap itself
-    collapses to ~0.03 — exactly the null a naive daily-peeked z-test
-    would eventually false-alarm on. The one-sample
-    msprt_always_valid_daily query shows the complementary real-effect
-    rejections."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import msprt_two_sample
-
-    raw = load_table(spark, "events", sf_dir)
-    ev = raw.select(
-        "event_type",
-        F.floor(_epoch_seconds(raw, "ts") / F.lit(86400))
-        .cast("long")
-        .alias("day"),
-        "value",
-    )
-    return msprt_two_sample(
-        ev, "event_type", "click", "view", "day", "value",
-        sigma=50.0, tau=10.0, alpha=0.05,
-    ).orderBy("day")
 
 
 @register(
@@ -1645,723 +685,6 @@ def mann_kendall_daily_counts(spark, sf_dir):
     return mann_kendall_trend(
         grid, "event_type", "day", "x"
     ).orderBy("event_type")
-
-
-@register(
-    "nelson_aalen_daily_conversion",
-    """
-    WITH subj AS (
-        SELECT user_id,
-               CAST(floor(epoch(MIN(ts)) / 86400) AS BIGINT) AS t0,
-               CAST(floor(epoch(MIN(CASE WHEN event_type = 'purchase'
-                                         THEN ts END)) / 86400) AS BIGINT)
-                   AS tp,
-               CAST(floor(epoch(MAX(ts)) / 86400) AS BIGINT) AS tlast
-        FROM events WHERE user_id IS NOT NULL GROUP BY user_id
-    ),
-    spells AS (
-        SELECT user_id,
-               CASE WHEN tp IS NOT NULL THEN tp - t0 ELSE tlast - t0 END AS t,
-               CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS ev
-        FROM subj
-    ),
-    grid AS (
-        SELECT t, CAST(COUNT(*) AS BIGINT) AS n_obs,
-               CAST(SUM(ev) AS BIGINT) AS d
-        FROM spells GROUP BY t
-    ),
-    stepped AS (
-        SELECT t, d,
-               CAST(SUM(n_obs) OVER () -
-                    COALESCE(SUM(n_obs) OVER (ORDER BY t
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                    AS BIGINT) AS n_at_risk
-        FROM grid
-    ),
-    h AS (
-        SELECT t, n_at_risk, d,
-               CAST(round(1e6 * d / n_at_risk) AS BIGINT) AS hm
-        FROM stepped
-    )
-    SELECT t, n_at_risk, d AS n_events,
-           ROUND(hm / 1e6, 6) AS hazard_step,
-           ROUND(CAST(SUM(hm) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-               / 1e6, 6) AS cum_hazard
-    FROM h ORDER BY t
-    """,
-)
-def nelson_aalen_daily_conversion(spark, sf_dir):
-    """Nelson-Aalen cumulative conversion hazard in days-since-first-
-    event (`operators/trend.py nelson_aalen_hazard`): each user is a
-    subject, the event is their first purchase, non-purchasers are
-    right-censored at their last activity — the hazard-scale complement
-    of km_conversion_curve, integer-micro exact."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import nelson_aalen_hazard
-
-    raw = load_table(spark, "events", sf_dir).filter(
-        F.col("user_id").isNotNull()
-    )
-    day = F.floor(_epoch_seconds(raw, "ts") / F.lit(86400)).cast("long")
-    per_user = raw.select(
-        "user_id",
-        day.alias("day"),
-        F.when(F.col("event_type") == "purchase", day).alias("pday"),
-    ).groupBy("user_id").agg(
-        F.min("day").alias("t0"),
-        F.min("pday").alias("tp"),
-        F.max("day").alias("tlast"),
-    )
-    spells = per_user.select(
-        F.lit("all").alias("g"),
-        F.when(
-            F.col("tp").isNotNull(), F.col("tp") - F.col("t0")
-        ).otherwise(F.col("tlast") - F.col("t0")).alias("t"),
-        F.col("tp").isNotNull().cast("int").alias("ev"),
-    )
-    return nelson_aalen_hazard(spells, "g", "t", "ev").select(
-        "t", "n_at_risk", "n_events", "hazard_step", "cum_hazard"
-    ).orderBy("t")
-
-
-@register(
-    "ipw_ate_click_vs_view",
-    """
-    WITH base AS (
-        SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) % 7 AS s,
-               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS tr,
-               value AS y
-        FROM events WHERE event_type IN ('click', 'view')
-    ),
-    cell AS (
-        SELECT s, tr, CAST(COUNT(*) AS BIGINT) AS n, SUM(y) AS sy
-        FROM base GROUP BY 1, 2
-    ),
-    piv AS (
-        SELECT s,
-               SUM(CASE WHEN tr = 1 THEN n END) AS nt,
-               SUM(CASE WHEN tr = 1 THEN sy END) AS syt,
-               SUM(CASE WHEN tr = 0 THEN n END) AS nc,
-               SUM(CASE WHEN tr = 0 THEN sy END) AS syc
-        FROM cell GROUP BY s
-    ),
-    agg AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
-               CAST(SUM(CASE WHEN nt IS NULL OR nc IS NULL
-                             THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_strata_skipped,
-               SUM(CASE WHEN nt IS NOT NULL AND nc IS NOT NULL
-                        THEN nt + nc END) AS n_used,
-               SUM(CASE WHEN nt IS NOT NULL AND nc IS NOT NULL
-                        THEN (nt + nc) * (syt / nt - syc / nc) END) AS wsum,
-               SUM(syt) AS ty, SUM(nt) AS tn,
-               SUM(syc) AS cy, SUM(nc) AS cn
-        FROM piv
-    )
-    SELECT n_strata, n_strata_skipped,
-           ROUND(ty / tn - cy / cn, 6) AS ate_naive,
-           ROUND(wsum / n_used, 6) AS ate_stratified,
-           ROUND((ty / tn - cy / cn) - wsum / n_used, 6) AS confounding_bias
-    FROM agg
-    """,
-)
-def ipw_ate_click_vs_view(spark, sf_dir):
-    """Stratified / inverse-propensity ATE of click vs view mean value
-    with day-of-week strata (`operators/trend.py stratified_ipw_ate`):
-    the observational-causal rung of the experimentation stack — CUPED
-    and DiD assume randomized assignment; this is the estimator when
-    assignment correlates with a known confounder (here weekday
-    traffic mix)."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import stratified_ipw_ate
-
-    raw = load_table(spark, "events", sf_dir).filter(
-        F.col("event_type").isin("click", "view")
-    )
-    base = raw.select(
-        (
-            F.floor(_epoch_seconds(raw, "ts") / F.lit(86400)).cast("long")
-            % 7
-        ).alias("s"),
-        (F.col("event_type") == "click").cast("int").alias("tr"),
-        F.col("value").alias("y"),
-    )
-    return stratified_ipw_ate(base, "s", "tr", "y")
-
-
-@register(
-    "token_jsd_by_source",
-    r"""
-    WITH tok AS (
-        SELECT source AS g,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  x -> x <> '')) AS tk
-        FROM documents
-    ),
-    gt AS (SELECT g, tk, CAST(COUNT(*) AS BIGINT) AS c
-           FROM tok GROUP BY 1, 2),
-    totals AS (SELECT g, CAST(SUM(c) AS BIGINT) AS ng FROM gt GROUP BY g),
-    ct AS (SELECT tk, CAST(SUM(c) AS BIGINT) AS ct FROM gt GROUP BY tk),
-    nall AS (SELECT CAST(SUM(c) AS BIGINT) AS nall FROM gt),
-    terms AS (
-        SELECT gt.g, totals.ng,
-               CAST(round(1e9 * (
-                   CASE WHEN gt.c > 0 THEN (gt.c * 1.0 / totals.ng)
-                       * ln((gt.c * 1.0 / totals.ng) /
-                            (((gt.c * 1.0 / totals.ng) +
-                              ((ct.ct - gt.c) * 1.0 / (nall.nall - totals.ng)))
-                             / 2.0)) ELSE 0.0 END
-                 + CASE WHEN ct.ct - gt.c > 0
-                        THEN ((ct.ct - gt.c) * 1.0 / (nall.nall - totals.ng))
-                       * ln(((ct.ct - gt.c) * 1.0 / (nall.nall - totals.ng)) /
-                            (((gt.c * 1.0 / totals.ng) +
-                              ((ct.ct - gt.c) * 1.0 / (nall.nall - totals.ng)))
-                             / 2.0)) ELSE 0.0 END
-               ) / 2.0) AS BIGINT) AS tm,
-               CAST(round(1e9 * CASE WHEN ct.ct - gt.c > 0
-                   THEN (ct.ct - gt.c) * 1.0 / (nall.nall - totals.ng)
-                   ELSE 0.0 END) AS BIGINT) AS qm
-        FROM gt JOIN ct USING (tk) JOIN totals USING (g) CROSS JOIN nall
-    )
-    SELECT g AS source, MAX(ng) AS n_tokens,
-           CAST(COUNT(*) AS BIGINT) AS vocab,
-           ROUND((CAST(SUM(tm) AS BIGINT)
-                  + (1e9 - CAST(SUM(qm) AS BIGINT)) * ln(2) / 2.0)
-                 / 1e9, 6) AS jsd_vs_rest
-    FROM terms GROUP BY g ORDER BY g
-    """,
-)
-def token_jsd_by_source(spark, sf_dir):
-    """Jensen-Shannon divergence of each source's token distribution vs
-    the rest of the corpus (`operators/trend.py token_js_divergence`):
-    the bounded symmetric drift score for ranking source idiosyncrasy —
-    per-token terms quantize to integer nanos before the sum, and the
-    p=0 tail collapses to the closed-form (ln2/2)·(1 − Σq) correction."""
-    from ningaloo_turtle_etl_spark.operators.trend import token_js_divergence
-
-    docs = load_table(spark, "documents", sf_dir)
-    return token_js_divergence(docs, "source").orderBy("source")
-
-
-@register(
-    "holt_linear_daily",
-    """
-    WITH RECURSIVE
-    d AS (
-        SELECT event_type,
-               CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-               CAST(COUNT(*) AS DOUBLE) AS y
-        FROM events GROUP BY 1, 2
-    ),
-    s AS (
-        SELECT event_type, y,
-               ROW_NUMBER() OVER (PARTITION BY event_type
-                                  ORDER BY day) AS idx,
-               COUNT(*) OVER (PARTITION BY event_type) AS n
-        FROM d
-    ),
-    walk(event_type, idx, l, b) AS (
-        SELECT event_type, CAST(1 AS BIGINT), y, CAST(0 AS DOUBLE)
-        FROM s WHERE idx = 1
-        UNION ALL
-        SELECT w.event_type, w.idx + 1,
-               0.5 * s.y + 0.5 * (w.l + w.b),
-               0.25 * ((0.5 * s.y + 0.5 * (w.l + w.b)) - w.l)
-                   + 0.75 * w.b
-        FROM walk w
-        JOIN s ON s.event_type = w.event_type AND s.idx = w.idx + 1
-    )
-    SELECT w.event_type,
-           CAST(w.idx AS BIGINT) AS n_points,
-           ROUND(w.l, 6) AS level,
-           ROUND(w.b, 6) AS trend,
-           ROUND(w.l + 7.0 * w.b, 6) AS forecast
-    FROM walk w
-    JOIN (SELECT event_type, MAX(idx) AS mi FROM walk GROUP BY 1) last
-      ON w.event_type = last.event_type AND w.idx = last.mi
-    ORDER BY w.event_type
-    """,
-)
-def holt_linear_daily(spark, sf_dir):
-    """Holt linear-trend smoothing of the per-type daily event counts
-    (`operators/trend.py holt_linear_forecast`, alpha=1/2, beta=1/4,
-    7-day forecast): the level+trend state after folding each group's
-    ordered series once, with the fold replayed independently by a
-    recursive CTE in the oracle (NOT list_reduce — DuckDB 1.0's struct
-    lambda aliases the accumulator into the output vector, measured
-    divergence documented on the operator). Binary-exact smoothing
-    constants; the sequential fold order is the series order in both
-    engines, so no quantization is needed anywhere."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        holt_linear_forecast,
-    )
-
-    raw = load_table(spark, "events", sf_dir)
-    daily = (
-        raw.select(
-            "event_type",
-            F.floor(_epoch_seconds(raw, "ts") / F.lit(86400))
-            .cast("long")
-            .alias("day"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("double").alias("y"))
-    )
-    return holt_linear_forecast(
-        daily,
-        ["event_type"],
-        order_col="day",
-        value_col="y",
-        alpha=0.5,
-        beta=0.25,
-        horizon=7,
-    ).orderBy("event_type")
-
-
-@register(
-    "cmh_click_vs_view",
-    """
-    WITH base AS (
-        SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) % 7 AS s,
-               CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS tr,
-               CASE WHEN value >= 50.0 THEN 1 ELSE 0 END AS y
-        FROM events WHERE event_type IN ('click', 'view')
-    ),
-    cell AS (
-        SELECT s,
-               CAST(SUM(tr * y) AS BIGINT) AS a,
-               CAST(SUM(tr * (1 - y)) AS BIGINT) AS b,
-               CAST(SUM((1 - tr) * y) AS BIGINT) AS c,
-               CAST(SUM((1 - tr) * (1 - y)) AS BIGINT) AS d
-        FROM base GROUP BY s
-    ),
-    terms AS (
-        SELECT a + b + c + d AS nn, a AS ai,
-               CASE WHEN a + b + c + d > 0 THEN CAST(round(1e6 *
-                   (CAST(a AS DOUBLE) * CAST(d AS DOUBLE))
-                   / CAST(a + b + c + d AS DOUBLE), 0) AS BIGINT)
-                   ELSE 0 END AS t_ad,
-               CASE WHEN a + b + c + d > 0 THEN CAST(round(1e6 *
-                   (CAST(b AS DOUBLE) * CAST(c AS DOUBLE))
-                   / CAST(a + b + c + d AS DOUBLE), 0) AS BIGINT)
-                   ELSE 0 END AS t_bc,
-               CASE WHEN a + b + c + d > 0 THEN CAST(round(1e6 *
-                   (CAST(a AS DOUBLE) + CAST(b AS DOUBLE))
-                   * (CAST(a AS DOUBLE) + CAST(c AS DOUBLE))
-                   / CAST(a + b + c + d AS DOUBLE), 0) AS BIGINT)
-                   ELSE 0 END AS t_e,
-               CASE WHEN a + b + c + d > 1 THEN CAST(round(1e6 *
-                   (CAST(a AS DOUBLE) + CAST(b AS DOUBLE))
-                   * (CAST(c AS DOUBLE) + CAST(d AS DOUBLE))
-                   * (CAST(a AS DOUBLE) + CAST(c AS DOUBLE))
-                   * (CAST(b AS DOUBLE) + CAST(d AS DOUBLE))
-                   / (CAST(a + b + c + d AS DOUBLE)
-                      * CAST(a + b + c + d AS DOUBLE)
-                      * (CAST(a + b + c + d AS DOUBLE) - 1)), 0) AS BIGINT)
-                   ELSE 0 END AS t_v
-        FROM cell
-    ),
-    agg AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
-               CAST(SUM(nn) AS BIGINT) AS n_total,
-               CAST(SUM(ai) AS BIGINT) AS sum_a,
-               CAST(SUM(t_ad) AS BIGINT) AS s_ad,
-               CAST(SUM(t_bc) AS BIGINT) AS s_bc,
-               CAST(SUM(t_e) AS BIGINT) AS s_e,
-               CAST(SUM(t_v) AS BIGINT) AS s_v
-        FROM terms
-    ),
-    pooled AS (
-        SELECT CAST(SUM(tr * y) AS BIGINT) AS pa,
-               CAST(SUM(tr * (1 - y)) AS BIGINT) AS pb,
-               CAST(SUM((1 - tr) * y) AS BIGINT) AS pc,
-               CAST(SUM((1 - tr) * (1 - y)) AS BIGINT) AS pd
-        FROM base
-    )
-    SELECT n_strata, n_total,
-           ROUND(CASE WHEN pb > 0 AND pc > 0 AND pd > 0
-                      THEN (CAST(pa AS DOUBLE) * pd)
-                           / (CAST(pb AS DOUBLE) * pc) END, 6) AS or_pooled,
-           ROUND(CASE WHEN s_bc > 0
-                      THEN CAST(s_ad AS DOUBLE) / s_bc END, 6) AS or_cmh,
-           ROUND(CASE WHEN s_v > 0
-                      THEN (CAST(sum_a AS DOUBLE) - s_e / 1e6)
-                           * (CAST(sum_a AS DOUBLE) - s_e / 1e6)
-                           / (s_v / 1e6) END, 6) AS chi2_mh
-    FROM agg, pooled
-    """,
-)
-def cmh_click_vs_view(spark, sf_dir):
-    """Cochran–Mantel–Haenszel pooled odds ratio of click vs view
-    producing a high-value (value ≥ 50) interaction, stratified by
-    day-of-week (`operators/trend.py cmh_odds_ratio`): the binary-
-    outcome rung of the observational-causal stack next to
-    ipw_ate_click_vs_view's continuous ATE — the collapsed odds ratio
-    is shown alongside for the Simpson-bias contrast."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import cmh_odds_ratio
-
-    raw = load_table(spark, "events", sf_dir).filter(
-        F.col("event_type").isin("click", "view")
-    )
-    base = raw.select(
-        (
-            F.floor(_epoch_seconds(raw, "ts") / F.lit(86400)).cast("long")
-            % 7
-        ).alias("s"),
-        (F.col("event_type") == "click").cast("int").alias("tr"),
-        (F.col("value") >= 50.0).cast("int").alias("y"),
-    )
-    return cmh_odds_ratio(base, "s", "tr", "y")
-
-
-def _holt_winters_oracle_sql(m: int = 7, horizon: int = 7) -> str:
-    """Recursive-CTE replay of holt_winters_forecast (α=1/2, β=1/4,
-    γ=1/2): the walk carries (l, b, s0..s6, dw) and updates one seasonal
-    slot per row with IDENTICALLY-ordered arithmetic; the same
-    list_reduce struct-aliasing bug documented on holt_linear_daily
-    forces the CTE form here too."""
-    sprev = (
-        "CASE s.dw "
-        + " ".join(f"WHEN {j} THEN w.s{j}" for j in range(m))
-        + " END"
-    )
-    new_l = f"(0.5 * (s.y - {sprev}) + 0.5 * (w.l + w.b))"
-    new_b = f"(0.25 * ({new_l} - w.l) + 0.75 * w.b)"
-    s_updates = ",\n               ".join(
-        f"CASE WHEN s.dw = {j} THEN 0.5 * (s.y - {new_l})"
-        f" + 0.5 * ({sprev}) ELSE w.s{j} END"
-        for j in range(m)
-    )
-    zeros = ", ".join(f"CAST(0.0 AS DOUBLE)" for _ in range(m))
-    scols = ", ".join(f"s{j}" for j in range(m))
-    sel_s = ", ".join(f"ROUND(w.s{j}, 6) AS s{j}" for j in range(m))
-    return f"""
-    WITH RECURSIVE
-    d AS (
-        SELECT event_type,
-               CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-               CAST(COUNT(*) AS DOUBLE) AS y
-        FROM events GROUP BY 1, 2
-    ),
-    s AS (
-        SELECT event_type, y,
-               CAST(day % {m} AS INT) AS dw,
-               ROW_NUMBER() OVER (PARTITION BY event_type
-                                  ORDER BY day) AS idx
-        FROM d
-    ),
-    walk(event_type, idx, l, b, {scols}, dw) AS (
-        SELECT event_type, CAST(1 AS BIGINT), y, CAST(0 AS DOUBLE),
-               {zeros}, dw
-        FROM s WHERE idx = 1
-        UNION ALL
-        SELECT w.event_type, w.idx + 1,
-               {new_l},
-               {new_b},
-               {s_updates},
-               s.dw
-        FROM walk w
-        JOIN s ON s.event_type = w.event_type AND s.idx = w.idx + 1
-    )
-    SELECT w.event_type,
-           CAST(w.idx AS BIGINT) AS n_points,
-           ROUND(w.l, 6) AS level,
-           ROUND(w.b, 6) AS trend,
-           {sel_s},
-           ROUND(w.l + {float(horizon)} * w.b + (CASE
-               CAST((w.dw + {horizon}) % {m} AS INT) """ + " ".join(
-        f"WHEN {j} THEN w.s{j}" for j in range(m)
-    ) + f""" END), 6) AS forecast
-    FROM walk w
-    JOIN (SELECT event_type, MAX(idx) AS mi FROM walk GROUP BY 1) last
-      ON w.event_type = last.event_type AND w.idx = last.mi
-    ORDER BY w.event_type
-    """
-
-
-@register("holt_winters_daily", _holt_winters_oracle_sql(7, 7))
-def holt_winters_daily(spark, sf_dir):
-    """Holt–Winters additive triple smoothing of the per-type daily
-    event counts (`operators/trend.py holt_winters_forecast`, α=1/2,
-    β=1/4, γ=1/2, weekly profile, 7-day-ahead forecast): the seasonal
-    completion of holt_linear_daily — level, trend AND the learned
-    day-of-week profile, folded once per group with the recursion
-    replayed by a 9-state-column recursive CTE in the oracle."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        holt_winters_forecast,
-    )
-
-    raw = load_table(spark, "events", sf_dir)
-    daily = (
-        raw.select(
-            "event_type",
-            F.floor(_epoch_seconds(raw, "ts") / F.lit(86400))
-            .cast("long")
-            .alias("day"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("double").alias("y"))
-    )
-    return holt_winters_forecast(
-        daily, ["event_type"], "day", "y", period=7, horizon=7
-    ).orderBy("event_type")
-
-
-def _gmm_em_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled 2-component 1-D GMM EM oracle (the logistic-GD chaining
-    pattern): moment-based deterministic init, then per round one
-    responsibility + sufficient-statistic aggregate CTE and one
-    parameter CTE — every driver-side double operation mirrored in the
-    same association, per-row terms nano/micro-quantized before exact
-    sums, all CTEs MATERIALIZED (the unigram/pca re-evaluation lesson).
-    Mirrors `operators/trend.py gmm_em_1d` token-for-token."""
-
-    def dens(c):
-        return (
-            f"w{c} * exp(-((x - mu{c}) * (x - mu{c})) / (2.0 * v{c}))"
-            f" / sqrt(2.0 * pi() * v{c})"
-        )
-
-    parts = [
-        f"""
-    base AS MATERIALIZED (
-        SELECT CAST(value AS DOUBLE) AS x FROM events
-        WHERE value IS NOT NULL
-    ),
-    init AS MATERIALIZED (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(round(x * 1e9) AS BIGINT)) AS BIGINT) AS q1,
-               CAST(SUM(CAST(round(x * x * 1e6) AS BIGINT)) AS BIGINT) AS q2
-        FROM base
-    ),
-    p0 AS MATERIALIZED (
-        SELECT n, 0.5 AS w1, mean - sd AS mu1, v0 AS v1,
-               0.5 AS w2, mean + sd AS mu2, v0 AS v2
-        FROM (SELECT n, mean, sqrt(greatest(vr, 0.0)) AS sd,
-                     greatest(vr, 1e-6) AS v0
-              FROM (SELECT n, (q1 / 1e9) / n AS mean,
-                           (q2 / 1e6) / n - ((q1 / 1e9) / n)
-                               * ((q1 / 1e9) / n) AS vr
-                    FROM init))
-    )"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    m{t} AS MATERIALIZED (
-        SELECT ANY_VALUE(n) AS n,
-               CAST(SUM(CAST(round(r * 1e9) AS BIGINT)) AS BIGINT) AS a_r,
-               CAST(SUM(CAST(round(r * x * 1e9) AS BIGINT)) AS BIGINT)
-                   AS a_rx,
-               CAST(SUM(CAST(round(r * x * x * 1e6) AS BIGINT)) AS BIGINT)
-                   AS a_rxx,
-               CAST(SUM(CAST(round((1.0 - r) * 1e9) AS BIGINT)) AS BIGINT)
-                   AS b_r,
-               CAST(SUM(CAST(round((1.0 - r) * x * 1e9) AS BIGINT))
-                   AS BIGINT) AS b_rx,
-               CAST(SUM(CAST(round((1.0 - r) * x * x * 1e6) AS BIGINT))
-                   AS BIGINT) AS b_rxx
-        FROM (SELECT n, x,
-                     CASE WHEN {dens(1)} + {dens(2)} > 0
-                          THEN {dens(1)} / ({dens(1)} + {dens(2)})
-                          ELSE 0.5 END AS r
-              FROM base CROSS JOIN p{t - 1})
-    ),
-    p{t} AS MATERIALIZED (
-        SELECT n, n1 / n AS w1, mu1,
-               greatest((a_rxx / 1e6) / n1 - mu1 * mu1, 1e-6) AS v1,
-               n2 / n AS w2, mu2,
-               greatest((b_rxx / 1e6) / n2 - mu2 * mu2, 1e-6) AS v2
-        FROM (SELECT n, n1, n2, (a_rx / 1e9) / n1 AS mu1,
-                     (b_rx / 1e9) / n2 AS mu2, a_rxx, b_rxx
-              FROM (SELECT n, a_r / 1e9 AS n1, b_r / 1e9 AS n2,
-                           a_rx, b_rx, a_rxx, b_rxx
-                    FROM m{t}))
-    )"""
-        )
-    T = iterations
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    ll AS MATERIALIZED (
-        SELECT ANY_VALUE(n) AS n,
-               CAST(SUM(CAST(round((CASE WHEN {dens(1)} + {dens(2)} > 0
-                                         THEN ln({dens(1)} + {dens(2)})
-                                         ELSE -745.0 END) * 1e9)
-                        AS BIGINT)) AS BIGINT) AS lls
-        FROM base CROSS JOIN p{T}
-    )
-    SELECT 1 AS component, ROUND(w1, 6) AS weight, ROUND(mu1, 6) AS mu,
-           ROUND(v1, 6) AS variance,
-           ROUND((lls / 1e9) / ll.n, 6) AS mean_loglik
-    FROM p{T} CROSS JOIN ll
-    UNION ALL
-    SELECT 2, ROUND(w2, 6), ROUND(mu2, 6), ROUND(v2, 6),
-           ROUND((lls / 1e9) / ll.n, 6)
-    FROM p{T} CROSS JOIN ll
-    ORDER BY component"""
-    )
-
-
-@register("gmm_em_value_components", _gmm_em_oracle_sql(3))
-def gmm_em_value_components(spark, sf_dir):
-    """Two-component Gaussian-mixture fit of the event value
-    distribution by EM (`operators/trend.py gmm_em_1d`, 3 rounds,
-    moment-deterministic init): the soft-assignment density twin of
-    kmeans — weights/means/variances plus the final mean log-density,
-    every EM round one exact-integer aggregate, the whole parameter
-    trajectory replayed by the unrolled oracle."""
-    from ningaloo_turtle_etl_spark.operators.trend import gmm_em_1d
-
-    raw = load_table(spark, "events", sf_dir)
-    return gmm_em_1d(raw, "value", iterations=3)
-
-
-def _cox_ph_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled Cox partial-likelihood Newton oracle: a shared subject
-    CTE (per-user time-to-first-purchase with click-count covariate),
-    then per step one per-time aggregate + reverse-cumulative-window
-    CTE and one (U, I) reduce CTE — quantization grids and operation
-    order mirroring `operators/trend.py cox_ph_fit` token-for-token.
-    β{t} carries the running coefficient; all CTEs MATERIALIZED."""
-    parts = [
-        """
-    ev AS MATERIALIZED (
-        SELECT user_id,
-               CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-               event_type, value
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    subj AS MATERIALIZED (
-        SELECT CASE WHEN p_day IS NOT NULL THEN p_day - f_day
-                    ELSE l_day - f_day END AS t,
-               CASE WHEN p_day IS NOT NULL THEN 1 ELSE 0 END AS d,
-               CAST(clicks AS DOUBLE) / 10.0 AS x
-        FROM (SELECT user_id, MIN(day) AS f_day, MAX(day) AS l_day,
-                     MIN(CASE WHEN event_type = 'purchase'
-                                   AND value >= 90.0 THEN day END)
-                         AS p_day,
-                     SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                         AS clicks
-              FROM ev GROUP BY user_id)
-    ),
-    b0 AS (SELECT 0.0 AS beta)"""
-    ]
-    for s in range(1, iterations + 1):
-        parts.append(
-            f""",
-    pt{s} AS MATERIALIZED (
-        SELECT t,
-               CAST(SUM(CAST(round(exp(beta * x) * 1e9) AS BIGINT))
-                   AS BIGINT) AS r0,
-               CAST(SUM(CAST(round(x * exp(beta * x) * 1e9) AS BIGINT))
-                   AS BIGINT) AS r1,
-               CAST(SUM(CAST(round(x * x * exp(beta * x) * 1e6)
-                   AS BIGINT)) AS BIGINT) AS r2,
-               CAST(SUM(d) AS BIGINT) AS m,
-               CAST(SUM(d * CAST(round(x * 1e9) AS BIGINT)) AS BIGINT)
-                   AS sx
-        FROM subj CROSS JOIN b{s - 1} GROUP BY t
-    ),
-    cum{s} AS MATERIALIZED (
-        SELECT t, m, sx,
-               CAST(SUM(r0) OVER (ORDER BY t DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS s0,
-               CAST(SUM(r1) OVER (ORDER BY t DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS s1,
-               CAST(SUM(r2) OVER (ORDER BY t DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS s2
-        FROM pt{s}
-    ),
-    ui{s} AS MATERIALIZED (
-        SELECT CAST(SUM(CAST(round((sx / 1e9
-                   - m * ((s1 / 1e9) / (s0 / 1e9))) * 1e9) AS BIGINT))
-                   AS BIGINT) AS u,
-               CAST(SUM(CAST(round(m * ((s2 / 1e6) / (s0 / 1e9)
-                   - ((s1 / 1e9) / (s0 / 1e9))
-                     * ((s1 / 1e9) / (s0 / 1e9))) * 1e9) AS BIGINT))
-                   AS BIGINT) AS i
-        FROM cum{s} WHERE m > 0
-    ),
-    b{s} AS MATERIALIZED (
-        SELECT beta + (u / 1e9) / (i / 1e9) AS beta
-        FROM b{s - 1} CROSS JOIN ui{s}
-    )"""
-        )
-    T = iterations
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_subjects,
-                  CAST(SUM(d) AS BIGINT) AS n_events FROM subj)
-    SELECT ROUND(beta, 6) AS beta, ROUND(exp(beta), 6) AS hazard_ratio,
-           ROUND((u / 1e9) / sqrt(i / 1e9), 6) AS score_z,
-           n_subjects, n_events
-    FROM b{T} CROSS JOIN ui1 CROSS JOIN nn"""
-    )
-
-
-@register("cox_ph_click_hazard", _cox_ph_oracle_sql(3))
-def cox_ph_click_hazard(spark, sf_dir):
-    """Cox proportional-hazards regression of time-to-first-HIGH-VALUE-purchase
-    (value >= 90, so ~15% of users are genuinely right-censored) on
-    click intensity (`operators/trend.py cox_ph_fit`, 3 Newton steps,
-    Breslow ties): per user, t = days from first event to first
-    qualifying purchase (censored at last observed day), x = clicks/10 — "do
-    clickier users convert FASTER, hazard-ratio per 10 clicks" with
-    censoring handled exactly. Each step is one subject scan to the
-    distinct-day grain + window risk sums on that grain; the β
-    trajectory and β=0 score test replay in the unrolled oracle."""
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-    from ningaloo_turtle_etl_spark.operators.trend import cox_ph_fit
-
-    raw = load_table(spark, "events", sf_dir).where(
-        F.col("user_id").isNotNull()
-    )
-    ev = raw.select(
-        "user_id",
-        F.floor(_epoch_seconds(raw, "ts") / F.lit(86400))
-        .cast("long")
-        .alias("day"),
-        "event_type",
-        "value",
-    )
-    subj = (
-        ev.groupBy("user_id")
-        .agg(
-            F.min("day").alias("f_day"),
-            F.max("day").alias("l_day"),
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("value") >= 90.0),
-                    F.col("day"),
-                )
-            ).alias("p_day"),
-            F.sum(
-                (F.col("event_type") == "click").cast("int")
-            ).alias("clicks"),
-        )
-        .select(
-            F.when(
-                F.col("p_day").isNotNull(), F.col("p_day") - F.col("f_day")
-            )
-            .otherwise(F.col("l_day") - F.col("f_day"))
-            .alias("t"),
-            F.col("p_day").isNotNull().cast("int").alias("d"),
-            (F.col("clicks").cast("double") / F.lit(10.0)).alias("x"),
-        )
-    )
-    return cox_ph_fit(subj, "t", "d", "x", iterations=3)
 
 
 @register(
@@ -2512,141 +835,6 @@ def overdispersion_daily_counts(spark, sf_dir):
 
 
 @register(
-    "cochran_armitage_priority_fail",
-    """
-    WITH base AS (
-        SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS s,
-               CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-        FROM orders
-    ),
-    agg AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-               CAST(SUM(y) AS BIGINT) AS n_pos,
-               CAST(SUM(s) AS BIGINT) AS sum_s,
-               CAST(SUM(s * s) AS BIGINT) AS sum_s2,
-               CAST(SUM(s * y) AS BIGINT) AS sum_sy
-        FROM base
-    )
-    SELECT n_rows, n_pos, sum_s, sum_s2, sum_sy,
-           ROUND(CASE WHEN
-                     (CAST(n_pos AS DOUBLE) / CAST(n_rows AS DOUBLE))
-                     * (1.0 - CAST(n_pos AS DOUBLE)
-                              / CAST(n_rows AS DOUBLE))
-                     * (CAST(sum_s2 AS DOUBLE)
-                        - CAST(sum_s AS DOUBLE) * CAST(sum_s AS DOUBLE)
-                          / CAST(n_rows AS DOUBLE)) > 0
-                 THEN (CAST(sum_sy AS DOUBLE)
-                       - (CAST(n_pos AS DOUBLE)
-                          / CAST(n_rows AS DOUBLE))
-                         * CAST(sum_s AS DOUBLE))
-                      / sqrt((CAST(n_pos AS DOUBLE)
-                              / CAST(n_rows AS DOUBLE))
-                             * (1.0 - CAST(n_pos AS DOUBLE)
-                                      / CAST(n_rows AS DOUBLE))
-                             * (CAST(sum_s2 AS DOUBLE)
-                                - CAST(sum_s AS DOUBLE)
-                                  * CAST(sum_s AS DOUBLE)
-                                  / CAST(n_rows AS DOUBLE)))
-                 END, 6) AS z
-    FROM agg
-    """,
-)
-def q_cochran_armitage_priority_fail(spark, sf_dir):
-    """Cochran–Armitage linear-trend test of P(order failed) across the
-    ordered priority levels 1-URGENT … 5-LOW (`operators/trend.py
-    cochran_armitage_trend`): the ordinal dose-response rung between
-    two_prop_click_vs_view (2 arms) and chi2_lang_source (unordered k).
-    Score = leading digit of o_orderpriority; one map-side-combined
-    aggregate, exact bigint inputs to the closed form."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        cochran_armitage_trend,
-    )
-
-    orders = load_table(spark, "orders", sf_dir)
-    base = orders.select(
-        F.substring("o_orderpriority", 1, 1).cast("long").alias("s"),
-        (F.col("o_orderstatus") == "F").cast("long").alias("y"),
-    )
-    return cochran_armitage_trend(base, "s", "y")
-
-
-@register(
-    "kruskal_wallis_value_by_type",
-    """
-    WITH base AS (
-        SELECT event_type AS g, CAST(value AS DOUBLE) AS v
-        FROM events WHERE value IS NOT NULL
-    ),
-    dv AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS c FROM base GROUP BY v),
-    dvr AS (
-        SELECT v, c,
-               CAST(2 * COALESCE(SUM(c) OVER (
-                        ORDER BY v
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                        0) + c + 1 AS BIGINT) AS d
-        FROM dv
-    ),
-    gv AS (
-        SELECT g, v, CAST(COUNT(*) AS BIGINT) AS cg
-        FROM base GROUP BY g, v
-    ),
-    per_g AS (
-        SELECT g, CAST(SUM(cg) AS BIGINT) AS n_g,
-               SUM(CAST(cg AS HUGEINT) * CAST(d AS HUGEINT)) AS rd
-        FROM gv JOIN dvr USING (v) GROUP BY g
-    ),
-    ties AS (
-        SELECT SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)
-                   * CAST(c AS HUGEINT) - CAST(c AS HUGEINT)) AS tie_sum
-        FROM dvr
-    ),
-    tot AS (
-        SELECT CAST(SUM(n_g) AS BIGINT) AS n,
-               SUM(CAST(ROUND(CAST(rd AS DOUBLE) * CAST(rd AS DOUBLE)
-                              / CAST(n_g AS DOUBLE), 0) AS HUGEINT))
-                   AS qsum
-        FROM per_g
-    ),
-    scal AS (
-        SELECT 3.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0))
-                   * CAST(qsum AS DOUBLE)
-               - 3.0 * (CAST(n AS DOUBLE) + 1.0) AS h,
-               1.0 - CAST(tie_sum AS DOUBLE)
-                     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                        * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) AS c_tie
-        FROM tot, ties
-    )
-    SELECT g AS event_type, n_g AS n,
-           ROUND(CAST(rd AS DOUBLE) / (2.0 * CAST(n_g AS DOUBLE)), 6)
-               AS avg_rank,
-           ROUND(h, 6) AS h,
-           ROUND(CASE WHEN c_tie > 0 THEN h / c_tie END, 6) AS h_tie_adj
-    FROM per_g, scal
-    ORDER BY event_type
-    """,
-)
-def q_kruskal_wallis_value_by_type(spark, sf_dir):
-    """Kruskal–Wallis H across the five event types on value
-    (`operators/trend.py kruskal_wallis_by_group`): the k-group
-    distribution-equality rung above mwu_click_vs_view, rank-based so
-    it sees the same answer under any monotone transform. Doubled
-    average ranks on the distinct-value grain keep every rank sum an
-    exact integer; per-group H terms are unit-grid quantized before
-    the cross-group sum so double summation order is engine-free."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        kruskal_wallis_by_group,
-    )
-
-    ev = load_table(spark, "events", sf_dir).where(
-        F.col("value").isNotNull()
-    )
-    base = ev.select(
-        F.col("event_type"), F.col("value").cast("double").alias("v")
-    )
-    return kruskal_wallis_by_group(base, "v", "event_type")
-
-
-@register(
     "hill_tail_index_by_type",
     """
     WITH base AS (
@@ -2698,299 +886,6 @@ def q_hill_tail_index_by_type(spark, sf_dir):
 
     ev = load_table(spark, "events", sf_dir)
     return hill_tail_index(ev, "value", "event_type", "event_id", k=50)
-
-
-@register(
-    "did_click_value",
-    """
-    WITH base AS (
-        SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS it,
-               CASE WHEN CAST(ts AS DATE) >= DATE '2024-01-16'
-                    THEN 1 ELSE 0 END AS po,
-               CAST(ROUND(value * 100, 0) AS BIGINT) AS cy
-        FROM events
-        WHERE event_type IN ('click', 'view')
-          AND value IS NOT NULL AND ts IS NOT NULL
-    ),
-    agg AS (
-        SELECT
-            CAST(SUM(CASE WHEN it = 1 AND po = 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_treat_pre,
-            CAST(SUM(CASE WHEN it = 1 AND po = 1 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_treat_post,
-            CAST(SUM(CASE WHEN it = 0 AND po = 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_ctrl_pre,
-            CAST(SUM(CASE WHEN it = 0 AND po = 1 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS n_ctrl_post,
-            CAST(SUM(CASE WHEN it = 1 AND po = 0 THEN cy END)
-                 AS BIGINT) AS s_tp,
-            CAST(SUM(CASE WHEN it = 1 AND po = 1 THEN cy END)
-                 AS BIGINT) AS s_tq,
-            CAST(SUM(CASE WHEN it = 0 AND po = 0 THEN cy END)
-                 AS BIGINT) AS s_cp,
-            CAST(SUM(CASE WHEN it = 0 AND po = 1 THEN cy END)
-                 AS BIGINT) AS s_cq
-        FROM base
-    )
-    SELECT n_treat_pre, n_treat_post, n_ctrl_pre, n_ctrl_post,
-           ROUND(CAST(s_tp AS DOUBLE) / 100.0
-                 / CAST(n_treat_pre AS DOUBLE), 6) AS mean_treat_pre,
-           ROUND(CAST(s_tq AS DOUBLE) / 100.0
-                 / CAST(n_treat_post AS DOUBLE), 6) AS mean_treat_post,
-           ROUND(CAST(s_cp AS DOUBLE) / 100.0
-                 / CAST(n_ctrl_pre AS DOUBLE), 6) AS mean_ctrl_pre,
-           ROUND(CAST(s_cq AS DOUBLE) / 100.0
-                 / CAST(n_ctrl_post AS DOUBLE), 6) AS mean_ctrl_post,
-           ROUND((CAST(s_tq AS DOUBLE) / 100.0
-                  / CAST(n_treat_post AS DOUBLE)
-                  - CAST(s_tp AS DOUBLE) / 100.0
-                    / CAST(n_treat_pre AS DOUBLE))
-                 - (CAST(s_cq AS DOUBLE) / 100.0
-                    / CAST(n_ctrl_post AS DOUBLE)
-                    - CAST(s_cp AS DOUBLE) / 100.0
-                      / CAST(n_ctrl_pre AS DOUBLE)), 6) AS did
-    FROM agg
-    """,
-)
-def q_did_click_value(spark, sf_dir):
-    """Difference-in-differences on event value, click (treated) vs
-    view (control), split at 2024-01-16 (`operators/trend.py
-    diff_in_diff`): the parallel-trends causal rung next to CUPED, IPW
-    and CMH. Centi-quantized cell sums make all four means exact-
-    integer ratios; one map-side-combined aggregate."""
-    from ningaloo_turtle_etl_spark.operators.trend import diff_in_diff
-
-    ev = load_table(spark, "events", sf_dir).where(
-        F.col("event_type").isin("click", "view")
-        & F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-    )
-    base = ev.select(
-        (F.col("event_type") == "click").alias("it"),
-        (F.to_date("ts") >= F.lit("2024-01-16").cast("date")).alias("po"),
-        F.col("value"),
-    )
-    return diff_in_diff(base, "it", "po", "value")
-
-
-@register(
-    "logrank_signup_conversion",
-    """
-    WITH starts AS (
-        SELECT user_id AS k, MIN(CAST(ts AS DATE)) AS d0
-        FROM events WHERE event_type = 'view' GROUP BY 1
-    ),
-    sg AS (
-        SELECT DISTINCT user_id AS k FROM events
-        WHERE event_type = 'signup'
-    ),
-    ends AS (
-        SELECT e.user_id AS k, MIN(CAST(e.ts AS DATE)) AS de
-        FROM events e JOIN starts s ON e.user_id = s.k
-        WHERE e.event_type = 'purchase' AND CAST(e.ts AS DATE) > s.d0
-        GROUP BY 1
-    ),
-    h AS (SELECT MAX(CAST(ts AS DATE)) AS hd FROM events),
-    dur AS (
-        SELECT s.k,
-               CASE WHEN sg.k IS NOT NULL THEN 1 ELSE 0 END AS g,
-               CASE WHEN de IS NOT NULL THEN date_diff('day', d0, de)
-                    ELSE date_diff('day', d0, hd) END AS t,
-               de IS NOT NULL AS ev
-        FROM starts s LEFT JOIN sg ON s.k = sg.k
-        LEFT JOIN ends e ON s.k = e.k, h
-    ),
-    gt AS (
-        SELECT g, CAST(t AS BIGINT) AS t,
-               CAST(SUM(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT) AS d,
-               CAST(COUNT(*) AS BIGINT) AS rem
-        FROM dur GROUP BY 1, 2
-    ),
-    ng AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n0 FROM dur GROUP BY 1),
-    evt AS (
-        SELECT t FROM (SELECT t, SUM(d) AS dt FROM gt GROUP BY t)
-        WHERE dt > 0
-    ),
-    axis AS (
-        SELECT g, t, CAST(SUM(d) AS BIGINT) AS d,
-               CAST(SUM(rem) AS BIGINT) AS rem
-        FROM (
-            SELECT g, t, d, rem FROM gt
-            UNION ALL
-            SELECT ng.g, evt.t, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-            FROM ng, evt
-        ) GROUP BY 1, 2
-    ),
-    risk AS (
-        SELECT a.g, a.t, a.d,
-               CAST(ng.n0 - COALESCE(SUM(a.rem) OVER (
-                   PARTITION BY a.g ORDER BY a.t
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS BIGINT) AS n_risk
-        FROM axis a JOIN ng USING (g)
-    ),
-    piv AS (
-        SELECT r.t,
-               CAST(SUM(CASE WHEN g = 1 THEN d END) AS BIGINT) AS d1,
-               CAST(SUM(CASE WHEN g = 1 THEN n_risk END) AS BIGINT)
-                   AS n1,
-               CAST(SUM(d) AS BIGINT) AS d,
-               CAST(SUM(n_risk) AS BIGINT) AS n
-        FROM risk r JOIN evt USING (t) GROUP BY r.t
-    ),
-    terms AS (
-        SELECT d1,
-               CAST(ROUND(CAST(d AS DOUBLE) * CAST(n1 AS DOUBLE)
-                          / CAST(n AS DOUBLE) * 1000000.0, 0)
-                    AS HUGEINT) AS e1u,
-               CASE WHEN n > 1 THEN
-                   CAST(ROUND(CAST(d AS DOUBLE)
-                              * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-                              * (1.0 - CAST(n1 AS DOUBLE)
-                                       / CAST(n AS DOUBLE))
-                              * ((CAST(n AS DOUBLE) - CAST(d AS DOUBLE))
-                                 / (CAST(n AS DOUBLE) - 1.0))
-                              * 1000000.0, 0) AS HUGEINT)
-                   ELSE 0 END AS vu
-        FROM piv
-    ),
-    tot AS (
-        SELECT CAST(SUM(d1) AS BIGINT) AS o1, SUM(e1u) AS e1s,
-               SUM(vu) AS vs
-        FROM terms
-    )
-    SELECT (SELECT n0 FROM ng WHERE g = 0) AS n_ctrl,
-           (SELECT n0 FROM ng WHERE g = 1) AS n_treat,
-           o1,
-           ROUND(CAST(e1s AS DOUBLE) / 1000000.0, 6) AS e1,
-           ROUND(CAST(vs AS DOUBLE) / 1000000.0, 6) AS var1,
-           ROUND(CASE WHEN CAST(vs AS DOUBLE) / 1000000.0 > 0
-                 THEN (CAST(o1 AS DOUBLE)
-                       - CAST(e1s AS DOUBLE) / 1000000.0)
-                      / sqrt(CAST(vs AS DOUBLE) / 1000000.0) END, 6)
-               AS z,
-           ROUND(CASE WHEN CAST(vs AS DOUBLE) / 1000000.0 > 0
-                 THEN ((CAST(o1 AS DOUBLE)
-                        - CAST(e1s AS DOUBLE) / 1000000.0)
-                       / sqrt(CAST(vs AS DOUBLE) / 1000000.0))
-                      * ((CAST(o1 AS DOUBLE)
-                          - CAST(e1s AS DOUBLE) / 1000000.0)
-                         / sqrt(CAST(vs AS DOUBLE) / 1000000.0)) END, 6)
-               AS chi2
-    FROM tot
-    """,
-)
-def q_logrank_signup_conversion(spark, sf_dir):
-    """Log-rank test: do users who ever signed up convert (first view →
-    first purchase) on a different survival curve than those who never
-    did? (`operators/trend.py logrank_two_group`). Completes the
-    survival stack — km_conversion_curve / nelson_aalen_daily_conversion
-    draw the curves, cox_ph_click_hazard fits a model, this tests the
-    two-sample difference. Micro-quantized expected/variance terms
-    summed exactly on the event-time grain."""
-    from ningaloo_turtle_etl_spark.operators.trend import logrank_two_group
-
-    ev = load_table(spark, "events", sf_dir)
-    d = F.to_date("ts")
-    starts = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min(d).alias("d0"))
-    )
-    sg = (
-        ev.where(F.col("event_type") == "signup")
-        .select("user_id")
-        .distinct()
-        .withColumn("_sg", F.lit(1))
-    )
-    ends = (
-        ev.join(starts, on="user_id")
-        .where((F.col("event_type") == "purchase") & (d > F.col("d0")))
-        .groupBy("user_id")
-        .agg(F.min(d).alias("de"))
-    )
-    h = ev.agg(F.max(d).alias("hd"))
-    dur = (
-        starts.join(sg, on="user_id", how="left")
-        .join(ends, on="user_id", how="left")
-        .crossJoin(F.broadcast(h))
-        .select(
-            F.when(F.col("_sg").isNotNull(), 1).otherwise(0).alias("g"),
-            F.when(
-                F.col("de").isNotNull(),
-                F.datediff(F.col("de"), F.col("d0")),
-            )
-            .otherwise(F.datediff(F.col("hd"), F.col("d0")))
-            .cast("long")
-            .alias("t"),
-            F.col("de").isNotNull().alias("ev"),
-        )
-    )
-    return logrank_two_group(dur, "g", "t", "ev")
-
-
-@register(
-    "anova_value_by_type",
-    """
-    WITH base AS (
-        SELECT event_type AS g, CAST(ROUND(value * 100, 0) AS HUGEINT)
-                   AS cy
-        FROM events WHERE value IS NOT NULL
-    ),
-    per_g AS (
-        SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g,
-               SUM(cy) AS s, SUM(cy * cy) AS ss
-        FROM base GROUP BY g
-    ),
-    q AS (
-        SELECT g, n_g, s,
-               CAST(ROUND(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                          / CAST(n_g AS DOUBLE), 0) AS HUGEINT) AS qb,
-               CAST(ROUND(CAST(ss AS DOUBLE)
-                          - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                            / CAST(n_g AS DOUBLE), 0) AS HUGEINT) AS qw
-        FROM per_g
-    ),
-    tot AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS k,
-               CAST(SUM(n_g) AS BIGINT) AS n,
-               SUM(s) AS s_tot, SUM(qb) AS qbs, SUM(qw) AS qws
-        FROM q
-    ),
-    scal AS (
-        SELECT CAST(k - 1 AS BIGINT) AS dof_between,
-               CAST(n - k AS BIGINT) AS dof_within,
-               ROUND(CASE WHEN k > 1 AND n > k
-                              AND CAST(qws AS DOUBLE) > 0
-                     THEN ((CAST(qbs AS DOUBLE)
-                            - CAST(s_tot AS DOUBLE)
-                              * CAST(s_tot AS DOUBLE)
-                              / CAST(n AS DOUBLE))
-                           / (CAST(k AS DOUBLE) - 1.0))
-                          / (CAST(qws AS DOUBLE)
-                             / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-                     END, 6) AS f_stat
-        FROM tot
-    )
-    SELECT g AS event_type, n_g AS n,
-           ROUND(CAST(s AS DOUBLE) / 100.0 / CAST(n_g AS DOUBLE), 6)
-               AS mean,
-           dof_between, dof_within, f_stat
-    FROM q, scal ORDER BY event_type
-    """,
-)
-def q_anova_value_by_type(spark, sf_dir):
-    """One-way ANOVA F of event value across the five event types
-    (`operators/trend.py anova_oneway`): the parametric twin of
-    kruskal_wallis_value_by_type — same k-group question on means.
-    Centi-quantized values make every per-group sum exact; between/
-    within terms are unit-grid quantized before the k-group sum."""
-    from ningaloo_turtle_etl_spark.operators.trend import anova_oneway
-
-    ev = load_table(spark, "events", sf_dir).where(
-        F.col("value").isNotNull()
-    )
-    return anova_oneway(ev, "value", "event_type")
 
 
 @register(
@@ -3097,399 +992,3 @@ def q_market_concentration_brands(spark, sf_dir):
             6,
         ).alias("cr4"),
     )
-
-
-@register(
-    "relative_risk_daily_signup_purchase",
-    """
-    WITH units AS (
-        SELECT user_id, CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-               MAX(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-                   AS e,
-               MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS y
-        FROM events WHERE ts IS NOT NULL
-        GROUP BY 1, 2
-    ),
-    agg AS (
-        SELECT CAST(SUM(e * y) AS BIGINT) AS a,
-               CAST(SUM(e * (1 - y)) AS BIGINT) AS b,
-               CAST(SUM((1 - e) * y) AS BIGINT) AS c,
-               CAST(SUM((1 - e) * (1 - y)) AS BIGINT) AS d
-        FROM units
-    )
-    SELECT a, b, c, d,
-           ROUND(CASE WHEN a > 0 AND c > 0
-                 THEN (CAST(a AS DOUBLE) / (CAST(a AS DOUBLE)
-                                            + CAST(b AS DOUBLE)))
-                      / (CAST(c AS DOUBLE) / (CAST(c AS DOUBLE)
-                                              + CAST(d AS DOUBLE)))
-                 END, 6) AS rr,
-           ROUND(CASE WHEN a > 0 AND c > 0
-                 THEN exp(ln((CAST(a AS DOUBLE) / (CAST(a AS DOUBLE)
-                                                   + CAST(b AS DOUBLE)))
-                             / (CAST(c AS DOUBLE) / (CAST(c AS DOUBLE)
-                                                     + CAST(d AS DOUBLE))))
-                          - 1.96 * sqrt(1.0 / CAST(a AS DOUBLE)
-                                        - 1.0 / (CAST(a AS DOUBLE)
-                                                 + CAST(b AS DOUBLE))
-                                        + 1.0 / CAST(c AS DOUBLE)
-                                        - 1.0 / (CAST(c AS DOUBLE)
-                                                 + CAST(d AS DOUBLE))))
-                 END, 6) AS rr_lo,
-           ROUND(CASE WHEN a > 0 AND c > 0
-                 THEN exp(ln((CAST(a AS DOUBLE) / (CAST(a AS DOUBLE)
-                                                   + CAST(b AS DOUBLE)))
-                             / (CAST(c AS DOUBLE) / (CAST(c AS DOUBLE)
-                                                     + CAST(d AS DOUBLE))))
-                          + 1.96 * sqrt(1.0 / CAST(a AS DOUBLE)
-                                        - 1.0 / (CAST(a AS DOUBLE)
-                                                 + CAST(b AS DOUBLE))
-                                        + 1.0 / CAST(c AS DOUBLE)
-                                        - 1.0 / (CAST(c AS DOUBLE)
-                                                 + CAST(d AS DOUBLE))))
-                 END, 6) AS rr_hi
-    FROM agg
-    """,
-)
-def q_relative_risk_daily_signup_purchase(spark, sf_dir):
-    """Relative risk with a 95% Katz log-interval on (user, day) units:
-    is a purchase more likely on a day the user also signed up?
-    (`operators/trend.py` closed-form family — the epidemiology rung
-    next to the CMH odds ratio and two_prop z.) One (user, day)-grain
-    aggregate collapses straight to the exact-bigint 2×2; ln/exp run
-    on identical doubles in both engines."""
-    ev = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    units = ev.groupBy(
-        "user_id",
-        F.floor(F.to_unix_timestamp("ts") / 86400).cast("long").alias(
-            "day"
-        ),
-    ).agg(
-        F.max(
-            (F.col("event_type") == "signup").cast("int")
-        ).alias("e"),
-        F.max(
-            (F.col("event_type") == "purchase").cast("int")
-        ).alias("y"),
-    )
-    agg = units.agg(
-        F.sum(F.col("e") * F.col("y")).cast("long").alias("a"),
-        F.sum(F.col("e") * (F.lit(1) - F.col("y"))).cast("long").alias("b"),
-        F.sum((F.lit(1) - F.col("e")) * F.col("y")).cast("long").alias("c"),
-        F.sum(
-            (F.lit(1) - F.col("e")) * (F.lit(1) - F.col("y"))
-        ).cast("long").alias("d"),
-    )
-    ad = F.col("a").cast("double")
-    bd = F.col("b").cast("double")
-    cd = F.col("c").cast("double")
-    dd = F.col("d").cast("double")
-    rr = (ad / (ad + bd)) / (cd / (cd + dd))
-    se = F.sqrt(
-        F.lit(1.0) / ad
-        - F.lit(1.0) / (ad + bd)
-        + F.lit(1.0) / cd
-        - F.lit(1.0) / (cd + dd)
-    )
-    ok = (F.col("a") > 0) & (F.col("c") > 0)
-    return agg.select(
-        "a",
-        "b",
-        "c",
-        "d",
-        F.round(F.when(ok, rr), 6).alias("rr"),
-        F.round(
-            F.when(ok, F.exp(F.log(rr) - F.lit(1.96) * se)), 6
-        ).alias("rr_lo"),
-        F.round(
-            F.when(ok, F.exp(F.log(rr) + F.lit(1.96) * se)), 6
-        ).alias("rr_hi"),
-    )
-
-
-@register(
-    "conformal_interval_coverage",
-    """
-    WITH base AS (
-        SELECT event_type AS g, event_id AS i,
-               CAST(round(CAST(value AS DOUBLE) * 1e6) AS BIGINT) AS vm,
-               ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 1))::BIGINT
-                   < 8 AS cal
-        FROM events WHERE value IS NOT NULL
-    ),
-    cs AS (
-        SELECT g, CAST(COUNT(*) AS BIGINT) AS n_cal,
-               CAST(SUM(vm) AS BIGINT) AS s
-        FROM base WHERE cal GROUP BY g
-    ),
-    mu AS (SELECT g, n_cal, CAST(s AS DOUBLE) / n_cal AS mu FROM cs),
-    ranked AS (
-        SELECT g, n_cal, r,
-               ROW_NUMBER() OVER (PARTITION BY g ORDER BY r, i) AS rn
-        FROM (SELECT b.g, b.i, m.n_cal,
-                     abs(CAST(b.vm AS DOUBLE) - m.mu) AS r
-              FROM base b JOIN mu m ON b.g = m.g WHERE b.cal)
-    ),
-    qh AS (
-        SELECT g, r AS qhat FROM ranked
-        WHERE rn = least(CAST(ceil((n_cal + 1) * CAST(0.9 AS DOUBLE))
-                               AS BIGINT), n_cal)
-    ),
-    test AS (
-        SELECT b.g, m.n_cal, q.qhat,
-               CAST(COUNT(*) AS BIGINT) AS n_test,
-               CAST(SUM(CASE WHEN abs(CAST(b.vm AS DOUBLE) - m.mu)
-                                  <= q.qhat
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_cov
-        FROM base b JOIN mu m ON b.g = m.g JOIN qh q ON b.g = q.g
-        WHERE NOT b.cal GROUP BY b.g, m.n_cal, q.qhat
-    )
-    SELECT g AS event_type, n_cal, n_test,
-           ROUND(qhat / 1e6, 6) AS q_hat,
-           ROUND(CAST(n_cov AS DOUBLE) / n_test, 6) AS coverage
-    FROM test ORDER BY event_type
-    """,
-)
-def q_conformal_interval_coverage(spark, sf_dir):
-    """Split-conformal prediction-interval calibration and held-out
-    coverage per event type (`operators/trend.py
-    split_conformal_coverage`, α = 0.1): the distribution-free
-    serving-quality audit for point predictors — md5-hash split,
-    per-group calibration-mean model, ⌈(n+1)(1−α)⌉-th smallest
-    absolute residual as q̂, coverage on the test half. Finite-sample
-    validity (coverage ≥ 1−α in expectation) is the contract the
-    test pins."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        split_conformal_coverage,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return split_conformal_coverage(
-        ev, "event_type", "value", "event_id", alpha=0.1
-    )
-
-
-@register(
-    "group_sequential_obf_daily",
-    """
-    WITH vm AS (
-        SELECT CAST(ts AS DATE) AS day, event_type AS arm,
-               CAST(round(CAST(value AS DOUBLE) * 1e6) AS BIGINT) AS vm
-        FROM events
-        WHERE value IS NOT NULL AND ts IS NOT NULL
-          AND event_type IN ('click', 'view')
-    ),
-    daily AS (
-        SELECT day, arm, CAST(COUNT(*) AS BIGINT) AS n,
-               SUM(vm) AS s,
-               SUM(vm * vm) AS q
-        FROM vm GROUP BY day, arm
-    ),
-    cum AS (
-        SELECT day, arm,
-               CAST(SUM(n) OVER w AS BIGINT) AS cn,
-               SUM(s) OVER w AS cs,
-               SUM(q) OVER w AS cq
-        FROM daily
-        WINDOW w AS (PARTITION BY arm ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
-    t AS (SELECT day, cn AS nt, cs AS st, cq AS qt
-          FROM cum WHERE arm = 'click'),
-    c AS (SELECT day, cn AS nc, cs AS sc, cq AS qc
-          FROM cum WHERE arm = 'view'),
-    looks AS (
-        SELECT t.day, nt, st, qt, nc, sc, qc,
-               ROW_NUMBER() OVER (ORDER BY t.day) AS look,
-               COUNT(*) OVER () AS n_looks
-        FROM t JOIN c ON t.day = c.day WHERE nt > 1 AND nc > 1
-    )
-    SELECT CAST(look AS BIGINT) AS look, day,
-           nt AS n_treat, nc AS n_ctrl,
-           ROUND((CAST(st AS DOUBLE) / nt - CAST(sc AS DOUBLE) / nc)
-                 / sqrt((CAST(qt AS DOUBLE) / nt
-                         - (CAST(st AS DOUBLE) / nt)
-                           * (CAST(st AS DOUBLE) / nt)) / (nt - 1)
-                        + (CAST(qc AS DOUBLE) / nc
-                           - (CAST(sc AS DOUBLE) / nc)
-                             * (CAST(sc AS DOUBLE) / nc)) / (nc - 1)),
-                 6) AS z,
-           ROUND(CAST(2.24 AS DOUBLE)
-                 / sqrt(CAST(look AS DOUBLE) / n_looks), 6) AS boundary,
-           (abs((CAST(st AS DOUBLE) / nt - CAST(sc AS DOUBLE) / nc)
-                / sqrt((CAST(qt AS DOUBLE) / nt
-                        - (CAST(st AS DOUBLE) / nt)
-                          * (CAST(st AS DOUBLE) / nt)) / (nt - 1)
-                       + (CAST(qc AS DOUBLE) / nc
-                          - (CAST(sc AS DOUBLE) / nc)
-                            * (CAST(sc AS DOUBLE) / nc)) / (nc - 1)))
-            > CAST(2.24 AS DOUBLE)
-              / sqrt(CAST(look AS DOUBLE) / n_looks)) AS crossed,
-           ROUND(CAST(look AS DOUBLE) / n_looks, 6) AS info_frac
-    FROM looks ORDER BY look
-    """,
-)
-def q_group_sequential_obf_daily(spark, sf_dir):
-    """O'Brien–Fleming group-sequential monitor of click-vs-view value
-    with one scheduled look per day (`operators/trend.py
-    group_sequential_obf`, Lan–DeMets b(t) = 2.24/√t): the
-    pre-planned-looks sibling of the always-valid mSPRT monitor —
-    cumulative Welch z per look against the shrinking boundary.
-    Exact-integer daily sums; z and boundary are the same double
-    association in both engines."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        group_sequential_obf,
-    )
-
-    ev = load_table(spark, "events", sf_dir).where(F.col("ts").isNotNull())
-    return group_sequential_obf(
-        ev, "event_type", "value", F.to_date("ts"), "click", "view"
-    )
-
-
-@register(
-    "eb_shrunk_purchase_rate",
-    """
-    WITH per_g AS (
-        SELECT user_id % 64 AS g, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CASE WHEN event_type = 'purchase'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS x
-        FROM events GROUP BY 1
-    ),
-    rates AS (
-        SELECT g, n, x,
-               CAST(round(CAST(x AS DOUBLE) / n * 1e6) AS BIGINT) AS rm
-        FROM per_g
-    ),
-    prior AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS k,
-               CAST(SUM(rm) AS BIGINT) AS srm,
-               SUM(rm * rm) AS qrm
-        FROM rates
-    ),
-    mv AS (
-        SELECT k,
-               CAST(srm AS DOUBLE) / k / 1e6 AS m,
-               (CAST(qrm AS DOUBLE) / k
-                - (CAST(srm AS DOUBLE) / k)
-                  * (CAST(srm AS DOUBLE) / k)) / 1e12 AS v
-        FROM prior
-    ),
-    pr AS (
-        SELECT m * s0 AS a0, (CAST(1 AS DOUBLE) - m) * s0 AS b0
-        FROM (SELECT m, v,
-                     CASE WHEN k > 1 AND v > 0
-                               AND m * (CAST(1 AS DOUBLE) - m) / v > 1
-                          THEN m * (CAST(1 AS DOUBLE) - m) / v
-                               - CAST(1 AS DOUBLE)
-                          ELSE CAST(0 AS DOUBLE) END AS s0
-              FROM mv)
-    )
-    SELECT g AS user_bucket, n AS n_trials, x AS n_success,
-           ROUND(rm / 1e6, 6) AS rate,
-           ROUND(a0, 6) AS alpha0,
-           ROUND(b0, 6) AS beta0,
-           ROUND((CAST(x AS DOUBLE) + a0)
-                 / (CAST(n AS DOUBLE) + a0 + b0), 6) AS shrunk_rate
-    FROM rates, pr ORDER BY user_bucket
-    """,
-)
-def q_eb_shrunk_purchase_rate(spark, sf_dir):
-    """Empirical-Bayes purchase-rate shrinkage across 64 user buckets
-    (`operators/trend.py eb_shrunk_rates`): beta-binomial
-    method-of-moments prior learned from the buckets themselves, then
-    (x + α₀)/(n + α₀ + β₀) — the James–Stein league-table fix that
-    keeps a 2-of-2 bucket from outranking a 480-of-500 one. Exact
-    integer-micro moment sums; one fixed double association."""
-    from ningaloo_turtle_etl_spark.operators.trend import eb_shrunk_rates
-
-    ev = load_table(spark, "events", sf_dir).withColumn(
-        "user_bucket", F.col("user_id") % 64
-    )
-    return eb_shrunk_rates(
-        ev, "user_bucket", F.col("event_type") == "purchase"
-    )
-
-
-def _perm_test_oracle_sql(n_perm: int = 48) -> str:
-    """permutation_test_purchase_view: the n_perm seeded relabelings
-    unroll into one wide aggregate (2·n_perm+4 cells) exactly like the
-    Spark single-scan fold; every per-permutation delta re-derives from
-    the same exact-integer sums with the same double association."""
-
-    def delta(nb: str, sb: str) -> str:
-        return (
-            f"abs(CAST({sb} AS DOUBLE) / {nb} "
-            f"- CAST(s_all - {sb} AS DOUBLE) / (n_all - {nb}))"
-        )
-
-    cols = []
-    for b in range(n_perm):
-        bit = f"(h >> {b}) & 1"
-        cols.append(
-            f"CAST(SUM(CASE WHEN {bit} = 1 THEN 1 ELSE 0 END) "
-            f"AS BIGINT) AS pn{b}"
-        )
-        cols.append(
-            f"CAST(SUM(CASE WHEN {bit} = 1 THEN vm ELSE 0 END) "
-            f"AS BIGINT) AS ps{b}"
-        )
-    extreme = " + ".join(
-        f"(CASE WHEN pn{b} > 0 AND n_all - pn{b} > 0 "
-        f"AND {delta(f'pn{b}', f'ps{b}')} >= {delta('n_b', 's_b')} "
-        f"THEN 1 ELSE 0 END)"
-        for b in range(n_perm)
-    )
-    return f"""
-    WITH base AS (
-        SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS arm,
-               CAST(round(CAST(value AS DOUBLE) * 1e6) AS BIGINT) AS vm,
-               ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
-                   AS h
-        FROM events
-        WHERE value IS NOT NULL AND event_type IN ('purchase', 'view')
-    ),
-    t AS (
-        SELECT CAST(SUM(arm) AS BIGINT) AS n_b,
-               CAST(COUNT(*) AS BIGINT) AS n_all,
-               CAST(SUM(CASE WHEN arm = 1 THEN vm ELSE 0 END)
-                    AS BIGINT) AS s_b,
-               CAST(SUM(vm) AS BIGINT) AS s_all,
-               {", ".join(cols)}
-        FROM base
-    )
-    SELECT CAST(n_all - n_b AS BIGINT) AS n_a, n_b,
-           ROUND({delta('n_b', 's_b')} / 1e6, 6) AS delta_obs,
-           CAST({extreme} AS BIGINT) AS n_extreme,
-           CAST({n_perm} AS BIGINT) AS n_perm,
-           ROUND((CAST({extreme} AS DOUBLE) + CAST(1 AS DOUBLE))
-                 / CAST({n_perm + 1} AS DOUBLE), 6) AS p_value
-    FROM t
-    """
-
-
-@register("permutation_test_purchase_view", _perm_test_oracle_sql(48))
-def q_permutation_test_purchase_view(spark, sf_dir):
-    """Seeded randomization test of the purchase-vs-view mean value
-    difference (`operators/trend.py seeded_permutation_test`, 48
-    md5-bit relabelings): the assumption-free sibling of
-    welch_value_ttest / mwu_click_vs_view — p from the relabeled
-    |Δmean| distribution, all 48 permutations folded into ONE
-    map-side-combined aggregate (the scan never repeats, the grid
-    lives in the aggregate buffer)."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        seeded_permutation_test,
-    )
-
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .where(
-            F.col("value").isNotNull()
-            & F.col("event_type").isin(["purchase", "view"])
-        )
-        .withColumn(
-            "_arm", (F.col("event_type") == "purchase").cast("int")
-        )
-    )
-    return seeded_permutation_test(ev, "value", "event_id", n_perm=48)

@@ -254,9 +254,7 @@ PRIORITY: list[str] = [
     "daily_trend_by_type",
     "value_change_points",
     "source_quantile_norm",
-    "pmi_collocations",
     "mad_outlier_stats",
-    "welch_value_ttest",
     "daily_value_acf",
     "hopping_window_tally",
     "countmin_token_counts",
@@ -287,19 +285,12 @@ PRIORITY: list[str] = [
     "minhash_incremental_near_dups",
     "cross_source_duplication",
     "value_ks_by_type",
-    "value_bootstrap_ci",
-    "cuped_lift_click_vs_view",
     "eventually_follows_matrix",
-    "km_conversion_curve",
     "source_gini",
-    "chi2_lang_source",
-    "did_click_vs_view",
     "rolling_wau_hll",
-    "mwu_click_vs_view",
     "theil_sen_daily_counts",
     "seasonal_profile_events",
     "boilerplate_removal",
-    "mi_lang_source",
     "classifier_calibration_curve",
     "audience_overlap_types",
     "seasonal_anomalies",
@@ -307,19 +298,13 @@ PRIORITY: list[str] = [
     "contrastive_negative_pairs",
     "spatial_hotspot_clusters",
     "event_trigram_sequences",
-    "ccf_click_vs_view",
-    "two_prop_click_vs_view",
-    "srm_event_types",
     "semantic_cell_silhouette",
-    "welch_pairs_bh_adjusted",
     "ewma_daily_volume_chart",
     "leakage_safe_split",
     "source_quality_scorecard",
     "embedding_drift_by_label",
     "domain_reweight_mix",
     "rolling_value_p95",
-    "wilson_rate_by_type",
-    "qte_click_vs_view",
     "classifier_auc",
     "score_decile_lift",
     "psi_value_drift",
@@ -377,14 +362,8 @@ PRIORITY: list[str] = [
     "first_event_per_user",
     # r07 perceptual-hash image near-dups (aHash + banded hamming LSH), full oracle
     "image_ahash_near_dups",
-    # r07 always-valid sequential inference (mSPRT), full oracle
-    "msprt_always_valid_daily",
-    # r07 experiment-planning power/MDE grid, full oracle
-    "power_mde_by_type",
     # r07 isotonic (PAV) classifier calibration, full oracle (minimax identity)
     "classifier_isotonic_calibration",
-    # r07 two-sample always-valid mSPRT (treatment vs control), full oracle
-    "msprt_click_vs_view",
     # r07 split-conformal coverage report, full oracle
     "conformal_coverage_by_source",
     # r07 Johnson-Lindenstrauss projection distortion audit, full oracle
@@ -399,12 +378,6 @@ PRIORITY: list[str] = [
     "adamic_adar_part_links",
     # r09 Mann-Kendall monotone-trend test (exact-integer S + ties)
     "mann_kendall_daily_counts",
-    # r09 Nelson-Aalen cumulative hazard (integer-micro increments)
-    "nelson_aalen_daily_conversion",
-    # r09 stratified/IPW observational ATE
-    "ipw_ate_click_vs_view",
-    # r09 Jensen-Shannon source drift (nano-quantized terms + closed tail)
-    "token_jsd_by_source",
     # r09 Good-Turing count-of-counts re-estimation (trigram grain)
     "good_turing_token_counts",
     # r09 Shannon/Simpson/HHI composition diversity per source
@@ -451,18 +424,12 @@ PRIORITY: list[str] = [
     # unrolled nano-exact trajectory oracle)
     "pca_power_component",
     # (pca_power_components promoted into the r12 driver window above)
-    # r11: two-component 1-D Gaussian mixture by EM (soft-assignment
-    # density twin of kmeans; unrolled moment-init + 3-round oracle)
-    "gmm_em_value_components",
     # r11: greedy k-center coreset (farthest-point traversal, the
     # diversity selector; unrolled exact-integer-distance oracle)
     "kcenter_coreset_select",
     # r11: rank-1 ALS (closed-form alternating solve, zero driver state;
     # the optimizer twin of mf_gd_factors)
     "als_rank1_factors",
-    # r11: Cox proportional hazards (Breslow ties, Newton on the
-    # partial likelihood; the regression rung of the survival stack)
-    "cox_ph_click_hazard",
     # (fellegi_sunter_part_weights promoted into the r12 driver window
     # above)
     # r11: real WAV codec tier — synth→RIFF/PCM16 decode→integer-exact
@@ -495,19 +462,12 @@ PRIORITY: list[str] = [
     # r11: rendezvous (HRW) shard placement audit with the n->n+1
     # minimal-disruption expansion plan
     "rendezvous_shard_plan",
-    # r10 Holt linear-trend smoothing (sequential in-group fold; oracle
-    # is a recursive CTE — DuckDB list_reduce struct-aliasing bug
-    # documented and avoided)
-    "holt_linear_daily",
     # r10 exact Shapley-value attribution (coalition-grain integer
     # arithmetic, n!-scaled weights, one final division)
     "shapley_attribution_channels",
     # r10 second batch: RFM lifecycle segmentation (rank-quintile NTILE
-    # on the customer grain, segment-grain output) and the CMH pooled
-    # odds ratio (binary-outcome observational rung, micro-quantized
-    # stratum terms)
+    # on the customer grain, segment-grain output)
     "rfm_customer_segments",
-    "cmh_click_vs_view",
     # r10 binary quantization tier: sign-bit codes + Hamming top-k
     # (exact-integer distances; 32-bit words shared with the oracle)
     "ann_hamming_topk",
@@ -523,9 +483,6 @@ PRIORITY: list[str] = [
     # r10 personalized PageRank (random walk with restart at a seed
     # set; proximity recommendation vs global centrality)
     "ppr_copurchase_brand",
-    # r10 Holt-Winters additive triple smoothing (level+trend+weekly
-    # profile; 9-state-column recursive-CTE oracle)
-    "holt_winters_daily",
     # r10 unigram-LM (SentencePiece) Viterbi tokenizer stats (exact
     # integer-nano DP as an in-document fold; fit+DP recursive oracle)
     "unigram_tokenizer_stats",
@@ -535,33 +492,14 @@ PRIORITY: list[str] = [
     # r10 pinball-subgradient quantile regression (the conditional-
     # quantile rung of the trainer stack; unrolled trajectory oracle)
     "quantile_gd_weights",
-    # r11 second batch: Cochran–Armitage ordinal trend test (the
-    # dose-response rung between two-prop and chi2; score-weighted
-    # exact-bigint sums, zero group-grain intermediates)
-    "cochran_armitage_priority_fail",
-    # r11 second batch: Kruskal–Wallis k-group rank test (doubled
-    # average ranks on the distinct-value grain; unit-grid quantized
-    # per-group H terms)
-    "kruskal_wallis_value_by_type",
     # r11 second batch: Hill tail-index per type (the heavy-tail law
     # diagnostic behind salting/AQE-skew planning; micro-quantized
     # log-ratio sums over per-group top-k order statistics)
     "hill_tail_index_by_type",
-    # r11 second batch: difference-in-differences (the parallel-trends
-    # causal rung next to CUPED/IPW/CMH; centi-quantized 2x2 cells in
-    # one map-side-combined aggregate)
-    "did_click_value",
-    # r11 second batch: two-group log-rank test (the hypothesis-test
-    # rung of the survival stack over KM/NA/Cox; micro-quantized
-    # hypergeometric terms on the event-time grain)
-    "logrank_signup_conversion",
     # r11 second batch: Newman modularity of a given partition over
     # the co-purchase graph (scores what LPA discovers; community-
     # grain exact counts, micro-quantized Q terms)
     "modularity_copurchase_brands",
-    # r11 second batch: one-way ANOVA F (parametric twin of the
-    # Kruskal-Wallis row; centi-quantized sums, unit-grid terms)
-    "anova_value_by_type",
     # r11 second batch: zone-map pruning audit across simulated file
     # layouts (the WHY behind zorder/hilbert/compaction: min/max
     # skipping vs layout-predicate alignment)
@@ -576,18 +514,8 @@ PRIORITY: list[str] = [
     # r11 third batch: brand revenue concentration (HHI + CR4; the
     # market-structure companions to gini/inequality rows)
     "market_concentration_brands",
-    # r11 third batch: relative risk with the Katz log-interval on
-    # (user, day) units (the epidemiology rung next to CMH/two-prop)
-    "relative_risk_daily_signup_purchase",
     # r12: the ANN train→serve loop (r11 verdict item 3) — promoted into
     # the 50-slot driver window in r13 (see above).
-    # r12 second batch: split-conformal interval calibration + coverage
-    # (the distribution-free serving-quality audit; hash split, exact
-    # order-statistic q-hat)
-    "conformal_interval_coverage",
-    # r12 second batch: O'Brien-Fleming group-sequential daily looks
-    # (the scheduled-looks sibling of the always-valid mSPRT monitor)
-    "group_sequential_obf_daily",
     # r12 second batch: Dirichlet-smoothed query-likelihood retrieval
     # (the LM scoring family next to bm25_top10, same index and query)
     "query_likelihood_top10",
@@ -598,12 +526,6 @@ PRIORITY: list[str] = [
     # (the segmentation label where hmm_forward_first4 is the score;
     # enumerated path products, argmax exact in both engines)
     "hmm_viterbi_first4",
-    # r12 third batch: empirical-Bayes beta-binomial rate shrinkage
-    # (the James-Stein league-table fix; exact integer-micro moments)
-    "eb_shrunk_purchase_rate",
-    # r12 third batch: seeded md5-bit randomization test (48 relabelings
-    # folded into ONE map-side-combined aggregate — scan never repeats)
-    "permutation_test_purchase_view",
     # r12 third batch: 4-truss peel of the copurchase graph (cohesion
     # rung above k-core; unrolled MATERIALIZED triangle rounds)
     "ktruss_copurchase_hist",

@@ -220,8 +220,8 @@ def msprt_monitor_stream(
     (cumulative n, cumulative sum, running-max log likelihood ratio) lives
     in keyed ``applyInPandasWithState`` state and each micro-batch emits
     the arm's refreshed always-valid p-value and latched rejection flag —
-    the continuously-watching deployment of the batch operator
-    (`operators/trend.py msprt_always_valid`).
+    the continuously-watching deployment of the mixture sequential
+    probability ratio test.
 
     The statistical point that makes STREAMING the natural home: the
     mixture LR is a martingale under H0 with respect to ANY arrival

@@ -2,7 +2,7 @@
 comparison (sf0.01) for every registered query. Exit non-zero on any mismatch.
 
 Usage: python scripts/driver_sim.py [--sf /root/testdata/sf0.01] [--only name,name]
-       [--json CORRECTNESS_SUPPLEMENT.json]
+       [--json OUT.json]
 
 ``--json`` writes a driver-style artifact (per-query rows_match /
 schema_match / hash_match / spark_rows / oracle_rows / err) covering EVERY

@@ -1,6 +1,6 @@
 """Generate an sf1-scale slice (~10x sf0.1: ~6M lineitem rows) by tiling
-the driver's sf0.1 parquet with key offsets — for the SCALING.md
-empirical check that headline plans scale near-linearly 600k -> 6M
+the driver's sf0.1 parquet with key offsets — for an empirical
+check that headline plans scale near-linearly 600k -> 6M
 (the winnowing 64x CollapseProject cliff was exactly the class of
 surprise this probe exists to catch). Dimensions (region/nation) stay
 as-is; every fact/entity key is offset per copy so joins keep their

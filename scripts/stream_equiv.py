@@ -385,40 +385,6 @@ def main() -> int:
         ["window_start", "event_type", "noisy_n"],
     )
 
-    # Streaming always-valid mSPRT monitor (streaming/stateful.py): the
-    # sequential state lives in applyInPandasWithState; over a one-file feed
-    # (one micro-batch = one "look") the final emission per arm must equal
-    # the batch operator's single-look row — same closed form, same totals.
-    # Multi-batch latching semantics are pinned in
-    # tests/test_stateful_streaming.py.
-    from ningaloo_turtle_etl_spark.operators.trend import msprt_always_valid
-    from ningaloo_turtle_etl_spark.streaming.stateful import (
-        msprt_monitor_stream,
-    )
-
-    mcols = ["arm", "n_cum", "mean_cum", "log_lambda",
-             "p_always_valid", "rejected"]
-    check(
-        "streaming_msprt_monitor",
-        msprt_always_valid(
-            batch.select(
-                F.col("event_type").alias("arm"),
-                F.lit(1).alias("look"),
-                "value",
-            ),
-            ["arm"], "look", "value", mu0=45.0, sigma=50.0, tau=10.0,
-        ).select(*mcols),
-        run_stream(
-            msprt_monitor_stream(
-                stream, "event_type", "value",
-                mu0=45.0, sigma=50.0, tau=10.0,
-            ),
-            "se_msprt",
-            mode="update",
-        ),
-        mcols,
-    )
-
     # Streaming dataset content digest (operators/delta.py dataset_digest):
     # both folds are commutative monoids (bit_xor; modular decimal sum), so
     # the BATCH operator runs unchanged as a complete-mode streaming
@@ -513,48 +479,6 @@ def main() -> int:
         hill_tail_index(batch, "value", "event_type", "event_id", k=50),
         hill_tail_index(replayed, "value", "event_type", "rid", k=50),
         ["event_type", "k", "x_k1", "alpha"],
-    )
-
-    # Streaming group-sequential monitor (r12 verdict item 4): the OBF
-    # monitor IS a sequential-monitoring surface — the shrinking
-    # boundary is consumed day-by-day as data arrives. The streamed
-    # state is group_sequential_daily_state: ONE streaming aggregation
-    # to (day, arm) exact integer moments (n, Σvm, Σvm² in
-    # decimal(38,0)); the cumulative Welch z and the O'Brien–Fleming
-    # boundary are computed on READ from the streamed state
-    # (group_sequential_looks — the operator's own downstream code, not
-    # a script-local reimplementation) and must equal the full batch
-    # operator over the raw events.
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        group_sequential_daily_state,
-        group_sequential_looks,
-        group_sequential_obf,
-    )
-
-    gs_state = run_stream(
-        group_sequential_daily_state(
-            stream.where(F.col("ts").isNotNull()),
-            "event_type",
-            "value",
-            F.to_date("ts"),
-            "click",
-            "view",
-        ),
-        "se_gs_state",
-    )
-    check(
-        "streaming_group_sequential",
-        group_sequential_obf(
-            batch.where(F.col("ts").isNotNull()),
-            "event_type",
-            "value",
-            F.to_date("ts"),
-            "click",
-            "view",
-        ),
-        group_sequential_looks(gs_state),
-        ["look", "day", "n_treat", "n_ctrl", "z", "boundary",
-         "crossed", "info_frac"],
     )
 
     if args.json:

@@ -2934,30 +2934,6 @@ def test_kmeans_lloyd_two_blobs(spark):
         kmeans_lloyd(df, k=100, iterations=1)
 
 
-def test_token_js_divergence_bounds(spark):
-    """JSD is 0 for identical distributions and ln 2 for disjoint
-    vocabularies (the closed-form p=0 tail must fire for the latter)."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.trend import token_js_divergence
-
-    same = spark.createDataFrame(
-        [(1, "x", "a b c"), (2, "y", "a b c")],
-        "doc_id long, source string, text string",
-    )
-    out = {r["source"]: r["jsd_vs_rest"]
-           for r in token_js_divergence(same, "source").collect()}
-    assert out["x"] == 0.0 and out["y"] == 0.0
-    disjoint = spark.createDataFrame(
-        [(1, "x", "a a b"), (2, "y", "c d d")],
-        "doc_id long, source string, text string",
-    )
-    out2 = {r["source"]: r["jsd_vs_rest"]
-            for r in token_js_divergence(disjoint, "source").collect()}
-    ln2 = round(math.log(2.0), 6)
-    assert out2["x"] == ln2 and out2["y"] == ln2
-
-
 def test_good_turing_hand_counts(spark):
     """'a a a b b c d': N_1=2, N_2=1, N_3=1, N=7 — r*(1) = 2·N_2/N_1 = 1,
     r*(2) = 3·N_3/N_2 = 3, r*(3) NULL (no N_4), unseen mass 2/7."""
@@ -3518,7 +3494,8 @@ def test_pca_arrow_grid_matches_catalyst_reference(spark):
     posexplode round sum), on a fixture whose c_j*v_j*1e6 products land
     EXACTLY on .5 boundaries of both signs (v components of +/-0.5 over
     odd micro offsets) so the HALF_UP tie rule itself is exercised; also
-    pins the coordinate-sum grid (mean pass) and its fused row count."""
+    pins the coordinate-sum grid (mean pass) and its fused row count, and
+    that both grids reject NULL and ragged vectors with ValueError."""
     import pyspark.sql.functions as F
 
     from ningaloo_turtle_etl_spark.operators.scale import barrier_col
@@ -3614,6 +3591,24 @@ def test_pca_arrow_grid_matches_catalyst_reference(spark):
             assert got == [ref.get(j, 0) for j in range(d)], f"v={v}"
     finally:
         base.unpersist()
+
+    # --- NULL or ragged vectors raise instead of folding into garbage ---
+    # A NULL element would read as an arbitrary int64 once flattened, a
+    # NULL vector would drop out of the row count, and rows of lengths 3
+    # and 5 would reshape into two misaligned length-4 rows. One
+    # partition keeps each case inside a single Arrow batch.
+    for bad in (
+        [(0, [1, 2, 3, 4]), (1, [5, None, 7, 8])],
+        [(0, [1, 2, 3, 4]), (1, None)],
+        [(0, [1, 2, 3]), (1, [4, 5, 6, 7, 8])],
+    ):
+        bad_base = spark.createDataFrame(
+            bad, "vid long, xm array<long>"
+        ).coalesce(1)
+        with pytest.raises(Exception, match="pca: "):
+            _pca_coord_sum_grid(bad_base, d)
+        with pytest.raises(Exception, match="pca: "):
+            _pca_cov_apply_grid(bad_base, [0] * d, [1.0] * d, d)
 
 
 def test_kmeans_recenter_exact_past_double_cliff():

@@ -298,15 +298,6 @@ def test_event_sessions_single_exchange_shared_by_windows_and_rollup(spark):
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_cuped_lift_is_one_aggregate_pass(spark):
-    # CUPED is a single conditional-moment aggregate: no join, no window,
-    # no row explosion — only the scan, one partial/final agg pair, and
-    # the single-row combine.
-    plan = plan_of(spark, "cuped_lift_click_vs_view")
-    assert "Join" not in plan and "Window" not in plan
-    assert "In(event_type" in plan or "event_type" in plan  # filter pushed
-
-
 def test_soft_dedup_weights_shuffles_fingerprints_not_bodies(spark):
     # The count side and the join both key on the 16-char fingerprint; the
     # text column must not appear in any exchange input.
@@ -322,14 +313,6 @@ def test_ks_windows_run_on_distinct_value_grain(spark):
     plan = plan_of(spark, "value_ks_by_type")
     assert "HashAggregate" in plan
     assert plan.count("Window") >= 2
-
-
-def test_bootstrap_replicates_broadcast_not_shuffled(spark):
-    # The 200-row replicate dim must reach the fact via a broadcast
-    # nested-loop (map-only explosion), not a shuffled cartesian.
-    plan = plan_of(spark, "value_bootstrap_ci")
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_minhash_incremental_new_side_filter_pushed(spark):
@@ -358,17 +341,6 @@ def test_boilerplate_plan_shape(spark):
     assert "EvalPython" not in plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_mwu_windows_run_on_distinct_value_grain(spark):
-    """The pooled-rank window sits above the (value) aggregate, never the
-    raw scan: exactly one pre-window exchange keyed on the value grain,
-    and the statistic folds to one row without another shuffle."""
-    plan = plan_of(spark, "mwu_click_vs_view")
-    assert "Window" in plan
-    # aggregate-then-window: partial_count of the value grain appears
-    # below the window in the plan text
-    assert plan.index("partial_count") > plan.index("Window")
 
 
 def test_audience_overlap_joins_on_member(spark):
@@ -599,37 +571,6 @@ def test_rfm_single_fact_aggregate_then_dimension_windows(spark):
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert plan.count("FileScan") == 1  # orders is read exactly once
-
-
-def test_cmh_two_aggregates_no_fact_join(spark):
-    plan = plan_of(spark, "cmh_click_vs_view")
-    # stratum cells + pooled cells are two map-combined aggregates over
-    # the filtered fact; the final combine is a 1-row broadcast cross —
-    # no fact-fact join anywhere
-    assert "SortMergeJoin" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "PushedFilters" in plan
-
-
-def test_permutation_test_single_scan_no_joins(spark):
-    plan = plan_of(spark, "permutation_test_purchase_view")
-    # all 48 relabelings fold into ONE map-side-combined aggregate —
-    # the events file is read exactly once, no join of any kind, and
-    # the md5-bit coins stay JVM-side
-    assert plan.count("FileScan") == 1
-    assert "Join" not in plan and "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "PushedFilters" in plan
-
-
-def test_eb_shrunk_single_fact_scan_broadcast_prior(spark):
-    plan = plan_of(spark, "eb_shrunk_purchase_rate")
-    # the bucket grain is checkpointed, so the prior (an agg-of-agg)
-    # and the output branch both read the 64-row materialization — the
-    # events fact never appears twice, and the prior joins broadcast
-    assert plan.count("FileScan parquet") <= 1
-    assert "SortMergeJoin" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_trained_ivf_pq_serve_tiers_broadcast_no_cartesian(spark):

@@ -1,10 +1,9 @@
 """r12 family pins: scipy-free Python replays of the new operators at
-sf0.001 — conformal coverage, group-sequential OBF, query-likelihood
-retrieval, MRR/MAP, and the HMM Viterbi decode."""
+sf0.001 — query-likelihood retrieval, MRR/MAP, the HMM Viterbi decode
+and the k-truss peel."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
@@ -12,105 +11,6 @@ import pyspark.sql.functions as F
 
 from ningaloo_turtle_etl_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
-
-
-def test_split_conformal_coverage_replay(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        split_conformal_coverage,
-    )
-
-    ev = load_table(spark, "events", SF_DIR)
-    got = {
-        r["event_type"]: r
-        for r in split_conformal_coverage(
-            ev, "event_type", "value", "event_id", alpha=0.1
-        ).collect()
-    }
-    rows = (
-        ev.where(F.col("value").isNotNull())
-        .select("event_type", "event_id", "value")
-        .collect()
-    )
-    groups: dict[str, list] = {}
-    for r in rows:
-        h = hashlib.md5(str(r["event_id"]).encode()).hexdigest()
-        cal = int(h[0], 16) < 8
-        groups.setdefault(r["event_type"], []).append(
-            (cal, r["event_id"], round(r["value"] * 1e6))
-        )
-    for g, items in groups.items():
-        cal = [(i, vm) for c, i, vm in items if c]
-        tst = [(i, vm) for c, i, vm in items if not c]
-        n_cal = len(cal)
-        mu = sum(vm for _, vm in cal) / n_cal
-        scores = sorted((abs(vm - mu), i) for i, vm in cal)
-        k = min(math.ceil((n_cal + 1) * 0.9), n_cal)
-        qhat = scores[k - 1][0]
-        cov = sum(1 for _, vm in tst if abs(vm - mu) <= qhat) / len(tst)
-        assert got[g]["n_cal"] == n_cal
-        assert got[g]["n_test"] == len(tst)
-        assert abs(got[g]["q_hat"] - round(qhat / 1e6, 6)) < 1e-9
-        assert abs(got[g]["coverage"] - round(cov, 6)) < 1e-9
-        # the finite-sample validity contract (generous band: one group
-        # at sf0.001 has a few hundred test rows)
-        assert 0.8 <= got[g]["coverage"] <= 1.0
-
-
-def test_group_sequential_obf_replay(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        group_sequential_obf,
-    )
-
-    ev = load_table(spark, "events", SF_DIR).where(F.col("ts").isNotNull())
-    out = group_sequential_obf(
-        ev, "event_type", "value", F.to_date("ts"), "click", "view"
-    ).collect()
-    assert out, "no looks produced"
-    rows = (
-        ev.where(
-            F.col("value").isNotNull()
-            & F.col("event_type").isin(["click", "view"])
-        )
-        .select(
-            F.to_date("ts").alias("day"),
-            "event_type",
-            F.round(F.col("value") * 1e6, 0).cast("long").alias("vm"),
-        )
-        .collect()
-    )
-    daily: dict = {}
-    for r in rows:
-        key = (r["day"], r["event_type"])
-        n, s, q = daily.get(key, (0, 0, 0))
-        daily[key] = (n + 1, s + r["vm"], q + r["vm"] * r["vm"])
-    days = sorted({d for d, _ in daily})
-
-    def cum(arm, upto):
-        n = s = q = 0
-        for d in days:
-            if d > upto:
-                break
-            if (d, arm) in daily:
-                dn, ds, dq = daily[(d, arm)]
-                n, s, q = n + dn, s + ds, q + dq
-        return n, s, q
-
-    n_looks = len(out)
-    for r in out[:5]:
-        nt, st, qt = cum("click", r["day"])
-        nc, sc, qc = cum("view", r["day"])
-        assert (nt, nc) == (r["n_treat"], r["n_ctrl"])
-        mt, mc = st / nt, sc / nc
-        vt = (qt / nt - mt * mt) / (nt - 1)
-        vc = (qc / nc - mc * mc) / (nc - 1)
-        z = (mt - mc) / math.sqrt(vt + vc)
-        assert abs(r["z"] - round(z, 6)) < 1e-9
-        b = 2.24 / math.sqrt(r["look"] / n_looks)
-        assert abs(r["boundary"] - round(b, 6)) < 1e-9
-        assert r["crossed"] == (abs(z) > b)
-    # OBF boundaries shrink monotonically over looks
-    bs = [r["boundary"] for r in out]
-    assert bs == sorted(bs, reverse=True)
 
 
 def test_query_likelihood_replay(spark):
@@ -262,98 +162,6 @@ def test_hmm_viterbi_replay(spark):
         assert abs(
             got[key]["avg_best_loglik"] - r6(s / 1e6 / n)
         ) < 1e-9
-
-
-def test_eb_shrunk_rates_replay(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import eb_shrunk_rates
-
-    ev = load_table(spark, "events", SF_DIR).withColumn(
-        "user_bucket", F.col("user_id") % 64
-    )
-    got = {
-        r["user_bucket"]: r
-        for r in eb_shrunk_rates(
-            ev, "user_bucket", F.col("event_type") == "purchase"
-        ).collect()
-    }
-    rows = ev.select("user_bucket", "event_type").collect()
-    agg: dict = {}
-    for r in rows:
-        n, x = agg.get(r["user_bucket"], (0, 0))
-        agg[r["user_bucket"]] = (
-            n + 1,
-            x + (1 if r["event_type"] == "purchase" else 0),
-        )
-    rms = {
-        g: int(math.copysign(math.floor(abs(x / n * 1e6) + 0.5), x))
-        for g, (n, x) in agg.items()
-    }
-    k = len(rms)
-    srm = sum(rms.values())
-    qrm = sum(v * v for v in rms.values())
-    m = srm / k / 1e6
-    v = (qrm / k - (srm / k) * (srm / k)) / 1e12
-    s0 = (
-        m * (1.0 - m) / v - 1.0
-        if (k > 1 and v > 0 and m * (1.0 - m) / v > 1)
-        else 0.0
-    )
-    a0, b0 = m * s0, (1.0 - m) * s0
-    for g, (n, x) in agg.items():
-        r = got[g]
-        assert (r["n_trials"], r["n_success"]) == (n, x)
-        sh = (x + a0) / (n + a0 + b0)
-        assert abs(r["shrunk_rate"] - round(sh, 6)) < 1e-6
-        # shrinkage pulls every rate TOWARD the prior mean
-        raw = x / n
-        assert (sh - raw) * (m - raw) >= -1e-12
-
-
-def test_seeded_permutation_test_replay(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        seeded_permutation_test,
-    )
-
-    ev = (
-        load_table(spark, "events", SF_DIR)
-        .where(
-            F.col("value").isNotNull()
-            & F.col("event_type").isin(["purchase", "view"])
-        )
-        .withColumn(
-            "_arm", (F.col("event_type") == "purchase").cast("int")
-        )
-    )
-    got = seeded_permutation_test(ev, "value", "event_id", n_perm=48).collect()[0]
-    rows = ev.select("_arm", "value", "event_id").collect()
-    data = [
-        (
-            r["_arm"],
-            round(r["value"] * 1e6),
-            int(hashlib.md5(str(r["event_id"]).encode()).hexdigest()[:15], 16),
-        )
-        for r in rows
-    ]
-    n_all = len(data)
-    s_all = sum(vm for _, vm, _ in data)
-    n_b = sum(a for a, _, _ in data)
-    s_b = sum(vm for a, vm, _ in data if a == 1)
-
-    def delta(nb, sb):
-        return abs(sb / nb - (s_all - sb) / (n_all - nb))
-
-    d_obs = delta(n_b, s_b)
-    extreme = 0
-    for b in range(48):
-        pn = sum(1 for _, _, h in data if (h >> b) & 1)
-        ps = sum(vm for _, vm, h in data if (h >> b) & 1)
-        if 0 < pn < n_all and delta(pn, ps) >= d_obs:
-            extreme += 1
-    assert got["n_a"] == n_all - n_b and got["n_b"] == n_b
-    assert got["n_extreme"] == extreme
-    assert abs(got["p_value"] - round((extreme + 1) / 49.0, 6)) < 1e-9
-    # add-one estimate is bounded away from 0 and capped at 1
-    assert 1.0 / 49.0 <= got["p_value"] <= 1.0
 
 
 def test_k_truss_synthetic(spark):

@@ -208,9 +208,7 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "daily_trend_by_type",
         "value_change_points",
         "source_quantile_norm",
-        "pmi_collocations",
         "mad_outlier_stats",
-        "welch_value_ttest",
         "daily_value_acf",
         "hopping_window_tally",
         "countmin_token_counts",
@@ -241,19 +239,12 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "minhash_incremental_near_dups",
         "cross_source_duplication",
         "value_ks_by_type",
-        "value_bootstrap_ci",
-        "cuped_lift_click_vs_view",
         "eventually_follows_matrix",
-        "km_conversion_curve",
         "source_gini",
-        "chi2_lang_source",
-        "did_click_vs_view",
         "rolling_wau_hll",
-        "mwu_click_vs_view",
         "theil_sen_daily_counts",
         "seasonal_profile_events",
         "boilerplate_removal",
-        "mi_lang_source",
         "classifier_calibration_curve",
         "audience_overlap_types",
         "seasonal_anomalies",
@@ -261,19 +252,13 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "contrastive_negative_pairs",
         "spatial_hotspot_clusters",
         "event_trigram_sequences",
-        "ccf_click_vs_view",
-        "two_prop_click_vs_view",
-        "srm_event_types",
         "semantic_cell_silhouette",
-        "welch_pairs_bh_adjusted",
         "ewma_daily_volume_chart",
         "leakage_safe_split",
         "source_quality_scorecard",
         "embedding_drift_by_label",
         "domain_reweight_mix",
         "rolling_value_p95",
-        "wilson_rate_by_type",
-        "qte_click_vs_view",
         "classifier_auc",
         "score_decile_lift",
         "psi_value_drift",
@@ -327,14 +312,8 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "negative_brand_samples",
         # r07 aHash image near-dups, full oracle
         "image_ahash_near_dups",
-        # r07 mSPRT always-valid sequential inference, full oracle
-        "msprt_always_valid_daily",
-        # r07 experiment-planning power/MDE grid, full oracle
-        "power_mde_by_type",
         # r07 isotonic PAV calibration, full oracle
         "classifier_isotonic_calibration",
-        # r07 two-sample mSPRT, full oracle
-        "msprt_click_vs_view",
         # r07 split-conformal coverage, full oracle
         "conformal_coverage_by_source",
         # r07 JL projection distortion audit, full oracle
@@ -344,9 +323,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "hits_copurchase",
         "adamic_adar_part_links",
         "mann_kendall_daily_counts",
-        "nelson_aalen_daily_conversion",
-        "ipw_ate_click_vs_view",
-        "token_jsd_by_source",
         "good_turing_token_counts",
         "source_lang_diversity",
         "compaction_bin_plan",
@@ -368,10 +344,8 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "pca_power_component",
         # (pca_power_components promoted into the r12 driver window)
         # r11 extension families, full oracles
-        "gmm_em_value_components",
         "kcenter_coreset_select",
         "als_rank1_factors",
-        "cox_ph_click_hazard",
         # (fellegi_sunter_part_weights promoted into the r12 driver window)
         "audio_wav_features",
         "spearman_value_vs_time",
@@ -384,41 +358,28 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "overdispersion_daily_counts",
         "rendezvous_shard_plan",
         # r11 second batch, full oracles
-        "cochran_armitage_priority_fail",
-        "kruskal_wallis_value_by_type",
         "hill_tail_index_by_type",
-        "did_click_value",
-        "logrank_signup_conversion",
         "modularity_copurchase_brands",
-        "anova_value_by_type",
         "zonemap_prune_shipdate",
         "hmm_forward_first4",
         "cohens_kappa_langid",
         "market_concentration_brands",
-        "relative_risk_daily_signup_purchase",
         # r12: the ANN train→serve loop, full unrolled-training oracles
         "pq_train_codebooks",
         "ann_trained_ivf_pq_topk",
         # r12 second batch, full oracles
-        "conformal_interval_coverage",
-        "group_sequential_obf_daily",
         "query_likelihood_top10",
         "retrieval_mrr_map",
         "hmm_viterbi_first4",
-        "eb_shrunk_purchase_rate",
-        "permutation_test_purchase_view",
         "ktruss_copurchase_hist",
-        "holt_linear_daily",
         "shapley_attribution_channels",
-        # r10 second batch: RFM segment rollup + CMH pooled odds ratio
+        # r10 second batch: RFM segment rollup
         "rfm_customer_segments",
-        "cmh_click_vs_view",
         "ann_hamming_topk",
         "textrank_keywords",
         "cv_fold_auc",
         "platt_calibration_weights",
         "ppr_copurchase_brand",
-        "holt_winters_daily",
         "unigram_tokenizer_stats",
         "inequality_profile_by_source",
         "quantile_gd_weights",

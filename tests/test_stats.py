@@ -246,119 +246,6 @@ def test_wasserstein_pairs_matches_bruteforce(spark):
     assert wasserstein_pairs(far, "g", "v").collect()[0]["w1"] == 1000.0
 
 
-def test_poisson_bootstrap_matches_python_replica(spark):
-    import hashlib
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        _POISSON1_CDF,
-        poisson_bootstrap_mean_ci,
-    )
-
-    rows = [(i, "g", float(10 + (i * 7) % 13)) for i in range(40)]
-    df = spark.createDataFrame(rows, "id long, grp string, value double")
-    B = 24
-    got = poisson_bootstrap_mean_ci(
-        df, "value", "grp", "id", replicates=B
-    ).collect()[0]
-
-    def u(i, b):
-        h = hashlib.md5(f"{i}#{b}".encode()).hexdigest()[:8]
-        return int(h, 16) / 2**32
-
-    means = []
-    for b in range(B):
-        num = den = 0
-        for i, _, v in rows:
-            w = sum(1 for t in _POISSON1_CDF if u(i, b) >= t)
-            den += w
-            num += w * round(v * 100)
-        if den > 0:
-            means.append(num / (den * 100.0))
-    means.sort()
-    lo = means[max(1, math.ceil(0.025 * B)) - 1]
-    hi = means[math.ceil(0.975 * B) - 1]
-    assert got["ci_lo"] == round(lo, 6) and got["ci_hi"] == round(hi, 6)
-    assert got["n"] == 40
-    assert got["ci_lo"] <= got["mean_value"] <= got["ci_hi"]
-
-
-def test_poisson_bootstrap_small_group_ranks_actual_replicates(spark):
-    """A 1-row group drops ~37% of replicates to zero total weight; ranks
-    must be taken against the SURVIVING replicate count, not the nominal
-    `replicates`, or the upper-rank row doesn't exist and the CI silently
-    collapses to [lo, lo]."""
-    import hashlib
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        _POISSON1_CDF,
-        poisson_bootstrap_mean_ci,
-    )
-
-    rows = [(0, "tiny", 5.0), (1, "tiny", 9.0)]
-    df = spark.createDataFrame(rows, "id long, grp string, value double")
-    B = 50
-    got = poisson_bootstrap_mean_ci(
-        df, "value", "grp", "id", replicates=B
-    ).collect()[0]
-
-    def u(i, b):
-        h = hashlib.md5(f"{i}#{b}".encode()).hexdigest()[:8]
-        return int(h, 16) / 2**32
-
-    means = []
-    for b in range(B):
-        num = den = 0
-        for i, _, v in rows:
-            w = sum(1 for t in _POISSON1_CDF if u(i, b) >= t)
-            den += w
-            num += w * round(v * 100)
-        if den > 0:
-            means.append(num / (den * 100.0))
-    means.sort()
-    m = len(means)
-    assert 0 < m < B  # the scenario actually exercises dropped replicates
-    assert math.ceil(0.975 * B) > m  # nominal hi rank row would not exist
-    lo = means[max(1, math.ceil(0.025 * m)) - 1]
-    hi = means[math.ceil(0.975 * m) - 1]
-    assert got["ci_lo"] == round(lo, 6) and got["ci_hi"] == round(hi, 6)
-    assert got["ci_hi"] > got["ci_lo"]  # the bug collapsed these equal
-
-
-def test_cuped_lift_matches_numpy_reference(spark):
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.trend import cuped_lift
-
-    rng = np.random.RandomState(11)
-    n = 300
-    x = rng.randint(0, 100, size=n)
-    arm = np.where(np.arange(n) % 2 == 0, "t", "c")
-    # metric correlated with covariate + a true treatment effect of 2
-    y = np.round(0.5 * x + rng.normal(0, 5, n) + np.where(arm == "t", 2, 0), 2)
-    rows = [(int(xi), float(yi), str(a)) for xi, yi, a in zip(x, y, arm)]
-    df = spark.createDataFrame(rows, "k int, value double, arm string")
-    got = cuped_lift(df, "value", "k", "arm", "t", "c").collect()[0]
-
-    yc_ = np.round(y * 100).astype(np.int64)  # replicate the cent scaling
-    theta = (
-        (n * (x * yc_).sum() - x.sum() * yc_.sum())
-        / float(n * (x * x).sum() - x.sum() ** 2)
-        / 100
-    )
-    xbar = x.mean()
-    t_m, c_m = arm == "t", arm == "c"
-    adj = lambda m: yc_[m].mean() / 100 - theta * (x[m].mean() - xbar)
-    assert got["lift_adjusted"] == round(adj(t_m) - adj(c_m), 6)
-    assert got["theta"] == round(theta, 6)
-    assert got["n_treatment"] == t_m.sum() and got["n_control"] == c_m.sum()
-    # CUPED must tighten, not move, the estimate: both near the true effect,
-    # and the achieved variance reduction equals corr^2 (strong here)
-    assert abs(got["lift_adjusted"] - 2) < 1.5
-    assert 0.5 < got["var_reduction"] < 1.0
-
-
 def test_eventually_follows_hand_matrix(spark):
     import datetime as dt
 
@@ -387,44 +274,6 @@ def test_eventually_follows_hand_matrix(spark):
     assert out[("a", "b")]["frac"] == 0.5  # 2 of 4 users with both
 
 
-def test_kaplan_meier_hand_curve(spark):
-    import datetime as dt
-
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        kaplan_meier_conversion,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(uid, day, typ):
-        return (uid, t0 + dt.timedelta(days=day), typ)
-
-    rows = [
-        # u1 converts at t=1, u2 at t=2, u3 never (censored at horizon t=4)
-        ev(1, 0, "view"), ev(1, 1, "purchase"),
-        ev(2, 0, "view"), ev(2, 2, "purchase"),
-        ev(3, 1, "view"),
-        ev(9, 5, "click"),  # horizon-setting noise, never at risk
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    out = {r["t_days"]: r for r in kaplan_meier_conversion(df).collect()}
-    # at t=1: 3 at risk, 1 converts -> S = 2/3
-    assert out[1]["n_risk"] == 3 and out[1]["n_events"] == 1
-    assert out[1]["survival"] == round(2 / 3, 6)
-    # at t=2: 2 at risk, 1 converts -> S = 2/3 * 1/2 = 1/3
-    assert out[2]["survival"] == round(1 / 3, 6)
-    # u3 censored at horizon (day5 - day1 = 4): S unchanged by censoring
-    assert out[4]["n_censored"] == 1 and out[4]["n_events"] == 0
-    assert out[4]["survival"] == round(1 / 3, 6)
-    # purchase before first view never counts as conversion
-    early = spark.createDataFrame(
-        [ev(7, 0, "purchase"), ev(7, 1, "view")],
-        "user_id long, ts timestamp, event_type string",
-    )
-    got = kaplan_meier_conversion(early).collect()
-    assert all(r["n_events"] == 0 for r in got)
-
-
 def test_gini_concentration_known_values(spark):
     from ningaloo_turtle_etl_spark.operators.scale import gini_concentration
 
@@ -438,74 +287,6 @@ def test_gini_concentration_known_values(spark):
     )
     r = gini_concentration(w, "src", weight_col="wgt").collect()[0]
     assert r["gini"] == 0.25 and r["total_rows"] == 4 and r["n_keys"] == 2
-
-
-def test_chi2_independence_known_table(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import chi2_independence
-
-    # classic 2x2: O = [[10, 20], [20, 10]]; margins 30/30, cols 30/30,
-    # E = 15 everywhere -> chi2 = 4 * 25/15 = 6.666667
-    rows = (
-        [("x", "p")] * 10 + [("x", "q")] * 20
-        + [("y", "p")] * 20 + [("y", "q")] * 10
-    )
-    df = spark.createDataFrame(rows, "a string, b string")
-    r = chi2_independence(df, "a", "b").collect()[0]
-    assert r["chi2"] == round(4 * 25 / 15, 6)
-    assert r["dof"] == 1 and r["n_rows"] == 60 and r["n_cells"] == 4
-    # Cramer's V = sqrt(chi2 / (n * (min(k)-1))) = sqrt(6.6667/60)
-    assert r["cramers_v"] == round(math.sqrt((4 * 25 / 15) / 60), 6)
-    # independent table -> chi2 == 0
-    ind = spark.createDataFrame(
-        [("x", "p")] * 6 + [("x", "q")] * 2 + [("y", "p")] * 3 + [("y", "q")],
-        "a string, b string",
-    )
-    r0 = chi2_independence(ind, "a", "b").collect()[0]
-    assert r0["chi2"] == 0.0 and r0["cramers_v"] == 0.0
-
-
-def test_did_lift_hand_computed(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import did_lift
-
-    # treatment: 10 -> 14 (+4); control: 20 -> 21 (+1); DiD = +3
-    rows = (
-        [("t", 0, 10.0)] * 3 + [("t", 1, 14.0)] * 2
-        + [("c", 0, 20.0)] * 4 + [("c", 1, 21.0)] * 5
-    )
-    df = spark.createDataFrame(rows, "arm string, post int, value double")
-    r = did_lift(
-        df, "value", "arm", F.col("post") == 1, "t", "c"
-    ).collect()[0]
-    assert r["did"] == 3.0
-    assert (r["pre_t"], r["post_t"], r["pre_c"], r["post_c"]) == (
-        10.0, 14.0, 20.0, 21.0,
-    )
-    assert (r["n_pre_t"], r["n_post_t"], r["n_pre_c"], r["n_post_c"]) == (
-        3, 2, 4, 5,
-    )
-
-
-def test_mann_whitney_hand_computed(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import mann_whitney_u
-
-    # t = [1,2,3], c = [2,3,4]: midranks 1, 2.5, 2.5, 4.5, 4.5, 6;
-    # R_t = 8, U = 8 - 6 = 2; ties sum = 12;
-    # sigma^2 = (9/12) * (7 - 12/30) = 4.95
-    rows = [("t", 1.0), ("t", 2.0), ("t", 3.0),
-            ("c", 2.0), ("c", 3.0), ("c", 4.0)]
-    df = spark.createDataFrame(rows, "arm string, v double")
-    r = mann_whitney_u(df, "v", "arm", "t", "c").collect()[0]
-    assert r["n_treat"] == 3 and r["n_control"] == 3
-    assert r["u_stat"] == 2.0
-    assert r["z"] == round((2 - 4.5) / math.sqrt(4.95), 6)
-    # identical samples -> U = n1*n2/2, z = 0
-    same = spark.createDataFrame(
-        [("t", float(i)) for i in range(4)]
-        + [("c", float(i)) for i in range(4)],
-        "arm string, v double",
-    )
-    r2 = mann_whitney_u(same, "v", "arm", "t", "c").collect()[0]
-    assert r2["u_stat"] == 8.0 and r2["z"] == 0.0
 
 
 def test_theil_sen_outlier_robust(spark):
@@ -545,27 +326,6 @@ def test_seasonal_profile_two_cells(spark):
     # count-only mode drops the value columns
     out = seasonal_profile(df, "ts")
     assert "value_mean" not in out.columns and "value_index" not in out.columns
-
-
-def test_mutual_information_known_tables(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import mutual_information
-
-    # perfect association: a determines b -> MI = H = ln 2, NMI = 1
-    det = spark.createDataFrame(
-        [("x", "p")] * 10 + [("y", "q")] * 10, "a string, b string"
-    )
-    r = mutual_information(det, "a", "b").collect()[0]
-    ln2 = round(math.log(2), 6)
-    assert r["mi"] == ln2 and r["h_a"] == ln2 and r["h_b"] == ln2
-    assert r["nmi"] == 1.0 and r["n_rows"] == 20
-    # independence -> MI = 0
-    ind = spark.createDataFrame(
-        [("x", "p")] * 6 + [("x", "q")] * 6 + [("y", "p")] * 3
-        + [("y", "q")] * 3,
-        "a string, b string",
-    )
-    r0 = mutual_information(ind, "a", "b").collect()[0]
-    assert r0["mi"] == 0.0 and r0["nmi"] == 0.0
 
 
 def test_classifier_calibration_hand_computed(spark):
@@ -673,82 +433,6 @@ def test_contrastive_negatives_deterministic(spark):
     assert [n for _, n in sorted(per[0])] == expect
 
 
-def test_cross_correlation_perfect_lead(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import cross_correlation
-
-    a_vals = [1.0, 3.0, 2.0, 5.0, 4.0, 7.0]
-    a = spark.createDataFrame(
-        [(t, v) for t, v in enumerate(a_vals)], "t long, v double"
-    )
-    # b lags a by one step: b(t+1) = a(t) -> ccf peaks at lag +1
-    b = spark.createDataFrame(
-        [(t + 1, v) for t, v in enumerate(a_vals)], "t long, v double"
-    )
-    got = {r["lag"]: r for r in
-           cross_correlation(a, b, "t", "v", max_lag=2).collect()}
-    assert got[1]["ccf"] == 1.0 and got[1]["n_steps"] == 6
-    assert all(r["ccf"] < 1.0 for lag, r in got.items() if lag != 1)
-
-
-def test_two_proportion_ztest_hand_computed(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        two_proportion_ztest,
-    )
-
-    rows = [("t", 1)] * 7 + [("t", 0)] * 3 + [("c", 1)] * 3 + [("c", 0)] * 7
-    df = spark.createDataFrame(rows, "arm string, y int")
-    r = two_proportion_ztest(
-        df, "arm", F.col("y") == 1, "t", "c"
-    ).collect()[0]
-    assert r["n_treat"] == 10 and r["x_treat"] == 7
-    assert r["p_treat"] == 0.7 and r["p_control"] == 0.3
-    # pooled p = 0.5 -> z = 0.4 / sqrt(0.25 * 0.2)
-    assert r["z"] == round(0.4 / math.sqrt(0.05), 6)
-
-
-def test_srm_check_known_and_zero_arm(spark):
-    import pytest as _pt
-
-    from ningaloo_turtle_etl_spark.operators.trend import srm_check
-
-    df = spark.createDataFrame(
-        [("a",)] * 60 + [("b",)] * 40, "arm string"
-    )
-    r = srm_check(df, "arm", {"a": 0.5, "b": 0.5}).collect()[0]
-    assert r["chi2"] == 4.0 and r["dof"] == 1 and r["max_abs_dev"] == 0.1
-    # Wilson–Hilferty critical value at alpha=0.001, dof=1, and the
-    # derived gate: 4.0 < 11.157245 -> healthy
-    assert r["chi2_critical"] == 11.157245
-    assert r["srm_violated"] is False
-    # an expected arm with zero observed rows still contributes its mass
-    z = spark.createDataFrame([("a",)] * 2 + [("b",)] * 2, "arm string")
-    r2 = srm_check(z, "arm", {"a": 0.5, "b": 0.25, "c": 0.25}).collect()[0]
-    assert r2["n_arms"] == 3 and r2["chi2"] == 2.0
-    assert r2["max_abs_dev"] == 0.25
-    assert r2["n_undeclared"] == 0
-    assert r2["chi2_critical"] == 14.132925 and r2["srm_violated"] is False
-    with _pt.raises(ValueError):
-        srm_check(df, "arm", {"a": 0.5, "b": 0.4})
-    # a rogue arm present in the data but absent from the declared split
-    # must SURFACE (chi2 -> inf, counted), not silently vanish
-    rogue = spark.createDataFrame(
-        [("a",)] * 50 + [("b",)] * 40 + [("bot",)] * 10, "arm string"
-    )
-    r3 = srm_check(rogue, "arm", {"a": 0.5, "b": 0.5}).collect()[0]
-    assert r3["n_rows"] == 100  # rogue rows still counted in the total
-    assert r3["n_arms"] == 3 and r3["dof"] == 1
-    assert r3["n_undeclared"] == 1
-    assert math.isinf(r3["chi2"])
-    # Infinity chi2 (and the undeclared arm itself) must trip the gate
-    assert r3["srm_violated"] is True
-    # dof < 1 branch: single declared arm -> critical value pinned to 0.0
-    # and a perfectly-conforming sample stays healthy (0 > 0 is false)
-    one = spark.createDataFrame([("a",)] * 5, "arm string")
-    r4 = srm_check(one, "arm", {"a": 1.0}).collect()[0]
-    assert r4["dof"] == 0 and r4["chi2"] == 0.0
-    assert r4["chi2_critical"] == 0.0 and r4["srm_violated"] is False
-
-
 def test_cell_silhouette_two_centroids(spark):
     from ningaloo_turtle_etl_spark.operators.similarity import (
         cell_silhouette,
@@ -767,40 +451,6 @@ def test_cell_silhouette_two_centroids(spark):
     assert got[1]["mean_silhouette"] == round(s1, 6)
     assert got[0]["mean_silhouette"] == round((s1 + 0.0) / 2, 6)
     assert got[0]["mean_intra_dist"] == round((1 + 5) / 2, 6)
-
-
-def test_normal_p_matches_erfc_reference(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import normal_two_sided_p
-
-    zs = [0.0, 0.5, 1.0, 1.96, 2.58, 4.0, -1.5]
-    df = spark.createDataFrame([(z,) for z in zs], "z double")
-    got = {
-        r["z"]: r["p"]
-        for r in df.select(
-            "z", normal_two_sided_p(F.col("z")).alias("p")
-        ).collect()
-    }
-    for z in zs:
-        ref = math.erfc(abs(z) / math.sqrt(2))  # exact two-sided p
-        assert abs(got[z] - ref) < 1.5e-6  # A&S 7.1.26 error bound
-
-
-def test_bh_adjust_known_tables(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import bh_adjust
-
-    df = spark.createDataFrame(
-        [("a", 0.005), ("b", 0.04), ("c", 0.06)], "k string, p double"
-    )
-    got = {r["k"]: r for r in bh_adjust(df, "p", ["k"]).collect()}
-    assert got["a"]["p_adj"] == 0.015
-    assert got["b"]["p_adj"] == 0.06 and got["c"]["p_adj"] == 0.06
-    # all-equal stepped values collapse to the same adjusted p
-    eq = spark.createDataFrame(
-        [("a", 0.01), ("b", 0.02), ("c", 0.03), ("d", 0.04)],
-        "k string, p double",
-    )
-    got2 = {r["k"]: r["p_adj"] for r in bh_adjust(eq, "p", ["k"]).collect()}
-    assert set(got2.values()) == {0.04}
 
 
 def test_ewma_control_chart_reference(spark):
@@ -832,200 +482,6 @@ def test_ewma_control_chart_reference(spark):
     assert got[9]["ucl"] == round(round(mu, 6) + 3 * round(sd, 6) * sig, 6)
     # the sustained shift drives the EWMA over the upper limit by the end
     assert got[22]["out_of_control"] == 1 and got[0]["out_of_control"] == 0
-
-
-def test_wilson_rate_ci_reference(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import wilson_rate_ci
-
-    rows = [("g", 1)] * 3 + [("g", 0)] * 7 + [("z", 0)] * 5
-    df = spark.createDataFrame(rows, "grp string, y int")
-    got = {r["grp"]: r for r in
-           wilson_rate_ci(df, "grp", F.col("y") == 1).collect()}
-    z = 1.959964
-    n, p = 10, 0.3
-    denom = 1 + z * z / n
-    center = p + z * z / (2 * n)
-    margin = z * math.sqrt(p * (1 - p) / n + z * z / (4 * n * n))
-    assert got["g"]["rate"] == 0.3
-    assert got["g"]["ci_lo"] == round((center - margin) / denom, 6)
-    assert got["g"]["ci_hi"] == round((center + margin) / denom, 6)
-    # rate 0/5: naive CI collapses to [0,0]; Wilson stays informative
-    zr = got["z"]
-    assert zr["rate"] == 0.0 and zr["ci_lo"] == 0.0
-    assert 0.4 < zr["ci_hi"] < 0.5
-
-
-def test_qte_known_distributions(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        quantile_treatment_effect,
-    )
-
-    # treat = control + 10 shift -> every QTE is exactly 10
-    rows = [("t", float(i) + 10) for i in range(101)] + [
-        ("c", float(i)) for i in range(101)
-    ]
-    df = spark.createDataFrame(rows, "arm string, v double")
-    out = quantile_treatment_effect(df, "v", "arm", "t", "c").collect()
-    assert len(out) == 5
-    for r in out:
-        assert r["qte"] == 10.0 and r["n_treat"] == 101
-    med = {r["p"]: r for r in out}[0.5]
-    assert med["q_control"] == 50.0 and med["q_treat"] == 60.0
-
-
-def test_msprt_always_valid_closed_form_and_latching(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import msprt_always_valid
-
-    # arm 'a': strong shift from mu0=0 -> rejects and stays rejected even
-    # after a null-ish day drags the pointwise LR back down; arm 'b': null.
-    rows = (
-        [("a", 1, 5.0), ("a", 1, 7.0), ("a", 2, 6.0)]
-        + [("a", 3, 0.0), ("a", 3, 0.0), ("a", 3, 0.0), ("a", 3, 0.0)]
-        + [("b", 1, 0.5), ("b", 2, -0.5), ("b", 3, 0.1)]
-    )
-    df = spark.createDataFrame(rows, "arm string, day int, x double")
-    out = {
-        (r["arm"], r["day"]): r
-        for r in msprt_always_valid(
-            df, ["arm"], "day", "x", mu0=0.0, sigma=2.0, tau=2.0, alpha=0.05
-        ).collect()
-    }
-
-    def ref_ll(n, xbar, s2=4.0, t2=4.0):
-        return 0.5 * math.log(s2 / (s2 + n * t2)) + (
-            n * n * xbar * xbar * t2
-        ) / (2 * s2 * (s2 + n * t2))
-
-    # closed form replayed exactly (6dp) on the cumulative grid
-    assert out[("a", 1)]["n_cum"] == 2
-    assert out[("a", 1)]["log_lambda"] == round(ref_ll(2, 6.0), 6)
-    assert out[("a", 2)]["log_lambda"] == round(ref_ll(3, 6.0), 6)
-    a3 = ref_ll(7, 18.0 / 7)
-    assert out[("a", 3)]["log_lambda"] == round(a3, 6)
-    # day-3 pointwise LR dropped, but the running max latches the
-    # rejection: p stays at the day-2 floor, rejected stays True
-    p2 = math.exp(-max(0.0, ref_ll(3, 6.0)))
-    assert out[("a", 2)]["rejected"] is True
-    assert out[("a", 3)]["rejected"] is True
-    assert out[("a", 3)]["p_always_valid"] == round(p2, 6)
-    assert a3 < ref_ll(3, 6.0)  # the latch actually did something
-    # the null arm never rejects and its p stays 1 (log-lambda < 0)
-    for d in (1, 2, 3):
-        assert out[("b", d)]["rejected"] is False
-        assert out[("b", d)]["p_always_valid"] == 1.0
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        msprt_always_valid(df, ["arm"], "day", "x", 0.0, sigma=0.0, tau=1.0)
-    with _pt.raises(ValueError):
-        msprt_always_valid(df, ["arm"], "day", "x", 0.0, sigma=1.0, tau=-1.0)
-
-
-def test_power_mde_table_closed_form(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        norm_ppf,
-        power_mde_table,
-    )
-
-    rows = [("a", float(v)) for v in (8, 10, 12, 10)] + [
-        ("b", float(v)) for v in (0, 20, 0, 20)
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = {
-        (r["g"], r["rel_effect"]): r
-        for r in power_mde_table(
-            df, ["g"], "v", rel_effects=(0.1, 0.5), alpha=0.05, power=0.8
-        ).collect()
-    }
-    z = norm_ppf(0.975) + norm_ppf(0.8)
-    import statistics
-
-    for g, vals in (("a", [8, 10, 12, 10]), ("b", [0, 20, 0, 20])):
-        m, sd = statistics.mean(vals), statistics.stdev(vals)
-        for rel in (0.1, 0.5):
-            r = out[(g, rel)]
-            assert r["n_rows"] == 4 and r["mean"] == round(m, 6)
-            assert r["sd"] == round(sd, 6)
-            delta = rel * m
-            assert r["delta_abs"] == round(delta, 6)
-            assert r["n_required_per_arm"] == math.ceil(
-                2 * sd * sd * (z * z) / (delta * delta)
-            )
-            mde = z * sd * math.sqrt(4 / 4)
-            assert r["mde_abs_at_n"] == round(mde, 6)
-            assert r["mde_rel_at_n"] == round(mde / m, 6)
-    # noisier metric (b) needs ~a lot more samples at the same lift
-    assert (
-        out[("b", 0.1)]["n_required_per_arm"]
-        > out[("a", 0.1)]["n_required_per_arm"]
-    )
-    with pytest.raises(ValueError):
-        power_mde_table(df, ["g"], "v", rel_effects=())
-    with pytest.raises(ValueError):
-        power_mde_table(df, ["g"], "v", alpha=1.5)
-
-
-def test_power_mde_table_zero_mean_group_emits_null(spark):
-    """A zero-mean metric makes delta 0 and the sample-size ratio
-    Infinity; the ANSI BIGINT cast would reject it, so the operator must
-    emit NULL for n_required_per_arm instead (ADVICE r7)."""
-    from ningaloo_turtle_etl_spark.operators.trend import power_mde_table
-
-    rows = [("z", -5.0), ("z", 5.0), ("a", 8.0), ("a", 12.0)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = {
-        (r["g"], r["rel_effect"]): r
-        for r in power_mde_table(df, ["g"], "v", rel_effects=(0.1,)).collect()
-    }
-    assert out[("z", 0.1)]["n_required_per_arm"] is None
-    assert out[("z", 0.1)]["delta_abs"] == 0.0
-    assert out[("z", 0.1)]["mde_rel_at_n"] is None
-    assert out[("a", 0.1)]["n_required_per_arm"] is not None
-    assert out[("a", 0.1)]["mde_rel_at_n"] is not None
-
-
-def test_msprt_two_sample_reference_and_missing_arm(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import msprt_two_sample
-
-    # day 1: control only (no statistic yet); day 2+: both arms with a
-    # large separation -> rejection latches
-    rows = (
-        [("c", 1, 0.0), ("c", 1, 1.0)]
-        + [("t", 2, 10.0), ("t", 2, 12.0), ("c", 2, 0.0)]
-        + [("t", 3, 11.0), ("c", 3, 1.0)]
-        + [("x", 3, 99.0)]  # unrelated arm must be ignored
-    )
-    df = spark.createDataFrame(rows, "arm string, day int, v double")
-    out = {
-        r["day"]: r
-        for r in msprt_two_sample(
-            df, "arm", "t", "c", "day", "v", sigma=1.0, tau=5.0, alpha=0.05
-        ).collect()
-    }
-    # day 1: no treatment data -> NULL stats, p=1, not rejected
-    assert out[1]["n_treat"] == 0 and out[1]["n_control"] == 2
-    assert out[1]["diff"] is None and out[1]["log_lambda"] is None
-    assert out[1]["p_always_valid"] == 1.0 and out[1]["rejected"] is False
-
-    def ref(nt, mt, nc, mc, s2=1.0, t2=25.0):
-        d, v = mt - mc, s2 * (1 / nt + 1 / nc)
-        return 0.5 * math.log(v / (v + t2)) + d * d * t2 / (2 * v * (v + t2))
-
-    ll2 = ref(2, 11.0, 3, 1.0 / 3)
-    assert out[2]["log_lambda"] == round(ll2, 6)
-    assert out[2]["diff"] == round(11.0 - 1.0 / 3, 6)
-    assert out[2]["rejected"] is True
-    ll3 = ref(3, 11.0, 4, 0.5)
-    assert out[3]["log_lambda"] == round(ll3, 6)
-    # running max keeps p at the tightest level seen so far
-    assert out[3]["p_always_valid"] == round(
-        math.exp(-max(0.0, ll2, ll3)), 6
-    )
-    assert out[3]["n_treat"] == 3 and out[3]["n_control"] == 4  # 'x' ignored
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        msprt_two_sample(df, "arm", "t", "c", "day", "v", sigma=0.0, tau=1.0)
 
 
 def test_pairwise_battles_and_bradley_terry(spark):
@@ -1106,46 +562,6 @@ def test_mann_kendall_hand_series(spark):
     assert out["lone"]["n_points"] == 1
     assert out["lone"]["s_stat"] == 0
     assert out["lone"]["var_s"] == 0.0 and out["lone"]["z"] == 0.0
-
-
-def test_nelson_aalen_hand_ladder(spark):
-    """5 subjects: events at t=1 (2 of 5) and t=3 (1 of 2), censor at
-    t=2 (1) and t=3 (1): H(1)=2/5, H(3)=2/5+1/2 (the censored t=2 row
-    shrinks the risk set but adds no hazard)."""
-    from ningaloo_turtle_etl_spark.operators.trend import nelson_aalen_hazard
-
-    rows = [
-        ("g", 1, 1), ("g", 1, 1),  # two events at t=1
-        ("g", 2, 0),               # censored at t=2
-        ("g", 3, 1), ("g", 3, 0),  # one event, one censor at t=3
-    ]
-    df = spark.createDataFrame(rows, "g string, t int, ev int")
-    out = {r["t"]: r for r in nelson_aalen_hazard(df, "g", "t", "ev").collect()}
-    assert out[1]["n_at_risk"] == 5 and out[1]["n_events"] == 2
-    assert out[1]["hazard_step"] == 0.4 and out[1]["cum_hazard"] == 0.4
-    assert out[2]["n_at_risk"] == 3 and out[2]["n_events"] == 0
-    assert out[2]["cum_hazard"] == 0.4
-    assert out[3]["n_at_risk"] == 2 and out[3]["n_events"] == 1
-    assert out[3]["hazard_step"] == 0.5 and out[3]["cum_hazard"] == 0.9
-
-
-def test_stratified_ipw_removes_planted_confounding(spark):
-    """Within-stratum effect is exactly 0 but treatment concentrates in
-    the high-outcome stratum: naive ATE = 5, stratified ATE = 0."""
-    from ningaloo_turtle_etl_spark.operators.trend import stratified_ipw_ate
-
-    rows = (
-        [("hi", 1, 10.0)] * 3 + [("hi", 0, 10.0)]
-        + [("lo", 1, 0.0)] + [("lo", 0, 0.0)] * 3
-        + [("solo", 1, 99.0)]  # one-arm stratum: must be skipped
-    )
-    df = spark.createDataFrame(rows, "s string, tr int, y double")
-    out = stratified_ipw_ate(df, "s", "tr", "y").collect()[0]
-    assert out["n_strata"] == 3 and out["n_strata_skipped"] == 1
-    # naive: treat mean (30+0+99)/5 = 25.8, control (10+0)/4 = 2.5
-    assert out["ate_naive"] == round(25.8 - 2.5, 6)
-    assert out["ate_stratified"] == 0.0
-    assert out["confounding_bias"] == out["ate_naive"]
 
 
 def test_class_diversity_profile_hand_cases(spark):

@@ -1,6 +1,7 @@
 """Unit tests for the trend/statistics operators: OLS against numpy,
-CUSUM against a hand-built step series, percent_rank normalization, and
-PMI hand values."""
+CUSUM against a hand-built step series, percent_rank normalization, robust
+outliers, ACF, PSI drift, Spearman, overdispersion, Hill tail index and
+market concentration."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import math
 import numpy as np
 import pytest
 
-from ningaloo_turtle_etl_spark.operators.text import pmi_cooccurrence
 from ningaloo_turtle_etl_spark.operators.trend import (
     cusum_scan,
     group_trend,
@@ -56,28 +56,6 @@ def test_quantile_normalize_bounds_and_ties(spark):
     assert got[4] == ("b", 7.0, 0.0)  # singleton group pins to 0
 
 
-def test_pmi_hand_values(spark):
-    # 4 docs; 'x y' together in 2, each alone in 1 more → PMI = ln(2*4/(3*3)).
-    df = spark.createDataFrame(
-        [(1, "x y"), (2, "x y"), (3, "x z"), (4, "y w")],
-        "doc_id long, text string",
-    )
-    out = pmi_cooccurrence(df, min_pair_count=2, max_df_frac=1.0)
-    got = {(r["tok_a"], r["tok_b"]): r for r in out.collect()}
-    assert got[("x", "y")]["n_pair"] == 2
-    assert got[("x", "y")]["pmi"] == pytest.approx(math.log(8 / 9), abs=1e-6)
-    assert ("x", "z") not in got  # below min_pair_count
-
-
-def test_pmi_presence_not_frequency(spark):
-    # Repeating tokens inside one doc must not inflate the pair count.
-    df = spark.createDataFrame(
-        [(1, "x x x y y"), (2, "x y")], "doc_id long, text string"
-    )
-    out = pmi_cooccurrence(df, min_pair_count=1, max_df_frac=1.0).collect()
-    assert [(r["tok_a"], r["tok_b"], r["n_pair"]) for r in out] == [("x", "y", 2)]
-
-
 def test_robust_outliers_vs_numpy(spark):
     from ningaloo_turtle_etl_spark.operators.trend import robust_outlier_stats
 
@@ -115,39 +93,6 @@ def test_robust_outliers_approx_close_to_exact(spark):
     assert ap["median"] == pytest.approx(ex["median"], rel=0.02)
     assert ap["mad"] == pytest.approx(ex["mad"], rel=0.05)
     assert ap["n_outliers"] == ex["n_outliers"]
-
-
-def test_welch_ttest_vs_scipy_formula(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import welch_ttest_pairs
-
-    rng = np.random.default_rng(11)
-    a = rng.normal(10.0, 2.0, 400)
-    b = rng.normal(10.6, 3.0, 300)
-    rows = [("a", float(v)) for v in a] + [("b", float(v)) for v in b]
-    df = spark.createDataFrame(rows, "g string, v double")
-    row = welch_ttest_pairs(df, "g", "v").collect()[0]
-    # reference Welch from the same rounded moments the operator uses
-    ma, va = round(a.mean(), 6), round(a.var(ddof=1), 6)
-    mb, vb = round(b.mean(), 6), round(b.var(ddof=1), 6)
-    sa, sb = va / len(a), vb / len(b)
-    t_ref = (ma - mb) / math.sqrt(sa + sb)
-    df_ref = (sa + sb) ** 2 / (sa**2 / (len(a) - 1) + sb**2 / (len(b) - 1))
-    assert row["t_stat"] == pytest.approx(t_ref, abs=1e-6)
-    assert row["df_welch"] == pytest.approx(df_ref, abs=1e-4)
-    # a clearly-different pair should reject at the usual threshold
-    assert abs(row["t_stat"]) > 2.0
-    # and df bounded by the pooled/min-group brackets
-    assert min(len(a), len(b)) - 1 <= row["df_welch"] <= len(a) + len(b) - 2
-
-
-def test_welch_pairs_grid_shape(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import welch_ttest_pairs
-
-    rows = [(g, float(i)) for g in "abc" for i in range(5)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = welch_ttest_pairs(df, "g", "v").collect()
-    pairs = {(r["group_a"], r["group_b"]) for r in out}
-    assert pairs == {("a", "b"), ("a", "c"), ("b", "c")}
 
 
 def test_acf_matches_numpy_pairs(spark):
@@ -213,401 +158,6 @@ def test_psi_drift_degenerate_reference_single_value(spark):
     )
     out = psi_drift(df, "v", F.col("side") == 1, n_bins=10).collect()
     assert [r["bin"] for r in out] == [0]
-
-
-def test_holt_linear_forecast_replica_and_trend_advantage(spark):
-    """Holt's level/trend fold vs an exact Python replica (same fold
-    order, same binary-exact constants), plus the semantic reason the
-    operator exists: on a linear ramp the trend-aware forecast tracks
-    the future value while plain EWMA (beta=0: trend stays 0) lags by
-    a full step; singleton groups come back (l=y, b=0)."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        holt_linear_forecast,
-    )
-
-    ramp = [(i, 10.0 + 3.0 * i) for i in range(30)]
-    noisy = [(i, [7.0, 13.0, 9.0, 11.0][i % 4]) for i in range(20)]
-    rows = (
-        [("ramp", d, y) for d, y in ramp]
-        + [("noisy", d, y) for d, y in noisy]
-        + [("single", 0, 42.0)]
-    )
-    df = spark.createDataFrame(rows, "g string, d long, y double")
-    got = {
-        r["g"]: r
-        for r in holt_linear_forecast(
-            df, ["g"], "d", "y", alpha=0.5, beta=0.25, horizon=7
-        ).collect()
-    }
-
-    def replica(ys, a=0.5, b=0.25):
-        l, t = ys[0], 0.0
-        for v in ys[1:]:
-            nl = a * v + (1.0 - a) * (l + t)
-            nt = b * ((a * v + (1.0 - a) * (l + t)) - l) + (1.0 - b) * t
-            l, t = nl, nt
-        return l, t
-
-    for g, ys in (
-        ("ramp", [y for _, y in ramp]),
-        ("noisy", [y for _, y in noisy]),
-    ):
-        l, t = replica(ys)
-        assert got[g]["n_points"] == len(ys)
-        assert abs(got[g]["level"] - round(l, 6)) < 1e-9
-        assert abs(got[g]["trend"] - round(t, 6)) < 1e-9
-        assert abs(got[g]["forecast"] - round(l + 7.0 * t, 6)) < 1e-9
-
-    assert got["single"]["n_points"] == 1
-    assert got["single"]["level"] == 42.0 and got["single"]["trend"] == 0.0
-    assert got["single"]["forecast"] == 42.0
-
-    # semantic: the true 7-ahead ramp value is 10 + 3*36 = 118; Holt gets
-    # close, the trendless fold (beta=0 keeps b=0) lags far behind
-    true_future = 10.0 + 3.0 * (29 + 7)
-    assert abs(got["ramp"]["forecast"] - true_future) < 3.0
-    flat = {
-        r["g"]: r
-        for r in holt_linear_forecast(
-            df, ["g"], "d", "y", alpha=0.5, beta=0.0, horizon=7
-        ).collect()
-    }
-    assert true_future - flat["ramp"]["forecast"] > 5.0
-
-
-def test_cmh_odds_ratio_simpson_and_replica(spark):
-    """cmh_odds_ratio on the textbook Simpson's-paradox layout: two
-    strata whose within-stratum odds ratios are both 1 (treatment does
-    nothing), but whose arm mix differs so the collapsed table shows a
-    spurious effect — CMH must report ~1, pooled must not. Exact values
-    checked against a Python replica of the micro-quantized fold."""
-    from ningaloo_turtle_etl_spark.operators.trend import cmh_odds_ratio
-
-    # stratum A: treated 80 (40/40), control 20 (10/10) — OR 1, rate .5
-    # stratum B: treated 20 (2/18), control 80 (8/72)   — OR 1, rate .1
-    rows = []
-    for s, tr, y, n in [
-        ("A", 1, 1, 40), ("A", 1, 0, 40), ("A", 0, 1, 10), ("A", 0, 0, 10),
-        ("B", 1, 1, 2), ("B", 1, 0, 18), ("B", 0, 1, 8), ("B", 0, 0, 72),
-    ]:
-        rows += [(s, tr, y)] * n
-    df = spark.createDataFrame(rows, "s string, tr int, y int")
-    out = cmh_odds_ratio(df, "s", "tr", "y").collect()[0]
-
-    def micros(x):
-        import decimal
-        return int(
-            decimal.Decimal(x * 1e6).quantize(0, rounding=decimal.ROUND_HALF_UP)
-        )
-
-    tables = {"A": (40, 40, 10, 10), "B": (2, 18, 8, 72)}
-    s_ad = sum(micros(a * d / (a + b + c + d)) for a, b, c, d in tables.values())
-    s_bc = sum(micros(b * c / (a + b + c + d)) for a, b, c, d in tables.values())
-    sum_a = sum(t[0] for t in tables.values())
-    s_e = sum(
-        micros((a + b) * (a + c) / (a + b + c + d))
-        for a, b, c, d in tables.values()
-    )
-    s_v = sum(
-        micros(
-            (a + b) * (c + d) * (a + c) * (b + d)
-            / ((a + b + c + d) ** 2 * (a + b + c + d - 1))
-        )
-        for a, b, c, d in tables.values()
-    )
-    pa, pb, pc, pd = (
-        sum(t[i] for t in tables.values()) for i in range(4)
-    )
-
-    assert out["n_strata"] == 2 and out["n_total"] == 200
-    assert abs(out["or_cmh"] - round(s_ad / s_bc, 6)) < 1e-9
-    # within-stratum effect is null → CMH ~ 1
-    assert abs(out["or_cmh"] - 1.0) < 0.01
-    pooled = (pa * pd) / (pb * pc)
-    assert abs(out["or_pooled"] - round(pooled, 6)) < 1e-9
-    # Simpson: the collapsed table shows a big spurious effect
-    assert out["or_pooled"] > 2.0
-    diff = sum_a - s_e / 1e6
-    assert abs(out["chi2_mh"] - round(diff * diff / (s_v / 1e6), 6)) < 1e-9
-
-
-def test_cmh_odds_ratio_degenerate_strata(spark):
-    """Single-arm and singleton strata contribute zero terms instead of
-    NULLing the whole estimate; an all-degenerate input reports NULL
-    odds ratios rather than dividing by zero."""
-    from ningaloo_turtle_etl_spark.operators.trend import cmh_odds_ratio
-
-    # stratum 'solo' has only treated rows; 'one' has a single row
-    rows = (
-        [("ok", 1, 1)] * 5 + [("ok", 1, 0)] * 5
-        + [("ok", 0, 1)] * 2 + [("ok", 0, 0)] * 8
-        + [("solo", 1, 1)] * 4 + [("one", 0, 1)]
-    )
-    df = spark.createDataFrame(rows, "s string, tr int, y int")
-    out = cmh_odds_ratio(df, "s", "tr", "y").collect()[0]
-    assert out["n_strata"] == 3 and out["n_total"] == 25
-    # only 'ok' contributes: a·d/n = 1*8... a=5,b=5,c=2,d=8,n=20
-    assert abs(out["or_cmh"] - round((5 * 8 / 20) / (5 * 2 / 20), 6)) < 1e-6
-
-    allnull = cmh_odds_ratio(
-        spark.createDataFrame([("x", 1, 1)], "s string, tr int, y int"),
-        "s", "tr", "y",
-    ).collect()[0]
-    assert allnull["or_cmh"] is None and allnull["chi2_mh"] is None
-
-
-def test_holt_winters_replica_and_seasonal_advantage(spark):
-    """holt_winters_forecast vs an exact Python replica (same fold
-    order, same binary-exact constants), plus the semantic reason the
-    seasonal state exists: on a sawtooth weekly pattern the HW forecast
-    tracks the true next-week value while Holt's linear fold (γ slot
-    never learned) misses by the seasonal amplitude."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        holt_linear_forecast,
-        holt_winters_forecast,
-    )
-
-    # 8 weeks of a weekly sawtooth on a slight ramp
-    season = [0.0, 10.0, 20.0, 5.0, -5.0, -15.0, -15.0]
-    rows = [
-        ("saw", d, 100.0 + 0.5 * d + season[d % 7]) for d in range(56)
-    ] + [("single", 3, 42.0)]
-    df = spark.createDataFrame(rows, "g string, d long, y double")
-    got = {
-        r["g"]: r
-        for r in holt_winters_forecast(
-            df, ["g"], "d", "y", period=7, horizon=7
-        ).collect()
-    }
-
-    def replica(series, m=7, a=0.5, b=0.25, g=0.5):
-        (o0, y0), rest = series[0], series[1:]
-        l, t, s = y0, 0.0, [0.0] * m
-        for o, y in rest:
-            i = o % m
-            nl = a * (y - s[i]) + (1.0 - a) * (l + t)
-            nt = b * (nl - l) + (1.0 - b) * t
-            s[i] = g * (y - nl) + (1.0 - g) * s[i]
-            l, t = nl, nt
-        last_o = series[-1][0]
-        fc = l + 7.0 * t + s[(last_o + 7) % m]
-        return l, t, s, fc
-
-    saw = [(d, 100.0 + 0.5 * d + season[d % 7]) for d in range(56)]
-    l, t, s, fc = replica(saw)
-    r = got["saw"]
-    assert r["n_points"] == 56
-    assert abs(r["level"] - round(l, 6)) < 1e-9
-    assert abs(r["trend"] - round(t, 6)) < 1e-9
-    for j in range(7):
-        assert abs(r[f"s{j}"] - round(s[j], 6)) < 1e-9
-    assert abs(r["forecast"] - round(fc, 6)) < 1e-9
-
-    # singleton: cold-start state comes back unchanged
-    assert got["single"]["level"] == 42.0
-    assert got["single"]["forecast"] == 42.0
-
-    # semantic: true day-62 value vs the two forecasts
-    true62 = 100.0 + 0.5 * 62 + season[62 % 7]
-    hw_err = abs(r["forecast"] - true62)
-    lin = {
-        r2["g"]: r2
-        for r2 in holt_linear_forecast(
-            df, ["g"], "d", "y", alpha=0.5, beta=0.25, horizon=7
-        ).collect()
-    }
-    lin_err = abs(lin["saw"]["forecast"] - true62)
-    assert hw_err < 3.0 and lin_err > hw_err + 3.0
-
-
-def test_gmm_em_1d_replica_and_separation(spark):
-    """Two pins: (a) the 3-round EM trajectory matches an exact Python
-    replica of the quantized arithmetic; (b) on a planted two-mode
-    mixture the fitted means recover both modes, the low-mode component
-    gets ~its planted weight, and iterating EM does not decrease the
-    mean log-likelihood."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.trend import gmm_em_1d
-
-    # planted: 300 points near 10, 100 near 50 (deterministic jitter)
-    vals = [10.0 + (i % 7) * 0.5 for i in range(300)] + [
-        50.0 + (i % 5) * 0.8 for i in range(100)
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], "value double")
-    got = {
-        r["component"]: r for r in gmm_em_1d(df, "value", 3).collect()
-    }
-
-    def rnd(v):
-        return math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-
-    n = len(vals)
-    q1 = sum(rnd(v * 1e9) for v in vals)
-    q2 = sum(rnd(v * v * 1e6) for v in vals)
-    mean = (q1 / 1e9) / n
-    var = (q2 / 1e6) / n - mean * mean
-    sd = math.sqrt(max(var, 0.0))
-    v0 = max(var, 1e-6)
-    w1, mu1, v1 = 0.5, mean - sd, v0
-    w2, mu2, v2 = 0.5, mean + sd, v0
-    for _ in range(3):
-        sums = [0] * 6
-        for x in vals:
-            d1 = (
-                w1
-                * math.exp(-((x - mu1) * (x - mu1)) / (2.0 * v1))
-                / math.sqrt(2.0 * math.pi * v1)
-            )
-            d2 = (
-                w2
-                * math.exp(-((x - mu2) * (x - mu2)) / (2.0 * v2))
-                / math.sqrt(2.0 * math.pi * v2)
-            )
-            r = d1 / (d1 + d2) if d1 + d2 > 0 else 0.5
-            sums[0] += rnd(r * 1e9)
-            sums[1] += rnd(r * x * 1e9)
-            sums[2] += rnd(r * x * x * 1e6)
-            sums[3] += rnd((1.0 - r) * 1e9)
-            sums[4] += rnd((1.0 - r) * x * 1e9)
-            sums[5] += rnd((1.0 - r) * x * x * 1e6)
-        n1 = sums[0] / 1e9
-        n2 = sums[3] / 1e9
-        mu1 = (sums[1] / 1e9) / n1
-        mu2 = (sums[4] / 1e9) / n2
-        v1 = max((sums[2] / 1e6) / n1 - mu1 * mu1, 1e-6)
-        v2 = max((sums[5] / 1e6) / n2 - mu2 * mu2, 1e-6)
-        w1 = n1 / n
-        w2 = n2 / n
-    lls = 0
-    for x in vals:
-        d1 = (
-            w1
-            * math.exp(-((x - mu1) * (x - mu1)) / (2.0 * v1))
-            / math.sqrt(2.0 * math.pi * v1)
-        )
-        d2 = (
-            w2
-            * math.exp(-((x - mu2) * (x - mu2)) / (2.0 * v2))
-            / math.sqrt(2.0 * math.pi * v2)
-        )
-        lls += rnd((math.log(d1 + d2) if d1 + d2 > 0 else -745.0) * 1e9)
-    mean_ll = (lls / 1e9) / n
-
-    def r6(v):
-        import decimal
-
-        return float(
-            decimal.Decimal(v).quantize(
-                decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
-
-    assert got[1]["weight"] == r6(w1)
-    assert got[1]["mu"] == r6(mu1)
-    assert got[1]["variance"] == r6(v1)
-    assert got[2]["mu"] == r6(mu2)
-    assert got[1]["mean_loglik"] == r6(mean_ll)
-
-    # semantic: the two modes are recovered and weights ~ 3:1
-    assert abs(got[1]["mu"] - 11.5) < 2.0
-    assert abs(got[2]["mu"] - 51.6) < 2.5
-    assert 0.6 < got[1]["weight"] < 0.85
-
-    # more EM rounds never decrease the mean log-likelihood
-    got5 = gmm_em_1d(df, "value", 5).collect()[0]
-    assert got5["mean_loglik"] >= got[1]["mean_loglik"] - 1e-9
-
-
-def test_cox_ph_fit_replica_and_likelihood_optimum(spark):
-    """Three pins: (a) the 3-step Newton trajectory matches an exact
-    Python replica of the quantized risk-set arithmetic (ties +
-    censoring in the fixture); (b) the returned β sits at the maximum
-    of the true Breslow partial log-likelihood (grid check); (c) the
-    planted direction (high x → faster events) gives β > 0 and a
-    positive score z."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.trend import cox_ph_fit
-
-    # planted: x in {0,1,2}; higher x = earlier event day; some censored
-    rows = [
-        # (t, d, x) with ties at t=2 and t=5
-        (1, 1, 2.0), (2, 1, 2.0), (2, 1, 1.0), (3, 1, 2.0),
-        (4, 1, 1.0), (5, 1, 1.0), (5, 1, 0.0), (6, 1, 0.0),
-        (7, 0, 0.0), (7, 1, 0.0), (8, 0, 1.0), (9, 0, 0.0),
-    ]
-    df = spark.createDataFrame(rows, "t long, d int, x double")
-    got = cox_ph_fit(df, "t", "d", "x", iterations=3).collect()[0]
-
-    def rnd(v):
-        return math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-
-    def newton_replica(iters):
-        beta, z0 = 0.0, None
-        for step in range(iters):
-            per_t = {}
-            for t, d, x in rows:
-                e = math.exp(beta * x)
-                c = per_t.setdefault(t, [0, 0, 0, 0, 0])
-                c[0] += rnd(e * 1e9)
-                c[1] += rnd(x * e * 1e9)
-                c[2] += rnd(x * x * e * 1e6)
-                c[3] += d
-                c[4] += d * rnd(x * 1e9)
-            s0 = s1 = s2 = 0
-            u_i = i_i = 0
-            for t in sorted(per_t, reverse=True):
-                r0, r1, r2, m, sx = per_t[t]
-                s0 += r0
-                s1 += r1
-                s2 += r2
-                if m > 0:
-                    rat1 = (s1 / 1e9) / (s0 / 1e9)
-                    u_i += rnd((sx / 1e9 - m * rat1) * 1e9)
-                    i_i += rnd(
-                        m * ((s2 / 1e6) / (s0 / 1e9) - rat1 * rat1) * 1e9
-                    )
-            u, info = u_i / 1e9, i_i / 1e9
-            if step == 0:
-                z0 = u / math.sqrt(info) if info > 0 else None
-            if info <= 0:
-                break
-            beta = beta + u / info
-        return beta, z0
-
-    beta, z0 = newton_replica(3)
-
-    def r6(v):
-        import decimal
-
-        return float(
-            decimal.Decimal(v).quantize(
-                decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
-
-    assert got["beta"] == r6(beta)
-    assert got["hazard_ratio"] == r6(math.exp(beta))
-    assert got["score_z"] == r6(z0)
-    assert got["n_subjects"] == 12 and got["n_events"] == 9
-
-    # (b) β maximizes the exact Breslow partial log-likelihood
-    def pll(b):
-        out = 0.0
-        times = sorted({t for t, d, _ in rows if d})
-        for te in times:
-            risk = [x for t, _, x in rows if t >= te]
-            ev = [x for t, d, x in rows if t == te and d]
-            out += sum(b * x for x in ev) - len(ev) * math.log(
-                sum(math.exp(b * x) for x in risk)
-            )
-        return out
-    grid = [beta + k * 0.01 for k in range(-30, 31)]
-    assert abs(max(grid, key=pll) - beta) <= 0.02
-
-    # (c) planted direction
-    assert got["beta"] > 0 and got["score_z"] > 0
 
 
 def test_spearman_by_group_properties(spark):
@@ -715,94 +265,6 @@ def test_overdispersion_daily_counts_semantics(spark):
     assert got["B"]["nb_p"] == 0.4
 
 
-def test_cochran_armitage_trend_reference(spark):
-    """CA trend pins without scipy: exact closed-form agreement with a
-    Python reference on a graded dose-response table, z > 0 for a
-    rising trend, and the NULL contract when every score is equal
-    (Var(T) = 0)."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        cochran_armitage_trend,
-    )
-
-    # dose groups 1..4 with rising success rates 1/4, 2/4, 3/4, 4/4
-    rows = []
-    for s in (1, 2, 3, 4):
-        for i in range(4):
-            rows.append((s, 1 if i < s else 0))
-    df = spark.createDataFrame(rows, "s long, y long")
-    row = cochran_armitage_trend(df, "s", "y").collect()[0]
-
-    n = len(rows)
-    r = sum(y for _, y in rows)
-    s1 = sum(s for s, _ in rows)
-    s2 = sum(s * s for s, _ in rows)
-    sy = sum(s * y for s, y in rows)
-    assert (row["n_rows"], row["n_pos"]) == (n, r)
-    assert (row["sum_s"], row["sum_s2"], row["sum_sy"]) == (s1, s2, sy)
-    import math
-
-    pbar = r / n
-    t = sy - pbar * s1
-    var = pbar * (1 - pbar) * (s2 - s1 * s1 / n)
-    assert row["z"] == round(t / math.sqrt(var), 6)
-    assert row["z"] > 0
-
-    flat = spark.createDataFrame(
-        [(3, 1), (3, 0), (3, 1)], "s long, y long"
-    )
-    assert cochran_armitage_trend(flat, "s", "y").collect()[0]["z"] is None
-
-
-def test_kruskal_wallis_by_group_reference(spark):
-    """KW pins without scipy: H == 0 when groups are identical
-    permutations of one set, and exact agreement (H and tie-adjusted H)
-    with a tie-aware Python reference on mixed data."""
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        kruskal_wallis_by_group,
-    )
-
-    same = [("a", float(v)) for v in (1, 2, 3, 4)] + [
-        ("b", float(v)) for v in (1, 2, 3, 4)
-    ]
-    df = spark.createDataFrame(same, "g string, v double")
-    out = kruskal_wallis_by_group(df, "v", "g").collect()
-    assert all(r["h"] == 0.0 for r in out)
-    assert all(r["avg_rank"] == 4.5 for r in out)
-
-    rows = [
-        ("a", 1.0), ("a", 2.0), ("a", 2.0), ("a", 5.0),
-        ("b", 2.0), ("b", 3.0), ("b", 4.0),
-        ("c", 4.0), ("c", 4.0), ("c", 6.0), ("c", 7.0),
-    ]
-    df2 = spark.createDataFrame(rows, "g string, v double")
-    got = {r["g"]: r for r in kruskal_wallis_by_group(df2, "v", "g").collect()}
-
-    vals = sorted(v for _, v in rows)
-    n = len(vals)
-
-    def avg_rank(v):
-        lt = sum(1 for x in vals if x < v)
-        eq = sum(1 for x in vals if x == v)
-        return lt + (eq + 1) / 2
-
-    groups = sorted({g for g, _ in rows})
-    h = 0.0
-    for g in groups:
-        gv = [avg_rank(v) for gg, v in rows if gg == g]
-        h += round((2 * sum(gv)) ** 2 / len(gv)) / 4
-    h = 12.0 / (n * (n + 1)) * h - 3.0 * (n + 1)
-    from collections import Counter
-
-    tie = sum(c**3 - c for c in Counter(vals).values())
-    c_adj = 1 - tie / (n**3 - n)
-    for g in groups:
-        gv = [avg_rank(v) for gg, v in rows if gg == g]
-        assert got[g]["n"] == len(gv)
-        assert got[g]["avg_rank"] == round(sum(gv) / len(gv), 6)
-        assert abs(got[g]["h"] - round(h, 6)) <= 1e-6
-        assert abs(got[g]["h_tie_adj"] - round(h / c_adj, 6)) <= 1e-6
-
-
 def test_hill_tail_index_reference(spark):
     """Hill pins without scipy: exact agreement with a Python replay of
     the micro-quantized formula, scale invariance (alpha unchanged when
@@ -839,132 +301,6 @@ def test_hill_tail_index_reference(spark):
     assert out2["g"]["alpha"] == out["g"]["alpha"]
 
 
-def test_diff_in_diff_cells(spark):
-    """DiD pins: exact cell means and estimator on a constructed 2x2,
-    and zero when both groups move in parallel."""
-    from ningaloo_turtle_etl_spark.operators.trend import diff_in_diff
-
-    rows = (
-        [(1, 0, 1.0)] * 4
-        + [(1, 1, 3.0)] * 2
-        + [(0, 0, 2.0)] * 5
-        + [(0, 1, 2.5)] * 4
-    )
-    df = spark.createDataFrame(rows, "it int, po int, y double")
-    r = diff_in_diff(df, "it", "po", "y").collect()[0]
-    assert (
-        r["n_treat_pre"], r["n_treat_post"], r["n_ctrl_pre"],
-        r["n_ctrl_post"],
-    ) == (4, 2, 5, 4)
-    assert r["mean_treat_pre"] == 1.0
-    assert r["mean_treat_post"] == 3.0
-    assert r["mean_ctrl_pre"] == 2.0
-    assert r["mean_ctrl_post"] == 2.5
-    assert r["did"] == 1.5
-
-    par = [(1, 0, 1.0), (1, 1, 2.0), (0, 0, 5.0), (0, 1, 6.0)]
-    df2 = spark.createDataFrame(par, "it int, po int, y double")
-    assert diff_in_diff(df2, "it", "po", "y").collect()[0]["did"] == 0.0
-
-
-def test_logrank_two_group_reference(spark):
-    """Log-rank pins without scipy: exact zero when the two groups are
-    identical, and exact agreement with a Python replay of the
-    micro-quantized hypergeometric terms on censored data."""
-    from ningaloo_turtle_etl_spark.operators.trend import logrank_two_group
-
-    same = [(g, t, e) for g in (0, 1)
-            for t, e in [(2, True), (3, True), (5, False), (7, True)]]
-    df = spark.createDataFrame(same, "g int, t long, ev boolean")
-    r = logrank_two_group(df, "g", "t", "ev").collect()[0]
-    assert (r["n_ctrl"], r["n_treat"]) == (4, 4)
-    assert r["z"] == 0.0 and r["chi2"] == 0.0
-
-    rows = [
-        (1, 1, True), (1, 2, False), (1, 4, True), (1, 6, True),
-        (1, 6, False),
-        (0, 1, True), (0, 1, True), (0, 3, True), (0, 5, False),
-        (0, 6, True), (0, 8, False),
-    ]
-    df2 = spark.createDataFrame(rows, "g int, t long, ev boolean")
-    got = logrank_two_group(df2, "g", "t", "ev").collect()[0]
-
-    import math
-    from collections import defaultdict
-
-    n0 = {g: sum(1 for gg, _, _ in rows if gg == g) for g in (0, 1)}
-    d_gt, rem_gt = defaultdict(int), defaultdict(int)
-    for g, t, e in rows:
-        rem_gt[(g, t)] += 1
-        if e:
-            d_gt[(g, t)] += 1
-    ev_times = sorted({t for (_, t), d in d_gt.items() if d > 0})
-    o1, e1s, vs = 0, 0, 0
-    for t in ev_times:
-        n_r = {
-            g: n0[g] - sum(rem_gt[(g, tt)] for tt in range(0, t))
-            for g in (0, 1)
-        }
-        d = d_gt[(0, t)] + d_gt[(1, t)]
-        n = n_r[0] + n_r[1]
-        o1 += d_gt[(1, t)]
-        e1s += round(d * n_r[1] / n * 1e6)
-        if n > 1:
-            vs += round(
-                d * (n_r[1] / n) * (1 - n_r[1] / n) * ((n - d) / (n - 1))
-                * 1e6
-            )
-    assert got["o1"] == o1
-    assert got["e1"] == round(e1s / 1e6, 6)
-    assert got["var1"] == round(vs / 1e6, 6)
-    z = (o1 - e1s / 1e6) / math.sqrt(vs / 1e6)
-    assert got["z"] == round(z, 6)
-    assert got["chi2"] == round(z * z, 6)
-
-
-def test_anova_oneway_reference(spark):
-    """ANOVA pins without scipy: F == 0 when all group means are equal,
-    and exact agreement with a Python replay of the centi-quantized
-    computation on unbalanced groups."""
-    from ningaloo_turtle_etl_spark.operators.trend import anova_oneway
-
-    eq = [("a", 1.0), ("a", 3.0), ("b", 1.0), ("b", 3.0)]
-    df = spark.createDataFrame(eq, "g string, y double")
-    out = anova_oneway(df, "y", "g").collect()
-    assert all(r["f_stat"] == 0.0 for r in out)
-    assert all(r["mean"] == 2.0 for r in out)
-
-    rows = [
-        ("a", 1.25), ("a", 2.5), ("a", 2.25),
-        ("b", 4.0), ("b", 5.5), ("b", 4.75), ("b", 6.0),
-        ("c", 2.0), ("c", 3.0),
-    ]
-    df2 = spark.createDataFrame(rows, "g string, y double")
-    got = {r["g"]: r for r in anova_oneway(df2, "y", "g").collect()}
-
-    groups = sorted({g for g, _ in rows})
-    cents = {g: [round(y * 100) for gg, y in rows if gg == g]
-             for g in groups}
-    qb = sum(round(sum(c) ** 2 / len(c)) for c in cents.values())
-    qw = sum(
-        round(sum(x * x for x in c) - sum(c) ** 2 / len(c))
-        for c in cents.values()
-    )
-    n = len(rows)
-    s_tot = sum(sum(c) for c in cents.values())
-    k = len(groups)
-    ssb = qb - s_tot * s_tot / n
-    f = (ssb / (k - 1)) / (qw / (n - k))
-    for g in groups:
-        assert got[g]["n"] == len(cents[g])
-        assert got[g]["mean"] == round(
-            sum(cents[g]) / 100.0 / len(cents[g]), 6
-        )
-        assert got[g]["dof_between"] == k - 1
-        assert got[g]["dof_within"] == n - k
-        assert got[g]["f_stat"] == round(f, 6)
-
-
 def test_market_concentration_reference(spark):
     """HHI/CR4 pinned by a pandas replay of the quantized formula on
     the sf0.001 tables, plus the degenerate single-brand contract
@@ -998,34 +334,3 @@ def test_market_concentration_reference(spark):
     assert got["total_revenue"] == round(tot / 100.0, 6)
     assert got["hhi"] == round(hp / 1e12, 6)
     assert got["cr4"] == round(top4 / tot, 6)
-
-
-def test_relative_risk_reference(spark):
-    """RR + Katz interval pinned by a pandas replay of the 2x2 on
-    (user, day) units from sf0.001."""
-    import math
-
-    import pandas as pd
-
-    from ningaloo_turtle_etl_spark.registry import queries
-    from tests.conftest import SF_DIR
-
-    got = queries()["relative_risk_daily_signup_purchase"](
-        spark, SF_DIR
-    ).collect()[0]
-
-    ev = pd.read_parquet(f"{SF_DIR}/events.parquet").dropna(subset=["ts"])
-    ev["day"] = ev.ts.values.astype("datetime64[s]").astype("int64") // 86400
-    ev["is_s"] = ev.event_type == "signup"
-    ev["is_p"] = ev.event_type == "purchase"
-    u = ev.groupby(["user_id", "day"])[["is_s", "is_p"]].max()
-    a = int((u.is_s & u.is_p).sum())
-    b = int((u.is_s & ~u.is_p).sum())
-    c = int((~u.is_s & u.is_p).sum())
-    d = int((~u.is_s & ~u.is_p).sum())
-    assert (got["a"], got["b"], got["c"], got["d"]) == (a, b, c, d)
-    rr = (a / (a + b)) / (c / (c + d))
-    se = math.sqrt(1 / a - 1 / (a + b) + 1 / c - 1 / (c + d))
-    assert got["rr"] == round(rr, 6)
-    assert got["rr_lo"] == round(math.exp(math.log(rr) - 1.96 * se), 6)
-    assert got["rr_hi"] == round(math.exp(math.log(rr) + 1.96 * se), 6)

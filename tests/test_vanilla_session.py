@@ -22,7 +22,7 @@ re-run at end of r04 with the full 207-query registry (classifier-eval,
 PSI, experimentation-stats batches included): 207/207 matched
 (`TZ=Australia/Perth JAVA_TOOL_OPTIONS=-Duser.timezone=Australia/Perth
 python scripts/driver_sim.py`); the full sweep also passes at sf0.1
-(10x the grading scale), see COVERAGE.md.
+(10x the grading scale).
 """
 
 from __future__ import annotations
