@@ -6,7 +6,9 @@
 Mirrors ningaloo-etl.Rmd end-to-end: every `write.csv` site becomes a product
 action; the QA section (:372-425) runs as rules and lands in the output as a
 machine-checkable report. One lazy DAG per product — Spark only materializes
-at the writes.
+at the writes. The QA actions, and then the product writes, are independent,
+so each group is submitted at once (``session.run_concurrently``) and their
+mostly single-task stages share the local cores.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from functools import partial
 from typing import Any
 
 import pyspark.sql.functions as F
@@ -32,6 +35,7 @@ from ningaloo_turtle_etl_spark.plans.products import (
     build_summary_nests,
     build_surveys,
 )
+from ningaloo_turtle_etl_spark.session import run_concurrently
 from ningaloo_turtle_etl_spark.sources.files import write_csv
 from ningaloo_turtle_etl_spark.sources.geojson import (
     bbox_ring,
@@ -121,8 +125,6 @@ def run_batch_etl(
 
     if write_products:
         os.makedirs(out_dir, exist_ok=True)
-        for name, df in products.items():
-            write_csv(df, os.path.join(out_dir, f"{name}_csv"), single_file=True)
         geo = sites.withColumn(
             "feature",
             feature_json(
@@ -130,7 +132,14 @@ def run_batch_etl(
                 {"id": F.col("id"), "subsection": F.col("subsection")},
             ),
         )
-        write_feature_collection(geo, "feature", os.path.join(out_dir, "sites.geojson"))
+        writes = [
+            partial(write_csv, df, os.path.join(out_dir, f"{name}_csv"), single_file=True)
+            for name, df in products.items()
+        ]
+        writes.append(
+            partial(write_feature_collection, geo, "feature", os.path.join(out_dir, "sites.geojson"))
+        )
+        run_concurrently(sites.sparkSession, writes)
         # Legacy flat counts (qa_report.json 'counts' mirrors this file's old
         # shape) plus the rendered human-readable report.
         with open(os.path.join(out_dir, "qa_report.json"), "w") as f:

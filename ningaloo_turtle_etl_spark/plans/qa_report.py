@@ -24,6 +24,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from ningaloo_turtle_etl_spark.session import run_concurrently
+
 
 @dataclass
 class QaCheck:
@@ -38,20 +40,29 @@ class QaCheck:
 
 def run_qa(checks: list[QaCheck], sample_rows: int = 5) -> dict:
     """Evaluate every check once: violation count, ok-vs-expected, and up to
-    ``sample_rows`` example violations (stringified for JSON portability)."""
-    results: dict[str, dict] = {}
+    ``sample_rows`` example violations (stringified for JSON portability).
+
+    The checks are independent, so their count and sample actions are
+    submitted together (``session.run_concurrently``); the report keeps the
+    checks' declared order."""
+    if not checks:
+        return {}
+    actions = []
     for c in checks:
-        count = c.violations.count()
-        sample = [
-            {k: (None if v is None else str(v)) for k, v in row.asDict().items()}
-            for row in c.violations.limit(sample_rows).collect()
-        ]
+        actions += [c.violations.count, c.violations.limit(sample_rows).collect]
+    outcomes = run_concurrently(checks[0].violations.sparkSession, actions)
+    results: dict[str, dict] = {}
+    for i, c in enumerate(checks):
+        count, rows = outcomes[2 * i], outcomes[2 * i + 1]
         results[c.name] = {
             "description": c.description,
             "count": count,
             "expected": c.expected,
             "ok": (count == c.expected) if c.expected is not None else (count == 0),
-            "sample": sample,
+            "sample": [
+                {k: (None if v is None else str(v)) for k, v in row.asDict().items()}
+                for row in rows
+            ],
         }
     return results
 

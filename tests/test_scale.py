@@ -3,6 +3,8 @@ join without a shuffle; the full ETL graph runs end-to-end."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -73,12 +75,9 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE bucketed_b")
 
 
-def test_etl_graph_end_to_end(spark, tmp_path):
-    import json
-
-    from ningaloo_turtle_etl_spark.plans.etl_graph import publish_products, run_batch_etl
-    from ningaloo_turtle_etl_spark.sources.catalogue import Catalogue
-
+def _etl_inputs(spark):
+    """A two-site graph input with one missing bbox corner, one orphan crawl
+    and one NA-species crawl."""
     raw_sites = spark.createDataFrame(
         [
             (1, "Ningaloo", "North", "Red Bluff", -23.0, 113.0, -22.9, -23.1, 113.0, 112.9),
@@ -103,25 +102,32 @@ def test_etl_graph_end_to_end(spark, tmp_path):
         "nest_id long, survey_id long, nest_type string, species_name string,"
         " date string, subsection string",
     )
+    return {
+        "raw_sites": raw_sites,
+        "area_surveyed": area,
+        "environment": env,
+        "species": species,
+        "raw_crawls": crawls,
+        "nests_joined": nests_joined,
+    }
+
+
+_ETL_EXPECTED_QA = {
+    "duplicated_sites": 0,
+    "sites_missing_coords": 1,
+    "orphan_crawls": 1,
+    "na_species_crawls": 1,
+}
+
+
+def test_etl_graph_end_to_end(spark, tmp_path):
+    import json
+
+    from ningaloo_turtle_etl_spark.plans.etl_graph import publish_products, run_batch_etl
+    from ningaloo_turtle_etl_spark.sources.catalogue import Catalogue
 
     out = str(tmp_path / "products")
-    result = run_batch_etl(
-        {
-            "raw_sites": raw_sites,
-            "area_surveyed": area,
-            "environment": env,
-            "species": species,
-            "raw_crawls": crawls,
-            "nests_joined": nests_joined,
-        },
-        out_dir=out,
-        expected_qa={
-            "duplicated_sites": 0,
-            "sites_missing_coords": 1,
-            "orphan_crawls": 1,
-            "na_species_crawls": 1,
-        },
-    )
+    result = run_batch_etl(_etl_inputs(spark), out_dir=out, expected_qa=_ETL_EXPECTED_QA)
     # QA counts reflect the planted issues: one missing bbox corner, one
     # orphan crawl, one NA-species crawl.
     assert result.qa["sites_missing_coords"] == 1
@@ -140,14 +146,94 @@ def test_etl_graph_end_to_end(spark, tmp_path):
     md = open(f"{out}/qa_run_report.md").read()
     assert "# QA run report" in md and "orphan_crawls — OK" in md
 
-    import os
-
     assert os.path.exists(f"{out}/sites.geojson")
     assert any(f.endswith(".csv") for f in os.listdir(f"{out}/surveys_csv"))
 
     cat = Catalogue({}, staging_dir=str(tmp_path / "stage"))
     publish_products(result, cat)
     assert "sites_geojson" in cat.published and "surveys" in cat.published
+
+
+def _marker_job(sc, group: str) -> int:
+    """Run one job in its own group and return its id once the status
+    tracker has seen it (the tracker is fed asynchronously, in event order,
+    so every earlier job has been recorded by then)."""
+    import time
+
+    sc.setJobGroup(group, group)
+    sc.parallelize([1], 1).count()
+    deadline = time.monotonic() + 60
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, f"job of {group} never reached the tracker"
+        time.sleep(0.05)
+    return max(ids)
+
+
+def test_etl_graph_concurrent_actions_stay_in_callers_job_group(spark, tmp_path):
+    """run_batch_etl submits its QA actions, then its product writes, from a
+    thread pool: every job they run is accounted to the caller's job group,
+    and the QA report still lists the checks in their declared order."""
+    import json
+    import uuid
+
+    from ningaloo_turtle_etl_spark.plans.etl_graph import run_batch_etl
+
+    sc = spark.sparkContext
+    group = f"etl-graph-{uuid.uuid4().hex}"
+    out = str(tmp_path / "products")
+    try:
+        before = _marker_job(sc, f"{group}-before")
+        sc.setJobGroup(group, "run_batch_etl")
+        run_batch_etl(_etl_inputs(spark), out_dir=out, expected_qa=_ETL_EXPECTED_QA)
+        after = _marker_job(sc, f"{group}-after")
+    finally:
+        sc.setJobGroup(None, None)
+    in_group = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(in_group) > 0
+    assert len(in_group) == after - before - 1
+
+    declared = ["duplicated_sites", "sites_missing_coords", "orphan_crawls", "na_species_crawls"]
+    with open(f"{out}/qa_run_report.json") as f:
+        detail = json.load(f)
+    assert list(detail["checks"]) == declared
+    assert list(detail["counts"]) == declared
+
+
+def test_etl_graph_failing_write_raises(spark, tmp_path, monkeypatch):
+    """A product write that fails among the concurrent writes fails the run."""
+    from ningaloo_turtle_etl_spark.plans import etl_graph
+
+    real_write_csv = etl_graph.write_csv
+
+    def write_csv(df, path, **options):
+        if path.endswith("crawls_csv"):
+            raise OSError(f"no space left writing {path}")
+        real_write_csv(df, path, **options)
+
+    monkeypatch.setattr(etl_graph, "write_csv", write_csv)
+    with pytest.raises(OSError, match="no space left writing .*crawls_csv"):
+        etl_graph.run_batch_etl(_etl_inputs(spark), out_dir=str(tmp_path / "products"))
+
+
+@pytest.mark.parametrize(
+    "master, env, want",
+    [
+        ("local[4]", None, "4"),
+        ("local[*]", None, str(len(os.sched_getaffinity(0)))),
+        ("local[4]", "7", "7"),
+        ("spark://head:7077", None, "32"),
+    ],
+    ids=["local_n", "local_star", "env_override", "cluster_master"],
+)
+def test_shuffle_partitions_follow_master(monkeypatch, master, env, want):
+    """One shuffle partition per local core; $SPARK_GRAFT_SHUFFLE overrides."""
+    from ningaloo_turtle_etl_spark.session import shuffle_partitions
+
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", env)
+    assert shuffle_partitions(master) == want
 
 
 def test_key_skew_profile_hand_distribution(spark):

@@ -159,6 +159,92 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path):
     ) == [(1, "a"), (2, "B"), (3, "c")]
 
 
+def test_upsert_survives_crash_mid_swap(spark, tmp_path, monkeypatch):
+    """A crash after the old rollup version has left its path but before the
+    new one is in place loses nothing: the retried batch merges onto the old
+    version."""
+    import os
+
+    target = str(tmp_path / "target")
+    upsert = foreach_batch_upserter(target, ["id"])
+    upsert(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), 0)
+
+    real_replace = os.replace
+
+    def crash_installing_new_version(src, dst):
+        if os.path.abspath(dst) == target:
+            raise OSError("simulated crash")
+        real_replace(src, dst)
+
+    b1 = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
+    monkeypatch.setattr(os, "replace", crash_installing_new_version)
+    with pytest.raises(OSError, match="simulated crash"):
+        upsert(b1, 1)
+    monkeypatch.undo()
+
+    upsert(b1, 1)  # the restarted query retries the batch
+    assert sorted(
+        (r["id"], r["v"]) for r in spark.read.parquet(target).collect()
+    ) == [(1, "a"), (2, "B"), (3, "c")]
+
+
+def _write_feed_files(feed_dir, first: int, n_files: int, rows: int = 500) -> None:
+    """Feed files ``first`` … ``first + n_files - 1``: file k holds events of
+    hours 8k to 8k+8, jittered by up to 6 hours either way (late and
+    out-of-order arrivals); integral values keep the sums exact."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(first)
+    base = np.datetime64("2024-01-01T00:00:00", "us")
+    for k in range(first, first + n_files):
+        hours = k * 8 + rng.uniform(-6, 14, rows)
+        table = pa.table(
+            {
+                "event_id": np.arange(k * rows, (k + 1) * rows, dtype=np.int64),
+                "ts": pa.array(
+                    base + (hours * 3600e6).astype("timedelta64[us]"),
+                    pa.timestamp("us", tz="UTC"),
+                ),
+                "user_id": rng.integers(0, 100, rows).astype(np.int64),
+                "event_type": np.array(["crawl", "nest", "hatch"])[rng.integers(0, 3, rows)],
+                "value": rng.integers(0, 100, rows).astype(np.float64),
+            }
+        )
+        pq.write_table(table, str(feed_dir / f"part-{k:05d}.parquet"))
+
+
+def test_rollup_resumes_from_checkpoint_across_drains(spark, tmp_path):
+    """The feed's shape end to end: an availableNow drain through the
+    watermarked tally into the upsert sink, then more files and a second
+    drain from the same checkpoint. Each drain ends with a no-data batch
+    (the watermark advance); after each drain the rollup equals the batch
+    tally of every file so far."""
+    feed_dir, rollup, checkpoint = tmp_path / "feed", str(tmp_path / "rollup"), str(tmp_path / "ckpt")
+    feed_dir.mkdir()
+    keys = ["window_start", "event_type"]
+
+    def rows(df):
+        return {(r["window_start"], r["event_type"]): (r["n"], r["total_value"]) for r in df.collect()}
+
+    for first in (0, 6):
+        _write_feed_files(feed_dir, first, 6)
+        q = (
+            daily_tally(stream_table_dir(spark, str(feed_dir), "events"))
+            .writeStream.outputMode("update")
+            .foreachBatch(foreach_batch_upserter(rollup, keys))
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(180)
+        assert q.exception() is None
+        assert q.recentProgress[-1].numInputRows == 0  # the no-data batch ran
+        expected = rows(daily_tally(spark.read.parquet(str(feed_dir))))
+        assert rows(spark.read.parquet(rollup)) == expected
+
+
 def test_watermark_append_mode_emits_closed_windows(spark, events_stream_dir):
     """ST4: append mode + watermark — only windows the watermark has passed
     are emitted; the tail stays in state (late data would still be merged)."""
