@@ -174,8 +174,7 @@ def item_cosine_pairs(
     (Sarwar et al. 2001): cos(i, j) = co(i,j) / √(n_i·n_j) on 0/1
     vectors, needing only the co-occurrence grid and per-item counts.
     Complements `assoc_rules_copurchase` (directional confidence/lift)
-    and `adamic_adar_links` (non-adjacent link PREDICTION) with the
-    symmetric similarity RANKING recommenders serve directly.
+    with the symmetric similarity RANKING recommenders serve directly.
 
     Pairs below ``min_co`` shared baskets are dropped (noise floor and
     the fanout cap — the support threshold every CF system applies);
@@ -184,9 +183,9 @@ def item_cosine_pairs(
     deterministic cross-engine.
 
     Scale shape: one distinct (basket, item) projection; the pair grid
-    comes from a basket-keyed self-join (fanout per-basket-size², the
-    copurchase_edges bound); counts and the final arithmetic run at
-    item/pair grain. TakeOrdered serves the top-N."""
+    comes from a basket-keyed self-join (fanout per-basket-size²);
+    counts and the final arithmetic run at item/pair grain. TakeOrdered
+    serves the top-N."""
     if min_co < 1 or top_n < 1:
         raise ValueError("min_co and top_n must be >= 1")
     bi = facts.select(

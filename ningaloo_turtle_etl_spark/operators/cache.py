@@ -6,8 +6,7 @@ Several operators persist a frame that multiple plan branches reference
 frames are lazy, so the operator cannot unpersist before the caller
 consumes them — instead every persist is registered here and released
 explicitly, so long-lived sessions issuing many calls don't accumulate
-storage. ``operators.dedup`` re-exports these as ``release_dedup_caches`` /
-``dedup_cache_scope`` (the original, test-pinned names).
+storage.
 """
 
 from __future__ import annotations

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import pandas_udf
 
+from ningaloo_turtle_etl_spark.operators.cache import track_cache
 from ningaloo_turtle_etl_spark.operators.text import tokens
 
 # --- cache lifecycle --------------------------------------------------------
@@ -30,32 +31,9 @@ from ningaloo_turtle_etl_spark.operators.text import tokens
 # reference it; without materialization the signature recomputes per branch).
 # The RESULT frames are lazy, so the operator cannot unpersist before the
 # caller consumes them — the shared tracker in operators.cache registers
-# every persist for explicit release, so long-lived sessions issuing many
-# dedup calls don't accumulate storage. Re-exported under the original names
-# (selection's DSIR shares the same registry).
-from ningaloo_turtle_etl_spark.operators.cache import (  # noqa: E402
-    release_tracked_caches,
-    track_cache as _track_cache,
-    tracked_cache_scope,
-)
-
-
-def release_dedup_caches() -> int:
-    """Unpersist every tracked operator cache since the last release. Call
-    after the result frames have been consumed (collected / written);
-    returns the number of caches released."""
-    return release_tracked_caches()
-
-
-def dedup_cache_scope():
-    """Context manager: operator caches created inside the scope are
-    unpersisted on exit. Consume (collect/write) results INSIDE the scope —
-    the frames are lazy and lose their backing cache at exit::
-
-        with dedup_cache_scope():
-            pairs = minhash_near_dup_pairs(docs).collect()
-    """
-    return tracked_cache_scope()
+# every persist for explicit release (operators.cache.release_tracked_caches
+# / tracked_cache_scope), so long-lived sessions issuing many dedup calls
+# don't accumulate storage.
 
 
 def spark_empty_pairs(df: DataFrame) -> DataFrame:
@@ -357,7 +335,7 @@ def minhash_near_dup_pairs(
             F.col(text_col).alias("_txt"),
             exact_text_fp(text_col).alias("_fp"),
         )
-        mem = _track_cache(
+        mem = track_cache(
             fp.select(
                 "id",
                 "_fp",
@@ -433,7 +411,7 @@ def minhash_near_dup_pairs(
     # (measured 200s vs 40s at 50k docs). Hashed shingles + signature are
     # ~1-2% of corpus size; MEMORY_AND_DISK spills cleanly. The cache cannot
     # be unpersisted here (the returned frame is lazy) — it is tracked;
-    # release with release_dedup_caches() / dedup_cache_scope() after
+    # release with release_tracked_caches() / tracked_cache_scope() after
     # consuming the result.
     # Signature per family: md5 derives slots from the already-hashed
     # shingle set (one digest per shingle, then integer min-folds —
@@ -446,7 +424,7 @@ def minhash_near_dup_pairs(
         sig_expr = minhash_slots_from_hashes(F.col("sh"), num_hashes)
     else:
         sig_expr = minhash_signature(F.col("sh_str"), num_hashes)
-    sig = _track_cache(
+    sig = track_cache(
         sh.select("id", "sh", sig_expr.alias("sig")).persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -960,8 +938,8 @@ def simhash_near_dup_pairs(
     # Persist: the signature is referenced from four self-join branches —
     # without materialization the signature expression runs once per branch.
     # Not unpersisted here (the result is lazy) — tracked; release with
-    # release_dedup_caches() / dedup_cache_scope() after consuming.
-    sh = _track_cache(sh.persist(StorageLevel.MEMORY_AND_DISK))
+    # release_tracked_caches() / tracked_cache_scope() after consuming.
+    sh = track_cache(sh.persist(StorageLevel.MEMORY_AND_DISK))
 
     w_max = max(bounds[k + 1] - bounds[k] for k in range(blocks))
 
@@ -1559,7 +1537,7 @@ def minhash_incremental_pairs(
         sig_expr = minhash_slots_from_hashes(F.col("sh"), num_hashes)
     else:
         sig_expr = minhash_signature(F.col("sh_str"), num_hashes)
-    sig = _track_cache(
+    sig = track_cache(
         sh.select("id", "_is_new", "sh", sig_expr.alias("sig")).persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -1853,7 +1831,7 @@ def winnowing_containment_pairs(
     fps = winnowing_fingerprints(df, text_col, id_col, k, window)
     from pyspark import StorageLevel
 
-    fps = _track_cache(fps.persist(StorageLevel.MEMORY_AND_DISK))
+    fps = track_cache(fps.persist(StorageLevel.MEMORY_AND_DISK))
     freq = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_nd"))
     kept = fps.join(
         freq.filter(F.col("_nd") <= F.lit(int(max_fp_docs))).select("fp"),

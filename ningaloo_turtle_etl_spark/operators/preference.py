@@ -15,8 +15,7 @@ pairing, so fanout is contexts x k² for k items per context (k is single
 digits in practice), never rows². ``bradley_terry_ratings`` aggregates
 battles to the (winner, loser) grid — at most items² rows, bounded by
 ``max_items`` — and iterates driver-side on that bounded grid (the same
-bounded-driver policy as the PAV / Theil-Sen fits); the fact table is
-touched exactly once.
+policy as the PAV fit); the fact table is touched exactly once.
 """
 
 from __future__ import annotations
@@ -82,8 +81,8 @@ def bradley_terry_ratings(
     weak opponents above one that grinded strong ones; BT cannot.
 
     ``iterations`` fixed-count synchronous rounds (deterministic, no
-    convergence test — replayable cross-engine exactly like the pagerank
-    / k-core unrolled oracles). Items that never win rate exactly 0 (MM
+    convergence test — replayable cross-engine exactly like the kmeans /
+    logistic-GD unrolled oracles). Items that never win rate exactly 0 (MM
     fixed point); guarded division skips the p_i+p_j = 0 terms that only
     those items can produce.
 

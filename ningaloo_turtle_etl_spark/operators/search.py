@@ -99,7 +99,8 @@ def top_bigram(docs: DataFrame, text_col: str = "text") -> tuple[str, str]:
     toks = tokens(F.lower(F.col(text_col)))
     # Generate barrier + shifted-array zip_with: per-position
     # element_at(toks, i) let CollapseProject inline the tokenizer into
-    # every lookup — O(tokens²) per doc (the textrank r11 cliff)
+    # every lookup — O(tokens²) per doc (the same CollapseProject cliff
+    # as the winnowing fingerprints in operators/dedup.py)
     tk = F.col("_tk")
     m = F.size(tk) - F.lit(1)
     pairs = F.when(

@@ -469,8 +469,7 @@ def dsir_top_select(
     single time (two scans → one; the right default when the corpus scan
     dominates). The persist is registered with the shared operator-cache
     tracker: release it after consuming the result
-    (``operators.cache.release_tracked_caches`` / ``tracked_cache_scope``,
-    also exposed as ``release_dedup_caches`` / ``dedup_cache_scope``).
+    (``operators.cache.release_tracked_caches`` / ``tracked_cache_scope``).
     ``share_scan=False`` skips the materialization and scans twice —
     faster when the input is small or page-cached (see ``dsir_scores``)."""
     db = None
@@ -775,7 +774,7 @@ def kcenter_select(
     (dataset distillation seeds, eval-set diversification, k-means++-
     style initialization at corpus scale).
 
-    Distributed shape (the BFS/kmeans round pattern): a persisted
+    Distributed shape (the kmeans round pattern): a persisted
     (id, vec, dmin) state frame; each round updates dmin =
     least(dmin, ‖x − c_new‖²) with the NEW center embedded as literals —
     one map pass, no join — then takes the argmax by TakeOrdered

@@ -1064,7 +1064,7 @@ def kmeans_lloyd(
     combined aggregate — the shape that holds at 10^9 vectors, where a
     sample-fit can misplace small clusters.
 
-    Determinism across engines (the pagerank integer-micro convention):
+    Determinism across engines (the repo's integer-micro convention):
     vectors quantize ONCE to integer micro-units (round(x·1e6)); all
     distances are exact-integer sums of squared micro deltas, so argmin
     ties break identically everywhere; centroid updates are exact integer
@@ -1194,7 +1194,8 @@ def mf_gd_factors(
     factor vectors (factor tables are entity-sized — broadcast when they
     fit, hash-join co-partitioned by key when they don't) and two
     map-side-combined aggregates; rounds are driver-counted with a
-    localCheckpoint each (O(1) lineage, the pagerank convention).
+    localCheckpoint each (O(1) lineage, the connected_components
+    convention).
     Returns ('cust'|'part'-style side labels via col names) — one row
     per user and per item: (side, id, factor, train_rmse), where
     train_rmse is the final-model fit over the training pairs."""
@@ -1604,7 +1605,8 @@ def pca_power_components(
     argument), so the unrolled DuckDB oracle is untouched."""
     # localCheckpoint (not persist): severs the upstream lineage so the
     # driver does not re-analyze a potentially huge input plan on every
-    # per-round job — the kmeans/pagerank O(1)-lineage convention
+    # per-round job — the kmeans/connected_components O(1)-lineage
+    # convention
     base = corpus.select(
         F.col(id_col).alias("vid"),
         F.transform(
@@ -1715,7 +1717,7 @@ def pca_power_component(
     # localCheckpoint (not persist): severs the upstream lineage so the
     # driver does not re-analyze a potentially huge input plan (unions,
     # deep pipelines) on every one of the per-round jobs — the same O(1)
-    # lineage convention as kmeans/pagerank rounds
+    # lineage convention as kmeans/connected_components rounds
     base = corpus.select(
         F.col(id_col).alias("vid"),
         F.transform(

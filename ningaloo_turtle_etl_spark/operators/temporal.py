@@ -664,10 +664,10 @@ def markov_removal_attribution(
 
     Absorption runs ``rounds`` fixed synchronous value-iteration steps
     (journeys longer than ``rounds`` contribute nothing — identical
-    truncation on both engines, same fixed-iteration policy as
-    pagerank/mSPRT). Converting users with no touches contribute
-    START→CONV; non-converting users with no touches carry no signal and
-    are dropped. Output per channel: (channel, n_touches,
+    truncation on both engines, same fixed-iteration policy as the
+    kmeans / GD training rounds). Converting users with no touches
+    contribute START→CONV; non-converting users with no touches carry no
+    signal and are dropped. Output per channel: (channel, n_touches,
     removal_effect, attribution_share), 6dp — removal_effect =
     1 − p_removed/p_base, shares normalized over positive effects.
 

@@ -1224,96 +1224,3 @@ def rake_keywords(
         rows,
         "phrase string, n_occurrences long, n_words int, rake_score double",
     ).orderBy(F.desc("rake_score"), F.asc("phrase"))
-
-
-def textrank_keywords(
-    docs: DataFrame,
-    text_col: str = "text",
-    top_k: int = 20,
-    iterations: int = 3,
-    damping: float = 0.85,
-    min_token_len: int = 4,
-) -> DataFrame:
-    """TextRank keyword extraction (Mihalcea & Tarau, EMNLP'04): build
-    the token co-occurrence graph — an undirected edge per ADJACENT pair
-    of content tokens (lowercase, alphabetic, ≥ ``min_token_len`` chars;
-    adjacency measured on the filtered sequence, the paper's window=2)
-    weighted by corpus-wide co-occurrence count — then run the weighted
-    PageRank recursion and report the global top-``top_k`` tokens. The
-    unsupervised keyword scorer that needs no training data: a token
-    ranks high when it co-occurs with other high-ranking tokens, which
-    separates structural vocabulary from filler better than raw counts.
-
-    Returns (token, rank, pos), pos = 1..top_k by (rank DESC, token) —
-    rank is exact micros/1e6, so the 6dp order is the integer order.
-
-    Scale shape: pair extraction is map-only (slice-zip inside the row,
-    no positional self-join); the graph lives on the VOCABULARY² grain
-    bounded by observed adjacencies, not the corpus; each PageRank round
-    is one vocabulary-sized join + aggregate (weighted_pagerank's
-    contract). The final top-k window runs on the vocabulary table."""
-    from pyspark.sql.window import Window
-
-    from ningaloo_turtle_etl_spark.operators.graph import weighted_pagerank
-
-    pat = rf"^[a-z]{{{min_token_len},}}$"
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"),
-        lambda t: t.rlike(pat),
-    )
-    # explode(array(toks)) Generate barrier, then shifted-array zip_with:
-    # the former per-position element_at(toks, i) transform let
-    # CollapseProject inline the split+rlike tokenizer into EVERY
-    # element_at, re-tokenizing the whole document once per position —
-    # O(tokens²) per doc, measured 12.8 s → 0.5 s for the sf0.1 pair
-    # extraction (the winnowing 64× cliff class, found by the r11
-    # textrank reconciliation)
-    barrier = docs.select(F.explode(F.array(toks)).alias("_tk"))
-    tk = F.col("_tk")
-    m = F.size(tk) - F.lit(1)
-    prs = F.when(
-        F.size(tk) >= 2,
-        F.zip_with(
-            F.slice(tk, 1, m),
-            F.slice(tk, 2, m),
-            lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    ab = (
-        barrier.select(F.explode(prs).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-    und = ab.groupBy(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).agg(F.count(F.lit(1)).cast("long").alias("w"))
-    # symmetric expansion via explode, NOT union(select, select): a
-    # union re-evaluates the und lineage (the full corpus pair-extract
-    # scan) once per branch; explode of a 2-struct array emits both
-    # directions in one pass over und
-    edges = und.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("u").alias("src"),
-                    F.col("v").alias("dst"),
-                    F.col("w").alias("w"),
-                ),
-                F.struct(
-                    F.col("v").alias("src"),
-                    F.col("u").alias("dst"),
-                    F.col("w").alias("w"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst", "e.w")
-    ranked = weighted_pagerank(
-        edges, iterations=iterations, damping=damping
-    )
-    w = Window.orderBy(F.desc("rank"), F.asc("node"))
-    return (
-        ranked.withColumn("pos", F.row_number().over(w).cast("int"))
-        .filter(F.col("pos") <= top_k)
-        .select(F.col("node").alias("token"), "rank", "pos")
-        .orderBy("pos")
-    )

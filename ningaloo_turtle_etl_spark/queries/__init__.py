@@ -23,6 +23,5 @@ import ningaloo_turtle_etl_spark.queries.spatial  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.stats_queries  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.streaming_batch  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.temporal  # noqa: F401
-import ningaloo_turtle_etl_spark.queries.trend  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.webtext  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.windows  # noqa: F401

@@ -2944,119 +2944,6 @@ def bm25_top10(spark, sf_dir):
     return bm25_topk(idx, [a, b], k=10)
 
 
-def _pagerank_oracle_sql(iterations: int, damping: float = 0.85) -> str:
-    """Unrolled power-iteration oracle (same chaining trick as the BPE
-    merge loop): one CTE per round. All arithmetic mirrors the operator:
-    0.85 is forced to DOUBLE (DuckDB would otherwise do DECIMAL math and
-    round differently), contributions round to whole micro-units before
-    the exact-integer sum."""
-    base = int(round((1.0 - damping) * 1e6))
-    parts = [
-        """
-    eo AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS src
-           FROM lineitem),
-    ed0 AS (
-        SELECT DISTINCT a.src AS src, b.src AS dst
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.src <> b.src
-    ),
-    od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-           FROM ed0 GROUP BY src),
-    ed AS (SELECT ed0.src, ed0.dst, od.outdeg
-           FROM ed0 JOIN od USING (src)),
-    nodes AS (SELECT src AS node FROM ed0
-              UNION SELECT dst FROM ed0),
-    r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rm FROM nodes)"""
-    ]
-    for i in range(1, iterations + 1):
-        parts.append(
-            f""",
-    r{i} AS (
-        SELECT n.node, CAST({base} + COALESCE(s.s, 0) AS BIGINT) AS rm
-        FROM nodes n LEFT JOIN (
-            SELECT ed.dst AS node,
-                   CAST(SUM(CAST(ROUND(CAST({damping} AS DOUBLE) * r.rm
-                       / ed.outdeg, 0) AS BIGINT)) AS BIGINT) AS s
-            FROM ed JOIN r{i - 1} r ON ed.src = r.node
-            GROUP BY ed.dst
-        ) s ON n.node = s.node
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f"""
-    SELECT node, ROUND(rm / 1e6, 6) AS rank FROM r{iterations}"""
-    )
-
-
-@register("pagerank_copurchase", _pagerank_oracle_sql(5))
-def pagerank_copurchase(spark, sf_dir):
-    """PageRank (5 synchronous power iterations, d=0.85) over the part
-    co-purchase graph — parts are linked when they share an order. The
-    Spark side is a driver-counted distributed loop (rank vector joins
-    degree-annotated edges, dst-keyed integer-exact reduce per round);
-    the oracle unrolls the same five rounds into chained CTEs."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        copurchase_edges,
-        pagerank,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = copurchase_edges(li)
-    return pagerank(edges, iterations=5, damping=0.85).select(
-        "node", "rank"
-    )
-
-
-@register(
-    "bfs_hop_distance",
-    """
-    WITH RECURSIVE
-    eo AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS src
-           FROM lineitem),
-    ed AS (
-        SELECT DISTINCT a.src AS src, b.src AS dst
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.src <> b.src
-    ),
-    walk(node, hops) AS (
-        SELECT DISTINCT src AS node, 0 AS hops FROM eo WHERE src <= 3
-        UNION
-        SELECT ed.dst, w.hops + 1
-        FROM walk w JOIN ed ON ed.src = w.node
-        WHERE w.hops < 3
-    )
-    SELECT CAST(node AS BIGINT) AS node, CAST(MIN(hops) AS INT) AS hops
-    FROM walk GROUP BY node ORDER BY node
-    """,
-)
-def bfs_hop_distance(spark, sf_dir):
-    """Multi-source BFS (`operators/graph.py bfs_hops`, 3 rounds) over
-    the part co-purchase graph from the seed set {parts 1-3 present in
-    lineitem}: minimum hop count to every node within 3 hops. Spark
-    expands a frontier per round (frontier-sized joins, visited-set
-    anti-join, each node expanded once ever); the oracle states the same
-    semantics independently as a depth-bounded recursive CTE with a
-    MIN(hops) rollup — a different algorithm shape entirely, so
-    agreement pins the traversal, not the implementation."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        bfs_hops,
-        copurchase_edges,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = copurchase_edges(li)
-    seeds = (
-        li.filter(F.col("l_partkey") <= 3)
-        .select(F.col("l_partkey").alias("node"))
-        .distinct()
-    )
-    return (
-        bfs_hops(edges, seeds, max_hops=3)
-        .select("node", F.col("hops").cast("int").alias("hops"))
-        .orderBy("node")
-    )
-
-
 # Ed-Join prefix-filtered edit-distance pairs over customer names — shared
 # between the pair query and the entity-resolution clustering on top of it.
 _EDIT_CTES = """
@@ -3118,59 +3005,6 @@ def edit_similarity_pairs(spark, sf_dir):
     return edit_similarity_self_join(
         cust, text_col="c_name", id_col="c_custkey", max_edit=1, q=3
     )
-
-
-@register(
-    "triangle_clustering",
-    """
-    WITH eo AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                FROM lineitem),
-    e AS (
-        SELECT DISTINCT LEAST(a.p, b.p) AS a, GREATEST(a.p, b.p) AS b
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.p <> b.p
-    ),
-    deg AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
-            SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-        GROUP BY node
-    ),
-    tri AS (
-        SELECT w.x, w.y, w.z
-        FROM (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-              FROM e e1 JOIN e e2 ON e1.a = e2.a AND e1.b < e2.b) w
-        JOIN e ON e.a = w.y AND e.b = w.z
-    ),
-    corners AS (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS triangles FROM (
-            SELECT x AS node FROM tri
-            UNION ALL SELECT y FROM tri
-            UNION ALL SELECT z FROM tri)
-        GROUP BY node
-    )
-    SELECT d.node, d.degree,
-           COALESCE(c.triangles, 0) AS triangles,
-           ROUND(CASE WHEN d.degree >= 2
-                 THEN COALESCE(c.triangles, 0)
-                      / (d.degree * (d.degree - 1) / 2.0)
-                 ELSE 0.0 END, 6) AS clustering_coeff
-    FROM deg d LEFT JOIN corners c ON d.node = c.node
-    """,
-)
-def triangle_clustering(spark, sf_dir):
-    """Per-node triangle counts and local clustering coefficients over the
-    part co-purchase graph, via the oriented wedge-close (wedges built
-    only at each triangle's smallest corner, bounding hub fan-out)."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        copurchase_edges,
-        triangle_stats,
-    )
-    from ningaloo_turtle_etl_spark.operators.cache import (
-        release_tracked_caches,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    out = triangle_stats(copurchase_edges(li))
-    return out
 
 
 @register(
@@ -3414,70 +3248,6 @@ def entity_resolution_clusters(spark, sf_dir):
         .select("cluster_id", "member_id", "member_name", "rep_name", "n_members")
         .orderBy("cluster_id", "member_id")
     )
-
-
-def _kcore_oracle_sql(k: int, rounds: int) -> str:
-    """Unrolled synchronous-peeling oracle (the pagerank/BPE chaining
-    trick): one degree-filter-prune CTE triple per round. Peeling is
-    idempotent at fixpoint, so ``rounds`` only needs to be >= the true
-    peeling depth at every graded SF (measured: 0 / 10 / 2 rounds at
-    sf0.001 / 0.01 / 0.1 — 16 leaves margin); the Spark operator
-    independently raises if IT hasn't converged, so a too-shallow unroll
-    can't silently pass."""
-    parts = [
-        """
-    eo AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem),
-    -- MATERIALIZED stops DuckDB inlining each round's CTE into its (several)
-    -- consumers — inlined, the chain re-expands the base scan ~5^rounds times.
-    e0 AS MATERIALIZED (
-        SELECT a.s AS a, b.s AS b
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.s < b.s
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    )"""
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(
-            f""",
-    d{i} AS MATERIALIZED (
-        SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-            SELECT a AS node FROM e{i - 1}
-            UNION ALL SELECT b FROM e{i - 1}
-        ) GROUP BY 1
-    ),
-    k{i} AS MATERIALIZED (SELECT node FROM d{i} WHERE deg >= {k}),
-    e{i} AS MATERIALIZED (
-        SELECT a, b FROM e{i - 1}
-        WHERE a IN (SELECT node FROM k{i})
-          AND b IN (SELECT node FROM k{i})
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f"""
-    SELECT node, CAST(COUNT(*) AS BIGINT) AS core_degree FROM (
-        SELECT a AS node FROM e{rounds} UNION ALL SELECT b FROM e{rounds}
-    ) GROUP BY 1 ORDER BY node"""
-    )
-
-
-@register("kcore_copurchase", _kcore_oracle_sql(3, 16))
-def kcore_copurchase(spark, sf_dir):
-    """3-core of the support-2 co-purchase graph (`operators/graph.py
-    k_core`): parts that survive iterative peeling to a mutually-dense
-    cluster — the dense-substructure filter a one-shot degree cut can't
-    express (removing a weak node strips its neighbors). Spark peels to
-    fixpoint with a driver-counted loop (degree agg + two semi-joins per
-    round on the shrinking subgraph); the oracle unrolls the same
-    synchronous rounds as chained CTEs."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        copurchase_edges,
-        k_core,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = copurchase_edges(li, min_shared=2)
-    return k_core(edges, k=3).orderBy("node")
 
 
 @register(
@@ -4257,8 +4027,8 @@ def q_assoc_rules_copurchase(spark, sf_dir):
     pair min_support=2 with support / confidence / lift. The item dim is
     support-pruned BEFORE the per-basket pair blowup (downward closure),
     the pair join is basket-keyed so the quadratic term stays per-basket,
-    and the rule metrics are two broadcast dim joins — the affinity
-    companion to pagerank/kcore over the same facts."""
+    and the rule metrics are two broadcast dim joins — the directed
+    companion to item_cosine_top100 over the same facts."""
     from ningaloo_turtle_etl_spark.operators.basket import association_rules
 
     li = load_table(spark, "lineitem", sf_dir)
@@ -4904,68 +4674,6 @@ def q_kneser_ney_lm_scores(spark, sf_dir):
     return kneser_ney_bigram_scores(docs, discount=0.75)
 
 
-def _lpa_oracle_sql(rounds: int = 8, min_shared: int = 2) -> str:
-    """Unrolled synchronous-LPA oracle: the support-thresholded symmetric
-    co-purchase edge list, then one count→argmax CTE per round (same
-    MATERIALIZED discipline as the k-core unroll — each round's labels
-    feed one join, but DuckDB would still inline the chain)."""
-    parts = [
-        f"""
-    WITH eo AS (
-        SELECT DISTINCT l_orderkey AS ok, l_partkey AS s FROM lineitem
-    ),
-    e AS MATERIALIZED (
-        SELECT a.s AS a, b.s AS b
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.s <> b.s
-        GROUP BY 1, 2 HAVING COUNT(*) >= {min_shared}
-    ),
-    l0 AS MATERIALIZED (
-        SELECT DISTINCT a AS node, a AS label FROM e
-    )"""
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(
-            f""",
-    l{i} AS MATERIALIZED (
-        SELECT node, label FROM (
-            SELECT e.a AS node, l.label,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY e.a
-                       ORDER BY COUNT(*) DESC, l.label
-                   ) AS rk
-            FROM e JOIN l{i - 1} l ON e.b = l.node
-            GROUP BY e.a, l.label
-        ) WHERE rk = 1
-    )"""
-        )
-    parts.append(
-        f"""
-    SELECT node, label AS community
-    FROM l{rounds} ORDER BY node"""
-    )
-    return "".join(parts)
-
-
-@register("lpa_copurchase_communities", _lpa_oracle_sql(8, 2))
-def lpa_copurchase_communities(spark, sf_dir):
-    """Synchronous label-propagation communities over the support-2
-    co-purchase graph (`operators/graph.py
-    label_propagation_communities`, 8 fixed rounds): parts adopt the
-    most-frequent neighbor label (ties to the smallest), finding DENSE
-    purchase affinity groups inside the giant connected component —
-    the community structure connected_components (which merges anything
-    touching) and k-core (which only filters) cannot express. The oracle
-    unrolls the same synchronous rounds as materialized CTEs."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        copurchase_edges,
-        label_propagation_communities,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = copurchase_edges(li, min_shared=2)
-    return label_propagation_communities(edges, rounds=8).orderBy("node")
-
-
 def _rbo_oracle_sql(p: float = 0.9, depth: int = 10) -> str:
     """LSH-vs-exact RBO oracle: both ranking halves are the existing ANN
     oracles; each shared (query, item) contributes the literal
@@ -5243,7 +4951,7 @@ def ppjoin_jaccard_pairs(spark, sf_dir):
 
 
 def _kmeans_oracle_sql(k: int = 8, iterations: int = 3, dim: int = 64) -> str:
-    """Unrolled Lloyd oracle (the pagerank/BPE chaining trick): one
+    """Unrolled Lloyd oracle (the BPE merge-loop chaining trick): one
     assign→sum→recenter CTE triple per iteration. Every number is exact
     integer micro arithmetic — quantize once, integer squared-distance
     sums, exact half-up recentering floor(s/n + 1/2) = (2s+n) // (2n)
@@ -5329,131 +5037,6 @@ def kmeans_embedding_clusters(spark, sf_dir):
 
     emb = load_table(spark, "embeddings", sf_dir)
     return kmeans_lloyd(emb, k=8, iterations=3).orderBy("cluster")
-
-
-def _hits_oracle_sql(iterations: int = 5) -> str:
-    """Unrolled HITS oracle: two propagate→total→requantize CTE triples
-    per round, all exact-integer (the (2·raw·1e6 + tot) // (2·tot)
-    half-up division mirrors the operator's `div` exactly)."""
-    parts = [
-        """
-    eo AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS src
-           FROM lineitem),
-    ed AS MATERIALIZED (
-        SELECT DISTINCT a.src AS src, b.src AS dst
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.src <> b.src
-    ),
-    nodes AS MATERIALIZED (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
-    h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS m FROM nodes)"""
-    ]
-    for t in range(1, iterations + 1):
-        for tag, kin, kout in (("a", "src", "dst"), ("h", "dst", "src")):
-            prev = f"h{t - 1}" if tag == "a" else f"a{t}"
-            parts.append(
-                f""",
-    {tag}r{t} AS MATERIALIZED (
-        SELECT n.node, CAST(COALESCE(s.s, 0) AS BIGINT) AS raw
-        FROM nodes n LEFT JOIN (
-            SELECT ed.{kout} AS node, CAST(SUM(v.m) AS BIGINT) AS s
-            FROM ed JOIN {prev} v ON ed.{kin} = v.node
-            GROUP BY ed.{kout}
-        ) s ON n.node = s.node
-    ),
-    {tag}t{t} AS (SELECT CAST(SUM(raw) AS BIGINT) AS tot FROM {tag}r{t}),
-    {tag}{t} AS MATERIALIZED (
-        SELECT node,
-               CASE WHEN tot > 0
-                    THEN (2 * raw * 1000000 + tot) // (2 * tot)
-                    ELSE CAST(0 AS BIGINT) END AS m
-        FROM {tag}r{t}, {tag}t{t}
-    )"""
-            )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f"""
-    SELECT n.node, ROUND(a.m / 1e6, 6) AS auth, ROUND(h.m / 1e6, 6) AS hub
-    FROM nodes n
-    JOIN a{iterations} a ON n.node = a.node
-    JOIN h{iterations} h ON n.node = h.node
-    ORDER BY n.node"""
-    )
-
-
-@register("hits_copurchase", _hits_oracle_sql(5))
-def hits_copurchase(spark, sf_dir):
-    """HITS hubs & authorities (5 synchronous rounds, integer-micro
-    normalization) over the part co-purchase graph
-    (`operators/graph.py hits_scores`): separates basket ANCHORS
-    (authorities) from basket BINDERS (hubs), the two roles pagerank's
-    single endorsement score mixes. The oracle unrolls all ten
-    half-steps into chained exact-integer CTEs."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        copurchase_edges,
-        hits_scores,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = copurchase_edges(li)
-    return hits_scores(edges, iterations=5).orderBy("node")
-
-
-@register(
-    "adamic_adar_part_links",
-    """
-    WITH eo AS MATERIALIZED (
-        SELECT DISTINCT l_orderkey AS ok, l_partkey AS src FROM lineitem
-    ),
-    e2 AS MATERIALIZED (
-        SELECT a.src AS a, b.src AS b
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.src <> b.src
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    ),
-    und AS MATERIALIZED (SELECT DISTINCT a, b FROM e2),
-    deg AS (SELECT a, CAST(COUNT(*) AS BIGINT) AS deg FROM und GROUP BY a),
-    centers AS MATERIALIZED (
-        SELECT und.a AS z, und.b AS nb,
-               CAST(round(1e6 / ln(CAST(deg AS DOUBLE))) AS BIGINT) AS w
-        FROM und JOIN deg ON und.a = deg.a
-        WHERE deg BETWEEN 2 AND 1000
-    ),
-    scored AS (
-        SELECT x.nb AS id_a, y.nb AS id_b,
-               CAST(COUNT(*) AS BIGINT) AS n_common,
-               CAST(SUM(x.w) AS BIGINT) AS wm
-        FROM centers x JOIN centers y
-          ON x.z = y.z AND x.nb < y.nb
-        GROUP BY 1, 2
-    ),
-    pred AS (
-        SELECT s.id_a, s.id_b, s.n_common, s.wm
-        FROM scored s LEFT JOIN und ex
-          ON s.id_a = ex.a AND s.id_b = ex.b
-        WHERE ex.a IS NULL
-    )
-    SELECT id_a, id_b, n_common, ROUND(wm / 1e6, 6) AS aa_score
-    FROM pred ORDER BY aa_score DESC, id_a, id_b LIMIT 200
-    """,
-)
-def adamic_adar_part_links(spark, sf_dir):
-    """Adamic-Adar link prediction over the support-2 part co-purchase
-    graph (`operators/graph.py adamic_adar_links`): the top-200
-    NON-adjacent part pairs most likely to co-occur next, scored by
-    selectivity-weighted common neighbors — wedge weights quantize to
-    integer micros before the per-pair sum, wedge centers are capped at
-    degree 1000."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        adamic_adar_links,
-        copurchase_edges,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    edges = copurchase_edges(li, min_shared=2)
-    return (
-        adamic_adar_links(edges, max_degree=1000)
-        .orderBy(F.desc("aa_score"), "id_a", "id_b")
-        .limit(200)
-    )
 
 
 @register(
@@ -5811,7 +5394,7 @@ def gini_best_split_features(spark, sf_dir):
 
 def _logistic_gd_oracle_sql(iterations: int = 3, lr: float = 0.5) -> str:
     """Unrolled full-batch gradient-descent oracle: one gradient CTE +
-    one weight CTE per iteration (the pagerank/BPE chaining trick).
+    one weight CTE per iteration (the BPE merge-loop chaining trick).
     Per-row gradient terms quantize to integer nanos before the exact-
     integer SUM, mirroring the operator; the weight step arithmetic is
     written with identical operation order."""
@@ -6387,164 +5970,6 @@ def ann_hamming_topk(spark, sf_dir):
 
     emb = load_table(spark, "embeddings", sf_dir)
     return hamming_topk(emb, emb.filter(F.col("vec_id") < 8), dim=64, k=10)
-
-
-def _textrank_oracle_sql(
-    iterations: int = 3, damping: float = 0.85, top_k: int = 20
-) -> str:
-    r"""Unrolled weighted-PageRank oracle for textrank_keywords: the same
-    chained-CTE pattern as _pagerank_oracle_sql, with co-occurrence
-    weights (contribution = round(d·rank·w/strength) in whole micros)
-    and the map-only adjacent-pair extraction replayed with list
-    functions."""
-    base = int(round((1.0 - damping) * 1e6))
-    parts = [
-        r"""
-    tl AS (
-        SELECT list_filter(string_split_regex(lower(text), '\s+'),
-               x -> regexp_matches(x, '^[a-z]{4,}$')) AS l
-        FROM documents
-    ),
-    adj AS (
-        SELECT unnest(list_transform(generate_series(1, len(l) - 1),
-               i -> struct_pack(a := l[i], b := l[i + 1]))) AS p
-        FROM tl
-    ),
-    ab AS (SELECT p.a AS a, p.b AS b FROM adj WHERE p.a <> p.b),
-    und AS (
-        SELECT least(a, b) AS u, greatest(a, b) AS v,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM ab GROUP BY 1, 2
-    ),
-    ed0 AS (
-        SELECT u AS src, v AS dst, w FROM und
-        UNION ALL SELECT v, u, w FROM und
-    ),
-    st AS (SELECT src, CAST(SUM(w) AS BIGINT) AS strength
-           FROM ed0 GROUP BY src),
-    ed AS (SELECT ed0.src, ed0.dst, ed0.w, st.strength
-           FROM ed0 JOIN st USING (src)),
-    nodes AS (SELECT src AS node FROM ed0
-              UNION SELECT dst FROM ed0),
-    r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rm FROM nodes)"""
-    ]
-    for i in range(1, iterations + 1):
-        parts.append(
-            f""",
-    r{i} AS (
-        SELECT n.node, CAST({base} + COALESCE(s.s, 0) AS BIGINT) AS rm
-        FROM nodes n LEFT JOIN (
-            SELECT ed.dst AS node,
-                   CAST(SUM(CAST(ROUND(CAST({damping} AS DOUBLE) * r.rm
-                       * ed.w / ed.strength, 0) AS BIGINT)) AS BIGINT) AS s
-            FROM ed JOIN r{i - 1} r ON ed.src = r.node
-            GROUP BY ed.dst
-        ) s ON n.node = s.node
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f"""
-    SELECT token, rank, pos FROM (
-        SELECT node AS token, ROUND(rm / 1e6, 6) AS rank,
-               CAST(ROW_NUMBER() OVER (ORDER BY rm DESC, node) AS INT)
-                   AS pos
-        FROM r{iterations}
-    ) WHERE pos <= {top_k} ORDER BY pos"""
-    )
-
-
-@register("textrank_keywords", _textrank_oracle_sql(3))
-def q_textrank_keywords(spark, sf_dir):
-    """TextRank keyword extraction over the corpus (`operators/text.py
-    textrank_keywords` → `operators/graph.py weighted_pagerank`): global
-    top-20 tokens by 3 rounds of the weighted PageRank recursion on the
-    adjacent-token co-occurrence graph — the unsupervised keyword scorer
-    of the curation stack. The oracle unrolls the identical integer-
-    micro rounds as chained CTEs."""
-    from ningaloo_turtle_etl_spark.operators.text import textrank_keywords
-
-    docs = load_table(spark, "documents", sf_dir)
-    return textrank_keywords(docs, top_k=20, iterations=3)
-
-
-def _ppr_oracle_sql(
-    iterations: int, damping: float = 0.85, brand: str = "Brand#11"
-) -> str:
-    """Unrolled personalized-PageRank oracle: the pagerank CTE chain
-    with teleport mass restricted to the seed nodes (is_seed · base per
-    round, seed-only initial mass)."""
-    base = int(round((1.0 - damping) * 1e6))
-    parts = [
-        f"""
-    eo AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS src
-           FROM lineitem),
-    ed0 AS (
-        SELECT DISTINCT a.src AS src, b.src AS dst
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.src <> b.src
-    ),
-    od AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg
-           FROM ed0 GROUP BY src),
-    ed AS (SELECT ed0.src, ed0.dst, od.outdeg
-           FROM ed0 JOIN od USING (src)),
-    nodes0 AS (SELECT src AS node FROM ed0
-               UNION SELECT dst FROM ed0),
-    sd AS (SELECT DISTINCT p_partkey AS node FROM part
-           WHERE p_brand = '{brand}'),
-    nodes AS (
-        SELECT n.node,
-               CASE WHEN s.node IS NULL THEN 0 ELSE 1 END AS is_seed
-        FROM nodes0 n LEFT JOIN sd s ON n.node = s.node
-    ),
-    r0 AS (SELECT node, CAST(is_seed * 1000000 AS BIGINT) AS rm
-           FROM nodes)"""
-    ]
-    for i in range(1, iterations + 1):
-        parts.append(
-            f""",
-    r{i} AS (
-        SELECT n.node,
-               CAST(n.is_seed * {base} + COALESCE(s.s, 0) AS BIGINT) AS rm
-        FROM nodes n LEFT JOIN (
-            SELECT ed.dst AS node,
-                   CAST(SUM(CAST(ROUND(CAST({damping} AS DOUBLE) * r.rm
-                       / ed.outdeg, 0) AS BIGINT)) AS BIGINT) AS s
-            FROM ed JOIN r{i - 1} r ON ed.src = r.node
-            GROUP BY ed.dst
-        ) s ON n.node = s.node
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f"""
-    SELECT node, ROUND(rm / 1e6, 6) AS rank FROM r{iterations}"""
-    )
-
-
-@register("ppr_copurchase_brand", _ppr_oracle_sql(5))
-def ppr_copurchase_brand(spark, sf_dir):
-    """Personalized PageRank from one brand's parts over the co-purchase
-    graph (`operators/graph.py personalized_pagerank`, 5 rounds, d=0.85):
-    random walk with restart at the Brand#11 seed set — proximity-to-
-    seeds item recommendation, where global pagerank_copurchase would
-    resurface the same overall hubs for every brand. Integer-micro
-    rounds, seed set broadcast once."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        copurchase_edges,
-        personalized_pagerank,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    part = load_table(spark, "part", sf_dir)
-    seeds = part.filter(F.col("p_brand") == "Brand#11").select(
-        F.col("p_partkey").alias("node")
-    )
-    edges = copurchase_edges(li)
-    return personalized_pagerank(edges, seeds, iterations=5).select(
-        "node", "rank"
-    )
 
 
 def _unigram_oracle_sql(top_k: int = 64, L: int = 4) -> str:
@@ -7310,71 +6735,6 @@ def ann_matryoshka_topk(spark, sf_dir):
 
 
 @register(
-    "modularity_copurchase_brands",
-    """
-    WITH items AS (
-        SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-    ),
-    edges AS (
-        SELECT DISTINCT a.pk AS src, b.pk AS dst
-        FROM items a JOIN items b USING (ok) WHERE a.pk <> b.pk
-    ),
-    e2 AS (
-        SELECT e.src, e.dst, ps.p_brand AS cs, pd.p_brand AS cd
-        FROM edges e
-        JOIN part ps ON e.src = ps.p_partkey
-        JOIN part pd ON e.dst = pd.p_partkey
-    ),
-    per_c AS (
-        SELECT cs AS community,
-               CAST(COUNT(DISTINCT src) AS BIGINT) AS n_nodes,
-               CAST(COUNT(*) AS BIGINT) AS degree_sum,
-               CAST(SUM(CASE WHEN cs = cd THEN 1 ELSE 0 END) AS BIGINT)
-                   AS intra_directed
-        FROM e2 GROUP BY 1
-    ),
-    m2 AS (SELECT CAST(SUM(degree_sum) AS BIGINT) AS m2 FROM per_c),
-    terms AS (
-        SELECT community, n_nodes, degree_sum, intra_directed,
-               CAST(intra_directed AS DOUBLE) / CAST(m2 AS DOUBLE)
-               - (CAST(degree_sum AS DOUBLE) / CAST(m2 AS DOUBLE))
-                 * (CAST(degree_sum AS DOUBLE) / CAST(m2 AS DOUBLE))
-                   AS qt
-        FROM per_c, m2
-    ),
-    qtot AS (
-        SELECT SUM(CAST(ROUND(qt * 1000000.0, 0) AS HUGEINT)) AS qs
-        FROM terms
-    )
-    SELECT community, n_nodes, degree_sum, intra_directed,
-           ROUND(qt, 6) AS q_term,
-           ROUND(CAST(qs AS DOUBLE) / 1000000.0, 6) AS modularity
-    FROM terms, qtot ORDER BY community
-    """,
-)
-def modularity_copurchase_brands(spark, sf_dir):
-    """Newman modularity of the BRAND partition over the part
-    co-purchase graph (`operators/graph.py newman_modularity`): scores
-    a given partition instead of discovering one — the quality metric
-    complement to lpa_copurchase_communities, usable on any labeling
-    (LPA output, brands, shard plans). Exact bigint degree/intra
-    counts on the community grain; micro-quantized Q terms summed
-    exactly."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        copurchase_edges,
-        newman_modularity,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    parts = load_table(spark, "part", sf_dir).select(
-        F.col("p_partkey").alias("node"),
-        F.col("p_brand").alias("community"),
-    )
-    edges = copurchase_edges(li)
-    return newman_modularity(edges, parts, "node", "community")
-
-
-@register(
     "cohens_kappa_langid",
     f"""
     WITH t AS (SELECT doc_id, lang, text, {_TOKENS} AS toks FROM documents),
@@ -7685,99 +7045,3 @@ def retrieval_mrr_map(spark, sf_dir):
         F.round(rr, 6).alias("reciprocal_rank"),
         F.round(ap, 6).alias("ap_at_k"),
     ).orderBy("query_id")
-
-
-def _ktruss_oracle_sql(k: int = 4, rounds: int = 10, max_part: int = 2000) -> str:
-    """ktruss_copurchase_hist: unrolled synchronous truss peeling (the
-    k_core oracle's MATERIALIZED chaining — inlined, each round's CTE
-    re-expands the triangle join exponentially). ``rounds`` only needs
-    to be >= the true peel depth at every graded SF (measured 0 / 2 / 2
-    at sf0.001 / 0.01 / 0.1 with the part cut; 10 leaves the r12-ADVICE
-    margin — fixpoint rounds are idempotent no-ops, so the extra unrolls
-    cost little and a peel depth up to 10 can no longer diverge the
-    oracle from a correctly-converged operator); the Spark operator
-    independently raises past ITS max_rounds if it hasn't converged."""
-    parts = [
-        f"""
-    eo AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS s
-           FROM lineitem WHERE l_partkey < {max_part}),
-    e0 AS MATERIALIZED (
-        SELECT DISTINCT a.s AS a, b.s AS b
-        FROM eo a JOIN eo b ON a.ok = b.ok AND a.s < b.s
-    )"""
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(
-            f""",
-    t{i} AS MATERIALIZED (
-        SELECT xy.a AS x, xy.b AS y, yz.b AS z
-        FROM e{i - 1} xy
-        JOIN e{i - 1} yz ON xy.b = yz.a
-        JOIN e{i - 1} xz ON xz.a = xy.a AND xz.b = yz.b
-    ),
-    s{i} AS MATERIALIZED (
-        SELECT a, b, CAST(COUNT(*) AS BIGINT) AS n FROM (
-            SELECT x AS a, y AS b FROM t{i}
-            UNION ALL SELECT y AS a, z AS b FROM t{i}
-            UNION ALL SELECT x AS a, z AS b FROM t{i}
-        ) GROUP BY 1, 2
-    ),
-    e{i} AS MATERIALIZED (
-        SELECT e.a, e.b FROM e{i - 1} e LEFT JOIN s{i} s USING (a, b)
-        WHERE COALESCE(s.n, 0) >= {k - 2}
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    tf AS MATERIALIZED (
-        SELECT xy.a AS x, xy.b AS y, yz.b AS z
-        FROM e{rounds} xy
-        JOIN e{rounds} yz ON xy.b = yz.a
-        JOIN e{rounds} xz ON xz.a = xy.a AND xz.b = yz.b
-    ),
-    sf AS (
-        SELECT a, b, CAST(COUNT(*) AS BIGINT) AS n FROM (
-            SELECT x AS a, y AS b FROM tf
-            UNION ALL SELECT y AS a, z AS b FROM tf
-            UNION ALL SELECT x AS a, z AS b FROM tf
-        ) GROUP BY 1, 2
-    )
-    SELECT CAST(COALESCE(s.n, 0) AS BIGINT) AS support,
-           CAST(COUNT(*) AS BIGINT) AS n_edges
-    FROM e{rounds} e LEFT JOIN sf s USING (a, b)
-    GROUP BY 1 ORDER BY support"""
-    )
-
-
-@register("ktruss_copurchase_hist", _ktruss_oracle_sql(4, 10, 2000))
-def ktruss_copurchase_hist(spark, sf_dir):
-    """4-truss backbone of the copurchase graph (`operators/graph.py
-    k_truss`, parts < 2000 so the subgraph grain is SF-stable): every
-    surviving edge lies in >= 2 triangles among surviving edges — the
-    cohesion rung above kcore_copurchase that also demands shared-
-    neighbor witnesses, peeled synchronously to the fixpoint. Output is
-    the final support histogram (support, n_edges); the per-edge grain
-    stays inside the operator."""
-    from ningaloo_turtle_etl_spark.operators.graph import k_truss
-
-    li = load_table(spark, "lineitem", sf_dir).where(
-        F.col("l_partkey") < 2000
-    )
-    eo = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("s")
-    ).distinct()
-    edges = (
-        eo.alias("a")
-        .join(eo.alias("b"), on="ok")
-        .where(F.col("a.s") < F.col("b.s"))
-        .select(F.col("a.s").alias("src"), F.col("b.s").alias("dst"))
-        .distinct()
-    )
-    out = k_truss(edges, k=4, max_rounds=16)
-    return (
-        out.groupBy("support")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-        .orderBy("support")
-    )

@@ -1,8 +1,8 @@
 """Pairwise-preference queries (operators/preference.py): battle
 extraction and the Bradley-Terry leaderboard fit, oracle-replayed with
-the same unrolled-synchronous-rounds technique as the pagerank / k-core
-oracles (fixed iteration count, no convergence test, so both engines run
-the identical computation)."""
+the same unrolled-synchronous-rounds technique as the kmeans /
+logistic-GD oracles (fixed iteration count, no convergence test, so both
+engines run the identical computation)."""
 
 from __future__ import annotations
 

@@ -237,11 +237,9 @@ PRIORITY: list[str] = [
     "zipf_corpus_fit",
     "phrase_search_top_bigram",
     "bm25_top10",
-    "pagerank_copurchase",
     "edit_similarity_pairs",
     "funnel_view_click_purchase",
     "cohort_weekly_retention",
-    "triangle_clustering",
     "heaps_vocab_growth",
     "rollup_pricing_totals",
     "grouping_sets_tally",
@@ -251,16 +249,10 @@ PRIORITY: list[str] = [
     "url_domain_cap",
     "tfidf_cosine_sim_pairs",
     "token_entropy_quality",
-    "daily_trend_by_type",
-    "value_change_points",
-    "source_quantile_norm",
-    "mad_outlier_stats",
-    "daily_value_acf",
     "hopping_window_tally",
     "countmin_token_counts",
     "scd2_user_state",
     "entity_resolution_clusters",
-    "kcore_copurchase",
     "containment_near_dups",
     "readability_scores",
     "key_skew_report",
@@ -284,22 +276,16 @@ PRIORITY: list[str] = [
     "hard_negative_mining",
     "minhash_incremental_near_dups",
     "cross_source_duplication",
-    "value_ks_by_type",
     "eventually_follows_matrix",
     "source_gini",
     "rolling_wau_hll",
-    "theil_sen_daily_counts",
-    "seasonal_profile_events",
     "boilerplate_removal",
     "classifier_calibration_curve",
     "audience_overlap_types",
-    "seasonal_anomalies",
-    "trimmed_mean_by_type",
     "contrastive_negative_pairs",
     "spatial_hotspot_clusters",
     "event_trigram_sequences",
     "semantic_cell_silhouette",
-    "ewma_daily_volume_chart",
     "leakage_safe_split",
     "source_quality_scorecard",
     "embedding_drift_by_label",
@@ -307,7 +293,6 @@ PRIORITY: list[str] = [
     "rolling_value_p95",
     "classifier_auc",
     "score_decile_lift",
-    "psi_value_drift",
     "classifier_pr_curve",
     "keep_threshold_yield",
     "classifier_auc_by_source",
@@ -328,8 +313,6 @@ PRIORITY: list[str] = [
     "fuzzy_part_soundex_pairs",
     # r08 incremental linkage (new x all, never old x old), full oracle
     "fuzzy_part_incremental_pairs",
-    # r08 exact 1D earth-mover's drift distance, full oracle
-    "wasserstein_value_by_type",
     # r08 MOSS winnowing fingerprint containment, full oracle
     "winnowing_quote_pairs",
     # r08 corpus BLEU-4 / ROUGE-N generation eval, full oracle
@@ -346,8 +329,6 @@ PRIORITY: list[str] = [
     "kneser_ney_lm_scores",
     # r08 weight-of-evidence / information-value feature screen, full oracle
     "woe_iv_source_vs_english",
-    # r08 synchronous label-propagation communities, full oracle
-    "lpa_copurchase_communities",
     # r08 rank-biased overlap ANN acceptance metric, full oracle
     "ann_lsh_rbo",
     # r08 Markov removal-effect attribution, full oracle
@@ -372,12 +353,6 @@ PRIORITY: list[str] = [
     # Jaccard-pair near-dup shape stays window-covered by
     # ppjoin_jaccard_pairs; still oracle-swept by pytest + supplement.
     "ngram_jaccard_near_dups",
-    # r09 HITS hubs/authorities (integer-micro normalization, unrolled)
-    "hits_copurchase",
-    # r09 Adamic-Adar link prediction (micro-quantized wedge weights)
-    "adamic_adar_part_links",
-    # r09 Mann-Kendall monotone-trend test (exact-integer S + ties)
-    "mann_kendall_daily_counts",
     # r09 Good-Turing count-of-counts re-estimation (trigram grain)
     "good_turing_token_counts",
     # r09 Shannon/Simpson/HHI composition diversity per source
@@ -407,9 +382,6 @@ PRIORITY: list[str] = [
     # zorder_layout_buckets; unrolled state-machine bit arithmetic
     # replayed level-by-level in SQL)
     "hilbert_layout_buckets",
-    # r10 multi-source BFS hop distance (frontier-expansion rounds vs a
-    # bounded recursive-CTE oracle)
-    "bfs_hop_distance",
     # r10 matrix-factorization gradient training (rank-1 Funk-SVD,
     # integer-micro exact rounds, unrolled-oracle trajectory like
     # logistic_gd_weights)
@@ -435,9 +407,6 @@ PRIORITY: list[str] = [
     # r11: real WAV codec tier — synth→RIFF/PCM16 decode→integer-exact
     # audio features, full oracle from the regenerated PCM
     "audio_wav_features",
-    # r11: Spearman rank correlation (doubled-average-rank exact-integer
-    # sums; the monotone-association effect size)
-    "spearman_value_vs_time",
     # r11: DP quantile by the exponential mechanism (seeded draw; the
     # rank-statistic DP release next to the Laplace counts)
     "dp_value_median_exponential",
@@ -456,9 +425,6 @@ PRIORITY: list[str] = [
     # r11: fused two-stage Matryoshka serving (prefix-16 shortlist →
     # exact full-dim rerank; truncation as the cheap tier)
     "ann_matryoshka_topk",
-    # r11: overdispersion diagnosis + NB method-of-moments on daily
-    # counts (is a Poisson volume model honest about tail days)
-    "overdispersion_daily_counts",
     # r11: rendezvous (HRW) shard placement audit with the n->n+1
     # minimal-disruption expansion plan
     "rendezvous_shard_plan",
@@ -471,18 +437,12 @@ PRIORITY: list[str] = [
     # r10 binary quantization tier: sign-bit codes + Hamming top-k
     # (exact-integer distances; 32-bit words shared with the oracle)
     "ann_hamming_topk",
-    # r10 TextRank keywords (weighted PageRank on the adjacent-token
-    # co-occurrence graph; unrolled integer-micro oracle)
-    "textrank_keywords",
     # r10 k-fold cross-validated AUC (md5-uniform folds, grouped
     # Mann-Whitney — the eval-harness stability check)
     "cv_fold_auc",
     # r10 Platt scaling (two-parameter sigmoid calibration trained by
     # the distributed GD loop; unrolled trajectory oracle)
     "platt_calibration_weights",
-    # r10 personalized PageRank (random walk with restart at a seed
-    # set; proximity recommendation vs global centrality)
-    "ppr_copurchase_brand",
     # r10 unigram-LM (SentencePiece) Viterbi tokenizer stats (exact
     # integer-nano DP as an in-document fold; fit+DP recursive oracle)
     "unigram_tokenizer_stats",
@@ -492,14 +452,6 @@ PRIORITY: list[str] = [
     # r10 pinball-subgradient quantile regression (the conditional-
     # quantile rung of the trainer stack; unrolled trajectory oracle)
     "quantile_gd_weights",
-    # r11 second batch: Hill tail-index per type (the heavy-tail law
-    # diagnostic behind salting/AQE-skew planning; micro-quantized
-    # log-ratio sums over per-group top-k order statistics)
-    "hill_tail_index_by_type",
-    # r11 second batch: Newman modularity of a given partition over
-    # the co-purchase graph (scores what LPA discovers; community-
-    # grain exact counts, micro-quantized Q terms)
-    "modularity_copurchase_brands",
     # r11 second batch: zone-map pruning audit across simulated file
     # layouts (the WHY behind zorder/hilbert/compaction: min/max
     # skipping vs layout-predicate alignment)
@@ -511,9 +463,6 @@ PRIORITY: list[str] = [
     # r11 third batch: Cohen's kappa on the lang-ID confusion matrix
     # (chance-corrected agreement; exact-bigint cells)
     "cohens_kappa_langid",
-    # r11 third batch: brand revenue concentration (HHI + CR4; the
-    # market-structure companions to gini/inequality rows)
-    "market_concentration_brands",
     # r12: the ANN train→serve loop (r11 verdict item 3) — promoted into
     # the 50-slot driver window in r13 (see above).
     # r12 second batch: Dirichlet-smoothed query-likelihood retrieval
@@ -526,9 +475,6 @@ PRIORITY: list[str] = [
     # (the segmentation label where hmm_forward_first4 is the score;
     # enumerated path products, argmax exact in both engines)
     "hmm_viterbi_first4",
-    # r12 third batch: 4-truss peel of the copurchase graph (cohesion
-    # rung above k-core; unrolled MATERIALIZED triangle rounds)
-    "ktruss_copurchase_hist",
 ]
 
 

@@ -197,110 +197,3 @@ def heavy_hitters_batch(
             F.lit(0).cast("long").alias("max_err"),
         )
     )
-
-
-# --- streaming always-valid monitor (mSPRT) ---------------------------------
-MSPRT_OUTPUT_SCHEMA = (
-    "arm string, n_cum long, mean_cum double, log_lambda double, "
-    "p_always_valid double, rejected boolean"
-)
-MSPRT_STATE_SCHEMA = "n long, s double, llmax double"
-
-
-def msprt_monitor_stream(
-    events: DataFrame,
-    arm_col: str,
-    value_col: str,
-    mu0: float,
-    sigma: float,
-    tau: float,
-    alpha: float = 0.05,
-) -> DataFrame:
-    """Streaming always-valid mSPRT monitor: the per-arm sequential state
-    (cumulative n, cumulative sum, running-max log likelihood ratio) lives
-    in keyed ``applyInPandasWithState`` state and each micro-batch emits
-    the arm's refreshed always-valid p-value and latched rejection flag —
-    the continuously-watching deployment of the mixture sequential
-    probability ratio test.
-
-    The statistical point that makes STREAMING the natural home: the
-    mixture LR is a martingale under H0 with respect to ANY arrival
-    ordering, so processing-time micro-batch boundaries are a perfectly
-    valid filtration — no event-time windows, watermarks, or ordering
-    guarantees are needed for the p-value's error control. Each batch is
-    one more "look", and always-valid means unlimited looks are free.
-
-    State per key is three scalars — bounded regardless of stream length
-    (contrast the unbounded buffering an exact sequential test with
-    re-sorting would need). Output mode: update."""
-    import math
-
-    import pyspark.sql.functions as F
-
-    if sigma <= 0 or tau <= 0:
-        raise ValueError("sigma and tau must be positive")
-    s2, t2 = float(sigma) ** 2, float(tau) ** 2
-    mu = float(mu0)
-    a = float(alpha)
-
-    def fn(key, pdfs, state: GroupState):
-        batches = [b for b in pdfs if len(b)]
-        if not batches:
-            if state.hasTimedOut:
-                state.remove()
-            return iter(())
-        rows = pd.concat(batches)
-        if state.exists:
-            n, s, llmax = state.get
-            n, s, llmax = int(n), float(s), float(llmax)
-        else:
-            n, s, llmax = 0, 0.0, float("-inf")
-        n += len(rows)
-        s += float(rows["v"].sum())
-        xbar = s / n
-        dev = xbar - mu
-        denom = s2 + n * t2
-        ll = 0.5 * math.log(s2 / denom) + (n * n * dev * dev * t2) / (
-            2.0 * s2 * denom
-        )
-        llmax = max(llmax, ll)
-        state.update((n, s, llmax))
-        p = math.exp(-max(0.0, llmax))
-        # Emit RAW doubles; rounding happens in F.round (HALF_UP) in the
-        # wrapper select — Python round() is half-to-even and diverges
-        # from the batch operator's F.round at exact dyadic midpoints
-        # (e.g. an integer metric with cumulative mean odd/128).
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "arm": [key[0]],
-                        "n_cum": [n],
-                        "mean_cum": [xbar],
-                        "log_lambda": [ll],
-                        "p_always_valid": [p],
-                        "rejected": [p < a],
-                    }
-                )
-            ]
-        )
-
-    keyed = events.select(
-        F.col(arm_col).cast("string").alias("arm"),
-        F.col(value_col).cast("double").alias("v"),
-    )
-    raw = keyed.groupBy("arm").applyInPandasWithState(
-        fn,
-        outputStructType=MSPRT_OUTPUT_SCHEMA,
-        stateStructType=MSPRT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return raw.select(
-        "arm",
-        "n_cum",
-        F.round("mean_cum", 6).alias("mean_cum"),
-        F.round("log_lambda", 6).alias("log_lambda"),
-        F.round("p_always_valid", 6).alias("p_always_valid"),
-        "rejected",
-    )

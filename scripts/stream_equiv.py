@@ -402,85 +402,6 @@ def main() -> int:
         dig_cols,
     )
 
-    # Streaming overdispersion monitor (r11 verdict item 7): the daily
-    # count state (event_type × day grain) is ONE streaming aggregation
-    # (update-by-add); the NB/dispersion moments are computed on READ
-    # from the streamed state (the drift-monitor pattern — chained
-    # streaming aggregations are not a thing) and must equal the batch
-    # overdispersion_daily_counts reduce over the raw events.
-    def _overdispersion_reduce(daily):
-        agg = daily.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_days"),
-            F.sum("c").cast("long").alias("s"),
-            F.sum(F.col("c") * F.col("c")).cast("long").alias("q"),
-        )
-        mean_d = F.col("s").cast("double") / F.col("n_days")
-        var_d = F.col("q").cast("double") / F.col("n_days") - mean_d * mean_d
-        return agg.select(
-            "event_type",
-            "n_days",
-            F.round(mean_d, 6).alias("mean_daily"),
-            F.round(var_d, 6).alias("var_daily"),
-            F.round(
-                F.when(mean_d > 0, var_d / mean_d), 6
-            ).alias("dispersion_index"),
-            F.round(
-                F.when(var_d > mean_d, mean_d * mean_d / (var_d - mean_d)), 6
-            ).alias("nb_r"),
-            F.round(
-                F.when((var_d > mean_d) & (var_d > 0), mean_d / var_d), 6
-            ).alias("nb_p"),
-        )
-
-    def _daily_counts(df):
-        return (
-            df.where(F.col("ts").isNotNull())
-            .select(
-                "event_type",
-                F.floor(
-                    F.unix_timestamp(F.col("ts")) / F.lit(86400)
-                ).cast("long").alias("day"),
-            )
-            .groupBy("event_type", "day")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-
-    od_cols = ["event_type", "n_days", "mean_daily", "var_daily",
-               "dispersion_index", "nb_r", "nb_p"]
-    check(
-        "streaming_overdispersion",
-        _overdispersion_reduce(_daily_counts(batch)),
-        _overdispersion_reduce(
-            run_stream(_daily_counts(stream), "se_overdisp")
-        ),
-        od_cols,
-    )
-
-    # Streaming Hill tail-index monitor (r11 verdict item 7): the
-    # streamed state is the per-(group, value) count table — ONE
-    # streaming aggregation, bounded by the distinct-value grain; Hill's
-    # α̂ depends only on the top-(k+1) value MULTISET (ids are only a
-    # rank tie-break between equal values, which cannot change any
-    # x_(i)), so the read-time explode of the state through the batch
-    # operator must reproduce the batch rows exactly.
-    from ningaloo_turtle_etl_spark.operators.trend import hill_tail_index
-
-    hill_state = run_stream(
-        stream.where(F.col("value").isNotNull())
-        .groupBy("event_type", "value")
-        .agg(F.count(F.lit(1)).cast("long").alias("n")),
-        "se_hill_state",
-    )
-    replayed = hill_state.withColumn(
-        "i", F.explode(F.sequence(F.lit(1), F.col("n")))
-    ).withColumn("rid", F.monotonically_increasing_id())
-    check(
-        "streaming_hill_tail_index",
-        hill_tail_index(batch, "value", "event_type", "event_id", k=50),
-        hill_tail_index(replayed, "value", "event_type", "rid", k=50),
-        ["event_type", "k", "x_k1", "alpha"],
-    )
-
     if args.json:
         with open(args.json, "w") as fh:
             json.dump(report, fh, indent=2)

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from ningaloo_turtle_etl_spark.operators.graph import (
@@ -51,70 +49,6 @@ def test_cluster_representatives_keep_min_and_singletons(spark):
     assert kept == [1, 7, 9]  # cluster {1,2,3} → 1; singletons survive
 
 
-def test_pagerank_matches_python_power_iteration(spark):
-    """Micro-unit power iteration replicated in plain Python; a hub with
-    many in-links must out-rank leaves, and dangling-node mass must decay
-    toward (1-d) rather than crash the iteration."""
-    from ningaloo_turtle_etl_spark.operators.graph import pagerank
-
-    edges = [
-        (1, 5), (2, 5), (3, 5), (4, 5),  # 5 is the hub
-        (5, 1),                            # hub recycles to 1
-        (6, 1),                            # 6 is dangling-in only
-        (5, 7),                            # 7: fed by hub; 7 dangling-out
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, iterations=5, damping=0.85).collect()
-    }
-
-    nodes = sorted({n for e in edges for n in e})
-    outdeg = {}
-    for s, _d in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    rm = {n: 1_000_000 for n in nodes}
-    for _ in range(5):
-        s = {n: 0 for n in nodes}
-        for a, b in edges:
-            # HALF_UP like Spark/DuckDB ROUND — python round() is
-            # banker's and diverges on exact .5 contributions
-            s[b] += int(math.floor(0.85 * rm[a] / outdeg[a] + 0.5))
-        rm = {n: 150_000 + s[n] for n in nodes}
-    exp = {n: round(rm[n] / 1e6, 6) for n in nodes}
-    assert got == exp
-    assert got[5] == max(got.values())      # the hub wins
-    assert got[6] == 0.15                   # nothing links to 6
-
-
-def test_triangle_stats_on_known_graph(spark):
-    from ningaloo_turtle_etl_spark.operators.cache import (
-        release_tracked_caches,
-    )
-    from ningaloo_turtle_etl_spark.operators.graph import triangle_stats
-
-    # K4 on {1,2,3,4} (4 triangles, coeff 1.0 everywhere) plus a pendant
-    # 5 and a path 5-6; edges deliberately duplicated/reversed.
-    edges = [
-        (1, 2), (2, 1), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
-        (4, 5), (5, 6), (6, 5),
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    try:
-        got = {
-            r["node"]: (r["degree"], r["triangles"], r["clustering_coeff"])
-            for r in triangle_stats(df).collect()
-        }
-    finally:
-        release_tracked_caches()
-    assert got[1] == (3, 3, 1.0)
-    assert got[2] == (3, 3, 1.0)
-    assert got[3] == (3, 3, 1.0)
-    assert got[4] == (4, 3, 0.5)      # K4 corner + pendant edge
-    assert got[5] == (2, 0, 0.0)      # path node: wedge but no closure
-    assert got[6] == (1, 0, 0.0)      # degree<2 → coeff 0 by convention
-
-
 def test_entity_resolution_composition_blocks_and_elects(spark):
     """edit-distance blocking → CC → canonical election on a toy roster:
     near-identical names cluster, the min-id member is the representative,
@@ -141,372 +75,3 @@ def test_entity_resolution_composition_blocks_and_elects(spark):
     for r in comp.collect():
         clusters.setdefault(r["component"], set()).add(r["id"])
     assert clusters == {1: {1, 2, 3}, 20: {20, 21}}
-
-
-def test_k_core_peels_to_known_core(spark):
-    """K4 with a pendant path: the 3-core is exactly the K4 (the path,
-    and the bridge node's path-degree, peel away over several rounds);
-    the 5-core of the same graph is empty."""
-    from ningaloo_turtle_etl_spark.operators.graph import k_core
-
-    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
-    path = [(4, 5), (5, 6), (6, 7)]
-    df = spark.createDataFrame(k4 + path, "src bigint, dst bigint")
-    core3 = {r["node"]: r["core_degree"] for r in k_core(df, 3).collect()}
-    assert core3 == {1: 3, 2: 3, 3: 3, 4: 3}
-    assert k_core(df, 5).count() == 0
-
-
-def test_k_core_cascading_removal(spark):
-    """A triangle hung off a star: the star center has high degree but its
-    spokes are degree-1, so a 2-core keeps only the triangle — the case a
-    one-shot degree cut gets wrong (it would keep the center)."""
-    from ningaloo_turtle_etl_spark.operators.graph import k_core
-
-    tri = [(1, 2), (2, 3), (1, 3)]
-    star = [(10, i) for i in range(20, 26)] + [(10, 1)]
-    df = spark.createDataFrame(tri + star, "src bigint, dst bigint")
-    got = {r["node"] for r in k_core(df, 2).collect()}
-    assert got == {1, 2, 3}
-
-
-def test_copurchase_min_shared_thresholds_support(spark):
-    from ningaloo_turtle_etl_spark.operators.graph import copurchase_edges
-
-    rows = [
-        (1, "a"), (1, "b"),
-        (2, "a"), (2, "b"),
-        (3, "a"), (3, "c"),
-    ]
-    df = spark.createDataFrame(rows, "ok bigint, item string")
-    all_pairs = {
-        (r["src"], r["dst"])
-        for r in copurchase_edges(df, "ok", "item").collect()
-    }
-    assert all_pairs == {("a", "b"), ("b", "a"), ("a", "c"), ("c", "a")}
-    strong = {
-        (r["src"], r["dst"])
-        for r in copurchase_edges(df, "ok", "item", min_shared=2).collect()
-    }
-    assert strong == {("a", "b"), ("b", "a")}
-
-
-def test_label_propagation_separates_cliques_cc_cannot(spark):
-    """Two 5-cliques joined by ONE bridge edge: connected_components
-    merges everything; LPA must keep two dense communities."""
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        connected_components,
-        label_propagation_communities,
-    )
-
-    c1 = [(a, b) for a in range(5) for b in range(5) if a != b]
-    c2 = [(a, b) for a in range(10, 15) for b in range(10, 15) if a != b]
-    bridge = [(4, 10), (10, 4)]
-    edges = spark.createDataFrame(c1 + c2 + bridge, "src long, dst long")
-    cc = connected_components(edges.select(
-        F.col("src").alias("id_a"), F.col("dst").alias("id_b")
-    ))
-    assert cc.select("component").distinct().count() == 1
-    lpa = {
-        r["node"]: r["community"]
-        for r in label_propagation_communities(edges, rounds=8).collect()
-    }
-    comms = set(lpa.values())
-    assert len(comms) == 2
-    # each clique is internally uniform
-    assert len({lpa[n] for n in range(5)}) == 1
-    assert len({lpa[n] for n in range(10, 15)}) == 1
-    assert lpa[0] != lpa[10]
-    # deterministic: min-label tie-break makes each community's label its
-    # smallest member
-    assert lpa[0] == 0 and lpa[10] == 10
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        label_propagation_communities(edges, rounds=0)
-
-
-def test_hits_hand_graph(spark):
-    """Star-ish directed graph: u1,u2,u3 all point at v (v = the
-    authority, the u's = hubs); v points at w. After normalization the
-    authority mass concentrates on v and hub mass on the u's."""
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators.graph import hits_scores
-
-    edges = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 10), (10, 20)], "src long, dst long"
-    )
-    out = {r["node"]: r for r in hits_scores(edges, iterations=3).collect()}
-    assert set(out) == {1, 2, 3, 10, 20}
-    # v(10) dominates authority; sources have none (no in-edges)
-    assert out[10]["auth"] > out[20]["auth"] > 0
-    assert out[1]["auth"] == out[2]["auth"] == out[3]["auth"] == 0.0
-    # hubs: the u's tie and dominate; the sink (20) has no out-edges
-    assert out[1]["hub"] == out[2]["hub"] == out[3]["hub"]
-    assert out[1]["hub"] > out[10]["hub"] >= 0
-    assert out[20]["hub"] == 0.0
-    # each vector is sum-normalized to ~1 (micro half-up residue only)
-    assert abs(sum(r["auth"] for r in out.values()) - 1.0) < 1e-4
-    assert abs(sum(r["hub"] for r in out.values()) - 1.0) < 1e-4
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        hits_scores(edges, iterations=0)
-
-
-def test_adamic_adar_hand_graph(spark):
-    """Path a-z-b plus hub h connected to everything: (a,b) must be
-    predicted via z (weight 1/ln deg(z)) and via h — and AA must weight
-    the selective z ABOVE an equally-shared hub of higher degree;
-    existing edges never appear."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.graph import adamic_adar_links
-
-    edges = spark.createDataFrame(
-        [
-            (1, 100),  # a-z
-            (2, 100),  # b-z
-            (1, 99), (2, 99), (3, 99), (4, 99),  # hub h touches a,b,c,d
-            (3, 4),   # c-d directly connected
-        ],
-        "src long, dst long",
-    )
-    out = {
-        (r["id_a"], r["id_b"]): r
-        for r in adamic_adar_links(edges).collect()
-    }
-    # (1,2): common neighbors z (deg 2) and h (deg 4)
-    expect_12 = round(
-        (round(1e6 / math.log(2)) + round(1e6 / math.log(4))) / 1e6, 6
-    )
-    assert out[(1, 2)]["n_common"] == 2
-    assert out[(1, 2)]["aa_score"] == expect_12
-    # (3,4) are ADJACENT -> never predicted
-    assert (3, 4) not in out
-    # (1,3): only the hub in common -> scores below (1,2)
-    assert out[(1, 3)]["aa_score"] < out[(1, 2)]["aa_score"]
-    # degree cap drops the hub as a wedge center: (1,3) disappears,
-    # (1,2) survives via z alone
-    capped = {
-        (r["id_a"], r["id_b"]): r
-        for r in adamic_adar_links(edges, max_degree=3).collect()
-    }
-    assert (1, 3) not in capped
-    assert capped[(1, 2)]["n_common"] == 1
-    assert capped[(1, 2)]["aa_score"] == round(
-        round(1e6 / math.log(2)) / 1e6, 6
-    )
-
-
-def test_bfs_hops_min_distance_cycles_and_bound(spark):
-    """Multi-source BFS on a hand graph with a cycle, a diamond (two
-    paths of different length — MIN hops must win), and an island:
-    exact hop counts, unreachable nodes absent, max_hops honored, and a
-    seed that is also reachable from another seed stays at hops 0."""
-    from ningaloo_turtle_etl_spark.operators.graph import bfs_hops
-
-    #  1 -> 2 -> 3 -> 4 -> 5   (chain)
-    #  1 -> 3                  (shortcut: node 3 is 1 hop, not 2)
-    #  5 -> 1                  (cycle back)
-    #  6 -> 7                  (island, unreachable from seeds)
-    #  2 is also a seed        (stays hops 0; its neighbors at 1)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (1, 3), (5, 1), (6, 7)],
-        "src long, dst long",
-    )
-    seeds = spark.createDataFrame([(1,), (2,)], "node long")
-    got = {
-        r["node"]: r["hops"]
-        for r in bfs_hops(edges, seeds, max_hops=2).collect()
-    }
-    assert got == {1: 0, 2: 0, 3: 1, 4: 2}
-    full = {
-        r["node"]: r["hops"]
-        for r in bfs_hops(edges, seeds, max_hops=10).collect()
-    }
-    assert full == {1: 0, 2: 0, 3: 1, 4: 2, 5: 3}
-    assert 6 not in full and 7 not in full
-
-
-def test_weighted_pagerank_replica_and_weight_sensitivity(spark):
-    """weighted_pagerank vs an exact integer-micro Python replica on a
-    small weighted digraph, plus the semantic reason weights exist: mass
-    follows the heavy edge, and with uniform weights the result
-    degrades to plain pagerank on the same edges."""
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        pagerank,
-        weighted_pagerank,
-    )
-
-    edges = [
-        ("a", "b", 9), ("a", "c", 1),
-        ("b", "a", 1), ("c", "a", 1), ("d", "a", 5),
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string, w long")
-    got = {
-        r["node"]: r["rank"]
-        for r in weighted_pagerank(df, iterations=3).collect()
-    }
-
-    strength = {}
-    for s, _, w in edges:
-        strength[s] = strength.get(s, 0) + w
-    nodes = sorted({s for s, _, _ in edges} | {d for _, d, _ in edges})
-    rm = {n: 1_000_000 for n in nodes}
-    import decimal
-
-    def r_half_up(x):
-        return int(
-            decimal.Decimal(x).quantize(0, rounding=decimal.ROUND_HALF_UP)
-        )
-
-    for _ in range(3):
-        inc = {n: 0 for n in nodes}
-        for s, d, w in edges:
-            inc[d] += r_half_up(0.85 * rm[s] * w / strength[s])
-        rm = {n: 150_000 + inc[n] for n in nodes}
-    want = {n: round(v / 1e6, 6) for n, v in rm.items()}
-    assert got == want
-
-    # mass follows the heavy edge: b (weight 9 from a) outranks c
-    assert got["b"] > got["c"]
-    # uniform weights == unweighted pagerank on the same edge list
-    uni = spark.createDataFrame(
-        [(s, d, 1) for s, d, _ in edges], "src string, dst string, w long"
-    )
-    uw = {
-        r["node"]: r["rank"]
-        for r in weighted_pagerank(uni, iterations=3).collect()
-    }
-    pr = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            spark.createDataFrame(
-                [(s, d) for s, d, _ in edges], "src string, dst string"
-            ),
-            iterations=3,
-        ).collect()
-    }
-    assert uw == pr
-
-    # fractional weights are NOT truncated: 2.5× all weights leaves the
-    # normalized w/strength ratios (hence every rank) unchanged, which a
-    # silent long cast would break (2.5 -> 2, 22.5 -> 22)
-    frac = spark.createDataFrame(
-        [(s, d, w * 2.5) for s, d, w in edges],
-        "src string, dst string, w double",
-    )
-    fr = {
-        r["node"]: r["rank"]
-        for r in weighted_pagerank(frac, iterations=3).collect()
-    }
-    assert fr == got
-
-
-def test_textrank_keywords_adjacency_and_ranking(spark):
-    """textrank_keywords on a crafted corpus: short/non-alpha tokens are
-    dropped before adjacency, the hub word every sentence pivots on
-    outranks leaf words, and (token, pos) ordering is deterministic."""
-    from ningaloo_turtle_etl_spark.operators.text import textrank_keywords
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark shuffle spark join spark window aa 42"),
-            (2, "shuffle spark filter spark scan"),
-            (3, "join window filter"),
-        ],
-        "doc_id long, text string",
-    )
-    out = textrank_keywords(docs, top_k=10, iterations=3).collect()
-    toks = [r["token"] for r in out]
-    assert "aa" not in toks  # len < 4 dropped from the graph
-    assert toks[0] == "spark"  # the co-occurrence hub wins
-    assert [r["pos"] for r in out] == list(range(1, len(out) + 1))
-    assert all(out[i]["rank"] >= out[i + 1]["rank"] for i in range(len(out) - 1))
-
-
-def test_personalized_pagerank_replica_and_seed_locality(spark):
-    """personalized_pagerank vs an exact integer-micro replica on a
-    two-community barbell, plus the semantic contract: mass concentrates
-    near the seed — a node adjacent to the seed outranks the twin node
-    in the far community, while GLOBAL pagerank scores the symmetric
-    twins identically."""
-    import decimal
-
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        pagerank,
-        personalized_pagerank,
-    )
-
-    # two triangles (a,b,c) and (x,y,z) bridged by c—x; seed at a
-    und = [
-        ("a", "b"), ("b", "c"), ("a", "c"),
-        ("x", "y"), ("y", "z"), ("x", "z"),
-        ("c", "x"),
-    ]
-    edges = und + [(d, s) for s, d in und]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    seeds = spark.createDataFrame([("a",)], "node string")
-    got = {
-        r["node"]: r["rank"]
-        for r in personalized_pagerank(df, seeds, iterations=5).collect()
-    }
-
-    outdeg = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-
-    def r_half_up(v):
-        return int(decimal.Decimal(v).quantize(0, rounding=decimal.ROUND_HALF_UP))
-
-    rm = {n: (1_000_000 if n == "a" else 0) for n in nodes}
-    for _ in range(5):
-        inc = {n: 0 for n in nodes}
-        for s, d in edges:
-            inc[d] += r_half_up(0.85 * rm[s] / outdeg[s])
-        rm = {n: (150_000 if n == "a" else 0) + inc[n] for n in nodes}
-    assert got == {n: round(v / 1e6, 6) for n, v in rm.items()}
-
-    # seed locality: b (adjacent to seed) far outranks its far twin y
-    assert got["b"] > got["y"] * 2
-    # global pagerank can't tell the symmetric twins apart
-    pr = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, iterations=5).collect()
-    }
-    assert pr["b"] == pr["y"]
-
-
-def test_newman_modularity_pins(spark):
-    """Modularity pins: two disjoint triangles with matching labels
-    score exactly 0.5; collapsing everything into one community scores
-    exactly 0; per-community columns carry exact counts."""
-    from ningaloo_turtle_etl_spark.operators.graph import newman_modularity
-
-    tri = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6)]
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in tri] + [(b, a) for a, b in tri],
-        "src long, dst long",
-    )
-    comm = spark.createDataFrame(
-        [(n, "left" if n <= 3 else "right") for n in range(1, 7)],
-        "node long, community string",
-    )
-    out = {r["community"]: r
-           for r in newman_modularity(edges, comm).collect()}
-    for c in ("left", "right"):
-        assert out[c]["n_nodes"] == 3
-        assert out[c]["degree_sum"] == 6
-        assert out[c]["intra_directed"] == 6
-        assert out[c]["q_term"] == 0.25
-        assert out[c]["modularity"] == 0.5
-
-    one = spark.createDataFrame(
-        [(n, "all") for n in range(1, 7)], "node long, community string"
-    )
-    assert newman_modularity(edges, one).collect()[0]["modularity"] == 0.0

@@ -584,15 +584,15 @@ def test_unigram_lm_scores_match_numpy(spark):
 
 
 def test_dedup_cache_scope_releases_storage(spark, docs):
-    """Repeated dedup calls inside dedup_cache_scope leave NO cached RDDs
+    """Repeated dedup calls inside tracked_cache_scope leave NO cached RDDs
     behind — long-lived sessions don't accumulate signature caches."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        dedup_cache_scope,
-        release_dedup_caches,
-        simhash_near_dup_pairs,
+    from ningaloo_turtle_etl_spark.operators.cache import (
+        release_tracked_caches,
+        tracked_cache_scope,
     )
+    from ningaloo_turtle_etl_spark.operators.dedup import simhash_near_dup_pairs
 
-    release_dedup_caches()  # clean slate from earlier tests in the session
+    release_tracked_caches()  # clean slate from earlier tests in the session
     sc = spark.sparkContext
 
     # Assert on the RDD ids THIS test creates, not global cache counts: the
@@ -604,7 +604,7 @@ def test_dedup_cache_scope_releases_storage(spark, docs):
 
     for _ in range(3):
         before = cached_ids()
-        with dedup_cache_scope():
+        with tracked_cache_scope():
             minhash_near_dup_pairs(docs, threshold=0.5).collect()
             simhash_near_dup_pairs(docs, max_hamming=8).collect()
             ours = cached_ids() - before
@@ -616,7 +616,7 @@ def test_dedup_cache_scope_releases_storage(spark, docs):
     minhash_near_dup_pairs(docs, threshold=0.5).collect()
     ours = cached_ids() - before
     assert ours
-    assert release_dedup_caches() >= 1
+    assert release_tracked_caches() >= 1
     assert not (cached_ids() & ours)
 
 
@@ -1541,8 +1541,8 @@ def test_hard_negatives_excludes_same_label(spark):
 
 
 def test_minhash_incremental_equals_full_run_restricted(spark):
+    from ningaloo_turtle_etl_spark.operators.cache import tracked_cache_scope
     from ningaloo_turtle_etl_spark.operators.dedup import (
-        dedup_cache_scope,
         minhash_incremental_pairs,
         minhash_near_dup_pairs,
     )
@@ -1558,7 +1558,7 @@ def test_minhash_incremental_equals_full_run_restricted(spark):
     rows.append((32, rows[30][1]))                    # new dup of new 30
     df = spark.createDataFrame(rows, "doc_id long, text string")
     old, new = df.filter(F.col("doc_id") < 28), df.filter(F.col("doc_id") >= 28)
-    with dedup_cache_scope():
+    with tracked_cache_scope():
         full = {
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in minhash_near_dup_pairs(

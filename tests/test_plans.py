@@ -228,10 +228,8 @@ def test_minhash_md5_family_plan_shape(spark):
     # cartesian), payload-free candidate generation (no shingle arrays in
     # the banded join), and signature state read from the shared persisted
     # frame (InMemoryTableScan) rather than recomputed per branch.
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        minhash_near_dup_pairs,
-        release_dedup_caches,
-    )
+    from ningaloo_turtle_etl_spark.operators.cache import release_tracked_caches
+    from ningaloo_turtle_etl_spark.operators.dedup import minhash_near_dup_pairs
     from ningaloo_turtle_etl_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
@@ -253,7 +251,7 @@ def test_minhash_md5_family_plan_shape(spark):
         banded = [ln for ln in join_lines if "bucket" in ln]
         assert banded and all(not re.search(r"\bsh#", ln) for ln in banded)
     finally:
-        release_dedup_caches()
+        release_tracked_caches()
 
 
 def test_substring_dup_stats_shares_one_hash_exchange(spark):
@@ -284,11 +282,6 @@ def test_edit_similarity_prefix_election_is_group_limited(spark):
     release_tracked_caches()
 
 
-def test_pagerank_contribution_join_never_cartesian(spark):
-    plan = plan_of(spark, "pagerank_copurchase")
-    assert "CartesianProduct" not in plan
-
-
 def test_event_sessions_single_exchange_shared_by_windows_and_rollup(spark):
     # lag + running sum + the per-session rollup must all ride ONE
     # user-keyed exchange — a second shuffle here doubles the cost of
@@ -304,15 +297,6 @@ def test_soft_dedup_weights_shuffles_fingerprints_not_bodies(spark):
     plan = plan_of(spark, "soft_dedup_weights")
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "text" not in m.group(1)
-
-
-def test_ks_windows_run_on_distinct_value_grain(spark):
-    # Both window passes (per-group ECDF cumsum, per-pair forward fill)
-    # must sit above the distinct-value aggregate, never the raw fact:
-    # every exchange keys on the grouped columns.
-    plan = plan_of(spark, "value_ks_by_type")
-    assert "HashAggregate" in plan
-    assert plan.count("Window") >= 2
 
 
 def test_minhash_incremental_new_side_filter_pushed(spark):
@@ -364,16 +348,6 @@ def test_classifier_auc_groups_scores_before_any_sort(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_psi_value_drift_bounds_broadcast_and_bins_combine(spark):
-    """Reference bounds come back as a 1-row broadcast (no shuffle of the
-    event rows to meet them) and the bin tally partial-aggregates
-    map-side before the ≤ n_bins-row exchange."""
-    plan = plan_of(spark, "psi_value_drift")
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "partial_sum" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_fuzzy_part_pairs_no_cartesian_and_name_dim_only(spark):
     plan = plan_of(spark, "fuzzy_part_pairs")
     # blocked self-join is a hash/broadcast equi-join on the block key,
@@ -410,17 +384,6 @@ def test_bleu_rouge_clipping_is_equi_join_and_jvm_only(spark):
     # grain — equi-join, no pair-vs-pair comparison, no Python
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_wasserstein_runs_on_distinct_value_grain(spark):
-    plan = plan_of(spark, "wasserstein_value_by_type")
-    # same scaffolding discipline as KS: the pair windows run on the
-    # aggregated distinct-value grain (HashAggregate before any Window),
-    # never a row-grain pair fanout
-    assert "CartesianProduct" not in plan
-    first_window = plan.find("Window")
-    first_agg = plan.find("HashAggregate")
-    assert first_agg != -1 and first_window != -1
 
 
 def test_table_digest_single_aggregate_no_extra_exchange(spark):

@@ -274,10 +274,8 @@ def test_minhash_md5_verify_stage_is_exact_on_random_docs(spark, texts):
     # exact 3-gram-shingle Jaccard (verification is exact, not estimated),
     # and identical docs always pair at 1.0 (identical signatures can
     # never be split across buckets).
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        minhash_near_dup_pairs,
-        release_dedup_caches,
-    )
+    from ningaloo_turtle_etl_spark.operators.cache import release_tracked_caches
+    from ningaloo_turtle_etl_spark.operators.dedup import minhash_near_dup_pairs
 
     rows = list(enumerate(texts))
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -292,7 +290,7 @@ def test_minhash_md5_verify_stage_is_exact_on_random_docs(spark, texts):
             df, threshold=0.0, hash_family="md5"
         ).collect()
     }
-    release_dedup_caches()
+    release_tracked_caches()
     for (a, b), j in got.items():
         exact = len(sh(texts[a]) & sh(texts[b])) / len(sh(texts[a]) | sh(texts[b]))
         assert abs(j - exact) < 1e-6, (a, b)

@@ -1,6 +1,6 @@
 """r12 family pins: scipy-free Python replays of the new operators at
-sf0.001 — query-likelihood retrieval, MRR/MAP, the HMM Viterbi decode
-and the k-truss peel."""
+sf0.001 — query-likelihood retrieval, MRR/MAP and the HMM Viterbi
+decode."""
 
 from __future__ import annotations
 
@@ -162,39 +162,3 @@ def test_hmm_viterbi_replay(spark):
         assert abs(
             got[key]["avg_best_loglik"] - r6(s / 1e6 / n)
         ) < 1e-9
-
-
-def test_k_truss_synthetic(spark):
-    import pytest
-
-    from ningaloo_turtle_etl_spark.operators.graph import k_truss
-
-    # 5-clique (every edge in 3 triangles) + a pendant chain hanging off
-    # node 0: the 4-truss keeps exactly the clique and peels the chain.
-    clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    chain = [(0, 10), (10, 11), (11, 12)]
-    df = spark.createDataFrame(clique + chain, "src long, dst long")
-    out = k_truss(df, k=4).collect()
-    assert len(out) == 10
-    assert all(r["support"] == 3 for r in out)
-    assert {(r["a"], r["b"]) for r in out} == set(clique)
-    with pytest.raises(ValueError):
-        k_truss(df, k=2)
-
-
-def test_k_truss_mixed_support_and_peel_to_empty(spark):
-    """r14 focused pin for the single-pass triangle-credit rewrite (the
-    3-way unionAll became one explode): two 4-cliques sharing one edge
-    give MIXED supports (shared edge sits in 4 triangles, the rest in
-    2), so a miscounted side-credit would surface; k=5 then peels the
-    whole graph to empty across multiple rounds (the fused lazy-
-    checkpoint count drives the loop)."""
-    from ningaloo_turtle_etl_spark.operators.graph import k_truss
-
-    c1 = [(a, b) for a in (0, 1, 2, 3) for b in (0, 1, 2, 3) if a < b]
-    c2 = [(a, b) for a in (0, 1, 4, 5) for b in (0, 1, 4, 5) if a < b]
-    df = spark.createDataFrame(sorted(set(c1 + c2)), "src long, dst long")
-    got = {(r["a"], r["b"]): r["support"] for r in k_truss(df, k=4).collect()}
-    want = {e: (4 if e == (0, 1) else 2) for e in sorted(set(c1 + c2))}
-    assert got == want
-    assert k_truss(df, k=5).count() == 0

@@ -191,11 +191,9 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "zipf_corpus_fit",
         "phrase_search_top_bigram",
         "bm25_top10",
-        "pagerank_copurchase",
         "edit_similarity_pairs",
         "funnel_view_click_purchase",
         "cohort_weekly_retention",
-        "triangle_clustering",
         "heaps_vocab_growth",
         "rollup_pricing_totals",
         "grouping_sets_tally",
@@ -205,16 +203,10 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "url_domain_cap",
         "tfidf_cosine_sim_pairs",
         "token_entropy_quality",
-        "daily_trend_by_type",
-        "value_change_points",
-        "source_quantile_norm",
-        "mad_outlier_stats",
-        "daily_value_acf",
         "hopping_window_tally",
         "countmin_token_counts",
         "scd2_user_state",
         "entity_resolution_clusters",
-        "kcore_copurchase",
         "containment_near_dups",
         "readability_scores",
         "key_skew_report",
@@ -238,22 +230,16 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "hard_negative_mining",
         "minhash_incremental_near_dups",
         "cross_source_duplication",
-        "value_ks_by_type",
         "eventually_follows_matrix",
         "source_gini",
         "rolling_wau_hll",
-        "theil_sen_daily_counts",
-        "seasonal_profile_events",
         "boilerplate_removal",
         "classifier_calibration_curve",
         "audience_overlap_types",
-        "seasonal_anomalies",
-        "trimmed_mean_by_type",
         "contrastive_negative_pairs",
         "spatial_hotspot_clusters",
         "event_trigram_sequences",
         "semantic_cell_silhouette",
-        "ewma_daily_volume_chart",
         "leakage_safe_split",
         "source_quality_scorecard",
         "embedding_drift_by_label",
@@ -261,7 +247,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "rolling_value_p95",
         "classifier_auc",
         "score_decile_lift",
-        "psi_value_drift",
         "classifier_pr_curve",
         "keep_threshold_yield",
         "classifier_auc_by_source",
@@ -282,8 +267,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "fuzzy_part_soundex_pairs",
         # r08 incremental linkage, full oracle
         "fuzzy_part_incremental_pairs",
-        # r08 exact 1D Wasserstein drift, full oracle
-        "wasserstein_value_by_type",
         # r08 MOSS winnowing fingerprints, full oracle
         "winnowing_quote_pairs",
         # r08 corpus BLEU/ROUGE generation eval, full oracle
@@ -300,8 +283,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "kneser_ney_lm_scores",
         # r08 WOE/IV feature screen, full oracle
         "woe_iv_source_vs_english",
-        # r08 label-propagation communities, full oracle
-        "lpa_copurchase_communities",
         # r08 RBO rank-agreement metric, full oracle
         "ann_lsh_rbo",
         # r08 Markov removal-effect attribution, full oracle
@@ -320,9 +301,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "jl_distortion_pairs",
         # r09 additions, all full oracles
         "kmeans_embedding_clusters",
-        "hits_copurchase",
-        "adamic_adar_part_links",
-        "mann_kendall_daily_counts",
         "good_turing_token_counts",
         "source_lang_diversity",
         "compaction_bin_plan",
@@ -334,10 +312,9 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "moment_profile_by_type",
         "item_cosine_top100",
         # r10 extension families, full oracles (skyline / Hilbert layout /
-        # multi-source BFS / rank-1 MF training)
+        # rank-1 MF training)
         "pareto_frontier_parts",
         "hilbert_layout_buckets",
-        "bfs_hop_distance",
         "mf_gd_factors",
         "entropy_l_diversity_events",
         "ranking_ndcg_eval",
@@ -348,22 +325,17 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "als_rank1_factors",
         # (fellegi_sunter_part_weights promoted into the r12 driver window)
         "audio_wav_features",
-        "spearman_value_vs_time",
         "dp_value_median_exponential",
         "wordpiece_tokenizer_stats",
         "gbm_stumps_lang_model",
         "sequential_patterns_users",
         "ann_matryoshka_recall",
         "ann_matryoshka_topk",
-        "overdispersion_daily_counts",
         "rendezvous_shard_plan",
         # r11 second batch, full oracles
-        "hill_tail_index_by_type",
-        "modularity_copurchase_brands",
         "zonemap_prune_shipdate",
         "hmm_forward_first4",
         "cohens_kappa_langid",
-        "market_concentration_brands",
         # r12: the ANN train→serve loop, full unrolled-training oracles
         "pq_train_codebooks",
         "ann_trained_ivf_pq_topk",
@@ -371,15 +343,12 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "query_likelihood_top10",
         "retrieval_mrr_map",
         "hmm_viterbi_first4",
-        "ktruss_copurchase_hist",
         "shapley_attribution_channels",
         # r10 second batch: RFM segment rollup
         "rfm_customer_segments",
         "ann_hamming_topk",
-        "textrank_keywords",
         "cv_fold_auc",
         "platt_calibration_weights",
-        "ppr_copurchase_brand",
         "unigram_tokenizer_stats",
         "inequality_profile_by_source",
         "quantile_gd_weights",

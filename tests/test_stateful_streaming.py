@@ -118,66 +118,3 @@ def test_heavy_hitters_stream_exact_in_no_eviction_regime(spark, tmp_path):
         ).collect()
     }
     assert got == expected
-
-
-def test_msprt_monitor_stream_latches_across_microbatches(spark, tmp_path):
-    import math
-
-    import pandas as pd
-
-    from ningaloo_turtle_etl_spark.streaming.stateful import (
-        msprt_monitor_stream,
-    )
-
-    feed = tmp_path / "msprt_feed"
-    feed.mkdir()
-    # batch 1: arm 'a' far from mu0=0 -> rejects; batch 2: compensating
-    # values drag the cumulative mean back to ~0 -> pointwise LR collapses
-    # but the always-valid rejection must stay latched. Arm 'b' stays null.
-    pd.DataFrame({"arm": ["a"] * 4 + ["b"] * 2, "v": [6.0, 6.0, 6.0, 6.0, 0.1, -0.1]}).to_parquet(feed / "b0.parquet")
-    pd.DataFrame({"arm": ["a"] * 4 + ["b"] * 2, "v": [-6.0, -6.0, -6.0, -6.0, 0.2, -0.2]}).to_parquet(feed / "b1.parquet")
-
-    raw = (
-        spark.readStream.schema("arm string, v double")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(str(feed))
-    )
-    q = (
-        msprt_monitor_stream(raw, "arm", "v", mu0=0.0, sigma=2.0, tau=2.0)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("msprt_monitor_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM msprt_monitor_test").collect()
-    by_arm: dict = {}
-    for r in rows:  # update mode: keep the LAST emission per (arm, n_cum)
-        by_arm.setdefault(r["arm"], []).append(r)
-    for arm in by_arm:
-        by_arm[arm].sort(key=lambda r: r["n_cum"])
-
-    def ll(n, xbar, s2=4.0, t2=4.0):
-        return 0.5 * math.log(s2 / (s2 + n * t2)) + (
-            n * n * xbar * xbar * t2
-        ) / (2 * s2 * (s2 + n * t2))
-
-    a1, a2 = by_arm["a"]
-    assert a1["n_cum"] == 4 and a1["mean_cum"] == 6.0
-    assert a1["log_lambda"] == round(ll(4, 6.0), 6)
-    assert a1["rejected"] is True
-    # batch 2: cumulative mean collapses to 0, pointwise LR goes negative,
-    # yet p stays at the batch-1 floor and rejected stays True
-    assert a2["n_cum"] == 8 and a2["mean_cum"] == 0.0
-    assert a2["log_lambda"] == round(ll(8, 0.0), 6)
-    assert a2["log_lambda"] < 0
-    assert a2["p_always_valid"] == round(math.exp(-max(0.0, ll(4, 6.0))), 6)
-    assert a2["rejected"] is True
-    # null arm: never rejected, p pinned at 1
-    for r in by_arm["b"]:
-        assert r["rejected"] is False and r["p_always_valid"] == 1.0
-    # single-look agreement: one batch over all data == the batch operator's
-    # final cumulative row (same closed form, same totals)
-    assert by_arm["b"][-1]["n_cum"] == 4

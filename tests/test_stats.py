@@ -176,76 +176,6 @@ def test_forward_select_trace_matches_numpy_reference(spark):
     assert trace[(2, "xn1")][1] is True  # true secondary predictor next
 
 
-def test_ks_test_pairs_matches_bruteforce(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import ks_test_pairs
-
-    rows = (
-        [("a", float(v)) for v in [1, 2, 2, 3, 5, 8]]
-        + [("b", float(v)) for v in [2, 3, 3, 4, 9]]
-        + [("c", float(v)) for v in [100, 101]]
-    )
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = {
-        (r["group_a"], r["group_b"]): r
-        for r in ks_test_pairs(df, "g", "v").collect()
-    }
-
-    def brute(xs, ys):
-        pts = sorted(set(xs) | set(ys))
-        return max(
-            abs(
-                sum(1 for x in xs if x <= p) / len(xs)
-                - sum(1 for y in ys if y <= p) / len(ys)
-            )
-            for p in pts
-        )
-
-    samples = {"a": [1, 2, 2, 3, 5, 8], "b": [2, 3, 3, 4, 9], "c": [100, 101]}
-    for (ga, gb), r in out.items():
-        assert abs(r["ks_d"] - round(brute(samples[ga], samples[gb]), 6)) < 1e-9
-        assert r["n_a"] == len(samples[ga]) and r["n_b"] == len(samples[gb])
-    assert out[("a", "c")]["ks_d"] == 1.0  # disjoint supports
-    assert len(out) == 3
-
-
-def test_wasserstein_pairs_matches_bruteforce(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import wasserstein_pairs
-
-    samples = {
-        "a": [0.0, 1.0],
-        "b": [2.0, 3.0],          # pure shift of a by +2 -> W1 = 2
-        "c": [0.0, 1.0],          # identical to a -> W1 = 0
-        "d": [1.0, 2.0, 2.0, 5.0],
-    }
-    rows = [(g, v) for g, vs in samples.items() for v in vs]
-    df = spark.createDataFrame(rows, "g string, v double")
-    out = {
-        (r["group_a"], r["group_b"]): r
-        for r in wasserstein_pairs(df, "g", "v").collect()
-    }
-    assert out[("a", "b")]["w1"] == 2.0  # mean shift exactly
-    assert out[("a", "c")]["w1"] == 0.0  # identical distributions
-
-    def brute(xs, ys):
-        pts = sorted(set(xs) | set(ys))
-        tot = 0.0
-        for p, p_next in zip(pts, pts[1:]):
-            fa = sum(1 for x in xs if x <= p) / len(xs)
-            fb = sum(1 for y in ys if y <= p) / len(ys)
-            tot += (p_next - p) * abs(fa - fb)
-        return tot
-
-    for (ga, gb), r in out.items():
-        assert abs(r["w1"] - round(brute(samples[ga], samples[gb]), 6)) < 1e-9
-        assert r["n_a"] == len(samples[ga]) and r["n_b"] == len(samples[gb])
-    assert len(out) == 6
-    # KS saturates at 1.0 for any disjoint pair; W1 keeps measuring the gap
-    far = spark.createDataFrame(
-        [("a", 0.0), ("z", 1000.0)], "g string, v double"
-    )
-    assert wasserstein_pairs(far, "g", "v").collect()[0]["w1"] == 1000.0
-
-
 def test_eventually_follows_hand_matrix(spark):
     import datetime as dt
 
@@ -289,45 +219,6 @@ def test_gini_concentration_known_values(spark):
     assert r["gini"] == 0.25 and r["total_rows"] == 4 and r["n_keys"] == 2
 
 
-def test_theil_sen_outlier_robust(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import theil_sen_trend
-
-    # g1: y = 2x with one wild outlier at x=4 -> slope stays 2, b = 0.
-    # g2: clean y = 3x + 1.
-    rows = [("g1", 0.0, 0.0), ("g1", 1.0, 2.0), ("g1", 2.0, 4.0),
-            ("g1", 3.0, 6.0), ("g1", 4.0, 100.0)] + [
-        ("g2", float(x), 3.0 * x + 1) for x in range(4)
-    ]
-    df = spark.createDataFrame(rows, "g string, x double, y double")
-    got = {r["g"]: r for r in theil_sen_trend(df, "g", "x", "y").collect()}
-    assert got["g1"]["slope"] == 2.0 and got["g1"]["intercept"] == 0.0
-    assert got["g1"]["n_points"] == 5 and got["g1"]["n_pairs"] == 10
-    assert got["g2"]["slope"] == 3.0 and got["g2"]["intercept"] == 1.0
-
-
-def test_seasonal_profile_two_cells(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import seasonal_profile
-
-    # 2024-01-01 is a Monday (Spark dow = 2).
-    rows = [("2024-01-01 10:00:00", 1.0), ("2024-01-01 10:30:00", 2.0),
-            ("2024-01-08 10:15:00", 3.0), ("2024-01-02 11:00:00", 8.0)]
-    df = spark.createDataFrame(rows, "ts string, value double").select(
-        F.to_timestamp("ts").alias("ts"), "value"
-    )
-    got = {(r["dow"], r["hour"]): r
-           for r in seasonal_profile(df, "ts", "value").collect()}
-    mon = got[(2, 10)]
-    assert mon["n_events"] == 3 and mon["share"] == 0.75
-    assert mon["count_index"] == 1.5 and mon["value_mean"] == 2.0
-    assert mon["value_index"] == round(2.0 / 3.5, 6)
-    tue = got[(3, 11)]
-    assert tue["n_events"] == 1 and tue["count_index"] == 0.5
-    assert tue["value_index"] == round(8.0 / 3.5, 6)
-    # count-only mode drops the value columns
-    out = seasonal_profile(df, "ts")
-    assert "value_mean" not in out.columns and "value_index" not in out.columns
-
-
 def test_classifier_calibration_hand_computed(spark):
     from ningaloo_turtle_etl_spark.operators.classify import (
         classifier_calibration,
@@ -363,46 +254,6 @@ def test_audience_overlap_pairs(spark):
     assert (r["segment_a"], r["segment_b"]) == ("A", "B")
     assert r["n_a"] == 3 and r["n_b"] == 3 and r["n_both"] == 2
     assert r["jaccard"] == 0.5 and r["overlap_coef"] == round(2 / 3, 6)
-
-
-def test_seasonal_anomaly_scan_hand_computed(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import (
-        seasonal_anomaly_scan,
-    )
-
-    # two Mondays, hour 9: 10 then 30 events -> baseline 20; one
-    # Wednesday hour 0 with 5 events (its own baseline) -> ratio 1.
-    rows = (
-        [("2024-01-01 09:%02d:00" % (i % 60),) for i in range(10)]
-        + [("2024-01-08 09:%02d:00" % (i % 60),) for i in range(30)]
-        + [("2024-01-03 00:%02d:00" % i,) for i in range(5)]
-    )
-    df = spark.createDataFrame(rows, "ts string").select(
-        F.to_timestamp("ts").alias("ts")
-    )
-    out = seasonal_anomaly_scan(df, "ts", top_n=10).collect()
-    got = {(str(r["d"]), r["hour"]): r for r in out}
-    lo = got[("2024-01-01", 9)]
-    assert lo["expected"] == 20.0 and lo["log_ratio"] == round(
-        math.log(0.5), 6
-    )
-    hi = got[("2024-01-08", 9)]
-    assert hi["log_ratio"] == round(math.log(1.5), 6)
-    assert got[("2024-01-03", 0)]["log_ratio"] == 0.0
-    # ranked by |log_ratio|: the dip outranks the spike
-    assert (str(out[0]["d"]), out[0]["hour"]) == ("2024-01-01", 9)
-
-
-def test_trimmed_mean_exact_band(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import trimmed_mean
-
-    df = spark.createDataFrame(
-        [("g", float(i)) for i in range(101)], "g string, v double"
-    )
-    r = trimmed_mean(df, "g", "v", frac=0.05).collect()[0]
-    assert r["lo_cut"] == 5.0 and r["hi_cut"] == 95.0
-    assert r["n_rows"] == 101 and r["n_kept"] == 91
-    assert r["trimmed_mean"] == 50.0
 
 
 def test_contrastive_negatives_deterministic(spark):
@@ -451,37 +302,6 @@ def test_cell_silhouette_two_centroids(spark):
     assert got[1]["mean_silhouette"] == round(s1, 6)
     assert got[0]["mean_silhouette"] == round((s1 + 0.0) / 2, 6)
     assert got[0]["mean_intra_dist"] == round((1 + 5) / 2, 6)
-
-
-def test_ewma_control_chart_reference(spark):
-    from ningaloo_turtle_etl_spark.operators.trend import ewma_control_chart
-
-    # 20 stable alternating steps, then a sustained +9 shift
-    xs = [10.0, 11.0] * 10 + [20.0] * 3
-    df = spark.createDataFrame(
-        [("g", t, x) for t, x in enumerate(xs)], "g string, t long, x double"
-    )
-    got = {r["step"]: r for r in
-           ewma_control_chart(df, "g", "t", "x", alpha=0.3, span=14,
-                              k=3.0).collect()}
-    assert len(got) == len(xs)
-    # python reference: renormalized trailing weights
-    for t in (0, 4, 15, 22):
-        num = den = 0.0
-        for j in range(min(t + 1, 14)):
-            w = 0.7 ** j
-            num += xs[t - j] * w
-            den += w
-        assert got[t]["ewma"] == round(num / den, 6)
-    assert got[0]["ewma"] == 10.0
-    n = len(xs)
-    mu = sum(xs) / n
-    sd = (sum((x - mu) ** 2 for x in xs) / n) ** 0.5
-    sig = (0.3 / 1.7) ** 0.5
-    assert got[9]["center"] == round(mu, 6)
-    assert got[9]["ucl"] == round(round(mu, 6) + 3 * round(sd, 6) * sig, 6)
-    # the sustained shift drives the EWMA over the upper limit by the end
-    assert got[22]["out_of_control"] == 1 and got[0]["out_of_control"] == 0
 
 
 def test_pairwise_battles_and_bradley_terry(spark):
@@ -533,35 +353,6 @@ def test_pairwise_battles_and_bradley_terry(spark):
         bradley_terry_ratings(bdf, iterations=0)
     with _pt.raises(ValueError):
         bradley_terry_ratings(bdf, max_items=2)
-
-
-def test_mann_kendall_hand_series(spark):
-    """Strictly increasing series: S = n(n-1)/2, Var = n(n-1)(2n+5)/18,
-    z = (S-1)/sqrt(Var); constant series: S = 0, z = 0 (full ties)."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.trend import mann_kendall_trend
-
-    rows = [("up", t, float(t)) for t in range(1, 11)]
-    rows += [("flat", t, 7.0) for t in range(1, 11)]
-    rows += [("down", t, float(-t)) for t in range(1, 6)]
-    rows += [("lone", 1, 3.0)]  # singleton group: no i<j pairs
-    df = spark.createDataFrame(rows, "g string, t int, x double")
-    out = {r["g"]: r for r in mann_kendall_trend(df, "g", "t", "x").collect()}
-    n = 10
-    s = n * (n - 1) // 2
-    var = n * (n - 1) * (2 * n + 5) / 18.0
-    assert out["up"]["s_stat"] == s
-    assert out["up"]["var_s"] == round(var, 6)
-    assert out["up"]["z"] == round((s - 1) / math.sqrt(var), 6)
-    assert out["flat"]["s_stat"] == 0 and out["flat"]["z"] == 0.0
-    assert out["flat"]["var_s"] == 0.0  # all ties cancel the variance
-    assert out["down"]["s_stat"] == -10
-    assert out["down"]["z"] < 0
-    # Singleton group is REPORTED (n=1, s=0, var=0, z=0), not dropped.
-    assert out["lone"]["n_points"] == 1
-    assert out["lone"]["s_stat"] == 0
-    assert out["lone"]["var_s"] == 0.0 and out["lone"]["z"] == 0.0
 
 
 def test_class_diversity_profile_hand_cases(spark):
