@@ -15,8 +15,7 @@ beyond the group key itself.
 
 Reference parity note: the reference has no agreement layer (its QA is
 rule-based, e.g. `/root/reference/ningaloo-etl.Rmd` range checks); this
-extends the engine's label-quality surface alongside classifier AUC and
-calibration in `operators/classify.py`.
+extends the engine with a label-quality surface.
 """
 
 from __future__ import annotations

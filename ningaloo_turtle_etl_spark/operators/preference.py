@@ -82,7 +82,7 @@ def bradley_terry_ratings(
 
     ``iterations`` fixed-count synchronous rounds (deterministic, no
     convergence test — replayable cross-engine exactly like the kmeans /
-    logistic-GD unrolled oracles). Items that never win rate exactly 0 (MM
+    MF unrolled oracles). Items that never win rate exactly 0 (MM
     fixed point); guarded division skips the p_i+p_j = 0 terms that only
     those items can produce.
 

@@ -1168,9 +1168,9 @@ def mf_gd_factors(
     rating_col: str = "rating",
 ) -> DataFrame:
     """DISTRIBUTED rank-1 matrix-factorization training (Funk-SVD first
-    factor) by synchronous full-batch gradient descent — the recsys /
-    preference-model sibling of ``logistic_gd_train``: learn p_u, q_i
-    minimizing Σ (r_ui − p_u·q_i)² without MLlib.
+    factor) by synchronous full-batch gradient descent — a recsys /
+    preference-model trainer: learn p_u, q_i minimizing
+    Σ (r_ui − p_u·q_i)² without MLlib.
 
     Per round (all updates read the ROUND-START factors — synchronous,
     so the trajectory is partition-order-free):
@@ -1182,8 +1182,8 @@ def mf_gd_factors(
     MEAN (not sum) gradients keep the step bounded by lr·|e|·|factor|
     regardless of a node's degree — a power-law user with 10⁶ ratings
     takes the same-magnitude step as a cold one, so the fixed lr
-    survives any scale. Determinism across engines (the logistic-GD
-    nano convention): each pair's gradient term rounds to integer nanos
+    survives any scale. Determinism across engines (integer-nano
+    gradients): each pair's gradient term rounds to integer nanos
     BEFORE the per-key exact-integer SUM, so summation order can never
     move a factor; everything else is plain double arithmetic in an
     operation order the oracle mirrors token-for-token. lr defaults to

@@ -3,7 +3,7 @@
 Every generator replays its Spark pipeline with the SAME constants — LSH
 hyperplanes are regenerated from the seeded numpy rule at SQL-build time,
 IVF centroids / scalar-quantizer ranges / PQ codebooks come from the frozen
-fixtures scripts/train_classifier_fixtures.py wrote — and the SAME float
+fixtures scripts/fit_fixtures.py wrote — and the SAME float
 arithmetic order: dot products, norms and squared-distance chains are
 left-to-right folds over identical doubles in both engines (numpy's sums
 over the ≤8-element sub-axes are sequential too), so bucket signs, argmin
@@ -14,16 +14,21 @@ side's display rounding.
 
 from __future__ import annotations
 
+import json
+import os
+
 #: Shared query-set cut: every ANN query probes vec_id < 5 against the full
 #: embeddings table.
 QUERY_CUT = 5
 
 
 def _fixture(name: str) -> dict:
-    # One loader for every fixture (model dicts and ANN params alike).
-    from ningaloo_turtle_etl_spark.operators.classify import load_model_fixture
-
-    return load_model_fixture(name)
+    # One loader for every fixture (centroids and ANN params alike).
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "fixtures", f"{name}.json"
+    )
+    with open(path) as f:
+        return json.load(f)
 
 
 def _vec_lit(values) -> str:

@@ -404,6 +404,7 @@ def simhash_near_dups(spark, sf_dir):
 
 
 from ningaloo_turtle_etl_spark.queries.ann_oracles import (
+    _fixture,
     ivf_oracle_sql,
     matryoshka_recall_oracle_sql,
     matryoshka_topk_oracle_sql,
@@ -437,8 +438,6 @@ def ann_ivf_recall(spark, sf_dir):
     brute-force ground truth — the companion acceptance row to
     ann_lsh_recall, so the two index families publish comparable numbers."""
     import numpy as np
-
-    from ningaloo_turtle_etl_spark.queries.ann_oracles import _fixture
 
     emb = load_table(spark, "embeddings", sf_dir)
     qs = emb.filter(F.col("vec_id") < 5)
@@ -475,7 +474,6 @@ def ann_pq_recall(spark, sf_dir):
 
     from ningaloo_turtle_etl_spark.operators.quantize import pq_topk
     from ningaloo_turtle_etl_spark.operators.similarity import l2_topk
-    from ningaloo_turtle_etl_spark.queries.ann_oracles import _fixture
 
     fix = _fixture("pq_codebooks")
     books = np.asarray(fix["codebooks"], dtype=float)
@@ -493,8 +491,6 @@ def ann_ivf_topk(spark, sf_dir):
     k-means) — argmin assignment, nprobe probing and the re-rank all
     replay in the DuckDB oracle (r04)."""
     import numpy as np
-
-    from ningaloo_turtle_etl_spark.queries.ann_oracles import _fixture
 
     emb = load_table(spark, "embeddings", sf_dir)
     cents = np.asarray(_fixture("ivf_centroids")["centroids"], dtype=float)
@@ -732,7 +728,6 @@ def ann_quantized_topk(spark, sf_dir):
     import numpy as np
 
     from ningaloo_turtle_etl_spark.operators.quantize import quantized_cosine_topk
-    from ningaloo_turtle_etl_spark.queries.ann_oracles import _fixture
 
     fix = _fixture("quantizer")
     lo = np.asarray(fix["lo"], dtype=float)
@@ -753,7 +748,6 @@ def ann_pq_topk(spark, sf_dir):
     import numpy as np
 
     from ningaloo_turtle_etl_spark.operators.quantize import pq_topk
-    from ningaloo_turtle_etl_spark.queries.ann_oracles import _fixture
 
     fix = _fixture("pq_codebooks")
     books = np.asarray(fix["codebooks"], dtype=float)
@@ -775,7 +769,6 @@ def ann_ivf_pq_topk(spark, sf_dir):
     import numpy as np
 
     from ningaloo_turtle_etl_spark.operators.quantize import ivf_pq_topk
-    from ningaloo_turtle_etl_spark.queries.ann_oracles import _fixture
 
     cents = np.asarray(_fixture("ivf_centroids")["centroids"], dtype=float)
     books = np.asarray(_fixture("pq_codebooks")["codebooks"], dtype=float)
@@ -1834,12 +1827,6 @@ def q_bigram_lm_scores(spark, sf_dir):
     return bigram_lm_scores(docs, lambda_=0.7)
 
 
-def _semantic_centroid_fixture():
-    from ningaloo_turtle_etl_spark.operators.classify import load_model_fixture
-
-    return load_model_fixture("semantic_centroids")
-
-
 def _semantic_dedup_oracle_sql(threshold: float = 0.4) -> str:
     """DuckDB SQL replicating semantic_dedup over the frozen centroid
     fixture end-to-end: argmin-cell assignment against literal centroids
@@ -1848,7 +1835,7 @@ def _semantic_dedup_oracle_sql(threshold: float = 0.4) -> str:
     components as a recursive min-reachable-id CTE, keeping vec_id ==
     component. Float parity holds because both engines sum distance/dot
     terms in element order over the same doubles."""
-    fix = _semantic_centroid_fixture()
+    fix = _fixture("semantic_centroids")
     dist_exprs = ", ".join(
         "list_sum(list_transform(list_zip(v, ["
         + ", ".join(repr(float(x)) for x in c)
@@ -1896,7 +1883,7 @@ def _semantic_dedup_oracle_sql(threshold: float = 0.4) -> str:
 def semantic_dedup_query(spark, sf_dir):
     """SemDeDup-style semantic dedup over the embeddings table, blocking
     against the FROZEN centroid fixture (deterministic md5-hash-sampled
-    k-means, scripts/train_classifier_fixtures.py): argmin-cell assignment,
+    k-means, scripts/fit_fixtures.py): argmin-cell assignment,
     within-cell exact cosine pairs at ≥0.4, connected components, keep
     min-id per cluster. Full oracle row since r04 — fixed literal centroids
     make cell assignment plain SQL, and the component labeling replays as a
@@ -1907,7 +1894,7 @@ def semantic_dedup_query(spark, sf_dir):
     from ningaloo_turtle_etl_spark.operators.dedup import semantic_dedup
 
     emb = load_table(spark, "embeddings", sf_dir)
-    cents = np.asarray(_semantic_centroid_fixture()["centroids"], dtype=float)
+    cents = np.asarray(_fixture("semantic_centroids")["centroids"], dtype=float)
     kept = semantic_dedup(emb, threshold=0.4, centroids=cents)
     return kept.select("vec_id", "label")
 
@@ -2263,179 +2250,6 @@ def sampled_token_frequencies(spark, sf_dir):
 
 
 @register(
-    "bpe_pair_counts",
-    r"""
-    WITH w AS (
-      SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    x -> x <> '')) AS word
-      FROM documents
-    ),
-    wf AS (SELECT word, COUNT(*) AS freq FROM w GROUP BY 1),
-    sym AS (
-      SELECT freq, list_append(string_split(word, ''), '</w>') AS s FROM wf
-    ),
-    pairs AS (
-      SELECT freq,
-             unnest(list_transform(range(1, len(s)),
-                    i -> s[i] || chr(1) || s[i+1])) AS pr
-      FROM sym
-    )
-    SELECT split_part(pr, chr(1), 1) AS "left",
-           split_part(pr, chr(1), 2) AS "right",
-           CAST(SUM(freq) AS BIGINT) AS pair_count
-    FROM pairs GROUP BY 1, 2
-    ORDER BY pair_count DESC, "left" ASC, "right" ASC LIMIT 20
-    """,
-)
-def bpe_pair_counts(spark, sf_dir):
-    """BPE induction's inner aggregation as a hash row: the top-20 weighted
-    adjacent symbol pairs over the initial character+end-marker vocabulary
-    (Sennrich et al. 2016 step 0). This is the aggregation every merge
-    iteration re-runs, so proving it bit-for-bit covers the distributed
-    heart of learn_bpe; the greedy loop itself is rows-only
-    (`bpe_merges`) with exact Python-reference parity in
-    tests/test_bpe.py."""
-    from ningaloo_turtle_etl_spark.operators.bpe import (
-        pair_counts,
-        with_symbols,
-        word_frequencies,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    pc = pair_counts(with_symbols(word_frequencies(docs)))
-    return pc.orderBy(
-        F.desc("pair_count"), F.asc("left"), F.asc("right")
-    ).limit(20)
-
-
-def _bpe_oracle_sql(num_merges: int) -> str:
-    """Full-oracle SQL for the iterative BPE induction, by UNROLLING the
-    merge loop into a chained CTE per step: pair counts → deterministic
-    argmax → apply-merge. Symbols live in a chr(31)-joined string so the
-    apply step is a ``list_reduce`` string fold with the same left-to-right
-    non-overlapping greedy semantics as ``operators.bpe.apply_merge`` (the
-    accumulator's LAST symbol is compared whole — ``acc = l`` or
-    ``ends_with(acc, sep || l)`` — so "aaa" under merge (a,a) yields
-    ["aa","a"] in both engines). chr(31) never occurs in whitespace-split
-    tokens, so the encoding is lossless here."""
-    us = "chr(31)"
-    parts = [
-        f"""
-    wf AS (
-        SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-        FROM (SELECT unnest({_TOKENS}) AS word FROM documents)
-        GROUP BY word
-    ),
-    s0 AS (
-        SELECT word, freq,
-               array_to_string(
-                   list_append(
-                       list_transform(range(1, length(word) + 1),
-                                      i -> substr(word, i, 1)),
-                       '</w>'),
-                   {us}) AS sym
-        FROM wf
-    )"""
-    ]
-    for i in range(1, num_merges + 1):
-        prev = f"s{i - 1}"
-        parts.append(
-            f""",
-    pc{i} AS (
-        SELECT pr.l AS bl, pr.r AS br, CAST(SUM(freq) AS BIGINT) AS c
-        FROM (
-            SELECT freq,
-                   unnest(list_transform(range(1, len(tk)),
-                       j -> struct_pack(l := tk[j], r := tk[j + 1]))) AS pr
-            FROM (SELECT freq, string_split(sym, {us}) AS tk FROM {prev})
-        ) GROUP BY 1, 2
-    ),
-    b{i} AS (SELECT bl, br, c FROM pc{i}
-             ORDER BY c DESC, bl ASC, br ASC LIMIT 1),
-    s{i} AS (
-        SELECT word, freq,
-               list_reduce(string_split(sym, {us}),
-                   (acc, x) -> CASE WHEN x = br AND
-                                     (acc = bl OR ends_with(acc, {us} || bl))
-                               THEN acc || x
-                               ELSE acc || {us} || x END) AS sym
-        FROM {prev} CROSS JOIN b{i}
-    )"""
-        )
-    selects = "\n    UNION ALL\n    ".join(
-        f'SELECT {i} AS step, bl AS "left", br AS "right", '
-        f"bl || br AS merged, c AS pair_count FROM b{i}"
-        for i in range(1, num_merges + 1)
-    )
-    return "WITH " + "".join(parts) + "\n    " + selects
-
-
-def _bpe_encode_oracle_sql(num_merges: int) -> str:
-    """Encoding oracle: reuse the unrolled chain's FINAL symbol table
-    (s<N> maps word -> chr(31)-joined symbols) as the tokenizer dim, join
-    it onto position-tagged corpus words, and reassemble per doc."""
-    us = "chr(31)"
-    chain = _bpe_oracle_sql(num_merges)
-    body = chain[len("WITH ") : chain.rindex("\n    SELECT 1 AS step")]
-    return f"""
-    WITH {body},
-    wp AS (
-        SELECT doc_id, pw.pos AS pos, pw.w AS word
-        FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks) + 1),
-                       j -> struct_pack(pos := j, w := toks[j]))) AS pw
-            FROM (SELECT doc_id, {_TOKENS} AS toks FROM documents)
-        )
-    ),
-    enc AS (
-        SELECT wp.doc_id, wp.pos,
-               COALESCE(sv.sym,
-                   array_to_string(
-                       list_append(
-                           list_transform(range(1, length(wp.word) + 1),
-                                          i -> substr(wp.word, i, 1)),
-                           '</w>'),
-                       {us})) AS sym
-        FROM wp LEFT JOIN s{num_merges} sv ON wp.word = sv.word
-    ),
-    per AS (
-        SELECT doc_id,
-               CAST(SUM(len(string_split(sym, {us}))) AS BIGINT) AS n_tokens,
-               string_agg(replace(sym, {us}, ' '), ' ' ORDER BY pos)
-                   AS token_stream
-        FROM enc GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(per.n_tokens, 0) AS n_tokens,
-           COALESCE(per.token_stream, '') AS token_stream
-    FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-    """
-
-
-@register("bpe_merges", _bpe_oracle_sql(8))
-def bpe_merges(spark, sf_dir):
-    """Distributed BPE tokenizer induction: the first 8 learned merges over
-    the corpus word-frequency table — (step, left, right, merged,
-    pair_count). The greedy argmax loop is driver-ITERATIVE on the Spark
-    side (each step depends on the previous rewrite), but for a FIXED
-    merge budget it is still SQL-expressible by unrolling — the oracle
-    chains one (pair-count → argmax → list_reduce fold) CTE block per
-    merge, so this row is a full hash comparison since r04 (previously
-    rows-only). Exact merge-for-merge equality with a from-scratch Python
-    BPE is additionally pinned in tests/test_bpe.py, and the
-    per-iteration aggregation alone carries `bpe_pair_counts`."""
-    from ningaloo_turtle_etl_spark.operators.bpe import learn_bpe, merge_table
-    from ningaloo_turtle_etl_spark.operators.cache import release_tracked_caches
-
-    docs = load_table(spark, "documents", sf_dir)
-    merges, _sym = learn_bpe(docs, num_merges=8)
-    out = merge_table(spark, merges)
-    release_tracked_caches()
-    return out
-
-
-@register(
     "gopher_repetition_stats",
     rf"""
     WITH t AS (
@@ -2749,26 +2563,6 @@ def q_substring_span_removal(spark, sf_dir):
         F.col("n_removed_chars").cast("long").alias("n_removed_chars"),
         "cleaned_text",
     )
-
-
-@register("bpe_encode_corpus", _bpe_encode_oracle_sql(8))
-def bpe_encode_corpus(spark, sf_dir):
-    """Tokenizer APPLICATION: encode every document with the 8-merge BPE
-    induced from this corpus — per doc, token count and the space-joined
-    token stream. Corpus explodes once; the vocabulary-sized symbol table
-    broadcasts; reassembly is one doc-keyed groupBy. The oracle reuses the
-    unrolled induction chain's final symbol table as its tokenizer dim."""
-    from ningaloo_turtle_etl_spark.operators.bpe import (
-        encode_corpus,
-        learn_bpe,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    merges, sym = learn_bpe(docs, num_merges=8)
-    # merges drive the OOV fallback; unused on the training corpus itself,
-    # where every word hits the symbol table (the oracle's fallback is
-    # bare chars for the same reason — neither path can fire here).
-    return encode_corpus(docs, sym, merges)
 
 
 @register(
@@ -3742,7 +3536,7 @@ def _silhouette_oracle_sql() -> str:
     zip_with fold), argmin cell via list_position(list_min) (ties to the
     lowest index), nearest-other via min over the argmin-excised slices,
     then the per-cell mean fold."""
-    fix = _semantic_centroid_fixture()
+    fix = _fixture("semantic_centroids")
     dist_exprs = ", ".join(
         "list_sum(list_transform(list_zip(v, ["
         + ", ".join(repr(float(x)) for x in c)
@@ -3796,7 +3590,7 @@ def q_semantic_cell_silhouette(spark, sf_dir):
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
-    cents = np.asarray(_semantic_centroid_fixture()["centroids"], dtype=float)
+    cents = np.asarray(_fixture("semantic_centroids")["centroids"], dtype=float)
     return cell_silhouette(emb, cents)
 
 
@@ -4035,91 +3829,6 @@ def q_assoc_rules_copurchase(spark, sf_dir):
     return association_rules(
         li, "l_orderkey", "l_partkey", min_support=2
     ).orderBy("antecedent", "consequent")
-
-
-def _bpe_fertility_oracle_sql(num_merges: int) -> str:
-    """Fertility oracle: wrap the encode oracle's chain as a CTE and roll
-    per-doc token counts up to language grain alongside word/char totals."""
-    enc = _bpe_encode_oracle_sql(num_merges)
-    idx = enc.rindex("SELECT d.doc_id")
-    body = enc[:idx].rstrip().rstrip(",")
-    final = enc[idx:]
-    return f"""{body},
-    enc_out AS ({final}),
-    j AS (
-        SELECT e.doc_id, e.n_tokens, d.lang, d.n_chars,
-               len({_TOKENS}) AS n_words
-        FROM enc_out e JOIN documents d USING (doc_id)
-    )
-    SELECT lang,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_words) AS BIGINT) AS n_words,
-           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-           CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-           ROUND(CASE WHEN SUM(n_words) > 0
-                 THEN SUM(n_tokens) * 1.0 / SUM(n_words) ELSE 0.0 END, 6)
-               AS fertility,
-           ROUND(CASE WHEN SUM(n_tokens) > 0
-                 THEN SUM(n_chars) * 1.0 / SUM(n_tokens) ELSE 0.0 END, 6)
-               AS chars_per_token
-    FROM j GROUP BY lang ORDER BY lang
-    """
-
-
-@register("tokenizer_fertility", _bpe_fertility_oracle_sql(8))
-def q_tokenizer_fertility(spark, sf_dir):
-    """Tokenizer EVALUATION: per-language fertility (subword tokens per
-    word) and compression (chars per token) of the corpus-induced 8-merge
-    BPE — the acceptance metrics a tokenizer change must publish before a
-    retrain (high fertility on a language = that language pays more
-    sequence length per word). Rolls the encode plan's per-doc counts up
-    to language grain: the symbol dim still broadcasts, and the rollup
-    adds one lang-keyed hash aggregate over doc-grain rows."""
-    from ningaloo_turtle_etl_spark.operators.bpe import (
-        encode_corpus,
-        learn_bpe,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir)
-    merges, sym = learn_bpe(docs, num_merges=8)
-    enc = encode_corpus(docs, sym, merges)
-    j = enc.join(
-        docs.select(
-            "doc_id",
-            "lang",
-            "n_chars",
-            F.size(tokens(F.lower(F.col("text")))).alias("n_words"),
-        ),
-        on="doc_id",
-    )
-    agg = j.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_words").cast("long").alias("n_words"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
-        F.sum("n_chars").cast("long").alias("n_chars"),
-    )
-    return agg.select(
-        "lang",
-        "n_docs",
-        "n_words",
-        "n_tokens",
-        "n_chars",
-        F.round(
-            F.when(
-                F.col("n_words") > 0,
-                F.col("n_tokens") / F.col("n_words"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("fertility"),
-        F.round(
-            F.when(
-                F.col("n_tokens") > 0,
-                F.col("n_chars") / F.col("n_tokens"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("chars_per_token"),
-    ).orderBy("lang")
 
 
 def _ahash_oracle_sql(max_id: int = 250, edit_below: int = 60,
@@ -5235,233 +4944,8 @@ def rake_top_phrases(spark, sf_dir):
     return rake_keywords(docs, top_n=50, max_phrase_len=4)
 
 
-@register(
-    "nb_lang_confusion",
-    rf"""
-    WITH base AS (
-        SELECT doc_id AS id, lang AS y, {_TOKENS} AS toks FROM documents
-    ),
-    tok AS (SELECT id, y, unnest(toks) AS tk FROM base),
-    classes AS (SELECT DISTINCT y AS k FROM tok),
-    vocab AS (SELECT DISTINCT tk FROM tok),
-    vn AS (SELECT CAST(COUNT(*) AS BIGINT) AS v FROM vocab),
-    kt AS (SELECT y AS k, tk, CAST(COUNT(*) AS BIGINT) AS c
-           FROM tok GROUP BY 1, 2),
-    nk AS (SELECT y AS k, CAST(COUNT(*) AS BIGINT) AS nk
-           FROM tok GROUP BY 1),
-    model AS (
-        SELECT g.k, g.tk,
-               CAST(round(ln((COALESCE(kt.c, 0) + 1.0)
-                             / (nk.nk + 1.0 * vn.v)) * 1e9) AS BIGINT)
-                   AS llm
-        FROM (SELECT k, tk FROM classes CROSS JOIN vocab) g
-        LEFT JOIN kt ON g.k = kt.k AND g.tk = kt.tk
-        JOIN nk ON g.k = nk.k CROSS JOIN vn
-    ),
-    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM base),
-    prior AS (
-        SELECT y AS k,
-               CAST(round(ln(COUNT(*) * 1.0 / nd.n) * 1e9) AS BIGINT) AS lpm
-        FROM base CROSS JOIN nd GROUP BY y, nd.n
-    ),
-    scores AS (
-        SELECT tok.id, model.k,
-               CAST(SUM(model.llm) AS BIGINT) + ANY_VALUE(prior.lpm)
-                   AS score
-        FROM tok JOIN model ON tok.tk = model.tk
-        JOIN prior ON model.k = prior.k
-        GROUP BY tok.id, model.k
-    ),
-    pred AS (
-        SELECT id, k AS predicted FROM (
-            SELECT id, k,
-                   ROW_NUMBER() OVER (PARTITION BY id
-                                      ORDER BY score DESC, k) AS rn
-            FROM scores
-        ) WHERE rn = 1
-    ),
-    empty_pred AS (
-        -- token-less docs: prior-only argmax (same tie-break)
-        SELECT base.id,
-               (SELECT k FROM prior ORDER BY lpm DESC, k LIMIT 1)
-                   AS predicted
-        FROM base WHERE len(toks) = 0
-    ),
-    allpred AS (
-        SELECT * FROM pred UNION ALL SELECT * FROM empty_pred
-    )
-    SELECT base.y AS actual, allpred.predicted,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM base JOIN allpred ON base.id = allpred.id
-    GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-)
-def nb_lang_confusion(spark, sf_dir):
-    """Multinomial Naive Bayes language classifier trained distributed
-    on the corpus and replayed in-sample as an (actual, predicted, n)
-    confusion grid (`operators/classify.py naive_bayes_confusion`,
-    Laplace α=1): priors and smoothed log-likelihoods are one-pass
-    aggregations quantized to integer nanos in the model table, so
-    per-document argmax scores are exact-integer sums — the labeling-
-    pipeline audit loop, fully oracle-replayed."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        naive_bayes_confusion,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    return naive_bayes_confusion(docs, "lang").orderBy(
-        "actual", "predicted"
-    )
-
-
-@register(
-    "gini_best_split_features",
-    rf"""
-    WITH feats AS (
-        SELECT CAST(n_chars AS DOUBLE) AS n_chars,
-               CAST(len({_TOKENS}) AS DOUBLE) AS n_tokens,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM documents
-    ),
-    unpiv AS (
-        SELECT 'n_chars' AS feature, n_chars AS v, y FROM feats
-        UNION ALL
-        SELECT 'n_tokens', n_tokens, y FROM feats
-    ),
-    grid AS (
-        SELECT feature, v, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(y) AS BIGINT) AS pos
-        FROM unpiv WHERE v IS NOT NULL GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT feature, v,
-               CAST(SUM(n) OVER (PARTITION BY feature ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS nl,
-               CAST(SUM(pos) OVER (PARTITION BY feature ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS pl,
-               CAST(SUM(n) OVER (PARTITION BY feature) AS BIGINT) AS nt,
-               CAST(SUM(pos) OVER (PARTITION BY feature) AS BIGINT) AS pt
-        FROM grid
-    ),
-    scored AS (
-        SELECT feature, v AS threshold, nl AS n_left, nt - nl AS n_right,
-               ROUND((nl * 1.0 / nt) * (1.0 - (pl * 1.0 / nl) * (pl * 1.0 / nl)
-                       - ((nl - pl) * 1.0 / nl) * ((nl - pl) * 1.0 / nl))
-                   + ((nt - nl) * 1.0 / nt)
-                     * (1.0 - ((pt - pl) * 1.0 / (nt - nl))
-                             * ((pt - pl) * 1.0 / (nt - nl))
-                        - ((nt - nl - pt + pl) * 1.0 / (nt - nl))
-                          * ((nt - nl - pt + pl) * 1.0 / (nt - nl))),
-                   6) AS gini_split,
-               ROUND(1.0 - (pt * 1.0 / nt) * (pt * 1.0 / nt)
-                     - ((nt - pt) * 1.0 / nt) * ((nt - pt) * 1.0 / nt),
-                   6) AS gini_root
-        FROM cum WHERE nl < nt
-    )
-    SELECT feature, threshold, n_left, n_right, gini_split, gini_root,
-           ROUND(gini_root - gini_split, 6) AS gain
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY feature
-              ORDER BY gini_split, threshold) AS rn FROM scored)
-    WHERE rn = 1 ORDER BY feature
-    """,
-)
-def gini_best_split_features(spark, sf_dir):
-    """CART root-node split search over document features (n_chars,
-    token count) for predicting lang='en' (`operators/classify.py
-    gini_best_splits`): cumulative class counts over each feature's
-    sorted distinct-value grid give every cut's weighted Gini in one
-    window pass; argmin per feature on the ROUNDED impurity with a
-    threshold tiebreak — the single-split purity screen next to
-    woe_iv_source_vs_english."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        gini_best_splits,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir).select(
-        F.col("n_chars").cast("double").alias("n_chars"),
-        F.size(tokens(F.lower(F.col("text")))).cast("double").alias(
-            "n_tokens"
-        ),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return gini_best_splits(
-        docs, ["n_chars", "n_tokens"], "y"
-    ).orderBy("feature")
-
-
-def _logistic_gd_oracle_sql(iterations: int = 3, lr: float = 0.5) -> str:
-    """Unrolled full-batch gradient-descent oracle: one gradient CTE +
-    one weight CTE per iteration (the BPE merge-loop chaining trick).
-    Per-row gradient terms quantize to integer nanos before the exact-
-    integer SUM, mirroring the operator; the weight step arithmetic is
-    written with identical operation order."""
-    margin = "(w.w0 * _intercept + w.w1 * f_chars + w.w2 * f_tokens)"
-    parts = [
-        rf"""
-    base AS MATERIALIZED (
-        SELECT 1.0 AS _intercept,
-               CAST(n_chars AS DOUBLE) / 1000.0 AS f_chars,
-               CAST(len({_TOKENS}) AS DOUBLE) / 100.0 AS f_tokens,
-               CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS _y
-        FROM documents
-    ),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM base),
-    w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2)"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    g{t} AS (
-        SELECT
-            CAST(SUM(CAST(round((p - _y) * _intercept * 1e9) AS BIGINT))
-                 AS BIGINT) AS g0,
-            CAST(SUM(CAST(round((p - _y) * f_chars * 1e9) AS BIGINT))
-                 AS BIGINT) AS g1,
-            CAST(SUM(CAST(round((p - _y) * f_tokens * 1e9) AS BIGINT))
-                 AS BIGINT) AS g2
-        FROM (SELECT base.*,
-                     1.0 / (1.0 + exp(-{margin})) AS p
-              FROM base CROSS JOIN w{t - 1} w)
-    ),
-    w{t} AS (
-        SELECT w.w0 - {lr} * ((g.g0 / 1e9) / nn.n) AS w0,
-               w.w1 - {lr} * ((g.g1 / 1e9) / nn.n) AS w1,
-               w.w2 - {lr} * ((g.g2 / 1e9) / nn.n) AS w2
-        FROM w{t - 1} w CROSS JOIN g{t} g CROSS JOIN nn
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    scored AS (
-        SELECT base.*, {margin} AS m
-        FROM base CROSS JOIN w{iterations} w
-    ),
-    metrics AS (
-        SELECT ROUND(SUM(CASE WHEN (CASE WHEN m >= 0 THEN 1.0 ELSE 0.0 END)
-                                    = _y THEN 1 ELSE 0 END) * 1.0
-                     / ANY_VALUE(nn.n), 6) AS train_acc,
-               ROUND((CAST(SUM(CAST(round(
-                   ln(1.0 + exp(-((2.0 * _y - 1.0) * m))) * 1e9) AS BIGINT))
-                   AS BIGINT) / 1e9) / ANY_VALUE(nn.n), 6) AS train_logloss
-        FROM scored CROSS JOIN nn
-    )
-    SELECT f.feature, ROUND(f.weight, 6) AS weight,
-           m.train_acc, m.train_logloss
-    FROM (SELECT '_intercept' AS feature, w0 AS weight FROM w{iterations}
-          UNION ALL SELECT 'f_chars', w1 FROM w{iterations}
-          UNION ALL SELECT 'f_tokens', w2 FROM w{iterations}) f
-    CROSS JOIN metrics m
-    ORDER BY f.feature"""
-    )
-
-
 def _pca_power_oracle_sql(iterations: int = 3, d: int = 64) -> str:
-    """Unrolled matrix-free power-iteration oracle (the logistic/kmeans
+    """Unrolled matrix-free power-iteration oracle (the kmeans/MF
     chaining pattern) over the coordinate grain (embeddings × range(d)):
     per round one vid-keyed dot CTE and one j-keyed accumulate CTE, with
     every accumulation term rounded to integer MICROS before its
@@ -5683,7 +5167,7 @@ def pca_power_component_query(spark, sf_dir):
 
 
 def _mf_gd_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled rank-1 matrix-factorization GD oracle (the logistic-GD
+    """Unrolled rank-1 matrix-factorization GD oracle (the kmeans
     chaining pattern): per round one joined-error CTE feeds two mean-
     gradient CTEs (per-pair terms rounded to integer nanos before the
     exact-integer SUM) and two factor-step CTEs whose double arithmetic
@@ -5760,8 +5244,8 @@ def _mf_gd_oracle_sql(iterations: int = 3) -> str:
 def mf_gd_factors_query(spark, sf_dir):
     """Rank-1 Funk-SVD trained distributed on the (customer, part,
     quantity/10) implicit-rating matrix (`operators/similarity.py
-    mf_gd_factors`, 3 synchronous mean-gradient rounds, lr=1/16): the
-    recsys-training family next to logistic_gd_weights, with the learned
+    mf_gd_factors`, 3 synchronous mean-gradient rounds, lr=1/16): a
+    recsys-training query, with the learned
     user/item factor trajectory as the oracle contract and the final
     train RMSE carried on every row. Bounded entity sets (custkey<=80,
     partkey<=120) keep the factor tables broadcastable at every SF while
@@ -5790,34 +5274,6 @@ def mf_gd_factors_query(spark, sf_dir):
         user_col="o_custkey",
         item_col="l_partkey",
         rating_col="rating",
-    )
-
-
-@register("logistic_gd_weights", _logistic_gd_oracle_sql(3, 0.5))
-def logistic_gd_weights(spark, sf_dir):
-    """Distributed full-batch logistic-regression training on document
-    features (`operators/classify.py logistic_gd_train`, 3 GD rounds,
-    lr=0.5, features: intercept + n_chars/1000 + tokens/100, label
-    lang='en'): each round is ONE map-side-combined gradient aggregate
-    with nano-quantized terms, so the entire weight TRAJECTORY replays
-    bit-for-bit in the unrolled oracle — training as a first-class
-    verified operator, not a frozen fixture (contrast
-    quality_classifier_scores, which serves a frozen model)."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        logistic_gd_train,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir).select(
-        (F.col("n_chars").cast("double") / F.lit(1000.0)).alias("f_chars"),
-        (
-            F.size(tokens(F.lower(F.col("text")))).cast("double")
-            / F.lit(100.0)
-        ).alias("f_tokens"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return logistic_gd_train(
-        docs, ["f_chars", "f_tokens"], "y", iterations=3, lr=0.5
     )
 
 
@@ -5970,234 +5426,6 @@ def ann_hamming_topk(spark, sf_dir):
 
     emb = load_table(spark, "embeddings", sf_dir)
     return hamming_topk(emb, emb.filter(F.col("vec_id") < 8), dim=64, k=10)
-
-
-def _unigram_oracle_sql(top_k: int = 64, L: int = 4) -> str:
-    r"""Recursive-CTE replay of the unigram-Viterbi fold: the vocab CTE
-    re-derives the identical (singles ∪ top-k) piece table, ln P
-    quantizes to integer nanos (absorbing the Python-vs-DuckDB libm
-    ulp), and the walk advances one char per step carrying the last-4
-    dp cells, with the same (score·8 + len) argmax key as the Spark
-    fold."""
-    SENT = -(1 << 62)
-    HALF = SENT // 2
-    # candidate keys: piece of length l ends at p = w.pos + 1, starts at
-    # w.pos + 2 - l; prev dp cell for length l is (s{l}, c{l})
-    cands = []
-    for l in range(1, L + 1):
-        cands.append(
-            f"CASE WHEN {l} <= w.pos + 1 AND v{l}.lp IS NOT NULL"
-            f" AND w.s{l} > CAST({HALF} AS BIGINT)"
-            f" THEN (w.s{l} + v{l}.lp) * 8 + {l}"
-            f" ELSE CAST({SENT} AS BIGINT) END"
-        )
-    best = "GREATEST(" + ", ".join(cands) + ")"
-    ldec = f"((({best}) % 8) + 8) % 8"
-    c_new = (
-        f"CASE {ldec} "
-        + " ".join(f"WHEN {l} THEN w.c{l} + 1" for l in range(1, L))
-        + f" ELSE w.c{L} + 1 END"
-    )
-    joins = "\n".join(
-        f"    LEFT JOIN vlp v{l} ON v{l}.piece ="
-        f" substr(t.tx, w.pos + 2 - {l}, {l})"
-        for l in range(1, L + 1)
-    )
-    scols = ", ".join(f"s{l}, c{l}" for l in range(1, L + 1))
-    base_cells = "CAST(0 AS BIGINT), 0, " + ", ".join(
-        f"CAST({SENT} AS BIGINT), 0" for _ in range(L - 1)
-    )
-    shift = ", ".join(f"w.s{l}, w.c{l}" for l in range(1, L))
-    return f"""
-    WITH RECURSIVE
-    t AS MATERIALIZED (
-        SELECT doc_id, source AS g, lower(text) AS tx
-        FROM documents WHERE text IS NOT NULL AND length(text) > 0
-    ),
-    sub AS MATERIALIZED (
-        SELECT piece, CAST(COUNT(*) AS BIGINT) AS c FROM (
-            SELECT unnest(flatten(list_transform(
-                generate_series(1, length(tx)),
-                i -> list_transform(
-                    generate_series(1, least({L}, length(tx) - i + 1)),
-                    l -> substr(tx, CAST(i AS INT), CAST(l AS INT))))))
-                AS piece
-            FROM t
-        ) GROUP BY piece
-    ),
-    vocab AS (
-        SELECT piece, c FROM sub WHERE length(piece) = 1
-        UNION ALL
-        SELECT piece, c FROM (
-            SELECT piece, c,
-                   ROW_NUMBER() OVER (ORDER BY c DESC, piece) AS rk
-            FROM sub WHERE length(piece) >= 2
-        ) WHERE rk <= {top_k}
-    ),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS tot FROM vocab),
-    vlp AS MATERIALIZED (
-        SELECT piece, CAST(round(ln(c * 1.0 / tot) * 1e9) AS BIGINT) AS lp
-        FROM vocab, tot
-    ),
-    walk(doc_id, pos, {scols}) AS (
-        SELECT doc_id, 0, {base_cells} FROM t
-        UNION ALL
-        SELECT w.doc_id, w.pos + 1,
-               CAST((({best}) - ({ldec})) / 8 AS BIGINT),
-               {c_new},
-               {shift}
-        FROM walk w
-        JOIN t ON t.doc_id = w.doc_id AND w.pos < length(t.tx)
-{joins}
-    ),
-    fin AS (
-        SELECT w.doc_id, w.s1 AS s, w.c1 AS np
-        FROM walk w
-        JOIN t ON t.doc_id = w.doc_id AND w.pos = length(t.tx)
-    )
-    SELECT t.g AS source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(length(t.tx)) AS BIGINT) AS n_chars,
-           CAST(SUM(fin.np) AS BIGINT) AS n_pieces,
-           ROUND(CAST(SUM(fin.np) AS BIGINT)
-                 / CAST(SUM(length(t.tx)) AS DOUBLE), 6) AS fertility,
-           ROUND((CAST(SUM(fin.s) AS BIGINT) / 1e9)
-                 / CAST(SUM(length(t.tx)) AS BIGINT), 6) AS ll_per_char
-    FROM fin JOIN t ON fin.doc_id = t.doc_id
-    GROUP BY t.g ORDER BY t.g
-    """
-
-
-@register("unigram_tokenizer_stats", _unigram_oracle_sql(64, 4))
-def unigram_tokenizer_stats(spark, sf_dir):
-    """Unigram-LM (SentencePiece, Kudo 2018) Viterbi tokenization stats
-    per source (`operators/bpe.py unigram_vocab / unigram_viterbi_stats`):
-    fit the singles ∪ top-64 substring vocabulary on the corpus, segment
-    every document by the exact Viterbi DP under the unigram piece LM —
-    a map-only in-document fold, the probabilistic counterpart of the
-    BPE greedy encoder — and report per-source fertility (pieces/char)
-    and log-likelihood per char. Integer-nano piece log-probs make the
-    DP exact-integer; the oracle replays fit + DP end-to-end as a
-    recursive CTE."""
-    from ningaloo_turtle_etl_spark.operators.bpe import (
-        unigram_viterbi_stats,
-        unigram_vocab,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    vocab = unigram_vocab(docs, top_k=64, max_piece_len=4)
-    return unigram_viterbi_stats(
-        docs, vocab, group_col="source", max_piece_len=4
-    )
-
-
-def _quantile_gd_oracle_sql(
-    iterations: int = 4, lr: float = 64.0, q: float = 0.75
-) -> str:
-    """Unrolled pinball-subgradient oracle (the logistic-GD chaining
-    pattern): per round one gradient CTE + one weight CTE, per-row
-    terms nano-quantized, identical operation order; the weekend flag
-    derives from the epoch-day index (day 0 = Thursday, so weekend =
-    day % 7 IN (2, 3)) — pure integer math, timezone-free."""
-    qm1 = q - 1.0
-    margin = "(w.w0 * _intercept + w.w1 * f_wknd + w.w2 * f_click)"
-    ind = f"CASE WHEN {margin} > _y THEN 1.0 ELSE 0.0 END"
-    parts = [
-        f"""
-    base AS MATERIALIZED (
-        SELECT 1.0 AS _intercept,
-               CASE WHEN CAST(floor(epoch(ts) / 86400) AS BIGINT) % 7
-                         IN (2, 3) THEN 1.0 ELSE 0.0 END AS f_wknd,
-               CASE WHEN event_type = 'click' THEN 1.0 ELSE 0.0 END
-                   AS f_click,
-               value AS _y
-        FROM events
-    ),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM base),
-    w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2)"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    g{t} AS (
-        SELECT
-            CAST(SUM(CAST(round((ind - {q}) * _intercept * 1e9) AS BIGINT))
-                 AS BIGINT) AS g0,
-            CAST(SUM(CAST(round((ind - {q}) * f_wknd * 1e9) AS BIGINT))
-                 AS BIGINT) AS g1,
-            CAST(SUM(CAST(round((ind - {q}) * f_click * 1e9) AS BIGINT))
-                 AS BIGINT) AS g2
-        FROM (SELECT base.*, {ind} AS ind
-              FROM base CROSS JOIN w{t - 1} w)
-    ),
-    w{t} AS (
-        SELECT w.w0 - {lr} * ((g.g0 / 1e9) / nn.n) AS w0,
-               w.w1 - {lr} * ((g.g1 / 1e9) / nn.n) AS w1,
-               w.w2 - {lr} * ((g.g2 / 1e9) / nn.n) AS w2
-        FROM w{t - 1} w CROSS JOIN g{t} g CROSS JOIN nn
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    scored AS (
-        SELECT base.*, {margin} AS m
-        FROM base CROSS JOIN w{iterations} w
-    ),
-    metrics AS (
-        SELECT ROUND(SUM(CASE WHEN _y <= m THEN 1 ELSE 0 END) * 1.0
-                     / ANY_VALUE(nn.n), 6) AS coverage,
-               ROUND((CAST(SUM(CAST(round(
-                   (CASE WHEN _y - m >= 0 THEN {q} * (_y - m)
-                         ELSE CAST({qm1} AS DOUBLE) * (_y - m) END)
-                   * 1e9) AS BIGINT)) AS BIGINT) / 1e9)
-                   / ANY_VALUE(nn.n), 6) AS pinball_loss
-        FROM scored CROSS JOIN nn
-    )
-    SELECT f.feature, ROUND(f.weight, 6) AS weight,
-           m.coverage, m.pinball_loss
-    FROM (SELECT '_intercept' AS feature, w0 AS weight FROM w{iterations}
-          UNION ALL SELECT 'f_wknd', w1 FROM w{iterations}
-          UNION ALL SELECT 'f_click', w2 FROM w{iterations}) f
-    CROSS JOIN metrics m
-    ORDER BY f.feature"""
-    )
-
-
-@register("quantile_gd_weights", _quantile_gd_oracle_sql(4, 64.0, 0.75))
-def quantile_gd_weights(spark, sf_dir):
-    """Linear p75 quantile regression of event value on (weekend,
-    is-click) trained by the distributed pinball-subgradient loop
-    (`operators/classify.py quantile_gd_train`, 4 rounds, lr=64): the
-    conditional-quantile rung of the trainer stack next to
-    logistic_gd_weights (classification) and mf_gd_factors
-    (factorization) — budget/SLA questions are quantile questions, not
-    mean questions. The weight trajectory replays bit-for-bit in the
-    unrolled oracle."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        quantile_gd_train,
-    )
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-
-    raw = load_table(spark, "events", sf_dir)
-    base = raw.select(
-        (
-            (
-                F.floor(_epoch_seconds(raw, "ts") / F.lit(86400)).cast(
-                    "long"
-                )
-                % 7
-            ).isin(2, 3)
-        )
-        .cast("double")
-        .alias("f_wknd"),
-        (F.col("event_type") == "click").cast("double").alias("f_click"),
-        F.col("value").alias("y"),
-    )
-    return quantile_gd_train(
-        base, ["f_wknd", "f_click"], "y", q=0.75, iterations=4, lr=64.0
-    )
 
 
 def _als_rank1_oracle_sql(iterations: int = 3) -> str:
@@ -6392,247 +5620,6 @@ def audio_wav_features(spark, sf_dir):
         F.round("e2", 6).alias("e2"),
         F.round("e3", 6).alias("e3"),
     ).orderBy("media_id")
-
-
-def _wordpiece_oracle_sql(top_k: int = 64, L: int = 4) -> str:
-    r"""Recursive-CTE replay of the WordPiece greedy scan: the same
-    (singles ∪ top-k) vocab fit as the unigram oracle, then a walk that
-    advances one char per step carrying (skip, np, nu, s) — longest
-    match chosen by a length-descending COALESCE, [UNK] fallback at the
-    fixed penalty, mirroring `operators/bpe.py wordpiece_greedy_stats`
-    decision-for-decision."""
-    UNK = -25_000_000_000
-    lp_cases = ", ".join(
-        f"CASE WHEN w.pos + {l} <= length(t.tx) AND v{l}.lp IS NOT NULL"
-        f" THEN v{l}.lp END"
-        for l in range(L, 0, -1)
-    )
-    l_cases = ", ".join(
-        f"CASE WHEN w.pos + {l} <= length(t.tx) AND v{l}.lp IS NOT NULL"
-        f" THEN {l} END"
-        for l in range(L, 0, -1)
-    )
-    lp_choice = f"COALESCE({lp_cases}, CAST({UNK} AS BIGINT))"
-    l_choice = f"COALESCE({l_cases}, 1)"
-    joins = "\n".join(
-        f"    LEFT JOIN vlp v{l} ON v{l}.piece ="
-        f" substr(t.tx, w.pos + 1, {l})"
-        for l in range(1, L + 1)
-    )
-    return f"""
-    WITH RECURSIVE
-    t AS MATERIALIZED (
-        SELECT doc_id, source AS g, lower(text) AS tx
-        FROM documents WHERE text IS NOT NULL AND length(text) > 0
-    ),
-    sub AS MATERIALIZED (
-        SELECT piece, CAST(COUNT(*) AS BIGINT) AS c FROM (
-            SELECT unnest(flatten(list_transform(
-                generate_series(1, length(tx)),
-                i -> list_transform(
-                    generate_series(1, least({L}, length(tx) - i + 1)),
-                    l -> substr(tx, CAST(i AS INT), CAST(l AS INT))))))
-                AS piece
-            FROM t
-        ) GROUP BY piece
-    ),
-    vocab AS (
-        SELECT piece, c FROM sub WHERE length(piece) = 1
-        UNION ALL
-        SELECT piece, c FROM (
-            SELECT piece, c,
-                   ROW_NUMBER() OVER (ORDER BY c DESC, piece) AS rk
-            FROM sub WHERE length(piece) >= 2
-        ) WHERE rk <= {top_k}
-    ),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS tot FROM vocab),
-    vlp AS MATERIALIZED (
-        SELECT piece, CAST(round(ln(c * 1.0 / tot) * 1e9) AS BIGINT) AS lp
-        FROM vocab, tot
-    ),
-    walk(doc_id, pos, skip, np, nu, s) AS (
-        SELECT doc_id, 0, 0, 0, 0, CAST(0 AS BIGINT) FROM t
-        UNION ALL
-        SELECT w.doc_id, w.pos + 1,
-               CASE WHEN w.skip > 0 THEN w.skip - 1
-                    ELSE ({l_choice}) - 1 END,
-               CASE WHEN w.skip > 0 THEN w.np ELSE w.np + 1 END,
-               CASE WHEN w.skip > 0
-                         OR ({lp_choice}) <> CAST({UNK} AS BIGINT)
-                    THEN w.nu ELSE w.nu + 1 END,
-               CASE WHEN w.skip > 0 THEN w.s
-                    ELSE w.s + ({lp_choice}) END
-        FROM walk w
-        JOIN t ON t.doc_id = w.doc_id AND w.pos < length(t.tx)
-{joins}
-    ),
-    fin AS (
-        SELECT w.doc_id, w.np, w.nu, w.s
-        FROM walk w
-        JOIN t ON t.doc_id = w.doc_id AND w.pos = length(t.tx)
-    )
-    SELECT t.g AS source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(length(t.tx)) AS BIGINT) AS n_chars,
-           CAST(SUM(fin.np) AS BIGINT) AS n_pieces,
-           CAST(SUM(fin.nu) AS BIGINT) AS n_unk,
-           ROUND(CAST(SUM(fin.np) AS BIGINT)
-                 / CAST(SUM(length(t.tx)) AS DOUBLE), 6) AS fertility,
-           ROUND((CAST(SUM(fin.s) AS BIGINT) / 1e9)
-                 / CAST(SUM(length(t.tx)) AS BIGINT), 6) AS ll_per_char
-    FROM fin JOIN t ON fin.doc_id = t.doc_id
-    GROUP BY t.g ORDER BY t.g
-    """
-
-
-@register("wordpiece_tokenizer_stats", _wordpiece_oracle_sql(64, 4))
-def wordpiece_tokenizer_stats(spark, sf_dir):
-    """WordPiece greedy longest-match tokenization stats per source
-    (`operators/bpe.py wordpiece_greedy_stats`) under the SAME fitted
-    vocabulary as unigram_tokenizer_stats — completing the tokenizer
-    trio (BPE merges / unigram Viterbi / WordPiece greedy) and
-    measuring greedy's fertility/likelihood gap vs the Viterbi optimum
-    on identical pieces. Map-only in-document fold; the oracle replays
-    fit + greedy scan as a recursive CTE."""
-    from ningaloo_turtle_etl_spark.operators.bpe import (
-        unigram_vocab,
-        wordpiece_greedy_stats,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    vocab = unigram_vocab(docs, top_k=64, max_piece_len=4)
-    return wordpiece_greedy_stats(
-        docs, vocab, group_col="source", max_piece_len=4
-    )
-
-
-def _gbm_stumps_oracle_sql(iterations: int = 3, lr: float = 0.5) -> str:
-    """Unrolled L2-boosting oracle: per round one residual/unpivot/grid
-    CTE chain with cumulative windows on the (feature, value) grid, one
-    argmax CTE (micro-quantized score, feature/threshold tiebreak), one
-    stump CTE — prediction rebuilt per round from the prior stump CTEs
-    in the same CASE association as
-    `operators/classify.py gbm_stumps_train`. All CTEs MATERIALIZED."""
-
-    def pred(upto: int) -> str:
-        p = "f0.f0"
-        for s in range(1, upto + 1):
-            p += (
-                f" + {lr} * (CASE WHEN st{s}.feature = 'n_chars'"
-                f" THEN (CASE WHEN b.x_chars <= st{s}.v"
-                f" THEN st{s}.lv ELSE st{s}.rv END)"
-                f" ELSE (CASE WHEN b.x_tokens <= st{s}.v"
-                f" THEN st{s}.lv ELSE st{s}.rv END) END)"
-            )
-        return p
-
-    def joins(upto: int) -> str:
-        return "".join(f" CROSS JOIN st{s}" for s in range(1, upto + 1))
-
-    parts = [
-        f"""
-    b AS MATERIALIZED (
-        SELECT CAST(n_chars AS DOUBLE) AS x_chars,
-               CAST(len({_TOKENS}) AS DOUBLE) AS x_tokens,
-               CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS _y
-        FROM documents
-    ),
-    hd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                  CAST(SUM(CAST(round(_y * 1e9) AS BIGINT)) AS BIGINT)
-                      AS sy
-           FROM b),
-    f0 AS (SELECT n, (sy / 1e9) / n AS f0 FROM hd)"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    g{t} AS MATERIALIZED (
-        SELECT feature, v, CAST(COUNT(*) AS BIGINT) AS c,
-               CAST(SUM(rn) AS BIGINT) AS s
-        FROM (
-            SELECT u.feature, u.v,
-                   CAST(round((b._y - ({pred(t - 1)})) * 1e9) AS BIGINT)
-                       AS rn
-            FROM b CROSS JOIN f0{joins(t - 1)}
-            CROSS JOIN LATERAL (VALUES ('n_chars', b.x_chars),
-                                ('n_tokens', b.x_tokens)) u(feature, v)
-            WHERE u.v IS NOT NULL
-        ) GROUP BY feature, v
-    ),
-    c{t} AS MATERIALIZED (
-        SELECT feature, v,
-               CAST(SUM(c) OVER (PARTITION BY feature ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS nl,
-               CAST(SUM(s) OVER (PARTITION BY feature ORDER BY v
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS sl,
-               CAST(SUM(c) OVER (PARTITION BY feature) AS BIGINT) AS nt,
-               CAST(SUM(s) OVER (PARTITION BY feature) AS BIGINT) AS st
-        FROM g{t}
-    ),
-    st{t} AS MATERIALIZED (
-        SELECT feature, v, (sl / 1e9) / nl AS lv,
-               ((st - sl) / 1e9) / (nt - nl) AS rv
-        FROM (
-            SELECT feature, v, nl, nt, sl, st,
-                   CAST(round(((sl / 1e9) * (sl / 1e9) / nl
-                        + ((st - sl) / 1e9) * ((st - sl) / 1e9)
-                          / (nt - nl)) * 1e6) AS BIGINT) AS sc
-            FROM c{t} WHERE nl < nt
-            ORDER BY sc DESC, feature ASC, v ASC LIMIT 1
-        )
-    )"""
-        )
-    T = iterations
-    finals = "\n    UNION ALL ".join(
-        f"SELECT {s} AS round, st{s}.feature,"
-        f" ROUND(st{s}.v, 6) AS threshold,"
-        f" ROUND(st{s}.lv, 6) AS left_value,"
-        f" ROUND(st{s}.rv, 6) AS right_value,"
-        f" ROUND(f0.f0, 6) AS f0, ROUND(m.mse, 6) AS train_mse"
-        f" FROM st{s} CROSS JOIN f0 CROSS JOIN m"
-        for s in range(1, T + 1)
-    )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    m AS MATERIALIZED (
-        SELECT (CAST(SUM(CAST(round((b._y - ({pred(T)}))
-                   * (b._y - ({pred(T)})) * 1e9) AS BIGINT)) AS BIGINT)
-                / 1e9) / ANY_VALUE(f0.n) AS mse
-        FROM b CROSS JOIN f0{joins(T)}
-    )
-    {finals}
-    ORDER BY round"""
-    )
-
-
-@register("gbm_stumps_lang_model", _gbm_stumps_oracle_sql(3, 0.5))
-def gbm_stumps_lang_model(spark, sf_dir):
-    """L2 gradient-boosted decision stumps predicting lang='en' from
-    document length features (`operators/classify.py gbm_stumps_train`,
-    3 rounds, lr=1/2): the nonlinear-model rung above
-    logistic_gd_weights — each round fits the best variance-reduction
-    stump to the current residuals on the distinct-value grid and the
-    whole stump trajectory + train MSE replays in the unrolled
-    oracle."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        gbm_stumps_train,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir).select(
-        F.col("n_chars").cast("double").alias("n_chars"),
-        F.size(tokens(F.lower(F.col("text")))).cast("double").alias(
-            "n_tokens"
-        ),
-        (F.col("lang") == "en").cast("double").alias("y"),
-    )
-    return gbm_stumps_train(
-        docs, ["n_chars", "n_tokens"], "y", iterations=3, lr=0.5
-    )
 
 
 @register(

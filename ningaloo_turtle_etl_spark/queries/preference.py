@@ -1,7 +1,7 @@
 """Pairwise-preference queries (operators/preference.py): battle
 extraction and the Bradley-Terry leaderboard fit, oracle-replayed with
-the same unrolled-synchronous-rounds technique as the kmeans /
-logistic-GD oracles (fixed iteration count, no convergence test, so both
+the same unrolled-synchronous-rounds technique as the kmeans / MF
+oracles (fixed iteration count, no convergence test, so both
 engines run the identical computation)."""
 
 from __future__ import annotations

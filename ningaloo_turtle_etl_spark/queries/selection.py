@@ -1,10 +1,8 @@
 """Data-selection queries: exact stratified sampling, weighted sampling,
-corpus drift, DSIR importance selection (full DuckDB oracles — every hash
-is md5-derived, so the oracle reproduces the sample bit-for-bit), plus the
-two learned classifiers serving FROZEN fixture models (full oracles since
-r04: LBFGS training is not SQL-expressible, so training freezes its
-coefficients offline and the oracle replays the serving path; training
-semantics stay pinned in tests/test_classify.py).
+corpus drift, DSIR importance selection, training shards, leakage-safe
+splits, negative sampling, annotator agreement, rank fusion and the
+k-center coreset (full DuckDB oracles — every hash is md5-derived, so the
+oracle reproduces the sample bit-for-bit).
 """
 
 from __future__ import annotations
@@ -211,139 +209,6 @@ def q_dsir_importance_select(spark, sf_dir):
     )
 
 
-def _quality_oracle_sql() -> str:
-    """DuckDB SQL replicating with_quality_probability over the frozen
-    quality_model fixture: the 5 Catalyst features recomputed in SQL, then
-    the closed-form sigmoid with the fixture's coefficients embedded as
-    literals (repr round-trips doubles exactly)."""
-    from ningaloo_turtle_etl_spark.operators.classify import load_model_fixture
-
-    m = load_model_fixture("quality_model")
-    w = {name: repr(float(c)) for name, c in zip(m["features"], m["coefficients"])}
-    b = repr(float(m["intercept"]))
-    stop = "('the','and','of','to','a','in','is','it','that','was','for','on')"
-    return rf"""
-    WITH t AS (
-        SELECT doc_id, text,
-               list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
-        FROM documents
-    ),
-    g AS (
-        SELECT doc_id, text, toks,
-               list_transform(range(1, len(toks)),
-                              i -> toks[i] || ' ' || toks[i+1]) AS g2
-        FROM t
-    ),
-    feats AS (
-        SELECT doc_id,
-               CASE WHEN len(toks) > 0
-                    THEN len(list_filter(toks, tk -> lower(tk) IN {stop}))
-                         / len(toks)
-                    ELSE 0.0 END AS stopword_ratio,
-               CASE WHEN length(text) > 0
-                    THEN (length(text)
-                          - length(regexp_replace(text, '[^\p{{L}}\p{{N}}_\s]', '', 'g')))
-                         / length(text)
-                    ELSE 0.0 END AS punct_ratio,
-               ln(1 + len(toks)) AS log_n_words,
-               CASE WHEN len(toks) > 0
-                    THEN CAST(length(text) AS DOUBLE) / len(toks)
-                    ELSE 0.0 END AS chars_per_word,
-               CASE WHEN len(g2) > 0
-                    THEN 1.0 - CAST(len(list_distinct(g2)) AS DOUBLE) / len(g2)
-                    ELSE 0.0 END AS dup_2gram_ratio
-        FROM g
-    )
-    SELECT doc_id,
-           ROUND(1.0 / (1.0 + exp(-({b}
-                 + {w['stopword_ratio']} * stopword_ratio
-                 + {w['punct_ratio']} * punct_ratio
-                 + {w['log_n_words']} * log_n_words
-                 + {w['chars_per_word']} * chars_per_word
-                 + {w['dup_2gram_ratio']} * dup_2gram_ratio))), 3)
-               AS quality_prob
-    FROM feats
-    """
-
-
-def _text_oracle_sql() -> str:
-    """DuckDB SQL replicating hashed_text_scores over the frozen md5-family
-    text_model fixture: explode lowercased tokens → md5-60 bucket →
-    join the embedded (idx, w) coefficient rows → per-doc sum → sigmoid."""
-    from ningaloo_turtle_etl_spark.operators.classify import load_model_fixture
-
-    m = load_model_fixture("text_model")
-    assert m.get("hash_family") == "md5", "oracle requires the md5-family fixture"
-    nf = int(m["n_features"])
-    b = repr(float(m["intercept"]))
-    coef_rows = ", ".join(
-        f"({i}, {repr(float(c))})"
-        for i, c in enumerate(m["coefficients"])
-        if c != 0.0
-    ) or "(0, 0.0)"
-    return rf"""
-    WITH tok AS (
-        SELECT doc_id, unnest({_TOKENS}) AS tk FROM documents
-    ),
-    feats AS (
-        SELECT doc_id,
-               ('0x' || substr(md5(tk), 1, 15))::BIGINT % {nf} AS idx,
-               COUNT(*) AS cnt
-        FROM tok GROUP BY doc_id, idx
-    ),
-    coef(idx, w) AS (VALUES {coef_rows}),
-    z AS (
-        SELECT f.doc_id, SUM(f.cnt * c.w) AS z
-        FROM feats f JOIN coef c ON f.idx = c.idx
-        GROUP BY f.doc_id
-    )
-    SELECT d.doc_id, d.lang,
-           ROUND(1.0 / (1.0 + exp(-(COALESCE(z.z, 0.0) + {b}))), 3) AS p_english
-    FROM documents d LEFT JOIN z ON d.doc_id = z.doc_id
-    """
-
-
-@register("quality_classifier_scores", _quality_oracle_sql())
-def q_quality_classifier_scores(spark, sf_dir):
-    """Learned quality filter (CCNet/fastText pattern), serving the FROZEN
-    fixture model (scripts/train_classifier_fixtures.py): the fitted
-    coefficients run as a closed-form sigmoid column expression — no MLlib,
-    no Python at scoring time — and the full serving path now carries a
-    DuckDB oracle row (r03 item 2). Training (distributed MLlib LR,
-    executor-side gradients) stays pinned by tests/test_classify.py's
-    separability/AUC/serve-parity tests."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        load_model_fixture,
-        with_quality_probability,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("quality_model")
-    return with_quality_probability(docs, model).select(
-        "doc_id", F.round("quality_prob", 3).alias("quality_prob")
-    )
-
-
-@register("text_classifier_scores", _text_oracle_sql())
-def q_text_classifier_scores(spark, sf_dir):
-    """Hashed bag-of-words classifier (the fastText pattern), serving the
-    FROZEN md5-family fixture model: explode → md5-bucket → broadcast
-    coefficient dim → per-doc sum → sigmoid, MLlib-free — and because the
-    md5 bucket map is bit-identical in DuckDB, the whole serving path is
-    oracle-verified (r03 item 2). Training stays covered by
-    tests/test_classify.py."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        hashed_text_scores,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    return hashed_text_scores(docs, model, out_col="p_english").select(
-        "doc_id", "lang", F.round("p_english", 3).alias("p_english")
-    )
-
-
 @register(
     "training_shards",
     """
@@ -374,56 +239,6 @@ def q_training_shards(spark, sf_dir):
     return assign_training_shards(docs, n_shards=16).select(
         "doc_id", "shard_id", "shard_pos"
     )
-
-
-def _calibration_oracle_sql() -> str:
-    """Reliability-diagram oracle over the frozen text model: the full
-    serving SQL nested as a CTE, labels from the real lang column, bins
-    and ECE folded from the same rounded per-bin values Spark emits."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    lab AS (
-        SELECT p_english AS p,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored
-    ),
-    bins AS (
-        SELECT least(CAST(floor(p * 10) AS INT), 9) AS bin,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               ROUND(AVG(p), 6) AS mean_pred,
-               ROUND(AVG(y), 6) AS frac_pos
-        FROM lab GROUP BY 1
-    ),
-    tot AS (
-        SELECT SUM(n) AS tn,
-               SUM(n * abs(frac_pos - mean_pred)) AS werr
-        FROM bins
-    )
-    SELECT bin, n, mean_pred, frac_pos, ROUND(werr / tn, 6) AS ece
-    FROM bins, tot
-    """
-
-
-@register("classifier_calibration_curve", _calibration_oracle_sql())
-def q_classifier_calibration_curve(spark, sf_dir):
-    """Reliability diagram + ECE for the frozen hashed-BoW English
-    classifier against the REAL lang labels
-    (`operators/classify.py classifier_calibration`): is p_english = 0.9
-    actually right 90% of the time? The curve is what makes a
-    'keep if p > t' curation threshold trustworthy; AUC alone cannot."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        classifier_calibration,
-        hashed_text_scores,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return classifier_calibration(scored, "p", "y", n_bins=10)
 
 
 @register(
@@ -503,292 +318,6 @@ def q_leakage_safe_split(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     return leakage_safe_split(docs, "doc_id", "text", val_frac=0.1)
-
-
-def _auc_oracle_sql() -> str:
-    """AUC oracle over the frozen text model: the serving SQL nested as a
-    CTE, then the same grouped Mann-Whitney fold the Spark operator runs —
-    group by distinct (3dp-rounded) score, cumulative negatives below,
-    Σ pos·(neg_below + neg/2) / (P·N)."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    lab AS (
-        SELECT p_english AS p,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored
-    ),
-    g AS (SELECT p, COUNT(*) AS n, SUM(y) AS pos FROM lab GROUP BY p),
-    c AS (
-        SELECT p, pos, n - pos AS neg,
-               COALESCE(SUM(n - pos) OVER (ORDER BY p
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS neg_below
-        FROM g
-    ),
-    tot AS (SELECT SUM(pos) AS tp, SUM(n - pos) AS tn FROM g),
-    num AS (SELECT SUM(pos * (neg_below + neg / 2.0)) AS nm FROM c)
-    SELECT ROUND(nm / (tp * tn), 6) AS auc,
-           CAST(tp AS BIGINT) AS n_pos,
-           CAST(tn AS BIGINT) AS n_neg
-    FROM num, tot
-    """
-
-
-@register("classifier_auc", _auc_oracle_sql())
-def q_classifier_auc(spark, sf_dir):
-    """Tie-corrected ROC AUC of the frozen hashed-BoW English classifier
-    against the real lang labels (`operators/classify.py classifier_auc`):
-    the ranking-power summary that pairs with the calibration curve's
-    threshold-trust summary. Computed via the grouped Mann-Whitney fold —
-    no global sort of the scored frame — so the same query shape runs on a
-    100 TB eval set."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        classifier_auc,
-        hashed_text_scores,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return classifier_auc(scored, "p", "y")
-
-
-def _decile_lift_oracle_sql() -> str:
-    """Decile-lift oracle: serving SQL as a CTE, ntile(10) over
-    (score DESC, doc_id) — the identical deterministic total order both
-    engines define for NTILE — then per-decile rates and cumulative lift
-    from the same rounded folds."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    lab AS (
-        SELECT doc_id, p_english AS p,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored
-    ),
-    t AS (
-        SELECT p, y, ntile(10) OVER (ORDER BY p DESC, doc_id) AS decile
-        FROM lab
-    ),
-    per AS (
-        SELECT decile, COUNT(*) AS n, ROUND(AVG(p), 6) AS mean_score,
-               SUM(y) AS pos
-        FROM t GROUP BY decile
-    ),
-    c AS (
-        SELECT decile, n, mean_score, pos,
-               SUM(pos) OVER (ORDER BY decile) AS cpos,
-               SUM(n) OVER (ORDER BY decile) AS cn
-        FROM per
-    ),
-    tot AS (SELECT SUM(n) AS tn, SUM(pos) AS tp FROM per)
-    SELECT decile, CAST(n AS BIGINT) AS n, mean_score,
-           ROUND(CAST(pos AS DOUBLE) / n, 6) AS pos_rate,
-           ROUND(CAST(cpos AS DOUBLE) / tp, 6) AS cum_capture,
-           ROUND((CAST(cpos AS DOUBLE) / cn) / (CAST(tp AS DOUBLE) / tn), 6)
-               AS cum_lift
-    FROM c, tot
-    """
-
-
-@register("score_decile_lift", _decile_lift_oracle_sql())
-def q_score_decile_lift(spark, sf_dir):
-    """Equal-mass decile lift table for the frozen English classifier
-    (`operators/classify.py score_decile_lift`): cumulative capture and
-    lift of the real lang='en' label down the score-sorted deciles — the
-    'is the top decile worth keeping' evidence behind a curation
-    threshold. Scale path documented on the operator (approx boundaries
-    instead of ntile's global order)."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        hashed_text_scores,
-        load_model_fixture,
-        score_decile_lift,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        "doc_id",
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return score_decile_lift(scored, "p", "y", "doc_id", n_buckets=10)
-
-
-def _pr_curve_oracle_sql() -> str:
-    """PR-curve oracle: serving SQL as a CTE, the same distinct-score
-    cumulative fold, f1 from the 6dp-rounded precision/recall."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    lab AS (
-        SELECT p_english AS p,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored
-    ),
-    g AS (SELECT p AS threshold, COUNT(*) AS n, SUM(y) AS pos
-          FROM lab GROUP BY p),
-    tot AS (SELECT SUM(pos) AS tp FROM g),
-    c AS (
-        SELECT threshold,
-               SUM(n) OVER (ORDER BY threshold DESC) AS n_kept,
-               SUM(pos) OVER (ORDER BY threshold DESC) AS cpos
-        FROM g
-    ),
-    pr AS (
-        SELECT threshold, CAST(n_kept AS BIGINT) AS n_kept,
-               ROUND(CAST(cpos AS DOUBLE) / n_kept, 6) AS precision,
-               ROUND(CAST(cpos AS DOUBLE) / tp, 6) AS recall
-        FROM c, tot
-    )
-    SELECT threshold, n_kept, precision, recall,
-           CASE WHEN precision + recall = 0 THEN 0.0
-                ELSE ROUND(2 * precision * recall / (precision + recall), 6)
-           END AS f1
-    FROM pr
-    """
-
-
-@register("classifier_pr_curve", _pr_curve_oracle_sql())
-def q_classifier_pr_curve(spark, sf_dir):
-    """Precision/recall/F1 threshold sweep for the frozen English
-    classifier against the real lang labels (`operators/classify.py
-    classifier_pr_curve`): AUC ranks, calibration trusts, this CUTS —
-    the table a keep-if-p>=t decision is actually read off."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        classifier_pr_curve,
-        hashed_text_scores,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return classifier_pr_curve(scored, "p", "y")
-
-
-_TOKEN_EST_SQL = r"""greatest(
-    len(list_filter(string_split_regex(
-        regexp_replace(text, '([^\w\s]|\d)', ' \1 ', 'g'), '\s+'),
-        x -> x <> '')),
-    CAST(ceil(length(text) / 4.0) AS INT)
-)"""
-
-
-def _yield_oracle_sql() -> str:
-    """Yield-curve oracle: serving SQL joined back to the BPE-ish token
-    estimate (the text_token_stats expression), then the same
-    descending-threshold cumulative fold."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    tokd AS (
-        SELECT s.p_english AS p, {_TOKEN_EST_SQL} AS tok
-        FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-    ),
-    g AS (SELECT p AS threshold, COUNT(*) AS n, SUM(tok) AS tok
-          FROM tokd GROUP BY p),
-    tot AS (SELECT SUM(n) AS tn, SUM(tok) AS tt FROM g),
-    c AS (
-        SELECT threshold,
-               SUM(n) OVER (ORDER BY threshold DESC) AS docs_kept,
-               SUM(tok) OVER (ORDER BY threshold DESC) AS tokens_kept
-        FROM g
-    )
-    SELECT threshold, CAST(docs_kept AS BIGINT) AS docs_kept,
-           CAST(tokens_kept AS BIGINT) AS tokens_kept,
-           ROUND(CAST(docs_kept AS DOUBLE) / tn, 6) AS doc_share,
-           ROUND(CAST(tokens_kept AS DOUBLE) / tt, 6) AS token_share
-    FROM c, tot
-    """
-
-
-@register("keep_threshold_yield", _yield_oracle_sql())
-def q_keep_threshold_yield(spark, sf_dir):
-    """Token-yield curve under a keep-if-p>=t filter (`operators/
-    classify.py keep_threshold_yield`): docs and estimated tokens
-    surviving each candidate threshold — the capacity side of the
-    threshold decision the PR curve grades on quality."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        hashed_text_scores,
-        keep_threshold_yield,
-        load_model_fixture,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import with_token_counts
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = with_token_counts(
-        hashed_text_scores(docs, model, out_col="p_english")
-    ).select(
-        F.round("p_english", 3).alias("p"),
-        F.col("n_tokens_est").alias("tok"),
-    )
-    return keep_threshold_yield(scored, "p", "tok")
-
-
-def _auc_by_group_oracle_sql() -> str:
-    """Per-source AUC oracle: serving SQL as a CTE, the grouped
-    Mann-Whitney fold partitioned by source."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    lab AS (
-        SELECT d.source AS grp, s.p_english AS p,
-               CASE WHEN s.lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-    ),
-    g AS (
-        SELECT grp, p, COUNT(*) AS n, SUM(y) AS pos
-        FROM lab GROUP BY grp, p
-    ),
-    c AS (
-        SELECT grp, p, pos, n - pos AS neg,
-               COALESCE(SUM(n - pos) OVER (PARTITION BY grp ORDER BY p
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS neg_below
-        FROM g
-    ),
-    num AS (
-        SELECT grp, SUM(pos * (neg_below + neg / 2.0)) AS nm
-        FROM c GROUP BY grp
-    ),
-    tot AS (
-        SELECT grp, SUM(pos) AS tp, SUM(n - pos) AS tn
-        FROM g GROUP BY grp
-    )
-    SELECT num.grp AS "group",
-           ROUND(nm / (tp * tn), 6) AS auc,
-           CAST(tp AS BIGINT) AS n_pos,
-           CAST(tn AS BIGINT) AS n_neg
-    FROM num JOIN tot ON num.grp = tot.grp
-    """
-
-
-@register("classifier_auc_by_source", _auc_by_group_oracle_sql())
-def q_classifier_auc_by_source(spark, sf_dir):
-    """Per-SOURCE ranking power of the frozen English classifier
-    (`operators/classify.py classifier_auc_by_group`): the bias audit —
-    a global AUC can hide a source where the filter ranks near chance
-    and curation there degrades to a coin flip. Windows are partitioned
-    by source, so this fold is shuffle-parallel everywhere."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        classifier_auc_by_group,
-        hashed_text_scores,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        "source",
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return classifier_auc_by_group(scored, "p", "y", "source")
 
 
 _TOKENS_SQL = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
@@ -917,266 +446,6 @@ def rank_fusion_select(spark, sf_dir):
     ).orderBy("source", F.col("rrf_score").desc(), "doc_id")
 
 
-def _isotonic_oracle_sql(n_bins: int = 20) -> str:
-    """Isotonic-fit oracle via the minimax identity: the PAV block value
-    at bin i equals max_{j<=i} min_{k>=i} (Σpos/Σn over bins j..k) — a
-    closed form over interval sums, so no iterative pooling is needed in
-    SQL. Bin grain (<= n_bins rows), so the O(bins³) interval grid is a
-    few thousand rows regardless of corpus size."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    lab AS (
-        SELECT least(CAST(floor(p_english * {n_bins}) AS INTEGER),
-                     {n_bins - 1}) AS bin,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored
-    ),
-    bins AS (
-        SELECT bin, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(y) AS BIGINT) AS n_pos
-        FROM lab GROUP BY 1
-    ),
-    cum AS (
-        SELECT bin, n, n_pos,
-               ROW_NUMBER() OVER (ORDER BY bin) AS i,
-               SUM(n) OVER (ORDER BY bin) AS cn,
-               SUM(n_pos) OVER (ORDER BY bin) AS cp
-        FROM bins
-    ),
-    av AS (
-        SELECT j.i AS j, k.i AS k,
-               (k.cp - j.cp + j.n_pos) * 1.0 / (k.cn - j.cn + j.n) AS a
-        FROM cum j JOIN cum k ON j.i <= k.i
-    ),
-    inner_min AS (
-        SELECT av.j, t.i, MIN(av.a) AS m
-        FROM av JOIN cum t ON av.j <= t.i AND av.k >= t.i
-        GROUP BY av.j, t.i
-    ),
-    fit AS (
-        SELECT i, MAX(m) AS g FROM inner_min GROUP BY i
-    )
-    SELECT c.bin,
-           ROUND(c.bin * 1.0 / {n_bins}, 6) AS lo,
-           ROUND((c.bin + 1) * 1.0 / {n_bins}, 6) AS hi,
-           c.n, c.n_pos,
-           ROUND(c.n_pos * 1.0 / c.n, 6) AS rate_raw,
-           ROUND(f.g, 6) AS rate_iso
-    FROM cum c JOIN fit f ON c.i = f.i
-    ORDER BY c.bin
-    """
-
-
-@register("classifier_isotonic_calibration", _isotonic_oracle_sql())
-def q_classifier_isotonic_calibration(spark, sf_dir):
-    """Isotonic (PAV) calibration table for the frozen English classifier
-    against real lang labels (`operators/classify.py
-    isotonic_calibration`): the monotone score→rate map that makes the
-    classifier's probabilities mean what they say before any threshold or
-    expected-yield arithmetic trusts them — complements the binned
-    calibration curve (diagnosis) with the actual fix. PAV pools the
-    <= 20-bin table driver-side; the oracle replays the fit through the
-    minimax identity max_{j<=i} min_{k>=i} avg(j..k) from the same
-    integer bin sums."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        hashed_text_scores,
-        isotonic_calibration,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        # 3dp like the sibling AUC/calibration queries: the serving oracle
-        # emits 3dp scores, so binning must see the same values
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return isotonic_calibration(scored, "p", "y", n_bins=20)
-
-
-def _conformal_oracle_sql(alpha: float = 0.1, frac: float = 0.5) -> str:
-    """Split-conformal oracle: same md5-uniform split, the
-    ceil((n_cal+1)(1-alpha))-th smallest calibration residual via
-    ROW_NUMBER (the raw order statistic — equal to Spark's exact
-    percentile at the integral index; any last-ulp interpolation gap
-    dies at the 6dp compare grain), then per-source test coverage."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    base AS (
-        SELECT s.doc_id, d.source,
-               ('0x' || substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 8))::BIGINT
-                   / 4294967296.0 < {frac} AS calib,
-               abs(CAST(CASE WHEN s.lang = 'en' THEN 1 ELSE 0 END AS DOUBLE)
-                   - s.p_english) AS resid
-        FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-    ),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_cal FROM base WHERE calib),
-    kk AS (
-        SELECT n_cal,
-               CAST(ceil((n_cal + 1) * (1.0 - {alpha})) AS BIGINT) AS k
-        FROM n
-    ),
-    ranked AS (
-        SELECT resid, ROW_NUMBER() OVER (ORDER BY resid) AS r
-        FROM base WHERE calib
-    ),
-    qh AS (
-        SELECT CASE WHEN kk.n_cal = 0 OR kk.k > kk.n_cal
-                    THEN CAST('infinity' AS DOUBLE)
-                    ELSE (SELECT resid FROM ranked, kk WHERE r = kk.k)
-               END AS q_hat
-        FROM kk
-    )
-    SELECT source,
-           (SELECT CAST(n_cal AS INTEGER) FROM n) AS n_calib,
-           CAST(COUNT(*) AS BIGINT) AS n_test,
-           ROUND((SELECT q_hat FROM qh), 6) AS q_hat,
-           ROUND(AVG(CASE WHEN ROUND(resid, 6)
-                               <= ROUND((SELECT q_hat FROM qh), 6)
-                          THEN 1.0 ELSE 0.0 END), 6) AS coverage,
-           {1.0 - alpha} AS target
-    FROM base WHERE NOT calib
-    GROUP BY source
-    ORDER BY source
-    """
-
-
-@register("conformal_coverage_by_source", _conformal_oracle_sql())
-def q_conformal_coverage_by_source(spark, sf_dir):
-    """Split-conformal coverage report for the frozen English classifier
-    (`operators/classify.py split_conformal_report`, alpha=0.1): the
-    distribution-free interval p ± q_hat calibrated on an md5-split half,
-    with per-source test coverage against the 90% target — the
-    uncertainty wrapper that needs no model assumptions, and the
-    per-source slice that exposes whether the marginal guarantee hides an
-    under-covered subpopulation."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        hashed_text_scores,
-        load_model_fixture,
-        split_conformal_report,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        "doc_id",
-        "source",
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return split_conformal_report(
-        scored, "p", "y", "doc_id", alpha=0.1, calib_frac=0.5,
-        by=["source"],
-    ).orderBy("source")
-
-
-def _brier_ece_oracle_sql(n_bins: int = 10) -> str:
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    base AS (
-        SELECT d.source,
-               least(CAST(floor(s.p_english * {n_bins}) AS INT),
-                     {n_bins - 1}) AS bin,
-               s.p_english AS p,
-               CASE WHEN s.lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-    ),
-    bins AS (
-        SELECT source, bin,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(y) AS BIGINT) AS n_pos,
-               ROUND(AVG(p), 6) AS mean_pred,
-               ROUND(AVG(CAST(y AS DOUBLE)), 6) AS frac_pos,
-               SUM((p - y) * (p - y)) AS se
-        FROM base GROUP BY 1, 2
-    )
-    SELECT source,
-           CAST(SUM(n) AS BIGINT) AS n,
-           CAST(SUM(n_pos) AS BIGINT) AS n_pos,
-           ROUND(SUM(se) / SUM(n), 6) AS brier,
-           ROUND(SUM(n * abs(frac_pos - mean_pred)) / SUM(n), 6) AS ece,
-           ROUND(MAX(abs(frac_pos - mean_pred)), 6) AS mce
-    FROM bins GROUP BY source ORDER BY source
-    """
-
-
-@register("brier_ece_by_source", _brier_ece_oracle_sql())
-def q_brier_ece_by_source(spark, sf_dir):
-    """Per-source calibration scorecard for the frozen English classifier
-    (`operators/classify.py calibration_error_by_group`, 10 bins): Brier
-    score (the strictly proper score that punishes mis-scaling AND
-    mis-ranking), ECE, and MCE per source — the slice view that catches a
-    model calibrated marginally but mis-scaled on one source, exactly
-    where a p>threshold curation gate then mis-filters. Complements
-    classifier_calibration_curve's marginal reliability diagram."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        calibration_error_by_group,
-        hashed_text_scores,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        "source",
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return calibration_error_by_group(
-        scored, "p", "y", n_bins=10, group_cols=["source"]
-    ).orderBy("source")
-
-
-@register(
-    "woe_iv_source_vs_english",
-    """
-    WITH base AS (
-        SELECT source AS feature_value,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM documents WHERE source IS NOT NULL AND lang IS NOT NULL
-    ),
-    cells AS (
-        SELECT feature_value,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(y) AS BIGINT) AS n_pos
-        FROM base GROUP BY 1
-    ),
-    tot AS (
-        SELECT CAST(SUM(n_pos) AS BIGINT) AS pos,
-               CAST(SUM(n - n_pos) AS BIGINT) AS neg
-        FROM cells
-    ),
-    w AS (
-        SELECT feature_value, n, n_pos,
-               n - n_pos AS n_neg,
-               ROUND(n_pos * 1.0 / n, 6) AS pos_rate,
-               ROUND(ln(((n_pos + 0.5) / tot.pos)
-                        / ((n - n_pos + 0.5) / tot.neg)), 6) AS woe,
-               n_pos * 1.0 / tot.pos - (n - n_pos) * 1.0 / tot.neg AS d
-        FROM cells, tot
-    ),
-    iv AS (SELECT ROUND(SUM(d * woe), 6) AS iv FROM w)
-    SELECT feature_value, n, n_pos, n_neg, pos_rate, woe, iv
-    FROM w, iv ORDER BY feature_value
-    """,
-)
-def q_woe_iv_source_vs_english(spark, sf_dir):
-    """Weight-of-evidence / information-value screen of the source column
-    against the English label (`operators/classify.py woe_iv_report`):
-    per-source WOE with the 0.5 Laplace cell guard and the feature-level
-    IV — the scorecard-lineage answer to "is this column predictive, and
-    which values carry it" that also flags leakage (IV > 0.5) before a
-    feature ships into the quality classifier."""
-    from ningaloo_turtle_etl_spark.operators.classify import woe_iv_report
-
-    docs = load_table(spark, "documents", sf_dir)
-    labeled = docs.select(
-        "source", (F.col("lang") == "en").cast("int").alias("is_en")
-    )
-    return woe_iv_report(labeled, "source", "is_en").orderBy("feature_value")
-
-
 @register(
     "negative_brand_samples",
     """
@@ -1239,185 +508,13 @@ def q_negative_brand_samples(spark, sf_dir):
     ).orderBy("example", "slot")
 
 
-def _cv_fold_auc_oracle_sql(k: int = 5) -> str:
-    """K-fold CV AUC oracle: serving SQL as a CTE, folds from the repo's
-    md5-uniform of doc_id (deterministic, engine-portable), then the
-    grouped Mann-Whitney fold partitioned by fold id."""
-    return f"""
-    WITH scored AS ({_text_oracle_sql()}),
-    lab AS (
-        SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                   % {k} AS fold,
-               p_english AS p,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM scored
-    ),
-    g AS (
-        SELECT fold, p, COUNT(*) AS n, SUM(y) AS pos
-        FROM lab GROUP BY fold, p
-    ),
-    c AS (
-        SELECT fold, p, pos, n - pos AS neg,
-               COALESCE(SUM(n - pos) OVER (PARTITION BY fold ORDER BY p
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS neg_below
-        FROM g
-    ),
-    num AS (
-        SELECT fold, SUM(pos * (neg_below + neg / 2.0)) AS nm
-        FROM c GROUP BY fold
-    ),
-    tot AS (
-        SELECT fold, SUM(pos) AS tp, SUM(n - pos) AS tn
-        FROM g GROUP BY fold
-    )
-    SELECT num.fold AS fold,
-           ROUND(nm / (tp * tn), 6) AS auc,
-           CAST(tp AS BIGINT) AS n_pos,
-           CAST(tn AS BIGINT) AS n_neg
-    FROM num JOIN tot ON num.fold = tot.fold
-    ORDER BY fold
-    """
-
-
-@register("cv_fold_auc", _cv_fold_auc_oracle_sql(5))
-def q_cv_fold_auc(spark, sf_dir):
-    """5-fold cross-validated AUC of the frozen English classifier
-    (`operators/classify.py classifier_auc_by_group` over md5-hash
-    folds): the eval-harness question a single global AUC can't answer
-    — is the ranking power stable across resamples, or carried by a
-    lucky subset? Folds come from the repo's deterministic md5 uniform
-    of doc_id (no RNG, replayable in SQL), so the same doc lands in the
-    same fold on every engine and every rerun. Each fold's Mann-Whitney
-    fold is window-partitioned by fold id — shuffle-parallel, no global
-    sort."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        classifier_auc_by_group,
-        hashed_text_scores,
-        load_model_fixture,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % 5
-        ).alias("fold"),
-        F.round("p_english", 3).alias("p"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return (
-        classifier_auc_by_group(scored, "p", "y", "fold")
-        .withColumnRenamed("group", "fold")
-        .orderBy("fold")
-    )
-
-
-def _platt_oracle_sql(iterations: int = 4, lr: float = 0.5) -> str:
-    """Unrolled Platt-scaling oracle: the logistic-GD chaining pattern
-    (one gradient CTE + one weight CTE per round) specialized to the
-    two-parameter calibrator sigmoid(b + a·score) over the frozen
-    classifier's serving scores. Per-row gradient terms quantize to
-    integer nanos before the exact-integer SUM; weight-step arithmetic
-    keeps the operator's operation order."""
-    margin = "(w.w0 * _intercept + w.w1 * f_score)"
-    parts = [
-        f"""
-    sc AS MATERIALIZED ({_text_oracle_sql()}),
-    base AS MATERIALIZED (
-        SELECT 1.0 AS _intercept,
-               CAST(round(p_english, 3) AS DOUBLE) AS f_score,
-               CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS _y
-        FROM sc
-    ),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM base),
-    w0 AS (SELECT 0.0 AS w0, 0.0 AS w1)"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    g{t} AS (
-        SELECT
-            CAST(SUM(CAST(round((p - _y) * _intercept * 1e9) AS BIGINT))
-                 AS BIGINT) AS g0,
-            CAST(SUM(CAST(round((p - _y) * f_score * 1e9) AS BIGINT))
-                 AS BIGINT) AS g1
-        FROM (SELECT base.*,
-                     1.0 / (1.0 + exp(-{margin})) AS p
-              FROM base CROSS JOIN w{t - 1} w)
-    ),
-    w{t} AS (
-        SELECT w.w0 - {lr} * ((g.g0 / 1e9) / nn.n) AS w0,
-               w.w1 - {lr} * ((g.g1 / 1e9) / nn.n) AS w1
-        FROM w{t - 1} w CROSS JOIN g{t} g CROSS JOIN nn
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    scored AS (
-        SELECT base.*, {margin} AS m
-        FROM base CROSS JOIN w{iterations} w
-    ),
-    metrics AS (
-        SELECT ROUND(SUM(CASE WHEN (CASE WHEN m >= 0 THEN 1.0 ELSE 0.0 END)
-                                    = _y THEN 1 ELSE 0 END) * 1.0
-                     / ANY_VALUE(nn.n), 6) AS train_acc,
-               ROUND((CAST(SUM(CAST(round(
-                   ln(1.0 + exp(-((2.0 * _y - 1.0) * m))) * 1e9) AS BIGINT))
-                   AS BIGINT) / 1e9) / ANY_VALUE(nn.n), 6) AS train_logloss
-        FROM scored CROSS JOIN nn
-    )
-    SELECT f.feature, ROUND(f.weight, 6) AS weight,
-           m.train_acc, m.train_logloss
-    FROM (SELECT '_intercept' AS feature, w0 AS weight FROM w{iterations}
-          UNION ALL SELECT 'f_score', w1 FROM w{iterations}) f
-    CROSS JOIN metrics m
-    ORDER BY f.feature"""
-    )
-
-
-@register("platt_calibration_weights", _platt_oracle_sql(4, 0.5))
-def q_platt_calibration_weights(spark, sf_dir):
-    """Platt scaling of the frozen English classifier (Platt 1999):
-    fit sigmoid(b + a·score) to the real labels by 4 rounds of the
-    SAME distributed full-batch GD the engine trains models with
-    (`operators/classify.py logistic_gd_train` on the single score
-    feature) — the parametric companion to classifier_isotonic_
-    calibration: isotonic reshapes scores monotonically with bin-level
-    freedom; Platt fits the two-parameter sigmoid a small calibration
-    set can support without overfitting. The weight trajectory replays
-    bit-for-bit in the unrolled oracle."""
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        hashed_text_scores,
-        load_model_fixture,
-        logistic_gd_train,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    model = load_model_fixture("text_model")
-    scored = hashed_text_scores(docs, model, out_col="p_english").select(
-        F.round("p_english", 3).cast("double").alias("f_score"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    return logistic_gd_train(
-        scored, ["f_score"], "y", iterations=4, lr=0.5
-    ).orderBy("feature")
-
-
 def _kcenter_oracle_sql(k: int = 8, d: int = 64) -> str:
     """Unrolled greedy k-center oracle: c1 = min id; per round one
     dmin-update CTE (exact-integer per-coordinate micro terms, identical
     operation order to `operators/selection.py kcenter_select`) and one
     argmax CTE (dmin DESC, id ASC). All CTEs MATERIALIZED — each c{r}
     is referenced by the next round AND the final union, and DuckDB
-    re-evaluates inline CTEs per reference (the pca/unigram lesson)."""
+    re-evaluates inline CTEs per reference (as in the PCA oracles)."""
 
     def dist(a, b):
         return (

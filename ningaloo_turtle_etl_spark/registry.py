@@ -4,8 +4,6 @@ operator from SURVEY.md §2.
 Convention: every computed column is aliased identically in the Spark plan and
 the DuckDB oracle SQL (the driver sorts columns by name then hashes values).
 Double-typed aggregates are rounded in BOTH to absorb summation-order ulps.
-Entries with ``oracle=None`` are non-SQL-expressible (driver runs a weaker
-rows-only check).
 """
 
 from __future__ import annotations
@@ -19,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 @dataclass
 class Q:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
 
 
 _REGISTRY: dict[str, Q] = {}
@@ -30,8 +28,8 @@ _REGISTRY: dict[str, Q] = {}
 # component; entries after the marker are redundant with components already
 # proven above (TPC-H-flavored variants, the SQL-form flagship twin) or
 # extension queries — all still oracle-swept by pytest and the supplement
-# artifact (since r06 every entry but sketch_profile carries a full DuckDB
-# oracle — pcnm_join_back flipped via a frozen eigenvector-score fixture).
+# artifact (every entry carries a full DuckDB oracle — pcnm_join_back
+# flipped via a frozen eigenvector-score fixture).
 # tests/test_registry_order.py asserts this list stays in sync with the
 # registry.
 PRIORITY: list[str] = [
@@ -214,8 +212,6 @@ PRIORITY: list[str] = [
     "dsir_importance_select",
     "ann_pq_topk",
     "weighted_sample_topn",
-    "quality_classifier_scores",
-    "text_classifier_scores",
     "winsorized_value_stats",
     "tfidf_top_terms",
     "forward_sel_step",
@@ -227,13 +223,10 @@ PRIORITY: list[str] = [
     "portable_quantile_profile",
     "sampled_token_frequencies",
     "varpart_fractions",
-    "bpe_pair_counts",
-    "bpe_merges",
     "gopher_repetition_stats",
     "ccnet_perplexity_buckets",
     "substring_dup_stats",
     "substring_span_removal",
-    "bpe_encode_corpus",
     "zipf_corpus_fit",
     "phrase_search_top_bigram",
     "bm25_top10",
@@ -280,7 +273,6 @@ PRIORITY: list[str] = [
     "source_gini",
     "rolling_wau_hll",
     "boilerplate_removal",
-    "classifier_calibration_curve",
     "audience_overlap_types",
     "contrastive_negative_pairs",
     "spatial_hotspot_clusters",
@@ -291,18 +283,12 @@ PRIORITY: list[str] = [
     "embedding_drift_by_label",
     "domain_reweight_mix",
     "rolling_value_p95",
-    "classifier_auc",
-    "score_decile_lift",
-    "classifier_pr_curve",
-    "keep_threshold_yield",
-    "classifier_auc_by_source",
     "annotator_agreement",
     "rank_fusion_select",
     "ann_lsh_recall",
     "ann_ivf_recall",
     "k_anonymity_events",
     "assoc_rules_copurchase",
-    "tokenizer_fertility",
     # r07 generalization-ladder k-anonymity release, full oracle
     "k_anon_generalize_events",
     # r07 fuzzy record linkage clusters (the pairs stage was promoted into
@@ -321,14 +307,10 @@ PRIORITY: list[str] = [
     "bt_brand_preference",
     # r08 Artetxe-Schwenk margin bitext mining, full oracle
     "bitext_margin_pairs",
-    # r08 per-group Brier/ECE/MCE calibration scorecard, full oracle
-    "brier_ece_by_source",
     # r08 order-independent dataset content digest, full oracle
     "table_digest_by_flag",
     # r08 Kneser-Ney bigram LM scoring, full oracle
     "kneser_ney_lm_scores",
-    # r08 weight-of-evidence / information-value feature screen, full oracle
-    "woe_iv_source_vs_english",
     # r08 rank-biased overlap ANN acceptance metric, full oracle
     "ann_lsh_rbo",
     # r08 Markov removal-effect attribution, full oracle
@@ -343,10 +325,6 @@ PRIORITY: list[str] = [
     "first_event_per_user",
     # r07 perceptual-hash image near-dups (aHash + banded hamming LSH), full oracle
     "image_ahash_near_dups",
-    # r07 isotonic (PAV) classifier calibration, full oracle (minimax identity)
-    "classifier_isotonic_calibration",
-    # r07 split-conformal coverage report, full oracle
-    "conformal_coverage_by_source",
     # r07 Johnson-Lindenstrauss projection distortion audit, full oracle
     "jl_distortion_pairs",
     # Demoted r10 (slot freed for kmeans_embedding_clusters): the
@@ -363,13 +341,6 @@ PRIORITY: list[str] = [
     "rake_top_phrases",
     # r09 U-shaped position-based attribution (integer-micro credits)
     "position_attribution_channels",
-    # r09 Naive Bayes train+confusion audit (nano-quantized model table)
-    "nb_lang_confusion",
-    # r09 CART root-split Gini screen (windowed cut search)
-    "gini_best_split_features",
-    # r09 distributed logistic-regression training (full-batch GD,
-    # nano-quantized gradients, bit-exact unrolled oracle)
-    "logistic_gd_weights",
     # r09 four-moment profile from raw power sums (explicit formulas —
     # built-in skewness/kurtosis conventions differ across engines)
     "moment_profile_by_type",
@@ -383,8 +354,7 @@ PRIORITY: list[str] = [
     # replayed level-by-level in SQL)
     "hilbert_layout_buckets",
     # r10 matrix-factorization gradient training (rank-1 Funk-SVD,
-    # integer-micro exact rounds, unrolled-oracle trajectory like
-    # logistic_gd_weights)
+    # integer-micro exact rounds, unrolled-oracle trajectory)
     "mf_gd_factors",
     # r10 entropy l-diversity (Machanavajjhala §3.2 — the skew-sensitive
     # release gate the count-distinct check misses)
@@ -410,12 +380,6 @@ PRIORITY: list[str] = [
     # r11: DP quantile by the exponential mechanism (seeded draw; the
     # rank-statistic DP release next to the Laplace counts)
     "dp_value_median_exponential",
-    # r11: WordPiece greedy longest-match tokenizer (completes the
-    # BPE / unigram-Viterbi / WordPiece trio under one shared vocab)
-    "wordpiece_tokenizer_stats",
-    # r11: L2 gradient-boosted decision stumps (the nonlinear-model
-    # rung above logistic GD; grid-grain split search per round)
-    "gbm_stumps_lang_model",
     # r11: length-3 sequential-pattern support (GSP/PrefixSpan contract;
     # greedy earliest-occurrence containment on sorted time arrays)
     "sequential_patterns_users",
@@ -437,21 +401,9 @@ PRIORITY: list[str] = [
     # r10 binary quantization tier: sign-bit codes + Hamming top-k
     # (exact-integer distances; 32-bit words shared with the oracle)
     "ann_hamming_topk",
-    # r10 k-fold cross-validated AUC (md5-uniform folds, grouped
-    # Mann-Whitney — the eval-harness stability check)
-    "cv_fold_auc",
-    # r10 Platt scaling (two-parameter sigmoid calibration trained by
-    # the distributed GD loop; unrolled trajectory oracle)
-    "platt_calibration_weights",
-    # r10 unigram-LM (SentencePiece) Viterbi tokenizer stats (exact
-    # integer-nano DP as an in-document fold; fit+DP recursive oracle)
-    "unigram_tokenizer_stats",
     # r10 within-group inequality profile (CV / Theil / Atkinson —
     # nano-quantized entropy terms, micro-quantized sqrt terms)
     "inequality_profile_by_source",
-    # r10 pinball-subgradient quantile regression (the conditional-
-    # quantile rung of the trainer stack; unrolled trajectory oracle)
-    "quantile_gd_weights",
     # r11 second batch: zone-map pruning audit across simulated file
     # layouts (the WHY behind zorder/hilbert/compaction: min/max
     # skipping vs layout-predicate alignment)
@@ -489,7 +441,7 @@ def _prepare_session(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-def register(name: str, oracle: str | None):
+def register(name: str, oracle: str):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             _prepare_session(spark)
@@ -523,4 +475,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: q.oracle for name, q in _ordered().items() if q.oracle is not None}
+    return {name: q.oracle for name, q in _ordered().items()}

@@ -1,14 +1,12 @@
-"""Train the two corpus-filter classifiers once and freeze their
-coefficients as JSON fixtures under ningaloo_turtle_etl_spark/fixtures/.
+"""Fit the frozen embedding fixtures once and write them as JSON under
+ningaloo_turtle_etl_spark/fixtures/: the semantic-dedup centroids and the
+IVF centroids, scalar-quantizer ranges and PQ codebooks the ANN queries serve.
 
 Why frozen fixtures: the registered queries' job is to prove the SERVING
-path (the piece that runs over 100 TB) against the DuckDB oracle, and an
-oracle needs fixed coefficients — LBFGS float accumulation order is not a
-cross-engine contract. Training itself (distributed MLlib LR, executor-side
-gradients) stays covered by tests/test_classify.py's separability/AUC/parity
-tests, and this script re-runs end-to-end whenever the features change.
+path against the DuckDB oracle, and an oracle needs fixed parameters. Every
+fixture is fitted with the deterministic md5-hash sample rule.
 
-Usage: python scripts/train_classifier_fixtures.py [sf_dir]
+Usage: python scripts/fit_fixtures.py [sf_dir]
 Default sf_dir is /root/testdata/sf0.01 — the driver's t2 comparison scale.
 """
 
@@ -20,12 +18,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pyspark.sql.functions as F  # noqa: E402
-
-from ningaloo_turtle_etl_spark.operators.classify import (  # noqa: E402
-    featurize,
-    train_hashed_text_model,
-    train_quality_model,
+from ningaloo_turtle_etl_spark.operators.quantize import (  # noqa: E402
+    fit_pq_codebooks,
+    fit_quantizer,
+)
+from ningaloo_turtle_etl_spark.operators.similarity import (  # noqa: E402
+    fit_centroids,
 )
 from ningaloo_turtle_etl_spark.session import get_spark  # noqa: E402
 
@@ -40,58 +38,11 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     os.makedirs(FIXTURE_DIR, exist_ok=True)
     spark = get_spark(master="local[8]")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    # Quality model: weak labels from the heuristic rules (the CCNet
-    # bootstrap pattern) over (doc_id, text) only — featurize refuses
-    # frames whose columns collide with the features it computes.
-    # Thresholds chosen to SPLIT this corpus (the r03 rule labeled every
-    # synthetic doc 1.0, which diverged the unregularized intercept to inf).
-    weak = (
-        featurize(docs.select("doc_id", "text"))
-        .withColumn(
-            "label",
-            (
-                (F.col("quality_score") >= 1.0)
-                & (F.col("dup_2gram_ratio") < 0.03)
-                & (F.col("stopword_ratio") >= 0.05)
-            ).cast("double"),
-        )
-        .select("doc_id", "text", "label")
-    )
-    n_pos = weak.filter(F.col("label") == 1.0).count()
-    n_all = weak.count()
-    print(f"weak labels: {n_pos}/{n_all} positive")
-    assert 0 < n_pos < n_all, "weak labels degenerate — adjust thresholds"
-    quality = train_quality_model(weak)
-    quality["trained_on"] = sf_dir
-    with open(os.path.join(FIXTURE_DIR, "quality_model.json"), "w") as f:
-        json.dump(quality, f, indent=1)
-    print("quality_model:", {k: v for k, v in quality.items() if k != "coefficients"})
-
-    # Hashed-BoW English classifier, md5 hash family: the md5 bucket map is
-    # bit-identical in DuckDB, so the frozen model's serving path can be
-    # oracle-verified end to end.
-    labeled = docs.select(
-        "doc_id", "text", (F.col("lang") == "en").cast("double").alias("label")
-    )
-    text_model = train_hashed_text_model(labeled, n_features=512, hash_family="md5")
-    text_model["trained_on"] = sf_dir
-    with open(os.path.join(FIXTURE_DIR, "text_model.json"), "w") as f:
-        json.dump(text_model, f, indent=1)
-    print(
-        "text_model:",
-        {k: v for k, v in text_model.items() if k != "coefficients"},
-        "nnz:",
-        sum(1 for c in text_model["coefficients"] if c != 0.0),
-    )
 
     # Semantic-dedup centroids: deterministic (md5-hash-ordered sample)
     # k-means over the embeddings table, frozen so the registered
     # semantic_dedup query's cell blocking replays bit-identically in the
     # DuckDB oracle (argmin over FIXED literal centroids is plain SQL).
-    from ningaloo_turtle_etl_spark.operators.similarity import fit_centroids
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = fit_centroids(emb, 16, method="hash")
     with open(os.path.join(FIXTURE_DIR, "semantic_centroids.json"), "w") as f:
@@ -109,11 +60,6 @@ def main() -> None:
     # ANN fixtures: frozen IVF centroids, scalar-quantizer ranges, and PQ
     # codebooks — all fitted with the deterministic md5-hash sample rule so
     # the registered ANN queries' full pipelines replay in DuckDB.
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        fit_pq_codebooks,
-        fit_quantizer,
-    )
-
     ivf = fit_centroids(emb, 8, method="hash")
     with open(os.path.join(FIXTURE_DIR, "ivf_centroids.json"), "w") as f:
         json.dump(

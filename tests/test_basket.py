@@ -85,17 +85,6 @@ def test_assoc_rules_query_matches_oracle(spark, duck):
     )
 
 
-def test_tokenizer_fertility_matches_oracle_and_bounds(spark, duck):
-    qs, os_ = queries(), oracle_sql()
-    out = qs["tokenizer_fertility"](spark, SF_DIR)
-    rows = out.collect()
-    # fertility >= 1 (every word is at least one token) and chars/token is
-    # positive and below the longest-word bound
-    assert rows and all(r["fertility"] >= 1.0 for r in rows)
-    assert all(0.0 < r["chars_per_token"] < 20.0 for r in rows)
-    assert_df_matches_oracle(out, duck, os_["tokenizer_fertility"])
-
-
 def test_item_cosine_pairs_hand_case(spark):
     """cos = co/sqrt(na*nb) on binary incidence: a pair in every shared
     basket scores 1.0; min_co drops single-co pairs; ranking is

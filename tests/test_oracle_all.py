@@ -1,4 +1,4 @@
-"""Sweep every registered oracle-checked query against DuckDB at sf0.001 —
+"""Sweep every registered query against its DuckDB oracle at sf0.001 —
 the in-repo mirror of the driver's t2 gate."""
 
 from __future__ import annotations
@@ -17,9 +17,5 @@ def test_query_matches_oracle(name, spark, duck):
     assert_df_matches_oracle(QUERIES[name](spark, SF_DIR), duck, ORACLES[name])
 
 
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(name, spark):
-    # Non-SQL-expressible ops: weaker check — runs and yields a stable schema.
-    df = QUERIES[name](spark, SF_DIR)
-    assert df.columns
-    df.collect()
+def test_every_query_has_an_oracle():
+    assert set(QUERIES) == set(ORACLES)

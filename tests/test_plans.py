@@ -336,18 +336,6 @@ def test_audience_overlap_joins_on_member(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_classifier_auc_groups_scores_before_any_sort(spark):
-    """The Mann-Whitney fold aggregates the scored frame to the distinct-
-    score grain FIRST (map-side partial aggregate); the only Sort in the
-    plan orders the tiny grouped table for the cumulative window — the
-    input is never globally sorted."""
-    plan = plan_of(spark, "classifier_auc")
-    assert "Window" in plan
-    # partial aggregation on the score grain happens below the window
-    assert plan.index("partial_count") > plan.index("Window")
-    assert "CartesianProduct" not in plan
-
-
 def test_fuzzy_part_pairs_no_cartesian_and_name_dim_only(spark):
     plan = plan_of(spark, "fuzzy_part_pairs")
     # blocked self-join is a hash/broadcast equi-join on the block key,

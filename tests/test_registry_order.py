@@ -131,7 +131,7 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "local_supplier_volume",
         "returned_item_customers",
         "sql_entry_point",
-        # rows-only ANN/dedup entries: parity pinned in tests/test_llm_ops.py.
+        # ANN/dedup entries: parity also pinned in tests/test_llm_ops.py.
         "minhash_near_dups",
         "simhash_near_dups",
         "ann_lsh_topk",
@@ -168,8 +168,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "dsir_importance_select",
         "ann_pq_topk",
         "weighted_sample_topn",
-        "quality_classifier_scores",
-        "text_classifier_scores",
         "winsorized_value_stats",
         "tfidf_top_terms",
         "forward_sel_step",
@@ -181,13 +179,10 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "portable_quantile_profile",
         "sampled_token_frequencies",
         "varpart_fractions",
-        "bpe_pair_counts",
-        "bpe_merges",
         "gopher_repetition_stats",
         "ccnet_perplexity_buckets",
         "substring_dup_stats",
         "substring_span_removal",
-        "bpe_encode_corpus",
         "zipf_corpus_fit",
         "phrase_search_top_bigram",
         "bm25_top10",
@@ -234,7 +229,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "source_gini",
         "rolling_wau_hll",
         "boilerplate_removal",
-        "classifier_calibration_curve",
         "audience_overlap_types",
         "contrastive_negative_pairs",
         "spatial_hotspot_clusters",
@@ -245,11 +239,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "embedding_drift_by_label",
         "domain_reweight_mix",
         "rolling_value_p95",
-        "classifier_auc",
-        "score_decile_lift",
-        "classifier_pr_curve",
-        "keep_threshold_yield",
-        "classifier_auc_by_source",
         # r05 label-QA / fusion / ANN-evaluation batch, full oracles
         "annotator_agreement",
         "rank_fusion_select",
@@ -275,14 +264,10 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "bt_brand_preference",
         # r08 margin-criterion bitext mining, full oracle
         "bitext_margin_pairs",
-        # r08 per-group calibration scorecard, full oracle
-        "brier_ece_by_source",
         # r08 dataset content digest, full oracle
         "table_digest_by_flag",
         # r08 Kneser-Ney LM scoring, full oracle
         "kneser_ney_lm_scores",
-        # r08 WOE/IV feature screen, full oracle
-        "woe_iv_source_vs_english",
         # r08 RBO rank-agreement metric, full oracle
         "ann_lsh_rbo",
         # r08 Markov removal-effect attribution, full oracle
@@ -293,10 +278,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "negative_brand_samples",
         # r07 aHash image near-dups, full oracle
         "image_ahash_near_dups",
-        # r07 isotonic PAV calibration, full oracle
-        "classifier_isotonic_calibration",
-        # r07 split-conformal coverage, full oracle
-        "conformal_coverage_by_source",
         # r07 JL projection distortion audit, full oracle
         "jl_distortion_pairs",
         # r09 additions, all full oracles
@@ -306,9 +287,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "compaction_bin_plan",
         "rake_top_phrases",
         "position_attribution_channels",
-        "nb_lang_confusion",
-        "gini_best_split_features",
-        "logistic_gd_weights",
         "moment_profile_by_type",
         "item_cosine_top100",
         # r10 extension families, full oracles (skyline / Hilbert layout /
@@ -326,8 +304,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         # (fellegi_sunter_part_weights promoted into the r12 driver window)
         "audio_wav_features",
         "dp_value_median_exponential",
-        "wordpiece_tokenizer_stats",
-        "gbm_stumps_lang_model",
         "sequential_patterns_users",
         "ann_matryoshka_recall",
         "ann_matryoshka_topk",
@@ -347,14 +323,9 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         # r10 second batch: RFM segment rollup
         "rfm_customer_segments",
         "ann_hamming_topk",
-        "cv_fold_auc",
-        "platt_calibration_weights",
-        "unigram_tokenizer_stats",
         "inequality_profile_by_source",
-        "quantile_gd_weights",
-        # r05 Apriori market-basket rules + tokenizer eval, full oracles
+        # r05 Apriori market-basket rules, full oracle
         "assoc_rules_copurchase",
-        "tokenizer_fertility",
         # displaced by window consolidation; their merged twins (see
         # text_token_quality / patch_season / timestamp_pipeline) hold the
         # driver rows for the same components

@@ -219,23 +219,6 @@ def test_gini_concentration_known_values(spark):
     assert r["gini"] == 0.25 and r["total_rows"] == 4 and r["n_keys"] == 2
 
 
-def test_classifier_calibration_hand_computed(spark):
-    from ningaloo_turtle_etl_spark.operators.classify import (
-        classifier_calibration,
-    )
-
-    rows = [(0.1, 0), (0.1, 1), (0.95, 1), (1.0, 1)]
-    df = spark.createDataFrame(rows, "p double, y int")
-    got = {r["bin"]: r for r in
-           classifier_calibration(df, "p", "y", n_bins=10).collect()}
-    assert set(got) == {1, 9}  # p = 1.0 folds into the top bin
-    assert got[1]["n"] == 2 and got[1]["mean_pred"] == 0.1
-    assert got[1]["frac_pos"] == 0.5
-    assert got[9]["mean_pred"] == 0.975 and got[9]["frac_pos"] == 1.0
-    # ECE = (2*|0.5-0.1| + 2*|1.0-0.975|) / 4
-    assert got[1]["ece"] == got[9]["ece"] == round((2 * 0.4 + 2 * 0.025) / 4, 6)
-
-
 def test_audience_overlap_pairs(spark):
     from ningaloo_turtle_etl_spark.operators.relational import (
         audience_overlap,
