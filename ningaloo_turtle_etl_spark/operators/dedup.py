@@ -730,37 +730,6 @@ def token_hashes(text_col: Column | str, hash_family: str = "xxhash64") -> Colum
     return F.transform(tokens(text_col), lambda t: F.xxhash64(t))
 
 
-def simhash_from_hashes(hs: Column, num_bits: int = 64) -> Column:
-    """Signature from a MATERIALIZED token-hash array: bit b is set iff more
-    than half the token hashes have bit b set (⇔ the classic ±1 accumulator
-    is positive). ``num_bits`` `size(filter(...))` passes of pure bit-ops —
-    no per-token array allocation, which makes this the fastest Catalyst
-    form (measured 2.6s vs 3.8s HOF-aggregate vs 5.0s pandas-UDF per 20k
-    docs, signature stage only).
-
-    ``hs`` must be a projected column, not an inline expression: this
-    expression references it num_bits+1 times, and only an alias boundary
-    stops the hashing work being duplicated per reference (CollapseProject
-    will not inline non-cheap aliases with multiple uses)."""
-    nt = F.size(hs)
-
-    def bitcnt(b: int) -> Column:
-        return F.size(
-            F.filter(
-                hs, lambda x: F.shiftrightunsigned(x, b).bitwiseAND(F.lit(1)) == 1
-            )
-        )
-
-    sig = F.lit(0).cast("long")
-    for b in range(num_bits):
-        sig = sig.bitwiseOR(
-            F.when(2 * bitcnt(b) > nt, F.lit(_SIGN_MASKS[b]).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return F.coalesce(sig, F.lit(0).cast("long"))
-
-
 _SWAR_LANE = 0x0001000100010001  # one 1-bit per 16-bit lane
 
 

@@ -34,11 +34,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = (
-    "media_id long, content binary, media_type string, "
-    "meta struct<filename:string, source:string, declared_w:int, declared_h:int>"
-)
-
 IMAGE_FEATURES_SCHEMA = (
     "media_id long, width int, height int, n_bytes long, "
     "mean_luma double, feature array<double>"

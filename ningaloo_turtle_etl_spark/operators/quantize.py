@@ -94,16 +94,6 @@ def dequantize_expr(q_col: Column | str, lo: np.ndarray, hi: np.ndarray) -> Colu
     )
 
 
-def with_quantized(
-    df: DataFrame,
-    lo: np.ndarray,
-    hi: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "embedding_q",
-) -> DataFrame:
-    return df.withColumn(out_col, quantize_expr(vec_col, lo, hi))
-
-
 def quantized_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

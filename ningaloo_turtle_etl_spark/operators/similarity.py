@@ -1627,10 +1627,7 @@ def pca_power_components(
     # one Arrow grid pass: exact per-coordinate sums + the row count
     # (fuses the former base.count() job — guide §1.2)
     mu_sums, n_row = _pca_coord_sum_grid(base, d)
-    mu_m = [0] * d
-    for j in range(d):
-        # floor(s/n + 0.5): long/long division is IEEE double on any engine
-        mu_m[j] = int(math.floor(mu_sums[j] / n_row + 0.5))
+    mu_m = [_recenter_micro(s, n_row) for s in mu_sums]
 
     def _half_away(x: float) -> int:
         # round half away from zero, matching Spark F.round(x, 0) and
@@ -1701,8 +1698,8 @@ def pca_power_component(
     that holds at 10⁹ vectors.
 
     Determinism (the kmeans integer conventions): coordinates quantize
-    once to integer micros; the mean re-quantizes via floor(s/n + 0.5);
-    every accumulation term rounds to integer MICROS before its
+    once to integer micros; the mean re-quantizes via the exact
+    (2s + n) // (2n); every accumulation term rounds to integer MICROS before its
     exact-integer SUM (micro, not nano, so the per-key sums stay inside
     int64 at 10¹² terms — and w carries the 1/n of the covariance
     before squaring, so the norm terms never grow with n); driver-side
@@ -1737,10 +1734,7 @@ def pca_power_component(
     # (fuses the former base.count() job; see pca_power_components —
     # the r14 Arrow-grid rewrite, bit-exact, oracle untouched)
     mu_sums, n_row = _pca_coord_sum_grid(base, d)
-    mu_m = [0] * d
-    for j in range(d):
-        # floor(s/n + 0.5): long/long division is IEEE double on any engine
-        mu_m[j] = int(math.floor(mu_sums[j] / n_row + 0.5))
+    mu_m = [_recenter_micro(s, n_row) for s in mu_sums]
     v = [1.0] + [0.0] * (d - 1)
     norm = 1.0
     for _ in range(iterations):

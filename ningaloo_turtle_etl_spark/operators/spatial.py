@@ -104,12 +104,6 @@ def tag_regions(
     return df.withColumn(tag_col, tagger(F.col(lon_col), F.col(lat_col)))
 
 
-def point_in_polygon(lon: Column, lat: Column, region: Region) -> Column:
-    """Boolean membership column for a single polygon (exact test only)."""
-    tagger = region_tagger([region], default="_out")
-    return tagger(lon, lat) == region.name
-
-
 def region_membership_expr(lon: Column, lat: Column, region: Region) -> Column:
     """Even-odd ray cast as a PURE Catalyst expression: fold over a literal
     edge array with ``F.aggregate``, XOR-ing crossing parity. Identical

@@ -4666,7 +4666,8 @@ def _kmeans_oracle_sql(k: int = 8, iterations: int = 3, dim: int = 64) -> str:
     sums, exact half-up recentering floor(s/n + 1/2) = (2s+n) // (2n)
     via the explicit floor-div idiom (r14, matching the engine and the
     trained-ANN oracle; the old CAST(s AS DOUBLE)/n form was only exact
-    below the 2^53 cliff) — so the fit replays bit-for-bit."""
+    below the 2^53 cliff), on HUGEINT sums so that 2s cannot overflow —
+    so the fit replays bit-for-bit."""
     d2 = (
         f"list_sum(list_transform(range(1, {dim + 1}), "
         "i -> (v.vm[i] - c.c[i]) * (v.vm[i] - c.c[i])))"
@@ -4695,8 +4696,8 @@ def _kmeans_oracle_sql(k: int = 8, iterations: int = 3, dim: int = 64) -> str:
               FROM vm v CROSS JOIN c{t - 1} c)
     ),
     s{t} AS (
-        SELECT cluster, i, CAST(SUM(vm[i]) AS BIGINT) AS s,
-               CAST(COUNT(*) AS BIGINT) AS n
+        SELECT cluster, i, CAST(SUM(vm[i]) AS HUGEINT) AS s,
+               CAST(COUNT(*) AS HUGEINT) AS n
         FROM a{t}, range(1, {dim + 1}) t(i)
         WHERE rn = 1 GROUP BY cluster, i
     ),
@@ -4964,9 +4965,11 @@ def _pca_power_oracle_sql(iterations: int = 3, d: int = 64) -> str:
     ),
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
     mu AS (
-        SELECT j, CAST(floor(CAST(SUM(xm) AS BIGINT) / n + 0.5) AS BIGINT)
-                   AS mu_m
-        FROM coord CROSS JOIN nn GROUP BY j, n
+        SELECT j, CAST((2*s + n - (((2*s + n) % (2*n)) + 2*n) % (2*n))
+                       // (2*n) AS BIGINT) AS mu_m
+        FROM (SELECT j, CAST(SUM(xm) AS HUGEINT) AS s,
+                     CAST(n AS HUGEINT) AS n
+              FROM coord CROSS JOIN nn GROUP BY j, n)
     ),
     cent AS MATERIALIZED (
         SELECT vid, coord.j, (xm - mu_m) / 1e6 AS c
@@ -5035,9 +5038,11 @@ def _pca_power_components_oracle_sql(
     ),
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
     mu AS (
-        SELECT j, CAST(floor(CAST(SUM(xm) AS BIGINT) / n + 0.5) AS BIGINT)
-                   AS mu_m
-        FROM coord CROSS JOIN nn GROUP BY j, n
+        SELECT j, CAST((2*s + n - (((2*s + n) % (2*n)) + 2*n) % (2*n))
+                       // (2*n) AS BIGINT) AS mu_m
+        FROM (SELECT j, CAST(SUM(xm) AS HUGEINT) AS s,
+                     CAST(n AS HUGEINT) AS n
+              FROM coord CROSS JOIN nn GROUP BY j, n)
     ),
     cent AS MATERIALIZED (
         SELECT vid, coord.j, (xm - mu_m) / 1e6 AS c
@@ -5156,7 +5161,7 @@ def pca_power_component_query(spark, sf_dir):
     rounds, v0 = e_1): the covariance never materializes — each round is
     two coordinate-grain passes and a d-row normalize, the shape that
     holds at any dimension and corpus size. Integer-micro coordinates,
-    floor(s/n+0.5) mean, nano-quantized accumulation terms: the whole
+    exact (2s + n) // (2n) mean, nano-quantized accumulation terms: the whole
     trajectory replays bit-for-bit in the unrolled oracle."""
     from ningaloo_turtle_etl_spark.operators.similarity import (
         pca_power_component,

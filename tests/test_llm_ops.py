@@ -3645,3 +3645,57 @@ def test_kmeans_recenter_exact_past_double_cliff():
         f" % (2*{n})) // (2*{n})"
     ).fetchone()[0]
     assert int(got) == k - 1
+
+
+def test_pca_mean_exact_past_double_cliff(spark):
+    """The PCA mean is the exact half-up (2s + n) // (2n). On these seven
+    1-D vectors the coordinate sum passes 2^53, where the float form
+    floor(s/n + 0.5) lands one micro high, and that shift moves the
+    eigenvalue's sixth decimal: 4.448163 exact against 4.448162. The
+    engine and its DuckDB oracle both give the exact value."""
+    import duckdb
+
+    from ningaloo_turtle_etl_spark.operators.similarity import (
+        pca_power_components,
+    )
+    from ningaloo_turtle_etl_spark.queries.llm_ops import (
+        _pca_power_components_oracle_sql,
+    )
+
+    # x = j/64 makes x*1e6 = j*15625 an exact integer micro coordinate
+    js = [120_000_000_000 + e for e in (170, -19, -88, 125, -196, -193, 50)]
+    rows = [(i, [j / 64]) for i, j in enumerate(js)]
+    s, n = sum(j * 15625 for j in js), len(js)
+    assert s > 2**53 and (2 * s + n) // (2 * n) != int(np.floor(s / n + 0.5))
+
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = pca_power_components(df, n_components=1, iterations=3).collect()
+    assert [(r["loading"], r["eigenvalue"]) for r in got] == [(1.0, 4.448163)]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    oracle = con.sql(_pca_power_components_oracle_sql(1, 3, 1)).fetchall()
+    assert [(r[-2], r[-1]) for r in oracle] == [(1.0, 4.448163)]
+
+
+def test_kmeans_oracle_sums_past_int64_half_range():
+    """The kmeans oracle doubles each cluster's coordinate sum while
+    recentering; at |s| >= 2^62 that overflowed BIGINT. Here cluster 0
+    holds three coordinates near 2.3e18 micros (s ~ 6.9e18) and must
+    recenter to their exact mean."""
+    import duckdb
+
+    from ningaloo_turtle_etl_spark.queries.llm_ops import _kmeans_oracle_sql
+
+    x = 2_305_843_009_216.0  # x*1e6 is exact in a double, just over 2^61
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany(
+        "INSERT INTO embeddings VALUES (?, ?)",
+        [(0, [x]), (1, [x + 2000]), (2, [x + 4]), (3, [x + 8])],
+    )
+    assert 3 * x * 1e6 > 2**62
+    # cluster 0 = ids 0, 2, 3 recentered to x + 4; cluster 1 = id 1
+    got = con.sql(_kmeans_oracle_sql(k=2, iterations=1, dim=1)).fetchall()
+    assert [tuple(r) for r in got] == [(0, 3, 32.0), (1, 1, 0.0)]
