@@ -615,95 +615,6 @@ def embedding_near_dup_pairs(
     )
 
 
-# --- semantic (k-means-blocked) near-dup -------------------------------------
-def semantic_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
-    deterministic: bool = False,
-) -> DataFrame:
-    """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
-    arXiv:2303.09540): block by k-means cell — every vector is assigned to
-    its nearest centroid and only WITHIN-cell pairs are scored with exact
-    cosine. Cross-cell near-dups are missed by construction; that is the
-    method's documented approximation (near-identical vectors land in the
-    same cell almost surely).
-
-    Scale shape: at N docs pick n_centroids ≈ N/target_cell_size so cells
-    stay small (the paper runs 50k clusters over 100M+ docs); the candidate
-    join is payload-free — pairs are generated from bare (cell, id) rows and
-    the vectors are attached afterwards by id (the same trick that cut the
-    LSH bench 2×: wide arrays never ride through the pair product).
-
-    ``deterministic=True`` fits centroids from the md5-hash-ordered sample
-    (bit-identical across runs/partitionings) instead of the seeded uniform
-    takeSample — required for reproducible registered-query output."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        _dot,
-        build_ivf_index,
-        fit_centroids,
-    )
-
-    if centroids is None:
-        centroids = fit_centroids(
-            df,
-            n_centroids,
-            vec_col=vec_col,
-            id_col=id_col,
-            method="hash" if deterministic else "sample",
-        )
-    index = build_ivf_index(df, id_col=id_col, vec_col=vec_col, centroids=centroids)
-    slim = index.assigned.select("vec_id", "cell")
-    a, b = slim.alias("a"), slim.alias("b")
-    cand = a.join(
-        b,
-        on=[F.col("a.cell") == F.col("b.cell"), F.col("a.vec_id") < F.col("b.vec_id")],
-    ).select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-    vecs = index.assigned.select("vec_id", "v", "v_norm")
-    pairs = (
-        cand.join(vecs.withColumnsRenamed({"vec_id": "id_a", "v": "va", "v_norm": "na"}), on="id_a")
-        .join(vecs.withColumnsRenamed({"vec_id": "id_b", "v": "vb", "v_norm": "nb"}), on="id_b")
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        pairs.withColumn("_cos", cos)
-        .filter(F.col("_cos") >= threshold)
-        .select("id_a", "id_b", F.round("_cos", 6).alias("cosine"))
-    )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    deterministic: bool = False,
-    centroids=None,
-) -> DataFrame:
-    """Collapse semantic near-dup clusters to one representative each: pairs
-    from ``semantic_near_dup_pairs``, components via pointer-jumping
-    connected components, keep the min-id row per component (singletons keep
-    themselves). Pass ``centroids`` (array-like, k×dim) to block against a
-    FIXED centroid set — e.g. the frozen fixture the registered query
-    serves, which is what makes its output DuckDB-oracle-reproducible."""
-    from ningaloo_turtle_etl_spark.operators.graph import cluster_representatives
-
-    pairs = semantic_near_dup_pairs(
-        df,
-        threshold=threshold,
-        n_centroids=n_centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        deterministic=deterministic,
-        centroids=centroids,
-    )
-    return cluster_representatives(df, pairs, id_col=id_col)
-
-
 # --- SimHash ----------------------------------------------------------------
 # Bit masks for assembling a signed-long signature: bit 63's mask is the long
 # MIN_VALUE bit pattern (Python ints won't wrap on their own).

@@ -1,485 +1,37 @@
-"""Embedding quantization — scalar int8 compression for the vector column.
+"""Distributed IVF-PQ: train, encode and serve an approximate-nearest-
+neighbour index over an embedding column, with no fixed parameter file.
 
-At 100 TB the embedding column IS the storage problem: float32 → int8 is a
-4× cut (and parquet dictionary/RLE often takes more). Scalar quantization
-per dimension: fit [min, max] per dim on a seeded sample, map each value to
-0..255 linearly, reconstruct the midpoint on read. Everything is Catalyst
-(`zip_with` against literal min/scale arrays) — quantize and dequantize are
-map-only expressions that fuse with the scan; no UDFs.
+- TRAIN: distributed Lloyd over integer-micro vectors (round(x·1e6) once)
+  learns the IVF coarse centroids (full-vector grain, m=1) and the PQ
+  codebooks (Jégou, Douze & Schmid, TPAMI 2011: m contiguous subvectors,
+  k codes each). Every assignment scans the corpus map-side in one
+  Arrow batch stage; every update is one map-side-combined aggregate.
+- ENCODE: one map-only pass gives each vector its IVF cell and m PQ
+  codes — the (vec_id, cell, code) serving index.
+- SERVE: each query probes its ``nprobe`` nearest cells, scores the
+  candidates by asymmetric distance (m integer lookups into the query's
+  table) and re-ranks the shortlist with exact squared L2.
 
-Recall impact is the metric that matters: tests/test_quantize.py pins
-round-trip error and top-k recall vs the full-precision baseline on the
-real embeddings table.
+The whole loop is exact integer arithmetic, so an unrolled DuckDB oracle
+(queries/ann_oracles.py) replays it bit-for-bit.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
-
-def fit_quantizer(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    sample_rows: int = 2048,
-    seed: int = 7,
-    method: str = "sample",
-    id_col: str = "vec_id",
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-dimension [min, max] from a seeded uniform sample over all
-    partitions (same discipline as IVF's fit_centroids — limit() would read
-    the first partitions only). ``method="hash"`` switches to the
-    smallest-md5(id) rows — bit-identical across runs AND partition layouts
-    (takeSample is seeded but layout-dependent), which is what the frozen
-    quantizer fixture is built with."""
-    from ningaloo_turtle_etl_spark.operators.similarity import _as_double
-
-    if method == "hash":
-        rows = (
-            corpus.select(
-                _as_double(F.col(vec_col)).alias("v"),
-                F.md5(F.col(id_col).cast("string")).alias("_mh"),
-            )
-            .orderBy("_mh")
-            .limit(sample_rows)
-            .collect()
-        )
-    elif method == "sample":
-        rows = (
-            corpus.select(_as_double(F.col(vec_col)).alias("v"))
-            .rdd.takeSample(False, sample_rows, seed)
-        )
-    else:
-        raise ValueError(f"unknown method {method!r} (want 'sample' or 'hash')")
-    if not rows:
-        raise ValueError("fit_quantizer: empty corpus")
-    sample = np.asarray([r["v"] for r in rows])
-    lo, hi = sample.min(axis=0), sample.max(axis=0)
-    # Degenerate dims (constant value) get unit range so the scale is finite.
-    hi = np.where(hi > lo, hi, lo + 1.0)
-    return lo, hi
+from ningaloo_turtle_etl_spark.operators.similarity import _recenter_micro
 
 
-def _lit_array(values) -> Column:
-    return F.array(*[F.lit(float(v)) for v in values])
-
-
-def quantize_expr(vec_col: Column | str, lo: np.ndarray, hi: np.ndarray) -> Column:
-    """array<float> → array<tinyint>: round((v - lo) / (hi - lo) * 255) - 128,
-    clamped. Pure columns; values outside the fitted range saturate."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    lo_a, hi_a = _lit_array(lo), _lit_array(hi)
-    scaled = F.zip_with(
-        F.zip_with(c, lo_a, lambda x, mn: x.cast("double") - mn),
-        F.zip_with(hi_a, lo_a, lambda mx, mn: mx - mn),
-        lambda num, rng: F.round(num / rng * 255.0),
-    )
-    clamped = F.transform(
-        scaled, lambda q: F.greatest(F.least(q, F.lit(255.0)), F.lit(0.0))
-    )
-    return F.transform(clamped, lambda q: (q - 128).cast("tinyint"))
-
-
-def dequantize_expr(q_col: Column | str, lo: np.ndarray, hi: np.ndarray) -> Column:
-    """array<tinyint> → array<double>: bucket midpoint reconstruction."""
-    c = F.col(q_col) if isinstance(q_col, str) else q_col
-    lo_a, hi_a = _lit_array(lo), _lit_array(hi)
-    unit = F.transform(c, lambda q: (q.cast("double") + 128.0) / 255.0)
-    return F.zip_with(
-        F.zip_with(unit, _lit_array(hi - lo), lambda u, rng: u * rng),
-        lo_a,
-        lambda scaled, mn: scaled + mn,
-    )
-
-
-def quantized_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    lo: np.ndarray,
-    hi: np.ndarray,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force top-k over the QUANTIZED corpus (queries stay full
-    precision): corpus vectors are stored int8 and dequantized on the fly in
-    the scan projection — the read path a compressed vector lake serves."""
-    from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
-
-    compressed = corpus.select(
-        F.col(id_col), quantize_expr(vec_col, lo, hi).alias("_q")
-    )
-    restored = compressed.select(
-        F.col(id_col), dequantize_expr("_q", lo, hi).alias(vec_col)
-    )
-    return cosine_topk(restored, queries, k=k, id_col=id_col, vec_col=vec_col)
-
-
-# --- product quantization (PQ) ----------------------------------------------
-# Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor Search"
-# (IEEE TPAMI 2011): split each vector into m subvectors, k-means each
-# subspace into k codes, store m small code ids per vector (64-dim float32 →
-# 8 bytes at m=8), and answer queries with asymmetric distance computation
-# (ADC): the query precomputes an m×k lookup table of exact
-# subvector-to-centroid distances, so scoring a corpus vector is m table
-# lookups — no float math per vector. The codebook fit follows the repo's
-# dedup-then-join-back discipline (bounded driver-side sample, cf.
-# fit_centroids); encode and ADC scoring are pure Catalyst and fuse with
-# the scan.
-
-
-def fit_pq_codebooks(
-    corpus: DataFrame,
-    m_subvectors: int = 8,
-    k_codes: int = 16,
-    sample_rows: int = 2048,
-    iters: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    method: str = "hash",
-) -> np.ndarray:
-    """Per-subspace k-means codebooks, shape (m, k, dim//m). Sampling uses
-    the deterministic smallest-md5(id) rule by default (``method="hash"``,
-    bit-identical across runs/partitionings — the repo's reproducible-sample
-    primitive) or a seeded uniform ``takeSample`` (``method="sample"``).
-    Requires dim % m == 0."""
-    from ningaloo_turtle_etl_spark.operators.similarity import _as_double
-
-    if method == "hash":
-        rows = (
-            corpus.select(
-                _as_double(F.col(vec_col)).alias("v"),
-                F.md5(F.col(id_col).cast("string")).alias("_mh"),
-            )
-            .orderBy("_mh")
-            .limit(sample_rows)
-            .collect()
-        )
-    elif method == "sample":
-        rows = corpus.select(_as_double(F.col(vec_col)).alias("v")).rdd.takeSample(
-            False, sample_rows, seed
-        )
-    else:
-        raise ValueError(f"unknown method {method!r} (want 'hash' or 'sample')")
-    if not rows:
-        raise ValueError("fit_pq_codebooks: empty corpus")
-    sample = np.asarray([r["v"] for r in rows])
-    dim = sample.shape[1]
-    if dim % m_subvectors:
-        raise ValueError(f"dim {dim} not divisible by m={m_subvectors}")
-    d_sub = dim // m_subvectors
-    rng = np.random.RandomState(seed)
-    books = []
-    for i in range(m_subvectors):
-        sub = sample[:, i * d_sub : (i + 1) * d_sub]
-        k_eff = min(k_codes, len(sub))
-        cents = sub[rng.choice(len(sub), size=k_eff, replace=False)]
-        for _ in range(iters):
-            d = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-            assign = d.argmin(1)
-            for j in range(len(cents)):
-                members = sub[assign == j]
-                if len(members):
-                    cents[j] = members.mean(0)
-        if k_eff < k_codes:  # degenerate tiny corpus: repeat last centroid
-            cents = np.vstack([cents, np.repeat(cents[-1:], k_codes - k_eff, 0)])
-        books.append(cents)
-    return np.asarray(books)
-
-
-def pq_encode_expr(vec_col: Column | str, codebooks: np.ndarray) -> Column:
-    """array<float> → array<tinyint> of m code ids (argmin centroid per
-    subvector). Pure Catalyst: one squared-distance expression per
-    (subvector, code) over fixed element_at indices — codegen size is
-    m·k·d_sub terms, which bounds sensible k at ~16-32 for this path (the
-    classic PQ byte-code regime k=256 would go through a Pandas UDF
-    instead)."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    m, k, d_sub = codebooks.shape
-
-    codes = []
-    for i in range(m):
-        dists = F.array(
-            *[
-                sum(
-                    (
-                        (
-                            F.element_at(c, i * d_sub + j + 1).cast("double")
-                            - float(codebooks[i, code, j])
-                        )
-                        ** 2
-                        for j in range(d_sub)
-                    ),
-                    start=F.lit(0.0),
-                )
-                for code in range(k)
-            ]
-        )
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("tinyint"))
-    return F.array(*codes)
-
-
-def with_pq_codes(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "pq_code",
-) -> DataFrame:
-    return df.withColumn(out_col, pq_encode_expr(vec_col, codebooks))
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    rerank: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC top-k: encode the corpus map-side (m tinyint codes per vector),
-    precompute each query's m×k exact subvector-distance lookup table at the
-    driver (queries are a small broadcast set by contract, as in
-    cosine_topk), then score = m ``element_at`` lookups per corpus vector —
-    no per-vector float math. ``rerank > 0`` takes that many ADC candidates
-    per query and re-scores them exactly (squared L2 on the original
-    vectors) — the standard two-stage PQ serving shape; output rank/distance
-    then come from the exact stage.
-
-    Returns (query_id, vec_id, distance, rank): squared-L2 ADC approximation
-    when rerank=0, exact squared L2 on the shortlist otherwise."""
-    from ningaloo_turtle_etl_spark.operators.similarity import _as_double
-
-    m, kcodes, d_sub = codebooks.shape
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q")
-    ).collect()
-    encoded = corpus.select(
-        F.col(id_col).alias("vec_id"), pq_encode_expr(vec_col, codebooks).alias("code")
-    )
-
-    luts = []
-    for r in q_rows:
-        qv = np.asarray(r["q"])
-        subs = qv.reshape(m, d_sub)
-        lut = ((subs[:, None, :] - codebooks) ** 2).sum(-1)  # (m, k)
-        luts.append((r["query_id"], [float(x) for x in lut.ravel()]))
-    spark = corpus.sparkSession
-    lut_df = spark.createDataFrame(luts, "query_id long, lut array<double>")
-
-    adc = sum(
-        (
-            F.element_at(
-                F.col("lut"),
-                F.lit(i * kcodes + 1) + F.element_at(F.col("code"), i + 1).cast("int"),
-            )
-            for i in range(m)
-        ),
-        start=F.lit(0.0),
-    )
-    scored = (
-        encoded.crossJoin(F.broadcast(lut_df))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", adc.alias("distance"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("vec_id"))
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", F.round("distance", 6).alias("distance"), "rank")
-        )
-
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(rerank))
-        .select("query_id", "vec_id")
-    )
-    exact_corpus = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    q_df = spark.createDataFrame(
-        [(r["query_id"], r["q"]) for r in q_rows], "query_id long, q array<double>"
-    )
-    l2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("q"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    rescored = (
-        shortlist.join(exact_corpus, on="vec_id")
-        .join(F.broadcast(q_df), on="query_id")
-        .select("query_id", "vec_id", l2.alias("distance"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("vec_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", F.round("distance", 6).alias("distance"), "rank")
-    )
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: np.ndarray,
-    codebooks: np.ndarray,
-    k: int = 10,
-    nprobe: int = 4,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The fused three-tier ANN serving pipeline — IVF cell shortlist →
-    PQ/ADC re-rank → exact squared-L2 final top-k — the shape that
-    actually runs at 10⁹ vectors (each tier cuts the candidate set the
-    next, more exact, more expensive tier scores):
-
-    1. INDEX (map-only over the corpus, built once): every vector gets
-       its IVF cell (argmin of the frozen coarse centroids) and its m
-       PQ tinyint codes. The serving index is (vec_id, cell, code) —
-       ~m+4 bytes/vector; full vectors are only fetched for the final
-       exact stage.
-    2. PROBE: each query finds its ``nprobe`` nearest cells (the same
-       seeded centroid expression), and only corpus rows in probed
-       cells become candidates — an equi-join on cell against the
-       broadcast query set, never a full scan.
-    3. ADC: candidates score as m ``element_at`` lookups into the
-       query's broadcast (m·k_codes) lookup table — no per-vector
-       float math; the per-query ``shortlist`` best survive.
-    4. EXACT: the shortlist joins back to the original vectors BY ID
-       (only shortlist·|Q| vectors are ever materialized) and re-scores
-       exact squared L2; the final ``k`` rank comes from this stage.
-
-    Same determinism contract as the single-tier siblings: cell argmin,
-    PQ codes and ADC sums are left-to-right float folds the DuckDB
-    oracle replays bit-for-bit from the same frozen fixtures
-    (``ivf_centroids`` + ``pq_codebooks``); queries are a small
-    broadcast set by contract (their LUTs are driver-computed, like
-    ``pq_topk``'s).
-
-    Recall shape: the floor is min(IVF recall at ``nprobe``, PQ recall
-    at ``shortlist``) — tests/test_quantize.py pins the measured floor
-    against the brute-force L2 ground truth.
-
-    Returns (query_id, vec_id, distance, rank): exact squared L2, 6dp.
-    """
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        _as_double,
-        _nearest_centroids_expr,
-    )
-
-    if k < 1 or nprobe < 1 or shortlist < k:
-        raise ValueError("need k >= 1, nprobe >= 1, shortlist >= k")
-    m, kcodes, d_sub = codebooks.shape
-    spark = corpus.sparkSession
-
-    # 1. serving index: (vec_id, cell, code) — one map-only pass
-    enc = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        _nearest_centroids_expr(
-            _as_double(F.col(vec_col)), centroids, 1
-        )[0].alias("cell"),
-        pq_encode_expr(vec_col, codebooks).alias("code"),
-    )
-
-    # 2. probed cells per query (Spark-side: the same fold order as the
-    # corpus assignment, so oracle parity holds; explode_outer per the
-    # InferFiltersFromGenerate note on ivf_index_topk)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-    )
-    qcells = q.withColumn(
-        "cell",
-        F.explode_outer(
-            _nearest_centroids_expr(F.col("qv"), centroids, nprobe)
-        ),
-    ).select("query_id", "cell")
-
-    # 3. driver-side ADC lookup tables (numpy's per-subvector sums are
-    # sequential at d_sub <= 8 — same floats as the oracle's chains)
-    q_rows = q.collect()
-    luts = []
-    for r in q_rows:
-        qv = np.asarray(r["qv"])
-        subs = qv.reshape(m, d_sub)
-        lut = ((subs[:, None, :] - codebooks) ** 2).sum(-1)  # (m, k)
-        luts.append((r["query_id"], [float(x) for x in lut.ravel()]))
-    lut_df = spark.createDataFrame(luts, "query_id long, lut array<double>")
-
-    adc = sum(
-        (
-            F.element_at(
-                F.col("lut"),
-                F.lit(i * kcodes + 1)
-                + F.element_at(F.col("code"), i + 1).cast("int"),
-            )
-            for i in range(m)
-        ),
-        start=F.lit(0.0),
-    )
-    # corpus cells are unique per vector, so the cell equi-join yields
-    # each (query, candidate) pair at most once — no dedup stage
-    cand = (
-        enc.join(F.broadcast(qcells), on="cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut_df), on="query_id")
-        .select("query_id", "vec_id", adc.alias("distance"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("distance"), F.asc("vec_id")
-    )
-    short = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(shortlist))
-        .select("query_id", "vec_id")
-    )
-
-    # 4. exact squared-L2 re-rank on the shortlist only
-    exact_corpus = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    q_df = spark.createDataFrame(
-        [(r["query_id"], list(r["qv"])) for r in q_rows],
-        "query_id long, q array<double>",
-    )
-    l2 = F.aggregate(
-        F.zip_with(F.col("v"), F.col("q"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    rescored = (
-        short.join(exact_corpus, on="vec_id")
-        .join(F.broadcast(q_df), on="query_id")
-        .select("query_id", "vec_id", l2.alias("distance"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.asc("distance"), F.asc("vec_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "vec_id",
-            F.round("distance", 6).alias("distance"),
-            "rank",
-        )
-    )
-
-
-# --- distributed PQ / IVF index TRAINING (the train→serve loop) --------------
-# The served tiers above consume codebooks/centroids as inputs; at 100 TB
-# the training pass is as much a production stage as serving (r11 verdict
-# item 3). The trainer below is the kmeans_lloyd machinery (operators/
-# similarity.py) at SUBVECTOR grain: integer-micro quantization once,
-# exact-integer squared distances, floor(s/n + 0.5) recentering — so the
-# whole trajectory replays bit-for-bit in an unrolled DuckDB oracle, and
-# the trained books feed the existing serving shapes with zero driver-side
+# --- distributed Lloyd at subvector grain ------------------------------------
+# Integer-micro quantization once, exact-integer squared distances and
+# exact half-up recentering (_recenter_micro), so the whole trajectory
+# replays bit-for-bit in an unrolled DuckDB oracle with no driver-side
 # float math anywhere in the loop.
 
 
@@ -522,20 +74,16 @@ def _lloyd_grid_rows(
     return rows[0]
 
 
-def _lloyd_grid_rows_multi(
+def _lloyd_grid_frame(
     base: DataFrame,
     specs: list,
     with_dist: bool = False,
-):
-    """`_lloyd_grid_rows` over SEVERAL independent codebook sets in the
-    SAME scan: ``specs`` is a list of (books, m, k, d_sub) whose
-    trajectories do not feed each other (IVF coarse at m=1 and PQ at
-    subvector grain train independently), so folding them into one pass
-    halves the per-iteration corpus scans of the fused trainer without
-    changing any trajectory. Sum columns are padded to the widest spec
-    (padding cells stay exactly 0 through the long-sum merge). Returns a
-    list aligned with specs, each entry the collected grid rows of that
-    spec."""
+) -> DataFrame:
+    """The uncollected grid of `_lloyd_grid_rows_multi`: one
+    ``mapInArrow`` assignment scan folding every spec's (g, s, code)
+    partial grid per task, merged by one long-sum aggregate. Sum columns
+    are padded to the widest spec (padding cells stay exactly 0 through
+    the long-sum merge)."""
     import pyarrow as pa
 
     Cs = [np.array(b, dtype=np.int64).reshape(m, k, d) for b, m, k, d in specs]
@@ -617,7 +165,22 @@ def _lloyd_grid_rows_multi(
     ]
     if with_dist:
         aggs.append(F.sum("dsum").alias("dsum"))
-    rows = part.groupBy("g", "s", "code").agg(*aggs).collect()
+    return part.groupBy("g", "s", "code").agg(*aggs)
+
+
+def _lloyd_grid_rows_multi(
+    base: DataFrame,
+    specs: list,
+    with_dist: bool = False,
+):
+    """`_lloyd_grid_rows` over SEVERAL independent codebook sets in the
+    SAME scan: ``specs`` is a list of (books, m, k, d_sub) whose
+    trajectories do not feed each other (IVF coarse at m=1 and PQ at
+    subvector grain train independently), so folding them into one pass
+    halves the per-iteration corpus scans of the fused trainer without
+    changing any trajectory. Returns a list aligned with specs, each
+    entry the collected grid rows of that spec."""
+    rows = _lloyd_grid_frame(base, specs, with_dist=with_dist).collect()
     out: list = [[] for _ in specs]
     for r in rows:
         out[int(r["g"])].append(r)
@@ -638,7 +201,7 @@ def _lloyd_micro_rounds(
     smallest ids (deterministic, resumable); an empty cluster keeps its
     previous centroid.
 
-    Scale shape (the kmeans_lloyd contract at subvector grain): per
+    Scale shape: per
     iteration ONE corpus scan — all m·k integer distance expressions
     evaluated as an exact-int64 Arrow batch stage that pre-folds the
     grid per task (see _lloyd_grid_rows) — and ONE map-side-combined
@@ -705,14 +268,10 @@ def _lloyd_micro_rounds_multi(
             d_sub = dim // m
             # bounded: <= m·k rows of d_sub+3 ints per spec
             got = {
-                # floor(sm/n + 0.5) computed as (2·sm + n) // (2·n) — EXACT
-                # integer arithmetic, so parity with the oracle survives
-                # |sm| > 2^53 (float division rounds sm first and can flip
-                # the half-up boundary by 1 ulp at 10⁹-vector scale; the
-                # oracle uses the same non-negative-remainder floor form).
+                # exact half-up recentering: no 2^53 float cliff, and
+                # the oracle uses the same non-negative-remainder floor
                 (int(r["s"]), int(r["code"])): [
-                    (2 * int(r[f"s{j}"]) + int(r["n"])) // (2 * int(r["n"]))
-                    for j in range(d_sub)
+                    _recenter_micro(r[f"s{j}"], r["n"]) for j in range(d_sub)
                 ]
                 for r in grids[g]
             }
@@ -732,13 +291,12 @@ def pq_train_codebooks_lloyd(
     vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
-    """DISTRIBUTED per-subspace PQ codebook training — the production
-    train stage the served PQ tiers (``pq_topk``, ``ivf_pq_topk``) sit
-    on. Unlike ``fit_pq_codebooks`` (numpy Lloyd on a bounded driver
-    sample), every assignment scans the full corpus map-side against
-    broadcast-literal centroids and every update is one map-side-
-    combined aggregate — the shape that holds at 10⁹ vectors, where a
-    sample-fit misplaces small code cells.
+    """DISTRIBUTED per-subspace PQ codebook training — the train stage
+    of the IVF-PQ loop, audited on its own. Every assignment scans the
+    full corpus map-side against broadcast-literal centroids and every
+    update is one map-side-combined aggregate — the shape that holds at
+    10⁹ vectors, where a driver-sample fit misplaces small code cells.
+    ``m_subvectors=1`` trains full-vector (k-means) centroids.
 
     Returns the training audit at (subspace, code) grain after
     ``iterations`` rounds plus a final assignment: n_vecs, inertia
@@ -747,6 +305,9 @@ def pq_train_codebooks_lloyd(
     the codebook VALUES are in the hash, not just member counts)."""
     from pyspark import StorageLevel
 
+    m, k = int(m_subvectors), int(k_codes)
+    if m < 1 or k < 1:
+        raise ValueError("m_subvectors and k_codes must be >= 1")
     vm = F.transform(
         F.col(vec_col),
         lambda x: F.round(x.cast("double") * 1e6, 0).cast("long"),
@@ -757,7 +318,6 @@ def pq_train_codebooks_lloyd(
         if first is None:
             raise ValueError("pq_train_codebooks_lloyd: empty corpus")
         dim = int(first["d"])
-    m, k = int(m_subvectors), int(k_codes)
     d_sub = dim // m
     base = base.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -795,9 +355,6 @@ def pq_train_codebooks_lloyd(
         "subspace int, code int, n_vecs long, inertia double, "
         "centroid_l1 double",
     ).orderBy("subspace", "code")
-
-
-from dataclasses import dataclass
 
 
 @dataclass
@@ -1212,10 +769,9 @@ def trained_ivf_pq_topk(
     """The CLOSED train→encode→serve ANN loop in one query: distributed
     Lloyd trains the IVF coarse centroids (full-vector grain) AND the PQ
     codebooks (subvector grain) on the corpus itself, then the trained
-    parameters drive the three-tier ``ivf_pq_topk`` serving shape — IVF
-    cell probe → ADC shortlist → exact re-rank. No frozen fixture
-    anywhere; this is the production pipeline end-to-end (r11 verdict
-    item 3).
+    parameters drive the three-tier serving shape — IVF cell probe →
+    ADC shortlist → exact re-rank. No fixed parameter file anywhere;
+    this is the production pipeline end-to-end.
 
     Exactness: the ENTIRE loop — training trajectories, cell argmins,
     PQ codes, ADC lookup tables, exact re-rank — is integer micro-unit
@@ -1290,92 +846,3 @@ def trained_ivf_pq_topk(
         return out.localCheckpoint(eager=True)
     finally:
         base.unpersist()
-
-
-
-# --- binary (sign-bit) quantization + Hamming search -------------------------
-# Charikar, "Similarity Estimation Techniques from Rounding Algorithms"
-# (STOC 2002): for vectors on the unit sphere, P[sign(v·r) differs] is
-# proportional to the angle, so the HAMMING distance between sign-bit
-# codes estimates the cosine ordering. One bit per dimension — 64-dim
-# float32 → 8 bytes, a 32× cut (vs int8's 4×) — and scoring is XOR +
-# popcount, the cheapest distance a vector lake can serve. This is the
-# coarsest tier of the quantization ladder (binary < PQ < int8 < float).
-
-
-def sign_bit_words(
-    vec_col: Column | str, dim: int, word_bits: int = 32
-) -> list[Column]:
-    """Pack the sign bits of a ``dim``-length vector into
-    ``ceil(dim/word_bits)`` BIGINT words (bit i of word w = 1 iff
-    component w*word_bits+i > 0). 32 bits per word, NOT 64: DuckDB's
-    ``<<`` raises on a 63-bit shift and 2^i stays exactly representable
-    in a double, so both engines build the identical word values with no
-    sign-bit edge case. Pure Catalyst (aggregate over a literal index
-    sequence) — fuses with the scan, no UDF."""
-    if word_bits < 1 or word_bits > 62:
-        raise ValueError("word_bits must be in 1..62")
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    def _word(w: int, hi: int) -> Column:
-        # two-arg merge lambda (Spark inspects the callable's arity, so
-        # the word offset binds via this factory, not a default arg)
-        def merge(acc: Column, i: Column) -> Column:
-            return acc + F.when(
-                F.element_at(v, (i + F.lit(1)).cast("int")) > 0,
-                F.pow(F.lit(2.0), i - F.lit(w)).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-
-        return F.aggregate(
-            F.sequence(F.lit(w), F.lit(hi)), F.lit(0).cast("long"), merge
-        )
-
-    return [
-        _word(w, min(w + word_bits, dim) - 1)
-        for w in range(0, dim, word_bits)
-    ]
-
-
-def hamming_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force Hamming top-k over sign-bit codes — the binary tier's
-    serving query. Same shape as cosine_topk (corpus scan × broadcast
-    query set, deterministic (distance, id) tie order), but the per-pair
-    cost is ceil(dim/32) XOR+popcount word ops instead of dim float
-    multiplies, and the corpus column read is 8 bytes/row instead of
-    256. Returns (query_id, vec_id, hamming, rank).
-
-    Scale shape: codes are a map-only projection fused with the scan
-    (persist them once for repeated query batches); the query side is
-    broadcast, so the corpus never shuffles; top-k is a per-query window
-    on the k-bounded candidate stream."""
-    cw = sign_bit_words(vec_col, dim)
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        *[w.alias(f"w{i}") for i, w in enumerate(cw)],
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        *[w.alias(f"qw{i}") for i, w in enumerate(cw)],
-    )
-    joined = c.crossJoin(F.broadcast(q)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    ham = None
-    for i in range(len(cw)):
-        term = F.bit_count(F.col(f"w{i}").bitwiseXOR(F.col(f"qw{i}")))
-        ham = term if ham is None else ham + term
-    scored = joined.select(
-        "query_id", "vec_id", ham.cast("long").alias("hamming")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("vec_id")
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).filter(F.col("rank") <= k)

@@ -1,22 +1,16 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Similarity and embedding-space operators over ``array<float>`` columns.
 
-Three tiers, same result contract (query_id, vec_id, cosine, rank):
-
-- ``cosine_topk`` — brute force. The query set is broadcast; the corpus is
-  scanned map-side; per-query top-k via ranked window. Exact; the baseline
-  every approximate tier is measured against.
-- ``lsh_topk`` — random-hyperplane LSH: b sign-bits as the bucket key,
-  computed as PURE column expressions (one dot product per bit against a
-  literal hyperplane), candidates = exact-bucket collisions in ANY of L
-  independent tables (recall is bought with more tables, not bit-flip
-  multiprobe), exact re-rank inside buckets.
-- ``ivf_topk`` — inverted-file: k-means-lite centroids fit on a driver
-  sample, corpus assigned to nearest centroid (one Arrow pass), queries
-  probe ``nprobe`` nearest centroids, exact re-rank inside probed cells.
-
-At 100 TB: brute force is one broadcast + map + per-query TakeOrdered (no
-all-pairs shuffle); LSH/IVF turn the scan into a bucket-pruned scan — the
-partition key IS the bucket, so a probe touches only matching partitions.
+- ``cosine_topk`` — exact brute-force cosine top-k, result contract
+  (query_id, vec_id, cosine, rank). The query set is broadcast; the
+  corpus is scanned map-side; per-query top-k via ranked window — no
+  all-pairs shuffle. The approximate IVF-PQ loop lives in
+  ``operators/quantize.py``.
+- ``_hyperplanes`` / ``_bucket_expr`` — seeded random-hyperplane sign
+  buckets as pure column expressions, the LSH blocking of
+  ``dedup.embedding_near_dup_pairs``.
+- TF-IDF pairs, label centroids, hard negatives, embedding drift,
+  margin bitext mining, ranking metrics, rank-1 MF/ALS and deflated
+  power-iteration PCA (``pca_power_components``).
 """
 
 from __future__ import annotations
@@ -69,49 +63,6 @@ def cosine_topk(
     )
 
 
-def l2_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact brute-force squared-L2 top-k — the ground truth an L2-metric
-    index (PQ/ADC, IVF-L2) must be measured against. Cosine ground truth
-    would misstate PQ recall on unnormalized embeddings, where the two
-    orderings disagree. Same shape as :func:`cosine_topk`: corpus scan ×
-    broadcast query set, ties by vec_id. Returns
-    (query_id, vec_id, distance, rank)."""
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q")
-    )
-    joined = c.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
-    dist = F.aggregate(
-        F.zip_with(F.col("v"), F.col("q"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # Rank by the UNROUNDED distance (rounding only the projected output
-    # column) so near-ties within 1e-6 resolve in true L2 order — the same
-    # policy as pq_topk's exact re-rank stage, keeping both halves of a
-    # recall metric on one ordering convention.
-    scored = joined.select("query_id", "vec_id", dist.alias("_d"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("_d"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(F.col("_d"), 6).alias("distance"),
-            "rank",
-        )
-    )
-
-
 # --- random-hyperplane LSH --------------------------------------------------
 def _hyperplanes(dim: int, bits: int, seed: int = 7) -> np.ndarray:
     rng = np.random.RandomState(seed)
@@ -130,290 +81,6 @@ def _bucket_expr(vec_col, planes: np.ndarray):
     for i, b in enumerate(bits):
         bucket = bucket + (b * F.lit(int(2**i)))
     return bucket
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    bits: int = 6,
-    tables: int = 6,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """Approximate top-k, multi-table sign-LSH: L independent tables of b
-    hyperplane sign-bits; candidates collide with the query in ANY table
-    (recall = 1-(1-p^b)^L where p = 1-θ/π), then exact cosine re-rank.
-
-    b trades candidate-set size against per-table recall; L buys recall
-    back. Low-similarity corpora (θ near 90°) need small b / larger L —
-    tune with the recall harness in tests/test_llm_ops.py.
-
-    ``dim`` is inferred from the data when not given: hyperplanes of the
-    wrong width null out every dot product (zip_with pads with NULL), which
-    collapses all vectors into bucket 0 — still correct after re-rank, but
-    the bucket-pruned scan silently degrades to all-pairs."""
-    if dim is None:
-        first = corpus.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            id_t = corpus.schema[id_col].dataType.simpleString()
-            return corpus.sparkSession.createDataFrame(
-                [], f"query_id {id_t}, vec_id {id_t}, cosine double, rank int"
-            )
-        dim = int(first["d"])
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q")
-    )
-    tbl_buckets_c, tbl_buckets_q = [], []
-    for t in range(tables):
-        planes = _hyperplanes(dim, bits, seed + 1000 * t)
-        tbl_buckets_c.append(
-            F.struct(F.lit(t).alias("t"), _bucket_expr(F.col("v"), planes).alias("bk"))
-        )
-        tbl_buckets_q.append(
-            F.struct(F.lit(t).alias("t"), _bucket_expr(F.col("q"), planes).alias("bk"))
-        )
-    c = c.withColumn("tb", F.explode(F.array(*tbl_buckets_c))).select(
-        "vec_id", "v", F.col("tb.t").alias("t"), F.col("tb.bk").alias("bk")
-    ).withColumn("v_norm", _norm(F.col("v")))
-    q = q.withColumn("tb", F.explode(F.array(*tbl_buckets_q))).select(
-        "query_id", "q", F.col("tb.t").alias("t"), F.col("tb.bk").alias("bk")
-    ).withColumn("q_norm", _norm(F.col("q")))
-
-    cand = c.join(F.broadcast(q), on=["t", "bk"]).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = _dot(F.col("v"), F.col("q")) / (F.col("v_norm") * F.col("q_norm"))
-    scored = cand.select(
-        "query_id", "vec_id", F.round(cos, 6).alias("cosine")
-    ).dropDuplicates(["query_id", "vec_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-# --- IVF --------------------------------------------------------------------
-def _kmeanspp_init(sample: np.ndarray, k: int, rng) -> np.ndarray:
-    """k-means++ seeding (Arthur & Vassilvitskii 2007): each next centroid
-    drawn with probability ∝ squared distance to the nearest chosen one.
-    Spreads initial centroids over the data, which evens out cell sizes —
-    uniform init on weak-structure corpora tends to drop several centroids
-    into the same dense region and leave mega-cells that defeat IVF pruning.
-    Deterministic given ``rng``'s state."""
-    first = rng.randint(len(sample))
-    cents = [sample[first]]
-    d2 = ((sample - cents[0]) ** 2).sum(1)
-    for _ in range(k - 1):
-        total = d2.sum()
-        if total <= 0:
-            cents.append(sample[rng.randint(len(sample))])
-            continue
-        nxt = rng.choice(len(sample), p=d2 / total)
-        cents.append(sample[nxt])
-        d2 = np.minimum(d2, ((sample - cents[-1]) ** 2).sum(1))
-    return np.asarray(cents)
-
-
-def fit_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    sample_rows: int = 2048,
-    iters: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 7,
-    method: str = "sample",
-    id_col: str = "vec_id",
-    init: str = "uniform",
-) -> np.ndarray:
-    """k-means-lite on a driver-side sample (Lloyd iterations in numpy).
-    The reference's own PCNM trick (spatial_modelling.Rmd:211-224) — compute
-    the expensive thing on a small distinct set, apply to the big set —
-    generalized: centroids come from a bounded sample regardless of corpus
-    size.
-
-    ``method="sample"`` (default) is a seeded uniform ``takeSample`` over
-    ALL partitions — ``limit().collect()`` reads the first partitions only,
-    which on partition-correlated corpora (time-ordered crawls) biases
-    centroids and silently degrades IVF recall. It is seeded but still
-    partition-layout-dependent. ``method="hash"`` instead takes the
-    ``sample_rows`` smallest md5(id) rows: hash order decorrelates from
-    partition/time order like a uniform sample, but the selection is a pure
-    function of the ids — bit-identical across runs, partitionings and
-    engines (the repo's deterministic-sampling primitive, cf. curation
-    ``_sample_hash``). Use it when downstream results must be reproducible
-    (e.g. the registered semantic_dedup query)."""
-    if method == "hash":
-        rows = (
-            corpus.select(
-                _as_double(F.col(vec_col)).alias("v"),
-                F.md5(F.col(id_col).cast("string")).alias("_mh"),
-            )
-            .orderBy("_mh")
-            .limit(sample_rows)
-            .collect()
-        )
-    elif method == "sample":
-        rows = (
-            corpus.select(_as_double(F.col(vec_col)).alias("v"))
-            .rdd.takeSample(False, sample_rows, seed)
-        )
-    else:
-        raise ValueError(f"unknown method {method!r} (want 'sample' or 'hash')")
-    if not rows:
-        raise ValueError("fit_centroids: empty corpus")
-    sample = np.asarray([r["v"] for r in rows])
-    rng = np.random.RandomState(seed)
-    k_eff = min(n_centroids, len(sample))
-    # init="kmeans++" evens out cell sizes (measured [51..71] vs uniform's
-    # skewed cells at 500×8) — the skew-resistant choice when mega-cells
-    # would defeat IVF pruning at scale — but on weak-neighbor-structure
-    # corpora it LOWERS recall at fixed nprobe (measured 0.89 → 0.79 at
-    # nprobe=4): spread centroids spread a query's neighbors across more
-    # cells. Default stays uniform; pick per corpus with the recall
-    # harness.
-    if init == "kmeans++":
-        cents = _kmeanspp_init(sample, k_eff, rng)
-    elif init == "uniform":
-        cents = sample[rng.choice(len(sample), size=k_eff, replace=False)]
-    else:
-        raise ValueError(f"unknown init {init!r} (want 'uniform' or 'kmeans++')")
-    for _ in range(iters):
-        d = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        for j in range(len(cents)):
-            members = sample[assign == j]
-            if len(members):
-                cents[j] = members.mean(0)
-    return cents
-
-
-def _nearest_centroids_expr(vec_col, cents: np.ndarray, n: int = 1):
-    """Index array of the n nearest centroids — pure columns: one squared-
-    distance expression per centroid, then array sort by distance."""
-    dists = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec_col,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(cents)
-        ]
-    )
-    return F.slice(F.transform(F.array_sort(dists), lambda s: s["i"]), 1, n)
-
-
-from dataclasses import dataclass
-
-
-@dataclass
-class IvfIndex:
-    """A built IVF index: centroids (driver-side, tiny) + the assigned
-    corpus (vec_id, v, v_norm, cell). Build once, query many — the fit and
-    the corpus-assignment pass are the expensive part, and they are
-    identical across queries."""
-
-    centroids: np.ndarray
-    assigned: DataFrame
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
-) -> IvfIndex:
-    """Fit centroids (seeded takeSample) and assign every corpus vector to
-    its nearest cell in one map-only pass."""
-    cents = (
-        centroids
-        if centroids is not None
-        else fit_centroids(corpus, n_centroids, vec_col=vec_col, id_col=id_col)
-    )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    assigned = c.withColumn(
-        "cell", _nearest_centroids_expr(F.col("v"), cents, 1)[0]
-    ).withColumn("v_norm", _norm(F.col("v")))
-    return IvfIndex(centroids=cents, assigned=assigned)
-
-
-def write_ivf_index(index: IvfIndex, path: str) -> None:
-    """Persist the assigned corpus PARTITIONED BY cell — a probe then reads
-    only the matching cell directories (partition pruning), which is the
-    on-disk form of 'the partition key IS the bucket'."""
-    index.assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def load_ivf_index(spark, path: str, centroids: np.ndarray) -> IvfIndex:
-    return IvfIndex(centroids=centroids, assigned=spark.read.parquet(path))
-
-
-def ivf_index_topk(
-    index: IvfIndex,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a built index: each query probes its ``nprobe`` nearest cells,
-    exact cosine re-rank inside the probed cells. No fitting, no corpus
-    re-assignment — the serving path."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q")
-    )
-    # explode_OUTER: a plain explode would make InferFiltersFromGenerate
-    # re-evaluate the full all-centroid distance expression two more times
-    # per query row inside an inferred size()>0/isnotnull filter; outer
-    # infers nothing, and a null cell can never match the equi-join below.
-    q = q.withColumn(
-        "cell",
-        F.explode_outer(_nearest_centroids_expr(F.col("q"), index.centroids, nprobe)),
-    ).withColumn("q_norm", _norm(F.col("q")))
-
-    cand = index.assigned.join(F.broadcast(q), on="cell").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = _dot(F.col("v"), F.col("q")) / (F.col("v_norm") * F.col("q_norm"))
-    scored = cand.select(
-        "query_id", "vec_id", F.round(cos, 6).alias("cosine")
-    ).dropDuplicates(["query_id", "vec_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: corpus partitioned by nearest centroid, query
-    probes its ``nprobe`` nearest cells, exact re-rank inside. One-shot
-    convenience over build_ivf_index + ivf_index_topk — reuse the index for
-    repeated queries."""
-    index = build_ivf_index(
-        corpus, n_centroids, id_col=id_col, vec_col=vec_col, centroids=centroids
-    )
-    return ivf_index_topk(index, queries, k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
 
 
 def tfidf_cosine_pairs(
@@ -575,8 +242,9 @@ def hard_negatives(
     corpus streams map-side, per-anchor top-k via the rank-limit window
     (WindowGroupLimit pre-trims before the shuffle). The label filter
     rides the broadcast join, so cross-label pruning happens before any
-    scoring. At corpus x corpus scale swap the broadcast for the
-    LSH/IVF-blocked candidate pass and keep this verify stage."""
+    scoring. At corpus x corpus scale swap the broadcast for a blocked
+    candidate pass (LSH buckets or trained IVF cells) and keep this
+    verify stage."""
     c = df.select(
         F.col(id_col).alias("vec_id"),
         F.col(label_col).alias("label_b"),
@@ -599,78 +267,6 @@ def hard_negatives(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= int(k)
-    )
-
-
-def cell_silhouette(
-    df: DataFrame,
-    centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-cell simplified (centroid-based) silhouette for a k-means
-    blocking: for every vector, a = distance to its own centroid, b =
-    distance to the nearest OTHER centroid, s = (b - a) / max(a, b) in
-    [-1, 1]. Cells with low mean s leak near-dups across the cell
-    boundary (SemDeDup's documented miss) and under-probe in IVF — this
-    is the diagnostic that says whether n_centroids / nprobe need
-    raising BEFORE recall quietly drops.
-
-    Output: one row per cell — (cell, n_vectors, mean_silhouette,
-    mean_intra_dist), 6dp.
-
-    Scale shape: one map-only pass (distances to the broadcast centroid
-    literals in element order — bit-reproducible cross-engine), then a
-    map-side-combined aggregate to the n_centroids grid. The corpus is
-    touched once; the classic full silhouette needs all-pairs and is the
-    reason this centroid form is the one that scales."""
-    cents = np.asarray(centroids, dtype=float)
-    k = len(cents)
-    if k < 2:
-        raise ValueError("cell_silhouette needs >= 2 centroids")
-    v = _as_double(F.col(vec_col))
-    dists = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    v,
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for c in cents
-        ]
-    )
-    a2 = F.array_min(F.col("_dists"))
-    # array_position ties to the LOWEST index — same as the assignment's
-    # list_position(list_min) convention in the oracle.
-    cell = (F.array_position(F.col("_dists"), a2) - 1).cast("int")
-    rest = F.concat(
-        F.slice(F.col("_dists"), 1, F.col("_cell")),
-        F.slice(
-            F.col("_dists"),
-            F.col("_cell") + 2,
-            F.lit(k) - F.col("_cell") - 1,
-        ),
-    )
-    b2 = F.array_min(rest)
-    sa, sb = F.sqrt(F.col("_a2")), F.sqrt(F.col("_b2"))
-    s = F.when(
-        F.greatest(sa, sb) > 0, (sb - sa) / F.greatest(sa, sb)
-    ).otherwise(F.lit(0.0))
-    scored = (
-        df.select(F.col(id_col), dists.alias("_dists"))
-        .withColumn("_a2", a2)
-        .withColumn("_cell", cell)
-        .withColumn("_b2", b2)
-        .withColumn("_s", s)
-    )
-    return scored.groupBy(F.col("_cell").alias("cell")).agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.round(F.avg("_s"), 6).alias("mean_silhouette"),
-        F.round(F.avg(F.sqrt(F.col("_a2"))), 6).alias("mean_intra_dist"),
     )
 
 
@@ -764,120 +360,6 @@ def embedding_drift(
     )
 
 
-def ann_recall_report(
-    approx: DataFrame,
-    exact: DataFrame,
-    query_col: str = "query_id",
-    item_col: str = "vec_id",
-    ndigits: int = 6,
-) -> DataFrame:
-    """Recall@k of an approximate top-k result against the exact top-k
-    ground truth — the acceptance metric every ANN index (LSH / IVF / PQ)
-    must publish before replacing a brute-force scan. Both inputs are
-    (query, item) frames as produced by :func:`lsh_topk` / :func:`ivf_topk`
-    and :func:`cosine_topk`; rows beyond the intended k should be filtered
-    by the caller (the top-k operators already do).
-
-    Per query: ``n_exact`` (ground-truth size — may be below k when the
-    corpus is small), ``n_hit`` (ground-truth items the approximate result
-    recovered), ``recall_at_k``. Queries the approximate index missed
-    entirely surface with n_hit = 0, not silently dropped.
-
-    Scale shape: one semi-join keyed (query, item) and two query-grain hash
-    aggregates — evaluation cost is O(result sizes), never O(corpus), so
-    the report stays cheap even when the index under test covers billions
-    of vectors."""
-    e = exact.select(F.col(query_col).alias("_q"), F.col(item_col).alias("_i"))
-    a = approx.select(
-        F.col(query_col).alias("_q"), F.col(item_col).alias("_i")
-    )
-    tot = e.groupBy("_q").agg(F.count(F.lit(1)).alias("n_exact"))
-    hit = (
-        e.join(a, on=["_q", "_i"], how="left_semi")
-        .groupBy("_q")
-        .agg(F.count(F.lit(1)).alias("_nh"))
-    )
-    return (
-        tot.join(hit, on="_q", how="left")
-        .select(
-            F.col("_q").alias(query_col),
-            "n_exact",
-            F.coalesce("_nh", F.lit(0)).alias("n_hit"),
-            F.round(
-                F.coalesce("_nh", F.lit(0)) / F.col("n_exact"), ndigits
-            ).alias("recall_at_k"),
-        )
-    )
-
-
-# --- Johnson-Lindenstrauss random projection --------------------------------
-def _jl_matrix(dim: int, out_dim: int, seed: int = 7) -> np.ndarray:
-    """Seeded Achlioptas ±1 sign matrix scaled by 1/√out_dim — the
-    database-friendly JL construction (Achlioptas 2003): integer signs
-    mean the projection is a plain weighted sum, and the deterministic
-    seed means any engine regenerates the identical matrix (no fixture
-    file — same contract as the LSH hyperplanes)."""
-    rng = np.random.RandomState(seed)
-    signs = rng.randint(0, 2, size=(out_dim, dim)) * 2 - 1
-    return signs.astype(np.float64) / np.sqrt(float(out_dim))
-
-
-def jl_project(
-    corpus: DataFrame,
-    out_dim: int = 16,
-    seed: int = 7,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Johnson-Lindenstrauss random projection of an embedding column to
-    ``out_dim`` dimensions: with k = O(ln n/ε²) the pairwise distances of
-    any n points survive within 1±ε — the dimensionality squeeze that cuts
-    ANN index storage and distance-compute cost 4-8× BEFORE IVF/PQ ever
-    run, with a guarantee that needs no training data (contrast the
-    fitted PQ codebooks). Map-only: each output coordinate is one
-    zip_with fold against a broadcast literal row of the seeded ±1/√k
-    matrix — zero shuffles at any corpus size; the seeded construction
-    replays in the DuckDB oracle with no fixture.
-
-    Returns (id, jl array<double>). Pick out_dim with
-    the distortion report (the registered ``jl_distortion_pairs`` query
-    is the acceptance harness).
-
-    Every row's vector length is validated against ``dim`` (inferred
-    from the first row when not supplied): a ragged corpus would
-    otherwise silently truncate (longer vectors) or NULL-out (shorter —
-    zip_with pads with NULL) coordinates and corrupt every distance
-    downstream, so a mismatched row fails the job with a descriptive
-    error instead."""
-    if dim is None:
-        first = corpus.select(F.size(vec_col).alias("d")).first()
-        if first is None:
-            raise ValueError("jl_project: empty corpus")
-        dim = int(first["d"])
-    if out_dim < 1 or out_dim > dim:
-        raise ValueError("out_dim must be in [1, dim]")
-    m = _jl_matrix(dim, out_dim, seed)
-    v = _as_double(F.col(vec_col))
-    coords = [
-        _dot(v, F.array(*[F.lit(float(x)) for x in m[j]]))
-        for j in range(out_dim)
-    ]
-    # assert_true rides inside the output column so Catalyst cannot prune
-    # it; it returns NULL on pass, raises on the first ragged row.
-    guard = F.assert_true(
-        F.size(v) == F.lit(int(dim)),
-        F.concat(
-            F.lit(f"jl_project: vector length != dim={dim} for id "),
-            F.col(id_col).cast("string"),
-        ),
-    )
-    return corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.when(guard.isNull(), F.array(*coords)).alias("jl"),
-    )
-
-
 def margin_bitext_pairs(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -908,10 +390,10 @@ def margin_bitext_pairs(
     ``df_b``; 'a' flips the hint; 'auto' drops the hint and lets the
     planner/AQE pick from size estimates). Per-side top-k is rank-limit
     windows (WindowGroupLimit trims before the shuffle). At corpus×corpus scale
-    generate candidates with the LSH/IVF blocks first (ann_* operators)
-    and feed the candidate pairs through this same margin math; the
-    criterion only ever needs each vector's local top-k, which the
-    blocked pass already yields."""
+    generate candidates with a blocked pass first (LSH buckets or
+    trained IVF cells) and feed the candidate pairs through this same
+    margin math; the criterion only ever needs each vector's local
+    top-k, which the blocked pass already yields."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if broadcast_side not in ("a", "b", "auto"):
@@ -958,205 +440,18 @@ def margin_bitext_pairs(
     )
 
 
-def rbo_coefficients(p: float, depth: int) -> list:
-    """c_m = Σ_{d=m..depth} p^(d-1)/d — the contribution of a shared item
-    whose worse rank is m to the truncated RBO sum. Shared by the Spark
-    literals and the oracle SQL so both engines fold identical doubles."""
-    return [
-        sum(p ** (d - 1) / d for d in range(m, depth + 1))
-        for m in range(1, depth + 1)
-    ]
-
-
-def rank_biased_overlap(
-    ranks_a: DataFrame,
-    ranks_b: DataFrame,
-    p: float = 0.9,
-    depth: int = 10,
-    query_col: str = "query_id",
-    id_col: str = "vec_id",
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Truncated rank-biased overlap (Webber, Moffat & Zobel 2010)
-    between two per-query rankings:
-
-        rbo@depth = (1−p) · Σ_{d=1..depth} p^(d−1) · |A_d ∩ B_d| / d
-
-    — the TOP-WEIGHTED ranking-similarity metric that recall@k cannot
-    be: recall treats a hit at rank 1 and rank 10 identically, but an
-    ANN index that finds the right items in the wrong ORDER degrades
-    downstream re-ranking budgets, and RBO sees that. p sets the
-    top-weighting (0.9 ≈ the top ~10 ranks carry most mass); the
-    truncated sum is the standard evaluation form (no extrapolation
-    residual — deterministic, replayable). Output per query (every
-    query in ``ranks_a``): (query, n_shared, rbo), 6dp.
-
-    Scale shape: the depth-d intersection sizes are never materialized —
-    each shared item with ranks (ra, rb) contributes the precomputed
-    coefficient c_{max(ra,rb)} (it is inside both prefixes for every
-    d ≥ max), so the whole metric is one (query, id) equi-join over the
-    depth-truncated rankings plus a per-query sum of broadcast literal
-    coefficients."""
-    if not 0 < p < 1:
-        raise ValueError("p must be in (0, 1)")
-    if depth < 1:
-        raise ValueError("depth must be >= 1")
-    coeffs = rbo_coefficients(float(p), int(depth))
-    a = ranks_a.filter(F.col(rank_col) <= depth).select(
-        F.col(query_col).alias("q"),
-        F.col(id_col).alias("i"),
-        F.col(rank_col).alias("ra"),
-    )
-    b = ranks_b.filter(F.col(rank_col) <= depth).select(
-        F.col(query_col).alias("q"),
-        F.col(id_col).alias("i"),
-        F.col(rank_col).alias("rb"),
-    )
-    carr = F.array(*[F.lit(float(c)) for c in coeffs])
-    shared = a.join(b, on=["q", "i"]).select(
-        "q",
-        F.element_at(carr, F.greatest("ra", "rb").cast("int")).alias("_c"),
-    )
-    per_q = shared.groupBy("q").agg(
-        F.count(F.lit(1)).alias("n_shared"),
-        F.sum("_c").alias("_s"),
-    )
-    queries = ranks_a.select(F.col(query_col).alias("q")).distinct()
-    return (
-        queries.join(per_q, on="q", how="left")
-        .select(
-            F.col("q").alias(query_col),
-            F.coalesce("n_shared", F.lit(0)).alias("n_shared"),
-            F.round(
-                F.lit(1.0 - float(p)) * F.coalesce("_s", F.lit(0.0)), 6
-            ).alias("rbo"),
-        )
-    )
-
-
 def _recenter_micro(s: int, n: int) -> int:
     """Exact half-up integer recentering floor(s/n + 1/2) = (2s + n) //
-    (2n) in arbitrary-precision Python ints (// IS floor division) —
-    the quantize.py _lloyd_micro_rounds convention, mirrored by the
-    kmeans oracle's explicit floor-div CTE. r14 replaces the float form
-    floor(s/n + 0.5), whose parity with any oracle was only guaranteed
-    while |s| < 2^53 (~9e15 micro-units — 1e9 rows × 1e6 |x| sits AT
-    that edge); the exact form has no cliff. Boundary-pinned (vs the
-    float form's divergence AND vs the DuckDB oracle idiom) by
-    tests/test_llm_ops.py::test_kmeans_recenter_exact_past_double_cliff."""
+    (2n) in arbitrary-precision Python ints (// IS floor division) — the
+    one rounding rule of every integer-micro mean: the PCA mean here and
+    the Lloyd update of ``quantize._lloyd_micro_rounds_multi``, mirrored
+    by their oracles' explicit floor-div CTEs. The float form
+    floor(s/n + 0.5) is only exact while |s| < 2^53 (~9e15 micro-units —
+    1e9 rows × 1e6 |x| sits AT that edge); the exact form has no cliff.
+    Boundary-pinned (vs the float form's divergence AND vs the DuckDB
+    oracle idiom) by
+    tests/test_llm_ops.py::test_recenter_micro_exact_past_double_cliff."""
     return (2 * int(s) + int(n)) // (2 * int(n))
-
-
-def kmeans_lloyd(
-    corpus: DataFrame,
-    k: int = 8,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """DISTRIBUTED Lloyd k-means over an embedding column — the clustering
-    stage a curation pipeline runs before SemDeDup cell dedup, diversity
-    sampling, or IVF index builds. Unlike ``fit_centroids`` (the IVF
-    builder: numpy Lloyd on a bounded driver SAMPLE), this one never
-    samples: every assignment pass scans the full corpus map-side against
-    k broadcast-literal centroids, and every update is one map-side-
-    combined aggregate — the shape that holds at 10^9 vectors, where a
-    sample-fit can misplace small clusters.
-
-    Determinism across engines (the repo's integer-micro convention):
-    vectors quantize ONCE to integer micro-units (round(x·1e6)); all
-    distances are exact-integer sums of squared micro deltas, so argmin
-    ties break identically everywhere; centroid updates are exact integer
-    per-coordinate sums divided once, re-quantized via floor(s/n + 0.5).
-    Summation order can never move a result — the whole fit replays
-    bit-for-bit in the unrolled DuckDB oracle. Init = the vectors of the
-    k smallest ids (deterministic, resumable); a cluster that goes empty
-    keeps its previous centroid.
-
-    Returns one row per cluster after ``iterations`` update rounds plus a
-    final assignment: (cluster, n_vecs, inertia) — inertia is the summed
-    squared euclidean distance in original units (micro² / 1e12), 6dp.
-
-    Scale shape: per iteration, ONE corpus scan (k distance expressions
-    inlined — no join, no shuffle of vectors) + ONE map-side-combined
-    aggregate to k·(dim+1) cells; driver state is k×dim ints. The
-    quantized frame is persisted across the iterations+1 passes and
-    released before returning (bounded collects only)."""
-    if k < 1 or iterations < 1:
-        raise ValueError("k and iterations must be >= 1")
-    import math
-
-    vm = F.transform(
-        F.col(vec_col), lambda x: F.round(x.cast("double") * 1e6, 0).cast("long")
-    )
-    base = corpus.select(F.col(id_col).alias("id"), vm.alias("vm"))
-    if dim is None:
-        first = base.select(F.size("vm").alias("d")).first()
-        if first is None:
-            raise ValueError("kmeans_lloyd: empty corpus")
-        dim = int(first["d"])
-    from pyspark import StorageLevel
-
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        init_rows = base.orderBy("id").limit(k).collect()
-        if len(init_rows) < k:
-            raise ValueError(
-                f"kmeans_lloyd: k={k} exceeds corpus size {len(init_rows)}"
-            )
-        cents = [list(r["vm"]) for r in init_rows]
-
-        # r13: the assignment+sum scans run as the shared Arrow grid pass
-        # (quantize._lloyd_grid_rows at m=1 grain) — the inlined
-        # aggregate(zip_with(...)) distance folds were CodegenFallback and
-        # paid k interpreted lambda folds per row; the numpy batch form
-        # computes the same exact int64 distances with the identical
-        # first-min tie rule, the same per-cluster exact integer sums, and
-        # the same map-side-combined grid exchange. The float-division
-        # update below is untouched (it is what the oracle mirrors).
-        from ningaloo_turtle_etl_spark.operators.quantize import (
-            _lloyd_grid_rows,
-        )
-
-        for _ in range(int(iterations)):
-            sums = _lloyd_grid_rows(base, [cents], 1, k, dim)
-            # bounded: <= k rows of dim+2 ints
-            got = {
-                # r14: exact integer half-up recentering (see
-                # _recenter_micro — no 2^53 float cliff, same convention
-                # as quantize.py _lloyd_micro_rounds, mirrored by the
-                # kmeans oracle's explicit floor-div CTE)
-                int(r["code"]): [
-                    _recenter_micro(r[f"s{i}"], r["n"]) for i in range(dim)
-                ]
-                for r in sums
-            }
-            cents = [got.get(j, cents[j]) for j in range(k)]
-
-        # Final assignment: same grid pass with the exact integer distance
-        # sum folded per cluster (the |v|² term the argmin score drops is
-        # re-added before summing), then the SAME Spark-side round as
-        # before — the summed integer is identical, so round(dsum/1e12, 6)
-        # is bit-identical.
-        frows = _lloyd_grid_rows(base, [cents], 1, k, dim, with_dist=True)
-        rows = [
-            (int(r["code"]), int(r["n"]), int(r["dsum"])) for r in frows
-        ]
-    finally:
-        base.unpersist()
-    spark = corpus.sparkSession
-    return (
-        spark.createDataFrame(
-            rows, "cluster int, n_vecs long, dsum long"
-        )
-        .select(
-            "cluster",
-            "n_vecs",
-            F.round(F.col("dsum") / F.lit(1e12), 6).alias("inertia"),
-        )
-        .orderBy("cluster")
-    )
 
 
 def mf_gd_factors(
@@ -1566,23 +861,31 @@ def pca_power_components(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-``n_components`` principal components by power iteration with
-    HOTELLING DEFLATION — the multi-eigenvector extension of
-    :func:`pca_power_component` that the PCNM/RDA surface consumes
-    (reference computes multi-axis ordinations; the driver-side scipy
-    fallback in stats.py is hard-capped and cannot run at 10⁹ vectors).
+    """Top-``n_components`` principal components by matrix-free power
+    iteration with HOTELLING DEFLATION — the multi-eigenvector surface
+    the PCNM/RDA modelling consumes (reference computes multi-axis
+    ordinations; the driver-side scipy fallback in stats.py is
+    hard-capped and cannot run at 10⁹ vectors). ``n_components=1`` is
+    the plain top component.
 
-    Component k starts from v0 = e_k and iterates w = C·v like the
-    single-component path; deflation happens on the d-sized driver
-    vector AFTER each distributed pass — w′ = w − Σ_{m<k} λ_m·(v_m·v)·v_m
-    — so the 100 TB shape is unchanged: per round exactly one scan + one
-    map-side-combined aggregate over the coordinate grain, a d-row
-    collect, and O(p·d) driver arithmetic. The covariance is never
-    materialized and no per-round join exists for any component.
+    Component k starts from v0 = e_k and iterates w = C·v: each round
+    applies the centered covariance to v as one map-side pass,
+    s_i = (x_i − μ)·v, then w = (1/n)·Σ_i s_i (x_i − μ), and collects
+    the d-row w to the driver, where it is deflated, normalized and
+    re-embedded for the next round. Deflation happens on that d-sized
+    driver vector — w′ = w − Σ_{m<k} λ_m·(v_m·v)·v_m — so the 100 TB
+    shape is unchanged: per round exactly one scan + one map-side-
+    combined aggregate over the coordinate grain, a d-row collect, and
+    O(p·d) driver arithmetic. The covariance is never materialized and
+    no per-round join exists for any component.
 
     Determinism (the exact conventions the unrolled DuckDB oracle
-    replays token-for-token): coordinates/mean/accumulations quantize as
-    in pca_power_component; each deflation dot v_m·v quantizes its d
+    replays token-for-token): coordinates quantize once to integer
+    micros; the mean re-quantizes via the exact (2s + n) // (2n)
+    (``_recenter_micro``); every accumulation term rounds to integer
+    MICROS before its exact-integer SUM (micro, not nano, so the per-key
+    sums stay inside int64 at 10¹² terms), and w carries the 1/n of the
+    covariance before squaring; each deflation dot v_m·v quantizes its d
     products to integer MICROS (round half-away-from-zero — products can
     be negative) and sums them exactly; the per-dimension subtraction is
     wd − (λ_1·dot_1)·v_1[j] − (λ_2·dot_2)·v_2[j] … in component order,
@@ -1605,7 +908,7 @@ def pca_power_components(
     argument), so the unrolled DuckDB oracle is untouched."""
     # localCheckpoint (not persist): severs the upstream lineage so the
     # driver does not re-analyze a potentially huge input plan on every
-    # per-round job — the kmeans/connected_components O(1)-lineage
+    # per-round job — the connected_components O(1)-lineage
     # convention
     base = corpus.select(
         F.col(id_col).alias("vid"),
@@ -1677,85 +980,6 @@ def pca_power_components(
         F.round("loading", 6).alias("loading"),
         F.round("eigenvalue", 6).alias("eigenvalue"),
     ).orderBy("component", "dim_idx")
-
-
-def pca_power_component(
-    corpus: DataFrame,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """DISTRIBUTED top principal component by power iteration — the
-    whitening/dimension-diagnostic stage next to kmeans_lloyd and
-    jl_project, computed WITHOUT materializing the d×d covariance:
-    each round applies the centered covariance to v as one map-side
-    pass, s_i = (x_i − μ)·v / then w = (1/n)·Σ_i s_i (x_i − μ), and the
-    d-row w is collected to the driver (the kmeans broadcast-centroid
-    convention: a bounded d-sized collect per round) where it is
-    normalized and re-embedded as LITERALS for the next round. No
-    per-round join anywhere: a round costs exactly one scan + one
-    map-side-combined aggregate over the coordinate grain — the shape
-    that holds at 10⁹ vectors.
-
-    Determinism (the kmeans integer conventions): coordinates quantize
-    once to integer micros; the mean re-quantizes via the exact
-    (2s + n) // (2n); every accumulation term rounds to integer MICROS before its
-    exact-integer SUM (micro, not nano, so the per-key sums stay inside
-    int64 at 10¹² terms — and w carries the 1/n of the covariance
-    before squaring, so the norm terms never grow with n); driver-side
-    arithmetic is plain IEEE double (division, sqrt — bit-identical on
-    any engine), and all output rounding happens in Spark expressions.
-    Init v0 = e_1. Returns one row per dimension (dim_idx, loading,
-    eigenvalue) with the final ‖Σ·v‖ Rayleigh-scale estimate on every
-    row; the whole trajectory replays bit-for-bit in the unrolled
-    oracle."""
-    import math
-
-    # localCheckpoint (not persist): severs the upstream lineage so the
-    # driver does not re-analyze a potentially huge input plan (unions,
-    # deep pipelines) on every one of the per-round jobs — the same O(1)
-    # lineage convention as kmeans/connected_components rounds
-    base = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.transform(
-            _as_double(F.col(vec_col)),
-            lambda x: F.round(x * F.lit(1e6), 0).cast("long"),
-        ).alias("xm"),
-    ).localCheckpoint(eager=True)
-    first = base.select(F.size("xm").alias("d")).first()
-    spark = corpus.sparkSession
-    if first is None:
-        base.unpersist()
-        return spark.createDataFrame(
-            [], "dim_idx int, loading double, eigenvalue double"
-        )
-    d = int(first["d"])
-    # one Arrow grid pass: exact per-coordinate sums + the row count
-    # (fuses the former base.count() job; see pca_power_components —
-    # the r14 Arrow-grid rewrite, bit-exact, oracle untouched)
-    mu_sums, n_row = _pca_coord_sum_grid(base, d)
-    mu_m = [_recenter_micro(s, n_row) for s in mu_sums]
-    v = [1.0] + [0.0] * (d - 1)
-    norm = 1.0
-    for _ in range(iterations):
-        gw = _pca_cov_apply_grid(base, mu_m, v, d)
-        wd = [(g / 1e6) / n_row for g in gw]  # the covariance 1/n
-        nsq = 0
-        for x in wd:
-            t = x * x * 1e6
-            nsq += int(math.floor(t + 0.5))  # wd >= 0 squared: half-up
-        norm = math.sqrt(nsq / 1e6)
-        v = [x / norm for x in wd]
-
-    out = spark.createDataFrame(
-        [(j + 1, v[j], norm) for j in range(d)],
-        "dim_idx int, loading double, eigenvalue double",
-    )
-    return out.select(
-        "dim_idx",
-        F.round("loading", 6).alias("loading"),
-        F.round("eigenvalue", 6).alias("eigenvalue"),
-    ).orderBy("dim_idx")
 
 
 def als_rank1_factors(

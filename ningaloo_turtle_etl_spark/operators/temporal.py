@@ -741,7 +741,7 @@ def markov_removal_attribution(
     grid = edges.groupBy("s", "t").agg(F.count(F.lit(1)).alias("n"))
     # Both bounded collects run inside try/finally so an exception in
     # either cannot leak the MEMORY_AND_DISK cache for the session
-    # lifetime (repo convention, cf. rake_keywords / kmeans_lloyd).
+    # lifetime (repo convention, cf. rake_keywords / pq_train_codebooks_lloyd).
     try:
         rows = grid.collect()  # bounded: <= (channels+2)^2
         touch_counts = {

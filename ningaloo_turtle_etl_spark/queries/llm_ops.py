@@ -1,10 +1,10 @@
 """Training-data pipeline queries over ``documents`` / ``embeddings`` —
 dedup, text analysis, similarity search. Since r04 everything here is
 oracle-checked: MinHash/SimHash ride the cross-engine md5 hash family,
-the ANN tiers and semantic dedup serve seed-regenerated or frozen-fixture
-parameters, and the multimodal fake codec replays byte-for-byte in SQL;
-independent Python reference implementations in tests/test_llm_ops.py
-additionally pin recall/planted-pair behavior.
+the trained IVF-PQ loop replays its whole integer-micro trajectory, and
+the multimodal fake codec replays byte-for-byte in SQL; no query reads a
+parameter file. Independent Python reference implementations in
+tests/test_llm_ops.py additionally pin recall/planted-pair behavior.
 """
 
 from __future__ import annotations
@@ -17,12 +17,7 @@ from ningaloo_turtle_etl_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
-from ningaloo_turtle_etl_spark.operators.similarity import (
-    ann_recall_report,
-    cosine_topk,
-    ivf_topk,
-    lsh_topk,
-)
+from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
 from ningaloo_turtle_etl_spark.operators.text import (
     with_fingerprint,
     with_lang_id,
@@ -404,99 +399,10 @@ def simhash_near_dups(spark, sf_dir):
 
 
 from ningaloo_turtle_etl_spark.queries.ann_oracles import (
-    _fixture,
-    ivf_oracle_sql,
-    matryoshka_recall_oracle_sql,
-    matryoshka_topk_oracle_sql,
     ndcg_oracle_sql,
-    ivf_recall_oracle_sql,
-    jl_distortion_oracle_sql,
-    lsh_recall_oracle_sql,
-    lsh_oracle_sql,
-    ivf_pq_oracle_sql,
-    pq_oracle_sql,
-    pq_recall_oracle_sql,
     pq_train_oracle_sql,
-    quantized_oracle_sql,
     trained_ivf_pq_oracle_sql,
 )
-
-
-@register("ann_lsh_topk", lsh_oracle_sql())
-def ann_lsh_topk(spark, sf_dir):
-    """Random-hyperplane LSH ANN (bucket + multiprobe + exact re-rank).
-    Full oracle row since r04: the seeded hyperplanes are data-independent
-    constants, so the DuckDB oracle regenerates them and replays the
-    sign-bucket collisions and re-rank bit-for-bit."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    return lsh_topk(emb, emb.filter(F.col("vec_id") < 5), k=3, bits=6, tables=6)
-
-
-@register("ann_ivf_recall", ivf_recall_oracle_sql(k=10))
-def ann_ivf_recall(spark, sf_dir):
-    """Recall@10 of the IVF index (frozen centroids, nprobe=3) against the
-    brute-force ground truth — the companion acceptance row to
-    ann_lsh_recall, so the two index families publish comparable numbers."""
-    import numpy as np
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5)
-    cents = np.asarray(_fixture("ivf_centroids")["centroids"], dtype=float)
-    approx = ivf_topk(emb, qs, k=10, nprobe=3, centroids=cents)
-    exact = cosine_topk(emb, qs, k=10)
-    return ann_recall_report(approx, exact).orderBy("query_id")
-
-
-@register("ann_lsh_recall", lsh_recall_oracle_sql(k=10))
-def ann_lsh_recall(spark, sf_dir):
-    """Recall@10 of the LSH ANN index against the brute-force ground truth
-    (`operators/similarity.py ann_recall_report`): the acceptance metric an
-    approximate index must publish before replacing the exact scan. Both
-    halves replay in the DuckDB oracle (seeded hyperplanes + brute-force
-    rank), so the recall numbers themselves are hash-proven."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5)
-    approx = lsh_topk(emb, qs, k=10, bits=6, tables=6)
-    exact = cosine_topk(emb, qs, k=10)
-    return ann_recall_report(approx, exact).orderBy("query_id")
-
-
-@register("ann_pq_recall", pq_recall_oracle_sql(k=10, rerank=50))
-def ann_pq_recall(spark, sf_dir):
-    """Recall@10 of the PQ/ADC index (frozen codebooks, 50-candidate exact
-    re-rank) against the exact squared-L2 ground truth — completing the
-    acceptance-metric trio with ann_lsh_recall / ann_ivf_recall. Ground
-    truth is L2, not cosine: PQ ranks by squared-L2, and on unnormalized
-    embeddings the two orderings disagree, so a cosine ground truth would
-    misstate the index's recall. Both halves replay in the DuckDB oracle
-    (LUT chains + brute L2 rank), so the recall numbers are hash-proven."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.quantize import pq_topk
-    from ningaloo_turtle_etl_spark.operators.similarity import l2_topk
-
-    fix = _fixture("pq_codebooks")
-    books = np.asarray(fix["codebooks"], dtype=float)
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5)
-    approx = pq_topk(emb, qs, books, k=10, rerank=50)
-    exact = l2_topk(emb, qs, k=10)
-    return ann_recall_report(approx, exact).orderBy("query_id")
-
-
-@register("ann_ivf_topk", ivf_oracle_sql())
-def ann_ivf_topk(spark, sf_dir):
-    """IVF ANN (centroid cells + nprobe + exact re-rank), blocking against
-    the FROZEN ivf_centroids fixture (deterministic md5-hash-sampled
-    k-means) — argmin assignment, nprobe probing and the re-rank all
-    replay in the DuckDB oracle (r04)."""
-    import numpy as np
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    cents = np.asarray(_fixture("ivf_centroids")["centroids"], dtype=float)
-    return ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=3, nprobe=3, centroids=cents
-    )
 
 
 @register(
@@ -717,86 +623,18 @@ def near_dup_clusters(spark, sf_dir):
     return comp.select(F.col("id").alias("doc_id"), "component")
 
 
-@register("ann_quantized_topk", quantized_oracle_sql())
-def ann_quantized_topk(spark, sf_dir):
-    """Cosine top-k over int8-quantized corpus vectors (4x storage cut;
-    dequantize is a map-only Catalyst expression in the scan projection),
-    with the [lo, hi] ranges from the FROZEN quantizer fixture — the int8
-    round-trip is exact integer arithmetic in both engines, so the full
-    pipeline carries a DuckDB oracle row (r04). Round-trip error and
-    recall >= 0.8 vs full precision stay pinned in tests/test_quantize.py."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.quantize import quantized_cosine_topk
-
-    fix = _fixture("quantizer")
-    lo = np.asarray(fix["lo"], dtype=float)
-    hi = np.asarray(fix["hi"], dtype=float)
-    emb = load_table(spark, "embeddings", sf_dir)
-    return quantized_cosine_topk(emb, emb.filter(F.col("vec_id") < 5), lo, hi, k=3)
-
-
-@register("ann_pq_topk", pq_oracle_sql())
-def ann_pq_topk(spark, sf_dir):
-    """Product-quantization ANN (Jégou et al. 2011) over the FROZEN
-    pq_codebooks fixture: map-side encode to m tinyint codes, ADC
-    shortlist, exact re-rank — all replayed by the DuckDB oracle (the
-    oracle recomputes each LUT entry with the same (q_sub − centroid)²
-    chains numpy fills the LUT with, so the ADC shortlist is
-    bit-identical). Encode parity, recall floors and exact-rerank
-    distances stay pinned in tests/test_quantize.py."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.quantize import pq_topk
-
-    fix = _fixture("pq_codebooks")
-    books = np.asarray(fix["codebooks"], dtype=float)
-    emb = load_table(spark, "embeddings", sf_dir)
-    return pq_topk(emb, emb.filter(F.col("vec_id") < 5), books, k=3, rerank=50)
-
-
-@register("ann_ivf_pq_topk", ivf_pq_oracle_sql(k=3, nprobe=3, shortlist=20))
-def ann_ivf_pq_topk(spark, sf_dir):
-    """The fused three-tier ANN production query (`operators/quantize.py
-    ivf_pq_topk`) — IVF cell shortlist → PQ/ADC re-rank → exact squared-L2
-    final top-k, the serving shape at 10⁹ vectors: the index the corpus
-    carries is (vec_id, cell, m tinyint codes); full vectors are fetched
-    by id only for the exact stage's shortlist·|Q| rows. Both frozen
-    fixtures (ivf_centroids + pq_codebooks) replay in the DuckDB oracle,
-    so every tier's cut — probed cells, ADC shortlist, exact ranks — is
-    hash-proven end-to-end; the recall floor vs brute-force L2 is pinned
-    in tests/test_quantize.py."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.quantize import ivf_pq_topk
-
-    cents = np.asarray(_fixture("ivf_centroids")["centroids"], dtype=float)
-    books = np.asarray(_fixture("pq_codebooks")["codebooks"], dtype=float)
-    emb = load_table(spark, "embeddings", sf_dir)
-    return ivf_pq_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 5),
-        cents,
-        books,
-        k=3,
-        nprobe=3,
-        shortlist=20,
-    )
-
-
 @register("pq_train_codebooks", pq_train_oracle_sql(4, 4, 2, 64))
 def pq_train_codebooks(spark, sf_dir):
     """DISTRIBUTED PQ codebook training (`operators/quantize.py
-    pq_train_codebooks_lloyd`) — the production train stage the served
-    PQ tiers consume (r11 verdict item 3: the frozen-fixture gap). Per
-    iteration: ONE full-corpus scan with all m·k integer distance
-    expressions inlined, ONE map-side-combined aggregate to
+    pq_train_codebooks_lloyd`) — the train stage of the IVF-PQ loop,
+    audited on its own. Per iteration: ONE full-corpus scan evaluating
+    all m·k integer distances in one Arrow batch stage, ONE
+    map-side-combined aggregate to
     m·k·(dim/m+1) cells; driver state is m·k·(dim/m) ints. The audit
     row carries n_vecs + inertia from the final assignment AND the
     trained centroid's L1 norm, so the codebook values themselves are
     hash-proven; the unrolled DuckDB oracle replays the whole integer-
-    micro trajectory bit-for-bit (the kmeans_embedding_clusters
-    convention at subvector grain)."""
+    micro trajectory bit-for-bit."""
     from ningaloo_turtle_etl_spark.operators.quantize import (
         pq_train_codebooks_lloyd,
     )
@@ -828,9 +666,9 @@ def ann_trained_ivf_pq_topk(spark, sf_dir):
     trains the IVF coarse centroids (full-vector grain) and the PQ
     codebooks (subvector grain) on the corpus itself, then the trained
     parameters drive the three-tier serving shape — cell probe → ADC
-    shortlist → exact re-rank — with NO frozen fixture anywhere (r11
-    verdict item 3). The entire loop is integer micro-unit arithmetic,
-    so the unrolled DuckDB oracle replays training trajectories, cell
+    shortlist → exact re-rank — with no parameter file anywhere. The
+    entire loop is integer micro-unit arithmetic, so the unrolled
+    DuckDB oracle replays training trajectories, cell
     argmins, PQ codes, ADC tables and the exact ranks bit-for-bit; the
     recall floor vs brute-force L2 is pinned in tests/test_quantize.py."""
     from ningaloo_turtle_etl_spark.operators.quantize import (
@@ -1825,78 +1663,6 @@ def q_bigram_lm_scores(spark, sf_dir):
         "text", F.lower(F.col("text"))
     )
     return bigram_lm_scores(docs, lambda_=0.7)
-
-
-def _semantic_dedup_oracle_sql(threshold: float = 0.4) -> str:
-    """DuckDB SQL replicating semantic_dedup over the frozen centroid
-    fixture end-to-end: argmin-cell assignment against literal centroids
-    (list_position of list_min ties to the lowest index, matching Spark's
-    (dist, idx) struct sort), within-cell cosine pairs, then connected
-    components as a recursive min-reachable-id CTE, keeping vec_id ==
-    component. Float parity holds because both engines sum distance/dot
-    terms in element order over the same doubles."""
-    fix = _fixture("semantic_centroids")
-    dist_exprs = ", ".join(
-        "list_sum(list_transform(list_zip(v, ["
-        + ", ".join(repr(float(x)) for x in c)
-        + "]::DOUBLE[]), x -> (x[1]-x[2])*(x[1]-x[2])))"
-        for c in fix["centroids"]
-    )
-    dot = (
-        "list_sum(list_transform(list_zip(a.v, b.v), x -> x[1]*x[2]))"
-    )
-    normsq = "list_sum(list_transform({0}.v, x -> x*x))"
-    return f"""
-    WITH RECURSIVE emb AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, v, label,
-               list_position(dists, list_min(dists)) - 1 AS cell
-        FROM (SELECT vec_id, v, label, [{dist_exprs}] AS dists FROM emb)
-    ),
-    pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM assigned a JOIN assigned b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE {dot} / (sqrt({normsq.format('a')}) * sqrt({normsq.format('b')}))
-              >= {threshold}
-    ),
-    undirected AS (
-        SELECT id_a AS s, id_b AS d FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, r) AS (
-        SELECT vec_id, vec_id FROM emb
-        UNION
-        SELECT e.d, reach.r FROM reach JOIN undirected e ON e.s = reach.id
-    ),
-    comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id)
-    SELECT emb.vec_id, emb.label
-    FROM emb JOIN comp ON emb.vec_id = comp.id
-    WHERE emb.vec_id = comp.component
-    """
-
-
-@register("semantic_dedup", _semantic_dedup_oracle_sql())
-def semantic_dedup_query(spark, sf_dir):
-    """SemDeDup-style semantic dedup over the embeddings table, blocking
-    against the FROZEN centroid fixture (deterministic md5-hash-sampled
-    k-means, scripts/fit_fixtures.py): argmin-cell assignment,
-    within-cell exact cosine pairs at ≥0.4, connected components, keep
-    min-id per cluster. Full oracle row since r04 — fixed literal centroids
-    make cell assignment plain SQL, and the component labeling replays as a
-    recursive min-reachable-id CTE. The n_centroids=1 ≡ exact all-pairs
-    property stays pinned in tests/test_llm_ops.py."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.dedup import semantic_dedup
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    cents = np.asarray(_fixture("semantic_centroids")["centroids"], dtype=float)
-    kept = semantic_dedup(emb, threshold=0.4, centroids=cents)
-    return kept.select("vec_id", "label")
 
 
 @register(
@@ -3530,70 +3296,6 @@ def q_boilerplate_removal(spark, sf_dir):
     )
 
 
-def _silhouette_oracle_sql() -> str:
-    """DuckDB SQL replicating cell_silhouette over the frozen centroid
-    fixture: squared distances in element order (same doubles as Spark's
-    zip_with fold), argmin cell via list_position(list_min) (ties to the
-    lowest index), nearest-other via min over the argmin-excised slices,
-    then the per-cell mean fold."""
-    fix = _fixture("semantic_centroids")
-    dist_exprs = ", ".join(
-        "list_sum(list_transform(list_zip(v, ["
-        + ", ".join(repr(float(x)) for x in c)
-        + "]::DOUBLE[]), x -> (x[1]-x[2])*(x[1]-x[2])))"
-        for c in fix["centroids"]
-    )
-    k = len(fix["centroids"])
-    return f"""
-    WITH emb AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    d AS (SELECT vec_id, [{dist_exprs}] AS dists FROM emb),
-    a AS (
-        SELECT vec_id, dists, list_min(dists) AS a2,
-               list_position(dists, list_min(dists)) - 1 AS cell
-        FROM d
-    ),
-    b AS (
-        SELECT vec_id, cell, a2,
-               list_min(list_concat(dists[1:cell],
-                                    dists[cell + 2:{k}])) AS b2
-        FROM a
-    ),
-    s AS (
-        SELECT cell, a2,
-               CASE WHEN greatest(sqrt(a2), sqrt(b2)) > 0
-                    THEN (sqrt(b2) - sqrt(a2))
-                         / greatest(sqrt(a2), sqrt(b2))
-                    ELSE 0.0 END AS sil
-        FROM b
-    )
-    SELECT CAST(cell AS INT) AS cell,
-           CAST(COUNT(*) AS BIGINT) AS n_vectors,
-           ROUND(AVG(sil), 6) AS mean_silhouette,
-           ROUND(AVG(sqrt(a2)), 6) AS mean_intra_dist
-    FROM s GROUP BY 1
-    """
-
-
-@register("semantic_cell_silhouette", _silhouette_oracle_sql())
-def q_semantic_cell_silhouette(spark, sf_dir):
-    """Per-cell centroid silhouette for the frozen SemDeDup/IVF blocking
-    (`operators/similarity.py cell_silhouette`): which cells leak
-    near-dups across their boundary / under-probe in IVF — the raise-
-    n_centroids-or-nprobe diagnostic, computed in one map-only pass +
-    one 16-cell aggregate."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        cell_silhouette,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    cents = np.asarray(_fixture("semantic_centroids")["centroids"], dtype=float)
-    return cell_silhouette(emb, cents)
-
-
 @register(
     "source_quality_scorecard",
     rf"""
@@ -3950,61 +3652,6 @@ def image_ahash_near_dups(spark, sf_dir):
     return ahash_near_dup_pairs(hashes, max_hamming=8).orderBy(
         "id_a", "id_b"
     )
-
-
-@register(
-    "jl_distortion_pairs",
-    jl_distortion_oracle_sql(out_dim=16, seed=11, max_id=40),
-)
-def jl_distortion_pairs(spark, sf_dir):
-    """Johnson-Lindenstrauss distance-preservation audit
-    (`operators/similarity.py jl_project`, 64 -> 16 dims, seeded ±1/√k
-    signs): every pairwise L2 distance among the first 40 vectors in
-    original and projected space with the preservation ratio — the
-    acceptance harness for choosing out_dim before the 4x-cheaper
-    projected vectors feed IVF/PQ. Projection is map-only (one literal
-    fold per output coordinate, zero shuffles at any corpus size); the
-    bounded pairwise audit is acceptance-path only, like the ANN recall
-    ground truths."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        _as_double,
-        jl_project,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 40)
-    proj = jl_project(emb, out_dim=16, seed=11)
-    both = emb.select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    ).join(proj, "vec_id")
-    a = both.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("jl").alias("ja"),
-    )
-    b = both.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("jl").alias("jb"),
-    )
-    sq = lambda x, y: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-    )
-    pairs = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
-    d_orig = sq(F.col("va"), F.col("vb"))
-    d_proj = sq(F.col("ja"), F.col("jb"))
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.round(d_orig, 6).alias("d_orig"),
-        F.round(d_proj, 6).alias("d_proj"),
-        F.round(
-            F.when(d_orig > 0, d_proj / d_orig), 6
-        ).alias("ratio"),
-    ).orderBy("id_a", "id_b")
 
 
 @register(
@@ -4383,70 +4030,6 @@ def q_kneser_ney_lm_scores(spark, sf_dir):
     return kneser_ney_bigram_scores(docs, discount=0.75)
 
 
-def _rbo_oracle_sql(p: float = 0.9, depth: int = 10) -> str:
-    """LSH-vs-exact RBO oracle: both ranking halves are the existing ANN
-    oracles; each shared (query, item) contributes the literal
-    coefficient c_{max(ra, rb)} — the same doubles the Spark side embeds
-    (rbo_coefficients)."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        rbo_coefficients,
-    )
-    from ningaloo_turtle_etl_spark.queries.ann_oracles import (
-        brute_oracle_sql,
-        lsh_oracle_sql,
-    )
-
-    coeffs = rbo_coefficients(p, depth)
-    carr = "[" + ", ".join(repr(float(c)) for c in coeffs) + "]"
-    return f"""
-    WITH approx AS ({lsh_oracle_sql(k=depth)}),
-    exact AS ({brute_oracle_sql(k=depth)}),
-    shared AS (
-        SELECT a.query_id,
-               ({carr}::DOUBLE[])[greatest(a.rank, e.rank)] AS c
-        FROM approx a JOIN exact e
-          ON a.query_id = e.query_id AND a.vec_id = e.vec_id
-        WHERE a.rank <= {depth} AND e.rank <= {depth}
-    ),
-    per_q AS (
-        SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_shared,
-               SUM(c) AS s
-        FROM shared GROUP BY query_id
-    )
-    SELECT q.query_id,
-           CAST(COALESCE(n_shared, 0) AS BIGINT) AS n_shared,
-           ROUND({1.0 - p!r} * COALESCE(s, 0.0), 6) AS rbo
-    FROM (SELECT DISTINCT query_id FROM approx) q
-    LEFT JOIN per_q ON q.query_id = per_q.query_id
-    ORDER BY q.query_id
-    """
-
-
-@register("ann_lsh_rbo", _rbo_oracle_sql(0.9, 10))
-def ann_lsh_rbo(spark, sf_dir):
-    """Top-weighted ranking agreement of the LSH ANN index against the
-    exact cosine ranking (`operators/similarity.py rank_biased_overlap`,
-    p=0.9, depth=10): the acceptance metric recall@k cannot express —
-    recall counts hits anywhere in the top-k equally, while RBO pays
-    more for agreement at the TOP, exactly where a downstream re-ranking
-    budget spends. Completes the ANN acceptance suite (recall trio +
-    rank-order agreement); coefficients are shared literals so the
-    number is hash-proven."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        cosine_topk,
-        lsh_topk,
-        rank_biased_overlap,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5)
-    approx = lsh_topk(emb, qs, k=10, bits=6, tables=6)
-    exact = cosine_topk(emb, qs, k=10)
-    return rank_biased_overlap(approx, exact, p=0.9, depth=10).orderBy(
-        "query_id"
-    )
-
-
 @register(
     "zorder_layout_buckets",
     """
@@ -4659,96 +4242,6 @@ def ppjoin_jaccard_pairs(spark, sf_dir):
     return ppjoin_pairs(docs, threshold=0.5).orderBy("id_a", "id_b")
 
 
-def _kmeans_oracle_sql(k: int = 8, iterations: int = 3, dim: int = 64) -> str:
-    """Unrolled Lloyd oracle (the BPE merge-loop chaining trick): one
-    assign→sum→recenter CTE triple per iteration. Every number is exact
-    integer micro arithmetic — quantize once, integer squared-distance
-    sums, exact half-up recentering floor(s/n + 1/2) = (2s+n) // (2n)
-    via the explicit floor-div idiom (r14, matching the engine and the
-    trained-ANN oracle; the old CAST(s AS DOUBLE)/n form was only exact
-    below the 2^53 cliff), on HUGEINT sums so that 2s cannot overflow —
-    so the fit replays bit-for-bit."""
-    d2 = (
-        f"list_sum(list_transform(range(1, {dim + 1}), "
-        "i -> (v.vm[i] - c.c[i]) * (v.vm[i] - c.c[i])))"
-    )
-    parts = [
-        f"""
-    vm AS (
-        SELECT vec_id AS id,
-               list_transform(embedding,
-                   x -> CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT)) AS vm
-        FROM embeddings
-    ),
-    c0 AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY id) - 1 AS cluster, vm AS c
-        FROM (SELECT id, vm FROM vm ORDER BY id LIMIT {k})
-    )"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    a{t} AS (
-        SELECT id, vm, cluster, dist,
-               ROW_NUMBER() OVER (PARTITION BY id
-                                  ORDER BY dist, cluster) AS rn
-        FROM (SELECT v.id, v.vm, c.cluster, {d2} AS dist
-              FROM vm v CROSS JOIN c{t - 1} c)
-    ),
-    s{t} AS (
-        SELECT cluster, i, CAST(SUM(vm[i]) AS HUGEINT) AS s,
-               CAST(COUNT(*) AS HUGEINT) AS n
-        FROM a{t}, range(1, {dim + 1}) t(i)
-        WHERE rn = 1 GROUP BY cluster, i
-    ),
-    c{t} AS (
-        SELECT p.cluster, COALESCE(u.c, p.c) AS c
-        FROM c{t - 1} p LEFT JOIN (
-            SELECT cluster,
-                   list(CAST((2*s + n
-                              - (((2*s + n) % (2*n)) + 2*n) % (2*n))
-                             // (2*n) AS BIGINT)
-                        ORDER BY i) AS c
-            FROM s{t} GROUP BY cluster
-        ) u USING (cluster)
-    )"""
-        )
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    af AS (
-        SELECT id, cluster, dist,
-               ROW_NUMBER() OVER (PARTITION BY id
-                                  ORDER BY dist, cluster) AS rn
-        FROM (SELECT v.id, c.cluster, {d2} AS dist
-              FROM vm v CROSS JOIN c{iterations} c)
-    )
-    SELECT CAST(cluster AS INT) AS cluster,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           ROUND(CAST(SUM(dist) AS BIGINT) / 1e12, 6) AS inertia
-    FROM af WHERE rn = 1 GROUP BY cluster ORDER BY cluster"""
-    )
-
-
-@register("kmeans_embedding_clusters", _kmeans_oracle_sql(8, 3, 64))
-def kmeans_embedding_clusters(spark, sf_dir):
-    """Distributed Lloyd k-means over the embeddings table
-    (`operators/similarity.py kmeans_lloyd`, k=8, 3 iterations,
-    smallest-id init): the full-corpus clustering stage SemDeDup /
-    diversity sampling / IVF builds sit on — never sampled, one map-side
-    scan per assignment, one combined aggregate per update, all exact
-    integer micro arithmetic. The oracle unrolls all three
-    assign→sum→recenter rounds into chained CTEs and replays the fit
-    bit-for-bit (reference analog: the reference has no clustering; this
-    is the large-corpus extension its spatial PCNM dedup gestures at,
-    `spatial_modelling.Rmd:196-215`)."""
-    from ningaloo_turtle_etl_spark.operators.similarity import kmeans_lloyd
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    return kmeans_lloyd(emb, k=8, iterations=3).orderBy("cluster")
-
-
 @register(
     "good_turing_token_counts",
     rf"""
@@ -4945,89 +4438,18 @@ def rake_top_phrases(spark, sf_dir):
     return rake_keywords(docs, top_n=50, max_phrase_len=4)
 
 
-def _pca_power_oracle_sql(iterations: int = 3, d: int = 64) -> str:
-    """Unrolled matrix-free power-iteration oracle (the kmeans/MF
-    chaining pattern) over the coordinate grain (embeddings × range(d)):
-    per round one vid-keyed dot CTE and one j-keyed accumulate CTE, with
-    every accumulation term rounded to integer MICROS before its
-    exact-integer SUM, the covariance 1/n applied before the norm, and
-    norm/normalize arithmetic in plain double — mirroring
-    `operators/similarity.py pca_power_component` token-for-token
-    (floor(x+0.5) for the non-negative squared terms, exactly the
-    operator's driver-side helper)."""
-    parts = [
-        f"""
-    coord AS MATERIALIZED (
-        SELECT vec_id AS vid, CAST(j AS BIGINT) AS j,
-               CAST(round(CAST(embedding[j] AS DOUBLE) * 1e6) AS BIGINT)
-                   AS xm
-        FROM embeddings, range(1, {d + 1}) t(j)
-    ),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
-    mu AS (
-        SELECT j, CAST((2*s + n - (((2*s + n) % (2*n)) + 2*n) % (2*n))
-                       // (2*n) AS BIGINT) AS mu_m
-        FROM (SELECT j, CAST(SUM(xm) AS HUGEINT) AS s,
-                     CAST(n AS HUGEINT) AS n
-              FROM coord CROSS JOIN nn GROUP BY j, n)
-    ),
-    cent AS MATERIALIZED (
-        SELECT vid, coord.j, (xm - mu_m) / 1e6 AS c
-        FROM coord JOIN mu ON coord.j = mu.j
-    ),
-    v0 AS (
-        SELECT j, CASE WHEN j = 1 THEN CAST(1.0 AS DOUBLE)
-                       ELSE CAST(0.0 AS DOUBLE) END AS v
-        FROM mu
-    )"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    s{t} AS (
-        SELECT vid,
-               CAST(SUM(CAST(round(c * v * 1e6) AS BIGINT)) AS BIGINT) AS g
-        FROM cent JOIN v{t - 1} USING (j) GROUP BY vid
-    ),
-    sv{t} AS (SELECT vid, g / 1e6 AS sv FROM s{t}),
-    w{t} AS (
-        SELECT j,
-               CAST(SUM(CAST(round(sv * c * 1e6) AS BIGINT)) AS BIGINT)
-                   AS gw
-        FROM cent JOIN sv{t} USING (vid) GROUP BY j
-    ),
-    wd{t} AS (SELECT j, (gw / 1e6) / nn.n AS wd FROM w{t} CROSS JOIN nn),
-    ns{t} AS (
-        SELECT CAST(SUM(CAST(floor(wd * wd * 1e6 + 0.5) AS BIGINT))
-                    AS BIGINT) AS nsq
-        FROM wd{t}
-    ),
-    v{t} AS (
-        SELECT j, wd / sqrt(nsq / 1e6) AS v
-        FROM wd{t} CROSS JOIN ns{t}
-    )"""
-        )
-    n = iterations
-    return (
-        "WITH "
-        + "".join(parts)
-        + f"""
-    SELECT CAST(j AS INT) AS dim_idx, ROUND(v, 6) AS loading,
-           ROUND(sqrt(nsq / 1e6), 6) AS eigenvalue
-    FROM v{n} CROSS JOIN ns{n}
-    ORDER BY dim_idx"""
-    )
-
-
 def _pca_power_components_oracle_sql(
     p: int = 2, iterations: int = 3, d: int = 64
 ) -> str:
-    """Unrolled DEFLATED power-iteration oracle: the single-component
-    chain (`_pca_power_oracle_sql`) repeated per component, with each
-    later component's per-round wd deflated by every finished
-    component — wd − (λ_m·(dot_m/1e6))·v_m[j] in component order, the
-    dot quantized to exact integer micros — token-for-token the driver
-    arithmetic in `operators/similarity.py pca_power_components`."""
+    """Unrolled DEFLATED power-iteration oracle over the coordinate grain
+    (embeddings × range(d)): per component and round one vid-keyed dot
+    CTE and one j-keyed accumulate CTE, every accumulation term rounded
+    to integer MICROS before its exact-integer SUM, the covariance 1/n
+    applied before the norm, and each later component's per-round wd
+    deflated by every finished component — wd − (λ_m·(dot_m/1e6))·v_m[j]
+    in component order, the dot quantized to exact integer micros —
+    token-for-token the driver arithmetic in `operators/similarity.py
+    pca_power_components`."""
     parts = [
         f"""
     coord AS MATERIALIZED (
@@ -5154,29 +4576,13 @@ def pca_power_components_query(spark, sf_dir):
     return pca_power_components(emb, n_components=2, iterations=3)
 
 
-@register("pca_power_component", _pca_power_oracle_sql(3, 64))
-def pca_power_component_query(spark, sf_dir):
-    """Top principal component of the embedding corpus by matrix-free
-    power iteration (`operators/similarity.py pca_power_component`, 3
-    rounds, v0 = e_1): the covariance never materializes — each round is
-    two coordinate-grain passes and a d-row normalize, the shape that
-    holds at any dimension and corpus size. Integer-micro coordinates,
-    exact (2s + n) // (2n) mean, nano-quantized accumulation terms: the whole
-    trajectory replays bit-for-bit in the unrolled oracle."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        pca_power_component,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    return pca_power_component(emb, iterations=3)
-
-
 def _mf_gd_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled rank-1 matrix-factorization GD oracle (the kmeans
-    chaining pattern): per round one joined-error CTE feeds two mean-
-    gradient CTEs (per-pair terms rounded to integer nanos before the
-    exact-integer SUM) and two factor-step CTEs whose double arithmetic
-    mirrors `operators/similarity.py mf_gd_factors` token-for-token.
+    """Unrolled rank-1 matrix-factorization GD oracle (the Lloyd
+    chaining pattern of ann_oracles._lloyd_chain_sql): per round one
+    joined-error CTE feeds two mean-gradient CTEs (per-pair terms
+    rounded to integer nanos before the exact-integer SUM) and two
+    factor-step CTEs whose double arithmetic mirrors
+    `operators/similarity.py mf_gd_factors` token-for-token.
     lr = 0.0625 (binary-exact literal)."""
     parts = [
         """
@@ -5389,50 +4795,6 @@ def ranking_ndcg_eval(spark, sf_dir):
     return ranking_metrics(ranked, emb, k=10)
 
 
-@register(
-    "ann_hamming_topk",
-    """
-    WITH codes AS (
-        SELECT vec_id,
-               CAST(list_sum(list_transform(generate_series(0, 31),
-                   i -> CASE WHEN embedding[i + 1] > 0
-                             THEN 1::BIGINT << i
-                             ELSE 0::BIGINT END)) AS BIGINT) AS w0,
-               CAST(list_sum(list_transform(generate_series(32, 63),
-                   i -> CASE WHEN embedding[i + 1] > 0
-                             THEN 1::BIGINT << (i - 32)
-                             ELSE 0::BIGINT END)) AS BIGINT) AS w1
-        FROM embeddings
-    ),
-    pairs AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               CAST(bit_count(xor(c.w0, q.w0))
-                    + bit_count(xor(c.w1, q.w1)) AS BIGINT) AS hamming
-        FROM codes c, codes q
-        WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, vec_id, hamming, rank FROM (
-        SELECT query_id, vec_id, hamming,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY hamming, vec_id) AS INT)
-                   AS rank
-        FROM pairs
-    ) WHERE rank <= 10
-    """,
-)
-def ann_hamming_topk(spark, sf_dir):
-    """Binary-quantized ANN (Charikar sign-bit codes, STOC'02): Hamming
-    top-10 for the first eight query vectors over 32-bit-word sign
-    codes (`operators/quantize.py sign_bit_words / hamming_topk`) — the
-    coarsest, cheapest tier of the quantization ladder (1 bit/dim;
-    XOR+popcount per pair). Both engines build the identical BIGINT
-    words, so the distances are exact integers."""
-    from ningaloo_turtle_etl_spark.operators.quantize import hamming_topk
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    return hamming_topk(emb, emb.filter(F.col("vec_id") < 8), dim=64, k=10)
-
-
 def _als_rank1_oracle_sql(iterations: int = 3) -> str:
     """Unrolled rank-1 ALS oracle: per round one user half-solve and one
     item half-solve CTE — per-rating numerator/denominator terms rounded
@@ -5625,105 +4987,6 @@ def audio_wav_features(spark, sf_dir):
         F.round("e2", 6).alias("e2"),
         F.round("e3", 6).alias("e3"),
     ).orderBy("media_id")
-
-
-@register(
-    "ann_matryoshka_recall",
-    matryoshka_recall_oracle_sql(k=10, dims=(16, 32)),
-)
-def ann_matryoshka_recall(spark, sf_dir):
-    """Matryoshka truncation evaluation (Kusupati et al. 2022): recall@10
-    of prefix-truncated cosine top-k (first 16 and first 32 of 64 dims)
-    against the full-dimension exact neighbors — the acceptance metric
-    for serving shortened embeddings (4x/2x cheaper dot products and
-    memory) from the same stored vectors, next to the LSH/IVF/PQ recall
-    rows. Truncation is a zero-copy list slice; both halves replay in
-    the DuckDB oracle."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        ann_recall_report,
-        cosine_topk,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5)
-    exact = cosine_topk(emb, qs, k=10)
-    outs = []
-    for d in (16, 32):
-        trunc = lambda df: df.select(  # noqa: E731
-            "vec_id", F.slice("embedding", 1, d).alias("embedding")
-        )
-        approx = cosine_topk(trunc(emb), trunc(qs), k=10)
-        outs.append(
-            ann_recall_report(approx, exact).select(
-                F.lit(d).alias("trunc_dim"),
-                "query_id",
-                "n_exact",
-                "n_hit",
-                "recall_at_k",
-            )
-        )
-    return outs[0].unionByName(outs[1]).orderBy("trunc_dim", "query_id")
-
-
-@register(
-    "ann_matryoshka_topk",
-    matryoshka_topk_oracle_sql(k=10, d_short=16, shortlist=50),
-)
-def ann_matryoshka_topk(spark, sf_dir):
-    """Fused two-stage Matryoshka ANN serving: prefix-16 cosine
-    SHORTLIST (4x-cheaper dot products over the same stored vectors —
-    no index to build, the Matryoshka adaptive-retrieval pattern) then
-    EXACT full-dimension re-rank of the 50-candidate shortlist. The
-    production sibling of ann_ivf_pq_topk with truncation instead of
-    quantization as the cheap tier; full vectors touch only shortlist
-    rows. Both stages replay in the oracle."""
-    from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5)
-    t16 = lambda df: df.select(  # noqa: E731
-        "vec_id", F.slice("embedding", 1, 16).alias("embedding")
-    )
-    short = cosine_topk(t16(emb), t16(qs), k=50).select(
-        "query_id", "vec_id"
-    )
-    # full vectors are fetched BY ID for shortlist rows only — the
-    # ivf_pq_topk serving convention
-    cand = short.join(emb, on="vec_id").select(
-        "query_id", "vec_id", "embedding"
-    )
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        _as_double,
-        _dot,
-        _norm,
-    )
-
-    q = qs.select(
-        F.col("vec_id").alias("query_id"),
-        _as_double(F.col("embedding")).alias("qv"),
-    ).withColumn("q_norm", _norm(F.col("qv")))
-    scored = (
-        cand.join(F.broadcast(q), on="query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _dot(_as_double(F.col("embedding")), F.col("qv"))
-                / (_norm(_as_double(F.col("embedding"))) * F.col("q_norm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 10)
-        .orderBy("query_id", "rank")
-    )
 
 
 @register(

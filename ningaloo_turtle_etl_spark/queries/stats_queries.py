@@ -150,9 +150,9 @@ def rda_residual_stats(spark, sf_dir):
     )
 
 
-# Frozen PCNM1 fixture for the oracle (VERDICT r05 item 3, the same frozen-
-# fixture pattern as the semantic-dedup centroids / PQ codebooks / IVF
-# centroids): the query's coordinate universe is FIXED by construction —
+# Frozen PCNM1 fixture for the oracle (VERDICT r05 item 3; an oracle-side
+# literal, the query itself reads no parameters): the query's coordinate
+# universe is FIXED by construction —
 # c_nationkey ∈ 0..24 → 25 distinct (nationkey%5, nationkey%7) pairs at every
 # scale factor — so the 25×25 principal-coordinate eigenproblem has one
 # deterministic answer, reproduced here at full float precision by the exact

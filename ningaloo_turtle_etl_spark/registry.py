@@ -69,11 +69,8 @@ PRIORITY: list[str] = [
     # r13 (r12 verdict item 1): the closed ANN train→serve loop runs
     # under the real driver harness — distributed per-subspace Lloyd
     # PQ-codebook training and the fused train→encode→serve three-tier
-    # query with NO frozen fixture anywhere. They supersede the
-    # frozen-fixture ann_ivf_pq_topk (demoted; the fixture-served
-    # three-tier shape stays oracle-swept by pytest + the supplement
-    # artifacts, and its serving tiers are exercised by the trained
-    # path end-to-end).
+    # query with no parameter file anywhere. They are the package's one
+    # IVF-PQ path: the fixture-served tiers they replaced are retired.
     "pq_train_codebooks",
     "ann_trained_ivf_pq_topk",
     "dp_event_type_counts",
@@ -96,13 +93,11 @@ PRIORITY: list[str] = [
     # (the lag/rank window shape stays proven in-window by
     # remigration_lag; O2/O3 TakeOrdered stays proven by slice_topk).
     "ppjoin_jaccard_pairs",
-    # r13: kmeans_embedding_clusters demoted to free the second slot for
-    # the trained-ANN pair — the distributed-Lloyd integer-micro
-    # unrolled-oracle shape it was promoted to prove (r10) is now
-    # proven in-window at STRICTLY finer grain by pq_train_codebooks
-    # (the same Lloyd machinery per subvector, same exact-centroid
-    # DuckDB replay); still oracle-swept by pytest + the supplement
-    # artifacts.
+    # r13: the full-vector Lloyd k-means slot went to the trained-ANN
+    # pair — the distributed-Lloyd integer-micro unrolled-oracle shape
+    # is proven in-window at subvector grain by pq_train_codebooks (the
+    # same Lloyd machinery, same exact-centroid DuckDB replay; m=1 is
+    # the full-vector case).
     # Promoted r11 (verdict item 2, continuing the rotation): the window
     # proves an r10 family directly — SymSpell verification-free
     # delete-neighborhood blocking, carrying this round's insdel
@@ -133,14 +128,6 @@ PRIORITY: list[str] = [
     "slice_topk",
     "timestamp_pipeline",
     # ---- 50-slot driver window ends here ----
-    # Demoted r13 (slots freed for pq_train_codebooks /
-    # ann_trained_ivf_pq_topk): the frozen-fixture fused serve is
-    # superseded by the trained path, which exercises the same
-    # cell-probe → ADC → exact-rerank tiers; Lloyd's unrolled-oracle
-    # shape stays in-window via pq_train_codebooks. Both remain
-    # oracle-swept by pytest + the supplement artifacts.
-    "ann_ivf_pq_topk",
-    "kmeans_embedding_clusters",
     # Demoted r12 (slots freed for pca_power_components /
     # fellegi_sunter_part_weights): blocked-linkage stays in-window via
     # symspell_customer_pairs + fellegi_sunter_part_weights; A10's
@@ -148,12 +135,10 @@ PRIORITY: list[str] = [
     # Both remain oracle-swept by pytest + the supplement artifacts.
     "fuzzy_part_pairs",
     "pairwise_site_distances",
-    # Demoted r11 (slots freed for ann_ivf_pq_topk /
-    # symspell_customer_pairs): J1's left-equi shape stays in-window via
-    # join_left_composite + join_inner_project; PQ acceptance stays
-    # pinned by the fused ann_ivf_pq_topk window row plus pytest.
+    # Demoted r11 (slot freed for symspell_customer_pairs): J1's
+    # left-equi shape stays in-window via join_left_composite +
+    # join_inner_project.
     "join_left_single",
-    "ann_pq_recall",
     # Demoted r09 (slot freed for ppjoin_jaccard_pairs): the lag/rank
     # window shape stays window-covered by remigration_lag, TakeOrdered
     # by slice_topk; still oracle-swept by pytest + supplement artifacts.
@@ -171,8 +156,6 @@ PRIORITY: list[str] = [
     "sql_entry_point",
     "minhash_near_dups",
     "simhash_near_dups",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
     # Displaced by round-2 window consolidation (merged twins hold the
     # driver rows); still registered and oracle-swept by pytest.
     "text_token_stats",
@@ -186,7 +169,6 @@ PRIORITY: list[str] = [
     "asof_join_rates_forward",
     "sketch_profile",
     "corpus_clean_pipeline",
-    "ann_quantized_topk",
     "geo_distance_stats",
     "geo_nearest_site",
     "near_dup_clusters",
@@ -201,7 +183,6 @@ PRIORITY: list[str] = [
     "chunk_dedup",
     "embedding_norm_stats",
     "bloom_decontaminate",
-    "semantic_dedup",
     "incremental_dedup",
     "lm_quality_scores",
     "duplicate_passage_removal",
@@ -210,7 +191,6 @@ PRIORITY: list[str] = [
     "stratified_sample_exact",
     "corpus_drift_metrics",
     "dsir_importance_select",
-    "ann_pq_topk",
     "weighted_sample_topn",
     "winsorized_value_stats",
     "tfidf_top_terms",
@@ -277,7 +257,6 @@ PRIORITY: list[str] = [
     "contrastive_negative_pairs",
     "spatial_hotspot_clusters",
     "event_trigram_sequences",
-    "semantic_cell_silhouette",
     "leakage_safe_split",
     "source_quality_scorecard",
     "embedding_drift_by_label",
@@ -285,8 +264,6 @@ PRIORITY: list[str] = [
     "rolling_value_p95",
     "annotator_agreement",
     "rank_fusion_select",
-    "ann_lsh_recall",
-    "ann_ivf_recall",
     "k_anonymity_events",
     "assoc_rules_copurchase",
     # r07 generalization-ladder k-anonymity release, full oracle
@@ -311,8 +288,6 @@ PRIORITY: list[str] = [
     "table_digest_by_flag",
     # r08 Kneser-Ney bigram LM scoring, full oracle
     "kneser_ney_lm_scores",
-    # r08 rank-biased overlap ANN acceptance metric, full oracle
-    "ann_lsh_rbo",
     # r08 Markov removal-effect attribution, full oracle
     "markov_attribution_channels",
     # r08 Z-order clustering layout, full oracle
@@ -325,10 +300,8 @@ PRIORITY: list[str] = [
     "first_event_per_user",
     # r07 perceptual-hash image near-dups (aHash + banded hamming LSH), full oracle
     "image_ahash_near_dups",
-    # r07 Johnson-Lindenstrauss projection distortion audit, full oracle
-    "jl_distortion_pairs",
-    # Demoted r10 (slot freed for kmeans_embedding_clusters): the
-    # Jaccard-pair near-dup shape stays window-covered by
+    # Demoted r10 (slot freed for the Lloyd k-means row, itself rotated
+    # out r13): the Jaccard-pair near-dup shape stays window-covered by
     # ppjoin_jaccard_pairs; still oracle-swept by pytest + supplement.
     "ngram_jaccard_near_dups",
     # r09 Good-Turing count-of-counts re-estimation (trigram grain)
@@ -362,10 +335,8 @@ PRIORITY: list[str] = [
     # r10 retrieval evaluation: NDCG@10 / precision / MRR with shared
     # integer-nano discount literals (no engine calls log2)
     "ranking_ndcg_eval",
-    # r10 matrix-free PCA power iteration (covariance never materialized;
-    # unrolled nano-exact trajectory oracle)
-    "pca_power_component",
-    # (pca_power_components promoted into the r12 driver window above)
+    # (r10's single-component PCA is pca_power_components at p=1, in
+    # the r12 driver window above)
     # r11: greedy k-center coreset (farthest-point traversal, the
     # diversity selector; unrolled exact-integer-distance oracle)
     "kcenter_coreset_select",
@@ -383,12 +354,6 @@ PRIORITY: list[str] = [
     # r11: length-3 sequential-pattern support (GSP/PrefixSpan contract;
     # greedy earliest-occurrence containment on sorted time arrays)
     "sequential_patterns_users",
-    # r11: Matryoshka prefix-truncation recall (serve shorter embeddings
-    # from the same vectors; acceptance metric next to LSH/IVF/PQ rows)
-    "ann_matryoshka_recall",
-    # r11: fused two-stage Matryoshka serving (prefix-16 shortlist →
-    # exact full-dim rerank; truncation as the cheap tier)
-    "ann_matryoshka_topk",
     # r11: rendezvous (HRW) shard placement audit with the n->n+1
     # minimal-disruption expansion plan
     "rendezvous_shard_plan",
@@ -398,9 +363,6 @@ PRIORITY: list[str] = [
     # r10 second batch: RFM lifecycle segmentation (rank-quintile NTILE
     # on the customer grain, segment-grain output)
     "rfm_customer_segments",
-    # r10 binary quantization tier: sign-bit codes + Hamming top-k
-    # (exact-integer distances; 32-bit words shared with the oracle)
-    "ann_hamming_topk",
     # r10 within-group inequality profile (CV / Theil / Atkinson —
     # nano-quantized entropy terms, micro-quantized sqrt terms)
     "inequality_profile_by_source",

@@ -1,5 +1,5 @@
 """LLM-pipeline operator tests: planted near-duplicates for MinHash/SimHash,
-recall-vs-bruteforce for ANN tiers, reference-implementation parity for the
+exact cosine top-k against numpy, reference-implementation parity for the
 pieces no SQL oracle can check, multimodal plumbing."""
 
 from __future__ import annotations
@@ -20,12 +20,7 @@ from ningaloo_turtle_etl_spark.operators.multimodal import (
     extract_image_features,
     sample_frames,
 )
-from ningaloo_turtle_etl_spark.operators.similarity import (
-    cosine_topk,
-    fit_centroids,
-    ivf_topk,
-    lsh_topk,
-)
+from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches from "
@@ -276,78 +271,6 @@ def test_simhash_expr_determinism_and_null_safety(spark):
     assert rows[3] == 0 and rows[4] == 0  # null/empty → 0, like the UDF form
 
 
-def test_ivf_index_build_once_query_many(spark, tmp_path):
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_topk,
-        ivf_topk,
-        load_ivf_index,
-        write_ivf_index,
-    )
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 5)
-    index = build_ivf_index(emb, n_centroids=8)
-
-    oneshot = sorted(
-        (r["query_id"], r["vec_id"]) for r in ivf_topk(
-            emb, queries, k=3, n_centroids=8, nprobe=3
-        ).collect()
-    )
-    via_index = sorted(
-        (r["query_id"], r["vec_id"])
-        for r in ivf_index_topk(index, queries, k=3, nprobe=3).collect()
-    )
-    assert via_index == oneshot
-
-    # Round-trip through the partitioned on-disk form; a probe prunes to the
-    # matching cell partitions (PartitionFilters on the scan).
-    path = str(tmp_path / "ivf")
-    write_ivf_index(index, path)
-    loaded = load_ivf_index(spark, path, index.centroids)
-    reloaded = sorted(
-        (r["query_id"], r["vec_id"])
-        for r in ivf_index_topk(loaded, queries, k=3, nprobe=3).collect()
-    )
-    assert reloaded == oneshot
-
-    one_cell = loaded.assigned.filter(F.col("cell") == 0)
-    plan = one_cell._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(cell" in plan
-
-
-def _recall(approx_rows, exact_rows):
-    approx = {}
-    exact = {}
-    for r in approx_rows:
-        approx.setdefault(r["query_id"], set()).add(r["vec_id"])
-    for r in exact_rows:
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    hits = sum(len(approx.get(q, set()) & s) for q, s in exact.items())
-    total = sum(len(s) for s in exact.values())
-    return hits / total
-
-
-def test_ann_recall_vs_bruteforce(spark):
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = cosine_topk(emb, queries, k=5).collect()
-
-    # This corpus has weak neighbor structure (mean top-5 cosine ≈ 0.32,
-    # θ ≈ 71°) — per-bit agreement is only ~0.6, so recall comes from many
-    # small tables, not one wide code.
-    lsh = lsh_topk(emb, queries, k=5, bits=4, tables=8).collect()
-    ivf = ivf_topk(emb, queries, k=5, n_centroids=8, nprobe=4).collect()
-    # Must be meaningfully better than random (500 vecs → random ≈ 1%).
-    assert _recall(lsh, exact) >= 0.5
-    assert _recall(ivf, exact) >= 0.6
-
-
 def test_cosine_topk_matches_numpy(spark):
     from ningaloo_turtle_etl_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
@@ -421,106 +344,6 @@ def test_multimodal_resize_and_audio(spark, docs):
     # Parseval-ish sanity: band energies sum to total energy = n·rms².
     assert abs(sum(a["energy_bands"]) - a["n_samples"] * a["rms"] ** 2) < 1e-6
     assert audio[1]["rms"] == audio[2]["rms"]
-
-
-# --- semantic (SemDeDup-style) dedup ----------------------------------------
-@pytest.fixture(scope="module")
-def planted_vecs(spark):
-    """60 well-separated random vectors + planted near-dup pairs (100,101)
-    and (102,103,104): duplicates are tiny perturbations, cosine > 0.99."""
-    rng = np.random.RandomState(11)
-    rows = []
-    for i in range(60):
-        v = rng.randn(16)
-        rows.append((i, [float(x) for x in v], 0))
-    base = rng.randn(16)
-    for j, vid in enumerate([100, 101]):
-        rows.append((vid, [float(x) for x in base + 0.001 * j], 1))
-    base2 = rng.randn(16)
-    for j, vid in enumerate([102, 103, 104]):
-        rows.append((vid, [float(x) for x in base2 + 0.001 * j], 2))
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-
-
-def test_semantic_dedup_collapses_planted_clusters(spark, planted_vecs):
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        semantic_dedup,
-        semantic_near_dup_pairs,
-    )
-
-    pairs = semantic_near_dup_pairs(
-        planted_vecs, threshold=0.99, n_centroids=8, deterministic=True
-    ).collect()
-    found = {(r["id_a"], r["id_b"]) for r in pairs}
-    # Near-identical vectors must land in the same cell and be found.
-    assert (100, 101) in found
-    assert {(102, 103), (102, 104), (103, 104)} <= found
-
-    kept = sorted(
-        r["vec_id"]
-        for r in semantic_dedup(
-            planted_vecs, threshold=0.99, n_centroids=8, deterministic=True
-        ).collect()
-    )
-    assert 100 in kept and 101 not in kept
-    assert 102 in kept and 103 not in kept and 104 not in kept
-    assert len(kept) == 60 + 2  # singletons all kept, clusters → 1 rep each
-
-
-def test_semantic_pairs_single_cell_equals_exact_allpairs(spark):
-    """n_centroids=1 puts everything in one cell — the blocked path must
-    then reproduce the exact all-pairs result bit-for-bit."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        embedding_near_dup_pairs,
-        semantic_near_dup_pairs,
-    )
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, "embeddings", SF_DIR).filter(F.col("vec_id") < 150)
-    exact = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_dup_pairs(
-            emb, threshold=0.3, use_lsh_blocking=False
-        ).collect()
-    }
-    blocked = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in semantic_near_dup_pairs(
-            emb, threshold=0.3, n_centroids=1, deterministic=True
-        ).collect()
-    }
-    assert blocked == exact and len(exact) > 0
-
-
-def test_hash_centroids_partitioning_invariant(spark, planted_vecs):
-    """method='hash' centroid fit is a pure function of the data — identical
-    across arbitrary repartitionings (takeSample is not)."""
-    a = fit_centroids(planted_vecs, 4, sample_rows=32, method="hash")
-    b = fit_centroids(planted_vecs.repartition(7), 4, sample_rows=32, method="hash")
-    assert np.allclose(a, b)
-
-
-def test_kmeanspp_init_balances_cells(spark):
-    """k-means++ seeding must produce valid, deterministic, reasonably
-    balanced cells; uniform stays the recall-optimal default (see
-    fit_centroids comment for the measured tradeoff)."""
-    from ningaloo_turtle_etl_spark.operators.similarity import build_ivf_index
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    c1 = fit_centroids(emb, 8, init="kmeans++")
-    c2 = fit_centroids(emb, 8, init="kmeans++")
-    assert np.allclose(c1, c2)  # seeded → deterministic
-    idx = build_ivf_index(emb, 8, centroids=c1)
-    sizes = [
-        r["n"]
-        for r in idx.assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    ]
-    assert len(sizes) == 8 and max(sizes) <= 3 * min(sizes)
 
 
 def test_incremental_dedup_against_snapshot(spark):
@@ -769,30 +592,6 @@ def test_bigram_lm_scores_match_python_reference(spark):
         assert got[doc_id]["n_bigrams"] == len(nlls)
         assert abs(got[doc_id]["avg_nll"] - sum(nlls) / len(nlls)) < 1e-6
     assert got[1]["avg_nll"] < got[3]["avg_nll"]  # fluent beats shuffled
-
-
-def test_ivf_topk_works_with_renamed_columns(spark):
-    # Regression (r04 review): build_ivf_index didn't forward id/vec column
-    # names to fit_centroids, crashing any non-default schema.
-    import numpy as np
-
-    rows = [(f"d{i}", [float((i * 7 + j) % 5) for j in range(8)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id string, vec array<float>")
-    out = ivf_topk(
-        df, df.limit(2), k=2, n_centroids=4, nprobe=4,
-        id_col="doc_id", vec_col="vec",
-    ).collect()
-    assert len(out) > 0
-
-
-def test_lsh_topk_empty_corpus_schema_matches_id_type(spark):
-    # Regression (r04 review): the empty-corpus early return hardcoded long
-    # ids, diverging from the non-empty path for string id columns.
-    empty = spark.createDataFrame([], "doc_id string, vec array<float>")
-    out = lsh_topk(empty, empty, k=3, id_col="doc_id", vec_col="vec")
-    assert dict(out.dtypes)["query_id"] == "string"
-    assert dict(out.dtypes)["vec_id"] == "string"
-    assert out.count() == 0
 
 
 def test_gopher_repetition_stats_matches_reference(spark):
@@ -1673,54 +1472,6 @@ def test_domain_reweight_directions(spark):
     assert set(flat.values()) == {round(1 / 3, 6)}
 
 
-def test_ann_recall_report_counts_hits_and_misses(spark):
-    from ningaloo_turtle_etl_spark.operators.similarity import ann_recall_report
-
-    exact = spark.createDataFrame(
-        [(1, 10), (1, 11), (1, 12), (2, 20), (2, 21)],
-        "query_id long, vec_id long",
-    )
-    approx = spark.createDataFrame(
-        # q1 recovers 2 of 3 (plus a non-truth item that must not count);
-        # q2 recovers none — must still surface with recall 0.
-        [(1, 10), (1, 12), (1, 99)],
-        "query_id long, vec_id long",
-    )
-    out = {r["query_id"]: r for r in ann_recall_report(approx, exact).collect()}
-    assert out[1]["n_exact"] == 3 and out[1]["n_hit"] == 2
-    assert out[1]["recall_at_k"] == round(2 / 3, 6)
-    assert out[2]["n_exact"] == 2 and out[2]["n_hit"] == 0
-    assert out[2]["recall_at_k"] == 0.0
-
-
-def test_ann_lsh_recall_is_high_on_testdata(spark):
-    # LSH with 6x6 tables should recover most of the exact top-10 on the
-    # sf0.001 embeddings — and never exceed 1.0.
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        ann_recall_report,
-        cosine_topk,
-        lsh_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 5)
-    rep = ann_recall_report(
-        lsh_topk(emb, qs, k=10, bits=6, tables=6), cosine_topk(emb, qs, k=10)
-    ).collect()
-    assert len(rep) == 5
-    assert all(0.0 <= r["recall_at_k"] <= 1.0 for r in rep)
-    # Synthetic embeddings are near-orthogonal (worst case for sign-LSH:
-    # per-bit collision p ~ 0.5), so recall here is structurally modest —
-    # assert the report is sane and the index beats picking nothing, and
-    # that n_hit is consistent with recall.
-    mean = sum(r["recall_at_k"] for r in rep) / len(rep)
-    assert mean > 0.0, "LSH found no ground-truth items at all"
-    for r in rep:
-        assert r["recall_at_k"] == round(r["n_hit"] / r["n_exact"], 6)
-
-
 def test_image_ahash_lanes_and_near_dup_pairs(spark):
     from ningaloo_turtle_etl_spark.operators.multimodal import (
         _fake_decode,
@@ -2322,48 +2073,6 @@ def test_jpeg_decode_ycbcr_subsampling_and_auto_dispatch(spark):
         _auto_decode(b"GIF89a notsupported")
 
 
-def test_jl_project_preserves_distances_and_validates(spark):
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        _jl_matrix,
-        jl_project,
-    )
-
-    rng = np.random.RandomState(3)
-    vecs = rng.randn(30, 64)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(30)],
-        "vec_id long, embedding array<double>",
-    )
-    proj = {r["vec_id"]: np.array(r["jl"]) for r in jl_project(df, 16, seed=11).collect()}
-    # numpy replay of the seeded matrix product
-    m = _jl_matrix(64, 16, 11)
-    for i in (0, 7, 29):
-        assert np.allclose(proj[i], m @ vecs[i], atol=1e-9)
-    # JL guarantee (loose bound at k=16): most pairwise ratios near 1
-    ratios = []
-    for i in range(30):
-        for j in range(i + 1, 30):
-            d0 = np.linalg.norm(vecs[i] - vecs[j])
-            d1 = np.linalg.norm(proj[i] - proj[j])
-            ratios.append(d1 / d0)
-    ratios = np.array(ratios)
-    assert 0.85 < ratios.mean() < 1.15
-    assert (np.abs(ratios - 1) < 0.75).all()
-    with pytest.raises(ValueError):
-        jl_project(df, out_dim=0)
-    with pytest.raises(ValueError):
-        jl_project(df, out_dim=65)
-    # ragged corpus: a short vector would silently NULL-pad / truncate
-    # coordinates through zip_with — must fail loudly instead (ADVICE r7)
-    ragged = df.union(
-        spark.createDataFrame(
-            [(99, [1.0, 2.0])], "vec_id long, embedding array<double>"
-        )
-    )
-    with pytest.raises(Exception, match="vector length"):
-        jl_project(ragged, 16, seed=11, dim=64).collect()
-
-
 def test_winnowing_guarantee_and_containment_direction(spark):
     """The winnowing guarantee: any shared token run of at least
     k + window - 1 tokens yields at least one shared fingerprint; a
@@ -2631,57 +2340,6 @@ def test_kneser_ney_matches_python_replica_and_continuation_property(spark):
         kneser_ney_bigram_scores(df, discount=1.5)
 
 
-def test_rank_biased_overlap_hand_values(spark):
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        rank_biased_overlap,
-        rbo_coefficients,
-    )
-
-    p, depth = 0.9, 5
-
-    def ranks(q, items):
-        return [(q, it, r + 1) for r, it in enumerate(items)]
-
-    a = spark.createDataFrame(
-        ranks(1, "abcde") + ranks(2, "abcde") + ranks(3, "vwxyz"),
-        "query_id long, vec_id string, rank int",
-    )
-    b = spark.createDataFrame(
-        ranks(1, "abcde") + ranks(2, "baecd") + ranks(3, "lmnop"),
-        "query_id long, vec_id string, rank int",
-    )
-    out = {
-        r["query_id"]: r
-        for r in rank_biased_overlap(
-            a, b, p=p, depth=depth, id_col="vec_id"
-        ).collect()
-    }
-    # identical rankings: rbo = (1-p) * sum p^(d-1) (overlap_d/d = 1)
-    ident = (1 - p) * sum(p ** (d - 1) for d in range(1, depth + 1))
-    assert abs(out[1]["rbo"] - round(ident, 6)) < 1e-9
-    # disjoint rankings: zero
-    assert out[3]["rbo"] == 0.0 and out[3]["n_shared"] == 0
-    # permuted ranking: brute-force replica via prefix overlaps
-    perm = {}
-    for d in range(1, depth + 1):
-        perm[d] = len(set("abcde"[:d]) & set("baecd"[:d]))
-    brute = (1 - p) * sum(
-        p ** (d - 1) * perm[d] / d for d in range(1, depth + 1)
-    )
-    assert abs(out[2]["rbo"] - round(brute, 6)) < 1e-9
-    # permutation hurts vs identity, but far less than disjoint
-    assert out[3]["rbo"] < out[2]["rbo"] < out[1]["rbo"]
-    # coefficient identity: c_m sums the tail weights
-    cs = rbo_coefficients(p, depth)
-    assert abs(cs[0] - sum(p ** (d - 1) / d for d in range(1, depth + 1))) < 1e-12
-    with pytest.raises(ValueError):
-        rank_biased_overlap(a, b, p=1.5)
-    with pytest.raises(ValueError):
-        rank_biased_overlap(a, b, depth=0)
-
-
 def test_ppjoin_completeness_vs_bruteforce(spark):
     """PPJoin prefix filtering must be EXACT: identical pair set and
     jaccard values to the all-pairs brute force, at any threshold."""
@@ -2876,64 +2534,6 @@ def test_winnowing_sub_k_docs_emit_no_fingerprints(spark):
     assert pairs == []
 
 
-def test_kmeans_lloyd_two_blobs(spark):
-    """Two well-separated 2D blobs, k=2, init = the two smallest ids (one
-    planted in each blob): Lloyd must split them perfectly and the
-    inertia must equal the hand-computed quantized sum."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.similarity import kmeans_lloyd
-
-    blob_a = [(0, [0.0, 0.0]), (2, [0.1, 0.0]), (3, [0.0, 0.2]),
-              (4, [0.1, 0.2])]
-    blob_b = [(1, [5.0, 5.0]), (5, [5.1, 5.0]), (6, [5.0, 5.2])]
-    df = spark.createDataFrame(
-        blob_a + blob_b, "vec_id long, embedding array<double>"
-    )
-    out = {
-        r["cluster"]: r for r in kmeans_lloyd(df, k=2, iterations=2).collect()
-    }
-    assert out[0]["n_vecs"] == 4 and out[1]["n_vecs"] == 3
-
-    # independent replay: same quantization, same update rule
-    def fit(pts, cents, iters):
-        pts = [[int(math.floor(x * 1e6 + 0.5)) if x >= 0 else
-                -int(math.floor(-x * 1e6 + 0.5)) for x in p] for p in pts]
-        for _ in range(iters):
-            groups = {}
-            for p in pts:
-                d = [(sum((a - b) ** 2 for a, b in zip(p, c)), j)
-                     for j, c in enumerate(cents)]
-                groups.setdefault(min(d)[1], []).append(p)
-            cents = [
-                [int(math.floor(sum(col) / len(g) + 0.5))
-                 for col in zip(*g)] if (g := groups.get(j)) else cents[j]
-                for j in range(len(cents))
-            ]
-        inert = {}
-        counts = {}
-        for p in pts:
-            d = [(sum((a - b) ** 2 for a, b in zip(p, c)), j)
-                 for j, c in enumerate(cents)]
-            dist, j = min(d)
-            inert[j] = inert.get(j, 0) + dist
-            counts[j] = counts.get(j, 0) + 1
-        return {j: (counts[j], round(inert[j] / 1e12, 6)) for j in counts}
-
-    rows = sorted(blob_a + blob_b)
-    ref = fit([v for _, v in rows], [rows[0][1], rows[1][1]], 2)
-    # quantize init like the operator does (ids 0 and 1)
-    for j, r in out.items():
-        assert (r["n_vecs"], r["inertia"]) == ref[j], j
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        kmeans_lloyd(df, k=0)
-    with _pt.raises(ValueError):
-        kmeans_lloyd(df, k=100, iterations=1)
-
-
 def test_good_turing_hand_counts(spark):
     """'a a a b b c d': N_1=2, N_2=1, N_3=1, N=7 — r*(1) = 2·N_2/N_1 = 1,
     r*(2) = 3·N_3/N_2 = 3, r*(3) NULL (no N_4), unseen mass 2/7."""
@@ -3093,17 +2693,18 @@ def test_ranking_metrics_hand_values_and_weight_exactness(spark):
 
 
 def test_pca_power_component_replica_and_planted_direction(spark):
-    """Two pins: (a) the 3-round trajectory matches an exact numpy
-    replica of the integer-micro/nano arithmetic; (b) on data with a
-    planted dominant direction the learned component aligns with numpy's
-    true top eigenvector (|cos| > 0.99) and the eigenvalue estimate is
-    close — the semantic check, independent of the quantization."""
+    """The single top component (``pca_power_components`` at p=1). Two
+    pins: (a) the 3-round trajectory matches an exact numpy replica of
+    the integer-micro arithmetic; (b) on data with a planted dominant
+    direction the learned component aligns with numpy's true top
+    eigenvector (|cos| > 0.99) and the eigenvalue estimate is close —
+    the semantic check, independent of the quantization."""
     import math
 
     import numpy as np
 
     from ningaloo_turtle_etl_spark.operators.similarity import (
-        pca_power_component,
+        pca_power_components,
     )
 
     rng = np.random.RandomState(5)
@@ -3117,7 +2718,8 @@ def test_pca_power_component_replica_and_planted_direction(spark):
         [(i, [float(np.float32(x)) for x in data[i]]) for i in range(60)],
         "vec_id long, embedding array<float>",
     )
-    got = pca_power_component(df, iterations=3).collect()
+    got = pca_power_components(df, 1, 3).collect()
+    assert {r["component"] for r in got} == {1}
     loadings = np.array([r["loading"] for r in sorted(got, key=lambda r: r["dim_idx"])])
     eig = got[0]["eigenvalue"]
 
@@ -3150,18 +2752,16 @@ def test_pca_power_component_replica_and_planted_direction(spark):
 
 
 def test_pca_power_components_deflation_replica_and_orthogonality(spark):
-    """Top-2 deflated power iteration: (a) component 1 is bit-identical
-    to pca_power_component (no deflation applies); (b) the full
-    two-component trajectory — including the micro-quantized deflation
-    dot — matches an exact numpy replica; (c) the two loadings are
-    near-orthogonal; (d) on data with TWO planted directions both
-    recovered components align with numpy's top-2 eigenvectors."""
+    """Top-2 deflated power iteration: (a) the full two-component
+    trajectory — including the micro-quantized deflation dot — matches
+    an exact numpy replica; (b) the two loadings are near-orthogonal;
+    (c) on data with TWO planted directions both recovered components
+    align with numpy's top-2 eigenvectors."""
     import math
 
     import numpy as np
 
     from ningaloo_turtle_etl_spark.operators.similarity import (
-        pca_power_component,
         pca_power_components,
     )
 
@@ -3189,16 +2789,7 @@ def test_pca_power_components_deflation_replica_and_orthogonality(spark):
     v1 = np.array([by_comp[1][j] for j in range(1, 9)])
     v2 = np.array([by_comp[2][j] for j in range(1, 9)])
 
-    # (a) component 1 == the single-component operator, value for value
-    single = {
-        r["dim_idx"]: (r["loading"], r["eigenvalue"])
-        for r in pca_power_component(df, iterations=3).collect()
-    }
-    for j in range(1, 9):
-        assert by_comp[1][j] == single[j][0]
-        assert eig[1] == single[j][1]
-
-    # (b) exact replica of the deflated trajectory
+    # (a) exact replica of the deflated trajectory
     def rnd(v):
         return math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
 
@@ -3242,10 +2833,10 @@ def test_pca_power_components_deflation_replica_and_orthogonality(spark):
     assert abs(eig[1] - round(comps[0][1], 6)) < 1e-9
     assert abs(eig[2] - round(comps[1][1], 6)) < 1e-9
 
-    # (c) near-orthogonality of successive components
+    # (b) near-orthogonality of successive components
     assert abs(float(v1 @ v2)) < 0.02
 
-    # (d) both align with numpy's top-2 eigenvectors; λ1 > λ2
+    # (c) both align with numpy's top-2 eigenvectors; λ1 > λ2
     centered = data - data.mean(axis=0)
     cov = centered.T @ centered / n
     evals, evecs = np.linalg.eigh(cov)
@@ -3354,67 +2945,6 @@ def test_als_rank1_factors_replica_and_rank1_recovery(spark):
             q2[i] = (num / 1e9) / (0.25 + den / 1e9)
         objs.append(objective(p2, q2))
     assert all(objs[t + 1] <= objs[t] + 1e-9 for t in range(len(objs) - 1))
-
-
-def test_matryoshka_recall_dominance_and_exact_case(spark):
-    """Truncation-recall pins: recall at the FULL dimension is exactly
-    1.0 (truncation to d=dim is the identity), and on vectors whose
-    information is entirely in the prefix, truncated recall is also
-    perfect — while a vector set that differs only in the tail
-    degrades at small prefixes."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        ann_recall_report,
-        cosine_topk,
-    )
-
-    rng = np.random.RandomState(3)
-    # tail-heavy: first 4 dims identical, info in dims 5..8
-    n = 30
-    tail = np.hstack(
-        [np.ones((n, 4)), rng.randn(n, 4)]
-    ).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in tail[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>",
-    )
-    qs = df.filter(F.col("vec_id") < 3)
-    exact = cosine_topk(df, qs, k=5)
-
-    def trunc(d):
-        t = lambda x: x.select(  # noqa: E731
-            "vec_id", F.slice("embedding", 1, d).alias("embedding")
-        )
-        return ann_recall_report(cosine_topk(t(df), t(qs), k=5), exact)
-
-    full = {r["query_id"]: r["recall_at_k"] for r in trunc(8).collect()}
-    assert all(v == 1.0 for v in full.values())
-    small = {r["query_id"]: r["recall_at_k"] for r in trunc(4).collect()}
-    # the first 4 dims carry no signal -> neighbors are arbitrary
-    assert sum(small.values()) / len(small) < 0.9
-    assert sum(small.values()) / len(small) < sum(full.values()) / len(full)
-
-
-def test_matryoshka_topk_shortlist_containment(spark):
-    """Fused two-stage serving pins: results are a subset of the
-    shortlist; on prefix-informative vectors the two-stage top-k equals
-    the exact full-dim top-k (the adaptive-retrieval ideal); ranks are
-    dense 1..k per query."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.queries.llm_ops import (
-        ann_matryoshka_topk,
-    )
-    from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
-
-    got = ann_matryoshka_topk(spark, "/root/testdata/sf0.001").collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r["rank"])
-    for q, ranks in by_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-        assert len(ranks) == 10
 
 
 def test_cohens_kappa_langid_reference(spark):
@@ -3611,22 +3141,25 @@ def test_pca_arrow_grid_matches_catalyst_reference(spark):
             _pca_cov_apply_grid(bad_base, [0] * d, [1.0] * d, d)
 
 
-def test_kmeans_recenter_exact_past_double_cliff():
-    """r14 (VERDICT r13 item 3): the exact integer half-up recentering
-    (2s + n) // (2n) has no 2^53 cliff — pinned at a constructed
-    boundary point where the replaced float form floor(s/n + 0.5)
+def test_recenter_micro_exact_past_double_cliff():
+    """The exact integer half-up recentering (2s + n) // (2n) that the
+    PCA mean and the Lloyd update share has no 2^53 cliff — pinned at a
+    constructed boundary point where the float form floor(s/n + 0.5)
     ROUNDS THE WRONG WAY (true quotient just below k - 1/2, float
     division lands exactly ON k - 1/2, +0.5 then floors to k), plus
     sign/tie parity below the cliff and agreement with the DuckDB
-    oracle's explicit floor-div idiom at the same boundary point."""
+    oracles' explicit floor-div idiom at the same boundary point."""
     import math
 
     import duckdb
 
+    from ningaloo_turtle_etl_spark.operators import quantize
     from ningaloo_turtle_etl_spark.operators.similarity import (
         _recenter_micro,
     )
 
+    # one helper: the Lloyd update recenters through the same function
+    assert quantize._recenter_micro is _recenter_micro
     k = 2_000_000_000_000_000
     s, n = 5 * k - 3, 5  # true s/n = k - 0.5 - 0.1 -> half-up floor = k-1
     assert s > 2**53
@@ -3639,7 +3172,7 @@ def test_kmeans_recenter_exact_past_double_cliff():
                 s2,
                 n2,
             )
-    # the kmeans oracle's floor-div CTE idiom agrees at the boundary
+    # the oracles' floor-div CTE idiom agrees at the boundary
     got = duckdb.sql(
         f"SELECT (2*{s} + {n} - (((2*{s} + {n}) % (2*{n})) + 2*{n})"
         f" % (2*{n})) // (2*{n})"
@@ -3679,23 +3212,3 @@ def test_pca_mean_exact_past_double_cliff(spark):
     assert [(r[-2], r[-1]) for r in oracle] == [(1.0, 4.448163)]
 
 
-def test_kmeans_oracle_sums_past_int64_half_range():
-    """The kmeans oracle doubles each cluster's coordinate sum while
-    recentering; at |s| >= 2^62 that overflowed BIGINT. Here cluster 0
-    holds three coordinates near 2.3e18 micros (s ~ 6.9e18) and must
-    recenter to their exact mean."""
-    import duckdb
-
-    from ningaloo_turtle_etl_spark.queries.llm_ops import _kmeans_oracle_sql
-
-    x = 2_305_843_009_216.0  # x*1e6 is exact in a double, just over 2^61
-    con = duckdb.connect()
-    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
-    con.executemany(
-        "INSERT INTO embeddings VALUES (?, ?)",
-        [(0, [x]), (1, [x + 2000]), (2, [x + 4]), (3, [x + 8])],
-    )
-    assert 3 * x * 1e6 > 2**62
-    # cluster 0 = ids 0, 2, 3 recentered to x + 4; cluster 1 = id 1
-    got = con.sql(_kmeans_oracle_sql(k=2, iterations=1, dim=1)).fetchall()
-    assert [tuple(r) for r in got] == [(0, 3, 32.0), (1, 1, 0.0)]

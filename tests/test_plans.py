@@ -153,23 +153,6 @@ def test_bloom_decontaminate_no_nested_loop_no_inferred_gram_filter(spark):
             raise AssertionError(f"gram expression inlined into a Filter: {line[:160]}")
 
 
-def test_semantic_dedup_pairs_payload_free_candidates(spark):
-    from ningaloo_turtle_etl_spark.operators.dedup import semantic_near_dup_pairs
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    df = semantic_near_dup_pairs(emb, threshold=0.4, n_centroids=4, deterministic=True)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # The self-join that forms the pair product must not carry embedding
-    # arrays — vectors attach by id afterwards.
-    m = re.search(r"SortMergeJoin.*?\n|BroadcastHashJoin.*?\n", plan)
-    assert m is not None
-    joins = [l for l in plan.splitlines() if "Join" in l and "vec_id" in l]
-    pair_join = [l for l in joins if "cell" in l]
-    assert pair_join, f"no cell-keyed pair join found: {joins}"
-    assert all("embedding" not in l and " v#" not in l for l in pair_join)
-
-
 def test_duplicate_passage_removal_plan_shape(spark):
     """Passage build is map-only (fused with the scan, no Python); the only
     shuffles are the election window (by passage) and the reassembly agg
@@ -411,47 +394,32 @@ def test_ppjoin_jaccard_pairs_prefix_equi_join_jvm_only(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_kmeans_assignment_scan_has_no_join(spark):
-    """kmeans_lloyd's assignment pass must be a MAP-SIDE scan against
-    literal centroids — no join, no shuffle of vectors. Checked on the
-    assignment stage itself (the registered query's output frame is a
-    bounded driver createDataFrame by design)."""
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators import similarity as sim
+def test_lloyd_assignment_scan_has_no_join(spark):
+    """The trained Lloyd's assignment pass (the pass every
+    pq_train_codebooks_lloyd / train_ivf_pq iteration runs) must be a
+    MAP-SIDE scan against literal centroids: no join, and the one
+    exchange carries only the merged (g, s, code) cell grid above the
+    Arrow assignment stage — vectors never shuffle. Checked on the grid
+    frame itself (the trainer collects it)."""
+    from ningaloo_turtle_etl_spark.operators.quantize import (
+        _lloyd_grid_frame,
+        _micro_base,
+    )
 
     df = spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(20)],
         "vec_id long, embedding array<double>",
     )
-    vm = F.transform(
-        F.col("embedding"), lambda x: F.round(x * 1e6, 0).cast("long")
-    )
-    base = df.select(F.col("vec_id").alias("id"), vm.alias("vm"))
-    cents = [[0, 0], [19_000_000, 0]]
-
-    def dist(c):
-        carr = F.array(*[F.lit(int(x)) for x in c])
-        return F.aggregate(
-            F.zip_with(F.col("vm"), carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    assign = base.withColumn(
-        "cluster",
-        F.array_min(
-            F.array(
-                *[
-                    F.struct(dist(c).alias("d"), F.lit(j).alias("j"))
-                    for j, c in enumerate(cents)
-                ]
-            )
-        )["j"],
-    )
-    plan = assign._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan and "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    base = _micro_base(df, "vec_id", "embedding")
+    books = [[[0, 0], [19_000_000, 0]]]  # m=1, k=2 full-vector centroids
+    grid = _lloyd_grid_frame(base, [(books, 1, 2, 2)])
+    plan = grid._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan
+    assert plan.count("Exchange") == 1
+    assert plan.index("Exchange") < plan.index("MapInArrow")
+    assert "BatchEvalPython" not in plan
+    # ids 0..9 are nearer centroid 0, 10..19 nearer centroid 1
+    assert {r["code"]: r["n"] for r in grid.collect()} == {0: 10, 1: 10}
 
 
 def test_pareto_frontier_broadcast_semi_join_jvm_only(spark):
@@ -493,16 +461,6 @@ def test_shapley_runs_on_coalition_grain(spark):
     # subset-containment join is tiny-side broadcast, never row x row
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "bit_or" in plan.lower()
-
-
-def test_hamming_topk_broadcast_queries_jvm_only(spark):
-    plan = plan_of(spark, "ann_hamming_topk")
-    # sign-bit packing + XOR/popcount are Catalyst expressions fused with
-    # the scan; the 8-row query side broadcasts so the corpus never
-    # shuffles before the per-query top-k window
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_symspell_pairs_key_equi_join_jvm_only(spark):

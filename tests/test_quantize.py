@@ -1,277 +1,15 @@
-"""Quantization tests: round-trip error bounds and recall vs full precision
-on the real embeddings table."""
+"""Trained IVF-PQ tests: the distributed Lloyd trainer, the closed
+train→encode→serve loop and its recall vs brute force, train-once/
+serve-many persistence, and the Arrow stages pinned against the Catalyst
+expression forms they replaced, on the real embeddings table."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
 
-from ningaloo_turtle_etl_spark.operators.quantize import (
-    dequantize_expr,
-    fit_quantizer,
-    quantize_expr,
-    quantized_cosine_topk,
-)
-from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
 from ningaloo_turtle_etl_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
-
-
-def test_roundtrip_error_bounded_by_half_bucket(spark):
-    emb = load_table(spark, "embeddings", SF_DIR)
-    lo, hi = fit_quantizer(emb)
-    out = emb.limit(200).select(
-        "embedding",
-        dequantize_expr(quantize_expr("embedding", lo, hi), lo, hi).alias("restored"),
-    ).collect()
-    half_bucket = (hi - lo) / 255.0  # per-dim max round-trip error
-    for r in out:
-        err = np.abs(np.asarray(r["embedding"], dtype=np.float64) - np.asarray(r["restored"]))
-        assert (err <= half_bucket * 0.5 + 1e-9).all()
-
-
-def test_quantized_column_is_tinyint_array(spark):
-    emb = load_table(spark, "embeddings", SF_DIR)
-    lo, hi = fit_quantizer(emb)
-    q = emb.select(quantize_expr("embedding", lo, hi).alias("q"))
-    assert q.schema["q"].dataType.simpleString() == "array<tinyint>"
-    vals = q.limit(50).collect()
-    assert all(-128 <= x <= 127 for r in vals for x in r["q"])
-
-
-def test_quantized_topk_recall_vs_full_precision(spark):
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 10)
-    lo, hi = fit_quantizer(emb)
-    exact = cosine_topk(emb, queries, k=5).collect()
-    quant = quantized_cosine_topk(emb, queries, lo, hi, k=5).collect()
-    exact_sets: dict = {}
-    quant_sets: dict = {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    for r in quant:
-        quant_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    hits = sum(len(exact_sets[q] & quant_sets.get(q, set())) for q in exact_sets)
-    total = sum(len(s) for s in exact_sets.values())
-    assert hits / total >= 0.8  # int8 loses little on cosine ordering
-
-
-# --- product quantization ---------------------------------------------------
-
-
-def test_pq_encode_matches_numpy_argmin(spark):
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        fit_pq_codebooks,
-        with_pq_codes,
-    )
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    books = fit_pq_codebooks(emb, m_subvectors=8, k_codes=16)
-    m, k, d_sub = books.shape
-    assert (m, k, d_sub) == (8, 16, 8)
-    rows = with_pq_codes(emb, books).select("embedding", "pq_code").limit(40).collect()
-    for r in rows:
-        v = np.asarray(r["embedding"], dtype=np.float64).reshape(m, d_sub)
-        ref = ((v[:, None, :] - books) ** 2).sum(-1).argmin(1)
-        assert list(r["pq_code"]) == [int(x) for x in ref]
-
-
-def test_pq_codebooks_deterministic(spark):
-    from ningaloo_turtle_etl_spark.operators.quantize import fit_pq_codebooks
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    a = fit_pq_codebooks(emb, m_subvectors=4, k_codes=8)
-    b = fit_pq_codebooks(emb.repartition(7), m_subvectors=4, k_codes=8)
-    # hash-rule sampling → bit-identical across partitionings
-    assert np.array_equal(a, b)
-
-
-def test_pq_topk_recall_and_rerank(spark):
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        fit_pq_codebooks,
-        pq_topk,
-    )
-    from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 10)
-    # m=16 (4-dim subspaces): near-random unit vectors are PQ's worst case,
-    # so the test uses the finer split; coarser m=8 measured adc≈0.20.
-    books = fit_pq_codebooks(emb, m_subvectors=16, k_codes=16)
-    # Exact baseline: squared-L2 == cosine ordering only for normalized
-    # vectors, so build the L2 exact baseline directly.
-    k = 5
-    corpus_rows = emb.collect()
-    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64) for r in corpus_rows}
-    exact_sets = {}
-    for q in range(10):
-        d = sorted(
-            (float(((vecs[i] - vecs[q]) ** 2).sum()), i)
-            for i in vecs if i != q
-        )[:k]
-        exact_sets[q] = {i for _, i in d}
-
-    def recall(df):
-        got = {}
-        for r in df.collect():
-            got.setdefault(r["query_id"], set()).add(r["vec_id"])
-        hits = sum(len(exact_sets[q] & got.get(q, set())) for q in exact_sets)
-        return hits / (k * len(exact_sets))
-
-    adc = recall(pq_topk(emb, queries, books, k=k))
-    two_stage = recall(pq_topk(emb, queries, books, k=k, rerank=100))
-    assert adc >= 0.15  # raw ADC on random unit vectors (measured 0.26)
-    assert two_stage >= adc  # exact re-rank can only help
-    assert two_stage >= 0.85  # 100-candidate shortlist closes the gap (measured 0.98)
-
-
-def test_pq_rerank_distances_are_exact(spark):
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        fit_pq_codebooks,
-        pq_topk,
-    )
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 3)
-    books = fit_pq_codebooks(emb, m_subvectors=8, k_codes=16)
-    out = pq_topk(emb, queries, books, k=3, rerank=20).collect()
-    vecs = {
-        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.collect()
-    }
-    for r in out:
-        ref = float(((vecs[r["vec_id"]] - vecs[r["query_id"]]) ** 2).sum())
-        assert abs(r["distance"] - ref) < 1e-5
-
-
-def test_ivf_pq_topk_fused_pipeline_recall_floor(spark):
-    """The fused IVF → PQ/ADC → exact pipeline: (a) its exact-stage
-    distances are true squared L2; (b) recall vs brute-force L2 clears a
-    floor and grows with nprobe; (c) at nprobe = n_cells (no IVF cut)
-    it matches plain pq_topk with the same shortlist — the IVF tier only
-    removes candidates, never rescores them."""
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        fit_pq_codebooks,
-        ivf_pq_topk,
-        pq_topk,
-    )
-    from ningaloo_turtle_etl_spark.operators.similarity import fit_centroids
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 10)
-    cents = fit_centroids(emb, 8)
-    books = fit_pq_codebooks(emb, m_subvectors=16, k_codes=16)
-    k = 5
-
-    vecs = {
-        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.collect()
-    }
-    exact_sets = {}
-    for q in range(10):
-        d = sorted(
-            (float(((vecs[i] - vecs[q]) ** 2).sum()), i)
-            for i in vecs
-            if i != q
-        )[:k]
-        exact_sets[q] = {i for _, i in d}
-
-    def recall(df):
-        got = {}
-        for r in df.collect():
-            got.setdefault(r["query_id"], set()).add(r["vec_id"])
-        hits = sum(len(exact_sets[q] & got.get(q, set())) for q in exact_sets)
-        return hits / (k * len(exact_sets))
-
-    out2 = ivf_pq_topk(
-        emb, queries, cents, books, k=k, nprobe=2, shortlist=100
-    )
-    # (a) exact-stage distances are true squared L2
-    for r in out2.collect():
-        ref = float(((vecs[r["vec_id"]] - vecs[r["query_id"]]) ** 2).sum())
-        assert abs(r["distance"] - ref) < 1e-5
-    r2 = recall(out2)
-    r_all = recall(
-        ivf_pq_topk(emb, queries, cents, books, k=k, nprobe=8, shortlist=100)
-    )
-    # (b) floor + monotonicity in nprobe (measured: 0.62 @ nprobe=2,
-    # 0.98 @ nprobe=8 on the sf0.001 table)
-    assert r2 >= 0.4
-    assert r_all >= r2
-    assert r_all >= 0.85
-
-    # (c) nprobe = n_cells disables the IVF cut: identical rows to the
-    # single-tier PQ path at the same shortlist
-    fused_all = {
-        (r["query_id"], r["vec_id"], r["distance"], r["rank"])
-        for r in ivf_pq_topk(
-            emb, queries, cents, books, k=k, nprobe=8, shortlist=100
-        ).collect()
-    }
-    plain = {
-        (r["query_id"], r["vec_id"], r["distance"], r["rank"])
-        for r in pq_topk(emb, queries, books, k=k, rerank=100).collect()
-    }
-    assert fused_all == plain
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        ivf_pq_topk(emb, queries, cents, books, k=5, shortlist=3)
-
-
-def test_sign_bit_hamming_replica_and_semantics(spark):
-    """sign_bit_words/hamming_topk vs a numpy replica on deterministic
-    vectors: identical packed words, exact Hamming distances, rank-1 is
-    the sign-identical vector, and the binary distance preserves the
-    coarse cosine ordering it exists to estimate (Charikar)."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        hamming_topk,
-        sign_bit_words,
-    )
-
-    rng = np.random.RandomState(11)
-    dim, n = 64, 40
-    vecs = rng.randn(n, dim).astype(np.float32)
-    # v1 shares v0's sign pattern exactly → Hamming 0 despite different values
-    vecs[1] = np.where(vecs[0] > 0, 0.5, -0.5).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>",
-    )
-
-    # packed words match the replica exactly
-    words = df.select(
-        "vec_id", *[w.alias(f"w{i}") for i, w in enumerate(sign_bit_words("embedding", dim))]
-    ).collect()
-    bits = (vecs > 0).astype(np.int64)
-    for r in words:
-        w0 = int(sum(bits[r["vec_id"]][i] << i for i in range(32)))
-        w1 = int(sum(bits[r["vec_id"]][32 + i] << i for i in range(32)))
-        assert (r["w0"], r["w1"]) == (w0, w1)
-
-    out = hamming_topk(df, df.filter(F.col("vec_id") == 0), dim=dim, k=n - 1)
-    got = {r["vec_id"]: (r["hamming"], r["rank"]) for r in out.collect()}
-    ham = {
-        j: int((bits[0] != bits[j]).sum()) for j in range(1, n)
-    }
-    assert {j: h for j, (h, _) in got.items()} == ham
-    # the sign-identical vector is rank 1 at distance 0
-    assert got[1] == (0, 1)
-    # coarse agreement with cosine: mean cosine of the 5 hamming-nearest
-    # beats the 5 hamming-farthest by a wide margin
-    cos = {
-        j: float(
-            vecs[0] @ vecs[j] / (np.linalg.norm(vecs[0]) * np.linalg.norm(vecs[j]))
-        )
-        for j in range(1, n)
-    }
-    by_rank = sorted(got, key=lambda j: got[j][1])
-    near = np.mean([cos[j] for j in by_rank[:5]])
-    far = np.mean([cos[j] for j in by_rank[-5:]])
-    assert near > far + 0.3
 
 
 def test_pq_train_codebooks_lloyd_grain_and_inertia(spark):
@@ -301,6 +39,108 @@ def test_pq_train_codebooks_lloyd_grain_and_inertia(spark):
     i2 = sum(r["inertia"] for r in two)
     # measured on sf0.001: 452.93 -> 447.74
     assert i2 <= i1 + 1e-6
+
+
+def test_lloyd_m1_two_blobs(spark):
+    """At m=1 the trainer is full-vector Lloyd k-means. Two
+    well-separated 2D blobs, k=2, init = the two smallest ids (one
+    planted in each blob): Lloyd must split them perfectly, and the
+    inertia and centroid L1 must equal a hand-computed replica of the
+    integer-micro update."""
+    import math
+
+    import pytest
+
+    from ningaloo_turtle_etl_spark.operators.quantize import (
+        pq_train_codebooks_lloyd,
+    )
+
+    blob_a = [(0, [0.0, 0.0]), (2, [0.1, 0.0]), (3, [0.0, 0.2]),
+              (4, [0.1, 0.2])]
+    blob_b = [(1, [5.0, 5.0]), (5, [5.1, 5.0]), (6, [5.0, 5.2])]
+    df = spark.createDataFrame(
+        blob_a + blob_b, "vec_id long, embedding array<double>"
+    )
+    out = {
+        r["code"]: r
+        for r in pq_train_codebooks_lloyd(
+            df, m_subvectors=1, k_codes=2, iterations=2
+        ).collect()
+    }
+    assert out[0]["n_vecs"] == 4 and out[1]["n_vecs"] == 3
+
+    # independent replay: same quantization, same update rule
+    def fit(pts, cents, iters):
+        pts = [[int(math.floor(x * 1e6 + 0.5)) for x in p] for p in pts]
+        cents = [[int(math.floor(x * 1e6 + 0.5)) for x in c] for c in cents]
+        for _ in range(iters):
+            groups = {}
+            for p in pts:
+                d = [(sum((a - b) ** 2 for a, b in zip(p, c)), j)
+                     for j, c in enumerate(cents)]
+                groups.setdefault(min(d)[1], []).append(p)
+            cents = [
+                [int(math.floor(sum(col) / len(g) + 0.5))
+                 for col in zip(*g)] if (g := groups.get(j)) else cents[j]
+                for j in range(len(cents))
+            ]
+        inert, counts = {}, {}
+        for p in pts:
+            d = [(sum((a - b) ** 2 for a, b in zip(p, c)), j)
+                 for j, c in enumerate(cents)]
+            dist, j = min(d)
+            inert[j] = inert.get(j, 0) + dist
+            counts[j] = counts.get(j, 0) + 1
+        return {
+            j: (
+                counts[j],
+                round(inert[j] / 1e12, 6),
+                round(sum(abs(x) for x in cents[j]) / 1e6, 6),
+            )
+            for j in counts
+        }
+
+    rows = sorted(blob_a + blob_b)
+    ref = fit([v for _, v in rows], [rows[0][1], rows[1][1]], 2)
+    for j, r in out.items():
+        assert r["subspace"] == 0
+        assert (r["n_vecs"], r["inertia"], r["centroid_l1"]) == ref[j], j
+
+    with pytest.raises(ValueError):
+        pq_train_codebooks_lloyd(df, m_subvectors=1, k_codes=0)
+    with pytest.raises(ValueError):
+        pq_train_codebooks_lloyd(df, m_subvectors=1, k_codes=100)
+
+
+def test_pq_train_oracle_sums_past_int64_half_range():
+    """The training oracle doubles each cell's coordinate sum while
+    recentering; at |s| >= 2^62 a BIGINT sum overflowed. Here code 0
+    holds three coordinates near 2.3e18 micros (s ~ 6.9e18) and must
+    recenter to their exact mean x + 4. The same chain trains both
+    window queries (pq_train_codebooks, ann_trained_ivf_pq_topk)."""
+    import duckdb
+
+    from ningaloo_turtle_etl_spark.queries.ann_oracles import (
+        pq_train_oracle_sql,
+    )
+
+    x = 2_305_843_009_216.0  # x*1e6 is exact in a double, just over 2^61
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany(
+        "INSERT INTO embeddings VALUES (?, ?)",
+        [(0, [x]), (1, [x + 2000]), (2, [x + 4]), (3, [x + 8])],
+    )
+    assert 3 * x * 1e6 > 2**62
+    # code 0 = ids 0, 2, 3 recentered to x + 4; code 1 = id 1. The L1
+    # column is the exact micro centroid divided once in double, as the
+    # engine's round(sum(|c|) / 1e6, 6) computes it.
+    xm = int(x * 1e6)
+    got = con.sql(pq_train_oracle_sql(1, 2, 1, 1)).fetchall()
+    assert [tuple(r) for r in got] == [
+        (0, 0, 3, 32.0, round((xm + 4_000_000) / 1e6, 6)),
+        (0, 1, 1, 0.0, round((xm + 2_000_000_000) / 1e6, 6)),
+    ]
 
 
 def test_trained_ivf_pq_topk_closed_loop(spark):

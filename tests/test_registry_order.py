@@ -95,21 +95,11 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         # TakeOrdered by slice_topk; still oracle-checked by
         # tests/test_oracle_all.py + the supplement.
         "topk_per_group",
-        # r11 window demotions (slots freed for ann_ivf_pq_topk and
-        # symspell_customer_pairs): J1's left-equi shape stays in-window
-        # via join_left_composite + join_inner_project; PQ acceptance is
-        # subsumed by the fused in-window ann_ivf_pq_topk. Both remain
-        # oracle-checked by tests/test_oracle_all.py + the supplement.
+        # r11 window demotion (slot freed for symspell_customer_pairs):
+        # J1's left-equi shape stays in-window via join_left_composite +
+        # join_inner_project; still oracle-checked by
+        # tests/test_oracle_all.py + the supplement.
         "join_left_single",
-        "ann_pq_recall",
-        # r13 window demotions (slots freed for pq_train_codebooks and
-        # ann_trained_ivf_pq_topk): the frozen-fixture fused serve is
-        # superseded in-window by the trained three-tier path; Lloyd's
-        # unrolled-oracle shape stays in-window via pq_train_codebooks.
-        # Both remain oracle-checked by tests/test_oracle_all.py + the
-        # supplement.
-        "ann_ivf_pq_topk",
-        "kmeans_embedding_clusters",
         # r12 window demotions (slots freed for pca_power_components and
         # fellegi_sunter_part_weights): blocked-linkage stays in-window
         # via symspell_customer_pairs + fellegi_sunter_part_weights;
@@ -118,8 +108,8 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         # tests/test_oracle_all.py + the supplement.
         "fuzzy_part_pairs",
         "pairwise_site_distances",
-        # r10 window demotion (slot freed for kmeans_embedding_clusters):
-        # the Jaccard-pair near-dup shape stays covered in-window by
+        # r10 window demotion (slot freed for the Lloyd k-means row,
+        # itself rotated out r13): the Jaccard-pair near-dup shape stays covered in-window by
         # ppjoin_jaccard_pairs; still oracle-checked by
         # tests/test_oracle_all.py + the supplement.
         "ngram_jaccard_near_dups",
@@ -131,18 +121,15 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "local_supplier_volume",
         "returned_item_customers",
         "sql_entry_point",
-        # ANN/dedup entries: parity also pinned in tests/test_llm_ops.py.
+        # dedup entries: parity also pinned in tests/test_llm_ops.py.
         "minhash_near_dups",
         "simhash_near_dups",
-        "ann_lsh_topk",
-        "ann_ivf_topk",
         # extensions beyond the reference surface, oracle-swept by pytest
         "session_window_tally",
         "asof_join_rates",
         "asof_join_rates_forward",
         "sketch_profile",
         "corpus_clean_pipeline",
-        "ann_quantized_topk",
         "geo_distance_stats",
         "geo_nearest_site",
         "near_dup_clusters",
@@ -157,7 +144,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "chunk_dedup",
         "embedding_norm_stats",
         "bloom_decontaminate",
-        "semantic_dedup",
         "incremental_dedup",
         "lm_quality_scores",
         "duplicate_passage_removal",
@@ -166,7 +152,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "stratified_sample_exact",
         "corpus_drift_metrics",
         "dsir_importance_select",
-        "ann_pq_topk",
         "weighted_sample_topn",
         "winsorized_value_stats",
         "tfidf_top_terms",
@@ -233,17 +218,14 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "contrastive_negative_pairs",
         "spatial_hotspot_clusters",
         "event_trigram_sequences",
-        "semantic_cell_silhouette",
         "leakage_safe_split",
         "source_quality_scorecard",
         "embedding_drift_by_label",
         "domain_reweight_mix",
         "rolling_value_p95",
-        # r05 label-QA / fusion / ANN-evaluation batch, full oracles
+        # r05 label-QA / fusion batch, full oracles
         "annotator_agreement",
         "rank_fusion_select",
-        "ann_lsh_recall",
-        "ann_ivf_recall",
         # r05 privacy/governance gates, full oracles (seeded-Laplace DP);
         # dp_event_type_counts holds a driver-window row since r07
         "k_anonymity_events",
@@ -268,8 +250,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "table_digest_by_flag",
         # r08 Kneser-Ney LM scoring, full oracle
         "kneser_ney_lm_scores",
-        # r08 RBO rank-agreement metric, full oracle
-        "ann_lsh_rbo",
         # r08 Markov removal-effect attribution, full oracle
         "markov_attribution_channels",
         # r08 Z-order layout buckets, full oracle
@@ -278,10 +258,7 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "negative_brand_samples",
         # r07 aHash image near-dups, full oracle
         "image_ahash_near_dups",
-        # r07 JL projection distortion audit, full oracle
-        "jl_distortion_pairs",
         # r09 additions, all full oracles
-        "kmeans_embedding_clusters",
         "good_turing_token_counts",
         "source_lang_diversity",
         "compaction_bin_plan",
@@ -296,7 +273,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "mf_gd_factors",
         "entropy_l_diversity_events",
         "ranking_ndcg_eval",
-        "pca_power_component",
         # (pca_power_components promoted into the r12 driver window)
         # r11 extension families, full oracles
         "kcenter_coreset_select",
@@ -305,8 +281,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "audio_wav_features",
         "dp_value_median_exponential",
         "sequential_patterns_users",
-        "ann_matryoshka_recall",
-        "ann_matryoshka_topk",
         "rendezvous_shard_plan",
         # r11 second batch, full oracles
         "zonemap_prune_shipdate",
@@ -322,7 +296,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "shapley_attribution_channels",
         # r10 second batch: RFM segment rollup
         "rfm_customer_segments",
-        "ann_hamming_topk",
         "inequality_profile_by_source",
         # r05 Apriori market-basket rules, full oracle
         "assoc_rules_copurchase",

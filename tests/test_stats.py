@@ -267,26 +267,6 @@ def test_contrastive_negatives_deterministic(spark):
     assert [n for _, n in sorted(per[0])] == expect
 
 
-def test_cell_silhouette_two_centroids(spark):
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        cell_silhouette,
-    )
-
-    cents = [[0.0, 0.0], [10.0, 0.0]]
-    rows = [
-        (1, [0.0, 1.0]),   # cell 0: a=1, b=sqrt(101)
-        (2, [10.0, 1.0]),  # cell 1: same by symmetry
-        (3, [5.0, 0.0]),   # equidistant: ties to cell 0, s = 0
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["cell"]: r for r in cell_silhouette(df, cents).collect()}
-    s1 = (math.sqrt(101) - 1) / math.sqrt(101)
-    assert got[0]["n_vectors"] == 2 and got[1]["n_vectors"] == 1
-    assert got[1]["mean_silhouette"] == round(s1, 6)
-    assert got[0]["mean_silhouette"] == round((s1 + 0.0) / 2, 6)
-    assert got[0]["mean_intra_dist"] == round((1 + 5) / 2, 6)
-
-
 def test_pairwise_battles_and_bradley_terry(spark):
     from ningaloo_turtle_etl_spark.operators.preference import (
         bradley_terry_ratings,
