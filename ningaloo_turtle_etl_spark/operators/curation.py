@@ -428,248 +428,6 @@ def with_pii_redaction(
     return out.withColumnRenamed("_red", out_col)
 
 
-def bloom_parameters(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
-    """Standard Bloom sizing: m = -n·ln(p)/ln(2)², k = (m/n)·ln(2), with a
-    64-bit floor so the bitmap is always at least one word."""
-    import math
-
-    n = max(1, int(n_items))
-    m = max(64, int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2))))
-    k = max(1, int(round(m / n * math.log(2))))
-    return m, k
-
-
-def _bloom_fold(words, hashes, m_bits: int, k: int):
-    """OR each hash's k Kirsch–Mitzenmacher bit positions into ``words``
-    (uint64 array, mutated in place) — the shared numpy core of the local
-    and distributed bitmap builds."""
-    import numpy as np
-
-    h = np.asarray(hashes, dtype=np.int64).astype(np.uint64)
-    h1 = h & np.uint64(0xFFFFFFFF)
-    h2 = (h >> np.uint64(32)) | np.uint64(1)
-    for i in range(k):
-        pos = (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
-        np.bitwise_or.at(
-            words, (pos // np.uint64(64)).astype(np.int64),
-            np.left_shift(np.uint64(1), pos % np.uint64(64)),
-        )
-    return words
-
-
-def build_bloom_words(hashes, m_bits: int, k: int):
-    """Pack 64-bit hashes into a Bloom bitmap of ``m_bits`` bits, returned
-    as signed int64 words (Spark ``array<bigint>``). Bit positions use
-    Kirsch–Mitzenmacher double hashing — g_i = h1 + i·h2 (mod m) with
-    h1 = low 32 bits, h2 = high 32 bits forced odd — so the Spark-side
-    membership expression can re-derive the exact same positions from the
-    same ``xxhash64`` value with plain integer arithmetic."""
-    import numpy as np
-
-    words = np.zeros((m_bits + 63) // 64, dtype=np.uint64)
-    if hashes is not None and len(hashes):
-        _bloom_fold(words, hashes, m_bits, k)
-    # int64 VIEW (not a Python list): F.lit of a Python list builds a
-    # CreateArray expression — re-evaluated per row, 360 child exprs × k
-    # references — while F.lit of a numpy int64 array becomes a true
-    # Literal(long[]) constant.
-    return words.view(np.int64)
-
-
-# Crossover for the Bloom bitmap build: ≤ this many hashes (8 B each →
-# ≤32 MB) collect-and-build at the driver; beyond it, fold executor-side.
-_BLOOM_COLLECT_MAX = 4_000_000
-
-
-def build_bloom_words_distributed(
-    hash_df: DataFrame,
-    m_bits: int,
-    k: int,
-    depth: int = 2,
-    n_items: int | None = None,
-):
-    """Executor-side Bloom build: each partition folds its hashes into a
-    local numpy bitmap (vectorized, zero per-row Python), partial bitmaps
-    OR-merge up a ``treeReduce`` — so the driver receives O(bitmap) bytes
-    total, independent of vocabulary size. The collect-then-build
-    alternative moves 8 bytes/gram through the driver: ~8 GB at the 10⁹-gram
-    design point, vs ~1.2 GB once here (and intermediate merges land on
-    executors, not the driver, at depth ≥ 2).
-
-    ``hash_df`` must be a single int64 column of 64-bit hashes. The
-    per-partition fold is Arrow-batched ``mapInPandas`` (no per-row Python),
-    emitting ONE bitmap row per partition; only those n_partitions bitmap
-    rows ride the (tiny) RDD hop into ``treeReduce``. Bit-for-bit identical
-    output to :func:`build_bloom_words` on the same hashes (asserted in
-    tests/test_curation.py).
-
-    Pass ``n_items`` (the hash count, known from Bloom sizing) to right-size
-    the fold's parallelism: ~2M hashes per partition, so a small vocabulary
-    folds in ONE task/Python worker instead of one per shuffle partition
-    (spawning 32 workers for a few thousand hashes measurably degrades a
-    local session), while a 10⁹-gram vocabulary still fans out."""
-    import operator
-
-    import numpy as np
-    import pandas as pd
-
-    if n_items is not None:
-        parts = max(1, min(64, int(n_items) // 2_000_000 + 1))
-        hash_df = hash_df.coalesce(parts)
-        if parts <= 8:
-            depth = 1
-
-    n_words = (m_bits + 63) // 64
-
-    def fold(batches):
-        w = np.zeros(n_words, dtype=np.uint64)
-        for batch in batches:
-            hs = batch.iloc[:, 0].to_numpy(dtype=np.int64, copy=False)
-            if hs.size:
-                _bloom_fold(w, hs, m_bits, k)
-        yield pd.DataFrame({"bm": [w.tobytes()]})
-
-    partials = hash_df.mapInPandas(fold, schema="bm binary").rdd.map(
-        lambda r: np.frombuffer(bytes(r[0]), dtype=np.uint64).copy()
-    )
-    try:
-        return partials.treeReduce(operator.or_, depth).view(np.int64)
-    except ValueError:  # zero-partition frame (empty vocab)
-        return np.zeros(n_words, dtype=np.uint64).view(np.int64)
-
-
-def bloom_might_contain(words: Column, m_bits: int, k: int) -> Column:
-    """Membership test as ONE pure-Catalyst boolean over pre-projected
-    columns ``_h1``/``_h2`` (the split 64-bit hash): all k derived bit
-    positions set in ``words``.
-
-    ``words`` must be a LITERAL array (``F.lit(build_bloom_words(...))``),
-    not a column joined onto the rows: a literal is a single constant object
-    in the generated code, while a crossJoin'd one-row bitmap column gets
-    its bytes COPIED into every joined row — measured 17× slower at 50k docs
-    (7.5M gram rows × a 7 KB bitmap of row traffic). Literal plans carry the
-    bitmap once per task; beyond ~tens of MB of bitmap (≈50M+ grams),
-    restructure as k sequential broadcast joins against an (idx, word)
-    table instead.
-
-    ``shiftright`` is arithmetic, but ``& 1`` only reads the target bit, so
-    sign extension from negative words is harmless."""
-    cond = None
-    for i in range(k):
-        pos = (F.col("_h1") + F.lit(i) * F.col("_h2")) % F.lit(m_bits)
-        word = F.element_at(words, F.shiftright(pos, 6).cast("int") + F.lit(1))
-        bit = pos.bitwiseAND(F.lit(63)).cast("int")
-        c = F.call_function("shiftright", word, bit).bitwiseAND(F.lit(1)) == 1
-        cond = c if cond is None else (cond & c)
-    return cond
-
-
-def bloom_contamination_flags(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.1,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Decontamination for eval sets too big to broadcast-join: EXACT same
-    output as ``contamination_flags``, different scale shape.
-
-    ``contamination_flags`` broadcasts the eval vocabulary itself — fine for
-    MB-sized suites, dead at a 10⁹-gram union of eval sets (tens of GB as a
-    join table). Here the broadcast is a Bloom bitmap (~1.2 GB at 10⁹ grams
-    / 1% fpp — broadcastable), tested map-side with pure integer Catalyst
-    expressions over the corpus grams; only the ~fpp fraction of grams that
-    pass feed the exact verification join against the vocabulary (now a
-    shuffle join over true hits + an ~fpp sliver of false positives — far
-    smaller than the corpus gram stream whenever contamination is the rare
-    case, which at real corpus scale it is). Bloom false positives die in the verify join, so the
-    result is exact — no false negatives by construction.
-
-    Driver state is bounded: below ``_BLOOM_COLLECT_MAX`` hashes the bitmap
-    builds from a (cached, ≤32 MB) collect — the cheapest path for MB-scale
-    eval suites; above it the bitmap folds executor-side
-    (:func:`build_bloom_words_distributed` — per-partition numpy bitmaps,
-    treeReduce OR-merge) and only the final ~m_bits/8 bytes reach the
-    driver, never the vocabulary's hashes. Either way driver traffic is
-    capped at 32 MB, not O(vocab)."""
-    per_doc = docs.select(F.col(id_col), tokens(text_col).alias("toks")).select(
-        id_col,
-        F.array_distinct(word_ngrams_from_tokens(F.col("toks"), n)).alias("grams"),
-    )
-    vocab = benchmark_ngram_vocab(benchmark, text_col, n).select("gram")
-    # Persist the (8-byte-wide) hash column across the two eager passes the
-    # sizing needs (count → fold) so the vocab's explode+distinct pipeline
-    # runs once, not once per pass; both passes complete here, so the cache
-    # is released before returning.
-    from pyspark import StorageLevel
-
-    hashes_df = vocab.select(F.xxhash64("gram").alias("h")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        n_vocab = hashes_df.count()
-        m_bits, k = bloom_parameters(n_vocab, fpp)
-        if n_vocab <= _BLOOM_COLLECT_MAX:
-            words = F.lit(
-                build_bloom_words([r["h"] for r in hashes_df.collect()], m_bits, k)
-            )
-        else:
-            words = F.lit(
-                build_bloom_words_distributed(hashes_df, m_bits, k, n_items=n_vocab)
-            )
-    finally:
-        hashes_df.unpersist()
-
-    # explode_OUTER, deliberately (same as contamination_flags): a plain
-    # explode makes InferFiltersFromGenerate add `size(grams)>0 AND
-    # isnotnull(grams)` and push it to the scan with the ENTIRE
-    # tokenizer+gram expression inlined into each conjunct — the text gets
-    # re-split per gram inside the inferred filter (measured 6× slower at
-    # 5k docs). Outer generate infers no filter. The null gram rows it adds
-    # are harmless: xxhash64(null gram) is the seed constant, and a null
-    # gram can never equi-join the vocabulary, so no count is affected.
-    # n_grams riding along (and being grouped on below — functionally
-    # dependent on the doc id) also keeps `grams` doubly-referenced so the
-    # gram build stays a materialized projection.
-    exploded = per_doc.select(
-        id_col, F.size("grams").alias("n_grams"), F.explode_outer("grams").alias("gram")
-    )
-    hashed = exploded.withColumn("_h", F.xxhash64("gram")).withColumns(
-        {
-            "_h1": F.col("_h").bitwiseAND(F.lit(4294967295)),
-            "_h2": F.expr("shiftrightunsigned(_h, 32)").bitwiseOR(F.lit(1)),
-        }
-    )
-    # base comes from the SAME exploded stream (explode_outer keeps ≥1 row
-    # per doc, so no doc is lost): a doc-width partial agg instead of a
-    # second scan + tokenize pass over the corpus.
-    base = exploded.groupBy(id_col).agg(F.first("n_grams").alias("n_grams"))
-    cand = hashed.filter(bloom_might_contain(words, m_bits, k)).select(
-        id_col, "n_grams", "gram"
-    )
-    hits = (
-        cand.join(vocab, on="gram")
-        .groupBy(id_col, "n_grams")
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-        .select(id_col, "n_contaminated")
-    )
-    joined = base.join(hits, on=id_col, how="left").withColumn(
-        "n_contaminated", F.coalesce(F.col("n_contaminated"), F.lit(0))
-    )
-    ratio = F.when(
-        F.col("n_grams") > 0, F.col("n_contaminated") / F.col("n_grams")
-    ).otherwise(F.lit(0.0))
-    return joined.select(
-        id_col,
-        "n_grams",
-        "n_contaminated",
-        ratio.alias("contam_ratio"),
-        (ratio >= threshold).alias("contaminated"),
-    )
-
-
 def budget_select(
     df: DataFrame,
     budget: int,

@@ -138,18 +138,6 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _md5_uniform(*cols) -> Column:
-    """Deterministic uniform in [0, 1): first 8 md5 hex digits of the
-    '#'-joined inputs, as a 32-bit fraction. Pure integer+divide -- the
-    same double on any engine."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws("#", *[c.cast("string") for c in cols])), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    return h / F.lit(float(2**32))
-
-
 def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Fixed (a, b) pairs for the universal-hash MinHash slots, derived from
     md5 of the slot index — deterministic constants, no RNG state, shared by
@@ -255,27 +243,6 @@ def minhash_slots_from_hashes(hashed_shingle_col: Column, num_hashes: int = 32) 
 minhash_signature_md5 = minhash_slots_from_hashes
 
 
-def _fp_window():
-    """Window over an exact-text fingerprint group (module-level so the
-    import stays out of the per-call hot path)."""
-    from pyspark.sql.window import Window
-
-    return Window.partitionBy("_fp")
-
-
-def exact_text_fp(text_col: str | Column) -> Column:
-    """128-bit exact-text fingerprint: xxhash64 under two independent seeds,
-    packed as a 32-hex-char string. A single 64-bit fingerprint silently
-    merges two DISTINCT documents at birthday scale (~2³² docs — reachable
-    at 100 TB), and inside ``collapse_exact`` such a merge would emit a
-    false jaccard=1.0 pair and substitute the representative's shingle set
-    for the collided doc. 128 bits pushes that to ~2⁶⁴ docs."""
-    return F.concat(
-        F.lpad(F.hex(F.xxhash64(text_col)), 16, "0"),
-        F.lpad(F.hex(F.xxhash64(F.lit(0x9E3779B9), text_col)), 16, "0"),
-    )
-
-
 def minhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -286,7 +253,6 @@ def minhash_near_dup_pairs(
     threshold: float = 0.5,
     max_bucket_size: int | None = 500,
     hash_family: str = "xxhash64",
-    collapse_exact: bool = False,
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs with exact-Jaccard verification.
 
@@ -307,86 +273,11 @@ def minhash_near_dup_pairs(
     bit-reproducible in DuckDB, which is what gives the registered query
     its full oracle row. Both are filter-verify; recall/candidate behavior
     is equivalent (tests pin planted-pair recall for both).
-
-    ``collapse_exact=True`` is the heavily-duplicated-corpus scale path:
-    byte-identical texts collapse to one canonical doc (lowest id) BEFORE
-    shingling, LSH runs over canonical docs only, and the pair list is
-    reconstituted afterwards — identical-text pairs at jaccard 1.0 plus
-    every cross-group expansion of each canonical near-dup pair (members
-    share their representative's shingle set, so the expanded jaccard is
-    exact, not approximated). On a corpus that is d× exact-duplicated this
-    cuts shingling/signature work and candidate verification by ~d× while
-    the only quadratic term left is the output pair list itself. On a
-    duplicate-free corpus the collapse is an identity and the result is
-    bit-identical to the direct path. Semantic caveat: ``max_bucket_size``
-    then caps DISTINCT-text bucket membership (replicas no longer inflate
-    bucket sizes toward the cap), and identical-text pairs are always
-    reported even where the direct path's bucket cap could drop them —
-    strictly better recall, but not pairwise-identical on corpora with
-    exact duplicates near a capped bucket.
     """
     from pyspark import StorageLevel
 
     if hash_family not in ("md5", "xxhash64"):
         raise ValueError(f"unknown hash_family: {hash_family!r}")
-    if collapse_exact:
-        fp = df.select(
-            F.col(id_col).alias("id"),
-            F.col(text_col).alias("_txt"),
-            exact_text_fp(text_col).alias("_fp"),
-        )
-        mem = track_cache(
-            fp.select(
-                "id",
-                "_fp",
-                F.min("id").over(_fp_window()).alias("_rep"),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        reps = (
-            fp.join(
-                mem.where(F.col("id") == F.col("_rep")).select("id"), on="id"
-            )
-            .select(F.col("id").alias(id_col), F.col("_txt").alias(text_col))
-        )
-        rep_pairs = minhash_near_dup_pairs(
-            reps,
-            text_col=text_col,
-            id_col=id_col,
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
-            bands=bands,
-            threshold=threshold,
-            max_bucket_size=max_bucket_size,
-            hash_family=hash_family,
-            collapse_exact=False,
-        )
-        intra = (
-            mem.alias("a")
-            .join(
-                mem.alias("b"),
-                on=[
-                    F.col("a._fp") == F.col("b._fp"),
-                    F.col("a.id") < F.col("b.id"),
-                ],
-            )
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        ma = mem.select(F.col("_rep").alias("id_a"), F.col("id").alias("_ma"))
-        mb = mem.select(F.col("_rep").alias("id_b"), F.col("id").alias("_mb"))
-        cross = (
-            rep_pairs.join(ma, on="id_a")
-            .join(mb, on="id_b")
-            .select(
-                F.least("_ma", "_mb").alias("id_a"),
-                F.greatest("_ma", "_mb").alias("id_b"),
-                "jaccard",
-            )
-        )
-        return intra.unionByName(cross)
     rows = num_hashes // bands
     # Verification operates on HASHED shingle sets: array_intersect over
     # longs is far cheaper than over 3-gram strings, and |A∪B| comes from

@@ -58,16 +58,6 @@ def max_lon_span_deg(max_km: float, lat_bound_deg: float) -> float:
     return 2.0 * math.degrees(math.asin(sin_half / cos_b))
 
 
-def grid_cell(lat, lon, cell_deg: float, cell_deg_lon: float | None = None) -> Column:
-    """Stable integer cell id for a lat/lon; ``cell_deg`` is the latitude
-    cell height, ``cell_deg_lon`` the longitude width (defaults to square
-    cells). Longitude wraps modulo 360°."""
-    if cell_deg_lon is None:
-        cell_deg_lon = cell_deg
-    nx, cell_deg_lon = _snap_lon_grid(cell_deg_lon)
-    return _cell_id(lat, lon, cell_deg, cell_deg_lon, nx)
-
-
 def _cell_id(lat, lon, cell_deg: float, cell_deg_lon: float, nx: int) -> Column:
     """Cell id from an ALREADY-snapped longitude grid — every caller that
     joins two sides on cells must route both through the same (nx, width)
@@ -143,7 +133,7 @@ def nearest_site_join(
         F.col(lat_col).alias("s_lat"),
         F.col(lon_col).alias("s_lon"),
     ).withColumn(
-        # _cell_id, NOT grid_cell: both sides must use the one snapped
+        # Both sides must go through _cell_id with the one snapped
         # (nx, width) pair computed above.
         "_cell",
         _cell_id(F.col("s_lat"), F.col("s_lon"), cell_deg, cell_deg_lon, nx),
@@ -214,8 +204,8 @@ def spatial_hotspots(
     degree cell is thin, so hotspots split sooner, and the ±180°
     antimeridian is a hard seam (a blob straddling it reports as two
     clusters; shift longitudes first if your survey area crosses it);
-    use the cos-compensated `grid_cell` before ray-cast joins where
-    distance semantics matter."""
+    use the cos-compensated grid of `nearest_site_join` where distance
+    semantics matter."""
     if min_pts < 1:
         raise ValueError("min_pts must be >= 1")
     lat, lon = F.col(lat_col), F.col(lon_col)

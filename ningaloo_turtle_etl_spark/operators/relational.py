@@ -122,28 +122,6 @@ def count_pivot(
     return pivoted.na.fill(fill, subset=value_cols)
 
 
-def spread(
-    df: DataFrame,
-    keys: Sequence[str],
-    pivot_col: str,
-    value_col: str,
-    values: Sequence[str] | None = None,
-    fill: float | int | None = 0,
-) -> DataFrame:
-    """tidyr ``spread(key, value, fill=…)`` over an already-aggregated long
-    frame — long→wide with one column per ``pivot_col`` value. ``first`` is
-    the cell function because (keys, pivot_col) is unique post-aggregation."""
-    pivoted = (
-        df.groupBy(*keys)
-        .pivot(pivot_col, list(values) if values is not None else None)
-        .agg(F.first(value_col))
-    )
-    if fill is not None:
-        value_cols = [c for c in pivoted.columns if c not in keys]
-        pivoted = pivoted.na.fill(fill, subset=value_cols)
-    return pivoted
-
-
 # --- A7: histogram binning --------------------------------------------------
 def histogram(df: DataFrame, col: str, binwidth: float, name: str = "n") -> DataFrame:
     """``stat_bin(binwidth=…)`` (wastd-api.Rmd:43-45) as floor-bucket counts —
@@ -173,15 +151,6 @@ def with_observation_status(
         .when(F.col(season_col) != prev_season, F.lit("Remigrant"))
         .otherwise(F.lit("Resighting")),
     )
-
-
-def with_prev_season(
-    df: DataFrame, entity_col: str, season_col: str, name: str = "prev_season"
-) -> DataFrame:
-    """InterseasonRemigration history (tagging-etl.Rmd:202-204):
-    lag(season) over (partition by turtle order by season)."""
-    w = Window.partitionBy(entity_col).orderBy(season_col)
-    return df.withColumn(name, F.lag(season_col).over(w))
 
 
 # --- P4: predicate-based column selection ----------------------------------
@@ -460,74 +429,6 @@ def edit_similarity_self_join(
     )
 
 
-def audience_overlap(
-    df: DataFrame,
-    segment_col: str,
-    member_col: str,
-) -> DataFrame:
-    """Exact pairwise audience overlap between segments (event types,
-    campaigns, sources): for every unordered segment pair the distinct
-    member counts, the intersection, Jaccard, and the overlap coefficient
-    ``n_both / min(n_a, n_b)`` — the is-this-segment-just-a-subset screen
-    behind mix planning (the KMV sketch variant answers the same question
-    approximately when segments stop fitting; this is the exact
-    calibration form).
-
-    Output: (segment_a, segment_b, n_a, n_b, n_both, jaccard,
-    overlap_coef), 6dp.
-
-    Scale shape: one distinct (segment, member) projection; the pair
-    explosion self-joins ON MEMBER — each member contributes only its own
-    segment pairs (members belong to few segments, so the fan-out is
-    per-member-degree², not segments²); the pair tally map-side combines
-    to the segments² grid and the size dim broadcasts. A member in s
-    segments with s large would fan s² — cap segment membership upstream
-    if segments overlap near-totally."""
-    m = df.select(
-        F.col(segment_col).alias("seg"), F.col(member_col).alias("mem")
-    ).distinct()
-    sizes = m.groupBy("seg").agg(F.count(F.lit(1)).alias("n"))
-    a, b = m.alias("a"), m.alias("b")
-    inter = (
-        a.join(
-            b,
-            on=[
-                F.col("a.mem") == F.col("b.mem"),
-                F.col("a.seg") < F.col("b.seg"),
-            ],
-        )
-        .groupBy(
-            F.col("a.seg").alias("segment_a"),
-            F.col("b.seg").alias("segment_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_both"))
-    )
-    sa = sizes.select(
-        F.col("seg").alias("segment_a"), F.col("n").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col("seg").alias("segment_b"), F.col("n").alias("n_b")
-    )
-    out = inter.join(F.broadcast(sa), on="segment_a").join(
-        F.broadcast(sb), on="segment_b"
-    )
-    return out.select(
-        "segment_a",
-        "segment_b",
-        "n_a",
-        "n_b",
-        "n_both",
-        F.round(
-            F.col("n_both")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_both")).cast("double"),
-            6,
-        ).alias("jaccard"),
-        F.round(
-            F.col("n_both") / F.least("n_a", "n_b").cast("double"), 6
-        ).alias("overlap_coef"),
-    )
-
-
 def moment_profile(
     df: DataFrame,
     value_col: str,
@@ -593,143 +494,4 @@ def moment_profile(
         F.round(m2, 6).alias("variance"),
         F.round(g1, 6).alias("skewness"),
         F.round(g2, 6).alias("kurtosis_excess"),
-    )
-
-
-def pareto_frontier_2d(
-    df: DataFrame,
-    minimize_col: str,
-    maximize_col: str,
-    id_cols: Sequence[str] = (),
-) -> DataFrame:
-    """2-D skyline (Pareto frontier): rows no other row dominates, where
-    domination means <= on ``minimize_col`` AND >= on ``maximize_col``
-    with at least one strict. Classic OLAP skyline query (Borzsony et al.,
-    ICDE'01) — the reference has no native operator for it, and neither
-    does Spark, so it composes from two aggregation grains:
-
-    1. collapse to the DISTINCT ``minimize_col`` grain keeping each
-       value's max of ``maximize_col`` (a map-side-combinable groupBy —
-       the only row-count-sized shuffle);
-    2. on that value-grain table (bounded by the MINIMIZE column's
-       distinct count, not the row count) a running strict-prefix max via
-       an ordered window decides which (min_val, max_val) pairs survive:
-       keep iff max_val > max over all strictly smaller min_vals;
-    3. semi-join the surviving pairs back to the full rows, so ties
-       (identical value pairs) are all kept — neither dominates the other.
-
-    The single-partition window in step 2 runs on the distinct-value
-    grain only (like histogram/summary grains elsewhere); at 100 TB the
-    frontier input to it is |distinct prices|, not |rows|. Returns the
-    full surviving rows (id_cols + both value cols)."""
-    mn, mx = F.col(minimize_col), F.col(maximize_col)
-    # rows with a NULL value column are excluded up front: under SQL
-    # three-valued dominance a NULL row neither dominates nor is
-    # dominated, so "on the frontier" is undefined for it — and Spark's
-    # nulls-first window ordering would otherwise let a NULL minimize
-    # value shadow every real row
-    df = df.filter(mn.isNotNull() & mx.isNotNull())
-    grain = df.groupBy(minimize_col).agg(F.max(mx).alias("_gmax"))
-    w = (
-        Window.orderBy(mn)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    surviving = (
-        grain.withColumn("_pmax", F.max("_gmax").over(w))
-        .filter(
-            F.col("_pmax").isNull() | (F.col("_gmax") > F.col("_pmax"))
-        )
-        .select(minimize_col, F.col("_gmax").alias(maximize_col))
-    )
-    return df.join(
-        F.broadcast(surviving), on=[minimize_col, maximize_col], how="left_semi"
-    ).select(*id_cols, minimize_col, maximize_col)
-
-
-def rfm_segments(
-    orders: DataFrame,
-    cust_col: str,
-    date_col: str,
-    amount_col: str,
-    epoch_seconds: Column | None = None,
-) -> DataFrame:
-    """RFM (recency / frequency / monetary) customer segmentation — the
-    classic marketing-OLAP rollup: score every customer 1-5 on how
-    recently they ordered, how often, and how much they spent, then
-    bucket the (R, F) plane into named lifecycle segments.
-
-    Scores are quintiles by RANK, not by value: ``ntile(5)`` over a
-    deterministic total order (measure, then customer key as the
-    tiebreak) — the identical ANSI NTILE definition both engines
-    implement, so the assignment is engine-portable with no percentile-
-    interpolation semantics in play. 5 is always "best": most recent,
-    most frequent, biggest spender. Monetary sums in integer micros
-    (exact, order-independent); recency counts whole epoch days back
-    from the dataset's latest order date (self-contained — no wall
-    clock, so the result is reproducible).
-
-    Output is the SEGMENT grain, not the customer grain: one row per
-    observed (segment, r, f, m) cell with customer count, mean monetary
-    and mean recency — ≤ 125 rows regardless of input size.
-
-    Scale shape: one map-side-combining aggregate to the customer grain,
-    then ntile's global sort of that DIMENSION-sized table (the same
-    documented trade as score_decile_lift: customers are ~10⁻⁴ of fact
-    rows; for a truly huge customer dimension swap ntile for broadcast
-    approx-quantile boundaries — rank ties then need the same explicit
-    tiebreak). ``epoch_seconds`` lets callers inject an NTZ-safe
-    timestamp→epoch expression (see temporal._epoch_seconds)."""
-    ep = (
-        epoch_seconds
-        if epoch_seconds is not None
-        else F.to_unix_timestamp(F.col(date_col))
-    )
-    per = orders.groupBy(F.col(cust_col).alias("c")).agg(
-        F.max(F.floor(ep / F.lit(86400)).cast("long")).alias("last_day"),
-        F.count(F.lit(1)).cast("long").alias("freq"),
-        F.sum(F.round(F.col(amount_col) * 1e6, 0).cast("long")).alias("mon"),
-    )
-    # dataset-max via an unpartitioned window on the CUSTOMER grain (the
-    # frame is already dimension-sized and about to be globally sorted
-    # for ntile anyway) — a separate agg branch would re-scan the fact
-    sc = per.withColumn(
-        "gmax", F.max("last_day").over(Window.partitionBy())
-    ).withColumn("r_days", F.col("gmax") - F.col("last_day"))
-    sc = sc.select(
-        "c",
-        "r_days",
-        "freq",
-        "mon",
-        F.ntile(5)
-        .over(Window.orderBy(F.col("r_days").desc(), F.col("c")))
-        .alias("r_score"),
-        F.ntile(5)
-        .over(Window.orderBy(F.col("freq"), F.col("c")))
-        .alias("f_score"),
-        F.ntile(5)
-        .over(Window.orderBy(F.col("mon"), F.col("c")))
-        .alias("m_score"),
-    )
-    r, f = F.col("r_score"), F.col("f_score")
-    segment = (
-        F.when((r >= 4) & (f >= 4), "champion")
-        .when((r >= 4) & (f <= 2), "recent_low_freq")
-        .when((r <= 2) & (f >= 4), "at_risk")
-        .when((r <= 2) & (f <= 2), "hibernating")
-        .otherwise("core")
-    )
-    return (
-        sc.groupBy(
-            segment.alias("segment"), "r_score", "f_score", "m_score"
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.round(
-                F.sum("mon") / F.lit(1e6) / F.count(F.lit(1)), 6
-            ).alias("avg_monetary"),
-            F.round(
-                F.sum("r_days") * F.lit(1.0) / F.count(F.lit(1)), 6
-            ).alias("avg_recency_days"),
-        )
-        .orderBy("r_score", "f_score", "m_score")
     )

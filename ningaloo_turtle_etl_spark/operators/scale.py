@@ -492,7 +492,7 @@ def rendezvous_shard_plan(
     cache — without it the scan plus 2(n+1) md5s per key re-ran per
     action (r11 verdict item 4); the tiny (n+1)-row output is
     eager-checkpointed before the release, per the repo convention
-    (als_rank1_factors, trained_ivf_pq_topk)."""
+    (trained_ivf_pq_topk)."""
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
     from ningaloo_turtle_etl_spark.operators.dedup import md5_hash60

@@ -669,96 +669,6 @@ def rrf_fuse(
     return out.withColumn("rrf_score", F.round(fused, ndigits))
 
 
-def negative_samples(
-    examples: DataFrame,
-    example_id_col: str,
-    item_weights: DataFrame,
-    item_col: str,
-    weight_col: str,
-    n_neg: int = 4,
-    power: float = 0.75,
-    seed: str = "neg",
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Deterministic frequency-smoothed negative sampling — the word2vec
-    recipe (Mikolov et al. 2013): for every positive example draw
-    ``n_neg`` items from the unigram^``power`` distribution (0.75 damps
-    the head so rare items still appear; power 0 = uniform, 1 = raw
-    frequency). Draws are md5 uniforms keyed by (example, slot, seed) —
-    retry-stable, replayable, no RNG state — mapped through the
-    inverse CDF of the smoothed weights.
-
-    Output: (example, slot, item) — exactly n_neg rows per example.
-
-    Scale shape: the CDF is a vocabulary-grain window (cumsum over the
-    item dim, never the corpus); the inverse-CDF lookup is the bucketed
-    interval-join pattern (`operators/temporal.py range_join`): each
-    item's [lo, hi) interval explodes into the ⌊·n_buckets⌋ buckets it
-    overlaps (≈1 each), draws join on their bucket EQUALITY and a
-    residual lo ≤ u < hi filter — never a nested-loop inequality join,
-    so the plan scales to million-item vocabularies. Collisions with
-    the example's own positive item are the caller's filter (standard
-    practice varies; keeping it out keeps this op composable)."""
-    if n_neg < 1:
-        raise ValueError("n_neg must be >= 1")
-    if n_buckets < 1:
-        raise ValueError("n_buckets must be >= 1")
-    from pyspark.sql.window import Window
-
-    from ningaloo_turtle_etl_spark.operators.dedup import _md5_uniform
-
-    w = F.pow(F.col(weight_col).cast("double"), F.lit(float(power)))
-    items = item_weights.select(
-        F.col(item_col).alias("item"), w.alias("_w")
-    ).filter(F.col("_w") > 0)
-    cw = Window.orderBy("item").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # total = the LAST cumulative value, not a separate SUM: the window
-    # cumsum adds in item order on every engine, while a free-order SUM
-    # can differ in the last ulp and shift an interval boundary exactly
-    # onto a draw.
-    allw = Window.orderBy("item").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = (
-        items.withColumn("_cum", F.sum("_w").over(cw))
-        .withColumn("_tot", F.max("_cum").over(allw))
-        .select(
-            "item",
-            ((F.col("_cum") - F.col("_w")) / F.col("_tot")).alias("lo"),
-            (F.col("_cum") / F.col("_tot")).alias("hi"),
-        )
-    )
-    b = F.lit(int(n_buckets))
-    intervals = cum.select(
-        "item",
-        "lo",
-        "hi",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("lo") * b).cast("int"),
-                F.least(
-                    F.floor(F.col("hi") * b).cast("int"), b.cast("int") - 1
-                ),
-            )
-        ).alias("_bk"),
-    )
-    draws = examples.select(
-        F.col(example_id_col).alias("example")
-    ).select(
-        "example",
-        F.explode(F.sequence(F.lit(0), F.lit(int(n_neg) - 1))).alias("slot"),
-    ).withColumn(
-        "_u", _md5_uniform(F.col("example"), F.col("slot"), F.lit(seed))
-    ).withColumn("_bk", F.floor(F.col("_u") * b).cast("int"))
-    return (
-        draws.join(F.broadcast(intervals), on="_bk")
-        .filter((F.col("_u") >= F.col("lo")) & (F.col("_u") < F.col("hi")))
-        .select("example", "slot", "item")
-    )
-
-
 def kcenter_select(
     corpus: DataFrame,
     k: int = 8,

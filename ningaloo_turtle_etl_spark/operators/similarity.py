@@ -9,8 +9,8 @@
   buckets as pure column expressions, the LSH blocking of
   ``dedup.embedding_near_dup_pairs``.
 - TF-IDF pairs, label centroids, hard negatives, embedding drift,
-  margin bitext mining, ranking metrics, rank-1 MF/ALS and deflated
-  power-iteration PCA (``pca_power_components``).
+  margin bitext mining, ranking metrics and deflated power-iteration
+  PCA (``pca_power_components``).
 """
 
 from __future__ import annotations
@@ -454,142 +454,6 @@ def _recenter_micro(s: int, n: int) -> int:
     return (2 * int(s) + int(n)) // (2 * int(n))
 
 
-def mf_gd_factors(
-    ratings: DataFrame,
-    iterations: int = 3,
-    lr: float = 0.0625,
-    user_col: str = "user_id",
-    item_col: str = "item_id",
-    rating_col: str = "rating",
-) -> DataFrame:
-    """DISTRIBUTED rank-1 matrix-factorization training (Funk-SVD first
-    factor) by synchronous full-batch gradient descent — a recsys /
-    preference-model trainer: learn p_u, q_i minimizing
-    Σ (r_ui − p_u·q_i)² without MLlib.
-
-    Per round (all updates read the ROUND-START factors — synchronous,
-    so the trajectory is partition-order-free):
-
-        e_ui  = r_ui − p_u·q_i
-        p_u  += lr · mean_i(e_ui · q_i)
-        q_i  += lr · mean_u(e_ui · p_u)
-
-    MEAN (not sum) gradients keep the step bounded by lr·|e|·|factor|
-    regardless of a node's degree — a power-law user with 10⁶ ratings
-    takes the same-magnitude step as a cold one, so the fixed lr
-    survives any scale. Determinism across engines (integer-nano
-    gradients): each pair's gradient term rounds to integer nanos
-    BEFORE the per-key exact-integer SUM, so summation order can never
-    move a factor; everything else is plain double arithmetic in an
-    operation order the oracle mirrors token-for-token. lr defaults to
-    1/16 — exactly representable in binary, immune to how an engine
-    parses decimal literals.
-
-    Scale shape per round: one join of the ratings onto the two
-    factor vectors (factor tables are entity-sized — broadcast when they
-    fit, hash-join co-partitioned by key when they don't) and two
-    map-side-combined aggregates; rounds are driver-counted with a
-    localCheckpoint each (O(1) lineage, the connected_components
-    convention).
-    Returns ('cust'|'part'-style side labels via col names) — one row
-    per user and per item: (side, id, factor, train_rmse), where
-    train_rmse is the final-model fit over the training pairs."""
-    r = ratings.select(
-        F.col(user_col).alias("u"),
-        F.col(item_col).alias("i"),
-        F.col(rating_col).cast("double").alias("r"),
-    ).persist()
-    p = (
-        r.select("u")
-        .distinct()
-        .select(
-            "u",
-            (
-                F.lit(0.5)
-                + (F.col("u") % 7).cast("double") / F.lit(10).cast("double")
-            ).alias("pf"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    q = (
-        r.select("i")
-        .distinct()
-        .select(
-            "i",
-            (
-                F.lit(0.5)
-                + (F.col("i") % 11).cast("double") / F.lit(10).cast("double")
-            ).alias("qf"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    lrc = F.lit(float(lr))
-    for _ in range(iterations):
-        j = r.join(F.broadcast(p), on="u").join(F.broadcast(q), on="i")
-        e = F.col("r") - F.col("pf") * F.col("qf")
-        terms = j.select(
-            "u",
-            "i",
-            F.round(e * F.col("qf") * F.lit(1e9), 0).cast("long").alias("tp"),
-            F.round(e * F.col("pf") * F.lit(1e9), 0).cast("long").alias("tq"),
-        )
-        gp = terms.groupBy("u").agg(
-            F.sum("tp").alias("g"), F.count(F.lit(1)).alias("n")
-        )
-        gq = terms.groupBy("i").agg(
-            F.sum("tq").alias("g"), F.count(F.lit(1)).alias("n")
-        )
-        p = (
-            p.join(gp, on="u")
-            .select(
-                "u",
-                (
-                    F.col("pf")
-                    + lrc * ((F.col("g") / F.lit(1e9)) / F.col("n"))
-                ).alias("pf"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        q = (
-            q.join(gq, on="i")
-            .select(
-                "i",
-                (
-                    F.col("qf")
-                    + lrc * ((F.col("g") / F.lit(1e9)) / F.col("n"))
-                ).alias("qf"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    fit = r.join(F.broadcast(p), on="u").join(F.broadcast(q), on="i")
-    err = F.col("r") - F.col("pf") * F.col("qf")
-    sq = err * err
-    rmse_row = fit.select(
-        F.round(sq * F.lit(1e9), 0).cast("long").alias("t")
-    ).agg(
-        F.round(
-            F.sqrt((F.sum("t") / F.lit(1e9)) / F.count(F.lit(1))), 6
-        ).alias("train_rmse")
-    )
-    r.unpersist()
-    out = (
-        p.select(
-            F.lit("user").alias("side"),
-            F.col("u").alias("id"),
-            F.round("pf", 6).alias("factor"),
-        )
-        .unionByName(
-            q.select(
-                F.lit("item").alias("side"),
-                F.col("i").alias("id"),
-                F.round("qf", 6).alias("factor"),
-            )
-        )
-        .crossJoin(F.broadcast(rmse_row))
-    )
-    return out.orderBy("side", "id")
-
-
 def ranking_metrics(
     ranked: DataFrame,
     labels: DataFrame,
@@ -980,137 +844,3 @@ def pca_power_components(
         F.round("loading", 6).alias("loading"),
         F.round("eigenvalue", 6).alias("eigenvalue"),
     ).orderBy("component", "dim_idx")
-
-
-def als_rank1_factors(
-    ratings: DataFrame,
-    iterations: int = 3,
-    lam: float = 0.25,
-    user_col: str = "user_id",
-    item_col: str = "item_id",
-    rating_col: str = "rating",
-) -> DataFrame:
-    """DISTRIBUTED rank-1 ALTERNATING LEAST SQUARES — the closed-form
-    counterpart of :func:`mf_gd_factors` (same model Σ(r_ui − p_u·q_i)²,
-    different optimizer): each half-step solves its side exactly given
-    the other,
-
-        p_u = Σ_i r_ui·q_i / (λ + Σ_i q_i²)
-        q_i = Σ_u r_ui·p_u / (λ + Σ_u p_u²)
-
-    (ridge λ keeps lonely entities finite), which converges in far fewer
-    passes than GD and is embarrassingly parallel per entity — the
-    reason ALS, not SGD, is the classic distributed recsys trainer.
-
-    Entirely distributed: no driver-side state at all — factors live in
-    entity-sized DataFrames; each half-step is one ratings⋈factor join
-    (broadcast when the factor side fits, co-partitioned hash join when
-    it doesn't) plus one map-side-combined aggregate, localCheckpoint
-    per update (O(1) lineage). Determinism: the per-rating numerator
-    and denominator terms round to integer NANOS before their exact-
-    integer per-key SUMs (partition order can never move a factor);
-    the division is plain double in an operation order the unrolled
-    DuckDB oracle mirrors token-for-token. Init q_i = 0.5 + (i%7)/10
-    (the mf_gd convention); λ defaults to 1/4, binary-exact.
-
-    Returns one row per entity: (side 'user'|'item', id, factor,
-    train_rmse) — factor 6dp, train_rmse the final-model fit (nano-
-    quantized squared errors, exact mean, sqrt) shared on every row."""
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    r = ratings.select(
-        F.col(user_col).alias("u"),
-        F.col(item_col).alias("i"),
-        F.col(rating_col).cast("double").alias("r"),
-    ).persist()
-    r.count()
-    lam_l = F.lit(float(lam))
-
-    def _nano_sum(term):
-        return F.sum(F.round(term * F.lit(1e9), 0).cast("long"))
-
-    q = (
-        r.select("i")
-        .distinct()
-        .select(
-            "i",
-            (
-                F.lit(0.5)
-                + (F.col("i") % 7).cast("double") / F.lit(10).cast("double")
-            ).alias("qf"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    p = None
-    try:
-        for _ in range(int(iterations)):
-            p = (
-                r.join(q, on="i")
-                .groupBy("u")
-                .agg(
-                    _nano_sum(F.col("r") * F.col("qf")).alias("num"),
-                    _nano_sum(F.col("qf") * F.col("qf")).alias("den"),
-                )
-                .select(
-                    "u",
-                    (
-                        (F.col("num") / F.lit(1e9))
-                        / (lam_l + F.col("den") / F.lit(1e9))
-                    ).alias("pf"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            q = (
-                r.join(p, on="u")
-                .groupBy("i")
-                .agg(
-                    _nano_sum(F.col("r") * F.col("pf")).alias("num"),
-                    _nano_sum(F.col("pf") * F.col("pf")).alias("den"),
-                )
-                .select(
-                    "i",
-                    (
-                        (F.col("num") / F.lit(1e9))
-                        / (lam_l + F.col("den") / F.lit(1e9))
-                    ).alias("qf"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        err = F.col("r") - F.col("pf") * F.col("qf")
-        fit = (
-            r.join(p, on="u")
-            .join(q, on="i")
-            .agg(
-                _nano_sum(err * err).alias("se"),
-                F.count(F.lit(1)).cast("long").alias("n"),
-            )
-            .select(
-                F.sqrt(
-                    (F.col("se") / F.lit(1e9)) / F.col("n")
-                ).alias("train_rmse")
-            )
-        )
-        users = p.select(
-            F.lit("user").alias("side"),
-            F.col("u").cast("long").alias("id"),
-            F.col("pf").alias("factor"),
-        )
-        items = q.select(
-            F.lit("item").alias("side"),
-            F.col("i").cast("long").alias("id"),
-            F.col("qf").alias("factor"),
-        )
-        out = (
-            users.unionByName(items)
-            .crossJoin(F.broadcast(fit))
-            .select(
-                "side",
-                "id",
-                F.round("factor", 6).alias("factor"),
-                F.round("train_rmse", 6).alias("train_rmse"),
-            )
-            .orderBy("side", "id")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        r.unpersist()

@@ -353,111 +353,6 @@ def markov_transitions(
     )
 
 
-def funnel_steps(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Ordered funnel analysis: for each user, step i counts as reached
-    only by an event of ``steps[i]`` STRICTLY AFTER the user's earliest
-    completion of step i−1 (the classic earliest-completion greedy, which
-    maximizes conversion counts for ordered funnels). Returns one row per
-    step: (step_index, step, users_reached, conversion_rate) with the rate
-    relative to step 1.
-
-    Scale shape: one conditional-min aggregation per step over only that
-    step's events (type filter pushes to the scan), joined user-keyed to
-    the previous frontier — the frontier is users-sized, events are
-    touched once per step with their own pushed filter, and the loop is
-    driver-counted with length = funnel length. Each frontier is
-    eager-checkpointed (users-grain, bounded): unpersisted, step k's
-    count re-ran the whole join chain from the scan — O(k²) scans over
-    a k-step funnel (the r11-verdict fan-out pattern, swept r12)."""
-    if not steps:
-        raise ValueError("steps must be non-empty")
-    frontier = (
-        events.where(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_t"))
-        .localCheckpoint(eager=True)
-    )
-    counts = [frontier.count()]
-    for step in steps[1:]:
-        nxt = events.where(F.col(type_col) == step).select(
-            user_col, F.col(ts_col).alias("_ts")
-        )
-        frontier = (
-            nxt.join(frontier, on=user_col)
-            .where(F.col("_ts") > F.col("_t"))
-            .groupBy(user_col)
-            .agg(F.min("_ts").alias("_t"))
-            .localCheckpoint(eager=True)
-        )
-        counts.append(frontier.count())
-    spark = events.sparkSession
-    base = max(counts[0], 1)
-    rows = [
-        (i + 1, s, counts[i], round(counts[i] / base, 6))
-        for i, s in enumerate(steps)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "step_index int, step string, users_reached long, "
-        "conversion_rate double",
-    )
-
-
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Weekly cohort retention: cohort = ISO week (Monday-truncated) of a
-    user's first event; a cohort member is retained at offset k if they
-    have any event in cohort_week + k weeks. Returns (cohort_week,
-    week_offset, n_active, cohort_size, retention_rate) for every
-    (cohort, offset) with activity — offset 0 is the cohort itself, so
-    its retention_rate is 1.0 by construction.
-
-    Scale shape: first-event election is one user-keyed min; the activity
-    matrix is distinct (user, week) — both shuffles carry user-sized rows,
-    never raw events; the final rollup is cohort×offset-sized (tiny)."""
-    wk = F.date_trunc("week", F.col(ts_col)).cast("date")
-    first = events.groupBy(user_col).agg(
-        F.min(wk).alias("cohort_week")
-    )
-    active = events.select(user_col, wk.alias("_wk")).distinct()
-    sizes = first.groupBy("cohort_week").agg(
-        F.count(F.lit(1)).alias("cohort_size")
-    )
-    return (
-        active.join(first, on=user_col)
-        .select(
-            "cohort_week",
-            (
-                F.datediff(F.col("_wk"), F.col("cohort_week")) / 7
-            )
-            .cast("long")
-            .alias("week_offset"),
-            user_col,
-        )
-        .groupBy("cohort_week", "week_offset")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-        .join(sizes, on="cohort_week")
-        .select(
-            "cohort_week",
-            "week_offset",
-            "n_active",
-            "cohort_size",
-            F.round(
-                F.col("n_active") / F.col("cohort_size").cast("double"), 6
-            ).alias("retention_rate"),
-        )
-    )
-
-
 def sessionize(
     df: DataFrame,
     key_col: str,
@@ -522,79 +417,6 @@ def session_stats(
     )
 
 
-def session_funnel(
-    events: DataFrame,
-    steps: list[str],
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    gap_seconds: int = 1800,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Within-session ordered funnel: like ``funnel_steps`` but the
-    conversion unit is a SESSION (gap-based, see ``sessionize``), so a
-    view today and a purchase next week no longer count as a conversion —
-    the attribution-correct funnel for browse-to-buy flows.
-
-    Returns one row per step: (step_index, step, sessions_reached,
-    conversion_rate relative to step 1).
-
-    Scale shape: sessionize's one key shuffle, then funnel_steps'
-    per-step conditional-min chain keyed on the (key, session) composite
-    — frontier is sessions-sized, each step touches only its own
-    type-filtered events."""
-    labeled = sessionize(events, key_col, ts_col, gap_seconds, tiebreak_col)
-    keyed = labeled.withColumn(
-        "_sess",
-        F.concat_ws(
-            "#",
-            F.col(key_col).cast("string"),
-            F.col("session_seq").cast("string"),
-        ),
-    )
-    out = funnel_steps(keyed, steps, user_col="_sess", ts_col=ts_col,
-                       type_col=type_col)
-    return out.withColumnRenamed("users_reached", "sessions_reached")
-
-
-def eventually_follows(
-    events: DataFrame,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Process-mining eventually-follows matrix: for every ordered pair of
-    event types (a, b), the number of keys whose FIRST a strictly precedes
-    their FIRST b — the long-range ordering structure that a direct
-    transition matrix (Markov chain on adjacent events) can't see.
-
-    Output: (type_a, type_b, n_keys, frac) where frac divides by the keys
-    having BOTH types; first-timestamp ties count for neither direction.
-
-    Scale shape: one (key, type) min-aggregate over the fact (map-side
-    combined), then all pair math runs on the keys x types first-seen
-    table; the pair join is per-key with a types^2 fan-out (types are
-    few). Raw events are touched once."""
-    firsts = events.groupBy(
-        F.col(key_col).alias("k"), F.col(type_col).alias("t")
-    ).agg(F.min(ts_col).alias("ft"))
-    a, b = firsts.alias("a"), firsts.alias("b")
-    pairs = a.join(
-        b,
-        on=[F.col("a.k") == F.col("b.k"), F.col("a.t") != F.col("b.t")],
-    ).select(
-        F.col("a.t").alias("type_a"),
-        F.col("b.t").alias("type_b"),
-        (F.col("a.ft") < F.col("b.ft")).cast("long").alias("before"),
-    )
-    return pairs.groupBy("type_a", "type_b").agg(
-        F.sum("before").alias("n_keys"),
-        F.round(
-            F.sum("before") / F.count(F.lit(1)).cast("double"), 6
-        ).alias("frac"),
-    )
-
-
 def frequent_sequences(
     df: DataFrame,
     key_col: str,
@@ -642,453 +464,6 @@ def frequent_sequences(
     ).limit(int(top_k))
 
 
-def markov_removal_attribution(
-    events: DataFrame,
-    user_col: str,
-    channel_col: str,
-    ts_col: str,
-    order_col: str,
-    conversion: str,
-    rounds: int = 12,
-    max_channels: int = 500,
-) -> DataFrame:
-    """Markov-chain removal-effect attribution (Anderl et al. 2016 — the
-    data-driven alternative to last-touch): build per-user journeys
-    (touch channels in (ts, order_col) order, truncated at the first
-    ``conversion`` event), fit the first-order transition matrix over
-    START/channels/CONV/DROP, and credit each channel by its REMOVAL
-    EFFECT — how much the START→CONV absorption probability falls when
-    that channel's node is knocked out (its state forced to absorb 0).
-    Last-touch credits only the final click; removal effect credits a
-    channel for every path that needed it.
-
-    Absorption runs ``rounds`` fixed synchronous value-iteration steps
-    (journeys longer than ``rounds`` contribute nothing — identical
-    truncation on both engines, same fixed-iteration policy as the
-    kmeans / GD training rounds). Converting users with no touches
-    contribute START→CONV; non-converting users with no touches carry no
-    signal and are dropped. Output per channel: (channel, n_touches,
-    removal_effect, attribution_share), 6dp — removal_effect =
-    1 − p_removed/p_base, shares normalized over positive effects.
-
-    Scale shape: journey construction is two user-keyed windows; the
-    transition grid aggregates map-side to ≤ (channels+2)² fixed-width
-    rows, hard-bounded by ``max_channels`` (raises beyond — this is the
-    bounded-driver fit, like bradley_terry_ratings); the value iteration
-    runs on that grid driver-side. The event table is touched once."""
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    u = F.col(user_col)
-    pos = F.struct(F.col(ts_col).alias("t"), F.col(order_col).alias("o"))
-    base = events.select(
-        u.alias("uid"),
-        F.col(channel_col).alias("ch"),
-        pos.alias("pos"),
-    )
-    conv_pos = (
-        base.filter(F.col("ch") == conversion)
-        .groupBy("uid")
-        .agg(F.min("pos").alias("cpos"))
-    )
-    touches = (
-        base.filter(F.col("ch") != conversion)
-        .join(conv_pos, on="uid", how="left")
-        .filter(F.col("cpos").isNull() | (F.col("pos") < F.col("cpos")))
-    )
-    # Two bounded collects read this lineage (the transition grid and the
-    # per-channel touch counts); persist so the events scan + join + window
-    # chain runs once, not twice. Both actions happen inside this function,
-    # so the cache is released before returning (the output frame is a
-    # createDataFrame over driver rows — no lineage on `touches`).
-    from pyspark import StorageLevel
-
-    touches = touches.persist(StorageLevel.MEMORY_AND_DISK)
-    w = Window.partitionBy("uid").orderBy(F.col("pos").asc())
-    seq = touches.withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_prev", F.lag("ch").over(w)
-    ).withColumn(
-        "_last",
-        F.row_number().over(
-            Window.partitionBy("uid").orderBy(F.col("pos").desc())
-        ),
-    )
-    conv_flag = conv_pos.select("uid", F.lit(True).alias("_cv"))
-    seq = seq.join(conv_flag, on="uid", how="left")
-    start_edges = seq.filter(F.col("_rn") == 1).select(
-        F.lit("__START").alias("s"), F.col("ch").alias("t")
-    )
-    mid_edges = seq.filter(F.col("_prev").isNotNull()).select(
-        F.col("_prev").alias("s"), F.col("ch").alias("t")
-    )
-    end_edges = seq.filter(F.col("_last") == 1).select(
-        F.col("ch").alias("s"),
-        F.when(F.col("_cv"), F.lit("__CONV"))
-        .otherwise(F.lit("__DROP"))
-        .alias("t"),
-    )
-    no_touch_conv = (
-        conv_pos.join(
-            touches.select("uid").distinct(), on="uid", how="left_anti"
-        ).select(
-            F.lit("__START").alias("s"), F.lit("__CONV").alias("t")
-        )
-    )
-    edges = (
-        start_edges.unionByName(mid_edges)
-        .unionByName(end_edges)
-        .unionByName(no_touch_conv)
-    )
-    grid = edges.groupBy("s", "t").agg(F.count(F.lit(1)).alias("n"))
-    # Both bounded collects run inside try/finally so an exception in
-    # either cannot leak the MEMORY_AND_DISK cache for the session
-    # lifetime (repo convention, cf. rake_keywords / pq_train_codebooks_lloyd).
-    try:
-        rows = grid.collect()  # bounded: <= (channels+2)^2
-        touch_counts = {
-            r["ch"]: r["n"]
-            for r in touches.groupBy("ch")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-    finally:
-        touches.unpersist()
-    from collections import defaultdict
-
-    out_n: dict = defaultdict(int)
-    trans: dict = defaultdict(dict)
-    channels: set = set()
-    for r in rows:
-        s, t, n = r["s"], r["t"], int(r["n"])
-        out_n[s] += n
-        trans[s][t] = trans[s].get(t, 0) + n
-        for x in (s, t):
-            if x not in ("__START", "__CONV", "__DROP"):
-                channels.add(x)
-    if len(channels) > max_channels:
-        raise ValueError(
-            f"markov_removal_attribution: {len(channels)} channels exceeds "
-            f"max_channels={max_channels}; this is the bounded-driver fit"
-        )
-    states = sorted(channels) + ["__START"]
-
-    def absorb(removed: str | None) -> float:
-        import math
-
-        p = {s: 0.0 for s in states}
-        for _ in range(int(rounds)):
-            new = {}
-            for s in states:
-                if s == removed:
-                    new[s] = 0.0
-                    continue
-                tot = out_n[s]
-                acc = 0.0
-                if tot:
-                    # fsum: correctly-rounded, order-independent — same
-                    # accepted last-ulp-vs-oracle note as bradley_terry
-                    terms = []
-                    for t in sorted(trans[s]):
-                        if t == "__CONV":
-                            wv = 1.0
-                        elif t == "__DROP" or t == removed:
-                            wv = 0.0
-                        else:
-                            wv = p[t]
-                        terms.append(trans[s][t] / tot * wv)
-                    acc = math.fsum(terms)
-                new[s] = acc
-            p = new
-        return p["__START"]
-
-    base_cv = absorb(None)
-    effects = {}
-    for c in sorted(channels):
-        pc = absorb(c)
-        effects[c] = (1.0 - pc / base_cv) if base_cv > 0 else 0.0
-    pos_sum = sum(e for e in effects.values() if e > 0)
-    spark = events.sparkSession
-    out_rows = [
-        (
-            c,
-            int(touch_counts.get(c, 0)),
-            effects[c],
-            (effects[c] / pos_sum) if pos_sum > 0 and effects[c] > 0 else 0.0,
-        )
-        for c in sorted(channels)
-    ]
-    return spark.createDataFrame(
-        out_rows,
-        "channel string, n_touches long, removal_effect double, "
-        "attribution_share double",
-    ).select(
-        "channel",
-        "n_touches",
-        F.round("removal_effect", 6).alias("removal_effect"),
-        F.round("attribution_share", 6).alias("attribution_share"),
-    )
-
-
-def position_attribution(
-    events: DataFrame,
-    user_col: str,
-    channel_col: str,
-    ts_col: str,
-    order_col: str,
-    conversion: str,
-) -> DataFrame:
-    """Position-based (U-shaped, 40/20/40) multi-touch attribution over
-    the SAME journey construction as ``markov_removal_attribution``
-    (touches strictly before the first ``conversion``, converting users
-    only): the first and last touch each take 40% of the conversion
-    credit, the middle touches split the remaining 20% evenly; one-touch
-    journeys take 100%, two-touch 50/50. The rule-based midpoint between
-    last-touch (all credit to the closer) and Markov removal effect
-    (model-based) — the three-way comparison a marketing/data team
-    actually runs.
-
-    Determinism: per-touch credit is integer micro-units (400000 /
-    round(200000/(n−2)) / 1000000), so per-channel sums are exact
-    integers; a journey's credits may total 1e6 ± a few micros from the
-    middle-split rounding — deterministic and mirrored in the oracle.
-    Returns (channel, n_touches, n_first, n_last, credit, credit_share),
-    6dp, shares over the summed credit.
-
-    Scale shape: identical to the Markov journey stage — two user-keyed
-    windows, then one map-side-combining channel aggregate; the event
-    table is touched once and nothing driver-side but the output."""
-    u = F.col(user_col)
-    pos = F.struct(F.col(ts_col).alias("t"), F.col(order_col).alias("o"))
-    base = events.select(
-        u.alias("uid"), F.col(channel_col).alias("ch"), pos.alias("pos")
-    )
-    conv_pos = (
-        base.filter(F.col("ch") == conversion)
-        .groupBy("uid")
-        .agg(F.min("pos").alias("cpos"))
-    )
-    touches = (
-        base.filter(F.col("ch") != conversion)
-        .join(conv_pos, on="uid", how="inner")
-        .filter(F.col("pos") < F.col("cpos"))
-    )
-    w = Window.partitionBy("uid").orderBy(F.col("pos").asc())
-    nw = Window.partitionBy("uid")
-    seq = (
-        touches.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count(F.lit(1)).over(nw))
-    )
-    first = F.col("_rn") == 1
-    last = F.col("_rn") == F.col("_n")
-    credit_micro = (
-        F.when(F.col("_n") == 1, F.lit(1_000_000))
-        .when(F.col("_n") == 2, F.lit(500_000))
-        .when(first | last, F.lit(400_000))
-        .otherwise(
-            F.round(F.lit(200_000.0) / (F.col("_n") - 2), 0).cast("long")
-        )
-    )
-    per_ch = (
-        seq.withColumn("cm", credit_micro.cast("long"))
-        .groupBy("ch")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_touches"),
-            F.sum(first.cast("long")).cast("long").alias("n_first"),
-            F.sum(last.cast("long")).cast("long").alias("n_last"),
-            F.sum("cm").cast("long").alias("cm"),
-        )
-    )
-    total = per_ch.agg(F.sum("cm").cast("long").alias("tot"))
-    return per_ch.crossJoin(F.broadcast(total)).select(
-        F.col("ch").alias("channel"),
-        "n_touches",
-        "n_first",
-        "n_last",
-        F.round(F.col("cm") / 1e6, 6).alias("credit"),
-        F.round(F.col("cm") / F.col("tot"), 6).alias("credit_share"),
-    )
-
-
-def shapley_attribution(
-    events: DataFrame,
-    channels: Sequence[str],
-    conversion: str,
-    channel_col: str = "event_type",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """EXACT Shapley-value conversion attribution over journey channel
-    SETS — the game-theoretic credit rule the last-touch/position/Markov
-    trio approximates (unique solution satisfying efficiency, symmetry,
-    dummy, additivity). The coalition value v(T) counts conversions by
-    users whose touched-channel set is contained in T; channel i's
-    credit is the Shapley sum over its marginal contributions.
-
-    Exactness: every quantity is an INTEGER until the single final
-    division — v(T) values are counts, and the coalition weights are
-    pre-multiplied by n! (w_s·n! = s!·(n−1−s)!, a plain integer per
-    coalition size, embedded as literals by Python's factorial), so both
-    engines do identical integer sums and one double divide. ``channels``
-    is a caller-frozen vocabulary (like quantize bounds): bit i of the
-    user mask = channels[i], deterministic with no driver collect.
-
-    Scale shape: user journeys collapse to a bitmask via one bit_or
-    aggregate (map-side combinable); everything after runs on the 2^n
-    COALITION grain (n = |channels|, n <= 20 guarded — at n=4 that is 16
-    rows), joined by broadcast. The row-count-sized work is exactly two
-    aggregates over the event log."""
-    n = len(channels)
-    if n < 1 or n > 20:
-        raise ValueError("channels must have 1..20 entries")
-    if len(set(channels)) != n:
-        raise ValueError("channels must be distinct")
-    bits = {c: 1 << i for i, c in enumerate(channels)}
-    spark = events.sparkSession
-    chan_df = spark.createDataFrame(
-        [(c, bits[c]) for c in channels], "channel string, bit long"
-    )
-    ev = events.select(
-        F.col(user_col).alias("u"), F.col(channel_col).alias("ch")
-    )
-    masks = (
-        ev.join(
-            F.broadcast(
-                chan_df.select(
-                    F.col("channel").alias("ch"), F.col("bit")
-                )
-            ),
-            on="ch",
-        )
-        .groupBy("u")
-        .agg(F.bit_or("bit").alias("mask"))
-    )
-    conv = ev.filter(F.col("ch") == F.lit(conversion)).select("u").distinct()
-    set_counts = (
-        conv.join(masks, on="u", how="left")
-        .select(F.coalesce("mask", F.lit(0)).alias("mask"))
-        .groupBy("mask")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    t = spark.range(0, 1 << n).select(F.col("id").alias("t"))
-    v = (
-        t.join(
-            F.broadcast(set_counts),
-            on=F.col("mask").bitwiseAND(F.col("t")) == F.col("mask"),
-            how="left",
-        )
-        .groupBy("t")
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("v"))
-    )
-    fact = [1] * (n + 1)
-    for i in range(2, n + 1):
-        fact[i] = fact[i - 1] * i
-    w = [fact[s] * fact[n - 1 - s] for s in range(n)]  # w_s * n!
-    w_arr = F.array([F.lit(x) for x in w])
-    vt = v.select(F.col("t").alias("t"), F.col("v").alias("vt"))
-    vti = v.select(F.col("t").alias("ti"), F.col("v").alias("vti"))
-    pairs = (
-        chan_df.crossJoin(vt)
-        .filter(F.col("t").bitwiseAND(F.col("bit")) == 0)
-        .withColumn("ti", F.col("t").bitwiseOR(F.col("bit")))
-        .join(vti, on="ti")
-    )
-    num = F.sum(
-        F.element_at(w_arr, F.bit_count("t").cast("int") + F.lit(1))
-        * (F.col("vti") - F.col("vt"))
-    ).cast("long")
-    return (
-        pairs.groupBy("channel")
-        .agg(
-            F.round(num / F.lit(float(fact[n])), 6).alias("shapley"),
-        )
-        .orderBy("channel")
-    )
-
-
-def sequential_pattern_support(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    time_col: str = "ts_epoch",
-    min_support: float = 0.05,
-    top_n: int = 50,
-) -> DataFrame:
-    """Length-3 SEQUENTIAL-PATTERN support mining (the GSP/PrefixSpan
-    contract at fixed length: Srikant & Agrawal 1996, Pei et al. 2001)
-    — for every ordered type triple (a, b, c), the fraction of users
-    whose history contains a, then b strictly later, then c strictly
-    later still (subsequence semantics, arbitrary gaps). The
-    order-sensitive complement of assoc_rules_copurchase (itemsets
-    ignore order) and eventually_follows (pairs only).
-
-    Containment test per (user, pattern) is the classic GREEDY earliest
-    occurrence, provably equivalent to existence: e₁ = first a;
-    e₂ = first b after e₁; e₃ = first c after e₂ — three array lookups
-    on the user's per-type sorted time arrays, no per-event work.
-
-    Scale shape: one (user, type) aggregate with sorted time arrays;
-    the pattern grid is the DISTINCT-TYPE cube (|T|³ rows — alphabet-
-    sized, broadcast); three broadcast-grid joins fan each user row out
-    |T|²-fold at most, never event-grain; one pattern-keyed count
-    reduce. Exact integer support counts. Returns (t1, t2, t3,
-    n_users, support) — support = users containing / all users, 6dp —
-    filtered to support ≥ ``min_support``, top ``top_n`` by
-    (support DESC, t1, t2, t3)."""
-    base = events.select(
-        F.col(user_col).alias("u"),
-        F.col(type_col).alias("t"),
-        F.col(time_col).cast("long").alias("e"),
-    ).where(
-        F.col("u").isNotNull()
-        & F.col("t").isNotNull()
-        & F.col("e").isNotNull()
-    )
-    upt = base.groupBy("u", "t").agg(
-        F.sort_array(F.collect_list("e")).alias("ts")
-    )
-    n_users = base.select("u").distinct().count()
-    if n_users == 0:
-        return events.sparkSession.createDataFrame(
-            [],
-            "t1 string, t2 string, t3 string, n_users long, support double",
-        )
-    types = base.select(F.col("t").alias("ty")).distinct()
-    pats = (
-        types.select(F.col("ty").alias("t1"))
-        .crossJoin(types.select(F.col("ty").alias("t2")))
-        .crossJoin(types.select(F.col("ty").alias("t3")))
-    )
-    a = upt.select("u", F.col("t").alias("t1"), F.col("ts").alias("tsa"))
-    b = upt.select("u", F.col("t").alias("t2"), F.col("ts").alias("tsb"))
-    c = upt.select("u", F.col("t").alias("t3"), F.col("ts").alias("tsc"))
-    joined = (
-        a.join(F.broadcast(pats), on="t1")
-        .join(b, on=["u", "t2"])
-        .join(c, on=["u", "t3"])
-    )
-    # try_element_at: the filtered arrays are legitimately empty when
-    # no b follows the first a (ANSI element_at would throw)
-    e1 = F.try_element_at("tsa", F.lit(1))
-    bs = F.filter(F.col("tsb"), lambda x: x > e1)
-    e2 = F.try_element_at(bs, F.lit(1))
-    cs = F.filter(F.col("tsc"), lambda x: x > e2)
-    contained = (F.size(cs) > 0).cast("int")
-    sup = joined.select("t1", "t2", "t3", contained.alias("hit")).groupBy(
-        "t1", "t2", "t3"
-    ).agg(F.sum("hit").cast("long").alias("n_users"))
-    ratio = F.col("n_users") / F.lit(float(n_users))
-    return (
-        sup.where(ratio >= F.lit(float(min_support)))
-        .select(
-            "t1",
-            "t2",
-            "t3",
-            "n_users",
-            F.round(ratio, 6).alias("support"),
-        )
-        .orderBy(F.desc("support"), "t1", "t2", "t3")
-        .limit(int(top_n))
-    )
-
-
 # HMM forward-algorithm parameters: a 2-state browse/buy model over the
 # five event types. Literal constants so both engines unroll the exact
 # same arithmetic; probabilities are x.xx literals that sum to 1 per row.
@@ -1112,7 +487,7 @@ def hmm_forward_loglik(
 ) -> DataFrame:
     """Forward-algorithm log-likelihood of each user's first ``steps``
     events under a fixed 2-state HMM — the hidden-state sequence model
-    above markov_attribution's observable-state chain: scores how well
+    above markov_transitions' observable-state chain: scores how well
     a browse/buy latent structure explains early sessions, the
     anomaly/segmentation signal (a low-likelihood prefix is a bot or a
     new behavior class).

@@ -29,7 +29,6 @@ from ningaloo_turtle_etl_spark.operators.quality import (
     orphan_observations,
 )
 from ningaloo_turtle_etl_spark.plans.products import (
-    SITE_KEY,
     build_crawls,
     build_sites,
     build_summary_nests,
@@ -61,8 +60,8 @@ def run_batch_etl(
     """Run the product graph over loaded inputs.
 
     ``inputs`` needs: raw_sites, area_surveyed, environment, species,
-    raw_crawls, nests_joined (nest obs already carrying nest_type /
-    species_name, per build_nests or a fixture).
+    raw_crawls, nests_joined (nest obs already joined to their lookups and
+    surveys, carrying nest_type / species_name).
     """
     sites = build_sites(inputs["raw_sites"])
     surveys = build_surveys(inputs["area_surveyed"], inputs["environment"], sites)

@@ -19,7 +19,6 @@ from ningaloo_turtle_etl_spark.functions.scalars import (
     parse_date_time,
     patch_where,
     recode_12_to_10,
-    restore_southern_sign,
     season,
 )
 from ningaloo_turtle_etl_spark.operators.relational import (
@@ -86,26 +85,6 @@ def build_crawls(
     return joined.withColumn(
         "species_name", F.coalesce("species_name", F.lit("NA"))
     )
-
-
-def build_nests(
-    raw_nests: DataFrame,
-    lookups: Sequence[tuple[DataFrame, str]],
-    surveys: DataFrame,
-) -> DataFrame:
-    """nests product (ningaloo-etl.Rmd:257-290): southern-sign restore,
-    lookup chain, inner join to surveys (orphans dropped by design, :396-397),
-    boolean recode."""
-    typed = raw_nests.withColumn(
-        "latitude", restore_southern_sign("latitude")
-    ).withColumn("longitude", F.col("longitude").cast("double"))
-    resolved = resolve_lookups(typed, lookups)
-    joined = resolved.join(
-        surveys.select("survey_id", "date", "season", *SITE_KEY),
-        on="survey_id",
-        how="inner",
-    )
-    return joined.withColumn("nest_disturbed", recode_12_to_10("nest_disturbed"))
 
 
 def build_summary_nests(

@@ -12,7 +12,6 @@ import ningaloo_turtle_etl_spark.queries.joins  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.linkage  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.llm_ops  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.olap  # noqa: F401
-import ningaloo_turtle_etl_spark.queries.preference  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.privacy  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.projection  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.scalars  # noqa: F401

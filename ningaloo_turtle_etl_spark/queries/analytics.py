@@ -411,44 +411,3 @@ def q_rolling_wau_hll(spark, sf_dir):
 
     ev = load_table(spark, "events", sf_dir)
     return rolling_distinct_hll(ev, "user_id", "ts", window_days=7)
-
-
-@register(
-    "audience_overlap_types",
-    """
-    WITH m AS (
-        SELECT DISTINCT event_type AS seg, user_id AS mem
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    sizes AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n FROM m GROUP BY 1),
-    inter AS (
-        SELECT a.seg AS segment_a, b.seg AS segment_b,
-               CAST(COUNT(*) AS BIGINT) AS n_both
-        FROM m a JOIN m b ON a.mem = b.mem AND a.seg < b.seg
-        GROUP BY 1, 2
-    )
-    SELECT segment_a, segment_b,
-           sa.n AS n_a, sb.n AS n_b, n_both,
-           ROUND(n_both / CAST(sa.n + sb.n - n_both AS DOUBLE), 6)
-               AS jaccard,
-           ROUND(n_both / CAST(least(sa.n, sb.n) AS DOUBLE), 6)
-               AS overlap_coef
-    FROM inter
-    JOIN sizes sa ON sa.seg = segment_a
-    JOIN sizes sb ON sb.seg = segment_b
-    """,
-)
-def q_audience_overlap_types(spark, sf_dir):
-    """Exact pairwise audience overlap between event types
-    (`operators/relational.py audience_overlap`): distinct-user Jaccard
-    and overlap coefficient per unordered pair — the exact calibration
-    twin of the KMV corpus-overlap sketch, joined on member so the
-    fan-out is per-user-degree², never segments x members."""
-    from ningaloo_turtle_etl_spark.operators.relational import (
-        audience_overlap,
-    )
-
-    ev = load_table(spark, "events", sf_dir).filter(
-        F.col("user_id").isNotNull()
-    )
-    return audience_overlap(ev, "event_type", "user_id")

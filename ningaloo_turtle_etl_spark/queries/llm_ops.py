@@ -1493,52 +1493,6 @@ def embedding_norm_stats(spark, sf_dir):
 
 
 @register(
-    "bloom_decontaminate",
-    rf"""
-    WITH g AS (
-        SELECT doc_id, list_distinct({_G3}) AS grams
-        FROM (SELECT doc_id, {_TOKENS} AS toks FROM documents)
-    ),
-    bench AS (
-        SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 97 = 0
-    ),
-    bv AS (SELECT COALESCE(list(gram), []) AS bench_grams FROM bench),
-    scored AS (
-        SELECT doc_id, len(grams) AS n_grams,
-               len(list_intersect(grams, bv.bench_grams)) AS n_contaminated
-        FROM g, bv WHERE doc_id % 97 <> 0
-    )
-    SELECT doc_id, n_grams, n_contaminated,
-           CASE WHEN n_grams > 0
-                THEN CAST(n_contaminated AS DOUBLE) / CAST(n_grams AS DOUBLE)
-                ELSE 0.0 END AS contam_ratio,
-           CASE WHEN n_grams > 0
-                THEN CAST(n_contaminated AS DOUBLE) / CAST(n_grams AS DOUBLE)
-                ELSE 0.0 END >= 0.2 AS contaminated
-    FROM scored
-    """,
-)
-def bloom_decontaminate(spark, sf_dir):
-    """Bloom-prefiltered decontamination: same fixture, threshold, and EXACT
-    output as ``decontaminate_corpus`` (identical oracle), but the eval set
-    is broadcast as a Bloom bitmap tested with pure integer Catalyst
-    expressions, and only bloom-surviving grams reach the exact verification
-    join — the shape that still works when the eval vocabulary is too big to
-    broadcast as a join table (false positives die in the verify join, so no
-    approximation leaks into the result)."""
-    from ningaloo_turtle_etl_spark.operators.curation import (
-        bloom_contamination_flags,
-    )
-
-    docs = load_table(spark, "documents", sf_dir).withColumn(
-        "text", F.lower(F.col("text"))
-    )
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    return bloom_contamination_flags(corpus, bench, n=3, threshold=0.2)
-
-
-@register(
     "incremental_dedup",
     f"""
     WITH fp AS (
@@ -3082,71 +3036,6 @@ def q_label_centroid_cosine(spark, sf_dir):
 
 
 @register(
-    "session_funnel_view_click_purchase",
-    """
-    WITH lagged AS (
-      SELECT user_id, ts, event_id, event_type,
-             CAST(floor(epoch(ts)) AS BIGINT) AS secs,
-             lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER (
-                 PARTITION BY user_id ORDER BY ts, event_id) AS prev
-      FROM events
-    ),
-    flagged AS (
-      SELECT user_id, ts, event_type,
-             SUM(CASE WHEN prev IS NULL OR secs - prev > 1800
-                      THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS UNBOUNDED PRECEDING) AS session_seq
-      FROM lagged
-    ),
-    s1 AS (
-        SELECT user_id, session_seq, MIN(ts) AS t FROM flagged
-        WHERE event_type = 'view' GROUP BY 1, 2
-    ),
-    s2 AS (
-        SELECT f.user_id, f.session_seq, MIN(f.ts) AS t
-        FROM flagged f JOIN s1 ON f.user_id = s1.user_id
-                              AND f.session_seq = s1.session_seq
-        WHERE f.event_type = 'click' AND f.ts > s1.t
-        GROUP BY 1, 2
-    ),
-    s3 AS (
-        SELECT f.user_id, f.session_seq, MIN(f.ts) AS t
-        FROM flagged f JOIN s2 ON f.user_id = s2.user_id
-                              AND f.session_seq = s2.session_seq
-        WHERE f.event_type = 'purchase' AND f.ts > s2.t
-        GROUP BY 1, 2
-    ),
-    c AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM s1) AS c1,
-                 (SELECT CAST(COUNT(*) AS BIGINT) FROM s2) AS c2,
-                 (SELECT CAST(COUNT(*) AS BIGINT) FROM s3) AS c3)
-    SELECT 1 AS step_index, 'view' AS step, c1 AS sessions_reached,
-           ROUND(c1 / CAST(GREATEST(c1, 1) AS DOUBLE), 6) AS conversion_rate
-    FROM c
-    UNION ALL
-    SELECT 2, 'click', c2,
-           ROUND(c2 / CAST(GREATEST(c1, 1) AS DOUBLE), 6) FROM c
-    UNION ALL
-    SELECT 3, 'purchase', c3,
-           ROUND(c3 / CAST(GREATEST(c1, 1) AS DOUBLE), 6) FROM c
-    """,
-)
-def q_session_funnel(spark, sf_dir):
-    """Within-session view→click→purchase funnel (30-min gap sessions):
-    `operators/temporal.py session_funnel` — the conversion unit is the
-    session, so cross-session step pairs never count. Sessionize's one
-    key shuffle plus funnel_steps' conditional-min chain on the
-    (user, session) composite."""
-    from ningaloo_turtle_etl_spark.operators.temporal import session_funnel
-
-    events = load_table(spark, "events", sf_dir)
-    return session_funnel(
-        events, ["view", "click", "purchase"], gap_seconds=1800,
-        tiebreak_col="event_id",
-    )
-
-
-@register(
     "hard_negative_mining",
     f"""
     WITH pairs AS (
@@ -3475,62 +3364,6 @@ def q_rolling_value_p95(spark, sf_dir):
         ev, "value", "ts", (0.5, 0.95), window_days=7,
         n_bins=1000, lo=0.0, hi=500.0,
     )
-
-
-@register(
-    "assoc_rules_copurchase",
-    """
-    WITH bi AS (
-        SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem
-    ),
-    supp AS (
-        SELECT it, CAST(COUNT(*) AS BIGINT) AS s FROM bi GROUP BY 1
-    ),
-    nb AS (SELECT CAST(COUNT(DISTINCT bk) AS BIGINT) AS n FROM bi),
-    fi AS (SELECT it FROM supp WHERE s >= 2),
-    kept AS (SELECT bi.bk, bi.it FROM bi JOIN fi USING (it)),
-    capped AS (
-        SELECT bk, it FROM (
-            SELECT bk, it, COUNT(*) OVER (PARTITION BY bk) AS bn FROM kept
-        ) WHERE bn <= 1000
-    ),
-    pairs AS (
-        SELECT a.it AS item_a, b.it AS item_b,
-               CAST(COUNT(*) AS BIGINT) AS ps
-        FROM capped a JOIN capped b ON a.bk = b.bk AND a.it < b.it
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    ),
-    directed AS (
-        SELECT item_a AS antecedent, item_b AS consequent, ps FROM pairs
-        UNION ALL
-        SELECT item_b AS antecedent, item_a AS consequent, ps FROM pairs
-    )
-    SELECT d.antecedent, d.consequent, d.ps AS pair_support,
-           sa.s AS antecedent_support, sb.s AS consequent_support,
-           ROUND(d.ps * 1.0 / n, 6) AS support,
-           ROUND(d.ps * 1.0 / sa.s, 6) AS confidence,
-           ROUND((d.ps * 1.0 / sa.s) / (sb.s * 1.0 / n), 6) AS lift
-    FROM directed d
-    JOIN supp sa ON d.antecedent = sa.it
-    JOIN supp sb ON d.consequent = sb.it
-    CROSS JOIN nb
-    ORDER BY antecedent, consequent
-    """,
-)
-def q_assoc_rules_copurchase(spark, sf_dir):
-    """Apriori association rules over co-purchase baskets
-    (`operators/basket.py association_rules`): directed a -> b rules at
-    pair min_support=2 with support / confidence / lift. The item dim is
-    support-pruned BEFORE the per-basket pair blowup (downward closure),
-    the pair join is basket-keyed so the quadratic term stays per-basket,
-    and the rule metrics are two broadcast dim joins — the directed
-    companion to item_cosine_top100 over the same facts."""
-    from ningaloo_turtle_etl_spark.operators.basket import association_rules
-
-    li = load_table(spark, "lineitem", sf_dir)
-    return association_rules(
-        li, "l_orderkey", "l_partkey", min_support=2
-    ).orderBy("antecedent", "consequent")
 
 
 def _ahash_oracle_sql(max_id: int = 250, edit_below: int = 60,
@@ -4576,118 +4409,6 @@ def pca_power_components_query(spark, sf_dir):
     return pca_power_components(emb, n_components=2, iterations=3)
 
 
-def _mf_gd_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled rank-1 matrix-factorization GD oracle (the Lloyd
-    chaining pattern of ann_oracles._lloyd_chain_sql): per round one
-    joined-error CTE feeds two mean-gradient CTEs (per-pair terms
-    rounded to integer nanos before the exact-integer SUM) and two
-    factor-step CTEs whose double arithmetic mirrors
-    `operators/similarity.py mf_gd_factors` token-for-token.
-    lr = 0.0625 (binary-exact literal)."""
-    parts = [
-        """
-    base AS MATERIALIZED (
-        SELECT o_custkey AS u, l_partkey AS i,
-               CAST(SUM(l_quantity) AS DOUBLE) / CAST(10 AS DOUBLE) AS r
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE o_custkey <= 80 AND l_partkey <= 120
-        GROUP BY 1, 2
-    ),
-    p0 AS (SELECT u, 0.5 + CAST(u % 7 AS DOUBLE) / CAST(10 AS DOUBLE) AS pf
-           FROM (SELECT DISTINCT u FROM base)),
-    q0 AS (SELECT i, 0.5 + CAST(i % 11 AS DOUBLE) / CAST(10 AS DOUBLE) AS qf
-           FROM (SELECT DISTINCT i FROM base))"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    j{t} AS (
-        SELECT base.u, base.i, base.r, p.pf, q.qf
-        FROM base JOIN p{t - 1} p USING (u) JOIN q{t - 1} q USING (i)
-    ),
-    gp{t} AS (
-        SELECT u,
-               CAST(SUM(CAST(round((r - pf * qf) * qf * 1e9) AS BIGINT))
-                    AS BIGINT) AS g,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM j{t} GROUP BY u
-    ),
-    gq{t} AS (
-        SELECT i,
-               CAST(SUM(CAST(round((r - pf * qf) * pf * 1e9) AS BIGINT))
-                    AS BIGINT) AS g,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM j{t} GROUP BY i
-    ),
-    p{t} AS (
-        SELECT p.u, p.pf + 0.0625 * ((g.g / 1e9) / g.n) AS pf
-        FROM p{t - 1} p JOIN gp{t} g USING (u)
-    ),
-    q{t} AS (
-        SELECT q.i, q.qf + 0.0625 * ((g.g / 1e9) / g.n) AS qf
-        FROM q{t - 1} q JOIN gq{t} g USING (i)
-    )"""
-        )
-    n = iterations
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    fit AS (
-        SELECT base.r, p.pf, q.qf
-        FROM base JOIN p{n} p USING (u) JOIN q{n} q USING (i)
-    ),
-    rmse AS (
-        SELECT ROUND(sqrt((CAST(SUM(CAST(round(
-                   (r - pf * qf) * (r - pf * qf) * 1e9) AS BIGINT))
-                   AS BIGINT) / 1e9) / COUNT(*)), 6) AS train_rmse
-        FROM fit
-    )
-    SELECT f.side, f.id, ROUND(f.factor, 6) AS factor, m.train_rmse
-    FROM (SELECT 'user' AS side, u AS id, pf AS factor FROM p{n}
-          UNION ALL SELECT 'item', i, qf FROM q{n}) f
-    CROSS JOIN rmse m
-    ORDER BY f.side, f.id"""
-    )
-
-
-@register("mf_gd_factors", _mf_gd_oracle_sql(3))
-def mf_gd_factors_query(spark, sf_dir):
-    """Rank-1 Funk-SVD trained distributed on the (customer, part,
-    quantity/10) implicit-rating matrix (`operators/similarity.py
-    mf_gd_factors`, 3 synchronous mean-gradient rounds, lr=1/16): a
-    recsys-training query, with the learned
-    user/item factor trajectory as the oracle contract and the final
-    train RMSE carried on every row. Bounded entity sets (custkey<=80,
-    partkey<=120) keep the factor tables broadcastable at every SF while
-    ratings-per-entity still grow with the data."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        mf_gd_factors,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    od = load_table(spark, "orders", sf_dir)
-    ratings = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .filter((F.col("o_custkey") <= 80) & (F.col("l_partkey") <= 120))
-        .groupBy("o_custkey", "l_partkey")
-        .agg(
-            (
-                F.sum("l_quantity").cast("double")
-                / F.lit(10).cast("double")
-            ).alias("rating")
-        )
-    )
-    return mf_gd_factors(
-        ratings,
-        iterations=3,
-        lr=0.0625,
-        user_col="o_custkey",
-        item_col="l_partkey",
-        rating_col="rating",
-    )
-
-
 @register(
     "moment_profile_by_type",
     """
@@ -4738,43 +4459,6 @@ def moment_profile_by_type(spark, sf_dir):
     )
 
 
-@register(
-    "item_cosine_top100",
-    """
-    WITH bi AS MATERIALIZED (
-        SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem
-    ),
-    ni AS (SELECT it AS i, CAST(COUNT(*) AS BIGINT) AS ni
-           FROM bi GROUP BY it),
-    co AS (
-        SELECT a.it AS id_a, b.it AS id_b, CAST(COUNT(*) AS BIGINT) AS co
-        FROM bi a JOIN bi b ON a.bk = b.bk AND a.it < b.it
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    )
-    SELECT co.id_a, co.id_b, co.co,
-           ROUND(co.co / sqrt(CAST(x.ni AS DOUBLE) * CAST(y.ni AS DOUBLE)),
-                 6) AS cosine
-    FROM co JOIN ni x ON co.id_a = x.i JOIN ni y ON co.id_b = y.i
-    ORDER BY cosine DESC, co.id_a, co.id_b LIMIT 100
-    """,
-)
-def item_cosine_top100(spark, sf_dir):
-    """Top-100 item-item cosine (Ochiai) similarities over the
-    order-part incidence (`operators/basket.py item_cosine_pairs`,
-    min_co=2): the item-based collaborative-filtering ranking —
-    symmetric similarity from the co-occurrence grid and per-item
-    counts only, the serving complement to assoc_rules_copurchase's
-    directional confidence."""
-    from ningaloo_turtle_etl_spark.operators.basket import (
-        item_cosine_pairs,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    return item_cosine_pairs(
-        li, "l_orderkey", "l_partkey", min_co=2, top_n=100
-    )
-
-
 @register("ranking_ndcg_eval", ndcg_oracle_sql(10))
 def ranking_ndcg_eval(spark, sf_dir):
     """Retrieval evaluation (`operators/similarity.py ranking_metrics`):
@@ -4793,105 +4477,6 @@ def ranking_ndcg_eval(spark, sf_dir):
     qs = emb.filter(F.col("vec_id") < 5)
     ranked = cosine_topk(emb, qs, k=10)
     return ranking_metrics(ranked, emb, k=10)
-
-
-def _als_rank1_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled rank-1 ALS oracle: per round one user half-solve and one
-    item half-solve CTE — per-rating numerator/denominator terms rounded
-    to integer nanos before exact-integer per-key SUMs, the closed-form
-    division in the same association as
-    `operators/similarity.py als_rank1_factors`. λ = 0.25 binary-exact;
-    init q_i = 0.5 + (i%7)/10. All CTEs MATERIALIZED."""
-    parts = [
-        """
-    base AS MATERIALIZED (
-        SELECT o_custkey AS u, l_partkey AS i,
-               CAST(SUM(l_quantity) AS DOUBLE) / CAST(10 AS DOUBLE) AS r
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE o_custkey <= 80 AND l_partkey <= 120
-        GROUP BY 1, 2
-    ),
-    q0 AS MATERIALIZED (
-        SELECT i, 0.5 + CAST(i % 7 AS DOUBLE) / CAST(10 AS DOUBLE) AS qf
-        FROM (SELECT DISTINCT i FROM base)
-    )"""
-    ]
-    for t in range(1, iterations + 1):
-        parts.append(
-            f""",
-    p{t} AS MATERIALIZED (
-        SELECT u,
-               (CAST(SUM(CAST(round(r * qf * 1e9) AS BIGINT)) AS BIGINT)
-                / 1e9)
-               / (0.25 + CAST(SUM(CAST(round(qf * qf * 1e9) AS BIGINT))
-                              AS BIGINT) / 1e9) AS pf
-        FROM base JOIN q{t - 1} USING (i) GROUP BY u
-    ),
-    q{t} AS MATERIALIZED (
-        SELECT i,
-               (CAST(SUM(CAST(round(r * pf * 1e9) AS BIGINT)) AS BIGINT)
-                / 1e9)
-               / (0.25 + CAST(SUM(CAST(round(pf * pf * 1e9) AS BIGINT))
-                              AS BIGINT) / 1e9) AS qf
-        FROM base JOIN p{t} USING (u) GROUP BY i
-    )"""
-        )
-    T = iterations
-    return (
-        "WITH "
-        + "".join(parts)
-        + f""",
-    fit AS MATERIALIZED (
-        SELECT sqrt((CAST(SUM(CAST(round((r - pf * qf) * (r - pf * qf)
-                                         * 1e9) AS BIGINT)) AS BIGINT)
-                     / 1e9) / CAST(COUNT(*) AS BIGINT)) AS train_rmse
-        FROM base JOIN p{T} USING (u) JOIN q{T} USING (i)
-    )
-    SELECT side, id, ROUND(factor, 6) AS factor,
-           ROUND(train_rmse, 6) AS train_rmse
-    FROM (SELECT 'user' AS side, CAST(u AS BIGINT) AS id, pf AS factor
-          FROM p{T}
-          UNION ALL
-          SELECT 'item', CAST(i AS BIGINT), qf FROM q{T})
-    CROSS JOIN fit
-    ORDER BY side, id"""
-    )
-
-
-@register("als_rank1_factors", _als_rank1_oracle_sql(3))
-def als_rank1_factors_query(spark, sf_dir):
-    """Rank-1 ALTERNATING least squares on the same (customer, part,
-    quantity/10) implicit-rating matrix as mf_gd_factors
-    (`operators/similarity.py als_rank1_factors`, 3 alternations,
-    λ=1/4): the closed-form distributed recsys trainer next to the GD
-    one — each half-step solves its side exactly in one join + one
-    exact-integer aggregate, no driver state at all. The factor
-    trajectory and final train RMSE replay in the unrolled oracle."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        als_rank1_factors,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    od = load_table(spark, "orders", sf_dir)
-    ratings = (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .filter((F.col("o_custkey") <= 80) & (F.col("l_partkey") <= 120))
-        .groupBy("o_custkey", "l_partkey")
-        .agg(
-            (
-                F.sum("l_quantity").cast("double")
-                / F.lit(10).cast("double")
-            ).alias("rating")
-        )
-    )
-    return als_rank1_factors(
-        ratings,
-        iterations=3,
-        lam=0.25,
-        user_col="o_custkey",
-        item_col="l_partkey",
-        rating_col="rating",
-    )
 
 
 @register(

@@ -442,106 +442,6 @@ def q_source_gini(spark, sf_dir):
 
 
 @register(
-    "pareto_frontier_parts",
-    """
-    WITH pts AS (
-        SELECT p_partkey, p_retailprice, p_size FROM part
-    )
-    SELECT a.p_partkey, ROUND(a.p_retailprice, 6) AS price, a.p_size
-    FROM pts a
-    WHERE NOT EXISTS (
-        SELECT 1 FROM pts b
-        WHERE b.p_retailprice <= a.p_retailprice
-          AND b.p_size >= a.p_size
-          AND (b.p_retailprice < a.p_retailprice OR b.p_size > a.p_size)
-    )
-    ORDER BY a.p_partkey
-    """,
-)
-def pareto_frontier_parts(spark, sf_dir):
-    """Skyline query (Borzsony et al., ICDE'01): parts on the Pareto
-    frontier of (minimize retail price, maximize size) — no other part is
-    at-most-as-expensive AND at-least-as-big with one strict. The oracle
-    states dominance INDEPENDENTLY as a quadratic NOT EXISTS anti-join;
-    the Spark plan (`operators/relational.py pareto_frontier_2d`) never
-    goes quadratic: one groupBy to the distinct-price grain, a strict
-    prefix-max window on that bounded grain, and a broadcast semi-join
-    back — the 100 TB cost is one map-combinable shuffle."""
-    from ningaloo_turtle_etl_spark.operators.relational import (
-        pareto_frontier_2d,
-    )
-
-    part = load_table(spark, "part", sf_dir)
-    return (
-        pareto_frontier_2d(
-            part, "p_retailprice", "p_size", id_cols=("p_partkey",)
-        )
-        .select(
-            "p_partkey",
-            F.round("p_retailprice", 6).alias("price"),
-            "p_size",
-        )
-        .orderBy("p_partkey")
-    )
-
-
-@register(
-    "rfm_customer_segments",
-    """
-    WITH per AS (
-        SELECT o_custkey AS c,
-               CAST(MAX(CAST(floor(epoch(o_orderdate) / 86400) AS BIGINT))
-                    AS BIGINT) AS last_day,
-               CAST(COUNT(*) AS BIGINT) AS freq,
-               CAST(SUM(CAST(round(o_totalprice * 1e6, 0) AS BIGINT))
-                    AS BIGINT) AS mon
-        FROM orders GROUP BY 1
-    ),
-    mx AS (SELECT MAX(last_day) AS gmax FROM per),
-    sc AS (
-        SELECT c, gmax - last_day AS r_days, freq, mon,
-               ntile(5) OVER (ORDER BY gmax - last_day DESC, c) AS r_score,
-               ntile(5) OVER (ORDER BY freq, c) AS f_score,
-               ntile(5) OVER (ORDER BY mon, c) AS m_score
-        FROM per, mx
-    )
-    SELECT CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champion'
-                WHEN r_score >= 4 AND f_score <= 2 THEN 'recent_low_freq'
-                WHEN r_score <= 2 AND f_score >= 4 THEN 'at_risk'
-                WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-                ELSE 'core' END AS segment,
-           CAST(r_score AS INT) AS r_score,
-           CAST(f_score AS INT) AS f_score,
-           CAST(m_score AS INT) AS m_score,
-           CAST(COUNT(*) AS BIGINT) AS n_customers,
-           ROUND(SUM(mon) / 1e6 / COUNT(*), 6) AS avg_monetary,
-           ROUND(SUM(r_days) * 1.0 / COUNT(*), 6) AS avg_recency_days
-    FROM sc GROUP BY 1, 2, 3, 4
-    ORDER BY r_score, f_score, m_score
-    """,
-)
-def rfm_customer_segments(spark, sf_dir):
-    """RFM lifecycle segmentation of the order file
-    (`operators/relational.py rfm_segments`): rank-quintile recency /
-    frequency / monetary scores per customer, rolled up to the ≤125-row
-    segment grain — the marketing-warehouse rollup that pairs with
-    cohort_weekly_retention's time view. NTILE over (measure, custkey)
-    is the identical deterministic total order in both engines; money
-    sums in exact integer micros."""
-    from ningaloo_turtle_etl_spark.operators.relational import rfm_segments
-    from ningaloo_turtle_etl_spark.operators.temporal import _epoch_seconds
-
-    orders = load_table(spark, "orders", sf_dir)
-    return rfm_segments(
-        orders,
-        "o_custkey",
-        "o_orderdate",
-        "o_totalprice",
-        epoch_seconds=_epoch_seconds(orders, "o_orderdate"),
-    )
-
-
-@register(
     "inequality_profile_by_source",
     """
     WITH base AS (

@@ -1,6 +1,6 @@
 """Data-selection queries: exact stratified sampling, weighted sampling,
 corpus drift, DSIR importance selection, training shards, leakage-safe
-splits, negative sampling, annotator agreement, rank fusion and the
+splits, contrastive negative pairs, annotator agreement, rank fusion and the
 k-center coreset (full DuckDB oracles — every hash is md5-derived, so the
 oracle reproduces the sample bit-for-bit).
 """
@@ -444,68 +444,6 @@ def rank_fusion_select(spark, sf_dir):
     return fused.select(
         "doc_id", "source", "rank_diversity", "rank_length_score", "rrf_score"
     ).orderBy("source", F.col("rrf_score").desc(), "doc_id")
-
-
-@register(
-    "negative_brand_samples",
-    """
-    WITH bw AS (
-        SELECT p_brand AS item, COUNT(*) AS c
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY 1
-    ),
-    w AS (SELECT item, pow(c * 1.0, 0.75) AS w FROM bw WHERE c > 0),
-    cum0 AS (
-        SELECT item, w,
-               SUM(w) OVER (ORDER BY item
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS cumw
-        FROM w
-    ),
-    cum AS (SELECT item, w, cumw, MAX(cumw) OVER () AS tot FROM cum0),
-    iv AS (
-        SELECT item, (cumw - w) / tot AS lo, cumw / tot AS hi FROM cum
-    ),
-    draws AS (
-        SELECT o_orderkey AS example, s.slot,
-               ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || '#'
-                                   || CAST(s.slot AS VARCHAR)
-                                   || '#neg'), 1, 8))::BIGINT
-                 / 4294967296.0 AS u
-        FROM orders, (SELECT unnest(range(4)) AS slot) s
-        WHERE o_orderkey % 17 = 0
-    )
-    SELECT d.example, CAST(d.slot AS INT) AS slot, iv.item
-    FROM draws d JOIN iv ON d.u >= iv.lo AND d.u < iv.hi
-    ORDER BY example, slot
-    """,
-)
-def q_negative_brand_samples(spark, sf_dir):
-    """Deterministic word2vec-style negative sampling against the
-    brand-popularity^0.75 distribution (`operators/selection.py
-    negative_samples`, 4 draws per example): md5-keyed uniforms mapped
-    through the smoothed inverse CDF via the bucketed interval join —
-    retry-stable negatives for contrastive / recommendation training,
-    no RNG state anywhere. The oracle replays the CDF (window cumsum,
-    deterministic last-value total) and every draw."""
-    from ningaloo_turtle_etl_spark.operators.selection import (
-        negative_samples,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    part = load_table(spark, "part", sf_dir)
-    orders = load_table(spark, "orders", sf_dir).filter(
-        F.col("o_orderkey") % 17 == 0
-    )
-    brand_w = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy(F.col("p_brand").alias("brand"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return negative_samples(
-        orders, "o_orderkey", brand_w, "brand", "c",
-        n_neg=4, power=0.75, seed="neg",
-    ).orderBy("example", "slot")
 
 
 def _kcenter_oracle_sql(k: int = 8, d: int = 64) -> str:

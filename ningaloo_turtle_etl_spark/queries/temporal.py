@@ -172,74 +172,6 @@ def scd2_user_state(spark, sf_dir):
 
 
 @register(
-    "attribution_last_touch",
-    """
-    WITH purchases AS (
-      SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value
-      FROM events WHERE event_type = 'purchase'
-    ),
-    touches AS (
-      SELECT user_id, CAST(ts AS TIMESTAMP) AS tts, event_type AS touch_type
-      FROM events WHERE event_type IN ('click', 'view')
-    ),
-    attributed AS (
-      SELECT p.user_id, p.event_id, p.value,
-             CASE WHEN t.tts >= p.ts - INTERVAL 7 DAY
-                  THEN t.touch_type END AS touch_type
-      FROM purchases p
-      ASOF LEFT JOIN touches t
-        ON p.user_id = t.user_id AND p.ts >= t.tts
-    )
-    SELECT COALESCE(touch_type, 'unattributed') AS touch_type,
-           CAST(COUNT(*) AS BIGINT) AS n_purchases,
-           ROUND(SUM(value), 2) AS attributed_value
-    FROM attributed GROUP BY 1 ORDER BY 1
-    """,
-)
-def attribution_last_touch(spark, sf_dir):
-    """Last-touch marketing attribution: every purchase credits the most
-    recent click/view by the same user within a 7-day lookback — a direct
-    composition of the as-of join operator (`operators/temporal.py
-    asof_join`, backward direction + tolerance), aggregated to credit per
-    touch channel. Purchases with no in-window touch report as
-    'unattributed'. The oracle replays it with DuckDB's native ASOF JOIN,
-    applying the tolerance as a post-filter (identical semantics: the
-    nearest-preceding touch either is in window or the purchase is
-    unattributed)."""
-    ev = load_table(spark, "events", sf_dir)
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    touches = ev.filter(F.col("event_type").isin("click", "view")).select(
-        "user_id",
-        F.col("ts").alias("tts"),
-        F.col("event_type").alias("touch_type"),
-    )
-    joined = asof_join(
-        purchases,
-        touches,
-        on="user_id",
-        left_time="ts",
-        right_time="tts",
-        right_cols=["touch_type"],
-        direction="backward",
-        tolerance_seconds=7 * 86400,
-    )
-    return (
-        joined.select(
-            F.coalesce("touch_type", F.lit("unattributed")).alias("touch_type"),
-            "value",
-        )
-        .groupBy("touch_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum("value"), 2).alias("attributed_value"),
-        )
-        .orderBy("touch_type")
-    )
-
-
-@register(
     "event_sessions",
     """
     WITH lagged AS (
@@ -331,37 +263,6 @@ def q_cdc_apply_snapshot(spark, sf_dir):
 
 
 @register(
-    "eventually_follows_matrix",
-    """
-    WITH firsts AS (
-        SELECT user_id AS k, event_type AS t, MIN(ts) AS ft
-        FROM events GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT a.t AS type_a, b.t AS type_b,
-               CASE WHEN a.ft < b.ft THEN 1 ELSE 0 END AS before
-        FROM firsts a JOIN firsts b ON a.k = b.k AND a.t <> b.t
-    )
-    SELECT type_a, type_b, CAST(SUM(before) AS BIGINT) AS n_keys,
-           ROUND(SUM(before) / CAST(COUNT(*) AS DOUBLE), 6) AS frac
-    FROM pairs GROUP BY 1, 2
-    """,
-)
-def q_eventually_follows(spark, sf_dir):
-    """Process-mining eventually-follows matrix over the event stream
-    (`operators/temporal.py eventually_follows`): per ordered type pair,
-    the users whose first a strictly precedes their first b — long-range
-    ordering the adjacent-transition Markov matrix can't see. One
-    (user, type) min-agg; pair math on the first-seen table."""
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        eventually_follows,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return eventually_follows(ev)
-
-
-@register(
     "event_trigram_sequences",
     """
     WITH tri AS (
@@ -394,342 +295,6 @@ def q_event_trigram_sequences(spark, sf_dir):
     )
     return frequent_sequences(
         ev, "user_id", "ts", "event_type", order_tiebreak="event_id"
-    )
-
-
-def _markov_attr_oracle_sql(
-    channels=("click", "error", "signup", "view"),
-    conversion: str = "purchase",
-    rounds: int = 12,
-) -> str:
-    """Full replay of markov_removal_attribution: journey windows, the
-    transition grid, then one unrolled value-iteration chain per removal
-    (base + one per channel), all MATERIALIZED (the doubled per-round
-    references would otherwise re-expand the scan exponentially). The
-    channel list is the generator's input — the fixture's event types
-    are stable across SFs."""
-    head = f"""
-    WITH conv AS MATERIALIZED (
-        SELECT uid, ct, co FROM (
-            SELECT user_id AS uid, ts AS ct, event_id AS co,
-                   ROW_NUMBER() OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS rn
-            FROM events WHERE event_type = '{conversion}'
-        ) WHERE rn = 1
-    ),
-    touches AS MATERIALIZED (
-        SELECT e.user_id AS uid, e.event_type AS ch, e.ts, e.event_id
-        FROM events e LEFT JOIN conv ON e.user_id = conv.uid
-        WHERE e.event_type <> '{conversion}'
-          AND (conv.uid IS NULL OR (e.ts, e.event_id) < (conv.ct, conv.co))
-    ),
-    seq AS MATERIALIZED (
-        SELECT uid, ch,
-               ROW_NUMBER() OVER (PARTITION BY uid
-                                  ORDER BY ts, event_id) AS rn,
-               LAG(ch) OVER (PARTITION BY uid
-                             ORDER BY ts, event_id) AS prev,
-               ROW_NUMBER() OVER (PARTITION BY uid
-                                  ORDER BY ts DESC, event_id DESC) AS rlast
-        FROM touches
-    ),
-    edges AS (
-        SELECT '__START' AS s, ch AS t FROM seq WHERE rn = 1
-        UNION ALL
-        SELECT prev, ch FROM seq WHERE prev IS NOT NULL
-        UNION ALL
-        SELECT seq.ch,
-               CASE WHEN conv.uid IS NOT NULL THEN '__CONV'
-                    ELSE '__DROP' END
-        FROM seq LEFT JOIN conv ON seq.uid = conv.uid
-        WHERE rlast = 1
-        UNION ALL
-        SELECT '__START', '__CONV' FROM conv
-        WHERE uid NOT IN (SELECT DISTINCT uid FROM touches)
-    ),
-    grid AS MATERIALIZED (
-        SELECT s, t, COUNT(*) AS n FROM edges GROUP BY 1, 2
-    ),
-    tots AS MATERIALIZED (SELECT s, SUM(n) AS tot FROM grid GROUP BY 1),
-    p AS MATERIALIZED (
-        SELECT g.s, g.t, g.n * 1.0 / tots.tot AS p
-        FROM grid g JOIN tots ON g.s = tots.s
-    ),
-    v0 AS MATERIALIZED (SELECT s, 0.0 AS v FROM tots)"""
-    parts = [head]
-
-    def chain(tag: str, removed: str | None) -> None:
-        prev = "v0"
-        for k in range(1, rounds + 1):
-            drop = (
-                f"p.t = '__DROP' OR p.t = '{removed}'"
-                if removed is not None
-                else "p.t = '__DROP'"
-            )
-            term = (
-                f"SUM(p.p * CASE WHEN p.t = '__CONV' THEN 1.0 "
-                f"WHEN {drop} THEN 0.0 "
-                f"ELSE COALESCE(v.v, 0.0) END)"
-            )
-            if removed is None:
-                case_s = term
-            else:
-                case_s = (
-                    f"CASE WHEN p.s = '{removed}' THEN 0.0 "
-                    f"ELSE {term} END"
-                )
-            parts.append(
-                f""",
-    {tag}{k} AS MATERIALIZED (
-        SELECT p.s, {case_s} AS v
-        FROM p LEFT JOIN {prev} v ON p.t = v.s
-        GROUP BY p.s
-    )"""
-            )
-            prev = f"{tag}{k}"
-
-    chain("vb", None)
-    for c in channels:
-        chain(f"v{c}", c)
-    vals = ",\n        ".join(
-        f"('{c}', (SELECT v FROM v{c}{rounds} WHERE s = '__START'))"
-        for c in channels
-    )
-    parts.append(
-        f""",
-    basev AS (SELECT v FROM vb{rounds} WHERE s = '__START'),
-    eff AS (
-        SELECT channel,
-               CASE WHEN (SELECT v FROM basev) > 0
-                    THEN 1.0 - pv / (SELECT v FROM basev)
-                    ELSE 0.0 END AS re
-        FROM (VALUES
-        {vals}) AS t(channel, pv)
-    ),
-    pos AS (SELECT SUM(CASE WHEN re > 0 THEN re END) AS ps FROM eff),
-    tc AS (
-        SELECT ch AS channel, CAST(COUNT(*) AS BIGINT) AS n_touches
-        FROM touches GROUP BY 1
-    )
-    SELECT e.channel,
-           COALESCE(tc.n_touches, 0) AS n_touches,
-           ROUND(re, 6) AS removal_effect,
-           ROUND(CASE WHEN ps > 0 AND re > 0 THEN re / ps ELSE 0.0 END, 6)
-               AS attribution_share
-    FROM eff e LEFT JOIN tc ON e.channel = tc.channel, pos
-    ORDER BY e.channel"""
-    )
-    return "".join(parts)
-
-
-@register("markov_attribution_channels", _markov_attr_oracle_sql())
-def q_markov_attribution_channels(spark, sf_dir):
-    """Markov-chain removal-effect attribution over the event journeys
-    (`operators/temporal.py markov_removal_attribution`, 12 value-
-    iteration rounds): each channel's credit is how much the
-    START -> conversion absorption probability falls when its node is
-    knocked out — the data-driven attribution that credits every path
-    dependency, where attribution_last_touch credits only the final
-    click. The oracle replays journeys, the transition grid, and all
-    five unrolled value-iteration chains as materialized CTEs."""
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        markov_removal_attribution,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return markov_removal_attribution(
-        ev, "user_id", "event_type", "ts", "event_id", "purchase", rounds=12
-    ).orderBy("channel")
-
-
-@register(
-    "position_attribution_channels",
-    """
-    WITH conv AS MATERIALIZED (
-        SELECT uid, ct, co FROM (
-            SELECT user_id AS uid, ts AS ct, event_id AS co,
-                   ROW_NUMBER() OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS rn
-            FROM events WHERE event_type = 'purchase'
-        ) WHERE rn = 1
-    ),
-    touches AS MATERIALIZED (
-        SELECT e.user_id AS uid, e.event_type AS ch, e.ts, e.event_id
-        FROM events e JOIN conv ON e.user_id = conv.uid
-        WHERE e.event_type <> 'purchase'
-          AND (e.ts, e.event_id) < (conv.ct, conv.co)
-    ),
-    seq AS (
-        SELECT uid, ch,
-               ROW_NUMBER() OVER (PARTITION BY uid
-                                  ORDER BY ts, event_id) AS rn,
-               COUNT(*) OVER (PARTITION BY uid) AS n
-        FROM touches
-    ),
-    cr AS (
-        SELECT ch, rn = 1 AS isf, rn = n AS isl,
-               CASE WHEN n = 1 THEN 1000000
-                    WHEN n = 2 THEN 500000
-                    WHEN rn = 1 OR rn = n THEN 400000
-                    ELSE CAST(round(200000.0 / (n - 2)) AS BIGINT)
-               END AS cm
-        FROM seq
-    ),
-    per AS (
-        SELECT ch AS channel, CAST(COUNT(*) AS BIGINT) AS n_touches,
-               CAST(SUM(CASE WHEN isf THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_first,
-               CAST(SUM(CASE WHEN isl THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_last,
-               CAST(SUM(cm) AS BIGINT) AS cm
-        FROM cr GROUP BY 1
-    ),
-    tot AS (SELECT CAST(SUM(cm) AS BIGINT) AS t FROM per)
-    SELECT channel, n_touches, n_first, n_last,
-           ROUND(cm / 1e6, 6) AS credit,
-           ROUND(cm * 1.0 / t, 6) AS credit_share
-    FROM per, tot ORDER BY channel
-    """,
-)
-def q_position_attribution_channels(spark, sf_dir):
-    """U-shaped (40/20/40) position-based attribution over the same
-    journey construction as the Markov query (`operators/temporal.py
-    position_attribution`): first and last touch take 40% each, middles
-    split 20% — the rule-based midpoint between attribution_last_touch
-    and markov_attribution_channels, integer-micro credits so per-channel
-    sums are exact."""
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        position_attribution,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return position_attribution(
-        ev, "user_id", "event_type", "ts", "event_id", "purchase"
-    ).orderBy("channel")
-
-
-@register(
-    "shapley_attribution_channels",
-    """
-    WITH chans(channel, bit) AS (
-        VALUES ('click', 1), ('error', 2), ('signup', 4), ('view', 8)
-    ),
-    masks AS (
-        SELECT e.user_id AS u, CAST(bit_or(c.bit) AS BIGINT) AS mask
-        FROM events e JOIN chans c ON e.event_type = c.channel
-        GROUP BY 1
-    ),
-    conv AS (SELECT DISTINCT user_id AS u FROM events
-             WHERE event_type = 'purchase'),
-    setc AS (
-        SELECT COALESCE(m.mask, 0) AS mask, CAST(COUNT(*) AS BIGINT) AS c
-        FROM conv LEFT JOIN masks m USING (u) GROUP BY 1
-    ),
-    ts AS (SELECT CAST(i AS BIGINT) AS t FROM range(0, 16) r(i)),
-    v AS (
-        SELECT ts.t, CAST(COALESCE(SUM(s.c), 0) AS BIGINT) AS v
-        FROM ts LEFT JOIN setc s ON (s.mask & ts.t) = s.mask
-        GROUP BY ts.t
-    ),
-    pairs AS (
-        SELECT ch.channel, vt.v AS vt, vi.v AS vti,
-               CAST(bit_count(vt.t) AS INT) AS s
-        FROM chans ch
-        JOIN v vt ON (vt.t & ch.bit) = 0
-        JOIN v vi ON vi.t = (vt.t | ch.bit)
-    )
-    SELECT channel,
-           ROUND(CAST(SUM(([6, 2, 2, 6])[s + 1] * (vti - vt)) AS BIGINT)
-                 / CAST(24 AS DOUBLE), 6) AS shapley
-    FROM pairs GROUP BY channel ORDER BY channel
-    """,
-)
-def shapley_attribution_channels(spark, sf_dir):
-    """EXACT Shapley-value attribution of purchase conversions across
-    the four non-conversion channels (`operators/temporal.py
-    shapley_attribution`) — the game-theoretic completion of the
-    attribution trio (last-touch / position / Markov removal): the only
-    credit rule satisfying efficiency + symmetry + dummy + additivity.
-    Journeys collapse to one bitmask aggregate; everything after runs on
-    the 16-row coalition grain with n!-scaled INTEGER weights, so both
-    engines agree to the last bit before the single final division."""
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        shapley_attribution,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return shapley_attribution(
-        ev,
-        channels=["click", "error", "signup", "view"],
-        conversion="purchase",
-    )
-
-
-@register(
-    "sequential_patterns_users",
-    """
-    WITH base AS (
-        SELECT user_id AS u, event_type AS t,
-               CAST(floor(epoch(ts)) AS BIGINT) AS e
-        FROM events
-        WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-          AND ts IS NOT NULL AND value >= 90.0
-    ),
-    upt AS (
-        SELECT u, t, list(e ORDER BY e) AS ts FROM base GROUP BY u, t
-    ),
-    nu AS (SELECT CAST(COUNT(DISTINCT u) AS DOUBLE) AS n FROM base),
-    types AS (SELECT DISTINCT t AS ty FROM base),
-    pats AS (
-        SELECT a.ty AS t1, b.ty AS t2, c.ty AS t3
-        FROM types a, types b, types c
-    ),
-    hits AS (
-        SELECT p.t1, p.t2, p.t3, a.u,
-               CASE WHEN len(list_filter(c.ts,
-                        x -> x > (list_filter(b.ts,
-                                 y -> y > a.ts[1]))[1])) > 0
-                    THEN 1 ELSE 0 END AS hit
-        FROM pats p
-        JOIN upt a ON a.t = p.t1
-        JOIN upt b ON b.u = a.u AND b.t = p.t2
-        JOIN upt c ON c.u = a.u AND c.t = p.t3
-    ),
-    sup AS (
-        SELECT t1, t2, t3, CAST(SUM(hit) AS BIGINT) AS n_users
-        FROM hits GROUP BY t1, t2, t3
-    )
-    SELECT t1, t2, t3, n_users,
-           ROUND(n_users / nu.n, 6) AS support
-    FROM sup CROSS JOIN nu
-    WHERE n_users / nu.n >= 0.05
-    ORDER BY support DESC, t1, t2, t3
-    LIMIT 50
-    """,
-)
-def sequential_patterns_users(spark, sf_dir):
-    """Length-3 sequential-pattern support over user event histories
-    (`operators/temporal.py sequential_pattern_support`, min support
-    5%, top 50, restricted to high-value events so histories are sparse
-    enough for supports to differentiate): which ordered type triples
-    actually occur as subsequences and how often — the order-sensitive complement of
-    assoc_rules_copurchase. Greedy earliest-occurrence containment on
-    per-type sorted time arrays; the pattern grid is the type cube,
-    broadcast."""
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        _epoch_seconds,
-        sequential_pattern_support,
-    )
-
-    raw = load_table(spark, "events", sf_dir)
-    ev = raw.select(
-        "user_id",
-        "event_type",
-        _epoch_seconds(raw, "ts").alias("ts_epoch"),
-        "ts",
-    ).where(F.col("ts").isNotNull() & (F.col("value") >= 90.0))
-    return sequential_pattern_support(
-        ev, "user_id", "event_type", "ts_epoch", 0.05, 50
     )
 
 
@@ -813,7 +378,7 @@ def q_hmm_forward_first4(spark, sf_dir):
     events under the fixed 2-state browse/buy HMM
     (`operators/temporal.py hmm_forward_loglik`), averaged per
     first-event type: the hidden-state sequence model above
-    markov_attribution_channels' observable chain — low-likelihood
+    event_transition_probs' observable chain — low-likelihood
     prefixes flag bots or new behavior classes. The recursion is
     unrolled into pure column expressions (no fold, no UDF); per-user
     log-likelihoods are micro-quantized before the cross-user sum."""

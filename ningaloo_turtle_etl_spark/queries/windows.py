@@ -11,10 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
-from ningaloo_turtle_etl_spark.operators.relational import (
-    with_observation_status,
-    with_prev_season,
-)
+from ningaloo_turtle_etl_spark.operators.relational import with_observation_status
 from ningaloo_turtle_etl_spark.registry import register
 from ningaloo_turtle_etl_spark.sources.tables import load_table
 
@@ -114,81 +111,3 @@ def first_event_per_user(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-
-
-@register(
-    "funnel_view_click_purchase",
-    """
-    WITH s1 AS (
-        SELECT user_id, MIN(ts) AS t FROM events
-        WHERE event_type = 'view' GROUP BY user_id
-    ),
-    s2 AS (
-        SELECT e.user_id, MIN(e.ts) AS t
-        FROM events e JOIN s1 ON e.user_id = s1.user_id
-        WHERE e.event_type = 'click' AND e.ts > s1.t
-        GROUP BY e.user_id
-    ),
-    s3 AS (
-        SELECT e.user_id, MIN(e.ts) AS t
-        FROM events e JOIN s2 ON e.user_id = s2.user_id
-        WHERE e.event_type = 'purchase' AND e.ts > s2.t
-        GROUP BY e.user_id
-    ),
-    c AS (SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM s1) AS c1,
-                 (SELECT CAST(COUNT(*) AS BIGINT) FROM s2) AS c2,
-                 (SELECT CAST(COUNT(*) AS BIGINT) FROM s3) AS c3)
-    SELECT 1 AS step_index, 'view' AS step, c1 AS users_reached,
-           ROUND(c1 / CAST(GREATEST(c1, 1) AS DOUBLE), 6) AS conversion_rate
-    FROM c
-    UNION ALL
-    SELECT 2, 'click', c2,
-           ROUND(c2 / CAST(GREATEST(c1, 1) AS DOUBLE), 6) FROM c
-    UNION ALL
-    SELECT 3, 'purchase', c3,
-           ROUND(c3 / CAST(GREATEST(c1, 1) AS DOUBLE), 6) FROM c
-    """,
-)
-def funnel_view_click_purchase(spark, sf_dir):
-    """Ordered funnel over the event stream: view → click → purchase,
-    each step requiring an event strictly after the user's earliest
-    completion of the previous step (earliest-completion greedy). One
-    type-filtered conditional-min per step; the frontier is users-sized."""
-    from ningaloo_turtle_etl_spark.operators.temporal import funnel_steps
-
-    events = load_table(spark, "events", sf_dir)
-    return funnel_steps(events, ["view", "click", "purchase"])
-
-
-@register(
-    "cohort_weekly_retention",
-    """
-    WITH wk AS (
-        SELECT user_id, CAST(date_trunc('week', ts) AS DATE) AS w
-        FROM events
-    ),
-    first AS (SELECT user_id, MIN(w) AS cohort_week FROM wk GROUP BY user_id),
-    active AS (SELECT DISTINCT user_id, w FROM wk),
-    sizes AS (SELECT cohort_week, CAST(COUNT(*) AS BIGINT) AS cohort_size
-              FROM first GROUP BY cohort_week),
-    cells AS (
-        SELECT f.cohort_week,
-               CAST((a.w - f.cohort_week) / 7 AS BIGINT) AS week_offset,
-               CAST(COUNT(*) AS BIGINT) AS n_active
-        FROM active a JOIN first f ON a.user_id = f.user_id
-        GROUP BY 1, 2
-    )
-    SELECT c.cohort_week, c.week_offset, c.n_active, s.cohort_size,
-           ROUND(c.n_active / CAST(s.cohort_size AS DOUBLE), 6)
-               AS retention_rate
-    FROM cells c JOIN sizes s ON c.cohort_week = s.cohort_week
-    """,
-)
-def cohort_weekly_retention(spark, sf_dir):
-    """Weekly cohort retention matrix: cohort = Monday-truncated week of
-    first event; retained at offset k = any event k weeks later. User-keyed
-    shuffles only; the rollup is cohort×offset-sized."""
-    from ningaloo_turtle_etl_spark.operators.temporal import cohort_retention
-
-    events = load_table(spark, "events", sf_dir)
-    return cohort_retention(events)

@@ -182,7 +182,6 @@ PRIORITY: list[str] = [
     "packed_chunk_batches",
     "chunk_dedup",
     "embedding_norm_stats",
-    "bloom_decontaminate",
     "incremental_dedup",
     "lm_quality_scores",
     "duplicate_passage_removal",
@@ -211,8 +210,6 @@ PRIORITY: list[str] = [
     "phrase_search_top_bigram",
     "bm25_top10",
     "edit_similarity_pairs",
-    "funnel_view_click_purchase",
-    "cohort_weekly_retention",
     "heaps_vocab_growth",
     "rollup_pricing_totals",
     "grouping_sets_tally",
@@ -232,7 +229,6 @@ PRIORITY: list[str] = [
     "cube_order_tally",
     "rolling_weekly_value",
     "value_share_of_total",
-    "attribution_last_touch",
     "data_quality_profile",
     "benford_first_digit",
     "interarrival_stats",
@@ -245,15 +241,12 @@ PRIORITY: list[str] = [
     "oov_rate",
     "ngram_novelty",
     "label_centroid_cosine",
-    "session_funnel_view_click_purchase",
     "hard_negative_mining",
     "minhash_incremental_near_dups",
     "cross_source_duplication",
-    "eventually_follows_matrix",
     "source_gini",
     "rolling_wau_hll",
     "boilerplate_removal",
-    "audience_overlap_types",
     "contrastive_negative_pairs",
     "spatial_hotspot_clusters",
     "event_trigram_sequences",
@@ -265,7 +258,6 @@ PRIORITY: list[str] = [
     "annotator_agreement",
     "rank_fusion_select",
     "k_anonymity_events",
-    "assoc_rules_copurchase",
     # r07 generalization-ladder k-anonymity release, full oracle
     "k_anon_generalize_events",
     # r07 fuzzy record linkage clusters (the pairs stage was promoted into
@@ -280,20 +272,14 @@ PRIORITY: list[str] = [
     "winnowing_quote_pairs",
     # r08 corpus BLEU-4 / ROUGE-N generation eval, full oracle
     "bleu_rouge_by_source",
-    # r08 Bradley-Terry pairwise-preference leaderboard, full oracle
-    "bt_brand_preference",
     # r08 Artetxe-Schwenk margin bitext mining, full oracle
     "bitext_margin_pairs",
     # r08 order-independent dataset content digest, full oracle
     "table_digest_by_flag",
     # r08 Kneser-Ney bigram LM scoring, full oracle
     "kneser_ney_lm_scores",
-    # r08 Markov removal-effect attribution, full oracle
-    "markov_attribution_channels",
     # r08 Z-order clustering layout, full oracle
     "zorder_layout_buckets",
-    # r08 deterministic word2vec-style negative sampling, full oracle
-    "negative_brand_samples",
     # r08 demotion freeing the fuzzy_part_pairs slot: the lag/window-shape
     # component stays proven in-window by remigration_lag + topk_per_group;
     # this stays oracle-swept by pytest + the supplement artifact.
@@ -312,23 +298,13 @@ PRIORITY: list[str] = [
     "compaction_bin_plan",
     # r09 RAKE keyword extraction (micro-int word scores)
     "rake_top_phrases",
-    # r09 U-shaped position-based attribution (integer-micro credits)
-    "position_attribution_channels",
     # r09 four-moment profile from raw power sums (explicit formulas —
     # built-in skewness/kurtosis conventions differ across engines)
     "moment_profile_by_type",
-    # r09 item-item cosine CF ranking (Ochiai over the incidence grid)
-    "item_cosine_top100",
-    # r10 skyline (Pareto frontier) — distinct-grain window vs the
-    # oracle's independent quadratic NOT EXISTS dominance statement
-    "pareto_frontier_parts",
     # r10 Hilbert-curve layout buckets (the locality-preserving twin of
     # zorder_layout_buckets; unrolled state-machine bit arithmetic
     # replayed level-by-level in SQL)
     "hilbert_layout_buckets",
-    # r10 matrix-factorization gradient training (rank-1 Funk-SVD,
-    # integer-micro exact rounds, unrolled-oracle trajectory)
-    "mf_gd_factors",
     # r10 entropy l-diversity (Machanavajjhala §3.2 — the skew-sensitive
     # release gate the count-distinct check misses)
     "entropy_l_diversity_events",
@@ -340,9 +316,6 @@ PRIORITY: list[str] = [
     # r11: greedy k-center coreset (farthest-point traversal, the
     # diversity selector; unrolled exact-integer-distance oracle)
     "kcenter_coreset_select",
-    # r11: rank-1 ALS (closed-form alternating solve, zero driver state;
-    # the optimizer twin of mf_gd_factors)
-    "als_rank1_factors",
     # (fellegi_sunter_part_weights promoted into the r12 driver window
     # above)
     # r11: real WAV codec tier — synth→RIFF/PCM16 decode→integer-exact
@@ -351,18 +324,9 @@ PRIORITY: list[str] = [
     # r11: DP quantile by the exponential mechanism (seeded draw; the
     # rank-statistic DP release next to the Laplace counts)
     "dp_value_median_exponential",
-    # r11: length-3 sequential-pattern support (GSP/PrefixSpan contract;
-    # greedy earliest-occurrence containment on sorted time arrays)
-    "sequential_patterns_users",
     # r11: rendezvous (HRW) shard placement audit with the n->n+1
     # minimal-disruption expansion plan
     "rendezvous_shard_plan",
-    # r10 exact Shapley-value attribution (coalition-grain integer
-    # arithmetic, n!-scaled weights, one final division)
-    "shapley_attribution_channels",
-    # r10 second batch: RFM lifecycle segmentation (rank-quintile NTILE
-    # on the customer grain, segment-grain output)
-    "rfm_customer_segments",
     # r10 within-group inequality profile (CV / Theil / Atkinson —
     # nano-quantized entropy terms, micro-quantized sqrt terms)
     "inequality_profile_by_source",
@@ -372,7 +336,7 @@ PRIORITY: list[str] = [
     "zonemap_prune_shipdate",
     # r11 second batch: 2-state HMM forward log-likelihood, unrolled
     # 4 steps as pure column expressions (the hidden-state rung above
-    # markov_attribution's observable chain)
+    # event_transition_probs' observable chain)
     "hmm_forward_first4",
     # r11 third batch: Cohen's kappa on the lang-ID confusion matrix
     # (chance-corrected agreement; exact-bigint cells)

@@ -243,104 +243,6 @@ def test_chunk_documents_sliding_windows(spark):
         chunk_documents(df, max_tokens=4, stride=5)
 
 
-def test_bloom_matches_exact_contamination(spark):
-    from ningaloo_turtle_etl_spark.operators.curation import (
-        bloom_contamination_flags,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .withColumn("text", F.lower(F.col("text")))
-    )
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    exact = {
-        r["doc_id"]: r
-        for r in contamination_flags(corpus, bench, n=3, threshold=0.2).collect()
-    }
-    bloom = {
-        r["doc_id"]: r
-        for r in bloom_contamination_flags(
-            corpus, bench, n=3, threshold=0.2
-        ).collect()
-    }
-    assert set(exact) == set(bloom)
-    for d, e in exact.items():
-        b = bloom[d]
-        assert (e["n_grams"], e["n_contaminated"], e["contaminated"]) == (
-            b["n_grams"], b["n_contaminated"], b["contaminated"]
-        ), d
-
-
-def test_bloom_no_false_negatives(spark):
-    """Every gram actually in the vocabulary must pass the bitmap test —
-    Bloom filters may only err toward false positives."""
-    from ningaloo_turtle_etl_spark.operators.curation import (
-        bloom_might_contain,
-        bloom_parameters,
-        build_bloom_words,
-    )
-
-    grams = [(f"gram number {i}",) for i in range(500)]
-    df = spark.createDataFrame(grams, "gram string")
-    hashes = [r["h"] for r in df.select(F.xxhash64("gram").alias("h")).collect()]
-    m, k = bloom_parameters(len(hashes), fpp=0.01)
-    words = F.lit(build_bloom_words(hashes, m, k))
-    hashed = df.withColumn("_h", F.xxhash64("gram")).withColumns(
-        {
-            "_h1": F.col("_h").bitwiseAND(F.lit(4294967295)),
-            "_h2": F.expr("shiftrightunsigned(_h, 32)").bitwiseOR(F.lit(1)),
-        }
-    )
-    n_pass = hashed.filter(bloom_might_contain(words, m, k)).count()
-    assert n_pass == 500
-    # And unseen grams mostly fail (fpp is 1%; 500 probes → expect ~5 hits,
-    # allow generous slack).
-    other = spark.createDataFrame(
-        [(f"unseen thing {i}",) for i in range(500)], "gram string"
-    )
-    o_hashed = other.withColumn("_h", F.xxhash64("gram")).withColumns(
-        {
-            "_h1": F.col("_h").bitwiseAND(F.lit(4294967295)),
-            "_h2": F.expr("shiftrightunsigned(_h, 32)").bitwiseOR(F.lit(1)),
-        }
-    )
-    n_fp = o_hashed.filter(bloom_might_contain(words, m, k)).count()
-    assert n_fp <= 50
-
-
-def test_distributed_bloom_build_matches_local(spark):
-    """The executor-side treeReduce bitmap fold is bit-for-bit identical to
-    the local build on the same hashes, and what crosses to the driver is
-    O(bitmap) — one array of m/64 words regardless of vocabulary size."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.curation import (
-        bloom_parameters,
-        build_bloom_words,
-        build_bloom_words_distributed,
-    )
-
-    df = spark.createDataFrame(
-        [(f"gram number {i}",) for i in range(5000)], "gram string"
-    ).repartition(13)  # many partitions → real partial-bitmap merging
-    hashes = [r["h"] for r in df.select(F.xxhash64("gram").alias("h")).collect()]
-    m, k = bloom_parameters(len(hashes), fpp=0.01)
-
-    local = build_bloom_words(hashes, m, k)
-    dist = build_bloom_words_distributed(
-        df.select(F.xxhash64("gram").alias("h")), m, k
-    )
-    assert np.array_equal(np.asarray(local), np.asarray(dist))
-    # Driver-side result is the bitmap itself: m/64 words, NOT O(n_hashes).
-    assert len(dist) == (m + 63) // 64
-
-    # Empty vocabulary → all-zero bitmap, no crash.
-    empty = spark.createDataFrame([], "h bigint")
-    zeros = build_bloom_words_distributed(empty, 640, 3)
-    assert len(zeros) == 10 and not np.asarray(zeros).any()
-
-
 def test_temperature_mix_flattens_toward_low_resource(spark):
     from ningaloo_turtle_etl_spark.operators.curation import temperature_mix_sample
 

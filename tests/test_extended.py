@@ -185,70 +185,3 @@ def test_count_pivot_empty_values_yields_no_value_columns(spark):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
     out = count_pivot(df, ["k"], "v", values=[])
     assert out.columns == ["k"]
-
-
-def test_pareto_frontier_matches_bruteforce_and_keeps_ties(spark):
-    """Skyline vs an O(n^2) dominance replica on a seeded point cloud,
-    plus the tie rule: identical (min,max) pairs never dominate each
-    other, so ALL rows carrying a surviving value pair come back."""
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.relational import (
-        pareto_frontier_2d,
-    )
-
-    rng = np.random.RandomState(42)
-    pts = [
-        (i, float(rng.randint(0, 50)) / 2.0, int(rng.randint(0, 30)))
-        for i in range(200)
-    ]
-    # force a tie on the frontier: two rows with the identical best pair
-    best_price = min(p for _, p, _ in pts)
-    best_size = max(s for _, p, s in pts if p == best_price)
-    pts += [(200, best_price, best_size), (201, best_price, best_size)]
-
-    def dominated(a, others):
-        _, pa, sa = a
-        return any(
-            (pb <= pa and sb >= sa and (pb < pa or sb > sa))
-            for _, pb, sb in others
-        )
-
-    expect = {i for i, p, s in pts if not dominated((i, p, s), pts)}
-    df = spark.createDataFrame(pts, "pid long, price double, size int")
-    got = {
-        r["pid"]
-        for r in pareto_frontier_2d(
-            df, "price", "size", id_cols=("pid",)
-        ).collect()
-    }
-    assert got == expect
-    assert {200, 201} <= got  # both tie rows survive
-    # sanity: frontier is strictly increasing in size as price grows
-    rows = sorted(
-        (r["price"], r["size"])
-        for r in pareto_frontier_2d(df, "price", "size").distinct().collect()
-    )
-    sizes = [s for _, s in rows]
-    assert sizes == sorted(set(sizes)), rows
-
-
-def test_pareto_frontier_null_rows_are_excluded(spark):
-    """Rows with NULL value columns are neither dominators nor
-    dominated under three-valued logic — they must be dropped, not let
-    Spark's nulls-first window ordering shadow every real row."""
-    from ningaloo_turtle_etl_spark.operators.relational import (
-        pareto_frontier_2d,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 5.0, 10), (2, None, 99), (3, 4.0, None), (4, 4.0, 10)],
-        "pid long, price double, size int",
-    )
-    got = {
-        r["pid"]
-        for r in pareto_frontier_2d(
-            df, "price", "size", id_cols=("pid",)
-        ).collect()
-    }
-    assert got == {4}

@@ -85,50 +85,6 @@ def test_minhash_signature_slots_are_distinct_hash_functions(spark, docs):
     assert len(set(sig)) >= 24  # independent seeds → (almost) all distinct
 
 
-def test_minhash_collapse_exact_matches_direct_path(spark, docs):
-    # collapse_exact=True must be bit-identical to the direct path on a
-    # duplicate-free corpus, and reproduce the SAME pair list (ids and
-    # jaccard values) on a corpus with exact replicas when no bucket cap
-    # interferes — members inherit their representative's shingle set, so
-    # the expansion is exact, not approximated.
-    import pyspark.sql.functions as F
-
-    direct = sorted(
-        map(tuple, minhash_near_dup_pairs(docs, max_bucket_size=None).collect())
-    )
-    collapsed = sorted(
-        map(
-            tuple,
-            minhash_near_dup_pairs(
-                docs, max_bucket_size=None, collapse_exact=True
-            ).collect(),
-        )
-    )
-    assert collapsed == direct
-
-    replicated = docs.unionByName(
-        docs.withColumn("doc_id", F.col("doc_id") + F.lit(100))
-    )
-    direct_r = sorted(
-        map(
-            tuple,
-            minhash_near_dup_pairs(replicated, max_bucket_size=None).collect(),
-        )
-    )
-    collapsed_r = sorted(
-        map(
-            tuple,
-            minhash_near_dup_pairs(
-                replicated, max_bucket_size=None, collapse_exact=True
-            ).collect(),
-        )
-    )
-    assert collapsed_r == direct_r
-    # replica pairs surface at jaccard exactly 1.0
-    as_map = dict(((a, b), j) for a, b, j in collapsed_r)
-    assert as_map[(1, 101)] == 1.0 and as_map[(2, 102)] == 1.0
-
-
 def test_minhash_md5_family_matches_xxhash64_semantics(spark, docs):
     # The md5 family (default, DuckDB-reproducible) must satisfy the same
     # planted-pair contract as the xxhash64 family, and its verify stage is
@@ -1278,41 +1234,6 @@ def test_label_centroid_cosine_known_geometry(spark):
     assert abs(out[(0, 2)] - round(1 / 2**0.5, 6)) < 1e-9
     assert abs(out[(1, 2)] - round(1 / 2**0.5, 6)) < 1e-9
     assert len(out) == 3  # unordered pairs only
-
-
-def test_session_funnel_respects_session_boundaries(spark):
-    import datetime as dt
-
-    from ningaloo_turtle_etl_spark.operators.temporal import session_funnel
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def ev(i, uid, off, typ):
-        return (i, uid, t0 + dt.timedelta(seconds=off), typ)
-
-    rows = [
-        # user 1: view+click+purchase inside one session -> full conversion
-        ev(1, 1, 0, "view"), ev(2, 1, 60, "click"), ev(3, 1, 120, "purchase"),
-        # user 2: view, then a 2h gap, then click -> different sessions,
-        # the click must NOT count (a user-level funnel would count it)
-        ev(4, 2, 0, "view"), ev(5, 2, 7200, "click"),
-        # user 3: click before view in the same session -> step 2 not reached
-        ev(6, 3, 0, "click"), ev(7, 3, 60, "view"),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, ts timestamp, event_type string"
-    )
-    out = {
-        r["step"]: r
-        for r in session_funnel(
-            df, ["view", "click", "purchase"], gap_seconds=1800,
-            tiebreak_col="event_id",
-        ).collect()
-    }
-    assert out["view"]["sessions_reached"] == 3
-    assert out["click"]["sessions_reached"] == 1   # only user 1's session
-    assert out["purchase"]["sessions_reached"] == 1
-    assert out["click"]["conversion_rate"] == round(1 / 3, 6)
 
 
 def test_hard_negatives_excludes_same_label(spark):
@@ -2587,62 +2508,6 @@ def test_rake_keywords_hand_case(spark):
     assert out2 == {"alpha beta"}
 
 
-def test_mf_gd_factors_matches_python_replica(spark):
-    """Rank-1 MF gradient descent vs an exact Python replica of the
-    integer-nano arithmetic (HALF-UP rounding like Spark's F.round):
-    the full factor trajectory and the train RMSE must match to the
-    6dp output quantum, and the mean-gradient must move every factor."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.similarity import mf_gd_factors
-
-    def rnd(v):
-        return math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-
-    ratings = [
-        (u, i, float((u * 3 + i * 5) % 9 + 1) / 2.0)
-        for u in range(1, 7)
-        for i in range(1, 9)
-        if (u + i) % 3 != 0
-    ]
-    p = {u: 0.5 + (u % 7) / 10.0 for u in {u for u, _, _ in ratings}}
-    q = {i: 0.5 + (i % 11) / 10.0 for i in {i for _, i, _ in ratings}}
-    lr = 0.0625
-    for _ in range(3):
-        gp, gq = {}, {}
-        for u, i, r in ratings:
-            e = r - p[u] * q[i]
-            su, nu = gp.get(u, (0, 0))
-            gp[u] = (su + rnd(e * q[i] * 1e9), nu + 1)
-            si, ni = gq.get(i, (0, 0))
-            gq[i] = (si + rnd(e * p[u] * 1e9), ni + 1)
-        p = {u: p[u] + lr * ((g / 1e9) / n) for u, (g, n) in gp.items()}
-        q = {i: q[i] + lr * ((g / 1e9) / n) for i, (g, n) in gq.items()}
-    tot = sum(
-        rnd((r - p[u] * q[i]) * (r - p[u] * q[i]) * 1e9)
-        for u, i, r in ratings
-    )
-    rmse = round(math.sqrt((tot / 1e9) / len(ratings)), 6)
-
-    df = spark.createDataFrame(
-        ratings, "user_id long, item_id long, rating double"
-    )
-    rows = mf_gd_factors(df, iterations=3, lr=lr).collect()
-    got_u = {
-        r["id"]: r["factor"] for r in rows if r["side"] == "user"
-    }
-    got_i = {
-        r["id"]: r["factor"] for r in rows if r["side"] == "item"
-    }
-    assert got_u == {u: round(v, 6) for u, v in p.items()}
-    assert got_i == {i: round(v, 6) for i, v in q.items()}
-    assert all(abs(r["train_rmse"] - rmse) < 2e-6 for r in rows)
-    # training actually moved things: no factor is still at its init
-    assert all(
-        abs(got_u[u] - (0.5 + (u % 7) / 10.0)) > 1e-9 for u in got_u
-    )
-
-
 def test_ranking_metrics_hand_values_and_weight_exactness(spark):
     """NDCG/precision/MRR against hand-computed values on a fixed ranked
     list, including the no-relevant query (null mrr/zero ndcg) and the
@@ -2859,92 +2724,6 @@ def test_jpeg_decoder_tolerates_fill_bytes():
     padded = jpg[:2] + b"\xff\xff" + jpg[2:]
     _, _, pix = _jpeg_decode(padded)
     assert (pix == base).all()
-
-
-def test_als_rank1_factors_replica_and_rank1_recovery(spark):
-    """Three pins: (a) the 3-alternation trajectory matches an exact
-    Python replica of the nano-quantized closed-form solves; (b) on a
-    true rank-1 matrix ALS recovers it (tiny RMSE, far below one
-    GD-round's); (c) more alternations never worsen train RMSE."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        als_rank1_factors,
-    )
-
-    # true rank-1: r_ui = a_u * b_i
-    a = {1: 1.5, 2: 0.8, 3: 2.2, 4: 1.0}
-    b = {10: 0.5, 11: 1.2, 12: 2.0, 13: 0.9, 14: 1.6}
-    rows = [(u, i, a[u] * b[i]) for u in a for i in b]
-    df = spark.createDataFrame(
-        rows, "user_id long, item_id long, rating double"
-    )
-    got = {
-        (r["side"], r["id"]): (r["factor"], r["train_rmse"])
-        for r in als_rank1_factors(df, iterations=3, lam=0.25).collect()
-    }
-
-    def rnd(v):
-        return math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-
-    q = {i: 0.5 + (i % 7) / 10 for i in b}
-    p = {}
-    for _ in range(3):
-        for u in a:
-            num = sum(rnd(a[u] * b[i] * q[i] * 1e9) for i in b)
-            den = sum(rnd(q[i] * q[i] * 1e9) for i in b)
-            p[u] = (num / 1e9) / (0.25 + den / 1e9)
-        for i in b:
-            num = sum(rnd(a[u] * b[i] * p[u] * 1e9) for u in a)
-            den = sum(rnd(p[u] * p[u] * 1e9) for u in a)
-            q[i] = (num / 1e9) / (0.25 + den / 1e9)
-    se = sum(
-        rnd((a[u] * b[i] - p[u] * q[i]) ** 2 * 1e9) for u in a for i in b
-    )
-    rmse = math.sqrt((se / 1e9) / len(rows))
-
-    def r6(v):
-        import decimal
-
-        return float(
-            decimal.Decimal(v).quantize(
-                decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
-
-    for u in a:
-        assert got[("user", u)][0] == r6(p[u])
-    for i in b:
-        assert got[("item", i)][0] == r6(q[i])
-    assert got[("user", 1)][1] == r6(rmse)
-
-    # rank-1 recovery: the product p_u*q_i approximates a_u*b_i closely
-    assert rmse < 0.05
-    # each half-solve minimizes the RIDGE objective exactly, so the
-    # regularized loss is monotone non-increasing across alternations
-    # (raw RMSE need not be — λ trades fit for shrinkage); replay the
-    # trajectory and check the objective at every alternation
-    def objective(pp, qq):
-        return (
-            sum((a[u] * b[i] - pp[u] * qq[i]) ** 2 for u in a for i in b)
-            + 0.25 * (sum(v * v for v in pp.values())
-                      + sum(v * v for v in qq.values()))
-        )
-
-    q2 = {i: 0.5 + (i % 7) / 10 for i in b}
-    p2 = {u: 0.0 for u in a}
-    objs = []
-    for _ in range(4):
-        for u in a:
-            num = sum(rnd(a[u] * b[i] * q2[i] * 1e9) for i in b)
-            den = sum(rnd(q2[i] * q2[i] * 1e9) for i in b)
-            p2[u] = (num / 1e9) / (0.25 + den / 1e9)
-        for i in b:
-            num = sum(rnd(a[u] * b[i] * p2[u] * 1e9) for u in a)
-            den = sum(rnd(p2[u] * p2[u] * 1e9) for u in a)
-            q2[i] = (num / 1e9) / (0.25 + den / 1e9)
-        objs.append(objective(p2, q2))
-    assert all(objs[t + 1] <= objs[t] + 1e-9 for t in range(len(objs) - 1))
 
 
 def test_cohens_kappa_langid_reference(spark):
@@ -3210,5 +2989,3 @@ def test_pca_mean_exact_past_double_cliff(spark):
     con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
     oracle = con.sql(_pca_power_components_oracle_sql(1, 3, 1)).fetchall()
     assert [(r[-2], r[-1]) for r in oracle] == [(1.0, 4.448163)]
-
-

@@ -184,74 +184,3 @@ def test_benford_digit_extraction_truncates_not_rounds(spark):
     )
     # 999.6 → 9 (not 1 via 1000), 899.7 → 8 (not 9 via 900)
     assert got == [1, 8, 9]
-
-
-def test_rfm_segments_replica_and_shape(spark):
-    """rfm_segments vs an exact Python replica of the ntile/segment
-    logic on a 25-customer synthetic order file: identical cell counts
-    and means, every score in 1..5, segment labels follow the (R, F)
-    mapping, and the output grain is the segment cell (≤ 125 rows)."""
-    import datetime
-
-    from ningaloo_turtle_etl_spark.operators.relational import rfm_segments
-
-    base = datetime.datetime(2024, 1, 1)
-    rows = []
-    for c in range(1, 26):
-        # customer c places c % 7 + 1 orders, last one c days before the
-        # global max date, each worth 10*c dollars
-        for j in range(c % 7 + 1):
-            rows.append(
-                (c, base + datetime.timedelta(days=100 - c - j), 10.0 * c)
-            )
-    df = spark.createDataFrame(rows, "cust long, d timestamp, amt double")
-    out = rfm_segments(df, "cust", "d", "amt").collect()
-
-    # python replica
-    per = {}
-    for c, d, amt in rows:
-        day = int(d.timestamp() // 86400)
-        last, freq, mon = per.get(c, (-(10**9), 0, 0))
-        per[c] = (max(last, day), freq + 1, mon + round(amt * 1e6))
-    gmax = max(v[0] for v in per.values())
-    custs = sorted(per)
-
-    def ntile(order_key):
-        ranked = sorted(custs, key=order_key)
-        n, k = len(ranked), 5
-        out, start = {}, 0
-        for b in range(1, k + 1):
-            size = n // k + (1 if b <= n % k else 0)
-            for c in ranked[start : start + size]:
-                out[c] = b
-            start += size
-        return out
-
-    r_sc = ntile(lambda c: (-(gmax - per[c][0]), c))
-    f_sc = ntile(lambda c: (per[c][1], c))
-    m_sc = ntile(lambda c: (per[c][2], c))
-    cells = {}
-    for c in custs:
-        r, f, m = r_sc[c], f_sc[c], m_sc[c]
-        if r >= 4 and f >= 4:
-            seg = "champion"
-        elif r >= 4 and f <= 2:
-            seg = "recent_low_freq"
-        elif r <= 2 and f >= 4:
-            seg = "at_risk"
-        elif r <= 2 and f <= 2:
-            seg = "hibernating"
-        else:
-            seg = "core"
-        key = (seg, r, f, m)
-        n, mon, rec = cells.get(key, (0, 0, 0))
-        cells[key] = (n + 1, mon + per[c][2], rec + gmax - per[c][0])
-
-    assert len(out) == len(cells) <= 125
-    for row in out:
-        key = (row["segment"], row["r_score"], row["f_score"], row["m_score"])
-        n, mon, rec = cells[key]
-        assert row["n_customers"] == n
-        assert abs(row["avg_monetary"] - round(mon / 1e6 / n, 6)) < 1e-9
-        assert abs(row["avg_recency_days"] - round(rec / n, 6)) < 1e-9
-        assert 1 <= row["r_score"] <= 5

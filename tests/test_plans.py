@@ -107,6 +107,11 @@ def test_decontaminate_corpus_broadcasts_vocab_no_corpus_shuffle_join(spark):
     assert "SortMergeJoin" not in plan
     # partial agg collapses exploded grams before the only corpus exchange
     assert "partial_count" in plan
+    # explode_outer infers no size()>0 filter, so no Filter node re-builds
+    # the gram array: every split() in the plan lives in a Project/Generate.
+    for line in plan.splitlines():
+        if "Filter" in line and "split(text" in line:
+            raise AssertionError(f"gram expression inlined into a Filter: {line[:160]}")
 
 
 def test_repetition_metrics_is_map_only(spark):
@@ -140,17 +145,6 @@ def test_text_token_quality_prunes_scan_to_two_columns(spark):
     assert m and "doc_id" in m.group(1) and "text" in m.group(1)
     assert "lang" not in m.group(1) and "source" not in m.group(1)
     assert "Exchange" not in plan  # fused map-only projection
-
-
-def test_bloom_decontaminate_no_nested_loop_no_inferred_gram_filter(spark):
-    plan = plan_of(spark, "bloom_decontaminate")
-    # The bitmap is a plan literal, not a joined one-row frame.
-    assert "BroadcastNestedLoopJoin" not in plan
-    # explode_outer infers no size()>0 filter, so no Filter node re-builds
-    # the gram array: every split() in the plan lives in a Project/Generate.
-    for line in plan.splitlines():
-        if "Filter" in line and "split(text" in line:
-            raise AssertionError(f"gram expression inlined into a Filter: {line[:160]}")
 
 
 def test_duplicate_passage_removal_plan_shape(spark):
@@ -310,15 +304,6 @@ def test_boilerplate_plan_shape(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_audience_overlap_joins_on_member(spark):
-    """The pair self-join keys on the member column (per-member-degree²
-    fan-out), never a cartesian, and the size dims broadcast."""
-    plan = plan_of(spark, "audience_overlap_types")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_fuzzy_part_pairs_no_cartesian_and_name_dim_only(spark):
     plan = plan_of(spark, "fuzzy_part_pairs")
     # blocked self-join is a hash/broadcast equi-join on the block key,
@@ -422,17 +407,6 @@ def test_lloyd_assignment_scan_has_no_join(spark):
     assert {r["code"]: r["n"] for r in grid.collect()} == {0: 10, 1: 10}
 
 
-def test_pareto_frontier_broadcast_semi_join_jvm_only(spark):
-    plan = plan_of(spark, "pareto_frontier_parts")
-    # the dominance statement is NOT executed quadratically: surviving
-    # value pairs fan back via a broadcast LEFT SEMI join; no all-pairs
-    # compare, no Python stage
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "LeftSemi" in plan and "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_hilbert_buckets_stay_in_codegen_no_python(spark):
     plan = plan_of(spark, "hilbert_layout_buckets")
     # the six unrolled levels are materialized Generate stages — map-only,
@@ -443,26 +417,6 @@ def test_hilbert_buckets_stay_in_codegen_no_python(spark):
     assert "Join" not in plan
 
 
-def test_mf_gd_round_joins_broadcast_factor_tables(spark):
-    plan = plan_of(spark, "mf_gd_factors")
-    # every round joins ratings onto the two entity-sized factor vectors:
-    # those sides must broadcast-hash; the only nested-loop join allowed
-    # is the single 1-row train_rmse metric attach (a cross join with a
-    # literal-sized side), never a ratings-sided one
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
-    assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_shapley_runs_on_coalition_grain(spark):
-    plan = plan_of(spark, "shapley_attribution_channels")
-    # after the bitmask bit_or aggregate everything is 2^n-grain; the
-    # subset-containment join is tiny-side broadcast, never row x row
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "bit_or" in plan.lower()
-
-
 def test_symspell_pairs_key_equi_join_jvm_only(spark):
     plan = plan_of(spark, "symspell_customer_pairs")
     # candidates come from the delete-1 key EQUI-join over the distinct
@@ -470,16 +424,6 @@ def test_symspell_pairs_key_equi_join_jvm_only(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_rfm_single_fact_aggregate_then_dimension_windows(spark):
-    plan = plan_of(spark, "rfm_customer_segments")
-    # one map-side-combined aggregate brings orders to the customer
-    # grain; the dataset max and the three NTILE sorts all run on that
-    # dimension (documented trade) — no join, no second scan
-    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert plan.count("FileScan") == 1  # orders is read exactly once
 
 
 def test_trained_ivf_pq_serve_tiers_broadcast_no_cartesian(spark):

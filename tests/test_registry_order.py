@@ -143,7 +143,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "packed_chunk_batches",
         "chunk_dedup",
         "embedding_norm_stats",
-        "bloom_decontaminate",
         "incremental_dedup",
         "lm_quality_scores",
         "duplicate_passage_removal",
@@ -172,8 +171,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "phrase_search_top_bigram",
         "bm25_top10",
         "edit_similarity_pairs",
-        "funnel_view_click_purchase",
-        "cohort_weekly_retention",
         "heaps_vocab_growth",
         "rollup_pricing_totals",
         "grouping_sets_tally",
@@ -193,7 +190,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "cube_order_tally",
         "rolling_weekly_value",
         "value_share_of_total",
-        "attribution_last_touch",
         "data_quality_profile",
         "benford_first_digit",
         "interarrival_stats",
@@ -206,15 +202,12 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "oov_rate",
         "ngram_novelty",
         "label_centroid_cosine",
-        "session_funnel_view_click_purchase",
         "hard_negative_mining",
         "minhash_incremental_near_dups",
         "cross_source_duplication",
-        "eventually_follows_matrix",
         "source_gini",
         "rolling_wau_hll",
         "boilerplate_removal",
-        "audience_overlap_types",
         "contrastive_negative_pairs",
         "spatial_hotspot_clusters",
         "event_trigram_sequences",
@@ -242,20 +235,14 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "winnowing_quote_pairs",
         # r08 corpus BLEU/ROUGE generation eval, full oracle
         "bleu_rouge_by_source",
-        # r08 Bradley-Terry preference leaderboard, full oracle
-        "bt_brand_preference",
         # r08 margin-criterion bitext mining, full oracle
         "bitext_margin_pairs",
         # r08 dataset content digest, full oracle
         "table_digest_by_flag",
         # r08 Kneser-Ney LM scoring, full oracle
         "kneser_ney_lm_scores",
-        # r08 Markov removal-effect attribution, full oracle
-        "markov_attribution_channels",
         # r08 Z-order layout buckets, full oracle
         "zorder_layout_buckets",
-        # r08 deterministic negative sampling, full oracle
-        "negative_brand_samples",
         # r07 aHash image near-dups, full oracle
         "image_ahash_near_dups",
         # r09 additions, all full oracles
@@ -263,24 +250,17 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "source_lang_diversity",
         "compaction_bin_plan",
         "rake_top_phrases",
-        "position_attribution_channels",
         "moment_profile_by_type",
-        "item_cosine_top100",
-        # r10 extension families, full oracles (skyline / Hilbert layout /
-        # rank-1 MF training)
-        "pareto_frontier_parts",
+        # r10 extension families, full oracles
         "hilbert_layout_buckets",
-        "mf_gd_factors",
         "entropy_l_diversity_events",
         "ranking_ndcg_eval",
         # (pca_power_components promoted into the r12 driver window)
         # r11 extension families, full oracles
         "kcenter_coreset_select",
-        "als_rank1_factors",
         # (fellegi_sunter_part_weights promoted into the r12 driver window)
         "audio_wav_features",
         "dp_value_median_exponential",
-        "sequential_patterns_users",
         "rendezvous_shard_plan",
         # r11 second batch, full oracles
         "zonemap_prune_shipdate",
@@ -293,12 +273,7 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "query_likelihood_top10",
         "retrieval_mrr_map",
         "hmm_viterbi_first4",
-        "shapley_attribution_channels",
-        # r10 second batch: RFM segment rollup
-        "rfm_customer_segments",
         "inequality_profile_by_source",
-        # r05 Apriori market-basket rules, full oracle
-        "assoc_rules_copurchase",
         # displaced by window consolidation; their merged twins (see
         # text_token_quality / patch_season / timestamp_pipeline) hold the
         # driver rows for the same components

@@ -399,51 +399,6 @@ def test_rrf_fuse_rejects_empty_signals(spark):
         rrf_fuse(df, [])
 
 
-def test_negative_samples_distribution_and_determinism(spark):
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators.selection import (
-        negative_samples,
-    )
-
-    items = spark.createDataFrame(
-        [("head", 800), ("mid", 150), ("tail", 50)], "item string, c long"
-    )
-    ex = spark.range(3000).select(F.col("id").alias("ex_id"))
-    out = negative_samples(
-        ex, "ex_id", items, "item", "c", n_neg=2, power=0.75, seed="t"
-    )
-    rows = out.collect()
-    # exactly n_neg rows per example, slots 0..n_neg-1
-    assert len(rows) == 6000
-    per = {}
-    for r in rows:
-        per.setdefault(r["example"], set()).add(r["slot"])
-    assert all(s == {0, 1} for s in per.values())
-    # frequency^0.75 damps the head: head share must sit between the
-    # raw-frequency share (0.8) and uniform (1/3)
-    counts = out.groupBy("item").count().collect()
-    share = {r["item"]: r["count"] / 6000 for r in counts}
-    w = {k: v**0.75 for k, v in (("head", 800), ("mid", 150), ("tail", 50))}
-    tot = sum(w.values())
-    for k in w:
-        assert abs(share[k] - w[k] / tot) < 0.03
-    assert 1 / 3 < share["head"] < 0.8
-    # deterministic: same seed -> identical draws; different seed differs
-    again = negative_samples(
-        ex, "ex_id", items, "item", "c", n_neg=2, power=0.75, seed="t"
-    ).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-    other = negative_samples(
-        ex, "ex_id", items, "item", "c", n_neg=2, power=0.75, seed="u"
-    ).collect()
-    assert sorted(map(tuple, rows)) != sorted(map(tuple, other))
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        negative_samples(ex, "ex_id", items, "item", "c", n_neg=0)
-
-
 def test_cv_fold_assignment_deterministic_and_balanced(spark):
     """The md5-uniform fold id matches a hashlib replica exactly, every
     doc lands in exactly one of the 5 folds, and the fold sizes are

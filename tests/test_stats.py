@@ -176,34 +176,6 @@ def test_forward_select_trace_matches_numpy_reference(spark):
     assert trace[(2, "xn1")][1] is True  # true secondary predictor next
 
 
-def test_eventually_follows_hand_matrix(spark):
-    import datetime as dt
-
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        eventually_follows,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(uid, off, typ):
-        return (uid, t0 + dt.timedelta(seconds=off), typ)
-
-    rows = [
-        ev(1, 0, "a"), ev(1, 10, "b"),    # a before b
-        ev(2, 0, "a"), ev(2, 5, "b"), ev(2, 8, "a"),  # firsts: a<b
-        ev(3, 0, "b"), ev(3, 10, "a"),    # b before a
-        ev(4, 0, "a"), ev(4, 0, "b"),     # tie: neither direction
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    out = {
-        (r["type_a"], r["type_b"]): r
-        for r in eventually_follows(df).collect()
-    }
-    assert out[("a", "b")]["n_keys"] == 2
-    assert out[("b", "a")]["n_keys"] == 1
-    assert out[("a", "b")]["frac"] == 0.5  # 2 of 4 users with both
-
-
 def test_gini_concentration_known_values(spark):
     from ningaloo_turtle_etl_spark.operators.scale import gini_concentration
 
@@ -217,26 +189,6 @@ def test_gini_concentration_known_values(spark):
     )
     r = gini_concentration(w, "src", weight_col="wgt").collect()[0]
     assert r["gini"] == 0.25 and r["total_rows"] == 4 and r["n_keys"] == 2
-
-
-def test_audience_overlap_pairs(spark):
-    from ningaloo_turtle_etl_spark.operators.relational import (
-        audience_overlap,
-    )
-
-    rows = (
-        [("A", u) for u in (1, 2, 3)]
-        + [("B", u) for u in (2, 3, 4)]
-        + [("C", 9), ("C", 9)]  # duplicate membership rows collapse
-    )
-    df = spark.createDataFrame(rows, "seg string, uid long")
-    out = audience_overlap(df, "seg", "uid").collect()
-    # zero-overlap pairs (A,C), (B,C) drop out of the inner tally
-    assert len(out) == 1
-    r = out[0]
-    assert (r["segment_a"], r["segment_b"]) == ("A", "B")
-    assert r["n_a"] == 3 and r["n_b"] == 3 and r["n_both"] == 2
-    assert r["jaccard"] == 0.5 and r["overlap_coef"] == round(2 / 3, 6)
 
 
 def test_contrastive_negatives_deterministic(spark):
@@ -265,57 +217,6 @@ def test_contrastive_negatives_deterministic(spark):
     )
     expect = [int(c) for _, c in keyed[:2]]
     assert [n for _, n in sorted(per[0])] == expect
-
-
-def test_pairwise_battles_and_bradley_terry(spark):
-    from ningaloo_turtle_etl_spark.operators.preference import (
-        bradley_terry_ratings,
-        pairwise_battles,
-    )
-
-    rows = [
-        # ctx 1: a=5, b=3 -> a beats b ; ctx 2: tie -> nothing
-        (1, "a", 5), (1, "b", 3),
-        (2, "a", 4), (2, "b", 4),
-        (3, "b", 2), (3, "c", 1),
-    ]
-    df = spark.createDataFrame(rows, "ctx long, item string, s long")
-    battles = {
-        (r["winner"], r["loser"]): (r["winner_score"], r["loser_score"])
-        for r in pairwise_battles(df, "ctx", "item", "s").collect()
-    }
-    assert battles == {("a", "b"): (5, 3), ("b", "c"): (2, 1)}
-
-    # Unbalanced-schedule correction: x and y are both 1-1, but x split
-    # with the STRONG item while y split with the WEAK one -> BT must
-    # rank x above y (raw win rate cannot separate them).
-    games = (
-        [("s", "w")] * 4          # s crushes w
-        + [("s", "x"), ("x", "s")]  # x splits with strong
-        + [("y", "w"), ("w", "y")]  # y splits with weak
-    )
-    bdf = spark.createDataFrame(games, "winner string, loser string")
-    out = {r["item"]: r for r in bradley_terry_ratings(bdf).collect()}
-    assert out["s"]["wins"] == 5 and out["s"]["losses"] == 1
-    assert out["x"]["wins"] == 1 and out["x"]["comparisons"] == 2
-    ratings = [out[i]["rating"] for i in ("s", "x", "y", "w")]
-    assert abs(sum(r["rating"] for r in out.values()) - 1.0) < 1e-5
-    assert ratings == sorted(ratings, reverse=True)  # s > x > y > w
-    assert out["s"]["rank"] == 1 and out["w"]["rank"] == 4
-    assert out["x"]["rating"] > out["y"]["rating"]  # the BT correction
-    # a never-winner rates exactly 0 at the MM fixed point
-    shutout = spark.createDataFrame(
-        [("a", "z"), ("b", "z"), ("a", "b"), ("b", "a")],
-        "winner string, loser string",
-    )
-    zout = {r["item"]: r for r in bradley_terry_ratings(shutout).collect()}
-    assert zout["z"]["rating"] == 0.0 and zout["z"]["rank"] == 3
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        bradley_terry_ratings(bdf, iterations=0)
-    with _pt.raises(ValueError):
-        bradley_terry_ratings(bdf, max_items=2)
 
 
 def test_class_diversity_profile_hand_cases(spark):

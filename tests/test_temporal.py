@@ -203,69 +203,6 @@ def test_range_join_survives_inverted_interval(spark):
     assert [r["tag"] for r in rows] == ["good"]
 
 
-def test_funnel_steps_requires_strict_order(spark):
-    from datetime import datetime
-
-    from ningaloo_turtle_etl_spark.operators.temporal import funnel_steps
-
-    def t(h):
-        return datetime(2024, 1, 1, h)
-
-    rows = [
-        # u1 completes in order
-        (1, t(1), "view"), (1, t(2), "click"), (1, t(3), "purchase"),
-        # u2 clicks BEFORE viewing — click must not count
-        (2, t(2), "click"), (2, t(3), "view"),
-        # u3 views then clicks twice, never purchases
-        (3, t(1), "view"), (3, t(2), "click"), (3, t(4), "click"),
-        # u4 purchase before click: view->click ok, purchase mistimed
-        (4, t(1), "view"), (4, t(3), "click"), (4, t(2), "purchase"),
-        # u5 only purchases
-        (5, t(1), "purchase"),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    got = {
-        r["step"]: (r["users_reached"], r["conversion_rate"])
-        for r in funnel_steps(df, ["view", "click", "purchase"]).collect()
-    }
-    assert got == {
-        "view": (4, 1.0),
-        "click": (3, 0.75),      # u1, u3, and u4 (its view precedes its click)
-        "purchase": (1, 0.25),   # u1 only (u4's purchase predates its click)
-    }
-
-
-def test_cohort_retention_weekly_matrix(spark):
-    from datetime import datetime
-
-    from ningaloo_turtle_etl_spark.operators.temporal import cohort_retention
-
-    rows = [
-        # cohort A: first events Mon 2024-01-01 week
-        (1, datetime(2024, 1, 2, 10)), (2, datetime(2024, 1, 3, 9)),
-        # u1 returns in week+1 and week+3; u2 never returns
-        (1, datetime(2024, 1, 9, 8)), (1, datetime(2024, 1, 24, 8)),
-        # cohort B: first event the following week, returns week+1
-        (3, datetime(2024, 1, 10, 7)), (3, datetime(2024, 1, 16, 7)),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp").withColumn(
-        "event_type", F.lit("x")
-    )
-    got = {
-        (str(r["cohort_week"]), r["week_offset"]): (
-            r["n_active"], r["cohort_size"], r["retention_rate"],
-        )
-        for r in cohort_retention(df).collect()
-    }
-    assert got == {
-        ("2024-01-01", 0): (2, 2, 1.0),
-        ("2024-01-01", 1): (1, 2, 0.5),
-        ("2024-01-01", 3): (1, 2, 0.5),
-        ("2024-01-08", 0): (1, 1, 1.0),
-        ("2024-01-08", 1): (1, 1, 1.0),
-    }
-
-
 def test_last_touch_attribution_tolerance_and_direction(spark):
     """Purchase credits the latest preceding touch; a touch outside the
     lookback leaves the purchase unattributed; later touches never get
@@ -424,278 +361,6 @@ def test_frequent_sequences_trigram_tally(spark):
     assert tally[("a", "b", "c")] == 3
     assert tally[("b", "c", "a")] == 1 and tally[("c", "a", "b")] == 1
     assert out[0]["n_occurrences"] == 3  # ranked first
-
-
-def test_markov_removal_attribution_hand_case(spark):
-    """Every conversion path goes through 'a' -> removing 'a' kills all
-    conversion (effect 1); 'b' appears only on dropped paths (effect 0,
-    no share); last-touch would have credited only the final channel."""
-    import datetime as dt
-
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        markov_removal_attribution,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-
-    def ev(u, ch, minute):
-        nonlocal eid
-        eid += 1
-        return (u, ch, t0 + dt.timedelta(minutes=minute), eid)
-
-    # converters: a -> c -> purchase (x3)
-    for u in (1, 2, 3):
-        rows += [ev(u, "a", 1), ev(u, "c", 2), ev(u, "purchase", 3)]
-    # non-converter: b -> b (dropped path)
-    rows += [ev(9, "b", 1), ev(9, "b", 2)]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_type string, ts timestamp, event_id long"
-    )
-    out = {
-        r["channel"]: r
-        for r in markov_removal_attribution(
-            df, "user_id", "event_type", "ts", "event_id", "purchase",
-            rounds=8,
-        ).collect()
-    }
-    assert set(out) == {"a", "b", "c"}
-    assert out["a"]["removal_effect"] == 1.0
-    assert out["c"]["removal_effect"] == 1.0  # also on every conv path
-    assert out["b"]["removal_effect"] == 0.0
-    assert out["b"]["attribution_share"] == 0.0
-    assert out["a"]["attribution_share"] == out["c"]["attribution_share"] == 0.5
-    assert out["a"]["n_touches"] == 3 and out["b"]["n_touches"] == 2
-    # a converting user with NO touches contributes START->CONV: base
-    # conversion survives removals that would otherwise zero it
-    rows2 = rows + [ev(10, "purchase", 1)]
-    df2 = spark.createDataFrame(
-        rows2, "user_id long, event_type string, ts timestamp, event_id long"
-    )
-    out2 = {
-        r["channel"]: r
-        for r in markov_removal_attribution(
-            df2, "user_id", "event_type", "ts", "event_id", "purchase",
-            rounds=8,
-        ).collect()
-    }
-    assert 0 < out2["a"]["removal_effect"] < 1.0
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        markov_removal_attribution(
-            df, "user_id", "event_type", "ts", "event_id", "purchase",
-            rounds=0,
-        )
-
-
-def test_markov_removal_attribution_persists_touches_once(spark):
-    """The two bounded collects (transition grid + touch counts) share
-    ONE materialization of the touches lineage: the operator persists it
-    exactly once and releases it before returning, so the events table
-    is scanned once, not twice."""
-    import datetime as dt
-
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        markov_removal_attribution,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, "a", t0, 1),
-        (1, "purchase", t0 + dt.timedelta(minutes=1), 2),
-        (2, "b", t0, 3),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_type string, ts timestamp, event_id long"
-    )
-    # patch the CONCRETE class (pyspark.sql.classic defines its own
-    # persist/unpersist; the abstract base's methods never run)
-    cls = type(df)
-    calls = {"persist": 0, "unpersist": 0}
-    orig_p, orig_u = cls.persist, cls.unpersist
-
-    def spy_persist(self, *a, **k):
-        calls["persist"] += 1
-        return orig_p(self, *a, **k)
-
-    def spy_unpersist(self, *a, **k):
-        calls["unpersist"] += 1
-        return orig_u(self, *a, **k)
-
-    cls.persist, cls.unpersist = spy_persist, spy_unpersist
-    try:
-        out = markov_removal_attribution(
-            df, "user_id", "event_type", "ts", "event_id", "purchase",
-            rounds=4,
-        ).collect()
-    finally:
-        cls.persist, cls.unpersist = orig_p, orig_u
-    assert {r["channel"] for r in out} == {"a", "b"}
-    assert calls["persist"] == 1
-    assert calls["unpersist"] == 1
-
-
-def test_position_attribution_hand_journeys(spark):
-    """One-touch journey takes 1.0; two-touch 0.5/0.5; four-touch
-    0.4/0.1/0.1/0.4; non-converters and post-conversion touches are
-    excluded."""
-    import datetime as dt
-
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        position_attribution,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows, eid = [], 0
-
-    def ev(u, ch, minute):
-        nonlocal eid
-        eid += 1
-        return (u, ch, t0 + dt.timedelta(minutes=minute), eid)
-
-    rows += [ev(1, "a", 1), ev(1, "purchase", 2)]
-    rows += [ev(2, "a", 1), ev(2, "b", 2), ev(2, "purchase", 3)]
-    rows += [ev(3, "a", 1), ev(3, "b", 2), ev(3, "b", 3), ev(3, "c", 4),
-             ev(3, "purchase", 5), ev(3, "a", 6)]  # post-conv 'a' ignored
-    rows += [ev(9, "c", 1), ev(9, "c", 2)]  # non-converter
-    df = spark.createDataFrame(
-        rows, "user_id long, event_type string, ts timestamp, event_id long"
-    )
-    out = {
-        r["channel"]: r
-        for r in position_attribution(
-            df, "user_id", "event_type", "ts", "event_id", "purchase"
-        ).collect()
-    }
-    assert set(out) == {"a", "b", "c"}
-    # a: 1.0 (solo) + 0.5 (first of two) + 0.4 (first of four) = 1.9
-    assert out["a"]["credit"] == 1.9
-    # b: 0.5 (last of two) + 0.1 + 0.1 (middles of four) = 0.7
-    assert out["b"]["credit"] == 0.7
-    # c: 0.4 (last of four); the non-converter contributes nothing
-    assert out["c"]["credit"] == 0.4
-    assert out["a"]["n_first"] == 3 and out["c"]["n_last"] == 1
-    total = sum(r["credit"] for r in out.values())
-    assert abs(total - 3.0) < 1e-6  # one unit of credit per conversion
-    share_sum = sum(r["credit_share"] for r in out.values())
-    assert abs(share_sum - 1.0) < 1e-5
-
-
-def test_shapley_attribution_matches_permutation_bruteforce(spark):
-    """Shapley credits vs the textbook permutation-average reference
-    (independent of the coalition-sum form the operator uses), plus the
-    efficiency axiom: credits sum to v(all channels) − v(∅) — converting
-    users with no channel touches contribute only to the constant and
-    cancel out of every credit."""
-    import itertools
-
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        shapley_attribution,
-    )
-
-    channels = ["a", "b", "c"]
-    # journeys: (user, touched channels, converted?)
-    journeys = [
-        (1, ["a"], True),
-        (2, ["a"], True),
-        (3, ["b"], True),
-        (4, ["a", "b"], True),
-        (5, ["b", "c"], False),
-        (6, ["c"], True),
-        (7, [], True),          # direct conversion, no touches
-        (8, ["a", "c"], False),
-    ]
-    rows = []
-    for u, chs, conv in journeys:
-        rows += [(u, ch) for ch in chs]
-        if conv:
-            rows.append((u, "buy"))
-    ev = spark.createDataFrame(rows, "user_id long, event_type string")
-    got = {
-        r["channel"]: r["shapley"]
-        for r in shapley_attribution(
-            ev, channels=channels, conversion="buy"
-        ).collect()
-    }
-
-    def v(coalition):
-        s = set(coalition)
-        return sum(
-            1 for _, chs, conv in journeys if conv and set(chs) <= s
-        )
-
-    ref = {c: 0.0 for c in channels}
-    perms = list(itertools.permutations(channels))
-    for perm in perms:
-        seen = []
-        for c in perm:
-            ref[c] += v(seen + [c]) - v(seen)
-            seen.append(c)
-    ref = {c: round(x / len(perms), 6) for c, x in ref.items()}
-    assert got == ref, (got, ref)
-    # efficiency: credits sum to v(full) - v(empty)
-    assert abs(sum(got.values()) - (v(channels) - v([]))) < 1e-6
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        shapley_attribution(ev, channels=["a", "a"], conversion="buy")
-    with _pt.raises(ValueError):
-        shapley_attribution(ev, channels=[], conversion="buy")
-
-
-def test_sequential_pattern_support_semantics(spark):
-    """Subsequence-containment pins: order matters (a->b present, b->a
-    absent), gaps allowed, greedy earliest occurrence is not fooled by
-    an early b BEFORE the first a, strict-inequality ties, and the
-    support denominator is ALL users."""
-    from ningaloo_turtle_etl_spark.operators.temporal import (
-        sequential_pattern_support,
-    )
-
-    rows = [
-        # u1: a@1 b@2 c@3  -> contains every increasing pattern
-        (1, "a", 1), (1, "b", 2), (1, "c", 3),
-        # u2: b@1 a@2 c@9  -> contains a->c, b->a->c, NOT a->b->c
-        (2, "b", 1), (2, "a", 2), (2, "c", 9),
-        # u3: a@5 only     -> nothing longer than (a,?,?) with repeats
-        (3, "a", 5),
-        # u4: a@1 a@1 b@1  -> simultaneous: strict > means NO a->b
-        (4, "a", 1), (4, "a", 1), (4, "b", 1),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, event_type string, ts_epoch long")
-    got = {
-        (r["t1"], r["t2"], r["t3"]): (r["n_users"], r["support"])
-        for r in sequential_pattern_support(
-            df, min_support=0.0, top_n=1000
-        ).collect()
-    }
-    # a->b->c only in u1
-    assert got[("a", "b", "c")] == (1, 0.25)
-    # b->a->c only in u2 (u1 has no b before a)
-    assert got[("b", "a", "c")] == (1, 0.25)
-    # c->b->a nowhere
-    assert ("c", "b", "a") not in got or got[("c", "b", "a")][0] == 0
-    # u4 simultaneity: a->a->b requires strictly increasing times
-    assert ("a", "a", "b") not in got or got[("a", "a", "b")][0] == 0
-
-    # greedy earliest-occurrence correctness: an a BEFORE the only b
-    # must not consume the b-slot — u5: b@1 a@2 b@3 c@4 contains a->b->c
-    df2 = spark.createDataFrame(
-        rows + [(5, "b", 1), (5, "a", 2), (5, "b", 3), (5, "c", 4)],
-        "user_id long, event_type string, ts_epoch long",
-    )
-    got2 = {
-        (r["t1"], r["t2"], r["t3"]): r["n_users"]
-        for r in sequential_pattern_support(
-            df2, min_support=0.0, top_n=1000
-        ).collect()
-    }
-    assert got2[("a", "b", "c")] == 2  # u1 and u5
 
 
 def test_hmm_forward_loglik_reference(spark):
