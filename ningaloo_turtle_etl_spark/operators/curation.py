@@ -20,6 +20,7 @@ from collections.abc import Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.window import Window
 
 from ningaloo_turtle_etl_spark.operators.text import tokens
 
@@ -456,8 +457,6 @@ def budget_select(
     jobs read it (totals, then the filter) — without pinning, the second job
     could re-sample different range boundaries and the offsets would lie.
     """
-    from pyspark.sql.window import Window
-
     spark = df.sparkSession
     n_part = num_partitions or spark.sparkContext.defaultParallelism
     order = [
@@ -556,8 +555,6 @@ def pack_chunks(
     an item that straddles a boundary overflows its bin rather than
     splitting — bins can exceed capacity by at most one item's weight.
     Output adds ``bucket``, ``bin_id``, ``bin_pos``."""
-    from pyspark.sql.window import Window
-
     bucket = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10).cast(
         "int"
     ) % num_buckets
@@ -610,8 +607,6 @@ def assign_training_shards(
     accordingly). A writer that doesn't need explicit positions should
     instead ``repartition(n_shards, shard_id).sortWithinPartitions(hash)``
     — same layout, no rank materialized, window-free."""
-    from pyspark.sql.window import Window
-
     h = _shard_hash60(id_col)
     with_shard = df.withColumns(
         {"_shard_h": h, "shard_id": (h % F.lit(int(n_shards))).cast("int")}
@@ -745,8 +740,6 @@ def length_bucket_batches(
     identical output to the unsalted form."""
     if salt < 1:
         raise ValueError("salt must be >= 1")
-    from pyspark.sql.window import Window
-
     from ningaloo_turtle_etl_spark.operators.text import tokens
 
     n_tok = F.greatest(F.size(tokens(text_col)), F.lit(0))
@@ -818,8 +811,6 @@ def curriculum_order(
     approx_percentile on the score (one map-side-combined agg, broadcast
     of n_stages-1 thresholds, map-only binning -- no global sort), trading
     exact equal counts for approximately-equal stage sizes."""
-    from pyspark.sql.window import Window
-
     shuffle_key = F.substring(
         F.md5(F.concat_ws(" ", F.lit("curriculum"), F.col(id_col).cast("string"))),
         1,
@@ -970,8 +961,6 @@ def domain_reweight(
     Scale shape: one aggregate to the domains grid; the baseline is a
     1-row broadcast; normalization is a whole-grid window over ~tens of
     rows. The corpus is touched once."""
-    from pyspark.sql.window import Window
-
     g = df.groupBy(F.col(group_col).alias("grp")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg(loss_col), 6).alias("mean_loss"),
@@ -1046,3 +1035,116 @@ def class_diversity_profile(
         F.round(F.lit(1.0) - hhi, 6).alias("simpson"),
         F.round(hhi, 6).alias("hhi"),
     )
+
+
+def gini_concentration(
+    df: DataFrame, key_col: str, weight_col: str | None = None
+) -> DataFrame:
+    """Gini coefficient of mass across ``key_col`` values — the
+    corpus-concentration gauge (0 = every source contributes equally,
+    -> 1 = one source dominates): a whole-distribution number rather
+    than a max-based skew factor. Mass is the
+    row count, or the integer sum of ``weight_col`` (e.g. characters or
+    tokens) when given — token mass is where concentration actually
+    bites a training mix.
+
+    G = 2 * sum(i * x_i) / (n * sum(x)) - (n + 1) / n over masses x_i
+    sorted ascending (rank ties broken by key — total order). All moments
+    are exact integer sums; the only float is the final division.
+
+    Output: one row — (n_keys, total_rows, gini).
+
+    Scale shape: one agg per key (map-side combined); the rank window and
+    moments run on the key-cardinality table, never the fact."""
+    mass = (
+        F.count(F.lit(1)).alias("x")
+        if weight_col is None
+        else F.sum(F.col(weight_col).cast("long")).alias("x")
+    )
+    counts = df.groupBy(F.col(key_col).alias("k")).agg(mass)
+    w = Window.orderBy(F.col("x"), F.col("k"))
+    ranked = counts.withColumn("i", F.row_number().over(w))
+    return ranked.agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.sum("x").cast("long").alias("total_rows"),
+        F.round(
+            F.lit(2.0) * F.sum(F.col("i") * F.col("x"))
+            / (F.count(F.lit(1)) * F.sum("x")).cast("double")
+            - (F.count(F.lit(1)) + F.lit(1))
+            / F.count(F.lit(1)).cast("double"),
+            6,
+        ).alias("gini"),
+    )
+
+
+def inequality_profile(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+) -> DataFrame:
+    """Within-group inequality profile of a non-negative size measure —
+    the three standard indices a mixing pipeline reads TOGETHER because
+    they weight the distribution differently (gini_concentration covers
+    the across-group view):
+
+        CV      = σ/μ                      (top-sensitive, 2nd moment)
+        Theil T = (1/n) Σ (x/μ)·ln(x/μ)    (decomposable entropy index)
+        Atkinson(ε=½) = 1 − ((1/n) Σ √x)² / μ   (bottom-sensitive)
+
+    Zero values contribute 0 to the Theil sum (x·ln x → 0 limit) and 0
+    to Σ√x — the standard conventions, applied identically in the
+    oracle. Determinism: Σx and Σx² are exact integer sums (the measure
+    is integral); the per-row Theil terms quantize to integer NANOS and
+    the √x terms to integer MICROS before summation, so both
+    cross-engine sums are order-independent and the 1-ulp ln()/sqrt()
+    caveat is absorbed by the rounding (repo convention).
+
+    Returns (group, n, mean, cv, theil_t, atkinson_05), 6dp; singleton
+    and all-equal groups report 0 for all three indices.
+
+    Scale shape: one map-side-combined aggregate to the group grain for
+    (Σx, n), a broadcast join back (group dim is small by construction),
+    one second map-combined aggregate. Two passes over the measure — the
+    Theil term needs μ — and nothing else."""
+    base = df.select(
+        F.col(group_col).alias("g"),
+        F.col(value_col).cast("long").alias("x"),
+    ).where(F.col("x").isNotNull() & (F.col("x") >= 0))
+    totals = base.groupBy("g").agg(
+        F.sum("x").alias("sx"), F.count(F.lit(1)).cast("long").alias("n")
+    )
+    j = base.join(F.broadcast(totals), on="g")
+    ratio = F.col("x") * F.col("n") / F.col("sx").cast("double")
+    t_theil = F.when(
+        (F.col("x") > 0) & (F.col("sx") > 0),
+        F.round(ratio * F.log(ratio) * F.lit(1e9), 0).cast("long"),
+    ).otherwise(F.lit(0).cast("long"))
+    t_sqrt = F.round(
+        F.sqrt(F.col("x").cast("double")) * F.lit(1e6), 0
+    ).cast("long")
+    agg = j.groupBy("g").agg(
+        F.max("n").alias("n"),
+        F.max("sx").alias("sx"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum(t_theil).alias("s_theil"),
+        F.sum(t_sqrt).alias("s_sqrt"),
+    )
+    mu = F.col("sx") / F.col("n").cast("double")
+    var = F.col("sxx") / F.col("n") - mu * mu
+    cv = F.when(
+        (F.col("sx") > 0) & (var > 0), F.sqrt(var) / mu
+    ).otherwise(F.lit(0.0))
+    theil = F.col("s_theil") / F.lit(1e9) / F.col("n")
+    atk = F.when(
+        F.col("sx") > 0,
+        F.lit(1.0)
+        - F.pow(F.col("s_sqrt") / F.lit(1e6) / F.col("n"), 2) / mu,
+    ).otherwise(F.lit(0.0))
+    return agg.select(
+        F.col("g").alias(group_col),
+        F.col("n").alias("n"),
+        F.round(mu, 6).alias("mean"),
+        F.round(cv, 6).alias("cv"),
+        F.round(theil, 6).alias("theil_t"),
+        F.round(atk, 6).alias("atkinson_05"),
+    ).orderBy(group_col)

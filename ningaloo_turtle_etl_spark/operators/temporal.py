@@ -561,6 +561,28 @@ def hmm_forward_loglik(
     ).orderBy("first_type")
 
 
+def barrier_col(df: DataFrame, name: str, expr) -> DataFrame:
+    """Materialize a non-cheap expression as a REAL column behind a
+    one-element ``explode(array(expr))`` Generate node.
+
+    Why this exists: CollapseProject merges adjacent projections and
+    inlines the producing expression into every reference — including
+    references inside higher-order-function lambdas, where the inlined
+    expression then re-evaluates PER ARRAY ELEMENT. A window-min pass
+    that slices a computed hash array recomputed the entire md5 gram
+    array once per window position (measured 64× on winnowing at 100k
+    docs: 557 s → 8.7 s); bigram pair extraction over a computed token
+    array paid 3.4× the same way. Generators are collapse-proof, and a
+    single-element explode emits exactly one row per input row (an
+    expression evaluating to NULL becomes [NULL] → one row), so the
+    stage stays map-only with no semantics change.
+
+    Use it whenever a computed array/struct column is consumed by
+    per-element lambdas downstream; plain single-use references don't
+    need it."""
+    return df.select("*", F.explode(F.array(expr)).alias(name))
+
+
 def hmm_viterbi_paths(
     df: DataFrame,
     user_col: str,
@@ -630,9 +652,9 @@ def hmm_viterbi_paths(
 
     probs = [path_prob(p) for p in paths]
     # r14 (guide §1.2): materialize the 2^steps path products ONCE as a
-    # real array column behind a Generate barrier (operators/scale.py
-    # barrier_col), and the argmax value once more on top. Inlined, each
-    # deep product expression was duplicated into greatest() AND every
+    # real array column behind a Generate barrier (barrier_col), and the
+    # argmax value once more on top. Inlined, each deep product
+    # expression was duplicated into greatest() AND every
     # argmax comparison (~2^steps·(2^steps+1) copies at steps=4): the
     # physical plan was 278 KB of expression text costing ~3.5 s of
     # DRIVER planning plus interpreted-size codegen per row; the
@@ -641,8 +663,6 @@ def hmm_viterbi_paths(
     # the first-match CASE compare the same doubles — and the DuckDB
     # oracle already names the products once in its `probs` CTE, so this
     # mirrors the oracle's structure rather than changing it.
-    from ningaloo_turtle_etl_spark.operators.scale import barrier_col
-
     staged = barrier_col(firsts, "_pv", F.array(*probs))
     pcols = [F.col("_pv").getItem(i) for i in range(len(paths))]
     staged = barrier_col(staged, "_best", F.greatest(*pcols))

@@ -252,7 +252,7 @@ def bigram_lm_scores(
     barrier_col Generate here was A/B'd and REVERTED: for parquet-backed
     text the per-element tokenizer re-evaluation is cheap and the extra
     Generate cost slightly more than it saved — see
-    operators/scale.py barrier_col for when the cliff is real.)"""
+    operators/temporal.py barrier_col for when the cliff is real.)"""
     toks = df.select(F.col(id_col), tokens(text_col).alias("toks"))
     idx = F.when(
         F.size("toks") >= 2, F.sequence(F.lit(0), F.size("toks") - 2)

@@ -1,5 +1,4 @@
-"""Aggregation queries — SURVEY.md §2.4 (A1-A9) plus the TPC-H-shaped pricing
-summary used as a bench headline.
+"""Aggregation queries — SURVEY.md §2.4 (A1-A9).
 
 All of these run as partial (map-side) + final hash aggregations; double-typed
 aggregates are rounded identically on both engines to absorb summation-order
@@ -117,55 +116,6 @@ def histogram_values(spark, sf_dir):
     as a single hash aggregation over floor buckets."""
     ev = load_table(spark, "events", sf_dir)
     return histogram(ev, "value", 25.0)
-
-
-@register(
-    "pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           ROUND(SUM(l_quantity), 2) AS sum_qty,
-           ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           ROUND(AVG(l_quantity), 4) AS avg_qty,
-           ROUND(AVG(l_extendedprice), 4) AS avg_price,
-           ROUND(AVG(l_discount), 4) AS avg_disc,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
-)
-def pricing_summary(spark, sf_dir):
-    """Bench headline: the TPC-H Q1 shape — wide multi-aggregate scan. The
-    reference's analog is the tally family (A1) at its widest. One scan, one
-    shuffle, everything codegen'd."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "sum_disc_price"
-            ),
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ),
-                2,
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
 
 
 @register(

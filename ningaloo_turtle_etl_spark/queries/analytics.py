@@ -1,7 +1,6 @@
-"""Deeper analytic queries — multi-join + aggregate + top-k plan shapes
-(TPC-H Q3/Q5/Q10 silhouettes). These exercise Catalyst's join ordering,
-broadcast selection, and partial aggregation on the star schema the same way
-the reference's widest products exercise its hand-ordered pipelines."""
+"""Profiling analytics over the events table — a per-column data-quality
+profile, Benford first-digit conformance, inter-arrival statistics and a
+rolling weekly-active-user HLL estimate."""
 
 from __future__ import annotations
 
@@ -9,131 +8,6 @@ import pyspark.sql.functions as F
 
 from ningaloo_turtle_etl_spark.registry import register
 from ningaloo_turtle_etl_spark.sources.tables import load_table
-
-
-@register(
-    "shipping_priority",
-    """
-    SELECT l.l_orderkey,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           CAST(o.o_orderdate AS TIMESTAMP) AS o_orderdate, o.o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1995-03-15'
-      AND l.l_shipdate > TIMESTAMP '1995-03-15'
-    GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """,
-)
-def shipping_priority(spark, sf_dir):
-    """Q3 shape: selective filters on three tables → join → agg → top-k.
-    Catalyst pushes each filter below its join and takes the top-k without a
-    global sort."""
-    c = load_table(spark, "customer", sf_dir).filter(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, "orders", sf_dir).filter(
-        F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp")
-    )
-    li = load_table(spark, "lineitem", sf_dir).filter(
-        F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-@register(
-    "local_supplier_volume",
-    """
-    SELECT n.n_name AS nation_name,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA' AND c.c_nationkey = s.s_nationkey
-    GROUP BY 1
-    ORDER BY revenue DESC
-    """,
-)
-def local_supplier_volume(spark, sf_dir):
-    """Q5 shape: six-table join with a cross-table correlation predicate
-    (customer and supplier in the same nation). Dims broadcast; only the
-    orders↔lineitem join shuffles."""
-    c = load_table(spark, "customer", sf_dir)
-    o = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir)
-    s = load_table(spark, "supplier", sf_dir)
-    n = load_table(spark, "nation", sf_dir)
-    r = load_table(spark, "region", sf_dir).filter(F.col("r_name") == "ASIA")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("n_name").alias("nation_name"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"))
-    )
-
-
-@register(
-    "returned_item_customers",
-    """
-    SELECT c.c_custkey, c.c_name, n.n_name AS nation_name,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           COUNT(*) AS n_items
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE l.l_returnflag = 'R'
-    GROUP BY 1, 2, 3
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def returned_item_customers(spark, sf_dir):
-    """Q10 shape: who returned the most value — join, filtered agg, top-k.
-    The returnflag filter prunes at the lineitem scan."""
-    c = load_table(spark, "customer", sf_dir)
-    o = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir).filter(F.col("l_returnflag") == "R")
-    n = load_table(spark, "nation", sf_dir)
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", F.col("n_name").alias("nation_name"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
 
 
 @register(
@@ -283,66 +157,6 @@ def interarrival_stats(spark, sf_dir):
         F.sum(F.when(F.col("gap_s") > 1800, 1).otherwise(0)).alias(
             "n_session_breaks"
         ),
-    )
-
-
-@register(
-    "join_size_forecast",
-    """
-    WITH a AS (
-      SELECT o_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS n
-      FROM orders GROUP BY 1
-    ),
-    b AS (
-      SELECT l_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS n
-      FROM lineitem GROUP BY 1
-    ),
-    f AS (
-      SELECT CAST(SUM(a.n * b.n) AS BIGINT) AS forecast_rows,
-             CAST(COUNT(*) AS BIGINT) AS n_matching_keys,
-             CAST(MAX(a.n * b.n) AS BIGINT) AS max_key_contribution
-      FROM a JOIN b USING (k)
-    ),
-    act AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS actual_rows
-      FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    )
-    SELECT forecast_rows, n_matching_keys, max_key_contribution, actual_rows,
-           CAST(forecast_rows - actual_rows AS BIGINT) AS forecast_error
-    FROM f, act
-    """,
-)
-def join_size_forecast(spark, sf_dir):
-    """Exact join-cardinality forecast from per-key count tables:
-    |A ⋈ B| = Σ_k cntA(k)·cntB(k), plus the hottest key's contribution —
-    the pre-flight estimate that predicts a blow-up join BEFORE shuffling
-    the payloads (count tables are key-cardinality-sized; the forecast
-    join carries two longs per key). The actual join runs alongside as
-    calibration — which is the point of the query at test scale; at 100 TB
-    you run only the forecast."""
-    od = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir)
-    a = od.groupBy(F.col("o_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).alias("na")
-    )
-    b = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).alias("nb")
-    )
-    f = a.join(b, on="k").agg(
-        F.sum(F.col("na") * F.col("nb")).alias("forecast_rows"),
-        F.count(F.lit(1)).alias("n_matching_keys"),
-        F.max(F.col("na") * F.col("nb")).alias("max_key_contribution"),
-    )
-    act = (
-        od.join(li, od.o_orderkey == li.l_orderkey)
-        .agg(F.count(F.lit(1)).alias("actual_rows"))
-    )
-    return f.crossJoin(act).select(
-        "forecast_rows",
-        "n_matching_keys",
-        "max_key_contribution",
-        "actual_rows",
-        (F.col("forecast_rows") - F.col("actual_rows")).alias("forecast_error"),
     )
 
 

@@ -3864,164 +3864,6 @@ def q_kneser_ney_lm_scores(spark, sf_dir):
 
 
 @register(
-    "zorder_layout_buckets",
-    """
-    WITH q AS (
-        SELECT l_orderkey, l_partkey, l_suppkey,
-               least(greatest(CAST(floor((l_partkey - 1.0) / 2000.0 * 256.0)
-                                   AS BIGINT), 0), 255) AS qp,
-               least(greatest(CAST(floor((l_suppkey - 1.0) / 100.0 * 256.0)
-                                   AS BIGINT), 0), 255) AS qs
-        FROM lineitem
-    ),
-    z AS (
-        SELECT l_partkey, l_suppkey,
-               (((qp >> 0) & 1) << 0) + (((qs >> 0) & 1) << 1)
-             + (((qp >> 1) & 1) << 2) + (((qs >> 1) & 1) << 3)
-             + (((qp >> 2) & 1) << 4) + (((qs >> 2) & 1) << 5)
-             + (((qp >> 3) & 1) << 6) + (((qs >> 3) & 1) << 7)
-             + (((qp >> 4) & 1) << 8) + (((qs >> 4) & 1) << 9)
-             + (((qp >> 5) & 1) << 10) + (((qs >> 5) & 1) << 11)
-             + (((qp >> 6) & 1) << 12) + (((qs >> 6) & 1) << 13)
-             + (((qp >> 7) & 1) << 14) + (((qs >> 7) & 1) << 15)
-               AS zkey
-        FROM q
-    )
-    SELECT zkey >> 10 AS zbucket,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(MIN(l_partkey) AS BIGINT) AS part_lo,
-           CAST(MAX(l_partkey) AS BIGINT) AS part_hi,
-           CAST(MIN(l_suppkey) AS BIGINT) AS supp_lo,
-           CAST(MAX(l_suppkey) AS BIGINT) AS supp_hi
-    FROM z GROUP BY 1 ORDER BY 1
-    """,
-)
-def zorder_layout_buckets(spark, sf_dir):
-    """Z-order (Morton) layout buckets over lineitem's (partkey, suppkey)
-    (`operators/scale.py quantize_minmax + zorder_key`, 8 bits/dim):
-    each zkey-range bucket — the unit a clustered write would put in one
-    file — carries BOTH dimensions' min/max spans, demonstrating the
-    locality that makes range predicates on EITHER key prune files
-    (test-pinned: per-bucket spans are a small fraction of the domain,
-    which no single-column sort gives the trailing key). Pure integer
-    bit arithmetic, replayed exactly in DuckDB."""
-    from ningaloo_turtle_etl_spark.operators.scale import (
-        quantize_minmax,
-        zorder_key,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    q = li.select(
-        "l_partkey",
-        "l_suppkey",
-        quantize_minmax("l_partkey", 1.0, 2001.0, bits=8).alias("qp"),
-        quantize_minmax("l_suppkey", 1.0, 101.0, bits=8).alias("qs"),
-    )
-    z = q.select(
-        "l_partkey",
-        "l_suppkey",
-        zorder_key([F.col("qp"), F.col("qs")], bits=8).alias("zkey"),
-    )
-    return (
-        z.groupBy(F.shiftright("zkey", 10).alias("zbucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("l_partkey").cast("long").alias("part_lo"),
-            F.max("l_partkey").cast("long").alias("part_hi"),
-            F.min("l_suppkey").cast("long").alias("supp_lo"),
-            F.max("l_suppkey").cast("long").alias("supp_hi"),
-        )
-        .orderBy("zbucket")
-    )
-
-
-def _hilbert_oracle_sql(bits: int = 6) -> str:
-    """Chained-CTE replay of the unrolled Hilbert xy2d state machine
-    (`operators/scale.py hilbert_key`): one CTE per level computing the
-    next (hx, hy, digit-accumulated hd) under fresh column names — no
-    lateral-alias ambiguity — from 6-bit quantized (l_partkey, l_suppkey)."""
-    ctes = [
-        """
-    q AS (
-        SELECT least(greatest(CAST(floor((l_partkey - 1.0) / 2000.0 * 64.0)
-                                   AS BIGINT), 0), 63) AS hx0,
-               least(greatest(CAST(floor((l_suppkey - 1.0) / 100.0 * 64.0)
-                                   AS BIGINT), 0), 63) AS hy0,
-               CAST(0 AS BIGINT) AS hd0,
-               l_partkey, l_suppkey
-        FROM lineitem
-    )"""
-    ]
-    prev = "q"
-    for idx, i in enumerate(range(bits - 1, -1, -1)):
-        s = 1 << i
-        a, b = idx, idx + 1
-        ctes.append(f"""
-    h{b} AS (
-        SELECT l_partkey, l_suppkey,
-               CASE WHEN hy{a} >= {s} THEN hx{a} & {s - 1}
-                    WHEN hx{a} >= {s} THEN {s - 1} - (hy{a} & {s - 1})
-                    ELSE hy{a} & {s - 1} END AS hx{b},
-               CASE WHEN hy{a} >= {s} THEN hy{a} & {s - 1}
-                    WHEN hx{a} >= {s} THEN {s - 1} - (hx{a} & {s - 1})
-                    ELSE hx{a} & {s - 1} END AS hy{b},
-               hd{a} + {s * s} * (CASE WHEN hx{a} >= {s} AND hy{a} >= {s} THEN 2
-                                       WHEN hx{a} >= {s} THEN 3
-                                       WHEN hy{a} >= {s} THEN 1
-                                       ELSE 0 END) AS hd{b}
-        FROM {prev})""")
-        prev = f"h{b}"
-    return f"""
-    WITH {','.join(ctes)}
-    SELECT hd{bits} >> 6 AS hbucket,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(MIN(l_partkey) AS BIGINT) AS part_lo,
-           CAST(MAX(l_partkey) AS BIGINT) AS part_hi,
-           CAST(MIN(l_suppkey) AS BIGINT) AS supp_lo,
-           CAST(MAX(l_suppkey) AS BIGINT) AS supp_hi
-    FROM {prev} GROUP BY 1 ORDER BY 1
-    """
-
-
-@register("hilbert_layout_buckets", _hilbert_oracle_sql(6))
-def hilbert_layout_buckets(spark, sf_dir):
-    """Hilbert-curve layout buckets over lineitem's (partkey, suppkey)
-    (`operators/scale.py quantize_minmax + hilbert_key`, 6 bits/dim) —
-    the locality-preserving twin of zorder_layout_buckets: consecutive
-    key values are always grid NEIGHBORS (pinned by the adjacency
-    property test), so each 64-key bucket is a connected curve segment
-    and its per-dimension min/max spans run tighter than Morton's
-    Z-jumps for the same bucket count — tighter spans = more files
-    pruned by a range predicate at 100 TB. Pure unrolled integer
-    Catalyst arithmetic, no UDF; the oracle replays the same six levels
-    as chained CTEs."""
-    from ningaloo_turtle_etl_spark.operators.scale import (
-        quantize_minmax,
-        with_hilbert_key,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    q = li.select(
-        "l_partkey",
-        "l_suppkey",
-        quantize_minmax("l_partkey", 1.0, 2001.0, bits=6).alias("qp"),
-        quantize_minmax("l_suppkey", 1.0, 101.0, bits=6).alias("qs"),
-    )
-    z = with_hilbert_key(q, "qp", "qs", bits=6, name="hkey")
-    return (
-        z.groupBy(F.shiftright("hkey", 6).alias("hbucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("l_partkey").cast("long").alias("part_lo"),
-            F.max("l_partkey").cast("long").alias("part_hi"),
-            F.min("l_suppkey").cast("long").alias("supp_lo"),
-            F.max("l_suppkey").cast("long").alias("supp_hi"),
-        )
-        .orderBy("hbucket")
-    )
-
-
-@register(
     "ppjoin_jaccard_pairs",
     rf"""
     WITH sets AS (
@@ -4162,57 +4004,6 @@ def source_lang_diversity(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     return class_diversity_profile(docs, "source", "lang").orderBy("source")
-
-
-@register(
-    "compaction_bin_plan",
-    """
-    WITH files AS (
-        SELECT l_returnflag AS rf,
-               CAST(floor(epoch(CAST(l_shipdate AS TIMESTAMP)) / 2592000)
-                    AS BIGINT) AS age_bucket,
-               CAST(COUNT(*) AS BIGINT) * 200 AS file_bytes
-        FROM lineitem GROUP BY 1, 2
-    ),
-    binned AS (
-        SELECT rf, age_bucket, file_bytes,
-               CAST(floor(COALESCE(SUM(file_bytes) OVER (
-                   ORDER BY rf, age_bucket
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   / 2000000.0) AS BIGINT) AS bin
-        FROM files
-    )
-    SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_files,
-           CAST(SUM(file_bytes) AS BIGINT) AS total_bytes,
-           ROUND(AVG(file_bytes), 2) AS avg_bytes,
-           MIN(rf) AS first_key, MAX(rf) AS last_key
-    FROM binned GROUP BY bin ORDER BY bin
-    """,
-)
-def compaction_bin_plan(spark, sf_dir):
-    """Small-file compaction plan over a synthetic file inventory derived
-    from lineitem's (returnflag, ship-month) cells (`operators/scale.py
-    compaction_bins`, ~2 MB target): the OPTIMIZE-style cumulative-size
-    split that rewrites a long tail of small files into near-target bins
-    while preserving the layout-key order (pairs with
-    zorder_layout_buckets)."""
-    from ningaloo_turtle_etl_spark.operators.scale import compaction_bins
-
-    li = load_table(spark, "lineitem", sf_dir)
-    files = li.select(
-        F.col("l_returnflag").alias("rf"),
-        F.floor(
-            F.unix_timestamp(F.col("l_shipdate").cast("timestamp"))
-            / F.lit(2592000)
-        )
-        .cast("long")
-        .alias("age_bucket"),
-    ).groupBy("rf", "age_bucket").agg(
-        (F.count(F.lit(1)) * 200).cast("long").alias("file_bytes")
-    )
-    return compaction_bins(
-        files, "file_bytes", ["rf", "age_bucket"], target_size=2_000_000
-    )
 
 
 def _rake_oracle_sql(top_n: int = 50, max_len: int = 4) -> str:

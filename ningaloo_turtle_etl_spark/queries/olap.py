@@ -1,12 +1,12 @@
-"""OLAP cube surface + time-series resampling + skew mechanics — the
-warehouse-analytics queries a user of the reference's summary products
-(mwi-summary tables, season tallies) reaches for next: subtotal hierarchies
-(ROLLUP), multi-grain reports in one pass (GROUPING SETS), regular-grid
-gap-filled series (resample + LOCF/linear fill), next-event transition
-matrices, and the salted-join skew mitigation measured end-to-end.
+"""Time-series resampling, running windows and concentration gauges — the
+analytics a user of the reference's summary products (mwi-summary tables,
+season tallies) reaches for next: regular-grid gap-filled series (resample
++ LOCF/linear fill), next-event transition matrices, rolling and
+share-of-total windows, and the across- and within-source inequality of
+corpus mass.
 
-All fully DuckDB-oracled: GROUPING()/ROLLUP/GROUPING SETS, generate_series
-grids, and IGNORE NULLS windows exist in both engines.
+All fully DuckDB-oracled: generate_series grids and IGNORE NULLS windows
+exist in both engines.
 """
 
 from __future__ import annotations
@@ -15,79 +15,6 @@ import pyspark.sql.functions as F
 
 from ningaloo_turtle_etl_spark.registry import register
 from ningaloo_turtle_etl_spark.sources.tables import load_table
-
-
-@register(
-    "rollup_pricing_totals",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(GROUPING(l_returnflag) AS INT) AS g_flag,
-           CAST(GROUPING(l_linestatus) AS INT) AS g_status,
-           ROUND(SUM(l_quantity), 2) AS sum_qty,
-           ROUND(SUM(l_extendedprice), 2) AS sum_price,
-           CAST(COUNT(*) AS BIGINT) AS n_rows
-    FROM lineitem
-    GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    ORDER BY g_flag, g_status, l_returnflag, l_linestatus
-    """,
-)
-def rollup_pricing_totals(spark, sf_dir):
-    """ROLLUP subtotal hierarchy over the pricing summary dimensions:
-    (flag, status) detail -> per-flag subtotal -> grand total in ONE
-    aggregation pass. Spark plans rollup as a single Expand + hash
-    aggregate — each input row fans into its grouping sets map-side, so the
-    shuffle carries (sets x groups) partial rows, never a second scan; the
-    100 TB shape is identical to the plain groupBy plus a small constant
-    factor. GROUPING() disambiguates a NULL dimension value from a subtotal
-    row (the classic cube-correctness trap)."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping("l_returnflag").cast("int").alias("g_flag"),
-            F.grouping("l_linestatus").cast("int").alias("g_status"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-@register(
-    "grouping_sets_tally",
-    """
-    SELECT event_type,
-           CAST(hour(ts) AS INT) AS hour_of_day,
-           CAST(GROUPING(event_type) AS INT) AS g_type,
-           CAST(GROUPING(CAST(hour(ts) AS INT)) AS INT) AS g_hour,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           ROUND(AVG(value), 6) AS avg_value
-    FROM events
-    GROUP BY GROUPING SETS ((event_type), (event_type, CAST(hour(ts) AS INT)), ())
-    ORDER BY g_type, g_hour, event_type, hour_of_day
-    """,
-)
-def grouping_sets_tally(spark, sf_dir):
-    """Three report grains in one pass via GROUPING SETS — per type, per
-    (type, hour-of-day), and the grand total — the multi-grain dashboard
-    query that would otherwise be three scans UNION ALLed. Same Expand
-    plan shape as rollup: one scan, one shuffle, map-side partials per
-    set."""
-    ev = load_table(spark, "events", sf_dir)
-    ev.createOrReplaceTempView("_gs_events")
-    return spark.sql(
-        """
-        SELECT event_type,
-               CAST(hour(ts) AS INT) AS hour_of_day,
-               CAST(grouping(event_type) AS INT) AS g_type,
-               CAST(grouping(CAST(hour(ts) AS INT)) AS INT) AS g_hour,
-               COUNT(*) AS n_events,
-               ROUND(AVG(value), 6) AS avg_value
-        FROM _gs_events
-        GROUP BY GROUPING SETS ((event_type),
-                                (event_type, CAST(hour(ts) AS INT)), ())
-        """
-    )
 
 
 @register(
@@ -189,135 +116,6 @@ def event_transition_probs(spark, sf_dir):
 
     ev = load_table(spark, "events", sf_dir)
     return markov_transitions(ev)
-
-
-@register(
-    "salted_join_tally",
-    """
-    SELECT s.s_nationkey,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    GROUP BY 1
-    ORDER BY s_nationkey
-    """,
-)
-def salted_join_tally(spark, sf_dir):
-    """The skew-mitigation join measured end-to-end: lineitem (the side
-    with hot supplier keys at scale) salted into 8 sub-keys per key,
-    supplier replicated 8x, joined on (key, salt) — identical results to
-    the plain join (this oracle), but a hot key's probe stream now lands on
-    8 reducers instead of 1 (`operators/scale.py salted_join`; distribution
-    pinned in tests/test_scale.py). Use when AQE skew-split can't help:
-    skewed AGGREGATION inputs or broadcast-ineligible dims."""
-    from ningaloo_turtle_etl_spark.operators.scale import salted_join
-
-    li = load_table(spark, "lineitem", sf_dir)
-    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
-    j = salted_join(
-        li.withColumnRenamed("l_suppkey", "s_suppkey"), s, on="s_suppkey",
-        salt_buckets=8,
-    )
-    return (
-        j.groupBy("s_nationkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-@register(
-    "key_skew_report",
-    """
-    WITH c1 AS (
-      SELECT user_id AS k, CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    s1 AS (
-      SELECT CAST(SUM(n) AS BIGINT) AS total_rows,
-             CAST(COUNT(*) AS BIGINT) AS n_keys,
-             CAST(MAX(n) AS BIGINT) AS max_key_rows,
-             SUM(n * ln(n)) AS snln
-      FROM c1
-    ),
-    t1 AS (
-      SELECT CAST(SUM(n) AS BIGINT) AS top10_rows
-      FROM (SELECT n FROM c1 ORDER BY n DESC, k ASC LIMIT 10)
-    ),
-    c2 AS (
-      SELECT event_type AS k, CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY 1
-    ),
-    s2 AS (
-      SELECT CAST(SUM(n) AS BIGINT) AS total_rows,
-             CAST(COUNT(*) AS BIGINT) AS n_keys,
-             CAST(MAX(n) AS BIGINT) AS max_key_rows,
-             SUM(n * ln(n)) AS snln
-      FROM c2
-    ),
-    t2 AS (
-      SELECT CAST(SUM(n) AS BIGINT) AS top10_rows
-      FROM (SELECT n FROM c2 ORDER BY n DESC, k ASC LIMIT 10)
-    )
-    SELECT 'user_id' AS key_col, total_rows, n_keys, max_key_rows,
-           ROUND(max_key_rows * 1.0 * n_keys / total_rows, 4) AS skew_factor,
-           ROUND(top10_rows * 1.0 / total_rows, 6) AS top10_share,
-           ROUND(ln(total_rows) - snln / total_rows, 6) AS entropy
-    FROM s1, t1
-    UNION ALL
-    SELECT 'event_type', total_rows, n_keys, max_key_rows,
-           ROUND(max_key_rows * 1.0 * n_keys / total_rows, 4),
-           ROUND(top10_rows * 1.0 / total_rows, 6),
-           ROUND(ln(total_rows) - snln / total_rows, 6)
-    FROM s2, t2
-    """,
-)
-def key_skew_report(spark, sf_dir):
-    """Skew profile of two candidate shuffle keys on the event fact
-    (`operators/scale.py key_skew_profile`): hottest-key factor,
-    top-10 mass, and key-distribution entropy — the pre-flight
-    measurement that decides between a plain shuffle, AQE skew
-    splitting, and salted_join. Count-per-key aggregates with map-side
-    combine; everything downstream runs on the key-cardinality-sized
-    count table."""
-    from ningaloo_turtle_etl_spark.operators.scale import key_skew_profile
-
-    ev = load_table(spark, "events", sf_dir)
-    return key_skew_profile(ev, "user_id").unionByName(
-        key_skew_profile(ev, "event_type")
-    )
-
-
-@register(
-    "cube_order_tally",
-    """
-    SELECT o_orderstatus, o_orderpriority,
-           CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
-           CAST(GROUPING(o_orderpriority) AS INT) AS g_prio,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           ROUND(SUM(o_totalprice), 2) AS sum_price
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority
-    """,
-)
-def cube_order_tally(spark, sf_dir):
-    """Full CUBE over (status, priority): all four grains — detail, each
-    one-dimension margin, grand total — in one Expand + aggregate pass
-    (completing the OLAP trio with rollup_pricing_totals and
-    grouping_sets_tally). GROUPING() flags distinguish margin rows from
-    genuine NULL dimension values; the shuffle carries 4x map-side
-    partials, never a second scan."""
-    od = load_table(spark, "orders", sf_dir)
-    return od.cube("o_orderstatus", "o_orderpriority").agg(
-        F.grouping("o_orderstatus").cast("int").alias("g_status"),
-        F.grouping("o_orderpriority").cast("int").alias("g_prio"),
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
-    )
 
 
 @register(
@@ -429,13 +227,12 @@ def value_share_of_total(spark, sf_dir):
 )
 def q_source_gini(spark, sf_dir):
     """Gini coefficient of CHARACTER mass across sources
-    (`operators/scale.py gini_concentration`): the whole-distribution
-    corpus-concentration gauge next to key_skew_report's max-based factor
-    — char/token mass is where concentration bites a training mix, and
-    unlike the by-construction-uniform doc counts it is non-trivially
-    distributed here. Exact integer moments over the key-cardinality
-    table."""
-    from ningaloo_turtle_etl_spark.operators.scale import gini_concentration
+    (`operators/curation.py gini_concentration`): the whole-distribution
+    corpus-concentration gauge — char/token mass is where concentration
+    bites a training mix, and unlike the by-construction-uniform doc
+    counts it is non-trivially distributed here. Exact integer moments
+    over the key-cardinality table."""
+    from ningaloo_turtle_etl_spark.operators.curation import gini_concentration
 
     docs = load_table(spark, "documents", sf_dir)
     return gini_concentration(docs, "source", weight_col="n_chars")
@@ -493,12 +290,12 @@ def q_source_gini(spark, sf_dir):
     """,
 )
 def q_inequality_profile_by_source(spark, sf_dir):
-    """Within-source inequality of document length (`operators/scale.py
+    """Within-source inequality of document length (`operators/curation.py
     inequality_profile`): CV, Theil T, and Atkinson(½) read together —
     top-, entropy-, and bottom-sensitive views of how unevenly char
     mass spreads across a source's documents, the mixing-pipeline
     companion to source_gini's across-source concentration."""
-    from ningaloo_turtle_etl_spark.operators.scale import (
+    from ningaloo_turtle_etl_spark.operators.curation import (
         inequality_profile,
     )
 

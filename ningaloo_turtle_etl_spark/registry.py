@@ -26,8 +26,8 @@ _REGISTRY: dict[str, Q] = {}
 # registered queries only (round 1 checked exactly slots 0-49), so ordering is
 # evidence policy: the first 50 names below jointly cover every SURVEY.md §2
 # component; entries after the marker are redundant with components already
-# proven above (TPC-H-flavored variants, the SQL-form flagship twin) or
-# extension queries — all still oracle-swept by pytest and the supplement
+# proven above (the SQL-form flagship twin) or extension queries — all
+# still oracle-swept by pytest and the supplement
 # artifact (every entry carries a full DuckDB oracle — pcnm_join_back
 # flipped via a frozen eigenvector-score fixture).
 # tests/test_registry_order.py asserts this list stays in sync with the
@@ -149,10 +149,6 @@ PRIORITY: list[str] = [
     "pivot_event_types",
     "join_natural",
     "string_null_funcs",
-    "shipping_priority",
-    "pricing_summary",
-    "local_supplier_volume",
-    "returned_item_customers",
     "sql_entry_point",
     "minhash_near_dups",
     "simhash_near_dups",
@@ -211,11 +207,8 @@ PRIORITY: list[str] = [
     "bm25_top10",
     "edit_similarity_pairs",
     "heaps_vocab_growth",
-    "rollup_pricing_totals",
-    "grouping_sets_tally",
     "gap_fill_daily_values",
     "event_transition_probs",
-    "salted_join_tally",
     "url_domain_cap",
     "tfidf_cosine_sim_pairs",
     "token_entropy_quality",
@@ -225,14 +218,11 @@ PRIORITY: list[str] = [
     "entity_resolution_clusters",
     "containment_near_dups",
     "readability_scores",
-    "key_skew_report",
-    "cube_order_tally",
     "rolling_weekly_value",
     "value_share_of_total",
     "data_quality_profile",
     "benford_first_digit",
     "interarrival_stats",
-    "join_size_forecast",
     "soft_dedup_weights",
     "length_bucket_batches",
     "curriculum_order",
@@ -278,8 +268,6 @@ PRIORITY: list[str] = [
     "table_digest_by_flag",
     # r08 Kneser-Ney bigram LM scoring, full oracle
     "kneser_ney_lm_scores",
-    # r08 Z-order clustering layout, full oracle
-    "zorder_layout_buckets",
     # r08 demotion freeing the fuzzy_part_pairs slot: the lag/window-shape
     # component stays proven in-window by remigration_lag + topk_per_group;
     # this stays oracle-swept by pytest + the supplement artifact.
@@ -294,17 +282,11 @@ PRIORITY: list[str] = [
     "good_turing_token_counts",
     # r09 Shannon/Simpson/HHI composition diversity per source
     "source_lang_diversity",
-    # r09 small-file compaction bin plan (cumulative-size split)
-    "compaction_bin_plan",
     # r09 RAKE keyword extraction (micro-int word scores)
     "rake_top_phrases",
     # r09 four-moment profile from raw power sums (explicit formulas —
     # built-in skewness/kurtosis conventions differ across engines)
     "moment_profile_by_type",
-    # r10 Hilbert-curve layout buckets (the locality-preserving twin of
-    # zorder_layout_buckets; unrolled state-machine bit arithmetic
-    # replayed level-by-level in SQL)
-    "hilbert_layout_buckets",
     # r10 entropy l-diversity (Machanavajjhala §3.2 — the skew-sensitive
     # release gate the count-distinct check misses)
     "entropy_l_diversity_events",
@@ -324,16 +306,9 @@ PRIORITY: list[str] = [
     # r11: DP quantile by the exponential mechanism (seeded draw; the
     # rank-statistic DP release next to the Laplace counts)
     "dp_value_median_exponential",
-    # r11: rendezvous (HRW) shard placement audit with the n->n+1
-    # minimal-disruption expansion plan
-    "rendezvous_shard_plan",
     # r10 within-group inequality profile (CV / Theil / Atkinson —
     # nano-quantized entropy terms, micro-quantized sqrt terms)
     "inequality_profile_by_source",
-    # r11 second batch: zone-map pruning audit across simulated file
-    # layouts (the WHY behind zorder/hilbert/compaction: min/max
-    # skipping vs layout-predicate alignment)
-    "zonemap_prune_shipdate",
     # r11 second batch: 2-state HMM forward log-likelihood, unrolled
     # 4 steps as pure column expressions (the hidden-state rung above
     # event_transition_probs' observable chain)

@@ -2,9 +2,10 @@
 
 The reference opens every source with an eager full scan (``mdb.get`` /
 ``sqlQuery('select * from …')``, ningaloo-etl.Rmd:54-67, tagging-etl.Rmd:63-66).
-Here a "scan" is a lazy ``spark.read.parquet`` with the schema pinned, so
-Catalyst can prune columns and push predicates into the Parquet reader instead
-of materializing full tables like the reference does.
+Here a "scan" is a lazy ``spark.read.parquet``, so Catalyst can prune columns
+and push predicates into the Parquet reader instead of materializing full
+tables like the reference does. No schema is pinned: Spark infers it from the
+Parquet footer, which costs one Spark job each time a table is loaded.
 """
 
 from __future__ import annotations

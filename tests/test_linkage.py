@@ -13,8 +13,6 @@ from ningaloo_turtle_etl_spark.operators.linkage import (
 from ningaloo_turtle_etl_spark.registry import oracle_sql, queries
 from tests.conftest import SF_DIR, assert_df_matches_oracle
 
-BLOCK = staticmethod(lambda name: F.substring(name, 1, 1))
-
 
 @pytest.fixture(scope="module")
 def records(spark):

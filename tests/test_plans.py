@@ -22,13 +22,6 @@ def plan_of(spark, name, execute=False):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pricing_summary_pushdown_and_pruning(spark):
-    plan = plan_of(spark, "pricing_summary")
-    assert "LessThanOrEqual(l_shipdate" in plan  # filter reached the scan
-    m = re.search(r"ReadSchema: (\S+)", plan)
-    assert m and "l_orderkey" not in m.group(1)  # unused columns pruned
-
-
 def test_lookup_chain_broadcasts_all_dims(spark):
     plan = plan_of(spark, "lookup_chain_revenue")
     assert plan.count("BroadcastHashJoin") >= 3
@@ -90,7 +83,7 @@ def test_spatial_tag_is_map_side_only_before_agg(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["pricing_summary", "group_count_sorted", "summary_stats"]
+    "name", ["group_count_sorted", "summary_stats"]
 )
 def test_aggregations_are_codegen_hash_agg(spark, name):
     plan = plan_of(spark, name, execute=True)
@@ -405,16 +398,6 @@ def test_lloyd_assignment_scan_has_no_join(spark):
     assert "BatchEvalPython" not in plan
     # ids 0..9 are nearer centroid 0, 10..19 nearer centroid 1
     assert {r["code"]: r["n"] for r in grid.collect()} == {0: 10, 1: 10}
-
-
-def test_hilbert_buckets_stay_in_codegen_no_python(spark):
-    plan = plan_of(spark, "hilbert_layout_buckets")
-    # the six unrolled levels are materialized Generate stages — map-only,
-    # JVM-side, no join anywhere before the bucket aggregate
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert "Generate" in plan  # the explode barriers that keep codegen alive
-    assert "Join" not in plan
 
 
 def test_symspell_pairs_key_equi_join_jvm_only(spark):

@@ -113,13 +113,8 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         # ppjoin_jaccard_pairs; still oracle-checked by
         # tests/test_oracle_all.py + the supplement.
         "ngram_jaccard_near_dups",
-        # TPC-H-flavored variants of components proven in-window + the
-        # SQL-form flagship twin — all still oracle-checked by
+        # the SQL-form flagship twin — still oracle-checked by
         # tests/test_oracle_all.py.
-        "shipping_priority",
-        "pricing_summary",
-        "local_supplier_volume",
-        "returned_item_customers",
         "sql_entry_point",
         # dedup entries: parity also pinned in tests/test_llm_ops.py.
         "minhash_near_dups",
@@ -172,11 +167,8 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "bm25_top10",
         "edit_similarity_pairs",
         "heaps_vocab_growth",
-        "rollup_pricing_totals",
-        "grouping_sets_tally",
         "gap_fill_daily_values",
         "event_transition_probs",
-        "salted_join_tally",
         "url_domain_cap",
         "tfidf_cosine_sim_pairs",
         "token_entropy_quality",
@@ -186,14 +178,11 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "entity_resolution_clusters",
         "containment_near_dups",
         "readability_scores",
-        "key_skew_report",
-        "cube_order_tally",
         "rolling_weekly_value",
         "value_share_of_total",
         "data_quality_profile",
         "benford_first_digit",
         "interarrival_stats",
-        "join_size_forecast",
         "soft_dedup_weights",
         "length_bucket_batches",
         "curriculum_order",
@@ -241,18 +230,14 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "table_digest_by_flag",
         # r08 Kneser-Ney LM scoring, full oracle
         "kneser_ney_lm_scores",
-        # r08 Z-order layout buckets, full oracle
-        "zorder_layout_buckets",
         # r07 aHash image near-dups, full oracle
         "image_ahash_near_dups",
         # r09 additions, all full oracles
         "good_turing_token_counts",
         "source_lang_diversity",
-        "compaction_bin_plan",
         "rake_top_phrases",
         "moment_profile_by_type",
         # r10 extension families, full oracles
-        "hilbert_layout_buckets",
         "entropy_l_diversity_events",
         "ranking_ndcg_eval",
         # (pca_power_components promoted into the r12 driver window)
@@ -261,9 +246,7 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         # (fellegi_sunter_part_weights promoted into the r12 driver window)
         "audio_wav_features",
         "dp_value_median_exponential",
-        "rendezvous_shard_plan",
         # r11 second batch, full oracles
-        "zonemap_prune_shipdate",
         "hmm_forward_first4",
         "cohens_kappa_langid",
         # r12: the ANN train→serve loop, full unrolled-training oracles

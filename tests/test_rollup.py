@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import shutil
 
-import pyspark.sql.functions as F
 import pytest
 
 from ningaloo_turtle_etl_spark.sources.tables import load_table, stream_table_dir

@@ -177,7 +177,7 @@ def test_forward_select_trace_matches_numpy_reference(spark):
 
 
 def test_gini_concentration_known_values(spark):
-    from ningaloo_turtle_etl_spark.operators.scale import gini_concentration
+    from ningaloo_turtle_etl_spark.operators.curation import gini_concentration
 
     # uniform counts -> 0
     rows = [(i, chr(65 + i % 4)) for i in range(40)]

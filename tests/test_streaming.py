@@ -26,10 +26,6 @@ def events_stream_dir(spark, tmp_path):
     return str(d)
 
 
-def _events_schema(spark):
-    return load_table(spark, "events", SF_DIR).schema
-
-
 def test_streaming_daily_tally_matches_batch(spark, events_stream_dir):
     """ST3: the streaming daily tally over the feed equals the batch plan on
     the same data (one code path, two execution modes)."""

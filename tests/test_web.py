@@ -7,7 +7,6 @@ from __future__ import annotations
 import math
 import re
 
-import pyspark.sql.functions as F
 import pytest
 
 from ningaloo_turtle_etl_spark import registry
