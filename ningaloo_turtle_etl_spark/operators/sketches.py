@@ -96,24 +96,15 @@ def _h32(col: Column | str) -> Column:
 
 
 def portable_hll_registers(
-    df: DataFrame, col: str, by: Sequence[str] = (), dedup: bool = True
+    df: DataFrame, col: str, by: Sequence[str] = ()
 ) -> DataFrame:
     """Per-group HLL register table ``(*by, bucket, mr)`` — the mergeable
     sketch state (merge = groupBy(bucket).max(mr), proven in
     tests/test_sketches.py). Distinct (group, hash) pairs are 8-byte rows
     partially aggregated map-side; the register table is ≤ m rows per group
-    regardless of cardinality.
-
-    ``dedup=False`` skips the distinct — max(rho) is unaffected by repeated
-    hashes, so the result is identical; it exists purely to shrink the
-    shuffle for heavily-duplicated batch inputs. Streaming callers need it
-    off: distinct→max would be two stateful operators, while the direct
-    groupBy(bucket).max(rho) is ONE streaming aggregation whose state IS
-    the sketch (scripts/stream_equiv.py proves batch ≡ stream)."""
+    regardless of cardinality."""
     h = _h32(col)
-    d = df.filter(F.col(col).isNotNull()).select(*by, h.alias("h32"))
-    if dedup:
-        d = d.distinct()
+    d = df.filter(F.col(col).isNotNull()).select(*by, h.alias("h32")).distinct()
     w = F.col("h32") % F.lit(_HLL_W)
     rho = F.when(w == 0, F.lit(_HLL_RHO_MAX)).otherwise(
         F.lit(_HLL_RHO_MAX) - F.length(F.bin(w))

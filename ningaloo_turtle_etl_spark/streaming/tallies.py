@@ -4,7 +4,8 @@ The reference's track feed is semantically an append-only observation stream
 consumed by full re-reads (app.R:77-154, README_TT.md:10-11). Structured
 Streaming replaces re-read-everything with incremental micro-batches:
 
-- ST1: file-source stream over an append-only directory (or any source).
+- ST1: file-source stream over an append-only directory
+  (``sources.tables.stream_table_dir``).
 - ST2: event-time (`observation_start_time`) vs processing-time
   (`meta_submission_date`) both kept as columns.
 - ST3: tumbling daily event-time windows for the tallies.
@@ -21,17 +22,7 @@ Streaming replaces re-read-everything with incremental micro-batches:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-
-def read_stream_dir(
-    spark: SparkSession, path: str, schema: StructType | str, fmt: str = "parquet"
-) -> DataFrame:
-    """ST1: append-only directory as a stream. Explicit schema — a streaming
-    source cannot infer. At scale: one file per micro-batch partition;
-    maxFilesPerTrigger bounds batch size."""
-    return spark.readStream.schema(schema).format(fmt).load(path)
+from pyspark.sql import Column, DataFrame
 
 
 def normalize_after_midnight(
@@ -148,7 +139,8 @@ def watermarked_dedup(
 
     Batch frames take the plain ``dropDuplicates`` path, so one callsite
     serves both modes (the engine's batch≡stream convention; equality is
-    machine-checked by scripts/stream_equiv.py)."""
+    checked by tests/test_streaming.py's
+    test_watermarked_dedup_drops_redelivered_rows)."""
     if not df.isStreaming:
         return df.dropDuplicates(list(keys))
     return df.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
@@ -168,57 +160,4 @@ def complete_tally_query(
         .format("memory")
         .queryName(table_name)
         .start()
-    )
-
-
-def enrich_with_dimension(
-    stream: DataFrame, dim: DataFrame, on: str | list[str], how: str = "left"
-) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch joins against the
-    (broadcast-sized) dimension snapshot — the streaming form of the
-    reference's lookup joins (ningaloo-etl.Rmd:211-215's per-ingest lookup
-    merges). The dimension is re-read per batch, so slowly-changing dims
-    pick up updates without restarting the query; identical plan in batch
-    mode (the engine's batch≡stream convention)."""
-    on = [on] if isinstance(on, str) else list(on)
-    return stream.join(F.broadcast(dim), on=on, how=how)
-
-
-def interval_self_join(
-    df: DataFrame,
-    left_type: str,
-    right_type: str,
-    key: str = "user_id",
-    event_time: str = "ts",
-    within: str = "1 day",
-    watermark: str = "2 days",
-) -> DataFrame:
-    """Watermarked stream-stream inner join: pair each ``left_type`` event
-    with the same key's ``right_type`` events that happened in
-    ``(t_left - within, t_left]`` — e.g. purchases joined to the clicks
-    that preceded them. On a stream BOTH sides carry watermarks and the
-    time-range predicate bounds the join state (Spark evicts buffered rows
-    once the watermark passes the range); on a batch frame the identical
-    plan is a plain conditional join. Returns (key, left ts, right ts,
-    left/right event ids)."""
-    l = df.filter(F.col("event_type") == left_type).select(
-        key,
-        F.col(event_time).alias("l_ts"),
-        F.col("event_id").alias("l_event_id"),
-    )
-    r = df.filter(F.col("event_type") == right_type).select(
-        F.col(key).alias("_rk"),
-        F.col(event_time).alias("r_ts"),
-        F.col("event_id").alias("r_event_id"),
-    )
-    if df.isStreaming:
-        l = l.withWatermark("l_ts", watermark)
-        r = r.withWatermark("r_ts", watermark)
-    cond = (
-        (F.col(key) == F.col("_rk"))
-        & (F.col("r_ts") <= F.col("l_ts"))
-        & (F.col("r_ts") > F.col("l_ts") - F.expr(f"INTERVAL {within}"))
-    )
-    return l.join(r, on=cond, how="inner").select(
-        key, "l_ts", "l_event_id", "r_ts", "r_event_id"
     )

@@ -12,7 +12,6 @@ from ningaloo_turtle_etl_spark.streaming.sinks import foreach_batch_upserter
 from ningaloo_turtle_etl_spark.streaming.tallies import (
     complete_tally_query,
     daily_tally,
-    read_stream_dir,
 )
 from tests.conftest import SF_DIR
 
@@ -113,7 +112,7 @@ def test_watermarked_dedup_drops_redelivered_rows(spark, tmp_path):
 
     batch = load_table(spark, "events", SF_DIR)
     expected = {
-        r["event_id"]: (r["ts"], r["event_type"])
+        r["event_id"]: (r["ts"], r["event_type"], r["value"])
         for r in watermarked_dedup(batch).collect()  # batch path: dropDuplicates
     }
 
@@ -128,7 +127,7 @@ def test_watermarked_dedup_drops_redelivered_rows(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = {
-        r["event_id"]: (r["ts"], r["event_type"])
+        r["event_id"]: (r["ts"], r["event_type"], r["value"])
         for r in spark.sql("SELECT * FROM dedup_stream_test").collect()
     }
     assert len(got) == len(expected)  # exactly once per id, not twice
@@ -266,76 +265,6 @@ def test_watermark_append_mode_emits_closed_windows(spark, events_stream_dir):
         .count()
     )
     assert 0 < emitted < total  # closed windows out, open tail retained
-
-
-def test_streaming_curation_gate_matches_batch(spark, tmp_path):
-    """The curation gate (quality + repetition + PII) is stateless, so the
-    identical plan must produce identical rows in batch and as an
-    append-mode stream over the same feed."""
-    import shutil
-
-    from ningaloo_turtle_etl_spark.streaming.curation import curation_gate
-    from ningaloo_turtle_etl_spark.streaming.tallies import read_stream_dir
-
-    d = tmp_path / "docfeed"
-    d.mkdir()
-    shutil.copy(f"{SF_DIR}/documents.parquet", d / "part-000.parquet")
-
-    batch = load_table(spark, "documents", SF_DIR)
-    expected = {
-        r["doc_id"]: (r["quality_score"], r["n_email"], r["redacted_fp"])
-        for r in curation_gate(batch).collect()
-    }
-    assert expected  # the gate keeps a non-trivial subset
-
-    stream = read_stream_dir(
-        spark,
-        str(d),
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    q = (
-        curation_gate(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("curation_gate_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["doc_id"]: (r["quality_score"], r["n_email"], r["redacted_fp"])
-        for r in spark.sql("SELECT * FROM curation_gate_test").collect()
-    }
-    assert got == expected
-
-
-def test_stream_stream_interval_join_matches_batch(spark, events_stream_dir):
-    """Watermarked stream-stream inner join (purchases × preceding clicks
-    within 1 day per user) emits exactly the batch conditional-join pairs."""
-    from ningaloo_turtle_etl_spark.streaming.tallies import interval_self_join
-
-    batch = load_table(spark, "events", SF_DIR)
-    expected = sorted(
-        (r["user_id"], r["l_event_id"], r["r_event_id"])
-        for r in interval_self_join(batch, "purchase", "click").collect()
-    )
-    assert expected  # fixture has qualifying pairs
-
-    stream = stream_table_dir(spark, events_stream_dir, "events")
-    q = (
-        interval_self_join(stream, "purchase", "click", watermark="40 days")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ssjoin_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r["user_id"], r["l_event_id"], r["r_event_id"])
-        for r in spark.sql("SELECT * FROM ssjoin_test").collect()
-    )
-    assert got == expected
 
 
 def test_streaming_hopping_tally_matches_batch(spark, events_stream_dir):
