@@ -22,7 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
-from ningaloo_turtle_etl_spark.operators.text import tokens
+from ningaloo_turtle_etl_spark.operators.text import barrier_col, tokens, with_tokens
 
 
 def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
@@ -31,11 +31,12 @@ def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
     (`text.sliding_ngrams`) rather than per-gram element_at/slice inside a
     transform — identical gram strings, n array ops per DOC instead of per
     gram (the r11 winnowing constant-factor lesson; the element_at form
-    measured slower still than slice). IMPORTANT: pass a *bound attribute*
-    (a projected alias), not the tokenizer expression — the zipped slices
-    reference this column n times per doc, and an inlined tokenizer would
-    re-split the text n times (formerly O(tokens) times; measured 5× on
-    the 50k-doc bench probe)."""
+    measured slower still than slice). IMPORTANT: pass an *attribute*, not
+    the tokenizer expression — the zipped slices reference this column n
+    times per doc, and an inlined tokenizer would re-split the text n times
+    (formerly O(tokens) times; measured 5× on the 50k-doc bench probe). A
+    projected alias holds only while no filter is pushed below it; a
+    column from :func:`text.with_tokens` (a ``Generate``) always holds."""
     from ningaloo_turtle_etl_spark.operators.text import sliding_ngrams
 
     return F.when(F.size(toks) >= n, sliding_ngrams(toks, n)).otherwise(
@@ -45,7 +46,7 @@ def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
 
 def word_ngrams(col: Column | str, n: int) -> Column:
     """n-grams straight from a text column — fine for one-off expressions;
-    hot paths should project ``tokens(col)`` behind an alias and use
+    hot paths should tokenize with ``text.with_tokens`` and use
     ``word_ngrams_from_tokens`` (see its docstring)."""
     return word_ngrams_from_tokens(tokens(col), n)
 
@@ -76,35 +77,44 @@ def contamination_flags(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.1,
+    carry: tuple[str, ...] = (),
+    toks_col: str | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: per doc, the fraction of its distinct word
     n-grams that also occur in the benchmark set; ``contaminated`` flags
-    docs at/over ``threshold``.
+    docs at/over ``threshold``. ``carry`` names per-doc columns to keep
+    (grouped with the id), so a gate on the flags needs no join back to
+    ``docs``. ``toks_col`` names a token column from ``text.with_tokens``;
+    without one ``text_col`` is tokenized here.
 
     Scale shape: corpus grams explode map-side, hit the *broadcast* vocab
     (no corpus shuffle for the join), and partial aggregation collapses the
     exploded rows back to one (doc, count) row per doc before the only
     shuffle — whose width is the doc count, not the gram count.
     """
-    # Two projections, not one: the alias boundaries keep the tokenizer and
-    # the gram builder from inlining into every downstream reference.
-    per_doc = docs.select(F.col(id_col), tokens(text_col).alias("toks")).select(
-        id_col,
-        F.array_distinct(word_ngrams_from_tokens(F.col("toks"), n)).alias("grams"),
+    # Two projections, not one: CollapseProject will not merge a non-cheap
+    # alias into a projection that reads it n times, so the tokenizer runs
+    # once per doc. Nothing filters between them; a gate on the result sits
+    # above the aggregate, whose output it reads.
+    keys = [id_col, *carry]
+    toks = F.col(toks_col) if toks_col else tokens(text_col)
+    per_doc = docs.select(*keys, toks.alias("_toks")).select(
+        *keys,
+        F.array_distinct(word_ngrams_from_tokens(F.col("_toks"), n)).alias("grams"),
     )
     vocab = benchmark_ngram_vocab(benchmark, text_col, n)
     exploded = per_doc.select(
-        id_col, F.size("grams").alias("n_grams"), F.explode_outer("grams").alias("gram")
+        *keys, F.size("grams").alias("n_grams"), F.explode_outer("grams").alias("gram")
     )
     marked = exploded.join(F.broadcast(vocab), on="gram", how="left")
-    agg = marked.groupBy(id_col, "n_grams").agg(
+    agg = marked.groupBy(*keys, "n_grams").agg(
         F.count("is_bench").alias("n_contaminated")
     )
     ratio = F.when(
         F.col("n_grams") > 0, F.col("n_contaminated") / F.col("n_grams")
     ).otherwise(F.lit(0.0))
     return agg.select(
-        id_col,
+        *keys,
         "n_grams",
         "n_contaminated",
         ratio.alias("contam_ratio"),
@@ -113,20 +123,25 @@ def contamination_flags(
 
 
 def with_repetition_metrics(
-    df: DataFrame, text_col: str = "text", ns: tuple[int, ...] = (2, 3)
+    df: DataFrame,
+    text_col: str = "text",
+    ns: tuple[int, ...] = (2, 3),
+    toks_col: str | None = None,
 ) -> DataFrame:
     """Gopher-style intra-document repetition: for each n in ``ns``, the
     fraction of word n-grams that are repeats of an earlier occurrence
     (1 - distinct/total; 0.0 for docs too short to have any). High ratios
-    mean boilerplate / template spam — a standard pre-training drop rule."""
-    # Tokens and each gram array go behind alias boundaries (projected
-    # columns referenced 2+ times stay materialized per row; inline
-    # expressions would re-tokenize per reference).
-    out = df.withColumn("_toks", tokens(text_col))
+    mean boilerplate / template spam — a standard pre-training drop rule.
+    ``toks_col`` names a token column from ``text.with_tokens``; without
+    one ``text_col`` is tokenized here."""
+    # Tokens, then the gram arrays built from them, each behind a Generate
+    # barrier: a gate on dup_{n}gram_ratio pushed below this projection
+    # reads the _g{n} attribute instead of rebuilding grams and tokens once
+    # per reference (see text.barrier_col).
+    out = df if toks_col else with_tokens(df, text_col, "_toks")
+    toks = F.col(toks_col or "_toks")
     for n in ns:
-        out = out.withColumn(
-            f"_g{n}", word_ngrams_from_tokens(F.col("_toks"), n)
-        )
+        out = barrier_col(out, f"_g{n}", word_ngrams_from_tokens(toks, n))
     for n in ns:
         grams = F.col(f"_g{n}")
         total = F.size(grams)
@@ -137,7 +152,7 @@ def with_repetition_metrics(
         out = out.withColumns(
             {f"n_{n}grams": total, f"dup_{n}gram_ratio": dup}
         )
-    return out.drop("_toks", *[f"_g{n}" for n in ns])
+    return out.drop(*([] if toks_col else ["_toks"]), *[f"_g{n}" for n in ns])
 
 
 def gopher_repetition_stats(
@@ -313,9 +328,10 @@ def mix_rebalance_rates(
     ``budget_fraction`` × total weight: rate_s = min(1, budget·share_s /
     weight_s). One tiny aggregation over (stratum, weight) — the corpus
     scan's partial agg — then pure arithmetic; the result is a
-    broadcast-sized dim of one row per stratum."""
+    broadcast-sized dim of one row per stratum. The total weight is a
+    window over that one-row-per-stratum frame, so ``docs`` is read once
+    (a cross join with its own total would plan ``docs`` twice)."""
     per = docs.groupBy(stratum_col).agg(F.sum(weight_col).alias("w"))
-    total = per.agg(F.sum("w").alias("tw"))
     share = F.lit(None).cast("double")
     for k in sorted(target_shares, reverse=True):
         share = F.when(
@@ -323,9 +339,11 @@ def mix_rebalance_rates(
         ).otherwise(share)
     # Filter unlisted strata BEFORE least(): Spark's least() skips NULLs
     # (returns the least non-NULL value), so least(1.0, NULL·x) would give
-    # rate-less strata a rate of 1.0 instead of dropping them.
+    # rate-less strata a rate of 1.0 instead of dropping them. The filter
+    # stays above the window (it reads no partition key), so unlisted
+    # strata still count toward the total.
     return (
-        per.crossJoin(F.broadcast(total))
+        per.withColumn("tw", F.sum("w").over(Window.partitionBy()))
         .filter(F.col(stratum_col).isin([str(k) for k in target_shares]))
         .select(
             stratum_col,
@@ -353,11 +371,17 @@ def training_mix_sample(
     rates = mix_rebalance_rates(
         docs, target_shares, budget_fraction, stratum_col, weight_col
     )
-    joined = docs.join(F.broadcast(rates), on=stratum_col, how="inner")
+    # A left join whose filter drops rate-less rows (coalesce → false) keeps
+    # the inner-join result, but InferFiltersFromConstraints infers nothing
+    # for its preserved side. On an inner join it would push the rates'
+    # stratum filter (``lang IN (…)``) into ``docs``, so this read of
+    # ``docs`` would differ from the one under the rates aggregate and the
+    # two could not share an exchange.
+    joined = docs.join(F.broadcast(rates), on=stratum_col, how="left")
     keep = (F.col("rate") >= 1.0) | (
         _sample_hash(id_col) < _rate_threshold(F.col("rate"))
     )
-    return joined.filter(keep)
+    return joined.filter(F.coalesce(keep, F.lit(False)))
 
 
 def temperature_mix_sample(

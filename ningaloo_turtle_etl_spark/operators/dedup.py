@@ -284,7 +284,7 @@ def minhash_near_dup_pairs(
     # set sizes (|A|+|B|-|A∩B|) instead of materializing the union.
     # Exactness is preserved up to hash collisions (~n²/2⁶⁰).
     shingle_hash = md5_hash60 if hash_family == "md5" else F.xxhash64
-    # NB on the barrier_col pattern (operators/temporal.py): an A/B at 20k
+    # NB on the barrier_col pattern (operators/text.py): an A/B at 20k
     # docs measured the barrier ~17% SLOWER here (17.4 s → 20.3 s) —
     # unlike the winnowing/bigram chains, this stage's cost is dominated
     # by the banded join + verification, not lambda re-evaluation, and

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
+from ningaloo_turtle_etl_spark.operators.text import barrier_col
+
 
 def _epoch_col(col: F.Column, dt) -> F.Column:
     """Epoch seconds from a column of any time representation the catalog
@@ -559,28 +561,6 @@ def hmm_forward_loglik(
         "n_users",
         F.round(avg, 6).alias("avg_loglik"),
     ).orderBy("first_type")
-
-
-def barrier_col(df: DataFrame, name: str, expr) -> DataFrame:
-    """Materialize a non-cheap expression as a REAL column behind a
-    one-element ``explode(array(expr))`` Generate node.
-
-    Why this exists: CollapseProject merges adjacent projections and
-    inlines the producing expression into every reference — including
-    references inside higher-order-function lambdas, where the inlined
-    expression then re-evaluates PER ARRAY ELEMENT. A window-min pass
-    that slices a computed hash array recomputed the entire md5 gram
-    array once per window position (measured 64× on winnowing at 100k
-    docs: 557 s → 8.7 s); bigram pair extraction over a computed token
-    array paid 3.4× the same way. Generators are collapse-proof, and a
-    single-element explode emits exactly one row per input row (an
-    expression evaluating to NULL becomes [NULL] → one row), so the
-    stage stays map-only with no semantics change.
-
-    Use it whenever a computed array/struct column is consumed by
-    per-element lambdas downstream; plain single-use references don't
-    need it."""
-    return df.select("*", F.explode(F.array(expr)).alias(name))
 
 
 def hmm_viterbi_paths(

@@ -55,11 +55,52 @@ def sliding_ngrams(toks: Column, n: int) -> Column:
     return g
 
 
-def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def barrier_col(df: DataFrame, name: str, expr) -> DataFrame:
+    """Materialize a non-cheap expression as a REAL column behind a
+    one-element ``explode(array(expr))`` Generate node.
+
+    Why this exists: CollapseProject merges adjacent projections and
+    inlines the producing expression into every reference — including
+    references inside higher-order-function lambdas, where the inlined
+    expression then re-evaluates PER ARRAY ELEMENT. A window-min pass
+    that slices a computed hash array recomputed the entire md5 gram
+    array once per window position (measured 64× on winnowing at 100k
+    docs: 557 s → 8.7 s); bigram pair extraction over a computed token
+    array paid 3.4× the same way. Generators are collapse-proof, and a
+    single-element explode emits exactly one row per input row (an
+    expression evaluating to NULL becomes [NULL] → one row), so the
+    stage stays map-only with no semantics change.
+
+    It is also the one barrier that filter pushdown respects:
+    ``PushPredicateThroughNonJoin`` substitutes a projected alias's
+    expression into every filter it pushes below the projection, so a gate
+    on a token-derived column would re-run the tokenizer once per
+    reference. A filter cannot move below the Generate that produces the
+    attribute it reads.
+
+    Use it whenever a computed array/struct column is consumed by
+    per-element lambdas or by pushed-down gates downstream; plain
+    single-use references don't need it."""
+    return df.select("*", F.explode(F.array(expr)).alias(name))
+
+
+def with_tokens(df: DataFrame, text_col: str = "text", toks_col: str = "toks") -> DataFrame:
+    """``df`` plus ``toks_col``, the whitespace tokens of ``text_col``, behind
+    a Generate barrier (:func:`barrier_col`). Tokenize once and pass
+    ``toks_col`` to every operator that takes one."""
+    return barrier_col(df, toks_col, tokens(text_col))
+
+
+def with_token_counts(
+    df: DataFrame, text_col: str = "text", toks_col: str | None = None
+) -> DataFrame:
     """Token counting: whitespace words plus a BPE-ish subword estimate
     (wordpieces ≈ runs of letters / digits / single punctuation — the
-    pre-tokenizer regex family GPT-2-style BPEs use)."""
-    toks = tokens(text_col)
+    pre-tokenizer regex family GPT-2-style BPEs use). ``toks_col`` names a
+    token column from :func:`with_tokens`; without one the words are
+    tokenized here, behind their own barrier."""
+    out = df if toks_col else with_tokens(df, text_col, "_toks")
+    toks = F.col(toks_col or "_toks")
     bpe_pieces = F.filter(
         F.split(
             F.regexp_replace(F.col(text_col), r"([^\w\s]|\d)", r" $1 "), r"\s+"
@@ -69,7 +110,7 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     # greatest(size, 0) / coalesce: F.size(NULL) is -1 under Spark's default
     # legacy.sizeOfNull, so a NULL text row would otherwise contribute
     # NEGATIVE token counts to downstream budget sums (r04 review).
-    return df.withColumns(
+    out = out.withColumns(
         {
             "n_words": F.greatest(F.size(toks), F.lit(0)),
             "n_chars": F.coalesce(F.length(text_col), F.lit(0)),
@@ -82,6 +123,7 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
             ),
         }
     )
+    return out if toks_col else out.drop("_toks")
 
 
 def with_quality_score(
@@ -252,7 +294,7 @@ def bigram_lm_scores(
     barrier_col Generate here was A/B'd and REVERTED: for parquet-backed
     text the per-element tokenizer re-evaluation is cheap and the extra
     Generate cost slightly more than it saved — see
-    operators/temporal.py barrier_col for when the cliff is real.)"""
+    barrier_col above for when the cliff is real.)"""
     toks = df.select(F.col(id_col), tokens(text_col).alias("toks"))
     idx = F.when(
         F.size("toks") >= 2, F.sequence(F.lit(0), F.size("toks") - 2)

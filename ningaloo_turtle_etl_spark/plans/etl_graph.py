@@ -54,7 +54,6 @@ class EtlResult:
 def run_batch_etl(
     inputs: dict[str, DataFrame],
     out_dir: str,
-    write_products: bool = True,
     expected_qa: dict[str, int] | None = None,
 ) -> EtlResult:
     """Run the product graph over loaded inputs.
@@ -122,28 +121,27 @@ def run_batch_etl(
     qa_detail = run_qa(checks)
     qa = {name: r["count"] for name, r in qa_detail.items()}
 
-    if write_products:
-        os.makedirs(out_dir, exist_ok=True)
-        geo = sites.withColumn(
-            "feature",
-            feature_json(
-                bbox_ring("x_min", "y_min", "x_max", "y_max"),
-                {"id": F.col("id"), "subsection": F.col("subsection")},
-            ),
-        )
-        writes = [
-            partial(write_csv, df, os.path.join(out_dir, f"{name}_csv"), single_file=True)
-            for name, df in products.items()
-        ]
-        writes.append(
-            partial(write_feature_collection, geo, "feature", os.path.join(out_dir, "sites.geojson"))
-        )
-        run_concurrently(sites.sparkSession, writes)
-        # Legacy flat counts (qa_report.json 'counts' mirrors this file's old
-        # shape) plus the rendered human-readable report.
-        with open(os.path.join(out_dir, "qa_report.json"), "w") as f:
-            json.dump(qa, f, indent=2)
-        write_qa_report(qa_detail, out_dir, stem="qa_run_report")
+    os.makedirs(out_dir, exist_ok=True)
+    geo = sites.withColumn(
+        "feature",
+        feature_json(
+            bbox_ring("x_min", "y_min", "x_max", "y_max"),
+            {"id": F.col("id"), "subsection": F.col("subsection")},
+        ),
+    )
+    writes = [
+        partial(write_csv, df, os.path.join(out_dir, f"{name}_csv"), single_file=True)
+        for name, df in products.items()
+    ]
+    writes.append(
+        partial(write_feature_collection, geo, "feature", os.path.join(out_dir, "sites.geojson"))
+    )
+    run_concurrently(sites.sparkSession, writes)
+    # Legacy flat counts (qa_report.json 'counts' mirrors this file's old
+    # shape) plus the rendered human-readable report.
+    with open(os.path.join(out_dir, "qa_report.json"), "w") as f:
+        json.dump(qa, f, indent=2)
+    write_qa_report(qa_detail, out_dir, stem="qa_run_report")
 
     return EtlResult(products=products, qa=qa, out_dir=out_dir, qa_detail=qa_detail)
 

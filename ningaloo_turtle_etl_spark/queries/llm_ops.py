@@ -23,6 +23,7 @@ from ningaloo_turtle_etl_spark.operators.text import (
     with_lang_id,
     with_quality_score,
     with_token_counts,
+    with_tokens,
 )
 from ningaloo_turtle_etl_spark.registry import register
 from ningaloo_turtle_etl_spark.sources.tables import load_table
@@ -1142,7 +1143,15 @@ def corpus_curation_pipeline(spark, sf_dir):
     (broadcast eval vocab) → deterministic 40/20/20/20 mix sample within a
     half-corpus budget, rates derived from the GATED corpus (the plan's own
     tiny agg). Every stage is the same operator its standalone query
-    registers; the oracle replays the whole composition in SQL."""
+    registers; the oracle replays the whole composition in SQL.
+
+    Each document is tokenized once: ``with_tokens`` puts the tokens behind
+    a ``Generate``, and every operator reads that attribute. A projected
+    alias would not do, because ``PushPredicateThroughNonJoin`` substitutes
+    aliases into the pushed-down gates, which then re-tokenize per
+    reference. The decontamination aggregate carries ``lang`` and
+    ``n_chars``, so ``gated`` needs no join back, and its two consumers
+    (the mix rates and the sample) share one exchange."""
     from ningaloo_turtle_etl_spark.operators.curation import (
         contamination_flags,
         training_mix_sample as mix,
@@ -1153,16 +1162,17 @@ def corpus_curation_pipeline(spark, sf_dir):
         "text", F.lower(F.col("text"))
     )
     bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = exact_dedup_semi(docs).filter(F.col("doc_id") % 97 != 0)
-    rep = with_repetition_metrics(with_token_counts(corpus))
-    # Map-only gates run BEFORE the contamination join-back, so the only
-    # row-keyed shuffle in the plan carries gate survivors, not the corpus.
+    corpus = with_tokens(exact_dedup_semi(docs).filter(F.col("doc_id") % 97 != 0))
+    rep = with_repetition_metrics(
+        with_token_counts(corpus, toks_col="toks"), ns=(2,), toks_col="toks"
+    )
+    # Map-only gates run BEFORE decontamination, so the only row-keyed
+    # shuffle in the plan carries gate survivors, not the corpus.
     pre = rep.filter((F.col("n_words") >= 5) & (F.col("dup_2gram_ratio") < 0.5))
-    flags = contamination_flags(
-        pre.select("doc_id", "text"), bench, n=3
-    ).select("doc_id", "contam_ratio")
     gated = (
-        pre.join(flags, on="doc_id")
+        contamination_flags(
+            pre, bench, n=3, carry=("lang", "n_chars"), toks_col="toks"
+        )
         .filter(F.col("contam_ratio") < 0.2)
         .select("doc_id", "lang", "n_chars")
     )

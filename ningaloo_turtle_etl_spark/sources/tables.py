@@ -4,8 +4,9 @@ The reference opens every source with an eager full scan (``mdb.get`` /
 ``sqlQuery('select * from …')``, ningaloo-etl.Rmd:54-67, tagging-etl.Rmd:63-66).
 Here a "scan" is a lazy ``spark.read.parquet``, so Catalyst can prune columns
 and push predicates into the Parquet reader instead of materializing full
-tables like the reference does. No schema is pinned: Spark infers it from the
-Parquet footer, which costs one Spark job each time a table is loaded.
+tables like the reference does. The schema comes from the Parquet footer.
+Inferring it costs one Spark job, so it is cached per file state and a table
+loaded again (or a plan built again) runs no job.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -29,10 +31,15 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# path -> (file state, footer schema): the last schema inferred for each
+# path, valid while every file under it keeps its size and mtime.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Lazy scan of one synthetic table; schema comes from Parquet footer
-    metadata (no inference pass over the data)."""
+    metadata (no inference pass over the data), inferred once per file
+    state (see :func:`_read_parquet`)."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
     if name == "events":
         # Harness-proof: some testdata generations write events.ts as parquet
@@ -40,8 +47,40 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         # and _repair_schema converts); the current generation writes native
         # timestamp[us], where the conf is a harmless no-op.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     return _repair_schema(name, df)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema cached. Footer
+    inference runs one Spark job; with the cached schema passed to
+    ``spark.read.schema`` a load runs none. The cache holds one entry per
+    path, tagged with the size and mtime of every file under it, so a
+    rewritten or added file is inferred again. Two threads loading a new
+    path at once both infer, and the later entry wins; both are the same
+    schema. A path that cannot be stat'ed locally is read uncached, and
+    Spark reports whatever is wrong with it."""
+    try:
+        state = _file_state(path)
+    except OSError:
+        return spark.read.parquet(path)
+    cached = _SCHEMAS.get(path)
+    if cached is not None and cached[0] == state:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (state, df.schema)
+    return df
+
+
+def _file_state(path: str) -> tuple:
+    """(file, size, mtime_ns) of every file under ``path`` (or of ``path``)."""
+    files = (
+        sorted(os.path.join(d, f) for d, _, names in os.walk(path) for f in names)
+        if os.path.isdir(path)
+        else [path]
+    )
+    stats = [(f, os.stat(f)) for f in files]
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
 
 
 def _repair_schema(name: str, df: DataFrame) -> DataFrame:

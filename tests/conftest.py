@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import duckdb
@@ -33,6 +34,30 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def feed_dir(tmp_path):
+    """An append-only feed directory seeded with the events table (ST1)."""
+    d = tmp_path / "feed"
+    d.mkdir()
+    shutil.copy(f"{SF_DIR}/events.parquet", d / "part-000.parquet")
+    return str(d)
+
+
+def marker_job(sc, group: str) -> int:
+    """Run one job in its own group and return its id once the status
+    tracker has seen it (the tracker is fed asynchronously, in event order,
+    so every earlier job has been recorded by then)."""
+    import time
+
+    sc.setJobGroup(group, group)
+    sc.parallelize([1], 1).count()
+    deadline = time.monotonic() + 60
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, f"job of {group} never reached the tracker"
+        time.sleep(0.05)
+    return max(ids)
 
 
 def assert_df_matches_oracle(spark_df, duck_con, sql):

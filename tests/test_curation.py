@@ -16,6 +16,7 @@ from ningaloo_turtle_etl_spark.operators.curation import (
     with_repetition_metrics,
     word_ngrams,
 )
+from ningaloo_turtle_etl_spark.operators.text import with_token_counts, with_tokens
 
 
 def test_word_ngrams_shapes(spark):
@@ -108,6 +109,95 @@ def test_mix_rebalance_rates_hit_budget(spark):
     sampled = training_mix_sample(docs, {"en": 0.5, "de": 0.5})
     langs = {r["lang"] for r in sampled.collect()}
     assert "de" in langs  # rate-1.0 stratum fully present
+
+
+def test_mix_rebalance_rates_window_matches_cross_join(spark):
+    # The total weight is a window over the per-stratum frame; the former
+    # cross join with the frame's own total gives the same rates. Unlisted
+    # strata (zh, NULL) count toward the total and are then dropped.
+    docs = spark.createDataFrame(
+        [(i, ["en", "de", "fr", "zh", None][i % 5], 7 + i % 13) for i in range(200)],
+        "doc_id long, lang string, n_chars long",
+    )
+    shares = {"en": 0.4, "de": 0.3, "fr": 0.3}
+    got = {r["lang"]: r["rate"] for r in mix_rebalance_rates(docs, shares).collect()}
+
+    per = docs.groupBy("lang").agg(F.sum("n_chars").alias("w"))
+    total = per.agg(F.sum("w").alias("tw"))
+    share = F.lit(None).cast("double")
+    for k, v in shares.items():
+        share = F.when(F.col("lang") == k, F.lit(v)).otherwise(share)
+    cross = (
+        per.crossJoin(total)
+        .filter(F.col("lang").isin(list(shares)))
+        .select(
+            "lang",
+            F.least(
+                F.lit(1.0),
+                (F.lit(0.5) * share) * (F.col("tw").cast("double") / F.col("w").cast("double")),
+            ).alias("rate"),
+        )
+    )
+    want = {r["lang"]: r["rate"] for r in cross.collect()}
+    assert got == want
+    assert set(got) == {"en", "de", "fr"}
+
+
+def test_contamination_carry_equals_join_back(spark):
+    # carry= keeps per-doc columns through the aggregate; the result equals
+    # scoring id+text alone and joining the columns back, with the tokens
+    # taken from text or from a with_tokens column.
+    bench = spark.createDataFrame([("the quick brown fox jumps",)], "text string")
+    docs = spark.createDataFrame(
+        [
+            (1, "en", 33, "here is the quick brown fox again"),
+            (2, "de", 22, "ganz andere worte hier jetzt"),
+            (3, "en", 2, "xy"),
+            (4, None, 15, "the quick brown"),
+        ],
+        "doc_id long, lang string, n_chars long, text string",
+    )
+    carry = ("lang", "n_chars")
+    cols = ["doc_id", *carry, "n_grams", "n_contaminated", "contam_ratio", "contaminated"]
+
+    def rows(df):
+        return sorted(df.select(cols).collect(), key=lambda r: r["doc_id"])
+
+    joined = docs.select("doc_id", *carry).join(
+        contamination_flags(docs.select("doc_id", "text"), bench, n=3, threshold=0.3),
+        on="doc_id",
+    )
+    want = rows(joined)
+    assert len(want) == 4
+    assert rows(contamination_flags(docs, bench, n=3, threshold=0.3, carry=carry)) == want
+    tokenized = contamination_flags(
+        with_tokens(docs), bench, n=3, threshold=0.3, carry=carry, toks_col="toks"
+    )
+    assert rows(tokenized) == want
+
+
+def test_repetition_gate_does_not_retokenize(spark):
+    # A gate on token-derived columns is pushed below their projection; the
+    # Generate barrier keeps it reading attributes, so each operator's
+    # tokenizer appears once and never inside a Filter.
+    df = spark.createDataFrame(
+        [(1, "a b a b a b"), (2, "one two three four five six"), (3, "x")],
+        "doc_id long, text string",
+    )
+    gated = (
+        with_repetition_metrics(with_token_counts(df))
+        .filter((F.col("n_words") >= 2) & (F.col("dup_2gram_ratio") < 0.5))
+        .select("doc_id")
+    )
+    plan = gated._jdf.queryExecution().optimizedPlan().toString()
+    assert not [line for line in plan.splitlines() if "Filter" in line and "split(" in line]
+    assert plan.count("split(") == 2
+    assert [r["doc_id"] for r in gated.collect()] == [2]
+    shared = with_repetition_metrics(
+        with_token_counts(with_tokens(df), toks_col="toks"), toks_col="toks"
+    ).filter((F.col("n_words") >= 2) & (F.col("dup_2gram_ratio") < 0.5)).select("doc_id")
+    assert shared._jdf.queryExecution().optimizedPlan().toString().count("split(") == 1
+    assert [r["doc_id"] for r in shared.collect()] == [2]
 
 
 def test_pii_redaction_planted(spark):

@@ -2807,12 +2807,12 @@ def test_pca_arrow_grid_matches_catalyst_reference(spark):
     that both grids reject NULL and ragged vectors with ValueError."""
     import pyspark.sql.functions as F
 
-    from ningaloo_turtle_etl_spark.operators.temporal import barrier_col
     from ningaloo_turtle_etl_spark.operators.similarity import (
         _as_double,
         _pca_coord_sum_grid,
         _pca_cov_apply_grid,
     )
+    from ningaloo_turtle_etl_spark.operators.text import barrier_col
 
     d = 4
     rows = []

@@ -107,6 +107,27 @@ def test_decontaminate_corpus_broadcasts_vocab_no_corpus_shuffle_join(spark):
             raise AssertionError(f"gram expression inlined into a Filter: {line[:160]}")
 
 
+def test_curation_pipeline_tokenizes_each_document_once(spark):
+    # Tokens and n-grams sit behind Generate barriers, so the pushed-down
+    # length/repetition gate reads attributes and never re-tokenizes; the
+    # decontamination aggregate carries lang/n_chars (no join back), and the
+    # mix rates read the gated corpus without a self cross-join.
+    df = QUERIES["corpus_curation_pipeline"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for line in plan.splitlines():
+        if "Filter" in line and "split(" in line:
+            raise AssertionError(f"tokenizer inlined into a Filter: {line[:160]}")
+    # One corpus and one benchmark tokenizer for each of the gated corpus's
+    # two consumers (was 102); the same two sides scan documents 3 times
+    # each: the dedup keepers, the dedup body and the benchmark (was 15).
+    assert plan.count("split(") <= 4
+    assert plan.count("Relation [") <= 6
+    # Both consumers of the gated corpus read one decontamination shuffle.
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"ReusedExchange .*Exchange hashpartitioning\(doc_id", executed)
+
+
 def test_repetition_metrics_is_map_only(spark):
     plan = plan_of(spark, "repetition_metrics")
     assert "Exchange" not in plan  # pure projection fused with the scan

@@ -4,10 +4,6 @@ tally."""
 
 from __future__ import annotations
 
-import shutil
-
-import pytest
-
 from ningaloo_turtle_etl_spark.sources.tables import load_table, stream_table_dir
 from ningaloo_turtle_etl_spark.streaming.rollup import (
     continuous_rollup,
@@ -17,22 +13,10 @@ from ningaloo_turtle_etl_spark.streaming.tallies import daily_tally
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture()
-def feed(spark, tmp_path):
-    d = tmp_path / "feed"
-    d.mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", d / "part-000.parquet")
-    return str(d)
-
-
-def _stream(spark, feed):
-    return stream_table_dir(spark, feed, "events")
-
-
-def test_continuous_rollup_serves_full_tally(spark, feed, tmp_path):
+def test_continuous_rollup_serves_full_tally(spark, feed_dir, tmp_path):
     rollup_dir = str(tmp_path / "rollup")
     q = continuous_rollup(
-        _stream(spark, feed), rollup_dir, watermark="2 days",
+        stream_table_dir(spark, feed_dir, "events"), rollup_dir, watermark="2 days",
         checkpoint=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
@@ -53,9 +37,11 @@ def test_continuous_rollup_serves_full_tally(spark, feed, tmp_path):
     assert served == expected  # closed history + recomputed tail = batch
 
 
-def test_rollup_rerun_is_idempotent(spark, feed, tmp_path):
+def test_rollup_rerun_is_idempotent(spark, feed_dir, tmp_path):
     rollup_dir = str(tmp_path / "rollup")
-    q = continuous_rollup(_stream(spark, feed), rollup_dir, watermark="2 days")
+    q = continuous_rollup(
+        stream_table_dir(spark, feed_dir, "events"), rollup_dir, watermark="2 days"
+    )
     q.awaitTermination(120)
     first = sorted(
         (r["window_start"], r["event_type"], r["n"])
@@ -63,7 +49,9 @@ def test_rollup_rerun_is_idempotent(spark, feed, tmp_path):
     )
     # Fresh query over the same feed (no checkpoint): every batch replays;
     # the merge-on-key sink must absorb it without duplication.
-    q2 = continuous_rollup(_stream(spark, feed), rollup_dir, watermark="2 days")
+    q2 = continuous_rollup(
+        stream_table_dir(spark, feed_dir, "events"), rollup_dir, watermark="2 days"
+    )
     q2.awaitTermination(120)
     second = sorted(
         (r["window_start"], r["event_type"], r["n"])

@@ -8,6 +8,8 @@ import os
 
 import pytest
 
+from tests.conftest import marker_job
+
 
 def _etl_inputs(spark):
     """A two-site graph input with one missing bbox corner, one orphan crawl
@@ -88,21 +90,6 @@ def test_etl_graph_end_to_end(spark, tmp_path):
     assert "sites_geojson" in cat.published and "surveys" in cat.published
 
 
-def _marker_job(sc, group: str) -> int:
-    """Run one job in its own group and return its id once the status
-    tracker has seen it (the tracker is fed asynchronously, in event order,
-    so every earlier job has been recorded by then)."""
-    import time
-
-    sc.setJobGroup(group, group)
-    sc.parallelize([1], 1).count()
-    deadline = time.monotonic() + 60
-    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
-        assert time.monotonic() < deadline, f"job of {group} never reached the tracker"
-        time.sleep(0.05)
-    return max(ids)
-
-
 def test_etl_graph_concurrent_actions_stay_in_callers_job_group(spark, tmp_path):
     """run_batch_etl submits its QA actions, then its product writes, from a
     thread pool: every job they run is accounted to the caller's job group,
@@ -116,10 +103,10 @@ def test_etl_graph_concurrent_actions_stay_in_callers_job_group(spark, tmp_path)
     group = f"etl-graph-{uuid.uuid4().hex}"
     out = str(tmp_path / "products")
     try:
-        before = _marker_job(sc, f"{group}-before")
+        before = marker_job(sc, f"{group}-before")
         sc.setJobGroup(group, "run_batch_etl")
         run_batch_etl(_etl_inputs(spark), out_dir=out, expected_qa=_ETL_EXPECTED_QA)
-        after = _marker_job(sc, f"{group}-after")
+        after = marker_job(sc, f"{group}-after")
     finally:
         sc.setJobGroup(None, None)
     in_group = sc.statusTracker().getJobIdsForGroup(group)

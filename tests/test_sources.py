@@ -210,3 +210,45 @@ def test_orc_round_trip_with_partition_pruning(spark, tmp_path):
     # partition filter, not a post-scan predicate
     plan = back.where(F.col("k") == "a")._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(k" in plan, plan
+
+
+def test_load_table_infers_schema_once_per_file_state(spark, tmp_path):
+    """Footer inference runs one Spark job; load_table caches the schema per
+    (path, size, mtime), so a second load of the same file runs no job and a
+    rewritten file is inferred again."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ningaloo_turtle_etl_spark.sources.tables import load_table
+    from tests.conftest import marker_job
+
+    sc = spark.sparkContext
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    path = sf_dir / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a b", "c d"]}), path)
+
+    def jobs_for(loads: int, tag: str):
+        group = f"load-table-{tag}-{uuid.uuid4().hex}"
+        try:
+            sc.setJobGroup(group, tag)
+            dfs = [load_table(spark, "documents", str(sf_dir)) for _ in range(loads)]
+            marker_job(sc, f"{group}-after")  # every earlier job is tracked now
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), dfs[-1]
+
+    n_jobs, df = jobs_for(2, "first")
+    assert n_jobs == 1
+    assert df.columns == ["doc_id", "text"]
+    assert jobs_for(1, "cached")[0] == 0
+
+    pq.write_table(
+        pa.table({"doc_id": [3], "text": ["e f g"], "lang": ["en"]}), path
+    )
+    n_jobs, df = jobs_for(1, "rewritten")
+    assert n_jobs == 1
+    assert df.columns == ["doc_id", "text", "lang"]
+    assert [tuple(r) for r in df.collect()] == [(3, "e f g", "en")]

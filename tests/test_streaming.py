@@ -16,16 +16,7 @@ from ningaloo_turtle_etl_spark.streaming.tallies import (
 from tests.conftest import SF_DIR
 
 
-@pytest.fixture()
-def events_stream_dir(spark, tmp_path):
-    """An append-only directory seeded with the events table (ST1)."""
-    d = tmp_path / "feed"
-    d.mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", d / "part-000.parquet")
-    return str(d)
-
-
-def test_streaming_daily_tally_matches_batch(spark, events_stream_dir):
+def test_streaming_daily_tally_matches_batch(spark, feed_dir):
     """ST3: the streaming daily tally over the feed equals the batch plan on
     the same data (one code path, two execution modes)."""
     batch = load_table(spark, "events", SF_DIR)
@@ -36,7 +27,7 @@ def test_streaming_daily_tally_matches_batch(spark, events_stream_dir):
 
     # The stream goes through the same conditional schema repair as the
     # batch loader (stream_table_dir) — plan parity for either testdata shape.
-    stream = stream_table_dir(spark, events_stream_dir, "events")
+    stream = stream_table_dir(spark, feed_dir, "events")
     q = (
         daily_tally(stream, watermark="10 days")
         .writeStream.outputMode("complete")
@@ -53,9 +44,9 @@ def test_streaming_daily_tally_matches_batch(spark, events_stream_dir):
     assert got == expected
 
 
-def test_complete_mode_dashboard_tally(spark, events_stream_dir):
+def test_complete_mode_dashboard_tally(spark, feed_dir):
     """ST6: the app.R reactive re-tally as a complete-mode in-memory agg."""
-    stream = stream_table_dir(spark, events_stream_dir, "events")
+    stream = stream_table_dir(spark, feed_dir, "events")
     q = complete_tally_query(stream, ("event_type",), "dashboard_tally_test")
     try:
         q.processAllAvailable()
@@ -70,7 +61,7 @@ def test_complete_mode_dashboard_tally(spark, events_stream_dir):
         q.stop()
 
 
-def test_streaming_session_tally_matches_batch(spark, events_stream_dir):
+def test_streaming_session_tally_matches_batch(spark, feed_dir):
     """Session windows on a stream (state-merging, watermark-bounded) equal
     the batch plan on the same data."""
     from ningaloo_turtle_etl_spark.streaming.tallies import session_tally
@@ -82,7 +73,7 @@ def test_streaming_session_tally_matches_batch(spark, events_stream_dir):
     }
     assert expected  # fixture has sessions
 
-    stream = stream_table_dir(spark, events_stream_dir, "events")
+    stream = stream_table_dir(spark, feed_dir, "events")
     q = (
         session_tally(stream, keys=("user_id",), gap="6 hours", watermark="10 days")
         .writeStream.outputMode("complete")
@@ -240,12 +231,12 @@ def test_rollup_resumes_from_checkpoint_across_drains(spark, tmp_path):
         assert rows(spark.read.parquet(rollup)) == expected
 
 
-def test_watermark_append_mode_emits_closed_windows(spark, events_stream_dir):
+def test_watermark_append_mode_emits_closed_windows(spark, feed_dir):
     """ST4: append mode + watermark — only windows the watermark has passed
     are emitted; the tail stays in state (late data would still be merged)."""
     import pyspark.sql.functions as F
 
-    stream = stream_table_dir(spark, events_stream_dir, "events")
+    stream = stream_table_dir(spark, feed_dir, "events")
     q = (
         daily_tally(stream, watermark="2 days")
         .writeStream.outputMode("append")
@@ -267,7 +258,7 @@ def test_watermark_append_mode_emits_closed_windows(spark, events_stream_dir):
     assert 0 < emitted < total  # closed windows out, open tail retained
 
 
-def test_streaming_hopping_tally_matches_batch(spark, events_stream_dir):
+def test_streaming_hopping_tally_matches_batch(spark, feed_dir):
     """Hopping 1h/30min windows: every event lands in exactly 2 windows,
     and the streaming run over the feed equals the batch plan."""
     from ningaloo_turtle_etl_spark.streaming.tallies import hopping_tally
@@ -280,7 +271,7 @@ def test_streaming_hopping_tally_matches_batch(spark, events_stream_dir):
     }
     assert sum(n for n, _ in expected.values()) == 2 * batch.count()
 
-    stream = stream_table_dir(spark, events_stream_dir, "events")
+    stream = stream_table_dir(spark, feed_dir, "events")
     q = (
         hopping_tally(stream, watermark="40 days")
         .writeStream.outputMode("complete")
