@@ -1,4 +1,4 @@
-"""Multimodal columns: image/audio/video as opaque ``binary`` + typed
+"""Multimodal columns: image and audio as opaque ``binary`` + typed
 metadata, processed by Arrow-batched ``mapInPandas`` stages.
 
 The Spark-side plumbing (schemas, batch iteration, partition behavior) is
@@ -571,151 +571,6 @@ def extract_image_features(
             yield pd.DataFrame(out)
 
     return df.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_n_bytes: int = 1024,
-    max_frames: int = 8,
-) -> DataFrame:
-    """Frame sampling for video-ish blobs: emit up to ``max_frames`` chunks
-    per media row (one output row per frame) — the UDTF-shaped explode a
-    real ffmpeg sampler would produce. Chunking is byte-based here; the
-    row-multiplying plumbing is what's under test."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for media_id, raw in zip(batch["media_id"], batch["content"]):
-                content = bytes(raw) if raw is not None else b""
-                for i in range(min(max_frames, max(1, len(content) // every_n_bytes))):
-                    chunk = content[i * every_n_bytes : (i + 1) * every_n_bytes]
-                    out.append(
-                        {
-                            "media_id": media_id,
-                            "frame_no": i,
-                            "frame_bytes": chunk,
-                            "frame_size": len(chunk),
-                        }
-                    )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        run, schema="media_id long, frame_no int, frame_bytes binary, frame_size int"
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    target_w: int = 32,
-    target_h: int = 32,
-    decoder: str = "stub",
-) -> DataFrame:
-    """Decode → resize to (target_h, target_w) → re-encode as raw bytes.
-    Nearest-neighbor index sampling on the numpy pixel array — decoder-
-    agnostic (works identically over the 'fake' tier and real PIL output),
-    deterministic, and vectorized per image. Output rows carry the resized
-    grayscale frame as ``binary`` plus its dims, ready for a downstream
-    feature/embedding stage."""
-    if decoder == "stub":
-        raise NotImplementedError(
-            "image decode requires a codec; use decoder='fake' for the "
-            "deterministic test path, 'ppm'/'png' for stdlib-only real "
-            "pixel bytes, or 'pil' with PIL installed"
-        )
-    decode = _DECODERS[decoder]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for media_id, raw in zip(batch["media_id"], batch["content"]):
-                content = bytes(raw) if raw is not None else b""
-                w, h, pixels = decode(content)
-                if pixels.size == 0:
-                    resized = np.zeros((target_h, target_w), dtype=np.uint8)
-                else:
-                    ys = (np.arange(target_h) * h // target_h).clip(0, h - 1)
-                    xs = (np.arange(target_w) * w // target_w).clip(0, w - 1)
-                    resized = pixels[np.ix_(ys, xs)]
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "width": target_w,
-                        "height": target_h,
-                        "pixels": resized.astype(np.uint8).tobytes(),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        run, schema="media_id long, width int, height int, pixels binary"
-    )
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, n_samples long, duration_sec double, "
-    "rms double, zero_crossings long, energy_bands array<double>"
-)
-
-
-def _fake_audio_decode(content: bytes, sample_rate: int) -> np.ndarray:
-    """Deterministic pseudo-decode: bytes as int8 PCM samples, normalized to
-    [-1, 1]. Stands in for an ffmpeg/librosa loader with the same interface
-    (→ float waveform at ``sample_rate``)."""
-    if not content:
-        return np.zeros(0, dtype=np.float64)
-    return np.frombuffer(content, dtype=np.int8).astype(np.float64) / 128.0
-
-
-def extract_audio_features(
-    df: DataFrame,
-    decoder: str = "stub",
-    sample_rate: int = 8_000,
-    n_bands: int = 4,
-) -> DataFrame:
-    """Decode → audio features over a binary column: sample count, duration,
-    RMS level, zero-crossing count, and coarse per-band energies (the
-    waveform split into ``n_bands`` equal time bands — the cheap stand-in
-    for a spectral feature a real pipeline would compute). Same tiering as
-    the image path: 'stub' raises (codec libraries absent), 'fake' is the
-    deterministic bytes-as-PCM path the tests exercise."""
-    if decoder == "stub":
-        raise NotImplementedError(
-            "audio decode requires a codec (ffmpeg/librosa); use "
-            "decoder='fake' for the deterministic bytes-as-PCM test path"
-        )
-    if decoder != "fake":
-        raise ValueError(f"unknown audio decoder: {decoder!r}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for media_id, raw in zip(batch["media_id"], batch["content"]):
-                content = bytes(raw) if raw is not None else b""
-                wave = _fake_audio_decode(content, sample_rate)
-                n = wave.size
-                if n:
-                    rms = float(np.sqrt((wave**2).mean()))
-                    zc = int(((wave[:-1] * wave[1:]) < 0).sum())
-                    bands = [
-                        float((seg**2).sum())
-                        for seg in np.array_split(wave, n_bands)
-                    ]
-                else:
-                    rms, zc, bands = 0.0, 0, [0.0] * n_bands
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "n_samples": n,
-                        "duration_sec": n / sample_rate,
-                        "rms": rms,
-                        "zero_crossings": zc,
-                        "energy_bands": bands,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
 
 
 def documents_as_media(documents: DataFrame) -> DataFrame:

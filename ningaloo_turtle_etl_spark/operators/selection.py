@@ -36,8 +36,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
@@ -614,59 +612,6 @@ def leakage_safe_split(
     return fp.join(assigned, on="fingerprint").select(
         F.col("id").alias(id_col), "anchor_id", "group_size", "split"
     )
-
-
-def rrf_fuse(
-    df: DataFrame,
-    score_cols: Sequence[str],
-    id_col: str = "doc_id",
-    k: int = 60,
-    by: Sequence[str] = (),
-    ndigits: int = 6,
-) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack et al. 2009) over several score
-    columns: each item's fused score is Σ_s 1/(k + rank_s), where rank_s
-    is the item's 1-based row_number under score column s descending with
-    ties broken by ``id_col`` ascending (higher score = rank 1). RRF is
-    the standard way to combine heterogeneous selection signals (a quality
-    classifier, a DSIR importance weight, a recency score) WITHOUT
-    calibrating their scales against each other — only ranks matter, so a
-    signal with a wild scale cannot dominate.
-
-    Ranks are row_number, NOT dense_rank: two items tied on a score column
-    get DISTINCT consecutive ranks (deterministically ordered by id), which
-    matches the oracle SQL's row_number and keeps the fused score replayable
-    cross-engine; a dense-rank reading would give tied items equal
-    contributions instead. ``by`` ranks within groups (e.g. per source).
-    Output: the input keys plus one ``rank_<col>`` per signal and
-    ``rrf_score``.
-
-    Scale shape: one window per score column, all partitioned the same way
-    (by ``by``), so Spark plans a single sort-exchange reused across the
-    windows when partitioning agrees. A global (ungrouped) ranking at
-    100 TB serializes through one task per window — at that scale rank
-    within shards (``by`` = shard key) or bucket scores first; the RRF sum
-    itself is embarrassingly parallel.
-    """
-    from pyspark.sql.window import Window
-
-    if not score_cols:
-        raise ValueError("score_cols must be non-empty")
-    keys = list(by)
-    out = df
-    rank_cols = []
-    for c in score_cols:
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(c).desc(), F.col(id_col).asc()
-        )
-        rc = f"rank_{c}"
-        out = out.withColumn(rc, F.row_number().over(w))
-        rank_cols.append(rc)
-    fused = sum(
-        (F.lit(1.0) / (F.lit(float(k)) + F.col(rc)) for rc in rank_cols),
-        start=F.lit(0.0),
-    )
-    return out.withColumn("rrf_score", F.round(fused, ndigits))
 
 
 def kcenter_select(

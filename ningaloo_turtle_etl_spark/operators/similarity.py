@@ -8,9 +8,8 @@
 - ``_hyperplanes`` / ``_bucket_expr`` — seeded random-hyperplane sign
   buckets as pure column expressions, the LSH blocking of
   ``dedup.embedding_near_dup_pairs``.
-- TF-IDF pairs, label centroids, hard negatives, embedding drift,
-  margin bitext mining, ranking metrics and deflated power-iteration
-  PCA (``pca_power_components``).
+- Label centroids, hard negatives, embedding drift, margin bitext
+  mining and deflated power-iteration PCA (``pca_power_components``).
 """
 
 from __future__ import annotations
@@ -81,83 +80,6 @@ def _bucket_expr(vec_col, planes: np.ndarray):
     for i, b in enumerate(bits):
         bucket = bucket + (b * F.lit(int(2**i)))
     return bucket
-
-
-def tfidf_cosine_pairs(
-    df: DataFrame,
-    threshold: float = 0.3,
-    max_df_frac: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """All-pairs document similarity by TF-IDF cosine over an inverted
-    index (the Bayardo et al. 2007 "Scaling Up All Pairs" shape): tokenize,
-    weight with the sklearn-smoothed idf, L2-normalize per document, then
-    self-join POSTING LISTS on the term and sum weight products per pair —
-    never a doc x doc cross join. Pairs are emitted once (id_a < id_b) with
-    cosine >= ``threshold``.
-
-    Scale levers, in order of importance:
-
-    - ``max_df_frac`` drops terms appearing in more than that fraction of
-      documents BEFORE the self-join. Posting-list self-join cost is
-      sum(df^2) over terms; stopword-grade terms dominate that sum while
-      contributing almost nothing to any pair's cosine (their idf ~ 1 vs
-      norm over the whole doc). This is the df-cut half of the canonical
-      prefix-filter; the full per-doc prefix filter would prune further at
-      the cost of a per-doc weight sort.
-    - The posting join carries only (term, id, w_norm) — 3 fixed-width
-      columns, payload-free; document text never enters the shuffle.
-    - The pair aggregate is a plain hash agg on (id_a, id_b); candidate
-      count is bounded by sum(df^2) of SURVIVING terms.
-
-    Cross-engine determinism: weights are rounded to 9 dp before the
-    product-sum and the cosine to 6 dp after, absorbing last-ulp ln/sqrt
-    differences (same policy as tfidf_top_terms)."""
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    pairs = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
-        )
-        .groupBy("id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    docfreq = pairs.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
-    idf = F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + F.lit(1.0)
-    weighted = (
-        pairs.join(docfreq, on="term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "id",
-            "term",
-            (F.col("tf") * idf).alias("w"),
-            (F.col("df") / F.col("n_docs")).alias("df_frac"),
-        )
-    )
-    # L2 norm over ALL the doc's terms (cosine stays exact); the df cut
-    # applies only to which terms may generate candidates.
-    norm = weighted.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("l2"))
-    posting = (
-        weighted.filter(F.col("df_frac") <= float(max_df_frac))
-        .join(norm, on="id")
-        .select("term", "id", F.round(F.col("w") / F.col("l2"), 9).alias("wn"))
-    )
-    a = posting.select(
-        "term", F.col("id").alias("id_a"), F.col("wn").alias("w_a")
-    )
-    b = posting.select(
-        "term", F.col("id").alias("id_b"), F.col("wn").alias("w_b")
-    )
-    return (
-        a.join(b, on="term")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.round(F.sum(F.col("w_a") * F.col("w_b")), 6).alias("cosine"))
-        .filter(F.col("cosine") >= float(threshold))
-    )
 
 
 def label_centroids(
@@ -452,101 +374,6 @@ def _recenter_micro(s: int, n: int) -> int:
     oracle idiom) by
     tests/test_llm_ops.py::test_recenter_micro_exact_past_double_cliff."""
     return (2 * int(s) + int(n)) // (2 * int(n))
-
-
-def ranking_metrics(
-    ranked: DataFrame,
-    labels: DataFrame,
-    k: int = 10,
-    query_col: str = "query_id",
-    cand_col: str = "vec_id",
-    rank_col: str = "rank",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
-    """Retrieval-quality metrics over a ranked candidate list — the
-    evaluation loop every embedding/ANN/CF stage needs: per query,
-    NDCG@k, precision@k, MRR, and hit count, with relevance = "candidate
-    shares the query's label" and the corpus-wide relevant count feeding
-    the ideal DCG.
-
-    Determinism: the 1/log2(rank+1) discount weights are INTEGER NANO
-    LITERALS precomputed in Python (rank <= k, so there are k of them) —
-    no engine ever calls log2, so no libm ulp can move a DCG; DCG and
-    IDCG are exact integer sums/lookups and meet only in one final
-    double division. Scale shape: one label join per side of the ranked
-    list (candidate lists are k-bounded per query), one label-grain
-    count for the relevant totals — nothing exceeds the ranked-list
-    grain."""
-    w = [int(round(1e9 / math.log2(i + 1))) for i in range(1, k + 1)]
-    cum = []
-    acc = 0
-    for x in w:
-        acc += x
-        cum.append(acc)
-    w_arr = F.array([F.lit(x) for x in w])
-    cum_arr = F.array([F.lit(x) for x in cum])
-    lab = labels.select(
-        F.col(id_col).alias("_lid"), F.col(label_col).alias("_lab")
-    )
-    r = (
-        ranked.select(
-            F.col(query_col).alias("query_id"),
-            F.col(cand_col).alias("cand_id"),
-            F.col(rank_col).cast("int").alias("rank"),
-        )
-        .join(
-            lab.select(
-                F.col("_lid").alias("query_id"), F.col("_lab").alias("_qlab")
-            ),
-            on="query_id",
-        )
-        .join(
-            lab.select(
-                F.col("_lid").alias("cand_id"), F.col("_lab").alias("_clab")
-            ),
-            on="cand_id",
-        )
-        .withColumn(
-            "rel", (F.col("_qlab") == F.col("_clab")).cast("int")
-        )
-    )
-    perq = r.groupBy("query_id").agg(
-        F.sum(F.col("rel") * F.element_at(w_arr, F.col("rank")))
-        .cast("long")
-        .alias("dcg_n"),
-        F.sum("rel").cast("long").alias("hits_at_k"),
-        F.min(F.when(F.col("rel") == 1, F.col("rank"))).alias("_first"),
-    )
-    counts = labels.groupBy(F.col(label_col).alias("_lab")).agg(
-        F.count(F.lit(1)).cast("long").alias("_nl")
-    )
-    out = (
-        perq.join(
-            lab.select(
-                F.col("_lid").alias("query_id"), F.col("_lab")
-            ),
-            on="query_id",
-        )
-        .join(F.broadcast(counts), on="_lab")
-        .withColumn("n_rel_corpus", (F.col("_nl") - 1).cast("long"))
-    )
-    idcg = F.element_at(
-        cum_arr, F.least(F.col("n_rel_corpus"), F.lit(k)).cast("int")
-    )
-    return out.select(
-        "query_id",
-        "n_rel_corpus",
-        "hits_at_k",
-        F.round(
-            F.col("hits_at_k") / F.lit(k).cast("double"), 6
-        ).alias("precision_at_k"),
-        F.round(F.lit(1).cast("double") / F.col("_first"), 6).alias("mrr"),
-        F.when(
-            F.col("n_rel_corpus") > 0,
-            F.round(F.col("dcg_n") / idcg.cast("double"), 6),
-        ).alias("ndcg_at_k"),
-    ).orderBy("query_id")
 
 
 def _np_round_half_up_i64(y: np.ndarray) -> np.ndarray:

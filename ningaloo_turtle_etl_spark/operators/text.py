@@ -218,415 +218,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint", F.substring(F.md5(normalized), 1, 16))
 
 
-def unigram_lm_scores(
-    df: DataFrame,
-    vocab_size: int = 10_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """CCNet-style LM quality scoring with a unigram model fit on the corpus
-    itself: per doc, the average negative log-likelihood of its tokens under
-    p(w) = count(w)/N for the ``vocab_size`` most frequent words, with an
-    out-of-vocabulary floor of 1/N. Low avg_nll ≈ ordinary, fluent text;
-    high ≈ rare-token soup — the "keep the head of the perplexity
-    distribution" filter of the CCNet pipeline (Wenzek et al. 2020), with
-    the n-gram LM reduced to its unigram backbone so the whole thing stays
-    in Catalyst.
-
-    Scale shape: token counts collapse map-side (partial agg) to a
-    vocab-sized table; the top-V cut is a TakeOrdered (count desc, word asc
-    — deterministic under ties); scoring joins the *broadcast* vocab and
-    re-aggregates per doc. The corpus never shuffles bodies; the two
-    doc-width shuffles are the token-count agg input (vocab-sized after
-    combine) and the per-doc score agg."""
-    toks = df.select(F.col(id_col), tokens(text_col).alias("toks"))
-    # explode_outer + filter ABOVE the generate (cannot be pushed below it):
-    # inner explode would re-build the token array in an inferred filter.
-    exploded = toks.select(
-        id_col, F.explode_outer("toks").alias("w")
-    ).filter(F.col("w").isNotNull())
-    counts = exploded.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    total = counts.agg(F.sum("c").alias("n"))
-    vocab = counts.orderBy(F.desc("c"), F.asc("w")).limit(vocab_size)
-    scored = (
-        exploded.join(F.broadcast(vocab), on="w", how="left")
-        .crossJoin(F.broadcast(total))
-        .withColumn(
-            "nll",
-            -F.log(
-                F.coalesce(F.col("c"), F.lit(1)).cast("double")
-                / F.col("n").cast("double")
-            ),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.round(F.avg("nll"), 6).alias("avg_nll"),
-    )
-
-
-def bigram_lm_scores(
-    df: DataFrame,
-    lambda_: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Interpolated bigram LM quality scoring — one step up the n-gram
-    ladder from ``unigram_lm_scores`` toward CCNet's KenLM filter (Wenzek
-    et al. 2020), still entirely in Catalyst: fit bigram and unigram
-    counts on the corpus itself, then score every token position 2..n
-    with the Jelinek-Mercer mixture
-
-        p(w | prev) = λ·c(prev,w)/c(prev·) + (1−λ)·(c(w)+1)/(N+V+1)
-
-    (c(prev·) = occurrences of prev as a non-final token; the add-one
-    unigram term carries the OOV mass so p > 0 always). Output: one row
-    per document that has ≥1 bigram — (id, n_bigrams, avg_nll); low
-    avg_nll ≈ fluent, predictable text, high ≈ shuffled/rare-token soup.
-
-    Scale shape: bigram extraction is a map-only pass fused with the scan
-    (no UDFs); the count tables collapse map-side (partial agg) to
-    bigram-type / vocab-sized frames; prefix counts re-aggregate the
-    bigram counts (narrow). The scoring joins carry no hint — bigram type
-    tables outgrow broadcast on real corpora, and AQE picks broadcast
-    exactly when they don't. The only doc-width shuffles are the pair agg
-    input (type-sized after combine) and the per-doc score agg. (A
-    barrier_col Generate here was A/B'd and REVERTED: for parquet-backed
-    text the per-element tokenizer re-evaluation is cheap and the extra
-    Generate cost slightly more than it saved — see
-    barrier_col above for when the cliff is real.)"""
-    toks = df.select(F.col(id_col), tokens(text_col).alias("toks"))
-    idx = F.when(
-        F.size("toks") >= 2, F.sequence(F.lit(0), F.size("toks") - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    pairs = toks.select(
-        id_col,
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at("toks", i + 1).alias("prev"),
-                    F.element_at("toks", i + 2).alias("w"),
-                ),
-            )
-        ).alias("pw"),
-    ).select(id_col, F.col("pw.prev").alias("prev"), F.col("pw.w").alias("w"))
-
-    bc = pairs.groupBy("prev", "w").agg(F.count(F.lit(1)).alias("bc"))
-    pc = bc.groupBy("prev").agg(F.sum("bc").alias("pc"))
-    exploded = toks.select(F.explode_outer("toks").alias("tok")).filter(
-        F.col("tok").isNotNull()
-    )
-    uc = exploded.groupBy("tok").agg(F.count(F.lit(1)).alias("uc"))
-    totals = uc.agg(
-        F.sum("uc").alias("n_total"), F.count(F.lit(1)).alias("v_size")
-    )
-
-    lam = float(lambda_)
-    scored = (
-        pairs.join(bc, on=["prev", "w"], how="left")
-        .join(pc, on="prev", how="left")
-        .join(uc.withColumnRenamed("tok", "w"), on="w", how="left")
-        .crossJoin(F.broadcast(totals))
-    )
-    p_bi = F.coalesce(F.col("bc"), F.lit(0)).cast("double") / F.col("pc").cast(
-        "double"
-    )
-    p_uni = (F.coalesce(F.col("uc"), F.lit(0)) + 1).cast("double") / (
-        F.col("n_total") + F.col("v_size") + 1
-    ).cast("double")
-    nll = -F.log(F.lit(lam) * p_bi + F.lit(1.0 - lam) * p_uni)
-    return scored.withColumn("nll", nll).groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.round(F.avg("nll"), 6).alias("avg_nll"),
-    )
-
-
-def perplexity_buckets(
-    df: DataFrame,
-    lambda_: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    exact: bool = True,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """CCNet-style head/middle/tail partitioning (Wenzek et al. 2020): score
-    every document with the corpus-fit Jelinek-Mercer bigram LM
-    (``bigram_lm_scores``), then split each language into perplexity
-    terciles — ``head`` = most fluent third (lowest avg NLL), ``tail`` =
-    least. Returns one row per document: (id, lang, n_bigrams, avg_nll,
-    bucket).
-
-    Bucketing is by per-language tercile CUT POINTS (a languages-sized
-    aggregate broadcast back), not an ``ntile`` window — CCNet's actual
-    recipe, and the scale-correct one: a per-lang ``ntile`` serializes each
-    language through one task, while the cut-point join keeps the corpus
-    side map-only. Docs exactly on a cut land in the lower bucket on both
-    engines because cuts and scores are both rounded to 6 decimals before
-    comparing. Bucket sizes are near-terciles, not exact thirds, when
-    scores tie across a cut.
-
-    ``exact=True`` uses Spark's exact interpolated ``percentile`` —
-    bit-compatible with DuckDB ``quantile_cont`` (the oracle row), but it
-    buffers each language's scores in its agg group; pass ``exact=False``
-    at real scale for the mergeable ``approx_percentile`` sketch (same
-    plan shape, approximate cuts). Docs with <2 tokens have no bigram
-    score and are excluded, as in ``bigram_lm_scores``."""
-    scores = bigram_lm_scores(df, lambda_, text_col, id_col)
-    labeled = df.select(F.col(id_col), F.col(lang_col)).join(
-        scores, on=id_col, how="inner"
-    )
-    pct = (
-        (lambda q: F.percentile("avg_nll", F.lit(q)))
-        if exact
-        else (
-            lambda q: F.approx_percentile(
-                "avg_nll", F.lit(q), F.lit(accuracy)
-            )
-        )
-    )
-    cuts = labeled.groupBy(lang_col).agg(
-        F.round(pct(1.0 / 3.0), 6).alias("_c1"),
-        F.round(pct(2.0 / 3.0), 6).alias("_c2"),
-    )
-    return (
-        labeled.join(F.broadcast(cuts), on=lang_col, how="inner")
-        .withColumn(
-            "bucket",
-            F.when(F.col("avg_nll") <= F.col("_c1"), F.lit("head"))
-            .when(F.col("avg_nll") <= F.col("_c2"), F.lit("middle"))
-            .otherwise(F.lit("tail")),
-        )
-        .select(id_col, lang_col, "n_bigrams", "avg_nll", "bucket")
-    )
-
-
-def tfidf_top_terms(
-    df: DataFrame,
-    n_top: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-``n_top`` terms per document by smoothed TF-IDF
-    (idf = ln((N+1)/(df+1)) + 1, the sklearn smoothing) — the classic
-    keyword-extraction / representation primitive. All relational: the
-    (doc, token, tf) pairs come from an explode + partial-agg pass, the
-    document frequency is a re-aggregation of those pairs (each pair is
-    distinct by construction — no countDistinct), and N broadcasts as a
-    one-row dim. Catalyst recomputes the pair subplan for the docfreq
-    branch rather than materializing it (two corpus scans; persist the
-    pair frame via operators.cache to trade the second scan for storage,
-    the same knob as DSIR's share_scan). The docfreq dim broadcasts, and
-    the final per-doc top-k runs under Spark's WindowGroupLimit pushdown
-    (rank filter applied before the window shuffle — pinned in tests).
-    Scores are rounded to 6 dp BEFORE ranking (ties break by term) so the
-    selected terms are reproducible cross-engine despite last-ulp ln()
-    differences.
-
-    Output: (id, term, tfidf, rank)."""
-    from pyspark.sql.window import Window
-
-    pairs = (
-        df.select(F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    docfreq = pairs.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
-    idf = F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + F.lit(1.0)
-    scored = (
-        pairs.join(docfreq, on="term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            F.col(id_col),
-            "term",
-            F.round(F.col("tf") * idf, 6).alias("tfidf"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(n_top))
-    )
-
-
-def zipf_fit(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Zipf's-law fit per corpus slice: OLS of ln(freq) on ln(rank) over
-    the slice's word-frequency table (rank 1 = most frequent; ties broken
-    by word so the ranking is total and engine-independent). A healthy
-    natural-language slice sits near slope ≈ −1; machine-generated or
-    template text bends the curve — the slope and its r² are cheap
-    corpus-health gauges to trend per source/snapshot.
-
-    Returns one row per slice: (group, n_types, n_tokens, zipf_slope,
-    zipf_intercept, fit_r2).
-
-    Numerics: each ln is rounded to integer MICRO-units before summing, so
-    every OLS moment is an exact integer and summation order cannot move
-    the result (the micro-unit factors cancel in slope/r²; the intercept
-    divides back out). Scale shape: corpus explodes once to (group, word)
-    with map-side combine; the rank window sorts the VOCABULARY of each
-    slice (millions of rows at 100 TB, not trillions); moments are one
-    vocabulary-sized aggregation."""
-    from pyspark.sql.window import Window
-
-    wf = (
-        df.select(
-            F.col(group_col).alias("grp"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
-        )
-        .groupBy("grp", "word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    w = Window.partitionBy("grp").orderBy(F.desc("freq"), F.asc("word"))
-    ranked = wf.withColumn("rank", F.row_number().over(w)).select(
-        "grp",
-        "freq",
-        F.round(F.log(F.col("rank").cast("double")) * 1e6, 0)
-        .cast("long")
-        .alias("xi"),
-        F.round(F.log(F.col("freq").cast("double")) * 1e6, 0)
-        .cast("long")
-        .alias("yi"),
-    )
-    m = ranked.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum("freq").alias("n_tokens"),
-        F.sum("xi").alias("sx"),
-        F.sum("yi").alias("sy"),
-        F.sum(F.col("xi") * F.col("xi")).alias("sxx"),
-        F.sum(F.col("xi") * F.col("yi")).alias("sxy"),
-        F.sum(F.col("yi") * F.col("yi")).alias("syy"),
-    )
-    n = F.col("n_types").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxx, sxy, syy = (
-        F.col("sxx").cast("double"),
-        F.col("sxy").cast("double"),
-        F.col("syy").cast("double"),
-    )
-    cov = n * sxy - sx * sy
-    varx = n * sxx - sx * sx
-    vary = n * syy - sy * sy
-    slope = F.when(varx > 0, cov / varx)
-    return m.select(
-        F.col("grp").alias(group_col),
-        "n_types",
-        "n_tokens",
-        F.round(slope, 6).alias("zipf_slope"),
-        F.round(
-            F.when(varx > 0, (sy - slope * sx) / (n * F.lit(1e6))), 6
-        ).alias("zipf_intercept"),
-        F.round(
-            F.when((varx > 0) & (vary > 0), cov * cov / (varx * vary)), 6
-        ).alias("fit_r2"),
-    )
-
-
-def heaps_fit(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Heaps'-law fit per corpus slice: V(n) = K·n^β estimated by OLS of
-    ln(cumulative distinct types) on ln(cumulative tokens) along the
-    slice's doc-id order. β far from the 0.4-0.6 natural-language band is
-    another corpus-health tripwire (template text saturates early, id-like
-    junk never saturates) — the growth-curve complement to ``zipf_fit``.
-
-    Returns (group, n_docs, total_tokens, total_types, heaps_beta,
-    heaps_log_k, fit_r2).
-
-    The cumulative curve needs no per-token scan state: each word
-    contributes a type exactly at its FIRST doc (one (group, word)-keyed
-    min), so per-doc new-type counts aggregate map-side and the cumsum
-    window walks doc-sized rows per group. At 100 TB the per-group window
-    is the sequential part — sample log-spaced checkpoint docs first if a
-    single slice holds billions of docs. Same integer micro-unit moments
-    as zipf_fit: summation order cannot move the fit."""
-    from pyspark.sql.window import Window
-
-    toks = df.select(
-        F.col(group_col).alias("grp"),
-        F.col(id_col).alias("doc"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
-    )
-    per_doc_tokens = toks.groupBy("grp", "doc").agg(
-        F.count(F.lit(1)).alias("n_toks")
-    )
-    new_types = (
-        toks.groupBy("grp", "word")
-        .agg(F.min("doc").alias("doc"))
-        .groupBy("grp", "doc")
-        .agg(F.count(F.lit(1)).alias("n_new"))
-    )
-    w = (
-        Window.partitionBy("grp")
-        .orderBy("doc")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    curve = (
-        per_doc_tokens.join(new_types, on=["grp", "doc"], how="left")
-        .select(
-            "grp",
-            "doc",
-            F.sum("n_toks").over(w).alias("cum_tokens"),
-            F.sum(F.coalesce("n_new", F.lit(0))).over(w).alias("cum_types"),
-        )
-        .select(
-            "grp",
-            "cum_tokens",
-            "cum_types",
-            F.round(F.log(F.col("cum_tokens").cast("double")) * 1e6, 0)
-            .cast("long")
-            .alias("xi"),
-            F.round(F.log(F.col("cum_types").cast("double")) * 1e6, 0)
-            .cast("long")
-            .alias("yi"),
-        )
-    )
-    m = curve.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.max("cum_tokens").alias("total_tokens"),
-        F.max("cum_types").alias("total_types"),
-        F.sum("xi").alias("sx"),
-        F.sum("yi").alias("sy"),
-        F.sum(F.col("xi") * F.col("xi")).alias("sxx"),
-        F.sum(F.col("xi") * F.col("yi")).alias("sxy"),
-        F.sum(F.col("yi") * F.col("yi")).alias("syy"),
-    )
-    n = F.col("n_docs").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxx, sxy, syy = (
-        F.col("sxx").cast("double"),
-        F.col("sxy").cast("double"),
-        F.col("syy").cast("double"),
-    )
-    cov = n * sxy - sx * sy
-    varx = n * sxx - sx * sx
-    vary = n * syy - sy * sy
-    slope = F.when(varx > 0, cov / varx)
-    return m.select(
-        F.col("grp").alias(group_col),
-        "n_docs",
-        "total_tokens",
-        "total_types",
-        F.round(slope, 6).alias("heaps_beta"),
-        F.round(
-            F.when(varx > 0, (sy - slope * sx) / (n * F.lit(1e6))), 6
-        ).alias("heaps_log_k"),
-        F.round(
-            F.when((varx > 0) & (vary > 0), cov * cov / (varx * vary)), 6
-        ).alias("fit_r2"),
-    )
-
-
 def token_entropy(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -994,275 +585,3 @@ def corpus_bleu_rouge(
         ),
         F.round(bleu, 6).alias("bleu"),
     )
-
-
-def kneser_ney_bigram_scores(
-    df: DataFrame,
-    discount: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Kneser-Ney bigram LM scoring — the smoothing that made n-gram LMs
-    competitive (Kneser & Ney 1995; the KenLM default CCNet actually
-    ships): absolute-discount the bigram counts and back off to the
-    CONTINUATION count — how many distinct left contexts a word follows —
-    not its raw frequency. The canonical example: "Francisco" is frequent
-    but follows only "San", so its continuation mass is tiny and KN
-    (correctly) refuses to predict it after novel contexts, where raw-
-    frequency backoff (``bigram_lm_scores``'s JM mixture) over-predicts
-    it.
-
-        p_KN(w|prev) = max(c(prev,w) − D, 0)/c(prev·)
-                       + D·N1+(prev·)/c(prev·) · p_cont(w)
-        p_cont(w)    = (N1+(·w) + 1) / (B + V)
-
-    with D = ``discount``, N1+(prev·) = distinct continuations of prev,
-    N1+(·w) = distinct left contexts of w, B = distinct bigram types,
-    V = vocab size; the +1/(B+V) smoothing keeps p_cont positive for OOV
-    words (documented deviation from the exact textbook form, which is
-    undefined there). A prev with no continuation mass (final-position-
-    only token) backs off entirely to p_cont. Output per document with
-    ≥1 bigram: (id, n_bigrams, avg_nll), 6dp.
-
-    Scale shape: identical to ``bigram_lm_scores`` — map-only bigram
-    extraction fused with the scan; every KN statistic (bc, pc, N1+
-    both ways, B, V) is an aggregate of the bigram-TYPE table, so the
-    extra sophistication over JM costs two more type-sized aggregates
-    and nothing at corpus grain."""
-    if not 0 < discount < 1:
-        raise ValueError("discount must be in (0, 1)")
-    toks = df.select(F.col(id_col), tokens(text_col).alias("toks"))
-    idx = F.when(
-        F.size("toks") >= 2, F.sequence(F.lit(0), F.size("toks") - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    pairs = toks.select(
-        id_col,
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at("toks", i + 1).alias("prev"),
-                    F.element_at("toks", i + 2).alias("w"),
-                ),
-            )
-        ).alias("pw"),
-    ).select(id_col, F.col("pw.prev").alias("prev"), F.col("pw.w").alias("w"))
-
-    bc = pairs.groupBy("prev", "w").agg(F.count(F.lit(1)).alias("bc"))
-    pstats = bc.groupBy("prev").agg(
-        F.sum("bc").alias("pc"), F.count(F.lit(1)).alias("n1p")
-    )
-    cont = bc.groupBy("w").agg(F.count(F.lit(1)).alias("cont"))
-    vocab = (
-        toks.select(F.explode_outer("toks").alias("tok"))
-        .filter(F.col("tok").isNotNull())
-        .agg(F.countDistinct("tok").alias("v_size"))
-    )
-    totals = bc.agg(F.count(F.lit(1)).alias("b_types")).crossJoin(vocab)
-
-    d = float(discount)
-    scored = (
-        pairs.join(bc, on=["prev", "w"], how="left")
-        .join(pstats, on="prev", how="left")
-        .join(cont, on="w", how="left")
-        .crossJoin(F.broadcast(totals))
-    )
-    p_cont = (F.coalesce(F.col("cont"), F.lit(0)) + 1).cast("double") / (
-        F.col("b_types") + F.col("v_size")
-    ).cast("double")
-    pc = F.col("pc").cast("double")
-    p_kn = F.when(
-        F.coalesce(F.col("pc"), F.lit(0)) > 0,
-        F.greatest(
-            F.coalesce(F.col("bc"), F.lit(0)).cast("double") - F.lit(d),
-            F.lit(0.0),
-        )
-        / pc
-        + F.lit(d) * F.col("n1p").cast("double") / pc * p_cont,
-    ).otherwise(p_cont)
-    return (
-        scored.withColumn("nll", -F.log(p_kn))
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.avg("nll"), 6).alias("avg_nll"),
-        )
-    )
-
-
-def good_turing_counts(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_r: int = 10,
-    ngram_n: int = 1,
-) -> DataFrame:
-    """Good-Turing frequency re-estimation over the corpus ``ngram_n``-
-    gram counts: the count-of-counts table N_r (how many distinct types
-    occur exactly r times) and the Turing-adjusted count
-    r* = (r+1)·N_{r+1}/N_r — the smoothing family (Good 1953) under
-    Katz backoff and the sanity check for every LM smoothing choice:
-    if r* ≪ r at small r, the corpus has a heavy unseen tail and
-    unsmoothed MLE counts will overfit. Row r=0 reports the unseen mass
-    p0 = N_1/N (the probability the next token is novel).
-
-    Rows r = 0..``max_r``; N_{r+1} missing → r_star NULL (the classic
-    'smooth N_r before the cliff' caveat, left to the caller).
-    Determinism: everything is exact-integer counts with one final
-    division per row. Returns (r, n_r, r_star, gt_mass), 6dp — gt_mass
-    is N_r·r/N, the raw probability mass sitting at count r.
-
-    Scale shape: one token explode → token-grain count (map-side
-    combine) → count-grain count; the output is ≤ max_r+1 rows."""
-    if max_r < 1 or ngram_n < 1:
-        raise ValueError("max_r and ngram_n must be >= 1")
-    toks = tokens(F.lower(F.col(text_col)))
-    if ngram_n == 1:
-        grams = toks
-    else:
-        grams = F.when(
-            F.size(toks) >= ngram_n, sliding_ngrams(toks, ngram_n)
-        ).otherwise(F.expr("CAST(array() AS ARRAY<STRING>)"))
-    tok = docs.select(F.explode(grams).alias("tk"))
-    tf = tok.groupBy("tk").agg(F.count(F.lit(1)).cast("long").alias("r"))
-    nr = tf.groupBy("r").agg(F.count(F.lit(1)).cast("long").alias("n_r"))
-    from pyspark import StorageLevel
-
-    nr = nr.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        total = nr.agg(
-            F.sum(F.col("r") * F.col("n_r")).cast("long").alias("n_total")
-        )
-        nxt = nr.select(
-            (F.col("r") - 1).alias("r"), F.col("n_r").alias("n_r1")
-        )
-        out = (
-            nr.filter(F.col("r") <= int(max_r))
-            .join(nxt, on="r", how="left")
-            .crossJoin(F.broadcast(total))
-            .select(
-                "r",
-                "n_r",
-                F.round(
-                    (F.col("r") + 1) * F.col("n_r1") / F.col("n_r"), 6
-                ).alias("r_star"),
-                F.round(
-                    F.col("r") * F.col("n_r") / F.col("n_total"), 6
-                ).alias("gt_mass"),
-            )
-        )
-        one = nr.filter(F.col("r") == 1).select(F.col("n_r").alias("n1"))
-        zero = (
-            one.crossJoin(total)
-            .select(
-                F.lit(0).cast("long").alias("r"),
-                F.lit(0).cast("long").alias("n_r"),
-                F.round(F.col("n1") / F.col("n_total"), 6).alias("r_star"),
-                F.round(F.col("n1") / F.col("n_total"), 6).alias("gt_mass"),
-            )
-        )
-        result = zero.unionByName(out).orderBy("r")
-        rows = result.collect()
-    finally:
-        nr.unpersist()
-    return docs.sparkSession.createDataFrame(
-        rows, "r long, n_r long, r_star double, gt_mass double"
-    ).orderBy("r")
-
-
-RAKE_STOPWORDS: tuple[str, ...] = ENGLISH_STOPWORDS + (
-    "as", "at", "by", "an", "be", "or", "are", "with", "from", "this",
-    "but", "not", "had", "has", "have", "were", "which", "their", "they",
-)
-
-
-def rake_keywords(
-    docs: DataFrame,
-    text_col: str = "text",
-    top_n: int = 50,
-    max_phrase_len: int = 4,
-) -> DataFrame:
-    """RAKE keyword extraction (Rose et al. 2010) over the whole corpus:
-    candidate phrases are maximal stopword-free token runs (text split
-    at stopwords and punctuation); each word scores degree/frequency
-    (degree = Σ length of phrases containing it — co-occurrence reach;
-    frequency = how often it appears in candidates), and a phrase scores
-    the sum of its word scores — favoring multi-word technical phrases
-    over frequent single words. The corpus-level keyword surfacer that
-    needs no training, the classic complement to TF-IDF's per-doc terms.
-
-    Phrases longer than ``max_phrase_len`` words are dropped (RAKE's
-    run-on guard). Scoring is in integer micro-units: word score =
-    round(1e6·deg/freq), phrase score = exact-integer sum — the usual
-    cross-engine convention. Returns the ``top_n`` phrases by
-    (score desc, phrase): (phrase, n_occurrences, n_words, rake_score).
-
-    Scale shape: phrase splitting is one regex pass per document
-    (map-only); word stats aggregate at word grain with map-side
-    combine; the phrase-score join explodes phrases to words and
-    re-aggregates at phrase grain — all fixed-width after the explode;
-    TakeOrdered serves the final top-N."""
-    if top_n < 1:
-        raise ValueError("top_n must be >= 1")
-    stop_pat = "|".join(RAKE_STOPWORDS)
-    # split at punctuation OR standalone stopwords (case-insensitive)
-    delim = rf"(?i)([^a-z0-9\s]+|\b(?:{stop_pat})\b)"
-    phrases = docs.select(
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.col(text_col)), delim, "|"), r"\|")
-        ).alias("p")
-    ).select(F.trim(F.regexp_replace("p", r"\s+", " ")).alias("phrase"))
-    phrases = phrases.filter(F.col("phrase") != "").withColumn(
-        "words", F.split("phrase", " ")
-    ).withColumn("n_words", F.size("words")).filter(
-        F.col("n_words") <= int(max_phrase_len)
-    )
-    from pyspark import StorageLevel
-
-    phrases = phrases.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        wstats = (
-            phrases.select(
-                F.explode("words").alias("w"), F.col("n_words").alias("plen")
-            )
-            .groupBy("w")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("freq"),
-                F.sum("plen").cast("long").alias("deg"),
-            )
-            .withColumn(
-                "wscore",
-                F.round(F.lit(1e6) * F.col("deg") / F.col("freq"), 0).cast(
-                    "long"
-                ),
-            )
-        )
-        pgrid = phrases.groupBy("phrase").agg(
-            F.count(F.lit(1)).cast("long").alias("n_occurrences"),
-            F.max("n_words").alias("n_words"),
-        )
-        pw = pgrid.select(
-            "phrase", F.posexplode(F.split("phrase", " ")).alias("pos", "w")
-        )
-        scored = (
-            pw.join(wstats.select("w", "wscore"), on="w")
-            .groupBy("phrase")
-            .agg(F.sum("wscore").cast("long").alias("sm"))
-        )
-        out = (
-            pgrid.join(scored, on="phrase")
-            .select(
-                "phrase",
-                "n_occurrences",
-                "n_words",
-                F.round(F.col("sm") / 1e6, 6).alias("rake_score"),
-            )
-            .orderBy(F.desc("rake_score"), F.asc("phrase"))
-            .limit(int(top_n))
-        )
-        rows = out.collect()
-    finally:
-        phrases.unpersist()
-    return docs.sparkSession.createDataFrame(
-        rows,
-        "phrase string, n_occurrences long, n_words int, rake_score double",
-    ).orderBy(F.desc("rake_score"), F.asc("phrase"))

@@ -1,97 +1,13 @@
 """DuckDB oracle SQL generators for the vector registered queries.
 
-- ``brute_oracle_sql`` / ``ndcg_oracle_sql``: exact cosine top-k and the
-  retrieval metrics over it. Dot products and norms are left-to-right
-  folds over identical doubles in both engines; only the displayed
-  cosine is rounded (6 dp), matching the Spark side.
-- ``pq_train_oracle_sql`` / ``trained_ivf_pq_oracle_sql``: the trained
-  IVF-PQ loop of ``operators/quantize.py``, whose training trajectories
-  unroll into chained CTEs in exact integer micro arithmetic, so every
-  centroid, cell, code and rank replays bit-for-bit. No generator reads
-  a parameter file.
+``pq_train_oracle_sql`` / ``trained_ivf_pq_oracle_sql`` replay the trained
+IVF-PQ loop of ``operators/quantize.py``, whose training trajectories
+unroll into chained CTEs in exact integer micro arithmetic, so every
+centroid, cell, code and rank replays bit-for-bit. No generator reads a
+parameter file.
 """
 
 from __future__ import annotations
-
-
-#: Query-set cut of the brute-force oracle: vec_id < 5 probes the full
-#: embeddings table.
-QUERY_CUT = 5
-
-
-def brute_oracle_sql(k: int = 3) -> str:
-    """Exact brute-force cosine top-k (the embedding_cosine_topk shape,
-    parameterized k) — the ranked list ndcg_oracle_sql grades."""
-    dot = (
-        "list_sum(list_transform(list_zip(CAST(c.embedding AS DOUBLE[]), "
-        "CAST(q.embedding AS DOUBLE[])), x -> x[1]*x[2]))"
-    )
-    normsq = "list_sum(list_transform(CAST({0}.embedding AS DOUBLE[]), x -> x*x))"
-    return f"""
-    WITH pairs AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-               ROUND({dot} / (sqrt({normsq.format('c')}) * sqrt({normsq.format('q')})), 6)
-                   AS cosine
-        FROM embeddings c, embeddings q
-        WHERE q.vec_id < {QUERY_CUT} AND c.vec_id <> q.vec_id
-    )
-    SELECT query_id, vec_id, cosine, rank FROM (
-        SELECT query_id, vec_id, cosine,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY cosine DESC, vec_id) AS INT) AS rank
-        FROM pairs
-    ) WHERE rank <= {k}
-    """
-
-
-def ndcg_oracle_sql(k: int = 10) -> str:
-    """ranking_ndcg_eval — retrieval metrics over the brute-force cosine
-    top-k with relevance = shared label. The 1/log2(rank+1) discount
-    weights are the SAME integer-nano literals the operator embeds
-    (precomputed in Python; neither engine calls log2), so DCG/IDCG are
-    exact integer arithmetic meeting in one final double division."""
-    import math
-
-    w = [int(round(1e9 / math.log2(i + 1))) for i in range(1, k + 1)]
-    cum, acc = [], 0
-    for x in w:
-        acc += x
-        cum.append(acc)
-    w_lit = "[" + ", ".join(str(x) for x in w) + "]"
-    cum_lit = "[" + ", ".join(str(x) for x in cum) + "]"
-    return f"""
-    WITH ranked AS ({brute_oracle_sql(k=k)}),
-    lab AS (SELECT vec_id, label FROM embeddings),
-    cnt AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS nl
-            FROM lab GROUP BY label),
-    j AS (
-        SELECT r.query_id, r.rank,
-               CASE WHEN ql.label = cl.label THEN 1 ELSE 0 END AS rel
-        FROM ranked r
-        JOIN lab ql ON r.query_id = ql.vec_id
-        JOIN lab cl ON r.vec_id = cl.vec_id
-    ),
-    perq AS (
-        SELECT query_id,
-               CAST(SUM(rel * ({w_lit})[rank]) AS BIGINT) AS dcg_n,
-               CAST(SUM(rel) AS BIGINT) AS hits_at_k,
-               MIN(CASE WHEN rel = 1 THEN rank END) AS first_rel
-        FROM j GROUP BY query_id
-    )
-    SELECT p.query_id,
-           CAST(cnt.nl - 1 AS BIGINT) AS n_rel_corpus,
-           p.hits_at_k,
-           ROUND(p.hits_at_k / CAST({k} AS DOUBLE), 6) AS precision_at_k,
-           ROUND(CAST(1 AS DOUBLE) / p.first_rel, 6) AS mrr,
-           CASE WHEN cnt.nl - 1 > 0 THEN
-               ROUND(p.dcg_n / CAST(({cum_lit})[least(cnt.nl - 1,
-                                                      {k})] AS DOUBLE), 6)
-           END AS ndcg_at_k
-    FROM perq p
-    JOIN lab ql ON p.query_id = ql.vec_id
-    JOIN cnt ON ql.label = cnt.label
-    ORDER BY p.query_id
-    """
 
 
 # --- distributed PQ/IVF TRAINING oracles (r12: the train→serve loop) ---------

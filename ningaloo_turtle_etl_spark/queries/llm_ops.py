@@ -1,6 +1,7 @@
 """Training-data pipeline queries over ``documents`` / ``embeddings`` —
-dedup, text analysis, similarity search. Since r04 everything here is
-oracle-checked: MinHash/SimHash ride the cross-engine md5 hash family,
+dedup, text quality and curation, embedding similarity, the trained IVF-PQ
+loop and multimodal features. Every query here is oracle-checked:
+MinHash/SimHash ride the cross-engine md5 hash family,
 the trained IVF-PQ loop replays its whole integer-micro trajectory, and
 the multimodal fake codec replays byte-for-byte in SQL; no query reads a
 parameter file. Independent Python reference implementations in
@@ -400,7 +401,6 @@ def simhash_near_dups(spark, sf_dir):
 
 
 from ningaloo_turtle_etl_spark.queries.ann_oracles import (
-    ndcg_oracle_sql,
     pq_train_oracle_sql,
     trained_ivf_pq_oracle_sql,
 )
@@ -453,136 +453,6 @@ def corpus_clean_pipeline(spark, sf_dir):
         & (F.col("lang").isin("en", "de", "fr", "es"))
     )
     return cleaned.select("doc_id", "lang", "n_words", "n_chars")
-
-
-@register(
-    "sketch_profile",
-    """
-    SELECT event_type,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-           TRUE AS hll_within_3rsd,
-           TRUE AS p50_within_rank_eps,
-           TRUE AS p95_within_rank_eps
-    FROM events GROUP BY event_type ORDER BY event_type
-    """,
-)
-def sketch_profile(spark, sf_dir):
-    """One-pass sketch profile per event_type: HLL++ distinct users +
-    Greenwald-Khanna value quantiles — the bounded-state form of the
-    profiling questions that need full shuffles when asked exactly. The
-    native estimates are engine-specific (DuckDB cannot replay HLL++/GK
-    sketch state), so the registered row outputs what IS cross-engine
-    checkable: the exact calibration column plus error-bound booleans —
-    |hll − exact|/exact ≤ 3·rsd, and each GK quantile landing inside the
-    exact percentile envelope at ±2% rank (orders of magnitude wider than
-    GK's n/accuracy rank guarantee). The oracle asserts the bounds as
-    literal TRUE, so a sketch regression flips a boolean and fails the
-    value hash — this was the registry's only no-oracle row r3-r7. Raw
-    estimate values remain available via `operators/sketches.py
-    approx_distinct / approx_quantiles`; error tracking vs exact is also
-    pinned in tests/test_sketches.py."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        approx_distinct,
-        approx_quantiles,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    d = approx_distinct(ev, "user_id", by=["event_type"], rsd=0.02)
-    q = approx_quantiles(
-        ev, "value", probabilities=(0.5, 0.95), accuracy=10_000, by=["event_type"]
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users"),
-        F.expr("percentile(value, 0.48D)").alias("_p50_lo"),
-        F.expr("percentile(value, 0.52D)").alias("_p50_hi"),
-        F.expr("percentile(value, 0.93D)").alias("_p95_lo"),
-        F.expr("percentile(value, 0.97D)").alias("_p95_hi"),
-    )
-    out = d.join(q, on="event_type").join(exact, on="event_type")
-    est = F.col("approx_distinct_user_id").cast("double")
-    ex = F.col("exact_users").cast("double")
-    p50 = F.col("approx_quantiles_value")[0]
-    p95 = F.col("approx_quantiles_value")[1]
-    return out.select(
-        "event_type",
-        "exact_users",
-        (F.abs(est - ex) / ex <= F.lit(0.06)).alias("hll_within_3rsd"),
-        p50.between(F.col("_p50_lo"), F.col("_p50_hi")).alias(
-            "p50_within_rank_eps"
-        ),
-        p95.between(F.col("_p95_lo"), F.col("_p95_hi")).alias(
-            "p95_within_rank_eps"
-        ),
-    ).orderBy("event_type")
-
-
-@register(
-    "portable_sketch_profile",
-    """
-    WITH d AS (
-      SELECT DISTINCT l_returnflag AS flag,
-             ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT AS h32
-      FROM lineitem
-    ),
-    b AS (
-      SELECT flag, h32 // 16777216 AS bucket,
-             CASE WHEN h32 % 16777216 = 0 THEN 25
-                  ELSE 25 - length(bin(h32 % 16777216)) END AS rho
-      FROM d
-    ),
-    r AS (SELECT flag, bucket, MAX(rho) AS mr FROM b GROUP BY flag, bucket),
-    h AS (
-      SELECT flag,
-             SUM(power(2.0, -mr)) + (256 - COUNT(*)) AS sum_inv,
-             256 - COUNT(*) AS zeros
-      FROM r GROUP BY flag
-    ),
-    est AS (
-      SELECT flag,
-             CASE WHEN 47072.71267120224 / sum_inv <= 640.0 AND zeros > 0
-                  THEN 256.0 * ln(256.0 / zeros)
-                  ELSE 47072.71267120224 / sum_inv END AS hll_raw
-      FROM h
-    ),
-    k AS (
-      SELECT flag, h32,
-             row_number() OVER (PARTITION BY flag ORDER BY h32) AS rn,
-             COUNT(*) OVER (PARTITION BY flag) AS cnt
-      FROM d
-    ),
-    km AS (
-      SELECT flag,
-             CASE WHEN cnt < 256 THEN CAST(cnt AS DOUBLE)
-                  ELSE 1095216660480.0 / h32 END AS kmv_raw
-      FROM k WHERE rn = CASE WHEN cnt < 256 THEN cnt ELSE 256 END
-    ),
-    ex AS (
-      SELECT l_returnflag AS flag, COUNT(DISTINCT l_orderkey) AS exact_distinct
-      FROM lineitem GROUP BY 1
-    )
-    SELECT ex.flag AS l_returnflag, exact_distinct,
-           round(est.hll_raw, 4) AS hll_estimate,
-           round(km.kmv_raw, 4) AS kmv_estimate,
-           round(abs(round(est.hll_raw, 4) - exact_distinct)
-                 / exact_distinct, 4) AS hll_rel_err,
-           round(abs(round(km.kmv_raw, 4) - exact_distinct)
-                 / exact_distinct, 4) AS kmv_rel_err
-    FROM ex JOIN est ON ex.flag = est.flag JOIN km ON ex.flag = km.flag
-    """,
-)
-def portable_sketch_profile(spark, sf_dir):
-    """Engine-portable sketch calibration: exact distinct orders per return
-    flag vs md5-based HLL (m=256) and KMV (k=256) estimates with relative
-    errors. Unlike sketch_profile's built-in HLL++/GK (engine-specific →
-    rows-only), every intermediate here is an integer or exact dyadic
-    rational, so DuckDB reproduces the estimates bit-for-bit — this is the
-    sketch family's full-oracle row. Sketch state is mergeable
-    (registers/min-hashes merge by max/min; tests/test_sketches.py) and
-    retry-stable, which is what a 100 TB profiling pass needs."""
-    from ningaloo_turtle_etl_spark.operators.sketches import portable_sketch_report
-
-    li = load_table(spark, "lineitem", sf_dir)
-    return portable_sketch_report(li, "l_orderkey", by=["l_returnflag"])
 
 
 @register(
@@ -1540,96 +1410,6 @@ def incremental_dedup(spark, sf_dir):
 
 
 @register(
-    "lm_quality_scores",
-    rf"""
-    WITH t AS (
-        SELECT doc_id, unnest({_TOKENS}) AS w
-        FROM (SELECT doc_id, lower(text) AS text FROM documents)
-    ),
-    cnt AS (SELECT w, COUNT(*) AS c FROM t GROUP BY w),
-    tot AS (SELECT CAST(SUM(c) AS DOUBLE) AS n FROM cnt),
-    vocab AS (SELECT w, c FROM cnt ORDER BY c DESC, w ASC LIMIT 20),
-    scored AS (
-        SELECT t.doc_id,
-               -ln(CAST(COALESCE(v.c, 1) AS DOUBLE) / tot.n) AS nll
-        FROM t LEFT JOIN vocab v USING (w), tot
-    )
-    SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           ROUND(AVG(nll), 6) AS avg_nll
-    FROM scored GROUP BY doc_id
-    """,
-)
-def lm_quality_scores(spark, sf_dir):
-    """CCNet-style perplexity filter, unigram backbone: score every doc by
-    average negative log-likelihood under a corpus-fit unigram LM (top-20
-    vocab here so the OOV floor path is exercised on the synthetic corpus).
-    Token counts collapse map-side to a vocab-sized table; scoring is a
-    broadcast join + per-doc agg — no body shuffle."""
-    from ningaloo_turtle_etl_spark.operators.text import unigram_lm_scores
-
-    docs = load_table(spark, "documents", sf_dir).withColumn(
-        "text", F.lower(F.col("text"))
-    )
-    return unigram_lm_scores(docs, vocab_size=20)
-
-
-@register(
-    "bigram_lm_scores",
-    rf"""
-    WITH t AS (
-        SELECT doc_id, {_TOKENS} AS toks
-        FROM (SELECT doc_id, lower(text) AS text FROM documents)
-    ),
-    pairs AS (
-        SELECT doc_id, pw.p AS prev, pw.w AS w FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks)),
-                       i -> struct_pack(p := toks[i], w := toks[i+1]))) AS pw
-            FROM t
-        )
-    ),
-    bc AS (SELECT prev, w, COUNT(*) AS bc FROM pairs GROUP BY prev, w),
-    pc AS (SELECT prev, CAST(SUM(bc) AS BIGINT) AS pc FROM bc GROUP BY prev),
-    uc AS (
-        SELECT w, COUNT(*) AS uc
-        FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w
-    ),
-    tot AS (SELECT CAST(SUM(uc) AS BIGINT) AS n_total,
-                   COUNT(*) AS v_size FROM uc),
-    scored AS (
-        SELECT p.doc_id,
-               -ln(0.7 * (CAST(COALESCE(b.bc, 0) AS DOUBLE)
-                          / CAST(c.pc AS DOUBLE))
-                   + 0.3 * (CAST(COALESCE(u.uc, 0) + 1 AS DOUBLE)
-                            / CAST(tot.n_total + tot.v_size + 1 AS DOUBLE)))
-                   AS nll
-        FROM pairs p
-        LEFT JOIN bc b ON p.prev = b.prev AND p.w = b.w
-        LEFT JOIN pc c ON p.prev = c.prev
-        LEFT JOIN uc u ON p.w = u.w, tot
-    )
-    SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           ROUND(AVG(nll), 6) AS avg_nll
-    FROM scored GROUP BY doc_id
-    """,
-)
-def q_bigram_lm_scores(spark, sf_dir):
-    """CCNet-style perplexity filter, one rung up the n-gram ladder: every
-    doc scored by average NLL under a corpus-fit Jelinek-Mercer
-    bigram/unigram mixture (λ=0.7, add-one unigram floor carries the OOV
-    mass). Fully relational — bigram/prefix/unigram count tables with no
-    broadcast hint (AQE decides; bigram types outgrow broadcast on real
-    corpora) — and the whole fit+score pipeline replays in the DuckDB
-    oracle."""
-    from ningaloo_turtle_etl_spark.operators.text import bigram_lm_scores
-
-    docs = load_table(spark, "documents", sf_dir).withColumn(
-        "text", F.lower(F.col("text"))
-    )
-    return bigram_lm_scores(docs, lambda_=0.7)
-
-
-@register(
     "duplicate_passage_removal",
     r"""
     WITH toks AS (
@@ -1721,265 +1501,6 @@ def temperature_mix_sample(spark, sf_dir):
 
 
 @register(
-    "tfidf_top_terms",
-    rf"""
-    WITH pairs AS (
-        SELECT doc_id, unnest(toks) AS term
-        FROM (SELECT doc_id, {_TOKENS} AS toks FROM documents)
-    ),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM pairs GROUP BY 1, 2),
-    df_ AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-    n AS (SELECT COUNT(*) AS n_docs FROM documents),
-    scored AS (
-        SELECT tf.doc_id, tf.term,
-               ROUND(tf.tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0), 6) AS tfidf
-        FROM tf JOIN df_ USING (term), n
-    )
-    SELECT doc_id, term, tfidf, rank FROM (
-        SELECT doc_id, term, tfidf,
-               CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-                                       ORDER BY tfidf DESC, term) AS INT) AS rank
-        FROM scored
-    ) WHERE rank <= 3
-    """,
-)
-def q_tfidf_top_terms(spark, sf_dir):
-    """Per-document TF-IDF keyword extraction (smoothed sklearn idf): one
-    explode pass builds (doc, term, tf); document frequency re-aggregates
-    those pairs; scores round to 6 dp before ranking so the top-3 terms
-    reproduce cross-engine despite last-ulp ln() differences."""
-    from ningaloo_turtle_etl_spark.operators.text import tfidf_top_terms
-
-    docs = load_table(spark, "documents", sf_dir)
-    return tfidf_top_terms(docs, n_top=3)
-
-
-@register(
-    "corpus_overlap_sketch",
-    r"""
-    WITH t AS (
-      SELECT lang, list_filter(string_split_regex(lower(text), '\s+'),
-                               x -> x <> '') AS toks
-      FROM documents
-    ),
-    s AS (
-      SELECT lang, unnest(list_transform(range(1, len(toks) - 1),
-                          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-      FROM t
-    ),
-    h AS (
-      SELECT DISTINCT lang, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h32 FROM s
-    ),
-    r AS (
-      SELECT lang, h32,
-             row_number() OVER (PARTITION BY lang ORDER BY h32) AS rn,
-             COUNT(*) OVER (PARTITION BY lang) AS n
-      FROM h
-    ),
-    sk AS (SELECT lang, h32 FROM r WHERE rn <= CASE WHEN n < 256 THEN n ELSE 256 END),
-    g AS (SELECT DISTINCT lang FROM sk),
-    p AS (SELECT a.lang AS ga, b.lang AS gb FROM g a JOIN g b ON a.lang < b.lang),
-    e AS (
-      SELECT p.ga, p.gb, sk.h32, 1 AS in_a, 0 AS in_b FROM p JOIN sk ON sk.lang = p.ga
-      UNION ALL
-      SELECT p.ga, p.gb, sk.h32, 0 AS in_a, 1 AS in_b FROM p JOIN sk ON sk.lang = p.gb
-    ),
-    m AS (SELECT ga, gb, h32, MAX(in_a) AS ia, MAX(in_b) AS ib FROM e GROUP BY 1, 2, 3),
-    w AS (SELECT ga, gb, ia, ib,
-                 row_number() OVER (PARTITION BY ga, gb ORDER BY h32) AS rn
-          FROM m)
-    SELECT ga AS lang_a, gb AS lang_b,
-           CAST(COUNT(*) AS BIGINT) AS sample_size,
-           CAST(SUM(ia * ib) AS BIGINT) AS n_common,
-           round(CAST(SUM(ia * ib) AS DOUBLE) / COUNT(*), 6) AS jaccard_est
-    FROM w WHERE rn <= 256 GROUP BY 1, 2
-    """,
-)
-def corpus_overlap_sketch(spark, sf_dir):
-    """Cross-corpus overlap from sketches alone: pairwise 3-gram-shingle
-    Jaccard between every two languages' sub-corpora, estimated from their
-    KMV sketches (Beyer et al., SIGMOD 2007) — after the per-group sketch
-    pass, everything touches ≤ groups²·k fixed-width rows, which is how two
-    100 TB corpora get compared without shuffling either. md5 hash family →
-    the DuckDB oracle reproduces every estimate bit-for-bit; convergence to
-    exact Jaccard as k grows is pinned in tests/test_sketches.py."""
-    from ningaloo_turtle_etl_spark.operators.curation import word_ngrams_from_tokens
-    from ningaloo_turtle_etl_spark.operators.sketches import kmv_jaccard_pairs
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select("lang", tokens(F.lower(F.col("text"))).alias("toks"))
-    sh = toks.select(
-        "lang", F.explode(word_ngrams_from_tokens(F.col("toks"), 3)).alias("sh")
-    )
-    out = kmv_jaccard_pairs(sh, "sh", "lang", k=256)
-    return out.select(
-        F.col("group_a").alias("lang_a"),
-        F.col("group_b").alias("lang_b"),
-        "sample_size",
-        "n_common",
-        "jaccard_est",
-    )
-
-
-@register(
-    "portable_quantile_profile",
-    """
-    WITH b AS (
-      SELECT CAST(min(l_extendedprice) AS DOUBLE) AS lo,
-             CAST(max(l_extendedprice) AS DOUBLE) AS hi
-      FROM lineitem WHERE l_extendedprice IS NOT NULL
-    ),
-    h AS (
-      SELECT l_returnflag AS flag, lo, hi,
-             CAST(CASE WHEN hi = lo THEN 0
-                       ELSE greatest(0, least(1023,
-                            floor((CAST(l_extendedprice AS DOUBLE) - lo) * 1024.0
-                                  / (hi - lo)))) END AS BIGINT) AS bin,
-             COUNT(*) AS n
-      FROM lineitem, b WHERE l_extendedprice IS NOT NULL
-      GROUP BY 1, 2, 3, 4
-    ),
-    c AS (
-      SELECT flag, lo, hi, bin, n,
-             SUM(n) OVER (PARTITION BY flag ORDER BY bin) AS cum,
-             SUM(n) OVER (PARTITION BY flag) AS tot
-      FROM h
-    ),
-    p AS (SELECT CAST(unnest([0.5, 0.95, 0.99]) AS DOUBLE) AS p),
-    sel AS (
-      SELECT c.flag, p.p, c.lo, c.hi, c.bin, c.n, c.cum, c.tot
-      FROM c, p
-      WHERE c.cum >= p.p * c.tot AND (c.cum - c.n) < p.p * c.tot
-    ),
-    e AS (
-      SELECT l_returnflag AS flag,
-             quantile_cont(l_extendedprice, [0.5, 0.95, 0.99]) AS qs
-      FROM lineitem GROUP BY 1
-    ),
-    ex AS (SELECT flag, unnest(qs) AS qx,
-                  CAST(unnest([0.5, 0.95, 0.99]) AS DOUBLE) AS p
-           FROM e)
-    SELECT sel.flag AS l_returnflag, sel.p,
-           round(lo + (hi - lo) / 1024.0
-                 * (bin + (sel.p * tot - (cum - n)) / n), 4) AS q_est,
-           round(ex.qx, 4) AS q_exact,
-           round(abs(round(lo + (hi - lo) / 1024.0
-                           * (bin + (sel.p * tot - (cum - n)) / n), 4)
-                     - round(ex.qx, 4)) / round(ex.qx, 4), 6) AS rel_err
-    FROM sel JOIN ex ON sel.flag = ex.flag AND sel.p = ex.p
-    """,
-)
-def portable_quantile_profile(spark, sf_dir):
-    """Engine-portable quantile calibration: fixed-grid binned p50/p95/p99
-    of l_extendedprice per return flag vs the exact interpolated percentile,
-    with relative errors. The grid histogram is the portable counterpart of
-    percentile_approx's GK sketch — mergeable by bin-wise addition across
-    shards or engines, deterministic double arithmetic DuckDB reproduces
-    bit-for-bit. Rank error ≤ one bin (1/1024 of the range); measured here
-    ≤ 0.03% of the exact value."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        portable_binned_quantiles,
-    )
-
-    probs = (0.5, 0.95, 0.99)
-    li = load_table(spark, "lineitem", sf_dir)
-    q = portable_binned_quantiles(
-        li, "l_extendedprice", probs, by=["l_returnflag"]
-    )
-    p_arr = F.array(*[F.lit(float(p)) for p in probs])
-    exact = (
-        li.groupBy("l_returnflag")
-        .agg(F.percentile("l_extendedprice", p_arr).alias("qs"))
-        .select("l_returnflag", F.posexplode("qs").alias("i", "qx"))
-        .select(
-            "l_returnflag",
-            F.element_at(p_arr, F.col("i") + 1).alias("p"),
-            "qx",
-        )
-    )
-    out = q.join(exact, on=["l_returnflag", "p"])
-    q_exact = F.round(F.col("qx"), 4)
-    return out.select(
-        "l_returnflag",
-        "p",
-        "q_est",
-        q_exact.alias("q_exact"),
-        F.round(F.abs(F.col("q_est") - q_exact) / q_exact, 6).alias("rel_err"),
-    )
-
-
-@register(
-    "sampled_token_frequencies",
-    r"""
-    WITH s AS (
-      SELECT text FROM documents
-      WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-            < lower(lpad(to_hex(CAST(floor(0.25 * 4294967296.0) AS BIGINT)), 8, '0'))
-    ),
-    st AS (
-      SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    x -> x <> '')) AS tok
-      FROM s
-    ),
-    samp AS (SELECT tok, COUNT(*) AS n_sample FROM st GROUP BY 1),
-    ft AS (
-      SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    x -> x <> '')) AS tok
-      FROM documents
-    ),
-    ex AS (SELECT tok, COUNT(*) AS n_exact FROM ft GROUP BY 1)
-    SELECT samp.tok AS token,
-           CAST(n_sample AS BIGINT) AS n_sample,
-           round(n_sample / 0.25, 4) AS est_n,
-           CAST(n_exact AS BIGINT) AS n_exact,
-           round(abs(round(n_sample / 0.25, 4) - n_exact) / n_exact, 6) AS rel_err
-    FROM samp JOIN ex ON samp.tok = ex.tok
-    ORDER BY est_n DESC, token ASC LIMIT 20
-    """,
-)
-def sampled_token_frequencies(spark, sf_dir):
-    """Portable heavy-hitter calibration: top-20 corpus tokens by frequency
-    estimated from a deterministic 25% document sample (md5-of-id rate
-    gate), with exact counts and relative errors alongside. Misra-Gries
-    state merges order-dependently and can never be reproduced by another
-    engine; the hash-rate sample is bit-identical everywhere, retry-stable,
-    and reads ~rate of the corpus (sample predicate is map-side). The
-    sampling unit is the document (cluster sampling), so estimator variance
-    is ((1-rate)/rate)*sum(per-doc count squared) — heavy items stay tight,
-    the tail is noisy by contract (bound pinned in tests/test_sketches.py)."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        sampled_item_frequencies,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir)
-    ex = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
-    )
-    samp = sampled_item_frequencies(ex, "tok", "doc_id", rate=0.25)
-    exact = (
-        docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    out = samp.join(exact, samp["item"] == exact["tok"])
-    return (
-        out.select(
-            F.col("item").alias("token"),
-            "n_sample",
-            "est_n",
-            "n_exact",
-            F.round(
-                F.abs(F.col("est_n") - F.col("n_exact")) / F.col("n_exact"), 6
-            ).alias("rel_err"),
-        )
-        .orderBy(F.desc("est_n"), F.asc("token"))
-        .limit(20)
-    )
-
-
-@register(
     "gopher_repetition_stats",
     rf"""
     WITH t AS (
@@ -2055,105 +1576,6 @@ def q_gopher_repetition_stats(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     return gopher_repetition_stats(docs)
-
-
-_BIGRAM_SCORES_CTE = rf"""
-    t AS (
-        SELECT doc_id, {_TOKENS} AS toks
-        FROM (SELECT doc_id, lower(text) AS text FROM documents)
-    ),
-    pairs AS (
-        SELECT doc_id, pw.p AS prev, pw.w AS w FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks)),
-                       i -> struct_pack(p := toks[i], w := toks[i+1]))) AS pw
-            FROM t
-        )
-    ),
-    bc AS (SELECT prev, w, COUNT(*) AS bc FROM pairs GROUP BY prev, w),
-    pc AS (SELECT prev, CAST(SUM(bc) AS BIGINT) AS pc FROM bc GROUP BY prev),
-    uc AS (
-        SELECT w, COUNT(*) AS uc
-        FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w
-    ),
-    tot AS (SELECT CAST(SUM(uc) AS BIGINT) AS n_total,
-                   COUNT(*) AS v_size FROM uc),
-    nlls AS (
-        SELECT p.doc_id,
-               -ln(0.7 * (CAST(COALESCE(b.bc, 0) AS DOUBLE)
-                          / CAST(c.pc AS DOUBLE))
-                   + 0.3 * (CAST(COALESCE(u.uc, 0) + 1 AS DOUBLE)
-                            / CAST(tot.n_total + tot.v_size + 1 AS DOUBLE)))
-                   AS nll
-        FROM pairs p
-        LEFT JOIN bc b ON p.prev = b.prev AND p.w = b.w
-        LEFT JOIN pc c ON p.prev = c.prev
-        LEFT JOIN uc u ON p.w = u.w, tot
-    ),
-    scores AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               ROUND(AVG(nll), 6) AS avg_nll
-        FROM nlls GROUP BY doc_id
-    )
-"""
-
-
-@register(
-    "ccnet_perplexity_buckets",
-    rf"""
-    WITH {_BIGRAM_SCORES_CTE},
-    labeled AS (
-        SELECT d.doc_id, d.lang, s.n_bigrams, s.avg_nll
-        FROM documents d JOIN scores s ON d.doc_id = s.doc_id
-    ),
-    cuts AS (
-        SELECT lang,
-               ROUND(quantile_cont(avg_nll, 1.0/3.0), 6) AS c1,
-               ROUND(quantile_cont(avg_nll, 2.0/3.0), 6) AS c2
-        FROM labeled GROUP BY lang
-    ),
-    bucketed AS (
-        SELECT l.lang,
-               CASE WHEN l.avg_nll <= c.c1 THEN 'head'
-                    WHEN l.avg_nll <= c.c2 THEN 'middle'
-                    ELSE 'tail' END AS bucket,
-               l.avg_nll
-        FROM labeled l JOIN cuts c ON l.lang = c.lang
-    )
-    SELECT lang, bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           -- integer micro-NLL sum: per-doc scores are already rounded to
-           -- 1e-6, so summing them as exact integers kills the
-           -- summation-order ulp that a double AVG can land on a .5
-           -- rounding boundary
-           ROUND(SUM(CAST(ROUND(avg_nll * 1e6, 0) AS BIGINT))
-                 / (COUNT(*) * 1000000.0), 6) AS mean_nll,
-           ROUND(MIN(avg_nll), 6) AS min_nll,
-           ROUND(MAX(avg_nll), 6) AS max_nll
-    FROM bucketed GROUP BY lang, bucket
-    """,
-)
-def ccnet_perplexity_buckets(spark, sf_dir):
-    """CCNet head/middle/tail partitioning (Wenzek et al. 2020): per-lang
-    perplexity terciles under the corpus-fit bigram LM, by broadcast
-    tercile cut points (not an ntile window — the corpus side stays
-    map-only). Output: per (lang, bucket) doc counts and NLL stats."""
-    from ningaloo_turtle_etl_spark.operators.text import perplexity_buckets
-
-    docs = load_table(spark, "documents", sf_dir).withColumn(
-        "text", F.lower(F.col("text"))
-    )
-    b = perplexity_buckets(docs, lambda_=0.7)
-    # mean via exact integer micro-NLL sum — see the oracle comment
-    return b.groupBy("lang", "bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(
-            F.sum(F.round(F.col("avg_nll") * 1e6, 0).cast("long"))
-            / (F.count(F.lit(1)) * F.lit(1000000.0)),
-            6,
-        ).alias("mean_nll"),
-        F.round(F.min("avg_nll"), 6).alias("min_nll"),
-        F.round(F.max("avg_nll"), 6).alias("max_nll"),
-    )
 
 
 _SUBSTR_RANKED_CTE = """
@@ -2295,179 +1717,6 @@ def q_substring_span_removal(spark, sf_dir):
     )
 
 
-@register(
-    "zipf_corpus_fit",
-    rf"""
-    WITH wf AS (
-        SELECT source AS grp, word, CAST(COUNT(*) AS BIGINT) AS freq
-        FROM (SELECT source, unnest({_TOKENS}) AS word FROM documents)
-        GROUP BY 1, 2
-    ),
-    ranked AS (
-        SELECT grp, freq,
-               CAST(ROUND(ln(CAST(row_number() OVER (
-                   PARTITION BY grp ORDER BY freq DESC, word ASC
-               ) AS DOUBLE)) * 1e6, 0) AS BIGINT) AS xi,
-               CAST(ROUND(ln(CAST(freq AS DOUBLE)) * 1e6, 0) AS BIGINT)
-                   AS yi
-        FROM wf
-    ),
-    m AS (
-        SELECT grp,
-               CAST(COUNT(*) AS BIGINT) AS n_types,
-               CAST(SUM(freq) AS BIGINT) AS n_tokens,
-               CAST(SUM(xi) AS BIGINT) AS sx,
-               CAST(SUM(yi) AS BIGINT) AS sy,
-               CAST(SUM(xi * xi) AS BIGINT) AS sxx,
-               CAST(SUM(xi * yi) AS BIGINT) AS sxy,
-               CAST(SUM(yi * yi) AS BIGINT) AS syy
-        FROM ranked GROUP BY grp
-    )
-    SELECT grp AS source, n_types, n_tokens,
-           ROUND(CASE WHEN CAST(n_types AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx > 0 THEN
-               (CAST(n_types AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-               / (CAST(n_types AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-           END, 6) AS zipf_slope,
-           ROUND(CASE WHEN CAST(n_types AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx > 0 THEN
-               (CAST(sy AS DOUBLE) - ((CAST(n_types AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-                   / (CAST(n_types AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)) * sx)
-               / (CAST(n_types AS DOUBLE) * 1e6)
-           END, 6) AS zipf_intercept,
-           ROUND(CASE WHEN (CAST(n_types AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx > 0)
-                       AND (CAST(n_types AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy > 0) THEN
-               (CAST(n_types AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-               * (CAST(n_types AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-               / ((CAST(n_types AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-                  * (CAST(n_types AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy))
-           END, 6) AS fit_r2
-    FROM m
-    """,
-)
-def zipf_corpus_fit(spark, sf_dir):
-    """Zipf's-law rank-frequency fit per source: OLS slope/intercept/r2 of
-    ln(freq) on ln(rank) over each source's word-frequency table. Exact
-    integer micro-unit moments make the fit summation-order-proof; the
-    rank window sorts only the vocabulary."""
-    from ningaloo_turtle_etl_spark.operators.text import zipf_fit
-
-    docs = load_table(spark, "documents", sf_dir)
-    return zipf_fit(docs, group_col="source")
-
-
-@register(
-    "phrase_search_top_bigram",
-    rf"""
-    WITH t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-    p AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(toks)),
-                   i -> struct_pack(a := toks[i], b := toks[i + 1]))) AS pr
-        FROM t
-    ),
-    p2 AS (SELECT doc_id, pr.a AS a, pr.b AS b FROM p),
-    c AS (SELECT a, b, COUNT(*) AS n FROM p2 GROUP BY 1, 2),
-    top AS (SELECT a, b FROM c ORDER BY n DESC, a ASC, b ASC LIMIT 1),
-    m AS (
-        SELECT p2.doc_id, CAST(COUNT(*) AS BIGINT) AS n_occurrences
-        FROM p2 JOIN top ON p2.a = top.a AND p2.b = top.b
-        GROUP BY 1
-    )
-    SELECT m.doc_id, top.a AS term_a, top.b AS term_b, m.n_occurrences
-    FROM m, top
-    """,
-)
-def phrase_search_top_bigram(spark, sf_dir):
-    """Positional-index phrase search: build the inverted index, elect the
-    corpus's most frequent bigram, and count its exact adjacent
-    occurrences per doc FROM THE INDEX (positional merge over postings —
-    the corpus is never rescanned). The oracle recomputes the same counts
-    directly from token adjacency, so the index path is cross-checked
-    against a structurally different formulation."""
-    from ningaloo_turtle_etl_spark.operators.search import (
-        build_inverted_index,
-        phrase_occurrences,
-        top_bigram,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    a, b = top_bigram(docs)
-    idx = build_inverted_index(docs)
-    return phrase_occurrences(idx, [a, b]).select(
-        "doc_id",
-        F.lit(a).alias("term_a"),
-        F.lit(b).alias("term_b"),
-        "n_occurrences",
-    )
-
-
-@register(
-    "bm25_top10",
-    rf"""
-    WITH t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-    p2 AS (
-        SELECT doc_id, pr.a AS a, pr.b AS b FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks)),
-                       i -> struct_pack(a := toks[i], b := toks[i + 1])))
-                       AS pr
-            FROM t
-        )
-    ),
-    top AS (SELECT a, b FROM (
-        SELECT a, b, COUNT(*) AS n FROM p2 GROUP BY 1, 2)
-        ORDER BY n DESC, a ASC, b ASC LIMIT 1),
-    q AS (SELECT DISTINCT term FROM (
-        SELECT a AS term FROM top UNION ALL SELECT b FROM top)),
-    idx AS (
-        SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-        GROUP BY 1, 2
-    ),
-    dfs AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-            FROM idx GROUP BY term),
-    dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl
-           FROM idx GROUP BY doc_id),
-    stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-                     AVG(dl) AS avgdl FROM dl),
-    scored AS (
-        SELECT i.doc_id,
-               CAST(ROUND(
-                   ln((CAST(s.n_docs AS DOUBLE) - CAST(f.df AS DOUBLE) + 0.5)
-                      / (CAST(f.df AS DOUBLE) + 0.5) + 1.0)
-                   * (CAST(i.tf AS DOUBLE) * 2.2
-                      / (CAST(i.tf AS DOUBLE)
-                         + 1.2 * (0.25 + 0.75 * d.dl / s.avgdl)))
-                   * 1e6, 0) AS BIGINT) AS s
-        FROM idx i
-        JOIN q ON i.term = q.term
-        JOIN dfs f ON i.term = f.term
-        JOIN dl d ON i.doc_id = d.doc_id, stats s
-    )
-    SELECT doc_id,
-           ROUND(SUM(s) / 1e6, 6) AS bm25_score,
-           CAST(COUNT(*) AS BIGINT) AS n_query_terms_matched
-    FROM scored GROUP BY doc_id
-    ORDER BY bm25_score DESC, doc_id ASC LIMIT 10
-    """,
-)
-def bm25_top10(spark, sf_dir):
-    """BM25 top-10 for the corpus's most frequent bigram as a two-term
-    query, answered entirely from the inverted index (corpus stats from a
-    broadcast 1-row aggregate; per-term scores in integer micro-units so
-    the per-doc sum is order-proof). k1=1.2, b=0.75 — hence the literal
-    2.2 numerator and 0.25 + 0.75·dl/avgdl damping in the oracle."""
-    from ningaloo_turtle_etl_spark.operators.search import (
-        bm25_topk,
-        build_inverted_index,
-        top_bigram,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    a, b = top_bigram(docs)
-    idx = build_inverted_index(docs)
-    return bm25_topk(idx, [a, b], k=10)
-
-
 # Ed-Join prefix-filtered edit-distance pairs over customer names — shared
 # between the pair query and the entity-resolution clustering on top of it.
 _EDIT_CTES = """
@@ -2528,146 +1777,6 @@ def edit_similarity_pairs(spark, sf_dir):
     cust = load_table(spark, "customer", sf_dir)
     return edit_similarity_self_join(
         cust, text_col="c_name", id_col="c_custkey", max_edit=1, q=3
-    )
-
-
-@register(
-    "heaps_vocab_growth",
-    rf"""
-    WITH toks AS (
-        SELECT source AS grp, doc_id AS doc, unnest({_TOKENS}) AS word
-        FROM documents
-    ),
-    pdt AS (SELECT grp, doc, CAST(COUNT(*) AS BIGINT) AS n_toks
-            FROM toks GROUP BY 1, 2),
-    nt AS (
-        SELECT grp, doc, CAST(COUNT(*) AS BIGINT) AS n_new FROM (
-            SELECT grp, word, MIN(doc) AS doc FROM toks GROUP BY 1, 2)
-        GROUP BY 1, 2
-    ),
-    curve AS (
-        SELECT grp,
-               SUM(p.n_toks) OVER (PARTITION BY grp ORDER BY p.doc
-                   ROWS UNBOUNDED PRECEDING) AS cum_tokens,
-               SUM(COALESCE(n.n_new, 0)) OVER (PARTITION BY grp
-                   ORDER BY p.doc ROWS UNBOUNDED PRECEDING) AS cum_types
-        FROM pdt p LEFT JOIN nt n USING (grp, doc)
-    ),
-    mi AS (
-        SELECT grp, cum_tokens, cum_types,
-               CAST(ROUND(ln(CAST(cum_tokens AS DOUBLE)) * 1e6, 0)
-                    AS BIGINT) AS xi,
-               CAST(ROUND(ln(CAST(cum_types AS DOUBLE)) * 1e6, 0)
-                    AS BIGINT) AS yi
-        FROM curve
-    ),
-    m AS (
-        SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(MAX(cum_tokens) AS BIGINT) AS total_tokens,
-               CAST(MAX(cum_types) AS BIGINT) AS total_types,
-               CAST(SUM(xi) AS BIGINT) AS sx, CAST(SUM(yi) AS BIGINT) AS sy,
-               CAST(SUM(xi * xi) AS BIGINT) AS sxx,
-               CAST(SUM(xi * yi) AS BIGINT) AS sxy,
-               CAST(SUM(yi * yi) AS BIGINT) AS syy
-        FROM mi GROUP BY grp
-    )
-    SELECT grp AS source, n_docs, total_tokens, total_types,
-           ROUND(CASE WHEN CAST(n_docs AS DOUBLE) * sxx
-                           - CAST(sx AS DOUBLE) * sx > 0 THEN
-               (CAST(n_docs AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-               / (CAST(n_docs AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-           END, 6) AS heaps_beta,
-           ROUND(CASE WHEN CAST(n_docs AS DOUBLE) * sxx
-                           - CAST(sx AS DOUBLE) * sx > 0 THEN
-               (CAST(sy AS DOUBLE)
-                - ((CAST(n_docs AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-                   / (CAST(n_docs AS DOUBLE) * sxx
-                      - CAST(sx AS DOUBLE) * sx)) * sx)
-               / (CAST(n_docs AS DOUBLE) * 1e6)
-           END, 6) AS heaps_log_k,
-           ROUND(CASE WHEN (CAST(n_docs AS DOUBLE) * sxx
-                            - CAST(sx AS DOUBLE) * sx > 0)
-                       AND (CAST(n_docs AS DOUBLE) * syy
-                            - CAST(sy AS DOUBLE) * sy > 0) THEN
-               (CAST(n_docs AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-               * (CAST(n_docs AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy)
-               / ((CAST(n_docs AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx)
-                  * (CAST(n_docs AS DOUBLE) * syy
-                     - CAST(sy AS DOUBLE) * sy))
-           END, 6) AS fit_r2
-    FROM m
-    """,
-)
-def heaps_vocab_growth(spark, sf_dir):
-    """Heaps'-law vocabulary-growth fit per source: OLS of ln(cumulative
-    types) on ln(cumulative tokens) along doc order — types appear at
-    their first-occurrence doc, so the curve needs one (group,word)-keyed
-    min plus a doc-sized cumsum window, never per-token scan state."""
-    from ningaloo_turtle_etl_spark.operators.text import heaps_fit
-
-    docs = load_table(spark, "documents", sf_dir)
-    return heaps_fit(docs, group_col="source")
-
-
-@register(
-    "countmin_token_counts",
-    rf"""
-    WITH toks AS (SELECT unnest({_TOKENS}) AS tok FROM documents),
-    exact AS (
-      SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_exact FROM toks GROUP BY 1
-    ),
-    hrows AS (SELECT unnest([0, 1, 2, 3]) AS row),
-    cells AS (
-      SELECT row,
-             ('0x' || substr(md5(tok || '|' || row), 1, 8))::BIGINT % 16 AS col,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM toks CROSS JOIN hrows GROUP BY 1, 2
-    ),
-    est AS (
-      SELECT e.tok, MIN(c.n) AS cm_estimate
-      FROM exact e CROSS JOIN hrows r
-      JOIN cells c ON c.row = r.row
-       AND c.col = ('0x' || substr(md5(e.tok || '|' || r.row), 1, 8))::BIGINT % 16
-      GROUP BY 1
-    )
-    SELECT e.tok, e.n_exact, s.cm_estimate,
-           s.cm_estimate - e.n_exact AS overestimate
-    FROM exact e JOIN est s USING (tok)
-    ORDER BY n_exact DESC, tok LIMIT 20
-    """,
-)
-def countmin_token_counts(spark, sf_dir):
-    """Count-min sketch calibration over document tokens
-    (`operators/sketches.py countmin_table/countmin_estimate`): top-20
-    exact token counts vs the depth-4 × width-16 sketch estimate, with the
-    guaranteed-nonnegative overestimate. Width 16 is deliberately far
-    below the vocabulary so collisions are exercised; the production
-    default (512) makes the error ≤ ~2N/512 w.h.p. The sketch state is
-    depth × width cells regardless of corpus size, merges by cell-wise
-    addition, and reproduces bit-for-bit in any engine with md5()."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        countmin_estimate,
-        countmin_table,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select(
-        F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
-    toks = toks.persist()
-    cm = countmin_table(toks, "tok", depth=4, width=16)
-    exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_exact"))
-    est = countmin_estimate(cm, exact.select("tok"), "tok", depth=4, width=16)
-    return (
-        exact.join(est, on="tok")
-        .select(
-            "tok",
-            "n_exact",
-            "cm_estimate",
-            (F.col("cm_estimate") - F.col("n_exact")).alias("overestimate"),
-        )
-        .orderBy(F.desc("n_exact"), F.asc("tok"))
-        .limit(20)
     )
 
 
@@ -3316,66 +2425,6 @@ def q_domain_reweight_mix(spark, sf_dir):
     return domain_reweight(docs, "source", loss, eta=1.0)
 
 
-@register(
-    "rolling_value_p95",
-    """
-    WITH hist AS (
-        SELECT CAST(ts AS DATE) AS src,
-               CAST(greatest(0, least(999,
-                    floor((value - 0.0) * 1000.0 / 500.0))) AS BIGINT)
-                   AS bin,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM events WHERE value IS NOT NULL
-        GROUP BY 1, 2
-    ),
-    days AS (SELECT DISTINCT src FROM hist),
-    pairs AS (
-        SELECT b.src AS d, a.src
-        FROM days a JOIN days b
-          ON a.src <= b.src AND date_diff('day', a.src, b.src) < 7
-    ),
-    merged AS (
-        SELECT p.d, h.bin, SUM(h.n) AS n
-        FROM pairs p JOIN hist h USING (src)
-        GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT d, bin, n,
-               SUM(n) OVER (PARTITION BY d ORDER BY bin
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS cum,
-               SUM(n) OVER (PARTITION BY d) AS tot
-        FROM merged
-    ),
-    probs(p) AS (VALUES (0.5), (0.95)),
-    sel AS (
-        SELECT d, bin, n, cum, tot, p
-        FROM cum CROSS JOIN probs
-        WHERE cum >= p * tot AND (cum - n) < p * tot
-    )
-    SELECT d AS day, CAST(tot AS BIGINT) AS n_rows, p,
-           ROUND(0.0 + (500.0 / 1000.0)
-                 * (bin + (p * tot - (cum - n)) / n), 4) AS q_est
-    FROM sel
-    """,
-)
-def q_rolling_value_p95(spark, sf_dir):
-    """Rolling 7-day p50/p95 of event value via mergeable fixed-grid
-    histograms (`operators/sketches.py rolling_binned_quantile`):
-    days x 1000 counters merge instead of re-sorting the raw window —
-    `rolling_distinct_hll`'s state-moves-not-data argument applied to
-    quantiles."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        rolling_binned_quantile,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return rolling_binned_quantile(
-        ev, "value", "ts", (0.5, 0.95), window_days=7,
-        n_bins=1000, lo=0.0, hi=500.0,
-    )
-
-
 def _ahash_oracle_sql(max_id: int = 250, edit_below: int = 60,
                       max_hamming: int = 8) -> str:
     """DuckDB replay of the aHash near-dup pipeline over the fake codec:
@@ -3807,73 +2856,6 @@ def table_digest_by_flag(spark, sf_dir):
 
 
 @register(
-    "kneser_ney_lm_scores",
-    rf"""
-    WITH t AS (
-        SELECT doc_id, {_TOKENS} AS toks
-        FROM (SELECT doc_id, lower(text) AS text FROM documents)
-    ),
-    pairs AS (
-        SELECT doc_id, pw.p AS prev, pw.w AS w FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks)),
-                       i -> struct_pack(p := toks[i], w := toks[i+1]))) AS pw
-            FROM t
-        )
-    ),
-    bc AS MATERIALIZED (
-        SELECT prev, w, COUNT(*) AS bc FROM pairs GROUP BY prev, w
-    ),
-    pst AS (
-        SELECT prev, CAST(SUM(bc) AS BIGINT) AS pc, COUNT(*) AS n1p
-        FROM bc GROUP BY prev
-    ),
-    cont AS (SELECT w, COUNT(*) AS cont FROM bc GROUP BY w),
-    tot AS (
-        SELECT (SELECT COUNT(*) FROM bc) AS b_types,
-               (SELECT COUNT(DISTINCT w)
-                FROM (SELECT unnest(toks) AS w FROM t)) AS v_size
-    ),
-    scored AS (
-        SELECT p.doc_id,
-               -ln(CASE WHEN COALESCE(s.pc, 0) > 0 THEN
-                     greatest(CAST(COALESCE(b.bc, 0) AS DOUBLE) - 0.75, 0.0)
-                       / CAST(s.pc AS DOUBLE)
-                     + 0.75 * CAST(s.n1p AS DOUBLE) / CAST(s.pc AS DOUBLE)
-                       * (CAST(COALESCE(c.cont, 0) + 1 AS DOUBLE)
-                          / CAST(tot.b_types + tot.v_size AS DOUBLE))
-                   ELSE CAST(COALESCE(c.cont, 0) + 1 AS DOUBLE)
-                        / CAST(tot.b_types + tot.v_size AS DOUBLE)
-                   END) AS nll
-        FROM pairs p
-        LEFT JOIN bc b ON p.prev = b.prev AND p.w = b.w
-        LEFT JOIN pst s ON p.prev = s.prev
-        LEFT JOIN cont c ON p.w = c.w, tot
-    )
-    SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           ROUND(AVG(nll), 6) AS avg_nll
-    FROM scored GROUP BY doc_id
-    """,
-)
-def q_kneser_ney_lm_scores(spark, sf_dir):
-    """Kneser-Ney bigram perplexity scoring (`operators/text.py
-    kneser_ney_bigram_scores`, D=0.75) — the KenLM-default smoothing one
-    rung above the JM mixture (`bigram_lm_scores`): absolute-discounted
-    bigram mass backs off to CONTINUATION counts (how many distinct left
-    contexts a word follows), the fix for frequent-but-context-bound
-    words. Every KN statistic is an aggregate of the bigram-type table,
-    and the whole fit+score replays in DuckDB."""
-    from ningaloo_turtle_etl_spark.operators.text import (
-        kneser_ney_bigram_scores,
-    )
-
-    docs = load_table(spark, "documents", sf_dir).withColumn(
-        "text", F.lower(F.col("text"))
-    )
-    return kneser_ney_bigram_scores(docs, discount=0.75)
-
-
-@register(
     "ppjoin_jaccard_pairs",
     rf"""
     WITH sets AS (
@@ -3928,51 +2910,6 @@ def ppjoin_jaccard_pairs(spark, sf_dir):
 
 
 @register(
-    "good_turing_token_counts",
-    rf"""
-    WITH toks AS (SELECT {_TOKENS} AS t FROM documents),
-    tok AS (
-        SELECT unnest(CASE WHEN len(t) >= 3 THEN
-            list_transform(range(1, len(t) - 3 + 2),
-                i -> array_to_string(list_slice(t, i, i + 2), ' '))
-            ELSE []::VARCHAR[] END) AS tk
-        FROM toks
-    ),
-    tf AS (SELECT tk, CAST(COUNT(*) AS BIGINT) AS r FROM tok GROUP BY tk),
-    nr AS (SELECT r, CAST(COUNT(*) AS BIGINT) AS n_r FROM tf GROUP BY r),
-    total AS (SELECT CAST(SUM(r * n_r) AS BIGINT) AS n_total FROM nr),
-    body AS (
-        SELECT nr.r, nr.n_r,
-               ROUND((nr.r + 1) * nx.n_r * 1.0 / nr.n_r, 6) AS r_star,
-               ROUND(nr.r * nr.n_r * 1.0 / total.n_total, 6) AS gt_mass
-        FROM nr LEFT JOIN nr nx ON nx.r = nr.r + 1
-        CROSS JOIN total
-        WHERE nr.r <= 10
-    ),
-    zero AS (
-        SELECT CAST(0 AS BIGINT) AS r, CAST(0 AS BIGINT) AS n_r,
-               ROUND(nr.n_r * 1.0 / total.n_total, 6) AS r_star,
-               ROUND(nr.n_r * 1.0 / total.n_total, 6) AS gt_mass
-        FROM nr CROSS JOIN total WHERE nr.r = 1
-    )
-    SELECT * FROM zero UNION ALL SELECT * FROM body ORDER BY r
-    """,
-)
-def good_turing_token_counts(spark, sf_dir):
-    """Good-Turing count-of-counts re-estimation over the corpus word
-    TRIGRAMS (`operators/text.py good_turing_counts`, n=3, r ≤ 10): the
-    adjusted counts r* = (r+1)N_{r+1}/N_r and the unseen mass N_1/N — the
-    smoothing diagnostic under Katz backoff, all exact-integer until one
-    final division per row. Trigram grain because the synthetic corpus's
-    unigram vocabulary is tiny (31 types, min count 26 at sf0.01 — no GT
-    regime); trigrams have the genuine power-law tail GT exists for."""
-    from ningaloo_turtle_etl_spark.operators.text import good_turing_counts
-
-    docs = load_table(spark, "documents", sf_dir)
-    return good_turing_counts(docs, max_r=10, ngram_n=3).orderBy("r")
-
-
-@register(
     "source_lang_diversity",
     """
     WITH cell AS (
@@ -4014,62 +2951,6 @@ def source_lang_diversity(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir)
     return class_diversity_profile(docs, "source", "lang").orderBy("source")
-
-
-def _rake_oracle_sql(top_n: int = 50, max_len: int = 4) -> str:
-    from ningaloo_turtle_etl_spark.operators.text import RAKE_STOPWORDS
-
-    stop = "|".join(RAKE_STOPWORDS)
-    delim = rf"(?i)([^a-z0-9\s]+|\b(?:{stop})\b)"
-    return rf"""
-    WITH ph0 AS (
-        SELECT unnest(string_split_regex(
-            regexp_replace(lower(text), '{delim}', '|', 'g'), '\|')) AS p
-        FROM documents
-    ),
-    phx AS (
-        SELECT phrase, string_split(phrase, ' ') AS words,
-               len(string_split(phrase, ' ')) AS n_words
-        FROM (SELECT trim(regexp_replace(p, '\s+', ' ', 'g')) AS phrase
-              FROM ph0)
-        WHERE phrase <> '' AND len(string_split(phrase, ' ')) <= {max_len}
-    ),
-    wstats AS (
-        SELECT w,
-               CAST(round(1e6 * SUM(plen) * 1.0 / COUNT(*)) AS BIGINT)
-                   AS wscore
-        FROM (SELECT unnest(words) AS w, n_words AS plen FROM phx)
-        GROUP BY w
-    ),
-    pgrid AS (
-        SELECT phrase, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-               CAST(MAX(n_words) AS INT) AS n_words
-        FROM phx GROUP BY phrase
-    ),
-    scored AS (
-        SELECT pw.phrase, CAST(SUM(wstats.wscore) AS BIGINT) AS sm
-        FROM (SELECT phrase, unnest(string_split(phrase, ' ')) AS w
-              FROM pgrid) pw
-        JOIN wstats USING (w) GROUP BY pw.phrase
-    )
-    SELECT p.phrase, p.n_occurrences, p.n_words,
-           ROUND(s.sm / 1e6, 6) AS rake_score
-    FROM pgrid p JOIN scored s USING (phrase)
-    ORDER BY rake_score DESC, p.phrase LIMIT {top_n}
-    """
-
-
-@register("rake_top_phrases", _rake_oracle_sql(50, 4))
-def rake_top_phrases(spark, sf_dir):
-    """RAKE keyword extraction over the corpus (`operators/text.py
-    rake_keywords`, top-50, phrases ≤ 4 words): candidate phrases are
-    maximal stopword/punctuation-free runs; words score degree/frequency
-    in integer micros; phrases sum their word scores — the untrained
-    corpus-keyword surfacer complementing TF-IDF's per-doc terms."""
-    from ningaloo_turtle_etl_spark.operators.text import rake_keywords
-
-    docs = load_table(spark, "documents", sf_dir)
-    return rake_keywords(docs, top_n=50, max_phrase_len=4)
 
 
 def _pca_power_components_oracle_sql(
@@ -4258,26 +3139,6 @@ def moment_profile_by_type(spark, sf_dir):
     return moment_profile(ev, "value", by=["event_type"]).orderBy(
         "event_type"
     )
-
-
-@register("ranking_ndcg_eval", ndcg_oracle_sql(10))
-def ranking_ndcg_eval(spark, sf_dir):
-    """Retrieval evaluation (`operators/similarity.py ranking_metrics`):
-    NDCG@10, precision@10, MRR and hit count per query over the exact
-    cosine top-10, with relevance = candidate shares the query's label
-    and the corpus-wide relevant count feeding the ideal DCG — the
-    metric loop that grades every ANN/CF/embedding stage. Discount
-    weights are shared integer-nano literals (no engine calls log2), so
-    only one final division is float."""
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        cosine_topk,
-        ranking_metrics,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5)
-    ranked = cosine_topk(emb, qs, k=10)
-    return ranking_metrics(ranked, emb, k=10)
 
 
 @register(
@@ -4475,214 +3336,3 @@ def cohens_kappa_langid(spark, sf_dir):
             6,
         ).alias("kappa"),
     )
-
-
-@register(
-    "query_likelihood_top10",
-    rf"""
-    WITH t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-    p2 AS (
-        SELECT doc_id, pr.a AS a, pr.b AS b FROM (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks)),
-                       i -> struct_pack(a := toks[i], b := toks[i + 1])))
-                       AS pr
-            FROM t
-        )
-    ),
-    top AS (SELECT a, b FROM (
-        SELECT a, b, COUNT(*) AS n FROM p2 GROUP BY 1, 2)
-        ORDER BY n DESC, a ASC, b ASC LIMIT 1),
-    q AS (SELECT DISTINCT term FROM (
-        SELECT a AS term FROM top UNION ALL SELECT b FROM top)),
-    idx AS (
-        SELECT term, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM (SELECT doc_id, unnest(toks) AS term FROM t)
-        GROUP BY 1, 2
-    ),
-    hits AS (SELECT i.doc_id, i.term, i.tf
-             FROM idx i JOIN q ON i.term = q.term),
-    dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl
-           FROM idx GROUP BY doc_id),
-    stats AS (SELECT CAST(SUM(tf) AS BIGINT) AS ctot FROM idx),
-    ctf AS (SELECT term, CAST(SUM(tf) AS BIGINT) AS ctf
-            FROM hits GROUP BY term),
-    cand AS (SELECT DISTINCT doc_id FROM hits),
-    g AS (
-        SELECT c.doc_id, f.term, f.ctf, h.tf, d.dl, s.ctot
-        FROM cand c CROSS JOIN ctf f
-        LEFT JOIN hits h ON h.doc_id = c.doc_id AND h.term = f.term
-        JOIN dl d ON d.doc_id = c.doc_id, stats s
-    ),
-    scored AS (
-        SELECT doc_id,
-               CAST(round(ln((CAST(COALESCE(tf, 0) AS DOUBLE)
-                              + CAST(50 AS DOUBLE)
-                                * (CAST(ctf AS DOUBLE)
-                                   / CAST(ctot AS DOUBLE)))
-                             / (CAST(dl AS DOUBLE) + CAST(50 AS DOUBLE)))
-                          * 1e6) AS BIGINT) AS sm,
-               CASE WHEN tf IS NOT NULL THEN 1 ELSE 0 END AS m
-        FROM g
-    )
-    SELECT doc_id,
-           ROUND(SUM(sm) / 1e6, 6) AS ql_score,
-           CAST(SUM(m) AS BIGINT) AS n_query_terms_matched
-    FROM scored GROUP BY doc_id
-    ORDER BY ql_score DESC, doc_id ASC LIMIT 10
-    """,
-)
-def query_likelihood_top10(spark, sf_dir):
-    """Dirichlet-smoothed query-likelihood top-10 for the corpus's most
-    frequent bigram (`operators/search.py query_likelihood_topk`,
-    μ = 50): the language-modeling retrieval rung next to bm25_top10 —
-    same inverted index, same query, the other classic scoring family.
-    Candidates × query-terms grid keeps the zero-tf smoothed term in
-    the score; per-term micro-units before the per-doc sum."""
-    from ningaloo_turtle_etl_spark.operators.search import (
-        build_inverted_index,
-        query_likelihood_topk,
-        top_bigram,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    a, b = top_bigram(docs)
-    idx = build_inverted_index(docs)
-    return query_likelihood_topk(idx, [a, b], k=10, mu=50.0)
-
-
-def _mrr_map_oracle_sql(k: int = 10, query_cut: int = 5) -> str:
-    """retrieval_mrr_map: MRR + MAP@k of brute-force cosine retrieval
-    against label-equality relevance — same rounded-cosine ranking as
-    the brute oracle, AP terms micro-quantized before the per-query
-    sum so the rational additions are order-proof."""
-    dot = (
-        "list_sum(list_transform(list_zip("
-        "CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), "
-        "x -> x[1]*x[2]))"
-    )
-    norm = (
-        "sqrt(list_sum(list_transform(CAST({0}.embedding AS DOUBLE[]), "
-        "x -> x*x)))"
-    )
-    return f"""
-    WITH ranked AS (
-        SELECT query_id, vec_id, rel,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, vec_id) AS rank
-        FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                   CASE WHEN c.label = q.label THEN 1 ELSE 0 END AS rel,
-                   ROUND({dot} / ({norm.format('c')} * {norm.format('q')}),
-                         6) AS cosine
-            FROM embeddings c, embeddings q
-            WHERE q.vec_id < {query_cut} AND c.vec_id <> q.vec_id
-        )
-    ),
-    cum AS (
-        SELECT query_id, rank, rel,
-               SUM(rel) OVER (PARTITION BY query_id ORDER BY rank) AS cumrel
-        FROM ranked WHERE rank <= {k}
-    ),
-    perq AS (
-        SELECT query_id,
-               CAST(SUM(rel) AS BIGINT) AS n_rel_retrieved,
-               MIN(CASE WHEN rel = 1 THEN rank END) AS frr,
-               CAST(SUM(CASE WHEN rel = 1 THEN
-                        CAST(round(CAST(cumrel AS DOUBLE) / rank * 1e6)
-                             AS BIGINT) ELSE 0 END) AS BIGINT) AS ap_micro
-        FROM cum GROUP BY query_id
-    ),
-    nrel AS (
-        SELECT q.vec_id AS query_id, CAST(COUNT(*) AS BIGINT) AS n_rel_total
-        FROM embeddings q JOIN embeddings c
-          ON c.label = q.label AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < {query_cut} GROUP BY q.vec_id
-    )
-    SELECT p.query_id,
-           CAST(COALESCE(n.n_rel_total, 0) AS BIGINT) AS n_rel_total,
-           p.n_rel_retrieved,
-           CAST(COALESCE(p.frr, 0) AS BIGINT) AS first_rel_rank,
-           ROUND(CASE WHEN p.frr IS NOT NULL
-                      THEN CAST(1 AS DOUBLE) / p.frr ELSE 0.0 END,
-                 6) AS reciprocal_rank,
-           ROUND(CASE WHEN COALESCE(n.n_rel_total, 0) > 0
-                      THEN CAST(p.ap_micro AS DOUBLE) / 1e6
-                           / least(n.n_rel_total, {k})
-                      ELSE 0.0 END, 6) AS ap_at_k
-    FROM perq p LEFT JOIN nrel n ON p.query_id = n.query_id
-    ORDER BY p.query_id
-    """
-
-
-@register("retrieval_mrr_map", _mrr_map_oracle_sql(10, 5))
-def retrieval_mrr_map(spark, sf_dir):
-    """MRR and MAP@10 of brute-force cosine retrieval against
-    label-equality relevance — the order-sensitive retrieval-quality
-    rung next to ranking_ndcg_eval (reciprocal rank rewards the first
-    hit, average precision the whole prefix). Same rounded-cosine
-    ranking as embedding_cosine_topk; AP's rational terms quantize to
-    integer micro-units before the per-query sum. Scale shape: the
-    ranking is the brute baseline's broadcast cross-score (the ANN
-    tiers replace it at volume); relevance totals are one broadcast
-    self-join on the label dimension."""
-    from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    q = emb.filter(F.col("vec_id") < 5)
-    ranked = cosine_topk(emb, q, k=10)
-    labels = emb.select("vec_id", "label")
-    qlab = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("qlabel")
-    ).filter(F.col("query_id") < 5)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy("rank")
-    hits = (
-        ranked.join(F.broadcast(labels), on="vec_id")
-        .join(F.broadcast(qlab), on="query_id")
-        .withColumn(
-            "rel", (F.col("label") == F.col("qlabel")).cast("long")
-        )
-        .withColumn("cumrel", F.sum("rel").over(w))
-    )
-    ap_term = F.when(
-        F.col("rel") == 1,
-        F.round(
-            F.col("cumrel").cast("double") / F.col("rank") * 1e6, 0
-        ).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    perq = hits.groupBy("query_id").agg(
-        F.sum("rel").cast("long").alias("n_rel_retrieved"),
-        F.min(F.when(F.col("rel") == 1, F.col("rank"))).alias("frr"),
-        F.sum(ap_term).alias("ap_micro"),
-    )
-    nrel = (
-        emb.alias("c")
-        .join(
-            F.broadcast(qlab),
-            (F.col("c.label") == F.col("qlabel"))
-            & (F.col("c.vec_id") != F.col("query_id")),
-        )
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_rel_total"))
-    )
-    out = perq.join(nrel, on="query_id", how="left")
-    rr = F.when(
-        F.col("frr").isNotNull(),
-        F.lit(1.0) / F.col("frr"),
-    ).otherwise(F.lit(0.0))
-    ap = F.when(
-        F.coalesce(F.col("n_rel_total"), F.lit(0)) > 0,
-        F.col("ap_micro").cast("double")
-        / F.lit(1e6)
-        / F.least(F.col("n_rel_total"), F.lit(10)),
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        "query_id",
-        F.coalesce("n_rel_total", F.lit(0)).cast("long").alias("n_rel_total"),
-        "n_rel_retrieved",
-        F.coalesce("frr", F.lit(0)).cast("long").alias("first_rel_rank"),
-        F.round(rr, 6).alias("reciprocal_rank"),
-        F.round(ap, 6).alias("ap_at_k"),
-    ).orderBy("query_id")

@@ -1,7 +1,7 @@
 """Data-selection queries: exact stratified sampling, weighted sampling,
 corpus drift, DSIR importance selection, training shards, leakage-safe
-splits, contrastive negative pairs, annotator agreement, rank fusion and the
-k-center coreset (full DuckDB oracles — every hash is md5-derived, so the
+splits, contrastive negative pairs, annotator agreement and the k-center
+coreset (full DuckDB oracles — every hash is md5-derived, so the
 oracle reproduces the sample bit-for-bit).
 """
 
@@ -383,67 +383,6 @@ def annotator_agreement(spark, sf_dir):
     return cohens_kappa(
         labeled, "rater_len", "rater_tok", by=["lang"]
     ).orderBy("lang")
-
-
-@register(
-    "rank_fusion_select",
-    f"""
-    WITH sig AS (
-        SELECT doc_id, source,
-               CASE WHEN len({_TOKENS_SQL}) > 0
-                    THEN len(list_distinct({_TOKENS_SQL})) * 1.0
-                         / len({_TOKENS_SQL})
-                    ELSE 0.0 END AS diversity,
-               n_chars * 1.0 AS length_score
-        FROM documents
-    ),
-    ranked AS (
-        SELECT doc_id, source,
-               CAST(row_number() OVER (PARTITION BY source
-                   ORDER BY diversity DESC, doc_id ASC) AS INTEGER)
-                 AS rank_diversity,
-               CAST(row_number() OVER (PARTITION BY source
-                   ORDER BY length_score DESC, doc_id ASC) AS INTEGER)
-                 AS rank_length_score
-        FROM sig
-    )
-    SELECT doc_id, source, rank_diversity, rank_length_score,
-           ROUND(1.0 / (60 + rank_diversity)
-                 + 1.0 / (60 + rank_length_score), 6) AS rrf_score
-    FROM ranked
-    ORDER BY source, rrf_score DESC, doc_id
-    """,
-)
-def rank_fusion_select(spark, sf_dir):
-    """Reciprocal-rank fusion of two selection signals per source
-    (`operators/selection.py rrf_fuse`): lexical diversity (distinct-token
-    ratio) fused with raw length by 1/(60+rank) sums — the scale-free way
-    to combine heterogeneous quality signals into one selection order.
-    Both rank windows share the per-source partitioning, so one
-    sort-exchange serves them; the fusion arithmetic is rank-only and
-    reproduces bit-identically in the oracle."""
-    from ningaloo_turtle_etl_spark.operators.selection import rrf_fuse
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir)
-    toks = tokens("text")
-    sig = docs.select(
-        "doc_id",
-        "source",
-        F.when(
-            F.size(toks) > 0,
-            F.size(F.array_distinct(toks)) * F.lit(1.0) / F.size(toks),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("diversity"),
-        (F.col("n_chars") * F.lit(1.0)).alias("length_score"),
-    )
-    fused = rrf_fuse(
-        sig, ["diversity", "length_score"], id_col="doc_id", by=["source"]
-    )
-    return fused.select(
-        "doc_id", "source", "rank_diversity", "rank_length_score", "rrf_score"
-    ).orderBy("source", F.col("rrf_score").desc(), "doc_id")
 
 
 def _kcenter_oracle_sql(k: int = 8, d: int = 64) -> str:

@@ -1,7 +1,6 @@
 """Web-corpus curation + lexical-statistics queries: URL canonicalization
-with per-domain quota capping (C4/RefinedWeb source hygiene), all-pairs
-TF-IDF cosine similarity over an inverted index, and per-document token
-entropy. All fully DuckDB-oracled.
+with per-domain quota capping (C4/RefinedWeb source hygiene) and
+per-document token entropy. All fully DuckDB-oracled.
 
 The documents table carries no URL column, so ``url_domain_cap``
 synthesizes deterministically messy URLs from (source, doc_id) — uppercase
@@ -117,50 +116,6 @@ def url_domain_cap(spark, sf_dir):
     return capped.select(
         "doc_id", "url_norm", "domain", F.col("domain_rank").cast("int").alias("domain_rank")
     )
-
-
-@register(
-    "tfidf_cosine_sim_pairs",
-    r"""
-    WITH pairs AS (
-      SELECT doc_id AS id,
-             unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    x -> x <> '')) AS term
-      FROM documents
-    ),
-    tf AS (SELECT id, term, COUNT(*) AS tf FROM pairs GROUP BY 1, 2),
-    df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-    nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-    w AS (
-      SELECT id, term, tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0) AS w,
-             df * 1.0 / n_docs AS df_frac
-      FROM tf JOIN df USING (term) CROSS JOIN nd
-    ),
-    nrm AS (SELECT id, sqrt(SUM(w * w)) AS l2 FROM w GROUP BY 1),
-    p AS (
-      SELECT term, id, round(w / l2, 9) AS wn
-      FROM w JOIN nrm USING (id) WHERE df_frac <= 0.5
-    ),
-    sim AS (
-      SELECT a.id AS id_a, b.id AS id_b, round(SUM(a.wn * b.wn), 6) AS cosine
-      FROM p a JOIN p b ON a.term = b.term AND a.id < b.id
-      GROUP BY 1, 2
-    )
-    SELECT id_a, id_b, cosine FROM sim WHERE cosine >= 0.15
-    ORDER BY id_a, id_b
-    """,
-)
-def tfidf_cosine_sim_pairs(spark, sf_dir):
-    """All-pairs TF-IDF cosine >= 0.15 over the documents table via the
-    inverted-index self-join (`operators/similarity.py
-    tfidf_cosine_pairs`) — the lexical near-duplicate / related-document
-    detector complementing MinHash (set overlap) and embedding cosine
-    (semantic). The df<=0.5N cut keeps the posting self-join off the
-    stopword-grade terms that dominate sum(df^2)."""
-    from ningaloo_turtle_etl_spark.operators.similarity import tfidf_cosine_pairs
-
-    docs = load_table(spark, "documents", sf_dir)
-    return tfidf_cosine_pairs(docs, threshold=0.15, max_df_frac=0.5)
 
 
 @register(

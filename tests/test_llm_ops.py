@@ -18,7 +18,6 @@ from ningaloo_turtle_etl_spark.operators.dedup import (
 from ningaloo_turtle_etl_spark.operators.multimodal import (
     documents_as_media,
     extract_image_features,
-    sample_frames,
 )
 from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
 
@@ -263,44 +262,6 @@ def test_multimodal_stub_and_fake_paths(spark, docs):
     # Determinism: same bytes → same features (1 and 2 have identical text).
     assert by_id[1]["feature"] == by_id[2]["feature"]
 
-    frames = sample_frames(media, every_n_bytes=32, max_frames=3).collect()
-    assert {r["media_id"] for r in frames} == {1, 2, 3, 4, 5}
-    assert all(r["frame_size"] <= 32 for r in frames)
-    assert max(r["frame_no"] for r in frames) <= 2
-
-
-def test_multimodal_resize_and_audio(spark, docs):
-    from ningaloo_turtle_etl_spark.operators.multimodal import (
-        extract_audio_features,
-        resize_images,
-    )
-
-    media = documents_as_media(
-        docs.withColumns({"source": F.lit("test"), "lang": F.lit("en"), "n_chars": F.length("text")})
-    )
-    with pytest.raises(NotImplementedError):
-        resize_images(media)  # stub default, same honesty tier as decode
-    with pytest.raises(NotImplementedError):
-        extract_audio_features(media)
-
-    resized = {r["media_id"]: r for r in resize_images(media, 16, 12, decoder="fake").collect()}
-    assert set(resized) == {1, 2, 3, 4, 5}
-    for r in resized.values():
-        assert (r["width"], r["height"]) == (16, 12)
-        assert len(bytes(r["pixels"])) == 16 * 12  # exact raw frame size
-    # Determinism: identical bytes (docs 1 and 2) → identical resized frame.
-    assert bytes(resized[1]["pixels"]) == bytes(resized[2]["pixels"])
-
-    audio = {r["media_id"]: r for r in extract_audio_features(media, decoder="fake").collect()}
-    a = audio[1]
-    n_bytes = len(BASE.encode())
-    assert a["n_samples"] == n_bytes  # int8 PCM: one sample per byte
-    assert abs(a["duration_sec"] - n_bytes / 8000) < 1e-12
-    assert a["rms"] > 0 and len(a["energy_bands"]) == 4
-    # Parseval-ish sanity: band energies sum to total energy = n·rms².
-    assert abs(sum(a["energy_bands"]) - a["n_samples"] * a["rms"] ** 2) < 1e-6
-    assert audio[1]["rms"] == audio[2]["rms"]
-
 
 def test_incremental_dedup_against_snapshot(spark):
     from ningaloo_turtle_etl_spark.operators.dedup import incremental_exact_dedup
@@ -342,24 +303,6 @@ def test_best_cluster_representatives_keeps_highest_quality(spark):
     )
     # Cluster {1,2,3}: max quality 0.9 tie between 2 and 3 → min id 2.
     assert kept == [2, 4, 5]
-
-
-def test_unigram_lm_scores_match_numpy(spark):
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.text import unigram_lm_scores
-
-    rows = [(1, "a a b c"), (2, "a rare rare"), (3, "b b a")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    # Corpus counts: a=4, b=3, rare=2, c=1; N=10. vocab_size=3 → {a, b, rare}
-    # (count desc, word asc); OOV floor p = 1/10 applies to c.
-    out = {r["doc_id"]: r for r in unigram_lm_scores(df, vocab_size=3).collect()}
-    p = {"a": 0.4, "b": 0.3, "rare": 0.2, "c": 0.1}
-    for doc_id, text in rows:
-        toks = text.split()
-        ref = sum(-math.log(p[t]) for t in toks) / len(toks)
-        assert out[doc_id]["n_tokens"] == len(toks)
-        assert abs(out[doc_id]["avg_nll"] - ref) < 1e-6, doc_id
 
 
 def test_dedup_cache_scope_releases_storage(spark, docs):
@@ -430,44 +373,6 @@ def test_duplicate_passage_removal_policy(spark):
     assert got[5] == (1, 0, "q r")
 
 
-def test_tfidf_top_terms_matches_reference(spark):
-    """TF-IDF scores equal the hand-computed smoothed-idf values and the
-    per-doc ranking picks the distinctive (low-df) terms first."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.text import tfidf_top_terms
-
-    texts = {
-        1: "apple apple banana common common",
-        2: "banana cherry common common common",
-        3: "durian common apple",
-    }
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    out = tfidf_top_terms(df, n_top=2).collect()
-    n_docs = len(texts)
-    # document frequencies
-    dfreq: dict[str, int] = {}
-    for t in texts.values():
-        for w in set(t.split()):
-            dfreq[w] = dfreq.get(w, 0) + 1
-
-    def score(doc, w):
-        tf = texts[doc].split().count(w)
-        return round(tf * (math.log((n_docs + 1) / (dfreq[w] + 1)) + 1), 6)
-
-    for r in out:
-        assert r["tfidf"] == score(r["doc_id"], r["term"]), (r["doc_id"], r["term"])
-    # doc 3: 'durian' (df=1) must outrank 'common' (df=3)
-    doc3 = [r["term"] for r in sorted(
-        (r for r in out if r["doc_id"] == 3), key=lambda r: r["rank"])]
-    assert doc3[0] == "durian"
-    # every doc yields exactly min(2, n_distinct_terms) rows
-    per = {}
-    for r in out:
-        per[r["doc_id"]] = per.get(r["doc_id"], 0) + 1
-    assert per == {1: 2, 2: 2, 3: 2}
-
-
 def test_minhash_simhash_oracles_survive_mixed_case(spark, tmp_path):
     # Regression (r04 review): the oracles once tokenized lower(text) while
     # the Spark pipelines hash original-case text — the parity gate passed
@@ -511,43 +416,6 @@ def test_minhash_simhash_oracles_survive_mixed_case(spark, tmp_path):
             a, o = sdf[c], odf[c].astype(sdf[c].dtype)
             same = a.round(6).equals(o.round(6)) if a.dtype.kind == "f" else a.equals(o)
             assert same, (name, c)
-
-
-def test_bigram_lm_scores_match_python_reference(spark):
-    # Interpolated bigram LM vs a direct Python reference on a tiny corpus;
-    # fluent (repeated-bigram) docs must score lower avg NLL than a
-    # shuffled-token doc over the same vocabulary.
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.text import bigram_lm_scores
-
-    texts = {
-        1: "the cat sat on the mat",
-        2: "the cat sat on the mat",
-        3: "mat the on sat cat the",
-        4: "a completely different sentence here",
-    }
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    got = {r["doc_id"]: r for r in bigram_lm_scores(df, lambda_=0.7).collect()}
-
-    toks = {k: v.split() for k, v in texts.items()}
-    from collections import Counter
-
-    uc = Counter(w for t in toks.values() for w in t)
-    bc = Counter((t[i], t[i + 1]) for t in toks.values() for i in range(len(t) - 1))
-    pc = Counter()
-    for (p, _), c in bc.items():
-        pc[p] += c
-    n_total, v_size = sum(uc.values()), len(uc)
-    for doc_id, t in toks.items():
-        nlls = []
-        for i in range(len(t) - 1):
-            p_bi = bc[(t[i], t[i + 1])] / pc[t[i]]
-            p_uni = (uc[t[i + 1]] + 1) / (n_total + v_size + 1)
-            nlls.append(-math.log(0.7 * p_bi + 0.3 * p_uni))
-        assert got[doc_id]["n_bigrams"] == len(nlls)
-        assert abs(got[doc_id]["avg_nll"] - sum(nlls) / len(nlls)) < 1e-6
-    assert got[1]["avg_nll"] < got[3]["avg_nll"]  # fluent beats shuffled
 
 
 def test_gopher_repetition_stats_matches_reference(spark):
@@ -605,38 +473,6 @@ def test_gopher_repetition_stats_matches_reference(spark):
     assert got[1]["repetition_ok"] == 0  # spam-run fails the top-2gram rule
     assert got[2]["repetition_ok"] == 1
     assert got[3]["repetition_ok"] == 1  # no grams → all fracs 0.0
-
-
-def test_perplexity_buckets_orders_langs_into_terciles(spark):
-    """Head bucket scores strictly below tail within each lang; bucket sizes
-    are near-terciles; every scored doc lands in exactly one bucket."""
-    import random
-
-    from ningaloo_turtle_etl_spark.operators.text import perplexity_buckets
-
-    rng = random.Random(7)
-    words = ["aa", "bb", "cc", "dd", "ee", "ff"]
-    rows = []
-    for i in range(60):
-        lang = "en" if i % 2 == 0 else "de"
-        # fluent docs repeat one bigram; noisy docs shuffle uniformly
-        if i % 3 == 0:
-            text = "aa bb " * 6
-        else:
-            text = " ".join(rng.choice(words) for _ in range(12))
-        rows.append((i, text.strip(), lang))
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = perplexity_buckets(df).collect()
-    assert len(out) == 60  # every doc has >=1 bigram → all scored
-    by = {}
-    for r in out:
-        by.setdefault((r["lang"], r["bucket"]), []).append(r["avg_nll"])
-    for lang in ("en", "de"):
-        assert set(b for (l, b) in by if l == lang) == {"head", "middle", "tail"}
-        assert max(by[(lang, "head")]) <= min(by[(lang, "tail")])
-        n = sum(len(v) for (l, b), v in by.items() if l == lang)
-        for b in ("head", "middle", "tail"):
-            assert len(by[(lang, b)]) >= n // 6  # near-tercile, ties allowed
 
 
 def test_substring_dedup_matches_python_reference(spark):
@@ -777,148 +613,6 @@ def test_substring_content_defined_sampling_is_phase_free(spark):
         assert out[i][1] >= n_sampled, out
 
 
-def test_zipf_fit_matches_numpy_least_squares(spark):
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.text import zipf_fit
-
-    rows = [
-        (1, "s0", "the the the the cat cat sat on on a mat"),
-        (2, "s0", "the quick cat ran and the dog sat"),
-        (3, "s1", "alpha beta beta gamma gamma gamma delta"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {
-        r["source"]: r for r in zipf_fit(df, group_col="source").collect()
-    }
-    from collections import Counter
-
-    for src in ("s0", "s1"):
-        freqs = Counter(
-            w
-            for _i, s, t in rows
-            if s == src
-            for w in t.lower().split()
-        )
-        ordered = sorted(freqs.items(), key=lambda kv: (-kv[1], kv[0]))
-        # same micro-unit rounding as the operator
-        x = np.array(
-            [round(np.log(i + 1) * 1e6) / 1e6 for i in range(len(ordered))]
-        )
-        y = np.array([round(np.log(f) * 1e6) / 1e6 for _w, f in ordered])
-        slope, intercept = np.polyfit(x, y, 1)
-        r = np.corrcoef(x, y)[0, 1]
-        g = got[src]
-        assert g["n_types"] == len(ordered)
-        assert g["n_tokens"] == sum(freqs.values())
-        assert abs(g["zipf_slope"] - slope) < 1e-5
-        assert abs(g["zipf_intercept"] - intercept) < 1e-5
-        assert abs(g["fit_r2"] - r * r) < 1e-5
-        assert g["zipf_slope"] < 0  # frequency falls with rank
-
-
-def test_phrase_search_matches_string_scan(spark):
-    """Index-path phrase occurrences must equal a naive token-scan count,
-    including multi-token phrases, overlapping matches, and absent terms."""
-    from ningaloo_turtle_etl_spark.operators.search import (
-        build_inverted_index,
-        phrase_occurrences,
-        top_bigram,
-    )
-
-    rows = [
-        (1, "big data big data big data systems"),
-        (2, "the big data platform handles big data"),
-        (3, "data big is reversed here"),
-        (4, "big big big"),  # overlapping unigram runs
-        (5, "unrelated words only"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = build_inverted_index(df)
-
-    def scan(phrase):
-        out = {}
-        for did, t in rows:
-            toks = t.lower().split()
-            n = sum(
-                1
-                for i in range(len(toks) - len(phrase) + 1)
-                if toks[i : i + len(phrase)] == phrase
-            )
-            if n:
-                out[did] = n
-        return out
-
-    for phrase in (
-        ["big", "data"],
-        ["big", "data", "big"],
-        ["big", "big"],
-        ["missing", "term"],
-        ["data"],
-    ):
-        got = {
-            r["doc_id"]: r["n_occurrences"]
-            for r in phrase_occurrences(idx, phrase).collect()
-        }
-        assert got == scan(phrase), phrase
-
-    assert top_bigram(df) == ("big", "data")
-    # index invariants: df counts docs, tf counts occurrences
-    row = {
-        (r["term"], r["doc_id"]): (r["tf"], r["df"], r["positions"])
-        for r in idx.collect()
-    }
-    assert row[("big", 4)] == (3, 4, [0, 1, 2])
-    assert row[("data", 3)][1] == 3  # 'data' appears in docs 1,2,3
-
-
-def test_bm25_matches_python_reference(spark):
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.search import (
-        bm25_topk,
-        build_inverted_index,
-    )
-
-    rows = [
-        (1, "big data big data systems"),
-        (2, "the big platform"),
-        (3, "data data data data"),
-        (4, "nothing relevant"),
-        (5, "big"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = build_inverted_index(df)
-    got = bm25_topk(idx, ["big", "data"], k=3).collect()
-
-    k1, b = 1.2, 0.75
-    toks = {d: t.lower().split() for d, t in rows}
-    n = len(rows)
-    avgdl = sum(len(t) for t in toks.values()) / n
-    dfs = {
-        q: sum(1 for t in toks.values() if q in t) for q in ("big", "data")
-    }
-    exp = {}
-    for d, t in toks.items():
-        micro = []
-        for qt in ("big", "data"):
-            tf = t.count(qt)
-            if not tf:
-                continue
-            idf = math.log((n - dfs[qt] + 0.5) / (dfs[qt] + 0.5) + 1.0)
-            sc = idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(t) / avgdl))
-            micro.append(round(sc * 1e6))
-        if micro:
-            exp[d] = (round(sum(micro) / 1e6, 6), len(micro))
-    order = sorted(exp.items(), key=lambda kv: (-kv[1][0], kv[0]))[:3]
-    assert [
-        (r["doc_id"], r["bm25_score"], r["n_query_terms_matched"])
-        for r in got
-    ] == [(d, s, m) for d, (s, m) in order]
-    # doc 4 matches nothing and must never appear
-    assert 4 not in {r["doc_id"] for r in got}
-
-
 def test_edit_similarity_join_complete_vs_bruteforce(spark):
     """Prefix filtering must lose NOTHING versus brute-force levenshtein —
     the theorem says one edit disturbs at most q grams, so strings within
@@ -966,42 +660,6 @@ def test_edit_similarity_join_complete_vs_bruteforce(spark):
             if lev(ta, tb) <= k
         }
         assert got == exp, (k, got.keys() ^ exp.keys())
-
-
-def test_heaps_fit_matches_numpy_and_saturates_on_templates(spark):
-    import numpy as np
-
-    from ningaloo_turtle_etl_spark.operators.text import heaps_fit
-
-    rng_words = [f"w{i}" for i in range(200)]
-    rows = []
-    # 'fresh': every doc introduces mostly new words → beta near 1
-    for d in range(10):
-        rows.append((d, "fresh", " ".join(rng_words[d * 20:(d + 1) * 20])))
-    # 'template': same 5 words forever → beta near 0
-    for d in range(10):
-        rows.append((100 + d, "template", "a b c d e"))
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {r["source"]: r for r in heaps_fit(df, group_col="source").collect()}
-
-    # independent curve + polyfit reference for 'fresh'
-    cum_toks, cum_types, seen, t = [], [], set(), 0
-    for d in range(10):
-        ws = rng_words[d * 20:(d + 1) * 20]
-        t += len(ws)
-        seen.update(ws)
-        cum_toks.append(t)
-        cum_types.append(len(seen))
-    x = np.array([round(np.log(v) * 1e6) / 1e6 for v in cum_toks])
-    y = np.array([round(np.log(v) * 1e6) / 1e6 for v in cum_types])
-    beta, logk = np.polyfit(x, y, 1)
-    g = got["fresh"]
-    assert abs(g["heaps_beta"] - beta) < 1e-5
-    assert abs(g["heaps_log_k"] - logk) < 1e-5
-    assert g["total_types"] == 200 and g["total_tokens"] == 200
-    # templates saturate immediately: growth slope ~0
-    assert got["template"]["heaps_beta"] < 0.05
-    assert got["template"]["total_types"] == 5
 
 
 def test_containment_catches_subset_jaccard_misses(spark):
@@ -2203,64 +1861,6 @@ def test_dataset_digest_order_invariant_and_change_sensitive(spark):
         dataset_digest(df, [])
 
 
-def test_kneser_ney_matches_python_replica_and_continuation_property(spark):
-    import math
-    from collections import Counter
-
-    from ningaloo_turtle_etl_spark.operators.text import (
-        kneser_ney_bigram_scores,
-    )
-
-    # 'paris' and 'francisco' appear equally often, but francisco only
-    # ever follows 'san' — KN's continuation backoff must downweight it.
-    docs = [
-        (1, "san francisco is big and paris is old"),
-        (2, "i saw san francisco and then paris again"),
-        (3, "visit paris in spring visit san francisco in fall"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r
-        for r in kneser_ney_bigram_scores(df, discount=0.75).collect()
-    }
-
-    # pure-Python replica
-    toks = {i: t.split() for i, t in docs}
-    bc = Counter(
-        (ts[j], ts[j + 1]) for ts in toks.values() for j in range(len(ts) - 1)
-    )
-    pc = Counter()
-    n1p = Counter()
-    cont = Counter()
-    for (p_, w_), c in bc.items():
-        pc[p_] += c
-        n1p[p_] += 1
-        cont[w_] += 1
-    B = len(bc)
-    V = len({t for ts in toks.values() for t in ts})
-    D = 0.75
-
-    def pkn(p_, w_):
-        pcont = (cont.get(w_, 0) + 1) / (B + V)
-        if pc.get(p_, 0) == 0:
-            return pcont
-        return max(bc.get((p_, w_), 0) - D, 0) / pc[p_] + D * n1p[p_] / pc[
-            p_
-        ] * pcont
-
-    for i, ts in toks.items():
-        nlls = [-math.log(pkn(ts[j], ts[j + 1])) for j in range(len(ts) - 1)]
-        assert out[i]["n_bigrams"] == len(nlls)
-        assert abs(out[i]["avg_nll"] - sum(nlls) / len(nlls)) < 1e-6
-    # the continuation property: equal unigram frequency, but
-    # francisco's continuation count (1 context) < paris's (3 contexts)
-    uni = Counter(t for ts in toks.values() for t in ts)
-    assert uni["francisco"] == uni["paris"]
-    assert cont["francisco"] == 1 and cont["paris"] > 1
-    with pytest.raises(ValueError):
-        kneser_ney_bigram_scores(df, discount=1.5)
-
-
 def test_ppjoin_completeness_vs_bruteforce(spark):
     """PPJoin prefix filtering must be EXACT: identical pair set and
     jaccard values to the all-pairs brute force, at any threshold."""
@@ -2453,108 +2053,6 @@ def test_winnowing_sub_k_docs_emit_no_fingerprints(spark):
         df, k=3, window=4, threshold=0.5
     ).collect()
     assert pairs == []
-
-
-def test_good_turing_hand_counts(spark):
-    """'a a a b b c d': N_1=2, N_2=1, N_3=1, N=7 — r*(1) = 2·N_2/N_1 = 1,
-    r*(2) = 3·N_3/N_2 = 3, r*(3) NULL (no N_4), unseen mass 2/7."""
-    from ningaloo_turtle_etl_spark.operators.text import good_turing_counts
-
-    df = spark.createDataFrame(
-        [(1, "a a a b b c d")], "doc_id long, text string"
-    )
-    out = {r["r"]: r for r in good_turing_counts(df, max_r=5).collect()}
-    assert out[0]["r_star"] == out[0]["gt_mass"] == round(2 / 7, 6)
-    assert out[1]["n_r"] == 2 and out[1]["r_star"] == 1.0
-    assert out[2]["n_r"] == 1 and out[2]["r_star"] == 3.0
-    assert out[3]["n_r"] == 1 and out[3]["r_star"] is None
-    assert out[1]["gt_mass"] == round(2 / 7, 6)
-    assert out[3]["gt_mass"] == round(3 / 7, 6)
-    # sub-n docs emit no n-grams in n-gram mode
-    tiny = spark.createDataFrame(
-        [(1, "a b"), (2, "x y z x y z")], "doc_id long, text string"
-    )
-    out3 = {
-        r["r"]: r
-        for r in good_turing_counts(tiny, max_r=5, ngram_n=3).collect()
-    }
-    # doc 1 (2 tokens < 3) contributes nothing; doc 2 has 4 trigrams:
-    # 'x y z' x2, 'y z x', 'z x y'
-    assert out3[1]["n_r"] == 2 and out3[2]["n_r"] == 1
-
-
-def test_rake_keywords_hand_case(spark):
-    """'deep learning of deep learning and the quick fox': stopword
-    splits give phrases 'deep learning' x2 and 'quick fox'; all words
-    score deg/freq = 2 so both phrases score 4.0; run-on guard drops
-    over-long phrases."""
-    from ningaloo_turtle_etl_spark.operators.text import rake_keywords
-
-    df = spark.createDataFrame(
-        [(1, "deep learning of deep learning and the quick fox")],
-        "doc_id long, text string",
-    )
-    out = {r["phrase"]: r for r in rake_keywords(df, top_n=10).collect()}
-    assert set(out) == {"deep learning", "quick fox"}
-    assert out["deep learning"]["n_occurrences"] == 2
-    assert out["deep learning"]["rake_score"] == 4.0
-    assert out["quick fox"]["rake_score"] == 4.0
-    # punctuation also splits; the 5-word run is dropped by the guard
-    df2 = spark.createDataFrame(
-        [(1, "alpha beta; gamma delta epsilon zeta eta")],
-        "doc_id long, text string",
-    )
-    out2 = {r["phrase"] for r in rake_keywords(df2, top_n=10).collect()}
-    assert out2 == {"alpha beta"}
-
-
-def test_ranking_metrics_hand_values_and_weight_exactness(spark):
-    """NDCG/precision/MRR against hand-computed values on a fixed ranked
-    list, including the no-relevant query (null mrr/zero ndcg) and the
-    IDCG cap at min(n_rel, k)."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.similarity import (
-        ranking_metrics,
-    )
-
-    # labels: queries 1,2,3; corpus 10-15
-    labels = spark.createDataFrame(
-        [
-            (1, "a"), (2, "b"), (3, "c"),
-            (10, "a"), (11, "a"), (12, "b"), (13, "b"), (14, "b"),
-            (15, "z"),
-        ],
-        "vec_id long, label string",
-    )
-    # ranked@3: q1 hits at ranks 1 and 3; q2 hits at rank 2 only;
-    # q3 has no relevant anywhere (label 'c' unique)
-    ranked = spark.createDataFrame(
-        [
-            (1, 10, 1), (1, 12, 2), (1, 11, 3),
-            (2, 10, 1), (2, 13, 2), (2, 15, 3),
-            (3, 10, 1), (3, 11, 2), (3, 12, 3),
-        ],
-        "query_id long, vec_id long, rank int",
-    )
-    out = {
-        r["query_id"]: r
-        for r in ranking_metrics(ranked, labels, k=3).collect()
-    }
-    w = [int(round(1e9 / math.log2(i + 1))) for i in (1, 2, 3)]
-    # q1: label 'a' has 3 members -> n_rel = 2; dcg = w1 + w3;
-    #     idcg = w1 + w2 (capped at n_rel=2)
-    assert out[1]["n_rel_corpus"] == 2 and out[1]["hits_at_k"] == 2
-    assert out[1]["mrr"] == 1.0
-    assert abs(out[1]["ndcg_at_k"] - round((w[0] + w[2]) / (w[0] + w[1]), 6)) < 1e-9
-    # q2: label 'b' has 4 members -> n_rel = 3; dcg = w2; idcg = all three
-    assert out[2]["n_rel_corpus"] == 3 and out[2]["hits_at_k"] == 1
-    assert out[2]["mrr"] == 0.5
-    assert abs(out[2]["ndcg_at_k"] - round(w[1] / (w[0] + w[1] + w[2]), 6)) < 1e-9
-    assert abs(out[2]["precision_at_k"] - round(1 / 3, 6)) < 1e-6
-    # q3: nothing relevant in the corpus -> ndcg null, mrr null, hits 0
-    assert out[3]["n_rel_corpus"] == 0 and out[3]["hits_at_k"] == 0
-    assert out[3]["ndcg_at_k"] is None and out[3]["mrr"] is None
 
 
 def test_pca_power_component_replica_and_planted_direction(spark):

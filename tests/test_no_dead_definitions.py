@@ -1,11 +1,13 @@
-"""Every top-level definition in the package has a caller.
+"""Every top-level definition in the package and every test helper has a
+caller.
 
 A static scan, no Spark session: walk the AST of every Python file in the
 package, the tests, the scripts, perfbench and the driver entry, collect
 every name they use, and require a use for each undecorated top-level
-``def``/``class`` and each top-level assignment in the package. Decorated
-definitions (``@register`` queries are reached through the registry) and
-dunder names are exempt.
+``def``/``class`` and each top-level assignment in the package and in
+``tests/``. Decorated definitions (``@register`` queries are reached
+through the registry, ``@pytest.fixture`` helpers through pytest), dunder
+names and ``test_`` functions are exempt.
 
 The scan reads the AST rather than the token stream: names used inside
 f-string SQL are not NAME tokens on Python 3.11, so a token scan would
@@ -19,7 +21,8 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "ningaloo_turtle_etl_spark"
-SCANNED = [PACKAGE, ROOT / "tests", ROOT / "scripts", ROOT / "perfbench"]
+TESTS = ROOT / "tests"
+SCANNED = [PACKAGE, TESTS, ROOT / "scripts", ROOT / "perfbench"]
 
 
 def _sources() -> list[Path]:
@@ -67,19 +70,29 @@ def _definitions(tree: ast.Module) -> list[tuple[str, int]]:
     return [(n, line) for n, line in defs if not n.startswith("__")]
 
 
-def test_every_package_definition_has_a_use():
+def _dead_definitions(root: Path) -> list[tuple[str, str]]:
+    """(location, name) of each definition under ``root`` with no use."""
     used: set[str] = set()
-    package_defs = []
+    defs = []
     for path in _sources():
         tree = ast.parse(path.read_text(), filename=str(path))
         used |= _used_names(tree)
-        if PACKAGE in path.parents:
+        if root in path.parents:
             rel = path.relative_to(ROOT)
-            package_defs += [(rel, n, line) for n, line in _definitions(tree)]
-    assert package_defs, "scan found no package definitions"
-    dead = [
-        f"{rel}:{line} {name}"
-        for rel, name, line in package_defs
-        if name not in used
-    ]
+            defs += [(rel, n, line) for n, line in _definitions(tree)]
+    assert defs, f"scan found no definitions under {root.name}"
+    return [(f"{rel}:{line}", name) for rel, name, line in defs if name not in used]
+
+
+def test_every_package_definition_has_a_use():
+    dead = [f"{at} {name}" for at, name in _dead_definitions(PACKAGE)]
     assert not dead, "definitions with no use:\n" + "\n".join(dead)
+
+
+def test_every_test_helper_has_a_use():
+    dead = [
+        f"{at} {name}"
+        for at, name in _dead_definitions(TESTS)
+        if not name.startswith("test_")
+    ]
+    assert not dead, "test helpers with no use:\n" + "\n".join(dead)

@@ -196,23 +196,6 @@ def test_weighted_sample_plan_is_take_ordered(spark):
     assert "Exchange" not in plan  # map-side keying + per-partition heaps only
 
 
-def test_tfidf_plan_has_group_limit_and_broadcast_docfreq(spark):
-    from ningaloo_turtle_etl_spark.operators.text import tfidf_top_terms
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, "documents", SF_DIR)
-    plan = (
-        tfidf_top_terms(docs, n_top=3)._jdf.queryExecution().executedPlan().toString()
-    )
-    # top-k per doc runs under the WindowGroupLimit pushdown (rank filter
-    # applied map-side before the window shuffle), and the docfreq dim
-    # joins as a broadcast — no sort-merge join anywhere.
-    assert "WindowGroupLimit" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_minhash_md5_family_plan_shape(spark):
     # The oracle-family pipeline must keep the scale-critical shapes of the
     # xxhash64 family: hash-joined band buckets (never a nested loop /
@@ -362,16 +345,6 @@ def test_table_digest_single_aggregate_no_extra_exchange(spark):
     # orderBy's range exchange); no join, no Python
     assert plan.count("Exchange") <= 2
     assert "Join" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_kneser_ney_counts_stay_on_type_grain(spark):
-    plan = plan_of(spark, "kneser_ney_lm_scores")
-    # the KN statistics aggregate the bigram-TYPE table; the count-table
-    # scoring joins are hash equi-joins (the only nested-loop join is the
-    # 1-row totals broadcast — the standard scalar-fold cross join)
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") >= 3
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 

@@ -1,112 +1,14 @@
-"""r12 family pins: scipy-free Python replays of the new operators at
-sf0.001 — query-likelihood retrieval, MRR/MAP and the HMM Viterbi
-decode."""
+"""The HMM Viterbi decode pinned by a scipy-free Python replay at
+sf0.001."""
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
 import pyspark.sql.functions as F
 
 from ningaloo_turtle_etl_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
-
-
-def test_query_likelihood_replay(spark):
-    from ningaloo_turtle_etl_spark.operators.search import (
-        build_inverted_index,
-        query_likelihood_topk,
-        top_bigram,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import tokens  # noqa: F401
-
-    docs = load_table(spark, "documents", SF_DIR)
-    a, b = top_bigram(docs)
-    idx = build_inverted_index(docs)
-    got = query_likelihood_topk(idx, [a, b], k=10, mu=50.0).collect()
-    # python replay from the raw docs
-    import re
-
-    corpus = {
-        r["doc_id"]: [
-            t for t in re.split(r"\s+", r["text"].lower()) if t != ""
-        ]
-        for r in docs.select("doc_id", "text").collect()
-    }
-    q = sorted({a, b})
-    ctot = sum(len(t) for t in corpus.values())
-    ctf = {
-        t: sum(doc.count(t) for doc in corpus.values()) for t in q
-    }
-    scores = {}
-    matched = {}
-    for d, toks in corpus.items():
-        if not any(t in toks for t in q):
-            continue
-        s = 0
-        m = 0
-        for t in q:
-            tf = toks.count(t)
-            m += 1 if tf else 0
-            s += round(
-                math.log(
-                    (tf + 50.0 * (ctf[t] / ctot)) / (len(toks) + 50.0)
-                )
-                * 1e6
-            )
-        scores[d] = s
-        matched[d] = m
-    top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert [(r["doc_id"], r["ql_score"], r["n_query_terms_matched"])
-            for r in got] == [
-        (d, round(s / 1e6, 6), matched[d]) for d, s in top
-    ]
-
-
-def test_retrieval_mrr_map_replay(spark):
-    from ningaloo_turtle_etl_spark.queries.llm_ops import retrieval_mrr_map
-
-    got = {r["query_id"]: r for r in retrieval_mrr_map(spark, SF_DIR).collect()}
-    emb = load_table(spark, "embeddings", SF_DIR).collect()
-    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64) for r in emb}
-    labs = {r["vec_id"]: r["label"] for r in emb}
-    for qid in range(5):
-        qv = vecs[qid]
-        qn = math.sqrt(float((qv * qv).sum()))
-        scored = sorted(
-            (
-                -round(
-                    float(np.dot(vecs[c], qv))
-                    / (math.sqrt(float((vecs[c] * vecs[c]).sum())) * qn),
-                    6,
-                ),
-                c,
-            )
-            for c in vecs
-            if c != qid
-        )
-        top = [c for _, c in scored[:10]]
-        rels = [1 if labs[c] == labs[qid] else 0 for c in top]
-        n_rel_total = sum(1 for c in vecs if c != qid and labs[c] == labs[qid])
-        frr = next((i + 1 for i, r in enumerate(rels) if r), 0)
-        cum = 0
-        ap_micro = 0
-        for i, r in enumerate(rels):
-            if r:
-                cum += 1
-                ap_micro += round(cum / (i + 1) * 1e6)
-        rr = round(1.0 / frr, 6) if frr else 0.0
-        ap = (
-            round(ap_micro / 1e6 / min(n_rel_total, 10), 6)
-            if n_rel_total
-            else 0.0
-        )
-        g = got[qid]
-        assert g["n_rel_total"] == n_rel_total
-        assert g["first_rel_rank"] == frr
-        assert abs(g["reciprocal_rank"] - rr) < 1e-9
-        assert abs(g["ap_at_k"] - ap) < 1e-9
 
 
 def test_hmm_viterbi_replay(spark):

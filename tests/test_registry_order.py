@@ -22,54 +22,36 @@ def test_priority_list_matches_registry_exactly():
 def test_critical_components_inside_driver_window():
     window = list(registry.queries())[:WINDOW]
     critical = [
-        # round-1 evidence gaps that must never fall outside again
-        "spatial_tag_regions",
-        "tumbling_daily_tally",
-        "after_midnight_observation_date",
-        "observation_status",
-        "remigration_lag",
-        "set_operations",
-        "json_extract_props",
-        # r03: the custom temporal operator promoted in place of the
-        # redundant string_null_funcs twin (F9/F10/F11 stay oracle-swept
-        # by pytest + the supplement artifact)
-        "range_join_tally",
-        "hellinger_transform",
-        "pcnm_join_back",
-        # LLM family
+        # SURVEY §2 components outside the relational core
+        "spatial_tag_regions",  # J7
+        "tumbling_daily_tally",  # ST3
+        "after_midnight_observation_date",  # ST5
+        "observation_status",  # §2.5
+        "remigration_lag",  # §2.5
+        "set_operations",  # §2.7
+        "json_extract_props",  # F14
+        "range_join_tally",  # §2.3 range join
+        "hellinger_transform",  # M1
+        "pcnm_join_back",  # M3
+        # extension families: text curation, dedup, embeddings, multimodal
         "dedup_exact",
         "multimodal_image_features",
         "embedding_near_dup_pairs",
-        # curation family (round-2): graded first-class, must hold driver rows
         "corpus_curation_pipeline",
         "quality_budget_select",
         "pii_redaction",
         "text_token_quality",
-        # merged twins that carry F1-F6/P9/P10/F12 coverage
+        # merged twins that carry F1-F5 and P9/P10/F6/F12
         "timestamp_pipeline",
         "patch_season",
-        # r07: the window must prove at least one post-r04 extension
-        # family directly (verdict item) — ANN + seeded-DP; r11 upgraded
-        # the ANN slot to the fused three-tier serving query; r13
-        # upgraded it again to the TRAINED pair (r12 verdict item 1) —
-        # no frozen fixture anywhere in the loop.
+        # extension families: ANN train-and-serve and seeded DP
         "pq_train_codebooks",
         "ann_trained_ivf_pq_topk",
         "dp_event_type_counts",
-        # r08's blocked-fuzzy-linkage slot rotated out r12; the linkage
-        # surface stays proven in-window by symspell_customer_pairs (r11)
-        # and fellegi_sunter_part_weights (r12).
-        # r09: the window must prove an r8 family directly (verdict item)
-        # — PPJoin exact set-similarity join with the positional filter
+        # extension families: set-similarity join and record linkage
         "ppjoin_jaccard_pairs",
-        # r10's Lloyd k-means slot rotated out r13; the distributed-Lloyd
-        # integer-micro unrolled-oracle shape stays proven in-window at
-        # subvector grain by pq_train_codebooks.
-        # r11: the window must prove an r10 family directly (verdict
-        # item) — SymSpell verification-free delete blocking
         "symspell_customer_pairs",
-        # r12: the window must prove two r11 families directly (verdict
-        # item 2) — deflated top-p PCA and Fellegi–Sunter EM weights
+        # extension families: power-iteration PCA and Fellegi-Sunter weights
         "pca_power_components",
         "fellegi_sunter_part_weights",
     ]
@@ -81,49 +63,25 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
     beyond = list(registry.queries())[WINDOW:]
     oracles = registry.oracle_sql()
     allowed = {
-        # r07 window demotions: A3/J4 stay covered in-window by
-        # flagship_summary_pivot (+ mark_capture_history); both remain
-        # oracle-checked by tests/test_oracle_all.py + the supplement.
+        # second forms of components the window carries: A3, J4, §2.5,
+        # J1, blocked linkage, A10, the Jaccard-pair near-dup shape and the
+        # SQL-form flagship
         "pivot_event_types",
         "join_natural",
-        # r08 window demotion: the lag/window-shape component stays covered
-        # in-window by remigration_lag; still oracle-checked
-        # by tests/test_oracle_all.py + the supplement.
         "first_event_per_user",
-        # r09 window demotion (slot freed for ppjoin_jaccard_pairs): the
-        # lag/rank window shape stays covered in-window by remigration_lag,
-        # TakeOrdered by slice_topk; still oracle-checked by
-        # tests/test_oracle_all.py + the supplement.
         "topk_per_group",
-        # r11 window demotion (slot freed for symspell_customer_pairs):
-        # J1's left-equi shape stays in-window via join_left_composite +
-        # join_inner_project; still oracle-checked by
-        # tests/test_oracle_all.py + the supplement.
         "join_left_single",
-        # r12 window demotions (slots freed for pca_power_components and
-        # fellegi_sunter_part_weights): blocked-linkage stays in-window
-        # via symspell_customer_pairs + fellegi_sunter_part_weights;
-        # A10's pairwise-matrix shape stays window-covered by
-        # correlation_diag. Both remain oracle-checked by
-        # tests/test_oracle_all.py + the supplement.
         "fuzzy_part_pairs",
         "pairwise_site_distances",
-        # r10 window demotion (slot freed for the Lloyd k-means row,
-        # itself rotated out r13): the Jaccard-pair near-dup shape stays covered in-window by
-        # ppjoin_jaccard_pairs; still oracle-checked by
-        # tests/test_oracle_all.py + the supplement.
         "ngram_jaccard_near_dups",
-        # the SQL-form flagship twin — still oracle-checked by
-        # tests/test_oracle_all.py.
         "sql_entry_point",
-        # dedup entries: parity also pinned in tests/test_llm_ops.py.
+        # near-dup detection; parity also pinned in tests/test_llm_ops.py
         "minhash_near_dups",
         "simhash_near_dups",
-        # extensions beyond the reference surface, oracle-swept by pytest
+        # extension families beyond SURVEY §2
         "session_window_tally",
         "asof_join_rates",
         "asof_join_rates_forward",
-        "sketch_profile",
         "corpus_clean_pipeline",
         "geo_distance_stats",
         "geo_nearest_site",
@@ -139,7 +97,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "chunk_dedup",
         "embedding_norm_stats",
         "incremental_dedup",
-        "lm_quality_scores",
         "duplicate_passage_removal",
         "spatial_tag_regions_expr",
         "temperature_mix_sample",
@@ -148,32 +105,19 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "dsir_importance_select",
         "weighted_sample_topn",
         "winsorized_value_stats",
-        "tfidf_top_terms",
         "forward_sel_step",
-        "bigram_lm_scores",
-        "portable_sketch_profile",
         "snapshot_delta_report",
         "training_shards",
-        "corpus_overlap_sketch",
-        "portable_quantile_profile",
-        "sampled_token_frequencies",
         "varpart_fractions",
         "gopher_repetition_stats",
-        "ccnet_perplexity_buckets",
         "substring_dup_stats",
         "substring_span_removal",
-        "zipf_corpus_fit",
-        "phrase_search_top_bigram",
-        "bm25_top10",
         "edit_similarity_pairs",
-        "heaps_vocab_growth",
         "gap_fill_daily_values",
         "event_transition_probs",
         "url_domain_cap",
-        "tfidf_cosine_sim_pairs",
         "token_entropy_quality",
         "hopping_window_tally",
-        "countmin_token_counts",
         "scd2_user_state",
         "entity_resolution_clusters",
         "containment_near_dups",
@@ -195,7 +139,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "minhash_incremental_near_dups",
         "cross_source_duplication",
         "source_gini",
-        "rolling_wau_hll",
         "boilerplate_removal",
         "contrastive_negative_pairs",
         "spatial_hotspot_clusters",
@@ -204,62 +147,32 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "source_quality_scorecard",
         "embedding_drift_by_label",
         "domain_reweight_mix",
-        "rolling_value_p95",
-        # r05 label-QA / fusion batch, full oracles
         "annotator_agreement",
-        "rank_fusion_select",
-        # r05 privacy/governance gates, full oracles (seeded-Laplace DP);
-        # dp_event_type_counts holds a driver-window row since r07
         "k_anonymity_events",
-        # r07 generalization-ladder k-anonymity release, full oracle
         "k_anon_generalize_events",
-        # r07 fuzzy record linkage, full oracles (the pairs stage holds a
-        # driver-window row since r08)
         "fuzzy_part_clusters",
-        # r08 portable-phonetic blocking variant, full oracle
         "fuzzy_part_soundex_pairs",
-        # r08 incremental linkage, full oracle
         "fuzzy_part_incremental_pairs",
-        # r08 MOSS winnowing fingerprints, full oracle
         "winnowing_quote_pairs",
-        # r08 corpus BLEU/ROUGE generation eval, full oracle
         "bleu_rouge_by_source",
-        # r08 margin-criterion bitext mining, full oracle
         "bitext_margin_pairs",
-        # r08 dataset content digest, full oracle
         "table_digest_by_flag",
-        # r08 Kneser-Ney LM scoring, full oracle
-        "kneser_ney_lm_scores",
-        # r07 aHash image near-dups, full oracle
         "image_ahash_near_dups",
-        # r09 additions, all full oracles
-        "good_turing_token_counts",
         "source_lang_diversity",
-        "rake_top_phrases",
         "moment_profile_by_type",
-        # r10 extension families, full oracles
         "entropy_l_diversity_events",
-        "ranking_ndcg_eval",
-        # (pca_power_components promoted into the r12 driver window)
-        # r11 extension families, full oracles
         "kcenter_coreset_select",
-        # (fellegi_sunter_part_weights promoted into the r12 driver window)
         "audio_wav_features",
         "dp_value_median_exponential",
-        # r11 second batch, full oracles
         "hmm_forward_first4",
         "cohens_kappa_langid",
-        # r12: the ANN train→serve loop, full unrolled-training oracles
         "pq_train_codebooks",
         "ann_trained_ivf_pq_topk",
-        # r12 second batch, full oracles
-        "query_likelihood_top10",
-        "retrieval_mrr_map",
         "hmm_viterbi_first4",
         "inequality_profile_by_source",
-        # displaced by window consolidation; their merged twins (see
-        # text_token_quality / patch_season / timestamp_pipeline) hold the
-        # driver rows for the same components
+        # F9-F11, and the split forms of text_token_quality / patch_season /
+        # timestamp_pipeline, which hold the driver rows for the same
+        # components
         "string_null_funcs",
         "text_token_stats",
         "text_quality_scores",

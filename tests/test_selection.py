@@ -356,49 +356,6 @@ def test_leakage_safe_split_groups_stay_together(spark):
     assert {r["split"] for r in all_train} == {"train"}
 
 
-def test_rrf_fuse_ranks_and_scores(spark):
-    from ningaloo_turtle_etl_spark.operators.selection import rrf_fuse
-
-    df = spark.createDataFrame(
-        [(1, 10.0, 1.0), (2, 5.0, 3.0), (3, 7.0, 2.0)],
-        "doc_id long, s1 double, s2 double",
-    )
-    out = {r["doc_id"]: r for r in rrf_fuse(df, ["s1", "s2"], k=60).collect()}
-    assert out[1]["rank_s1"] == 1 and out[1]["rank_s2"] == 3
-    assert out[2]["rank_s1"] == 3 and out[2]["rank_s2"] == 1
-    assert out[3]["rank_s1"] == 2 and out[3]["rank_s2"] == 2
-    assert out[3]["rrf_score"] == round(1 / 62 + 1 / 62, 6)
-    # equal fused ranks: doc 1 and doc 2 mirror each other
-    assert out[1]["rrf_score"] == out[2]["rrf_score"]
-
-
-def test_rrf_fuse_tie_breaks_by_id_and_groups(spark):
-    from ningaloo_turtle_etl_spark.operators.selection import rrf_fuse
-
-    df = spark.createDataFrame(
-        [("a", 1, 5.0), ("a", 2, 5.0), ("b", 9, 1.0)],
-        "src string, doc_id long, s double",
-    )
-    out = {
-        (r["src"], r["doc_id"]): r
-        for r in rrf_fuse(df, ["s"], by=["src"]).collect()
-    }
-    # tied scores: lower id wins rank 1 (deterministic, oracle-replayable)
-    assert out[("a", 1)]["rank_s"] == 1 and out[("a", 2)]["rank_s"] == 2
-    # grouped ranking restarts per group
-    assert out[("b", 9)]["rank_s"] == 1
-
-
-def test_rrf_fuse_rejects_empty_signals(spark):
-    import pytest
-
-    from ningaloo_turtle_etl_spark.operators.selection import rrf_fuse
-
-    df = spark.createDataFrame([(1, 1.0)], "doc_id long, s double")
-    with pytest.raises(ValueError):
-        rrf_fuse(df, [])
-
-
 def test_cv_fold_assignment_deterministic_and_balanced(spark):
     """The md5-uniform fold id matches a hashlib replica exactly, every
     doc lands in exactly one of the 5 folds, and the fold sizes are

@@ -1,16 +1,13 @@
 """Unit tests: URL canonicalization / registered-domain edge cases, the
-per-domain cap's election + plan shape, TF-IDF cosine pair values against a
-numpy reference, and token-entropy hand checks."""
+per-domain cap's election + plan shape, and token-entropy hand checks."""
 
 from __future__ import annotations
 
 import math
-import re
 
 import pytest
 
 from ningaloo_turtle_etl_spark import registry
-from ningaloo_turtle_etl_spark.operators.similarity import tfidf_cosine_pairs
 from ningaloo_turtle_etl_spark.operators.text import token_entropy
 from ningaloo_turtle_etl_spark.operators.web import (
     cap_per_domain,
@@ -64,76 +61,6 @@ def test_url_domain_cap_plan_uses_window_group_limit(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
     assert "EvalPython" not in plan  # normalization is pure Catalyst
-
-
-def test_tfidf_cosine_matches_numpy(spark):
-    texts = {
-        1: "apple banana apple cherry",
-        2: "apple banana banana date",
-        3: "zebra yak xylophone",
-    }
-    df = spark.createDataFrame(
-        [(k, v) for k, v in texts.items()], "doc_id long, text string"
-    )
-    # max_df_frac=1.0: no term cut, so cosine must equal the dense reference.
-    got = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in tfidf_cosine_pairs(df, threshold=0.0, max_df_frac=1.0).collect()
-    }
-    import numpy as np
-
-    vocab = sorted({t for v in texts.values() for t in v.split()})
-    n = len(texts)
-    dfreq = {t: sum(t in v.split() for v in texts.values()) for t in vocab}
-    vecs = {}
-    for k, v in texts.items():
-        tf = {t: v.split().count(t) for t in set(v.split())}
-        w = np.array(
-            [
-                tf.get(t, 0) * (math.log((n + 1) / (dfreq[t] + 1)) + 1)
-                for t in vocab
-            ]
-        )
-        vecs[k] = w / np.linalg.norm(w)
-    for a, b in [(1, 2), (1, 3), (2, 3)]:
-        expect = round(float(np.dot(vecs[a], vecs[b])), 4)
-        if expect == 0.0 and (a, b) not in got:
-            continue  # no shared term → no posting-join candidate row
-        assert got[(a, b)] == pytest.approx(expect, abs=2e-4), (a, b)
-
-
-def test_tfidf_cosine_df_cut_prunes_postings_not_norms(spark):
-    # 'the' appears in every doc (df_frac=1) → excluded from candidates,
-    # but still contributes to each doc's L2 norm, shrinking cosines below
-    # the no-cut value rather than renormalizing without it.
-    df = spark.createDataFrame(
-        [(1, "the cat"), (2, "the cat"), (3, "the dog"), (4, "the bird"),
-         (5, "the fish")],
-        "doc_id long, text string",
-    )
-    cut = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in tfidf_cosine_pairs(df, threshold=0.0, max_df_frac=0.5).collect()
-    }
-    full = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in tfidf_cosine_pairs(df, threshold=0.0, max_df_frac=1.0).collect()
-    }
-    assert full[(1, 2)] == pytest.approx(1.0)
-    assert cut[(1, 2)] < 1.0  # 'the' removed from numerator, kept in norms
-    assert (1, 3) in full and (1, 3) not in cut  # only shared term was cut
-
-
-def test_tfidf_cosine_plan_no_cartesian(spark):
-    df = registry.queries()["tfidf_cosine_sim_pairs"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    # Every nested-loop node must be the broadcast Cross of the 1-row
-    # n_docs aggregate — the posting self-join itself is a hash/merge join.
-    assert plan.count("BroadcastNestedLoopJoin") == plan.count(
-        "BroadcastNestedLoopJoin BuildRight, Cross"
-    )
-    assert re.search(r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[term", plan)
 
 
 def test_token_entropy_hand_values(spark):
