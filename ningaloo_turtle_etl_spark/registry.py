@@ -110,6 +110,7 @@ PRIORITY: list[str] = [
     "session_window_tally",
     "asof_join_rates",
     "asof_join_rates_forward",
+    "sketch_profile",
     "corpus_clean_pipeline",
     "geo_distance_stats",
     "geo_nearest_site",
@@ -134,8 +135,12 @@ PRIORITY: list[str] = [
     "weighted_sample_topn",
     "winsorized_value_stats",
     "forward_sel_step",  # M4 forward selection
+    "portable_sketch_profile",
     "snapshot_delta_report",
     "training_shards",
+    "corpus_overlap_sketch",
+    "portable_quantile_profile",
+    "sampled_token_frequencies",
     "varpart_fractions",  # M5 variation partitioning
     "gopher_repetition_stats",
     "substring_dup_stats",
@@ -146,6 +151,7 @@ PRIORITY: list[str] = [
     "url_domain_cap",
     "token_entropy_quality",
     "hopping_window_tally",
+    "countmin_token_counts",
     "scd2_user_state",
     "entity_resolution_clusters",
     "containment_near_dups",
@@ -167,6 +173,7 @@ PRIORITY: list[str] = [
     "minhash_incremental_near_dups",
     "cross_source_duplication",
     "source_gini",
+    "rolling_wau_hll",
     "boilerplate_removal",
     "contrastive_negative_pairs",
     "spatial_hotspot_clusters",
@@ -175,6 +182,7 @@ PRIORITY: list[str] = [
     "source_quality_scorecard",
     "embedding_drift_by_label",
     "domain_reweight_mix",
+    "rolling_value_p95",
     "annotator_agreement",
     "k_anonymity_events",
     "k_anon_generalize_events",

@@ -367,6 +367,41 @@ def test_snapshot_diff_matches_dict_reference(spark, old_d, new_d):
     assert got == expected
 
 
+# --- portable sketches vs a hashlib reference --------------------------------
+
+
+@settings(max_examples=5, deadline=None)
+@given(st.lists(st.integers(0, 10_000), min_size=1, max_size=300))
+def test_portable_sketch_report_matches_python_reference(spark, vals):
+    import hashlib
+    import math
+
+    from ningaloo_turtle_etl_spark.operators.sketches import portable_sketch_report
+
+    df = spark.createDataFrame([(v,) for v in vals], "v long").withColumn(
+        "g", F.lit(1)
+    )
+    row = portable_sketch_report(df, "v", by=["g"]).collect()[0]
+    hashes = {
+        int(hashlib.md5(str(v).encode()).hexdigest()[:8], 16) for v in set(vals)
+    }
+    # HLL reference (m=256, linear counting below 2.5m with zero registers)
+    regs = [0] * 256
+    for h in hashes:
+        b, w = h >> 24, h & 0xFFFFFF
+        regs[b] = max(regs[b], 25 if w == 0 else 25 - w.bit_length())
+    sum_inv = sum(2.0 ** -m for m in regs)
+    zeros = regs.count(0)
+    raw = 47072.71267120224 / sum_inv
+    hll = 256.0 * math.log(256.0 / zeros) if (raw <= 640.0 and zeros > 0) else raw
+    assert row["hll_estimate"] == round(hll, 4)
+    # KMV reference (k=256; exact below k)
+    srt = sorted(hashes)
+    kmv = float(len(srt)) if len(srt) < 256 else 255 * 4294967296.0 / srt[255]
+    assert row["kmv_estimate"] == round(kmv, 4)
+    assert row["exact_distinct"] == len(set(vals))
+
+
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(
