@@ -64,18 +64,26 @@ def make_timestamp_from(date_col: ColumnOrName, time_col: ColumnOrName) -> Colum
 
 
 # --- F6: season watershed ---------------------------------------------------
-def season(col: ColumnOrName, watershed_month: int = 7) -> Column:
+#: Dates after this month open the next season (ningaloo-etl.Rmd:164-167,179).
+SEASON_WATERSHED_MONTH = 7
+#: Dates after this ISO week open the next season (wastd-api.Rmd:48-50,67).
+SEASON_WATERSHED_ISOWEEK = 27
+
+
+def season(col: ColumnOrName) -> Column:
     """Fiscal season: month > watershed → year, else year-1
     (ningaloo-etl.Rmd:164-167,179). Total and monotone over month boundaries.
     """
     c = _col(col)
-    return F.when(F.month(c) > watershed_month, F.year(c)).otherwise(F.year(c) - 1)
+    return F.when(F.month(c) > SEASON_WATERSHED_MONTH, F.year(c)).otherwise(F.year(c) - 1)
 
 
-def season_by_isoweek(col: ColumnOrName, watershed_week: int = 27) -> Column:
+def season_by_isoweek(col: ColumnOrName) -> Column:
     """ISO-week variant: week > watershed → year else year-1 (wastd-api.Rmd:48-50,67)."""
     c = _col(col)
-    return F.when(F.weekofyear(c) > watershed_week, F.year(c)).otherwise(F.year(c) - 1)
+    return F.when(F.weekofyear(c) > SEASON_WATERSHED_ISOWEEK, F.year(c)).otherwise(
+        F.year(c) - 1
+    )
 
 
 # --- F12: boolean recode ----------------------------------------------------

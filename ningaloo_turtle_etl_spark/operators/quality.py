@@ -24,12 +24,10 @@ def duplicated_key_rows(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     return duplicated_rows(df, keys)
 
 
-def missing_coordinates(
-    df: DataFrame, coord_cols: Sequence[str] = ("y_max", "y_min", "x_max", "x_min")
-) -> DataFrame:
+def missing_coordinates(df: DataFrame) -> DataFrame:
     """QA2 (ningaloo-etl.Rmd:386-389): disjunctive NULL scan over bbox cols."""
     pred = F.lit(False)
-    for c in coord_cols:
+    for c in ("y_max", "y_min", "x_max", "x_min"):
         pred = pred | F.col(c).isNull()
     return df.filter(pred)
 
@@ -42,26 +40,21 @@ def orphan_observations(
     return orphans(fact, parent.select(on).distinct(), on=on)
 
 
-def na_lookup_rows(df: DataFrame, col: str, na_value: str = "NA") -> DataFrame:
+def na_lookup_rows(df: DataFrame, col: str) -> DataFrame:
     """QA4 (ningaloo-etl.Rmd:415-424): observations whose lookup resolution
     failed (22 NA-species crawls in the reference)."""
-    return df.filter(F.col(col).isNull() | (F.col(col) == na_value))
+    return df.filter(F.col(col).isNull() | (F.col(col) == "NA"))
 
 
 # --- U6/F16: the WAMTRAM2 validation suite as rules ------------------------
 
-def validate_measurements(
-    measurements: DataFrame,
-    bounds: DataFrame,
-    type_col: str = "measurement_type",
-    value_col: str = "value",
-) -> DataFrame:
+def validate_measurements(measurements: DataFrame, bounds: DataFrame) -> DataFrame:
     """F16 (tagging-etl.Rmd:170-177,361-369): ValidateMeasurement — join each
     measurement to its type's [min_value, max_value] bounds; out-of-range or
     unknown-type rows get error columns, clean rows get NULL errors. The
     bounds table is tiny → broadcast."""
-    joined = measurements.join(F.broadcast(bounds), on=type_col, how="left")
-    v, lo, hi = F.col(value_col), F.col("min_value"), F.col("max_value")
+    joined = measurements.join(F.broadcast(bounds), on="measurement_type", how="left")
+    v, lo, hi = F.col("value"), F.col("min_value"), F.col("max_value")
     return joined.withColumn(
         "error_number",
         F.when(lo.isNull() & hi.isNull(), F.lit(1001))

@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 
 
 # --- J4: natural join (dplyr's implicit-key inner_join) ---------------------
-def natural_join(left: DataFrame, right: DataFrame, how: str = "inner") -> DataFrame:
+def natural_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """dplyr ``inner_join(a, b)`` with no ``by`` joins on *all shared column
     names* (ningaloo-etl.Rmd:314,366). Key inference happens at plan-build
     time; order follows the left frame's column order so results are stable.
@@ -24,23 +24,19 @@ def natural_join(left: DataFrame, right: DataFrame, how: str = "inner") -> DataF
     shared = [c for c in left.columns if c in set(right.columns)]
     if not shared:
         raise ValueError("natural_join: no shared columns between inputs")
-    return left.join(right, on=shared, how=how)
+    return left.join(right, on=shared, how="inner")
 
 
 # --- J6: lookup-resolve chain ----------------------------------------------
 def resolve_lookups(
-    fact: DataFrame,
-    lookups: Sequence[tuple[DataFrame, str]],
-    drop_keys: bool = True,
+    fact: DataFrame, lookups: Sequence[tuple[DataFrame, str]]
 ) -> DataFrame:
     """Chain of left joins to small dimension tables, then drop the id cols
     (ningaloo-etl.Rmd:273-277). Every lookup is broadcast — at 100 TB the
     fact side never shuffles for these."""
     out = fact
     for dim, key in lookups:
-        out = out.join(F.broadcast(dim), on=key, how="left")
-        if drop_keys:
-            out = out.drop(key)
+        out = out.join(F.broadcast(dim), on=key, how="left").drop(key)
     return out
 
 
@@ -106,7 +102,6 @@ def count_pivot(
     keys: Sequence[str],
     pivot_col: str,
     values: Sequence[str] | None = None,
-    fill: int = 0,
 ) -> DataFrame:
     """``spread(species_name, n, fill=0)`` after a tally
     (ningaloo-etl.Rmd:308-315,321-329,361-368; wastd-api.Rmd:72).
@@ -119,24 +114,20 @@ def count_pivot(
         df.groupBy(*keys).pivot(pivot_col, list(values) if values is not None else None).count()
     )
     value_cols = [c for c in pivoted.columns if c not in keys]
-    return pivoted.na.fill(fill, subset=value_cols)
+    return pivoted.na.fill(0, subset=value_cols)
 
 
 # --- A7: histogram binning --------------------------------------------------
-def histogram(df: DataFrame, col: str, binwidth: float, name: str = "n") -> DataFrame:
+def histogram(df: DataFrame, col: str, binwidth: float) -> DataFrame:
     """``stat_bin(binwidth=…)`` (wastd-api.Rmd:43-45) as floor-bucket counts —
     a single hash aggregation, no driver-side histogramming."""
     bucket = (F.floor(F.col(col) / F.lit(binwidth)) * F.lit(binwidth)).alias("bin")
-    return df.groupBy(bucket).agg(F.count(F.lit(1)).alias(name))
+    return df.groupBy(bucket).agg(F.count(F.lit(1)).alias("n"))
 
 
 # --- §2.5: encounter-order window products ---------------------------------
 def with_observation_status(
-    df: DataFrame,
-    entity_col: str,
-    time_col: str,
-    season_col: str,
-    name: str = "observation_status",
+    df: DataFrame, entity_col: str, time_col: str, season_col: str
 ) -> DataFrame:
     """ObservationStatus ∈ {Initial, Remigrant, Resighting} — first-vs-
     subsequent encounter logic described as T-SQL in tagging-etl.Rmd:188-196:
@@ -146,7 +137,7 @@ def with_observation_status(
     w = Window.partitionBy(entity_col).orderBy(time_col)
     prev_season = F.lag(season_col).over(w)
     return df.withColumn(
-        name,
+        "observation_status",
         F.when(prev_season.isNull(), F.lit("Initial"))
         .when(F.col(season_col) != prev_season, F.lit("Remigrant"))
         .otherwise(F.lit("Resighting")),
@@ -168,7 +159,7 @@ def select_regex(df: DataFrame, pattern: str) -> DataFrame:
 
 # --- A8/U3: per-group rendered sub-table -----------------------------------
 def grouped_html_table(
-    df: DataFrame, group_col: str, value_cols: Sequence[str], name: str = "html"
+    df: DataFrame, group_col: str, value_cols: Sequence[str]
 ) -> DataFrame:
     """``group_by(subsection) %>% htmlTable()`` / make_popup
     (tagging_etl.R:25-32, ningaloo-etl.Rmd:336-344): one HTML table string
@@ -204,7 +195,7 @@ def grouped_html_table(
             F.lit(f"<table>{header}"),
             F.concat_ws("", F.array_sort(F.collect_list(row_html))),
             F.lit("</table>"),
-        ).alias(name)
+        ).alias("html")
     )
 
 
@@ -292,7 +283,6 @@ def winsorize(
     upper: float = 0.99,
     name: str | None = None,
     exact: bool | None = None,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Winsorize/clip ``col`` to its [lower, upper] quantiles — the standard
     outlier-robust cleaning step before aggregating skewed measures. Same
@@ -327,12 +317,12 @@ def winsorize(
     pct = (
         F.percentile(col, F.lit(float(lower)))
         if exact
-        else F.approx_percentile(col, F.lit(float(lower)), F.lit(accuracy))
+        else F.approx_percentile(col, F.lit(float(lower)), F.lit(10_000))
     )
     pct_hi = (
         F.percentile(col, F.lit(float(upper)))
         if exact
-        else F.approx_percentile(col, F.lit(float(upper)), F.lit(accuracy))
+        else F.approx_percentile(col, F.lit(float(upper)), F.lit(10_000))
     )
     bounds = df.agg(pct.alias("_lo"), pct_hi.alias("_hi"))
     return (

@@ -91,7 +91,6 @@ def build_summary_nests(
     nests: DataFrame,
     surveys: DataFrame,
     by: Sequence[str] = ("subsection", "date"),
-    species_values: Sequence[str] = SPECIES_VALUES,
 ) -> DataFrame:
     """summary_nests (ningaloo-etl.Rmd:308-315): filter(New) → tally →
     spread(species, fill=0) → natural ⨝ surveys. The seasonal variant
@@ -100,7 +99,7 @@ def build_summary_nests(
         nests.filter(F.col("nest_type") == "New"),
         keys=list(by),
         pivot_col="species_name",
-        values=species_values,
+        values=SPECIES_VALUES,
     )
     return natural_join(wide, surveys.select("survey_id", *dict.fromkeys([*by, *SITE_KEY])))
 

@@ -38,9 +38,9 @@ class QaCheck:
     expected: int | None = None
 
 
-def run_qa(checks: list[QaCheck], sample_rows: int = 5) -> dict:
+def run_qa(checks: list[QaCheck]) -> dict:
     """Evaluate every check once: violation count, ok-vs-expected, and up to
-    ``sample_rows`` example violations (stringified for JSON portability).
+    five example violations (stringified for JSON portability).
 
     The checks are independent, so their count and sample actions are
     submitted together (``session.run_concurrently``); the report keeps the
@@ -49,7 +49,7 @@ def run_qa(checks: list[QaCheck], sample_rows: int = 5) -> dict:
         return {}
     actions = []
     for c in checks:
-        actions += [c.violations.count, c.violations.limit(sample_rows).collect]
+        actions += [c.violations.count, c.violations.limit(5).collect]
     outcomes = run_concurrently(checks[0].violations.sparkSession, actions)
     results: dict[str, dict] = {}
     for i, c in enumerate(checks):
@@ -67,10 +67,10 @@ def run_qa(checks: list[QaCheck], sample_rows: int = 5) -> dict:
     return results
 
 
-def render_markdown(results: dict, title: str = "QA run report") -> str:
+def render_markdown(results: dict) -> str:
     """Render the reference-style QA section: one block per check with the
     verdict and sample rows as a Markdown table."""
-    lines = [f"# {title}", ""]
+    lines = ["# QA run report", ""]
     n_bad = sum(1 for r in results.values() if not r["ok"])
     lines.append(
         f"**{len(results)} checks, "

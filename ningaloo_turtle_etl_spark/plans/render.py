@@ -11,7 +11,7 @@ the demo honest and dependency-free.
 
 Scale note: nothing here touches a DataFrame — callers collect a bounded
 aggregate first. The only capped collect is ``svg_map`` markers
-(``max_markers``), mirroring what any tile-served map does."""
+(``MAX_MARKERS``), mirroring what any tile-served map does."""
 
 from __future__ import annotations
 
@@ -19,6 +19,8 @@ import html
 from collections.abc import Mapping, Sequence
 
 W, H, PAD = 640, 360, 40
+#: Markers a map draws, and so the most the dashboard collects for it.
+MAX_MARKERS = 2000
 
 
 def _rows(data) -> list[dict]:
@@ -97,11 +99,11 @@ def svg_line_chart(data, x: str, y: str, series: str | None = None, title: str =
     return "".join(parts)
 
 
-def svg_map(markers, regions=None, max_markers: int = 2000) -> str:
+def svg_map(markers, regions=None) -> str:
     """leaflet analog (app.R:206-218): lon/lat markers with popup titles,
     optional region rectangles, equirectangular projection into the viewBox.
     ``markers`` rows need longitude/latitude/popup."""
-    rows = _rows(markers)[:max_markers]
+    rows = _rows(markers)[:MAX_MARKERS]
     parts = [
         f'<svg xmlns="http://www.w3.org/2000/svg" width="{W}" height="{H}" '
         f'viewBox="0 0 {W} {H}">'
@@ -146,11 +148,11 @@ def html_table(data, max_rows: int = 100) -> str:
     return f"<table><thead><tr>{head}</tr></thead><tbody>{body}</tbody></table>"
 
 
-def render_dashboard_html(dashboard, regions=None, max_markers: int = 2000) -> str:
+def render_dashboard_html(dashboard, regions=None) -> str:
     """Compose the app.R page: status line, map, per-day series, tally table
     — each backed by ONE bounded collect of a serving-layer aggregate."""
     status = dashboard.latest_observation().collect()[0]
-    markers = dashboard.map_markers().limit(max_markers).collect()
+    markers = dashboard.map_markers().limit(MAX_MARKERS).collect()
     series = dashboard.daily_series().collect()
     tally = dashboard.tally_table().collect()
     return "\n".join(
@@ -159,7 +161,7 @@ def render_dashboard_html(dashboard, regions=None, max_markers: int = 2000) -> s
             "<title>Turtle tracks</title></head><body>",
             f"<p>{status['n_obs']} observations; latest: "
             f"{html.escape(str(status['latest']))}</p>",
-            svg_map(markers, regions=regions, max_markers=max_markers),
+            svg_map(markers, regions=regions),
             svg_line_chart(
                 series, "observation_date", "n", series="species",
                 title="Tracks per day",

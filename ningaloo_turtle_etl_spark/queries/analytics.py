@@ -1,6 +1,5 @@
 """Profiling analytics over the events table — a per-column data-quality
-profile, Benford first-digit conformance, inter-arrival statistics and a
-rolling weekly-active-user HLL estimate."""
+profile, Benford first-digit conformance and inter-arrival statistics."""
 
 from __future__ import annotations
 
@@ -37,9 +36,7 @@ def data_quality_profile(spark, sf_dir):
     numeric event columns — the expectation-suite summary a pipeline
     gate reads (`operators/quality.py` holds the per-row validators; this
     is the corpus-level view). Each column is one aggregate pass over the
-    scan; COUNT(DISTINCT) is the exact calibration form — the profiling
-    pass at 100 TB swaps it for the portable HLL sketch
-    (`portable_sketch_profile`)."""
+    scan; COUNT(DISTINCT) is exact."""
     ev = load_table(spark, "events", sf_dir)
 
     def prof(col):
@@ -158,70 +155,3 @@ def interarrival_stats(spark, sf_dir):
             "n_session_breaks"
         ),
     )
-
-
-@register(
-    "rolling_wau_hll",
-    """
-    WITH du AS (
-        SELECT DISTINCT CAST(ts AS DATE) AS src, user_id,
-               ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
-                   AS h32
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    days AS (SELECT DISTINCT src AS d FROM du),
-    pairs AS (
-        SELECT a.d AS d, b.d AS src
-        FROM days a JOIN days b
-          ON b.d <= a.d AND date_diff('day', b.d, a.d) < 7
-    ),
-    b AS (
-        SELECT src, h32 // 16777216 AS bucket,
-               CASE WHEN h32 % 16777216 = 0 THEN 25
-                    ELSE 25 - length(bin(h32 % 16777216)) END AS rho
-        FROM du
-    ),
-    r AS (SELECT src, bucket, MAX(rho) AS mr FROM b GROUP BY 1, 2),
-    merged AS (
-        SELECT p.d, r.bucket, MAX(r.mr) AS mr
-        FROM pairs p JOIN r USING (src) GROUP BY 1, 2
-    ),
-    h AS (
-        SELECT d, SUM(power(2.0, -mr)) + (256 - COUNT(*)) AS sum_inv,
-               256 - COUNT(*) AS zeros
-        FROM merged GROUP BY 1
-    ),
-    est AS (
-        SELECT d,
-               ROUND(CASE WHEN 47072.71267120224 / sum_inv <= 640.0
-                               AND zeros > 0
-                          THEN 256.0 * ln(256.0 / zeros)
-                          ELSE 47072.71267120224 / sum_inv END, 4) AS wau_hll
-        FROM h
-    ),
-    dau AS (
-        SELECT src AS d, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dau_exact
-        FROM du GROUP BY 1
-    ),
-    wau AS (
-        SELECT p.d, CAST(COUNT(DISTINCT du.user_id) AS BIGINT) AS wau_exact
-        FROM pairs p JOIN du USING (src) GROUP BY 1
-    )
-    SELECT dau.d AS day, dau_exact, wau_exact, wau_hll,
-           ROUND(dau_exact / CAST(wau_exact AS DOUBLE), 6) AS stickiness
-    FROM dau JOIN wau USING (d) JOIN est USING (d)
-    """,
-)
-def q_rolling_wau_hll(spark, sf_dir):
-    """Rolling 7-day distinct users per day, the sketch way
-    (`operators/sketches.py rolling_distinct_hll`): daily portable-HLL
-    registers merged register-wise over the trailing window — at scale the
-    merge moves days x 256 registers instead of the raw (window, user)
-    universe — with the exact DAU/WAU kept as calibration columns and the
-    whole pipeline (hash, registers, merge, estimate) replayed in SQL."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        rolling_distinct_hll,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return rolling_distinct_hll(ev, "user_id", "ts", window_days=7)

@@ -1,8 +1,7 @@
 """Training-data pipeline queries over ``documents`` / ``embeddings`` —
-dedup, text quality and curation, portable sketches, embedding
-similarity, the trained IVF-PQ loop and multimodal features. Every query
-here is oracle-checked: MinHash/SimHash and the portable sketches ride the
-cross-engine md5 hash family,
+dedup, text quality and curation, embedding similarity, the trained IVF-PQ
+loop and multimodal features. Every query here is oracle-checked:
+MinHash/SimHash ride the cross-engine md5 hash family,
 the trained IVF-PQ loop replays its whole integer-micro trajectory, and
 the multimodal fake codec replays byte-for-byte in SQL; no query reads a
 parameter file. Independent Python reference implementations in
@@ -454,136 +453,6 @@ def corpus_clean_pipeline(spark, sf_dir):
         & (F.col("lang").isin("en", "de", "fr", "es"))
     )
     return cleaned.select("doc_id", "lang", "n_words", "n_chars")
-
-
-@register(
-    "sketch_profile",
-    """
-    SELECT event_type,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-           TRUE AS hll_within_3rsd,
-           TRUE AS p50_within_rank_eps,
-           TRUE AS p95_within_rank_eps
-    FROM events GROUP BY event_type ORDER BY event_type
-    """,
-)
-def sketch_profile(spark, sf_dir):
-    """One-pass sketch profile per event_type: HLL++ distinct users +
-    Greenwald-Khanna value quantiles — the bounded-state form of the
-    profiling questions that need full shuffles when asked exactly. The
-    native estimates are engine-specific (DuckDB cannot replay HLL++/GK
-    sketch state), so the registered row outputs what IS cross-engine
-    checkable: the exact calibration column plus error-bound booleans —
-    |hll − exact|/exact ≤ 3·rsd, and each GK quantile landing inside the
-    exact percentile envelope at ±2% rank (orders of magnitude wider than
-    GK's n/accuracy rank guarantee). The oracle asserts the bounds as
-    literal TRUE, so a sketch regression flips a boolean and fails the
-    value hash — this was the registry's only no-oracle row r3-r7. Raw
-    estimate values remain available via `operators/sketches.py
-    approx_distinct / approx_quantiles`; error tracking vs exact is also
-    pinned in tests/test_sketches.py."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        approx_distinct,
-        approx_quantiles,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    d = approx_distinct(ev, "user_id", by=["event_type"], rsd=0.02)
-    q = approx_quantiles(
-        ev, "value", probabilities=(0.5, 0.95), accuracy=10_000, by=["event_type"]
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users"),
-        F.expr("percentile(value, 0.48D)").alias("_p50_lo"),
-        F.expr("percentile(value, 0.52D)").alias("_p50_hi"),
-        F.expr("percentile(value, 0.93D)").alias("_p95_lo"),
-        F.expr("percentile(value, 0.97D)").alias("_p95_hi"),
-    )
-    out = d.join(q, on="event_type").join(exact, on="event_type")
-    est = F.col("approx_distinct_user_id").cast("double")
-    ex = F.col("exact_users").cast("double")
-    p50 = F.col("approx_quantiles_value")[0]
-    p95 = F.col("approx_quantiles_value")[1]
-    return out.select(
-        "event_type",
-        "exact_users",
-        (F.abs(est - ex) / ex <= F.lit(0.06)).alias("hll_within_3rsd"),
-        p50.between(F.col("_p50_lo"), F.col("_p50_hi")).alias(
-            "p50_within_rank_eps"
-        ),
-        p95.between(F.col("_p95_lo"), F.col("_p95_hi")).alias(
-            "p95_within_rank_eps"
-        ),
-    ).orderBy("event_type")
-
-
-@register(
-    "portable_sketch_profile",
-    """
-    WITH d AS (
-      SELECT DISTINCT l_returnflag AS flag,
-             ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT AS h32
-      FROM lineitem
-    ),
-    b AS (
-      SELECT flag, h32 // 16777216 AS bucket,
-             CASE WHEN h32 % 16777216 = 0 THEN 25
-                  ELSE 25 - length(bin(h32 % 16777216)) END AS rho
-      FROM d
-    ),
-    r AS (SELECT flag, bucket, MAX(rho) AS mr FROM b GROUP BY flag, bucket),
-    h AS (
-      SELECT flag,
-             SUM(power(2.0, -mr)) + (256 - COUNT(*)) AS sum_inv,
-             256 - COUNT(*) AS zeros
-      FROM r GROUP BY flag
-    ),
-    est AS (
-      SELECT flag,
-             CASE WHEN 47072.71267120224 / sum_inv <= 640.0 AND zeros > 0
-                  THEN 256.0 * ln(256.0 / zeros)
-                  ELSE 47072.71267120224 / sum_inv END AS hll_raw
-      FROM h
-    ),
-    k AS (
-      SELECT flag, h32,
-             row_number() OVER (PARTITION BY flag ORDER BY h32) AS rn,
-             COUNT(*) OVER (PARTITION BY flag) AS cnt
-      FROM d
-    ),
-    km AS (
-      SELECT flag,
-             CASE WHEN cnt < 256 THEN CAST(cnt AS DOUBLE)
-                  ELSE 1095216660480.0 / h32 END AS kmv_raw
-      FROM k WHERE rn = CASE WHEN cnt < 256 THEN cnt ELSE 256 END
-    ),
-    ex AS (
-      SELECT l_returnflag AS flag, COUNT(DISTINCT l_orderkey) AS exact_distinct
-      FROM lineitem GROUP BY 1
-    )
-    SELECT ex.flag AS l_returnflag, exact_distinct,
-           round(est.hll_raw, 4) AS hll_estimate,
-           round(km.kmv_raw, 4) AS kmv_estimate,
-           round(abs(round(est.hll_raw, 4) - exact_distinct)
-                 / exact_distinct, 4) AS hll_rel_err,
-           round(abs(round(km.kmv_raw, 4) - exact_distinct)
-                 / exact_distinct, 4) AS kmv_rel_err
-    FROM ex JOIN est ON ex.flag = est.flag JOIN km ON ex.flag = km.flag
-    """,
-)
-def portable_sketch_profile(spark, sf_dir):
-    """Engine-portable sketch calibration: exact distinct orders per return
-    flag vs md5-based HLL (m=256) and KMV (k=256) estimates with relative
-    errors. Unlike sketch_profile's built-in HLL++/GK (engine-specific →
-    rows-only), every intermediate here is an integer or exact dyadic
-    rational, so DuckDB reproduces the estimates bit-for-bit — this is the
-    sketch family's full-oracle row. Sketch state is mergeable
-    (registers/min-hashes merge by max/min; tests/test_sketches.py) and
-    retry-stable, which is what a 100 TB profiling pass needs."""
-    from ningaloo_turtle_etl_spark.operators.sketches import portable_sketch_report
-
-    li = load_table(spark, "lineitem", sf_dir)
-    return portable_sketch_report(li, "l_orderkey", by=["l_returnflag"])
 
 
 @register(
@@ -1632,231 +1501,6 @@ def temperature_mix_sample(spark, sf_dir):
 
 
 @register(
-    "corpus_overlap_sketch",
-    r"""
-    WITH t AS (
-      SELECT lang, list_filter(string_split_regex(lower(text), '\s+'),
-                               x -> x <> '') AS toks
-      FROM documents
-    ),
-    s AS (
-      SELECT lang, unnest(list_transform(range(1, len(toks) - 1),
-                          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-      FROM t
-    ),
-    h AS (
-      SELECT DISTINCT lang, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h32 FROM s
-    ),
-    r AS (
-      SELECT lang, h32,
-             row_number() OVER (PARTITION BY lang ORDER BY h32) AS rn,
-             COUNT(*) OVER (PARTITION BY lang) AS n
-      FROM h
-    ),
-    sk AS (SELECT lang, h32 FROM r WHERE rn <= CASE WHEN n < 256 THEN n ELSE 256 END),
-    g AS (SELECT DISTINCT lang FROM sk),
-    p AS (SELECT a.lang AS ga, b.lang AS gb FROM g a JOIN g b ON a.lang < b.lang),
-    e AS (
-      SELECT p.ga, p.gb, sk.h32, 1 AS in_a, 0 AS in_b FROM p JOIN sk ON sk.lang = p.ga
-      UNION ALL
-      SELECT p.ga, p.gb, sk.h32, 0 AS in_a, 1 AS in_b FROM p JOIN sk ON sk.lang = p.gb
-    ),
-    m AS (SELECT ga, gb, h32, MAX(in_a) AS ia, MAX(in_b) AS ib FROM e GROUP BY 1, 2, 3),
-    w AS (SELECT ga, gb, ia, ib,
-                 row_number() OVER (PARTITION BY ga, gb ORDER BY h32) AS rn
-          FROM m)
-    SELECT ga AS lang_a, gb AS lang_b,
-           CAST(COUNT(*) AS BIGINT) AS sample_size,
-           CAST(SUM(ia * ib) AS BIGINT) AS n_common,
-           round(CAST(SUM(ia * ib) AS DOUBLE) / COUNT(*), 6) AS jaccard_est
-    FROM w WHERE rn <= 256 GROUP BY 1, 2
-    """,
-)
-def corpus_overlap_sketch(spark, sf_dir):
-    """Cross-corpus overlap from sketches alone: pairwise 3-gram-shingle
-    Jaccard between every two languages' sub-corpora, estimated from their
-    KMV sketches (Beyer et al., SIGMOD 2007) — after the per-group sketch
-    pass, everything touches ≤ groups²·k fixed-width rows, which is how two
-    100 TB corpora get compared without shuffling either. md5 hash family →
-    the DuckDB oracle reproduces every estimate bit-for-bit; convergence to
-    exact Jaccard as k grows is pinned in tests/test_sketches.py."""
-    from ningaloo_turtle_etl_spark.operators.curation import word_ngrams_from_tokens
-    from ningaloo_turtle_etl_spark.operators.sketches import kmv_jaccard_pairs
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select("lang", tokens(F.lower(F.col("text"))).alias("toks"))
-    sh = toks.select(
-        "lang", F.explode(word_ngrams_from_tokens(F.col("toks"), 3)).alias("sh")
-    )
-    out = kmv_jaccard_pairs(sh, "sh", "lang", k=256)
-    return out.select(
-        F.col("group_a").alias("lang_a"),
-        F.col("group_b").alias("lang_b"),
-        "sample_size",
-        "n_common",
-        "jaccard_est",
-    )
-
-
-@register(
-    "portable_quantile_profile",
-    """
-    WITH b AS (
-      SELECT CAST(min(l_extendedprice) AS DOUBLE) AS lo,
-             CAST(max(l_extendedprice) AS DOUBLE) AS hi
-      FROM lineitem WHERE l_extendedprice IS NOT NULL
-    ),
-    h AS (
-      SELECT l_returnflag AS flag, lo, hi,
-             CAST(CASE WHEN hi = lo THEN 0
-                       ELSE greatest(0, least(1023,
-                            floor((CAST(l_extendedprice AS DOUBLE) - lo) * 1024.0
-                                  / (hi - lo)))) END AS BIGINT) AS bin,
-             COUNT(*) AS n
-      FROM lineitem, b WHERE l_extendedprice IS NOT NULL
-      GROUP BY 1, 2, 3, 4
-    ),
-    c AS (
-      SELECT flag, lo, hi, bin, n,
-             SUM(n) OVER (PARTITION BY flag ORDER BY bin) AS cum,
-             SUM(n) OVER (PARTITION BY flag) AS tot
-      FROM h
-    ),
-    p AS (SELECT CAST(unnest([0.5, 0.95, 0.99]) AS DOUBLE) AS p),
-    sel AS (
-      SELECT c.flag, p.p, c.lo, c.hi, c.bin, c.n, c.cum, c.tot
-      FROM c, p
-      WHERE c.cum >= p.p * c.tot AND (c.cum - c.n) < p.p * c.tot
-    ),
-    e AS (
-      SELECT l_returnflag AS flag,
-             quantile_cont(l_extendedprice, [0.5, 0.95, 0.99]) AS qs
-      FROM lineitem GROUP BY 1
-    ),
-    ex AS (SELECT flag, unnest(qs) AS qx,
-                  CAST(unnest([0.5, 0.95, 0.99]) AS DOUBLE) AS p
-           FROM e)
-    SELECT sel.flag AS l_returnflag, sel.p,
-           round(lo + (hi - lo) / 1024.0
-                 * (bin + (sel.p * tot - (cum - n)) / n), 4) AS q_est,
-           round(ex.qx, 4) AS q_exact,
-           round(abs(round(lo + (hi - lo) / 1024.0
-                           * (bin + (sel.p * tot - (cum - n)) / n), 4)
-                     - round(ex.qx, 4)) / round(ex.qx, 4), 6) AS rel_err
-    FROM sel JOIN ex ON sel.flag = ex.flag AND sel.p = ex.p
-    """,
-)
-def portable_quantile_profile(spark, sf_dir):
-    """Engine-portable quantile calibration: fixed-grid binned p50/p95/p99
-    of l_extendedprice per return flag vs the exact interpolated percentile,
-    with relative errors. The grid histogram is the portable counterpart of
-    percentile_approx's GK sketch — mergeable by bin-wise addition across
-    shards or engines, deterministic double arithmetic DuckDB reproduces
-    bit-for-bit. Rank error ≤ one bin (1/1024 of the range); measured here
-    ≤ 0.03% of the exact value."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        portable_binned_quantiles,
-    )
-
-    probs = (0.5, 0.95, 0.99)
-    li = load_table(spark, "lineitem", sf_dir)
-    q = portable_binned_quantiles(
-        li, "l_extendedprice", probs, by=["l_returnflag"]
-    )
-    p_arr = F.array(*[F.lit(float(p)) for p in probs])
-    exact = (
-        li.groupBy("l_returnflag")
-        .agg(F.percentile("l_extendedprice", p_arr).alias("qs"))
-        .select("l_returnflag", F.posexplode("qs").alias("i", "qx"))
-        .select(
-            "l_returnflag",
-            F.element_at(p_arr, F.col("i") + 1).alias("p"),
-            "qx",
-        )
-    )
-    out = q.join(exact, on=["l_returnflag", "p"])
-    q_exact = F.round(F.col("qx"), 4)
-    return out.select(
-        "l_returnflag",
-        "p",
-        "q_est",
-        q_exact.alias("q_exact"),
-        F.round(F.abs(F.col("q_est") - q_exact) / q_exact, 6).alias("rel_err"),
-    )
-
-
-@register(
-    "sampled_token_frequencies",
-    r"""
-    WITH s AS (
-      SELECT text FROM documents
-      WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-            < lower(lpad(to_hex(CAST(floor(0.25 * 4294967296.0) AS BIGINT)), 8, '0'))
-    ),
-    st AS (
-      SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    x -> x <> '')) AS tok
-      FROM s
-    ),
-    samp AS (SELECT tok, COUNT(*) AS n_sample FROM st GROUP BY 1),
-    ft AS (
-      SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    x -> x <> '')) AS tok
-      FROM documents
-    ),
-    ex AS (SELECT tok, COUNT(*) AS n_exact FROM ft GROUP BY 1)
-    SELECT samp.tok AS token,
-           CAST(n_sample AS BIGINT) AS n_sample,
-           round(n_sample / 0.25, 4) AS est_n,
-           CAST(n_exact AS BIGINT) AS n_exact,
-           round(abs(round(n_sample / 0.25, 4) - n_exact) / n_exact, 6) AS rel_err
-    FROM samp JOIN ex ON samp.tok = ex.tok
-    ORDER BY est_n DESC, token ASC LIMIT 20
-    """,
-)
-def sampled_token_frequencies(spark, sf_dir):
-    """Portable heavy-hitter calibration: top-20 corpus tokens by frequency
-    estimated from a deterministic 25% document sample (md5-of-id rate
-    gate), with exact counts and relative errors alongside. Misra-Gries
-    state merges order-dependently and can never be reproduced by another
-    engine; the hash-rate sample is bit-identical everywhere, retry-stable,
-    and reads ~rate of the corpus (sample predicate is map-side). The
-    sampling unit is the document (cluster sampling), so estimator variance
-    is ((1-rate)/rate)*sum(per-doc count squared) — heavy items stay tight,
-    the tail is noisy by contract (bound pinned in tests/test_sketches.py)."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        sampled_item_frequencies,
-    )
-    from ningaloo_turtle_etl_spark.operators.text import tokens
-
-    docs = load_table(spark, "documents", sf_dir)
-    ex = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok")
-    )
-    samp = sampled_item_frequencies(ex, "tok", "doc_id", rate=0.25)
-    exact = (
-        docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-    )
-    out = samp.join(exact, samp["item"] == exact["tok"])
-    return (
-        out.select(
-            F.col("item").alias("token"),
-            "n_sample",
-            "est_n",
-            "n_exact",
-            F.round(
-                F.abs(F.col("est_n") - F.col("n_exact")) / F.col("n_exact"), 6
-            ).alias("rel_err"),
-        )
-        .orderBy(F.desc("est_n"), F.asc("token"))
-        .limit(20)
-    )
-
-
-@register(
     "gopher_repetition_stats",
     rf"""
     WITH t AS (
@@ -2133,69 +1777,6 @@ def edit_similarity_pairs(spark, sf_dir):
     cust = load_table(spark, "customer", sf_dir)
     return edit_similarity_self_join(
         cust, text_col="c_name", id_col="c_custkey", max_edit=1, q=3
-    )
-
-
-@register(
-    "countmin_token_counts",
-    rf"""
-    WITH toks AS (SELECT unnest({_TOKENS}) AS tok FROM documents),
-    exact AS (
-      SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_exact FROM toks GROUP BY 1
-    ),
-    hrows AS (SELECT unnest([0, 1, 2, 3]) AS row),
-    cells AS (
-      SELECT row,
-             ('0x' || substr(md5(tok || '|' || row), 1, 8))::BIGINT % 16 AS col,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM toks CROSS JOIN hrows GROUP BY 1, 2
-    ),
-    est AS (
-      SELECT e.tok, MIN(c.n) AS cm_estimate
-      FROM exact e CROSS JOIN hrows r
-      JOIN cells c ON c.row = r.row
-       AND c.col = ('0x' || substr(md5(e.tok || '|' || r.row), 1, 8))::BIGINT % 16
-      GROUP BY 1
-    )
-    SELECT e.tok, e.n_exact, s.cm_estimate,
-           s.cm_estimate - e.n_exact AS overestimate
-    FROM exact e JOIN est s USING (tok)
-    ORDER BY n_exact DESC, tok LIMIT 20
-    """,
-)
-def countmin_token_counts(spark, sf_dir):
-    """Count-min sketch calibration over document tokens
-    (`operators/sketches.py countmin_table/countmin_estimate`): top-20
-    exact token counts vs the depth-4 × width-16 sketch estimate, with the
-    guaranteed-nonnegative overestimate. Width 16 is deliberately far
-    below the vocabulary so collisions are exercised; the production
-    default (512) makes the error ≤ ~2N/512 w.h.p. The sketch state is
-    depth × width cells regardless of corpus size, merges by cell-wise
-    addition, and reproduces bit-for-bit in any engine with md5()."""
-    from ningaloo_turtle_etl_spark.operators.cache import track_cache
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        countmin_estimate,
-        countmin_table,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    toks = docs.select(
-        F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
-    toks = track_cache(toks.persist())
-    cm = countmin_table(toks, "tok", depth=4, width=16)
-    exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_exact"))
-    est = countmin_estimate(cm, exact.select("tok"), "tok", depth=4, width=16)
-    return (
-        exact.join(est, on="tok")
-        .select(
-            "tok",
-            "n_exact",
-            "cm_estimate",
-            (F.col("cm_estimate") - F.col("n_exact")).alias("overestimate"),
-        )
-        .orderBy(F.desc("n_exact"), F.asc("tok"))
-        .limit(20)
     )
 
 
@@ -2842,66 +2423,6 @@ def q_domain_reweight_mix(spark, sf_dir):
     docs = load_table(spark, "documents", sf_dir)
     loss = 1.0 / F.log(F.lit(2.0) + F.length("text"))
     return domain_reweight(docs, "source", loss, eta=1.0)
-
-
-@register(
-    "rolling_value_p95",
-    """
-    WITH hist AS (
-        SELECT CAST(ts AS DATE) AS src,
-               CAST(greatest(0, least(999,
-                    floor((value - 0.0) * 1000.0 / 500.0))) AS BIGINT)
-                   AS bin,
-               CAST(COUNT(*) AS BIGINT) AS n
-        FROM events WHERE value IS NOT NULL
-        GROUP BY 1, 2
-    ),
-    days AS (SELECT DISTINCT src FROM hist),
-    pairs AS (
-        SELECT b.src AS d, a.src
-        FROM days a JOIN days b
-          ON a.src <= b.src AND date_diff('day', a.src, b.src) < 7
-    ),
-    merged AS (
-        SELECT p.d, h.bin, SUM(h.n) AS n
-        FROM pairs p JOIN hist h USING (src)
-        GROUP BY 1, 2
-    ),
-    cum AS (
-        SELECT d, bin, n,
-               SUM(n) OVER (PARTITION BY d ORDER BY bin
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS cum,
-               SUM(n) OVER (PARTITION BY d) AS tot
-        FROM merged
-    ),
-    probs(p) AS (VALUES (0.5), (0.95)),
-    sel AS (
-        SELECT d, bin, n, cum, tot, p
-        FROM cum CROSS JOIN probs
-        WHERE cum >= p * tot AND (cum - n) < p * tot
-    )
-    SELECT d AS day, CAST(tot AS BIGINT) AS n_rows, p,
-           ROUND(0.0 + (500.0 / 1000.0)
-                 * (bin + (p * tot - (cum - n)) / n), 4) AS q_est
-    FROM sel
-    """,
-)
-def q_rolling_value_p95(spark, sf_dir):
-    """Rolling 7-day p50/p95 of event value via mergeable fixed-grid
-    histograms (`operators/sketches.py rolling_binned_quantile`):
-    days x 1000 counters merge instead of re-sorting the raw window —
-    `rolling_distinct_hll`'s state-moves-not-data argument applied to
-    quantiles."""
-    from ningaloo_turtle_etl_spark.operators.sketches import (
-        rolling_binned_quantile,
-    )
-
-    ev = load_table(spark, "events", sf_dir)
-    return rolling_binned_quantile(
-        ev, "value", "ts", (0.5, 0.95), window_days=7,
-        n_bins=1000, lo=0.0, hi=500.0,
-    )
 
 
 def _ahash_oracle_sql(max_id: int = 250, edit_below: int = 60,

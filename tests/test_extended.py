@@ -178,8 +178,6 @@ def test_winsorize_rejects_streaming_input(spark):
 def test_count_pivot_empty_values_yields_no_value_columns(spark):
     # Regression (r04 review): an explicitly-empty closed value list fell
     # through the falsy check into the data-dependent distinct scan.
-    import pyspark.sql.functions as F
-
     from ningaloo_turtle_etl_spark.operators.relational import count_pivot
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")

@@ -1,5 +1,5 @@
 """Every top-level definition in the package and every test helper has a
-caller.
+caller, and every import has a use.
 
 A static scan, no Spark session: walk the AST of every Python file in the
 package, the tests, the scripts, perfbench and the driver entry, collect
@@ -8,6 +8,12 @@ every name they use, and require a use for each undecorated top-level
 ``tests/``. Decorated definitions (``@register`` queries are reached
 through the registry, ``@pytest.fixture`` helpers through pytest), dunder
 names and ``test_`` functions are exempt.
+
+The import check walks the package, the tests and the scripts: each name
+an import binds must be read in the scope that binds it (a module, or the
+function or class holding a local import) or be listed in the module's
+``__all__``. ``from __future__`` imports and imports marked
+``# noqa: F401`` (side-effect registrations) are exempt.
 
 The scan reads the AST rather than the token stream: names used inside
 f-string SQL are not NAME tokens on Python 3.11, so a token scan would
@@ -23,6 +29,8 @@ ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "ningaloo_turtle_etl_spark"
 TESTS = ROOT / "tests"
 SCANNED = [PACKAGE, TESTS, ROOT / "scripts", ROOT / "perfbench"]
+IMPORTS_SCANNED = [PACKAGE, TESTS, ROOT / "scripts"]
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _sources() -> list[Path]:
@@ -96,3 +104,57 @@ def test_every_test_helper_has_a_use():
         if not name.startswith("test_")
     ]
     assert not dead, "test helpers with no use:\n" + "\n".join(dead)
+
+
+def _scope_imports(scope: ast.AST) -> list[ast.Import | ast.ImportFrom]:
+    """Import statements that bind in ``scope`` itself, not in a nested def."""
+    found, stack = [], list(ast.iter_child_nodes(scope))
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            found.append(node)
+        elif not isinstance(node, (*_SCOPES, ast.Lambda)):
+            stack.extend(ast.iter_child_nodes(node))
+    return found
+
+
+def _exported(tree: ast.Module) -> set[str]:
+    return {
+        c.value
+        for node in tree.body
+        if "__all__" in _assigned(node)
+        for c in ast.walk(node)
+        if isinstance(c, ast.Constant) and isinstance(c.value, str)
+    }
+
+
+def _unused_imports(path: Path) -> list[str]:
+    text = path.read_text()
+    tree, lines = ast.parse(text, filename=str(path)), text.splitlines()
+    unused = []
+    for scope in [tree, *(n for n in ast.walk(tree) if isinstance(n, _SCOPES))]:
+        read = {
+            n.id
+            for n in ast.walk(scope)
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+        }
+        if scope is tree:
+            read |= _exported(tree)
+        for imp in _scope_imports(scope):
+            if isinstance(imp, ast.ImportFrom) and imp.module == "__future__":
+                continue
+            stmt = lines[imp.lineno - 1 : imp.end_lineno]
+            if any("# noqa: F401" in line for line in stmt):
+                continue
+            for alias in imp.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name not in read:
+                    unused.append(f"{path.relative_to(ROOT)}:{imp.lineno} {name}")
+    return unused
+
+
+def test_every_import_has_a_use():
+    files = [p for d in IMPORTS_SCANNED for p in sorted(d.rglob("*.py"))]
+    assert files, "scan found no files"
+    unused = [u for path in files for u in _unused_imports(path)]
+    assert not unused, "imports with no use:\n" + "\n".join(unused)

@@ -187,7 +187,7 @@ def test_jsonl_failfast_raises_on_corrupt(spark, tmp_path):
     p = tmp_path / "bad.jsonl"
     p.write_text('{"doc_id": 1}\n{nope\n')
     df = read_jsonl(spark, str(p), "doc_id long", corrupt_col=None)
-    with pytest.raises(Exception):
+    with pytest.raises(Py4JJavaError, match="MALFORMED_RECORD_IN_PARSING"):
         df.collect()
 
 

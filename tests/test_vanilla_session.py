@@ -16,10 +16,9 @@ can't change per-test): a vanilla session built with
 confs, swept ALL oracle queries at sf0.01 through the driver
 canonicalizer — 100/100 matched, confirming the per-query pin carries
 every row, not just the tz-exposed three below. Re-run late-r04 after
-the registry grew to 111 (portable sketches, snapshot diff, shards,
-overlap, quantiles, sampled frequencies, varpart, BPE): 111/111 matched;
-re-run at end of r04 with the full 207-query registry (classifier-eval,
-PSI, experimentation-stats batches included): 207/207 matched
+the registry grew to 111: 111/111 matched; re-run at end of r04 with
+the full 207-query registry (classifier-eval, PSI,
+experimentation-stats batches included): 207/207 matched
 (`TZ=Australia/Perth JAVA_TOOL_OPTIONS=-Duser.timezone=Australia/Perth
 python scripts/driver_sim.py`); the full sweep also passes at sf0.1
 (10x the grading scale).
