@@ -79,7 +79,13 @@ def season(col: ColumnOrName) -> Column:
 
 
 def season_by_isoweek(col: ColumnOrName) -> Column:
-    """ISO-week variant: week > watershed → year else year-1 (wastd-api.Rmd:48-50,67)."""
+    """ISO-week variant: week > watershed → year else year-1 (wastd-api.Rmd:48-50,67).
+
+    The ISO week is paired with the CALENDAR year, as in the reference, so
+    the season is not monotone across New Year: the first days of January
+    that still fall in ISO week 52 or 53 of the old year take the new
+    calendar year, and the season steps back by one when ISO week 1
+    starts (2020-12-31 → 2020, 2021-01-01 → 2021, 2021-01-04 → 2020)."""
     c = _col(col)
     return F.when(F.weekofyear(c) > SEASON_WATERSHED_ISOWEEK, F.year(c)).otherwise(
         F.year(c) - 1

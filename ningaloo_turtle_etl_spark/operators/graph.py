@@ -1,6 +1,6 @@
-"""Graph operators for dedup clustering: near-dup PAIRS (from MinHash /
-SimHash / n-gram Jaccard) are only half the job — dedup needs the
-transitive clusters and one representative per cluster.
+"""Graph operators for clustering match pairs: pairs (edit-distance name
+matches, fuzzy-linkage matches, site adjacency) are only half the job —
+entity resolution and hotspot clustering need the transitive components.
 
 ``connected_components`` is iterative min-label propagation with pointer
 jumping: every node starts labeled with its own id; each round takes the
@@ -98,69 +98,3 @@ def connected_components(
         )
     finally:
         edges.unpersist()
-
-
-def cluster_representatives(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-) -> DataFrame:
-    """Dedup by cluster: every doc maps to its component's min id (singletons
-    map to themselves); keep the min-id representative PRESENT IN ``docs``
-    per component — the 'collapse near-dup clusters' step after any
-    pair-producing stage.
-
-    The representative is elected among the rows actually in ``docs``, not
-    by ``id == component``: when pairs reference an id that was filtered out
-    of ``docs`` upstream (pair generation ran before a later filter), the
-    component min may be absent, and the old identity test silently dropped
-    the ENTIRE cluster (r04 review; best_cluster_representatives already
-    handled this). Election is a narrow (component, id) shuffle + id
-    semi-join — bodies stay map-side."""
-    from pyspark.sql.window import Window
-
-    comp = connected_components(pairs, src_col, dst_col)
-    labeled = docs.select(id_col).join(
-        comp.withColumnRenamed("id", id_col), on=id_col, how="left"
-    ).withColumn("component", F.coalesce("component", F.col(id_col)))
-    w = Window.partitionBy("component").orderBy(F.asc(id_col))
-    keepers = (
-        labeled.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(id_col)
-    )
-    return docs.join(keepers, on=id_col, how="left_semi")
-
-
-def best_cluster_representatives(
-    docs: DataFrame,
-    pairs: DataFrame,
-    score_col: str,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-) -> DataFrame:
-    """Quality-aware dedup: keep the HIGHEST-``score_col`` row of each
-    near-dup component (ties broken by min id so output is deterministic),
-    instead of the min-id row. This is what production dedup actually wants
-    — when a boilerplate-laden copy and a clean copy collide, keep the
-    clean one. Costs one extra narrow shuffle vs cluster_representatives:
-    a (component, score, id) window ranks representatives; bodies stay on
-    the map side of the final semi-join."""
-    from pyspark.sql.window import Window
-
-    comp = connected_components(pairs, src_col, dst_col)
-    labeled = docs.select(id_col, score_col).join(
-        comp.withColumnRenamed("id", id_col), on=id_col, how="left"
-    ).withColumn("component", F.coalesce("component", F.col(id_col)))
-    w = Window.partitionBy("component").orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
-    keepers = (
-        labeled.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(id_col)
-    )
-    return docs.join(keepers, on=id_col, how="left_semi")

@@ -151,11 +151,10 @@ def incremental_fuzzy_pairs(
 ) -> DataFrame:
     """Incremental record linkage: match pairs INVOLVING the new batch —
     new×old and new×new, never old×old. The nightly-ingest entity-
-    resolution shape (mirror of ``operators/dedup.py
-    minhash_incremental_pairs``): with O old names and N genuinely new
-    ones (N << O), the blocked join probes only the blocks the new batch
-    touches, so pairing work scales with the new names' block collisions
-    instead of re-linking the whole dimension.
+    resolution shape: with O old names and N genuinely new ones (N << O),
+    the blocked join probes only the blocks the new batch touches, so
+    pairing work scales with the new names' block collisions instead of
+    re-linking the whole dimension.
 
     "New" means a distinct name value NOT present in ``old_df`` — a name
     seen before is already linked and re-pairing it would duplicate the

@@ -662,7 +662,7 @@ def ahash_near_dup_pairs(
     Scale shape: the LSH join moves only (media_id, n_cells, band, value)
     — ≤4 fixed-width rows per image, never pixels — and verification reads
     the 16-byte hash lanes. Same banded candidate-generation pattern as
-    the MinHash/SimHash text families (operators/dedup.py); joining on
+    the MinHash text family (operators/dedup.py); joining on
     n_cells keeps degenerate tiny-image all-zero upper bands from
     cross-pairing with full-size images, and only bands that COVER real
     cells are emitted (band*16 < n_cells): an image with n_cells ≤ 48 has

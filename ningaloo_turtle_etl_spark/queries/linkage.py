@@ -2,7 +2,7 @@
 edit-distance match pairs and transitive entity-resolution clusters over
 the part-name dimension. Both carry full DuckDB value-hash oracles —
 levenshtein is a builtin on both engines, and the transitive closure
-replays as a recursive CTE (same pattern as near_dup_clusters)."""
+replays as a recursive CTE."""
 
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 """Training-data pipeline queries over ``documents`` / ``embeddings`` —
 dedup, text quality and curation, embedding similarity, the trained IVF-PQ
 loop and multimodal features. Every query here is oracle-checked:
-MinHash/SimHash ride the cross-engine md5 hash family,
+MinHash rides the cross-engine md5 hash family,
 the trained IVF-PQ loop replays its whole integer-micro trajectory, and
 the multimodal fake codec replays byte-for-byte in SQL; no query reads a
 parameter file. Independent Python reference implementations in
@@ -15,8 +15,6 @@ import pyspark.sql.functions as F
 from ningaloo_turtle_etl_spark.operators.dedup import (
     exact_dedup_semi,
     minhash_near_dup_pairs,
-    ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
 )
 from ningaloo_turtle_etl_spark.operators.similarity import cosine_topk
 from ningaloo_turtle_etl_spark.operators.text import (
@@ -31,7 +29,7 @@ from ningaloo_turtle_etl_spark.sources.tables import load_table
 
 _NORM = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
 # Raw-case tokenizer for oracles whose Spark side hashes the ORIGINAL text
-# (minhash/simhash shingle and token hashes): lowercasing here would merge
+# (the MinHash shingle hashes): lowercasing here would merge
 # case-variant shingles the operator keeps distinct — latent divergence on
 # the first capitalized document (r04 review, reproduced on a mixed-case
 # corpus).
@@ -186,30 +184,6 @@ def doc_fingerprints(spark, sf_dir):
     return with_fingerprint(docs).select("doc_id", "fingerprint")
 
 
-@register(
-    "ngram_jaccard_near_dups",
-    rf"""
-    WITH t AS (
-        SELECT doc_id, lang, list_distinct({_TOKENS}) AS sh
-        FROM documents WHERE doc_id < 150
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / len(list_distinct(list_cat(a.sh, b.sh))), 6) AS jaccard
-    FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-          / len(list_distinct(list_cat(a.sh, b.sh))) >= 0.5
-    """,
-)
-def ngram_jaccard_near_dups(spark, sf_dir):
-    """Blocked exact n-gram Jaccard (block = lang): the verify stage of the
-    filter-verify dedup pattern, run exact on a bounded candidate set."""
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 150)
-    return ngram_jaccard_pairs(
-        docs, block_col="lang", shingle_n=1, threshold=0.5
-    )
-
-
 _DOT = "list_sum(list_transform(list_zip(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), x -> x[1]*x[2]))"
 _NORMSQ = "list_sum(list_transform(CAST({0}.embedding AS DOUBLE[]), x -> x*x))"
 
@@ -239,40 +213,39 @@ def embedding_cosine_topk(spark, sf_dir):
     return cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
 
 
-# --- MinHash / SimHash: full oracles via the md5 hash family ----------------
-# The md5 family (operators/dedup.py) pays ONE digest per shingle/token and
+# --- MinHash: a full oracle via the md5 hash family -------------------------
+# The md5 family (operators/dedup.py) pays ONE digest per shingle and
 # derives everything else with integer arithmetic DuckDB reproduces verbatim
-# — which is what turns these two flagship dedup operators from pytest-
-# trusted rows-only checks into hash-proven oracle rows.
+# — which is what turns the flagship near-dup operator from a pytest-trusted
+# rows-only check into a hash-proven oracle row.
 
 _H60 = "('0x' || substr(md5({0}), 1, 15))::BIGINT"
 
 
 def _minhash_oracle_sql(
-    max_id: int = 500,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    max_bucket_size: int = 500,
+    max_id: int = 500, shingle_n: int = 3, threshold: float = 0.5
 ) -> str:
-    """DuckDB SQL replicating minhash_near_dup_pairs(hash_family='md5')
-    end-to-end: shingle → md5-60 hash → universal-hash signature → folded
-    band buckets (with the size cap) → candidate self-join → exact Jaccard
-    on the hashed shingle sets."""
+    """DuckDB SQL replicating minhash_near_dup_pairs end-to-end: shingle →
+    md5-60 hash → universal-hash signature → folded band buckets (with the
+    size cap) → candidate self-join → exact Jaccard on the hashed shingle
+    sets. Signature length, bands and the cap are the operator's own
+    constants."""
     from ningaloo_turtle_etl_spark.operators.dedup import (
+        BANDS,
         FOLD_MULT,
         FOLD_MULT2,
         FOLD_P,
+        MAX_BUCKET_SIZE,
         MERSENNE61,
+        NUM_HASHES,
         minhash_coeffs,
     )
 
-    rows = num_hashes // bands
+    rows = NUM_HASHES // BANDS
     slots = ",\n               ".join(
         f"list_min(list_transform(sh, h -> ({a} * (h & 2147483647) + {b}) "
         f"% {MERSENNE61}))"
-        for a, b in minhash_coeffs(num_hashes)
+        for a, b in minhash_coeffs(NUM_HASHES)
     )
 
     def fold(b: int, mult: int) -> str:
@@ -283,7 +256,7 @@ def _minhash_oracle_sql(
 
     buckets = ", ".join(
         f"{fold(b, FOLD_MULT)} * 2147483648 + {fold(b, FOLD_MULT2)}"
-        for b in range(bands)
+        for b in range(BANDS)
     )
     return f"""
     WITH t AS (
@@ -317,7 +290,7 @@ def _minhash_oracle_sql(
         SELECT id, bucket FROM (
             SELECT id, bucket, COUNT(*) OVER (PARTITION BY bucket) AS bn
             FROM banded
-        ) WHERE bn <= {max_bucket_size}
+        ) WHERE bn <= {MAX_BUCKET_SIZE}
     ),
     cand AS (
         SELECT DISTINCT a.id AS id_a, b.id AS id_b
@@ -337,67 +310,15 @@ def _minhash_oracle_sql(
     """
 
 
-def _simhash_oracle_sql(
-    max_id: int = 500, max_hamming: int = 3, width: int = 60
-) -> str:
-    """DuckDB SQL replicating simhash_near_dup_pairs(signature='md5'):
-    60-bit md5-token-hash signature by bit-majority, exact (block, value)
-    integer-packed buckets, pigeonhole candidate join, bit_count(xor)
-    verification."""
-    blocks = max_hamming + 1
-    bounds = [round(width * k / blocks) for k in range(blocks + 1)]
-    w_max = max(bounds[k + 1] - bounds[k] for k in range(blocks))
-    bits = " + ".join(
-        f"CASE WHEN 2 * len(list_filter(hs, h -> (h >> {b}) & 1 = 1)) > len(hs) "
-        f"THEN {1 << b}::BIGINT ELSE 0 END"
-        for b in range(width)
-    )
-    buckets = ", ".join(
-        f"{k * (1 << w_max)} + ((sig >> {bounds[k]}) & {(1 << (bounds[k + 1] - bounds[k])) - 1})"
-        for k in range(blocks)
-    )
-    return f"""
-    WITH t AS (
-        SELECT doc_id AS id, {_TOKENS_RAW} AS toks
-        FROM documents WHERE doc_id < {max_id}
-    ),
-    th AS (
-        SELECT id, list_transform(toks, tk -> {_H60.format('tk')}) AS hs FROM t
-    ),
-    sig AS (
-        SELECT id, COALESCE({bits}, 0) AS sig FROM th
-    ),
-    banded AS (
-        SELECT id, sig, unnest([{buckets}]) AS bucket FROM sig
-    ),
-    cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-               a.sig AS sig_a, b.sig AS sig_b
-        FROM banded a JOIN banded b ON a.bucket = b.bucket AND a.id < b.id
-    )
-    SELECT id_a, id_b, CAST(bit_count(xor(sig_a, sig_b)) AS INTEGER) AS hamming
-    FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= {max_hamming}
-    """
-
-
 @register("minhash_near_dups", _minhash_oracle_sql())
 def minhash_near_dups(spark, sf_dir):
     """MinHash+LSH near-dup pairs (filter-verify), md5 hash family: one
     digest per shingle, 2-universal integer slots, folded band buckets —
     the whole pipeline (including the bucket-size cap) replays in DuckDB,
     so this is a full hash row, not rows-only. Planted-pair recall and the
-    xxhash64 family's parity stay pinned in tests/test_llm_ops.py."""
+    exact verify stage stay pinned in tests/test_llm_ops.py."""
     docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 500)
-    return minhash_near_dup_pairs(docs, shingle_n=3, threshold=0.5, hash_family="md5")
-
-
-@register("simhash_near_dups", _simhash_oracle_sql())
-def simhash_near_dups(spark, sf_dir):
-    """SimHash near-dup pairs, md5 family: 60-bit bit-majority signature
-    over md5 token hashes, exact integer-packed pigeonhole blocks — fully
-    reproduced by the DuckDB oracle (bit_count(xor) verification included)."""
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 500)
-    return simhash_near_dup_pairs(docs, max_hamming=3, signature="md5")
+    return minhash_near_dup_pairs(docs, shingle_n=3, threshold=0.5)
 
 
 from ningaloo_turtle_etl_spark.queries.ann_oracles import (
@@ -453,45 +374,6 @@ def corpus_clean_pipeline(spark, sf_dir):
         & (F.col("lang").isin("en", "de", "fr", "es"))
     )
     return cleaned.select("doc_id", "lang", "n_words", "n_chars")
-
-
-@register(
-    "near_dup_clusters",
-    rf"""
-    WITH RECURSIVE t AS (
-        SELECT doc_id, lang, list_distinct({_TOKENS}) AS sh
-        FROM documents WHERE doc_id < 150
-    ),
-    pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / len(list_distinct(list_cat(a.sh, b.sh))) >= 0.5
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, anc) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, r.anc FROM edges e JOIN reach r ON e.dst = r.id
-    )
-    SELECT id AS doc_id, MIN(anc) AS component FROM reach GROUP BY id
-    """,
-)
-def near_dup_clusters(spark, sf_dir):
-    """Transitive near-dup clusters: the oracle-checked n-gram Jaccard pairs
-    fed through distributed min-label propagation, checked against DuckDB's
-    recursive-CTE transitive closure — component = min doc_id reachable.
-    The step that turns pair-finding into actual dedup."""
-    from ningaloo_turtle_etl_spark.operators.graph import connected_components
-
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 150)
-    pairs = ngram_jaccard_pairs(docs, block_col="lang", shingle_n=1, threshold=0.5)
-    comp = connected_components(pairs)
-    return comp.select(F.col("id").alias("doc_id"), "component")
 
 
 @register("pq_train_codebooks", pq_train_oracle_sql(4, 4, 2, 64))
@@ -837,48 +719,6 @@ def pii_redaction(spark, sf_dir):
 
 
 @register(
-    "near_dup_dedup",
-    rf"""
-    WITH RECURSIVE t AS (
-        SELECT doc_id, lang, n_chars, list_distinct({_TOKENS}) AS sh
-        FROM documents WHERE doc_id < 150
-    ),
-    pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / len(list_distinct(list_cat(a.sh, b.sh))) >= 0.5
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, anc) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, r.anc FROM edges e JOIN reach r ON e.dst = r.id
-    ),
-    comp AS (SELECT id, MIN(anc) AS component FROM reach GROUP BY id)
-    SELECT d.doc_id, d.lang, d.n_chars
-    FROM t d LEFT JOIN comp c ON d.doc_id = c.id
-    WHERE c.id IS NULL OR d.doc_id = c.component
-    """,
-)
-def near_dup_dedup(spark, sf_dir):
-    """The full near-dup dedup, end to end: Jaccard pair-finding →
-    connected components → keep one representative (min doc_id) per cluster,
-    singletons untouched. Completes the dedup story the pair queries start;
-    the oracle replays it as a recursive-CTE transitive closure."""
-    from ningaloo_turtle_etl_spark.operators.graph import cluster_representatives
-
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 150)
-    pairs = ngram_jaccard_pairs(docs, block_col="lang", shingle_n=1, threshold=0.5)
-    kept = cluster_representatives(docs, pairs)
-    return kept.select("doc_id", "lang", "n_chars")
-
-
-@register(
     "quality_budget_select",
     rf"""
     WITH t AS (
@@ -1104,61 +944,6 @@ def text_token_quality(spark, sf_dir):
 
 
 @register(
-    "dedup_audit",
-    rf"""
-    WITH RECURSIVE t AS (
-        SELECT doc_id, lang, n_chars, list_distinct({_TOKENS}) AS sh
-        FROM documents WHERE doc_id < 150
-    ),
-    pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / len(list_distinct(list_cat(a.sh, b.sh))) >= 0.5
-    ),
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs
-    ),
-    reach(id, anc) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, r.anc FROM edges e JOIN reach r ON e.dst = r.id
-    ),
-    comp AS (SELECT id, MIN(anc) AS component FROM reach GROUP BY id)
-    SELECT c.component,
-           COUNT(*) AS n_docs,
-           CAST(SUM(d.n_chars) AS BIGINT) AS chars_total,
-           CAST(SUM(CASE WHEN d.doc_id = c.component THEN 0 ELSE d.n_chars END)
-                AS BIGINT) AS chars_removed
-    FROM comp c JOIN t d ON c.id = d.doc_id
-    GROUP BY c.component
-    """,
-)
-def dedup_audit(spark, sf_dir):
-    """Dedup observability: per near-dup cluster, how many docs collapse and
-    how many chars the collapse removes — the audit table a curation run
-    ships alongside its output (what got deleted and why is the first
-    question asked of any dedup job)."""
-    from ningaloo_turtle_etl_spark.operators.graph import connected_components
-
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 150)
-    pairs = ngram_jaccard_pairs(docs, block_col="lang", shingle_n=1, threshold=0.5)
-    comp = connected_components(pairs)
-    labeled = comp.join(
-        docs.select(F.col("doc_id").alias("id"), "n_chars"), on="id"
-    )
-    return labeled.groupBy("component").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("chars_total"),
-        F.sum(
-            F.when(F.col("id") == F.col("component"), 0).otherwise(F.col("n_chars"))
-        ).alias("chars_removed"),
-    )
-
-
-@register(
     "doc_chunks",
     rf"""
     WITH t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
@@ -1288,51 +1073,6 @@ def packed_chunk_batches(spark, sf_dir):
 
 
 @register(
-    "chunk_dedup",
-    rf"""
-    WITH t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-    nz AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-    e AS (
-        SELECT doc_id, toks, n,
-               unnest(range(0, CAST(ceil(n / 32.0) AS INT))) AS chunk_id
-        FROM nz
-    ),
-    ch AS (
-        SELECT doc_id * 64 + chunk_id AS chunk_key,
-               md5(array_to_string(
-                   list_slice(toks, chunk_id * 32 + 1,
-                              least((chunk_id + 1) * 32, n)), ' ')) AS fp
-        FROM e
-    )
-    SELECT chunk_key, substr(fp, 1, 16) AS chunk_fp
-    FROM (SELECT chunk_key, fp,
-                 ROW_NUMBER() OVER (PARTITION BY fp ORDER BY chunk_key) AS rn
-          FROM ch)
-    WHERE rn = 1
-    """,
-)
-def chunk_dedup(spark, sf_dir):
-    """Chunk-granularity exact dedup: identical ≤32-token chunks collapse to
-    the lowest chunk_key — the boilerplate-paragraph form of dedup that
-    doc-level fingerprints miss (repeated headers/footers across distinct
-    docs). Same zero-body-shuffle shape as dedup_exact: only
-    (fingerprint, key) pairs shuffle to elect keepers."""
-    from ningaloo_turtle_etl_spark.operators.curation import chunk_documents
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, "documents", sf_dir).withColumn(
-        "text", F.lower(F.col("text"))
-    )
-    ch = chunk_documents(docs, max_tokens=32).select(
-        (F.col("doc_id") * 64 + F.col("chunk_id")).alias("chunk_key"),
-        F.md5("chunk_text").alias("fp"),
-    )
-    w = Window.partitionBy("fp").orderBy("chunk_key")
-    kept = ch.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return kept.select("chunk_key", F.substring("fp", 1, 16).alias("chunk_fp"))
-
-
-@register(
     "embedding_norm_stats",
     """
     WITH n AS (
@@ -1370,98 +1110,6 @@ def embedding_norm_stats(spark, sf_dir):
         F.round(F.avg("l2"), 6).alias("avg_norm"),
         F.sum(F.when(F.col("l2") == 0, 1).otherwise(0)).alias("n_zero"),
     )
-
-
-@register(
-    "incremental_dedup",
-    f"""
-    WITH fp AS (
-        SELECT doc_id, lang, source, n_chars,
-               substr(md5({_NORM}), 1, 16) AS fingerprint
-        FROM documents
-    ),
-    seen AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id % 5 <> 4),
-    fresh AS (
-        SELECT n.* FROM fp n LEFT JOIN seen s USING (fingerprint)
-        WHERE n.doc_id % 5 = 4 AND s.fingerprint IS NULL
-    )
-    SELECT doc_id, lang, source, n_chars
-    FROM (SELECT *, ROW_NUMBER() OVER (
-              PARTITION BY fingerprint ORDER BY doc_id) AS rn FROM fresh)
-    WHERE rn = 1
-    """,
-)
-def incremental_dedup(spark, sf_dir):
-    """Incremental ingestion dedup: docs with doc_id % 5 == 4 stand in for
-    today's crawl increment, the rest for the existing corpus snapshot (as
-    a fingerprint set). The increment is deduped against the snapshot by
-    fingerprint anti-join, then within itself — snapshot bodies are never
-    read, so per-day cost scales with the increment, not the corpus."""
-    from ningaloo_turtle_etl_spark.operators.dedup import incremental_exact_dedup
-    from ningaloo_turtle_etl_spark.operators.text import with_fingerprint
-
-    docs = load_table(spark, "documents", sf_dir)
-    new_batch = docs.filter(F.col("doc_id") % 5 == 4)
-    snapshot_fps = with_fingerprint(
-        docs.filter(F.col("doc_id") % 5 != 4)
-    ).select("fingerprint")
-    out = incremental_exact_dedup(new_batch, snapshot_fps)
-    return out.select("doc_id", "lang", "source", "n_chars")
-
-
-@register(
-    "duplicate_passage_removal",
-    r"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS t
-        FROM documents
-    ),
-    pas AS (
-        SELECT doc_id, idx,
-               array_to_string(list_slice(t, idx*20 + 1, idx*20 + 20), ' ')
-                   AS passage
-        FROM (
-            SELECT doc_id, t,
-                   unnest(range(CAST(ceil(len(t)/20.0) AS BIGINT))) AS idx
-            FROM toks
-        )
-    ),
-    marked AS (
-        SELECT doc_id, idx, passage,
-               ROW_NUMBER() OVER (PARTITION BY passage ORDER BY doc_id, idx)
-                   AS rn
-        FROM pas
-    ),
-    per_doc AS (
-        SELECT doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_passages,
-               CAST(SUM(CASE WHEN rn = 1 THEN 0 ELSE 1 END) AS BIGINT)
-                   AS n_removed,
-               COALESCE(
-                   STRING_AGG(CASE WHEN rn = 1 THEN passage END, ' '
-                              ORDER BY idx), '') AS cleaned_text
-        FROM marked GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(p.n_passages, 0) AS n_passages,
-           COALESCE(p.n_removed, 0) AS n_removed,
-           COALESCE(p.cleaned_text, '') AS cleaned_text
-    FROM documents d LEFT JOIN per_doc p USING (doc_id)
-    """,
-)
-def duplicate_passage_removal(spark, sf_dir):
-    """Cross-document duplicate-passage removal (Lee et al. 2022's exact
-    substring dedup at passage granularity): global first occurrence of
-    every 20-token passage survives, later occurrences are cut, documents
-    are reconstructed from their surviving passages. The oracle states the
-    identical policy relationally (ROW_NUMBER over passage groups)."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        duplicate_passage_removal as dpr,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    return dpr(docs, passage_tokens=20)
 
 
 @register(
@@ -1578,147 +1226,8 @@ def q_gopher_repetition_stats(spark, sf_dir):
     return gopher_repetition_stats(docs)
 
 
-_SUBSTR_RANKED_CTE = """
-    t AS (SELECT doc_id, coalesce(text, '') AS t,
-                 length(coalesce(text, '')) AS len
-          FROM documents),
-    w AS (
-        SELECT doc_id, pos, substr(md5(substr(t, pos, 40)), 1, 16) AS h
-        FROM (SELECT doc_id, t, len,
-                     unnest(range(1, len - 40 + 2)) AS pos
-              FROM t WHERE len >= 40)
-    ),
-    r AS (
-        SELECT doc_id, pos,
-               row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn,
-               COUNT(*) OVER (PARTITION BY h) AS cnt
-        FROM w
-    )
-"""
-
-
-@register(
-    "substring_dup_stats",
-    f"""
-    WITH {_SUBSTR_RANKED_CTE},
-    s AS (
-        SELECT doc_id, pos, rn, cnt,
-               MAX(CASE WHEN cnt >= 2 THEN pos + 40 END) OVER (
-                   PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS dpe,
-               MAX(CASE WHEN rn >= 2 THEN pos + 40 END) OVER (
-                   PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS rpe
-        FROM r
-    ),
-    p AS (
-        SELECT doc_id,
-               COUNT(*) AS n_windows,
-               SUM(CASE WHEN cnt >= 2 THEN 1 ELSE 0 END) AS n_dup,
-               SUM(CASE WHEN rn >= 2 THEN 1 ELSE 0 END) AS n_rem,
-               SUM(CASE WHEN cnt >= 2 THEN GREATEST(0, pos + 40
-                   - GREATEST(pos, COALESCE(dpe, pos))) ELSE 0 END) AS dupc,
-               SUM(CASE WHEN rn >= 2 THEN GREATEST(0, pos + 40
-                   - GREATEST(pos, COALESCE(rpe, pos))) ELSE 0 END) AS remc
-        FROM s GROUP BY doc_id
-    )
-    SELECT t.doc_id,
-           CAST(COALESCE(n_windows, 0) AS BIGINT) AS n_windows,
-           CAST(COALESCE(n_dup, 0) AS BIGINT) AS n_dup_windows,
-           CAST(COALESCE(n_rem, 0) AS BIGINT) AS n_removable_windows,
-           ROUND(CASE WHEN len > 0
-                 THEN CAST(COALESCE(dupc, 0) AS DOUBLE) / len
-                 ELSE 0.0 END, 6) AS dup_char_frac,
-           ROUND(CASE WHEN len > 0
-                 THEN CAST(COALESCE(remc, 0) AS DOUBLE) / len
-                 ELSE 0.0 END, 6) AS removable_char_frac
-    FROM t LEFT JOIN p USING (doc_id)
-    """,
-)
-def q_substring_dup_stats(spark, sf_dir):
-    """Character-granularity exact-substring duplication profile (Lee et
-    al. 2022 measured via overlapping hashed 40-char windows): per-doc
-    duplicated / removable window counts and interval-union char
-    fractions. Detects any duplicated substring >= 40 chars, including
-    ones that straddle token-passage boundaries."""
-    from ningaloo_turtle_etl_spark.operators.dedup import substring_dup_stats
-
-    docs = load_table(spark, "documents", sf_dir)
-    out = substring_dup_stats(docs, k=40, hash_family="md5")
-    return out.select(
-        "doc_id",
-        F.col("n_windows").cast("long").alias("n_windows"),
-        F.col("n_dup_windows").cast("long").alias("n_dup_windows"),
-        F.col("n_removable_windows").cast("long").alias(
-            "n_removable_windows"
-        ),
-        "dup_char_frac",
-        "removable_char_frac",
-    )
-
-
-@register(
-    "substring_span_removal",
-    f"""
-    WITH {_SUBSTR_RANKED_CTE},
-    rm AS (SELECT doc_id, pos FROM r WHERE rn >= 2),
-    g AS (
-        SELECT doc_id,
-               COALESCE(MAX(pos + 40) OVER (
-                   PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   1) AS gs,
-               pos AS ge
-        FROM rm
-    ),
-    segs AS (
-        SELECT doc_id, gs, ge FROM g WHERE ge > gs
-        UNION ALL
-        SELECT m.doc_id, m.mx AS gs, t.len + 1 AS ge
-        FROM (SELECT doc_id, MAX(pos + 40) AS mx FROM rm GROUP BY doc_id) m
-        JOIN t USING (doc_id)
-        WHERE t.len + 1 > m.mx
-    ),
-    reb AS (
-        SELECT rd.doc_id, COALESCE(sg.txt, '') AS cleaned
-        FROM (SELECT DISTINCT doc_id FROM rm) rd
-        LEFT JOIN (
-            SELECT s.doc_id,
-                   string_agg(substr(t.t, s.gs, s.ge - s.gs), ''
-                              ORDER BY s.gs) AS txt
-            FROM segs s JOIN t USING (doc_id)
-            GROUP BY s.doc_id
-        ) sg USING (doc_id)
-    )
-    SELECT t.doc_id,
-           CAST(t.len AS BIGINT) AS n_chars,
-           CAST(t.len - length(COALESCE(reb.cleaned, t.t)) AS BIGINT)
-               AS n_removed_chars,
-           COALESCE(reb.cleaned, t.t) AS cleaned_text
-    FROM t LEFT JOIN reb USING (doc_id)
-    """,
-)
-def q_substring_span_removal(spark, sf_dir):
-    """Exact-substring span removal: corpus-wide first occurrence of every
-    40-char window survives, later occurrences' spans are cut (merged when
-    overlapping) and each doc is rebuilt from the surviving characters.
-    The char-granularity sibling of duplicate_passage_removal."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        substring_span_removal,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    out = substring_span_removal(docs, k=40, hash_family="md5")
-    return out.select(
-        "doc_id",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.col("n_removed_chars").cast("long").alias("n_removed_chars"),
-        "cleaned_text",
-    )
-
-
-# Ed-Join prefix-filtered edit-distance pairs over customer names — shared
-# between the pair query and the entity-resolution clustering on top of it.
+# Ed-Join prefix-filtered edit-distance pairs over customer names — the
+# match edges of the entity-resolution clustering oracle.
 _EDIT_CTES = """
     s AS (SELECT c_custkey AS id, c_name AS s FROM customer),
     -- q-1 sentinel chars pad both ends (prefix-filter completeness for
@@ -1756,28 +1265,6 @@ _EDIT_CTES = """
           AND levenshtein(x.s, y.s) <= 1
     )
 """
-
-
-@register(
-    "edit_similarity_pairs",
-    f"""
-    WITH {_EDIT_CTES}
-    SELECT id_a, id_b, edit_distance FROM vpairs
-    """,
-)
-def edit_similarity_pairs(spark, sf_dir):
-    """Similarity self-join over customer names: every pair within
-    Levenshtein distance 1, via Ed-Join prefix filtering (rarest
-    q·k+1 grams elect candidates; exact levenshtein verifies) — the
-    record-linkage primitive, never materializing all-pairs."""
-    from ningaloo_turtle_etl_spark.operators.relational import (
-        edit_similarity_self_join,
-    )
-
-    cust = load_table(spark, "customer", sf_dir)
-    return edit_similarity_self_join(
-        cust, text_col="c_name", id_col="c_custkey", max_edit=1, q=3
-    )
 
 
 def _entity_resolution_oracle_sql(rounds: int = 16) -> str:
@@ -1884,36 +1371,6 @@ def entity_resolution_clusters(spark, sf_dir):
 
 
 @register(
-    "containment_near_dups",
-    rf"""
-    WITH t AS (
-        SELECT doc_id, lang, list_distinct({_TOKENS}) AS sh
-        FROM documents WHERE doc_id < 150
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / len(a.sh), 6) AS containment
-    FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id <> b.doc_id
-    WHERE len(a.sh) > 0
-      AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(a.sh) >= 0.9
-    """,
-)
-def containment_near_dups(spark, sf_dir):
-    """Asymmetric shingle-containment pairs (|A∩B|/|A| >= 0.9, block =
-    lang): the subset-duplicate detector — a doc quoted inside a larger
-    one has high containment but LOW Jaccard, so the symmetric passes
-    (`ngram_jaccard_near_dups`, MinHash) structurally miss it
-    (`operators/dedup.py ngram_containment_pairs`). Directed: a row says
-    id_a is covered by id_b; dedup policy drops the contained side."""
-    from ningaloo_turtle_etl_spark.operators.dedup import ngram_containment_pairs
-
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 150)
-    return ngram_containment_pairs(
-        docs, block_col="lang", shingle_n=1, threshold=0.9
-    )
-
-
-@register(
     "readability_scores",
     r"""
     WITH f AS (
@@ -1947,29 +1404,6 @@ def readability_scores(spark, sf_dir):
     return readability_scores(docs).select(
         "doc_id", "n_words", "n_sentences", "n_syllables", "flesch"
     ).orderBy("doc_id")
-
-
-@register(
-    "soft_dedup_weights",
-    f"""
-    SELECT doc_id,
-           CAST(COUNT(*) OVER (
-               PARTITION BY substr(md5({_NORM}), 1, 16)) AS BIGINT)
-               AS cluster_size,
-           ROUND(1.0 / COUNT(*) OVER (
-               PARTITION BY substr(md5({_NORM}), 1, 16)), 6) AS weight
-    FROM documents
-    """,
-)
-def q_soft_dedup_weights(spark, sf_dir):
-    """Down-weighting dedup (soft counterpart of dedup_exact): every copy
-    survives with training weight 1/cluster_size, so each exact-duplicate
-    cluster contributes one document's worth of gradient mass. Only
-    (fingerprint, id) shuffles; bodies stay map-side."""
-    from ningaloo_turtle_etl_spark.operators.dedup import soft_dedup_weights
-
-    docs = load_table(spark, "documents", sf_dir)
-    return soft_dedup_weights(docs)
 
 
 @register(
@@ -2077,48 +1511,6 @@ def q_oov_rate(spark, sf_dir):
 
 
 @register(
-    "ngram_novelty",
-    f"""
-    WITH toks AS (SELECT doc_id, {_TOKENS_RAW} AS t FROM documents),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               CASE WHEN len(t) >= 3
-                    THEN array_to_string(list_slice(t, i + 1, i + 3), ' ')
-                    ELSE array_to_string(t, ' ') END AS gram
-        FROM (
-            SELECT doc_id, t,
-                   unnest(range(CASE WHEN len(t) >= 3 THEN len(t) - 2
-                                     ELSE 1 END)) AS i
-            FROM toks
-        )
-    ),
-    first_occ AS (SELECT gram, MIN(doc_id) AS first_id FROM grams GROUP BY 1),
-    per_doc AS (
-        SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-               CAST(SUM(CASE WHEN f.first_id = g.doc_id THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_novel
-        FROM grams g JOIN first_occ f USING (gram) GROUP BY 1
-    )
-    SELECT d.doc_id,
-           COALESCE(p.n_grams, 0) AS n_grams,
-           COALESCE(p.n_novel, 0) AS n_novel,
-           ROUND(COALESCE(p.n_novel / CAST(p.n_grams AS DOUBLE), 0.0), 6)
-               AS novelty
-    FROM documents d LEFT JOIN per_doc p USING (doc_id)
-    """,
-)
-def q_ngram_novelty(spark, sf_dir):
-    """Per-document 3-gram novelty vs everything earlier in the corpus
-    (`operators/dedup.py ngram_novelty`): fraction of the doc's distinct
-    shingles first seen in this doc. One gram-keyed min election + a
-    payload-free join back; the redundancy signal dual to dedup."""
-    from ningaloo_turtle_etl_spark.operators.dedup import ngram_novelty
-
-    docs = load_table(spark, "documents", sf_dir)
-    return ngram_novelty(docs, n=3)
-
-
-@register(
     "label_centroid_cosine",
     """
     WITH ex AS (
@@ -2185,76 +1577,6 @@ def q_hard_negative_mining(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
     anchors = emb.filter(F.col("vec_id") < 120)
     return hard_negatives(emb, k=5, anchors=anchors)
-
-
-@register(
-    "minhash_incremental_near_dups",
-    "SELECT id_a, id_b, jaccard FROM (" + _minhash_oracle_sql() + ") WHERE id_b >= 400",
-)
-def q_minhash_incremental_near_dups(spark, sf_dir):
-    """Incremental MinHash dedup of a new batch (doc_id >= 400) against the
-    existing corpus (`operators/dedup.py minhash_incremental_pairs`):
-    new x old and new x new pairs only, never old x old, with bucket caps
-    counted over the union so the output equals the full run restricted to
-    new-id pairs — which is exactly how the oracle states it (the full
-    corpus pipeline filtered to id_b >= 400)."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        minhash_incremental_pairs,
-    )
-
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id") < 500)
-    old = docs.filter(F.col("doc_id") < 400)
-    new = docs.filter(F.col("doc_id") >= 400)
-    return minhash_incremental_pairs(
-        old, new, shingle_n=3, threshold=0.5, hash_family="md5"
-    )
-
-
-@register(
-    "cross_source_duplication",
-    f"""
-    WITH fp AS (
-        SELECT substr(md5(lower(array_to_string(
-                   list_slice({_TOKENS_RAW}, 1, 8), ' '))), 1, 16)
-                   AS fingerprint,
-               source, doc_id
-        FROM documents
-    ),
-    per AS (
-        SELECT fingerprint, source AS src, COUNT(*) AS n
-        FROM fp GROUP BY 1, 2
-    ),
-    tot AS (SELECT fingerprint, SUM(n) AS n_total FROM per GROUP BY 1),
-    dup AS (
-        SELECT p.* FROM per p JOIN tot USING (fingerprint)
-        WHERE n_total > 1
-    ),
-    pairs AS (
-        SELECT a.src AS source_a, b.src AS source_b,
-               CASE WHEN a.src = b.src THEN a.n ELSE a.n + b.n END AS nd
-        FROM dup a JOIN dup b ON a.fingerprint = b.fingerprint
-         AND (a.src < b.src OR (a.src = b.src AND a.n > 1))
-    )
-    SELECT source_a, source_b,
-           CAST(COUNT(*) AS BIGINT) AS n_clusters,
-           CAST(SUM(nd) AS BIGINT) AS n_docs
-    FROM pairs GROUP BY 1, 2
-    """,
-)
-def q_cross_source_duplication(spark, sf_dir):
-    """Cross-source duplicate-leakage matrix
-    (`operators/dedup.py cross_source_duplication`): per source pair, the
-    duplicate clusters spanning both sources and the documents they hold —
-    the are-these-feeds-rescraping-each-other diagnostic, here in its
-    8-token shared-opening (boilerplate/template) variant so the synthetic
-    corpus exercises real collisions. Fingerprint-keyed narrow shuffles;
-    pair math on per-fingerprint source lists."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        cross_source_duplication,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    return cross_source_duplication(docs, prefix_tokens=8)
 
 
 @register(
@@ -2512,7 +1834,7 @@ def image_ahash_near_dups(spark, sf_dir):
     (`operators/multimodal.py image_ahash + ahash_near_dup_pairs`): the
     fake-codec corpus plus single-character-edited variants, aHash'd in
     the Arrow batch stage, then banded 16-bit hamming LSH and exact
-    popcount verification — the image twin of the SimHash text family.
+    popcount verification.
     Each edited variant pairs with its original at a small hamming
     distance; everything after the codec is pure Catalyst and the whole
     chain replays in DuckDB."""
@@ -2544,86 +1866,6 @@ def image_ahash_near_dups(spark, sf_dir):
     return ahash_near_dup_pairs(hashes, max_hamming=8).orderBy(
         "id_a", "id_b"
     )
-
-
-@register(
-    "winnowing_quote_pairs",
-    r"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        WHERE lang = 'en' AND doc_id < 200
-        UNION ALL
-        SELECT doc_id + 100000, substr(text, 1, 250)
-        FROM documents WHERE lang = 'en' AND doc_id < 50
-    ),
-    toks AS (
-        SELECT doc_id AS id,
-               list_filter(string_split_regex(lower(text), '\s+'),
-                           x -> x <> '') AS t
-        FROM corpus
-    ),
-    hs AS (
-        SELECT id,
-               CASE WHEN len(t) >= 3 THEN list_transform(
-                   list_transform(range(greatest(len(t) - 3, 0) + 1),
-                       i -> array_to_string(list_slice(t, i + 1, i + 3), ' ')),
-                   g -> ('0x' || substr(md5(g), 1, 15))::BIGINT)
-               ELSE []::BIGINT[] END AS hs
-        FROM toks
-    ),
-    sel AS (
-        SELECT id,
-               list_distinct(list_transform(
-                   range(greatest(len(hs) - 4, 0) + 1),
-                   p -> list_min(list_slice(hs, p + 1, p + 4)))) AS fps
-        FROM hs
-    ),
-    fps0 AS (SELECT id, unnest(fps) AS fp FROM sel),
-    fps AS (SELECT id, fp FROM fps0 WHERE fp IS NOT NULL),
-    freq AS (SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) <= 500),
-    kept AS (SELECT fps.id, fps.fp FROM fps JOIN freq USING (fp)),
-    sizes AS (
-        SELECT id, CAST(COUNT(*) AS BIGINT) AS n_fp FROM fps GROUP BY id
-    ),
-    shared AS (
-        SELECT a.id AS id_a, b.id AS id_b,
-               CAST(COUNT(*) AS BIGINT) AS n_shared
-        FROM kept a JOIN kept b ON a.fp = b.fp AND a.id <> b.id
-        GROUP BY 1, 2
-    )
-    SELECT id_a, id_b, n_shared,
-           ROUND(n_shared * 1.0 / n_fp, 6) AS containment
-    FROM shared JOIN sizes ON sizes.id = shared.id_a
-    WHERE n_shared * 1.0 / n_fp >= 0.6
-    ORDER BY id_a, id_b
-    """,
-)
-def winnowing_quote_pairs(spark, sf_dir):
-    """MOSS-style winnowing fingerprint containment over a quoting corpus
-    (`operators/dedup.py winnowing_fingerprints +
-    winnowing_containment_pairs`, k=3, window=4): each doc keeps the
-    per-window minimum k-gram hash (guaranteeing any k+window-1-token
-    shared run shares a fingerprint), a frequency cap drops boilerplate
-    fingerprints, and the inverted fingerprint index itself generates
-    candidates — no blocking column needed. The fixture plants 50
-    truncated quoters (prefix of a real doc under a new id); each must
-    surface as (quoter -> original) with high containment. Everything is
-    md5-integer arithmetic, replayed list-for-list in DuckDB."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        winnowing_containment_pairs,
-    )
-
-    docs = load_table(spark, "documents", sf_dir).filter(
-        (F.col("lang") == "en") & (F.col("doc_id") < 200)
-    )
-    quoters = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.substring("text", 1, 250).alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(quoters)
-    return winnowing_containment_pairs(
-        corpus, k=3, window=4, threshold=0.6, max_fp_docs=500
-    ).orderBy("id_a", "id_b")
 
 
 @register(
@@ -2899,7 +2141,7 @@ def ppjoin_jaccard_pairs(spark, sf_dir):
     (`operators/dedup.py ppjoin_pairs`, t=0.5): pairs must share one of
     each side's rarest-prefix tokens, pass the length gate, then verify
     exact Jaccard — deterministic 100% recall without MinHash's banded
-    probability or ngram_jaccard's blocking column, at prefix-join cost.
+    probability or an all-pairs blocking column, at prefix-join cost.
     Brute-force completeness is pinned in tests/test_llm_ops.py."""
     from ningaloo_turtle_etl_spark.operators.dedup import ppjoin_pairs
 

@@ -96,9 +96,8 @@ PRIORITY: list[str] = [
     "join_natural",  # J4 natural join
     "string_null_funcs",  # F9/F10/F11 string and null functions
     "sql_entry_point",  # the §3.1 flagship through spark.sql
-    # Near-duplicate detection (perfbench's curation workload runs minhash).
+    # MinHash near-duplicate pairs (perfbench's curation workload runs it).
     "minhash_near_dups",
-    "simhash_near_dups",
     # The split forms of text_token_quality, patch_season and
     # timestamp_pipeline.
     "text_token_stats",
@@ -113,19 +112,13 @@ PRIORITY: list[str] = [
     "corpus_clean_pipeline",
     "geo_distance_stats",
     "geo_nearest_site",
-    "near_dup_clusters",
     "decontaminate_corpus",
     "repetition_metrics",
     "training_mix_sample",
-    "near_dup_dedup",
-    "dedup_audit",
     "doc_chunks",
     "sequence_packing",
     "packed_chunk_batches",
-    "chunk_dedup",
     "embedding_norm_stats",
-    "incremental_dedup",
-    "duplicate_passage_removal",
     "spatial_tag_regions_expr",  # J7 as one Catalyst expression
     "temperature_mix_sample",
     "stratified_sample_exact",
@@ -138,9 +131,6 @@ PRIORITY: list[str] = [
     "training_shards",
     "varpart_fractions",  # M5 variation partitioning
     "gopher_repetition_stats",
-    "substring_dup_stats",
-    "substring_span_removal",
-    "edit_similarity_pairs",
     "gap_fill_daily_values",
     "event_transition_probs",
     "url_domain_cap",
@@ -148,24 +138,19 @@ PRIORITY: list[str] = [
     "hopping_window_tally",
     "scd2_user_state",
     "entity_resolution_clusters",
-    "containment_near_dups",
     "readability_scores",
     "rolling_weekly_value",
     "value_share_of_total",
     "data_quality_profile",
     "benford_first_digit",
     "interarrival_stats",
-    "soft_dedup_weights",
     "length_bucket_batches",
     "curriculum_order",
     "event_sessions",
     "cdc_apply_snapshot",
     "oov_rate",
-    "ngram_novelty",
     "label_centroid_cosine",
     "hard_negative_mining",
-    "minhash_incremental_near_dups",
-    "cross_source_duplication",
     "source_gini",
     "boilerplate_removal",
     "contrastive_negative_pairs",
@@ -181,13 +166,11 @@ PRIORITY: list[str] = [
     "fuzzy_part_clusters",
     "fuzzy_part_soundex_pairs",
     "fuzzy_part_incremental_pairs",
-    "winnowing_quote_pairs",
     "bleu_rouge_by_source",
     "bitext_margin_pairs",
     "table_digest_by_flag",
     "first_event_per_user",  # §2.5 first encounter per entity
     "image_ahash_near_dups",
-    "ngram_jaccard_near_dups",
     "source_lang_diversity",
     "moment_profile_by_type",
     "entropy_l_diversity_events",

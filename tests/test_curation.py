@@ -382,18 +382,6 @@ def test_budget_select_exact_with_fractional_weights(spark):
     assert abs(sum(r["w"] for r in out) - 6.0) < 1e-9
 
 
-def test_cluster_representatives_survives_absent_min_id(spark):
-    # Regression (r04 review): when the component's min id is not in docs
-    # (filtered upstream after pair generation), the whole cluster used to
-    # vanish; now the smallest PRESENT id represents it.
-    from ningaloo_turtle_etl_spark.operators.graph import cluster_representatives
-
-    docs = spark.createDataFrame([(2, "b"), (3, "c"), (9, "z")], "doc_id long, text string")
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    kept = sorted(r["doc_id"] for r in cluster_representatives(docs, pairs).collect())
-    assert kept == [2, 9]  # 2 represents {1,2,3}'s present members; 9 singleton
-
-
 def test_pii_counts_match_redaction_markers(spark):
     # Regression (r04 review): counting on the original text double-counted
     # spans an earlier pattern consumed (a phone-shaped email localpart

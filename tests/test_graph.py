@@ -1,13 +1,10 @@
-"""Connected-components / cluster-representative tests on planted graphs."""
+"""Connected-components tests on planted graphs."""
 
 from __future__ import annotations
 
 import pytest
 
-from ningaloo_turtle_etl_spark.operators.graph import (
-    cluster_representatives,
-    connected_components,
-)
+from ningaloo_turtle_etl_spark.operators.graph import connected_components
 
 
 def test_chain_star_and_separate_components(spark):
@@ -38,15 +35,6 @@ def test_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="no convergence"):
         connected_components(pairs, max_iterations=2)
-
-
-def test_cluster_representatives_keep_min_and_singletons(spark):
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in (1, 2, 3, 7, 9)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    kept = sorted(r["doc_id"] for r in cluster_representatives(docs, pairs).collect())
-    assert kept == [1, 7, 9]  # cluster {1,2,3} → 1; singletons survive
 
 
 def test_entity_resolution_composition_blocks_and_elects(spark):

@@ -1,19 +1,16 @@
-"""LLM-pipeline operator tests: planted near-duplicates for MinHash/SimHash,
+"""LLM-pipeline operator tests: planted near-duplicates for MinHash,
 exact cosine top-k against numpy, reference-implementation parity for the
 pieces no SQL oracle can check, multimodal plumbing."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
 from ningaloo_turtle_etl_spark.operators.dedup import (
     exact_dedup,
-    hash64,
     minhash_near_dup_pairs,
-    simhash_near_dup_pairs,
 )
 from ningaloo_turtle_etl_spark.operators.multimodal import (
     documents_as_media,
@@ -70,42 +67,12 @@ def test_minhash_jaccard_is_exact_on_candidates(spark, docs):
         assert abs(r["jaccard"] - expect) < 1e-6
 
 
-def test_minhash_signature_slots_are_distinct_hash_functions(spark, docs):
-    # Regression: a 2-arg transform lambda receives the array INDEX as its
-    # second param, which once collapsed all seeds into one hash function.
-    from ningaloo_turtle_etl_spark.operators.dedup import minhash_signature, shingles
-
-    sig = (
-        docs.filter(F.col("doc_id") == 1)
-        .select(minhash_signature(shingles("text", 3), 32).alias("sig"))
-        .collect()[0]["sig"]
-    )
-    assert len(sig) == 32
-    assert len(set(sig)) >= 24  # independent seeds → (almost) all distinct
-
-
-def test_minhash_md5_family_matches_xxhash64_semantics(spark, docs):
-    # The md5 family (default, DuckDB-reproducible) must satisfy the same
-    # planted-pair contract as the xxhash64 family, and its verify stage is
-    # the same exact Jaccard (identical to 60-bit hash collisions).
-    for fam in ("md5", "xxhash64"):
-        pairs = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in minhash_near_dup_pairs(
-                docs, threshold=0.5, hash_family=fam
-            ).collect()
-        }
-        assert (1, 2) in pairs and pairs[(1, 2)] == 1.0, fam
-        assert (1, 3) in pairs and 0.5 <= pairs[(1, 3)] < 1.0, fam
-        assert not any({a, b} & {4, 5} for a, b in pairs), fam
-
-
 def test_minhash_md5_signature_slots_are_distinct_hash_functions(spark, docs):
     # The 2-universal (a·h+b) mod p slots must behave as independent hash
-    # functions, mirroring the xxhash64 slot-distinctness regression test.
+    # functions, not collapse into one.
     from ningaloo_turtle_etl_spark.operators.dedup import (
         md5_hash60,
-        minhash_signature_md5,
+        minhash_slots_from_hashes,
         shingles,
     )
 
@@ -116,114 +83,11 @@ def test_minhash_md5_signature_slots_are_distinct_hash_functions(spark, docs):
                 F.transform(shingles("text", 3), lambda s: md5_hash60(s))
             ).alias("sh")
         )
-        .select(minhash_signature_md5(F.col("sh"), 32).alias("sig"))
+        .select(minhash_slots_from_hashes(F.col("sh")).alias("sig"))
         .collect()[0]["sig"]
     )
     assert len(sig) == 32
     assert len(set(sig)) >= 24
-
-
-def test_simhash_md5_family_planted_pairs(spark, docs):
-    # 60-bit md5 signature family: exact dup at hamming 0; near dup within
-    # a generous budget; the unrelated/short docs never pair up.
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dup_pairs(docs, max_hamming=8, signature="md5").collect()
-    }
-    assert pairs.get((1, 2)) == 0
-    assert (1, 3) in pairs and pairs[(1, 3)] <= 8
-    assert not any({a, b} & {4, 5} for a, b in pairs)
-
-
-def _spread_bits_udf(num_bits=64):
-    # Deterministic fake: 'b' differs from 'a' by 8 bits, one per 8-bit
-    # block — the adversarial layout for prefix/rotation bucketing.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def fake(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            base = 0x0123456789ABCDEF
-            if t == "b":
-                for k in range(8):
-                    base ^= 1 << (8 * k)
-            out.append(base - 2**63)  # into signed long range
-        return pd.Series(out, dtype="int64")
-
-    return fake
-
-
-def test_simhash_pigeonhole_guarantee(spark):
-    # Signatures at Hamming distance exactly max_hamming with the differing
-    # bits spread across blocks — the old rotation scheme missed these; the
-    # disjoint-block scheme must always catch them.
-    from ningaloo_turtle_etl_spark.operators import dedup as dd
-
-    real_udf = dd.simhash_udf
-    dd.simhash_udf = _spread_bits_udf
-    try:
-        df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-        pairs = dd.simhash_near_dup_pairs(df, max_hamming=8, signature="fnv_udf").collect()
-    finally:
-        dd.simhash_udf = real_udf
-    assert [(p["id_a"], p["id_b"], p["hamming"]) for p in pairs] == [(1, 2, 8)]
-
-
-def test_simhash_near_dups_and_fnv_reference(spark, docs):
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_near_dup_pairs(docs, max_hamming=8).collect()
-    }
-    assert pairs.get((1, 2)) == 0  # identical text → identical signature
-    assert (1, 3) in pairs and pairs[(1, 3)] <= 8
-    # FNV-1a reference vector (independently computed constants).
-    assert hash64("") == 0xCBF29CE484222325
-    assert hash64("a") == 0xAF63DC4C8601EC8C
-
-
-def test_simhash_catalyst_matches_fnv_udf_pair_set(spark, docs):
-    # The default JVM-side signature (xxhash64 tokens) and the round-1
-    # pandas-UDF/FNV form use different token hashes, so signatures differ —
-    # but both must find the same planted near-dup structure.
-    fast = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_dup_pairs(docs, max_hamming=8).collect()
-    }
-    slow = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_near_dup_pairs(
-            docs, max_hamming=8, signature="fnv_udf"
-        ).collect()
-    }
-    assert fast == slow
-
-
-def test_with_simhash_matches_single_expression_form(spark, docs):
-    # Two-step filter-count form and the HOF-aggregate form implement the
-    # same sign rule over the same token hashes — signatures must be equal.
-    from ningaloo_turtle_etl_spark.operators.dedup import simhash_expr, with_simhash
-
-    fast = {r["id"]: r["sig"] for r in with_simhash(docs).collect()}
-    hof = {
-        r["doc_id"]: r["sig"]
-        for r in docs.select("doc_id", simhash_expr(F.col("text")).alias("sig")).collect()
-    }
-    assert fast == hof
-
-
-def test_simhash_expr_determinism_and_null_safety(spark):
-    from ningaloo_turtle_etl_spark.operators.dedup import simhash_expr
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, None), (4, "")],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r["sig"] for r in df.select(
-        "doc_id", simhash_expr(F.col("text")).alias("sig")
-    ).collect()}
-    assert rows[1] == rows[2]  # identical text → identical signature
-    assert rows[3] == 0 and rows[4] == 0  # null/empty → 0, like the UDF form
 
 
 def test_cosine_topk_matches_numpy(spark):
@@ -263,48 +127,6 @@ def test_multimodal_stub_and_fake_paths(spark, docs):
     assert by_id[1]["feature"] == by_id[2]["feature"]
 
 
-def test_incremental_dedup_against_snapshot(spark):
-    from ningaloo_turtle_etl_spark.operators.dedup import incremental_exact_dedup
-    from ningaloo_turtle_etl_spark.operators.text import with_fingerprint
-
-    snapshot = spark.createDataFrame(
-        [(1, "existing doc one"), (2, "existing doc two")], "doc_id long, text string"
-    )
-    new = spark.createDataFrame(
-        [
-            (10, "existing doc one"),     # dup of snapshot → dropped
-            (11, "brand new document"),   # survives
-            (12, "brand new document"),   # intra-batch dup of 11 → dropped
-            (13, "another new one"),      # survives
-        ],
-        "doc_id long, text string",
-    )
-    seen = with_fingerprint(snapshot).select("fingerprint")
-    kept = sorted(r["doc_id"] for r in incremental_exact_dedup(new, seen).collect())
-    assert kept == [11, 13]
-
-
-def test_best_cluster_representatives_keeps_highest_quality(spark):
-    from ningaloo_turtle_etl_spark.operators.graph import (
-        best_cluster_representatives,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, 0.2), (2, 0.9), (3, 0.9), (4, 0.5), (5, 0.1)],
-        "doc_id long, quality double",
-    )
-    # {1,2,3} one cluster, {5} paired with nothing, 4 singleton.
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "id_a long, id_b long"
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in best_cluster_representatives(docs, pairs, "quality").collect()
-    )
-    # Cluster {1,2,3}: max quality 0.9 tie between 2 and 3 → min id 2.
-    assert kept == [2, 4, 5]
-
-
 def test_dedup_cache_scope_releases_storage(spark, docs):
     """Repeated dedup calls inside tracked_cache_scope leave NO cached RDDs
     behind — long-lived sessions don't accumulate signature caches."""
@@ -312,7 +134,6 @@ def test_dedup_cache_scope_releases_storage(spark, docs):
         release_tracked_caches,
         tracked_cache_scope,
     )
-    from ningaloo_turtle_etl_spark.operators.dedup import simhash_near_dup_pairs
 
     release_tracked_caches()  # clean slate from earlier tests in the session
     sc = spark.sparkContext
@@ -328,7 +149,6 @@ def test_dedup_cache_scope_releases_storage(spark, docs):
         before = cached_ids()
         with tracked_cache_scope():
             minhash_near_dup_pairs(docs, threshold=0.5).collect()
-            simhash_near_dup_pairs(docs, max_hamming=8).collect()
             ours = cached_ids() - before
             assert ours  # caches live while results are consumed
         assert not (cached_ids() & ours)  # and released at scope exit
@@ -342,42 +162,11 @@ def test_dedup_cache_scope_releases_storage(spark, docs):
     assert not (cached_ids() & ours)
 
 
-def test_duplicate_passage_removal_policy(spark):
-    """Global first occurrence (by doc_id, then position) survives; later
-    occurrences — cross-doc AND within-doc — are cut; tokenless docs pass
-    through; reconstruction preserves passage order."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        duplicate_passage_removal,
-    )
-
-    P = 3  # passage size in tokens
-    rows = [
-        # doc 1: two passages, the second repeated inside doc 3
-        (1, "a b c d e f"),
-        # doc 2: repeats doc 1's FIRST passage (loses it), plus its own
-        (2, "a b c x y z"),
-        # doc 3: repeats doc 1's second passage twice (both lose), own tail
-        (3, "d e f d e f tail"),
-        (4, ""),  # tokenless
-        (5, "q r"),  # single short passage
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_passages"], r["n_removed"], r["cleaned_text"])
-        for r in duplicate_passage_removal(df, passage_tokens=P).collect()
-    }
-    assert got[1] == (2, 0, "a b c d e f")
-    assert got[2] == (2, 1, "x y z")
-    assert got[3] == (3, 2, "tail")
-    assert got[4] == (0, 0, "")
-    assert got[5] == (1, 0, "q r")
-
-
-def test_minhash_simhash_oracles_survive_mixed_case(spark, tmp_path):
-    # Regression (r04 review): the oracles once tokenized lower(text) while
-    # the Spark pipelines hash original-case text — the parity gate passed
-    # only because the synthetic corpus is all-lowercase. Re-run both full
-    # oracle comparisons on a deterministically case-mangled corpus.
+def test_minhash_oracle_survives_mixed_case(spark, tmp_path):
+    # Regression (r04 review): the oracle once tokenized lower(text) while
+    # the Spark pipeline hashes original-case text — the parity gate passed
+    # only because the synthetic corpus is all-lowercase. Re-run the full
+    # oracle comparison on a deterministically case-mangled corpus.
     import duckdb
 
     from ningaloo_turtle_etl_spark import registry
@@ -400,22 +189,24 @@ def test_minhash_simhash_oracles_survive_mixed_case(spark, tmp_path):
         ) TO '{dst}' (FORMAT PARQUET)
     """)
     con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{dst}')")
-    qs, osql = registry.queries(), registry.oracle_sql()
-    for name in ("minhash_near_dups", "simhash_near_dups"):
-        sdf = (
-            qs[name](spark, str(tmp_path))
-            .toPandas()
-            .sort_values(["id_a", "id_b"])
-            .reset_index(drop=True)
-        )
-        odf = (
-            con.sql(osql[name]).df().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-        )
-        assert sdf.shape == odf.shape, name
-        for c in sdf.columns:
-            a, o = sdf[c], odf[c].astype(sdf[c].dtype)
-            same = a.round(6).equals(o.round(6)) if a.dtype.kind == "f" else a.equals(o)
-            assert same, (name, c)
+    name = "minhash_near_dups"
+    sdf = (
+        registry.queries()[name](spark, str(tmp_path))
+        .toPandas()
+        .sort_values(["id_a", "id_b"])
+        .reset_index(drop=True)
+    )
+    odf = (
+        con.sql(registry.oracle_sql()[name])
+        .df()
+        .sort_values(["id_a", "id_b"])
+        .reset_index(drop=True)
+    )
+    assert sdf.shape == odf.shape
+    for c in sdf.columns:
+        a, o = sdf[c], odf[c].astype(sdf[c].dtype)
+        same = a.round(6).equals(o.round(6)) if a.dtype.kind == "f" else a.equals(o)
+        assert same, c
 
 
 def test_gopher_repetition_stats_matches_reference(spark):
@@ -475,144 +266,6 @@ def test_gopher_repetition_stats_matches_reference(spark):
     assert got[3]["repetition_ok"] == 1  # no grams → all fracs 0.0
 
 
-def test_substring_dedup_matches_python_reference(spark):
-    """From-scratch reference: enumerate k-char windows, rank occurrences
-    globally by (doc, pos), interval-union both the duplicated and the
-    removable sets, rebuild text from the gaps. Includes a straddling
-    duplicate (shared span offset by a prefix, invisible to non-overlapping
-    passage dedup), a self-overlap degenerate, a sub-k doc, and a null."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        substring_dup_stats,
-        substring_span_removal,
-    )
-
-    k = 12
-    rows = [
-        (1, "the shared span of text lives here and then diverges one way"),
-        (2, "ZZ the shared span of text lives here and then goes another"),
-        (3, "b" * 30),
-        (4, "tiny"),
-        (5, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # --- reference ---
-    occ: dict[str, list[tuple[int, int]]] = {}
-    for did, txt in rows:
-        t = txt or ""
-        for pos in range(1, len(t) - k + 2):
-            occ.setdefault(t[pos - 1 : pos - 1 + k], []).append((did, pos))
-
-    def union_len(ivs):
-        total, end = 0, 0
-        for s, e in sorted(ivs):
-            total += max(0, e - max(s, end))
-            end = max(end, e)
-        return total
-
-    exp_stats, exp_clean = {}, {}
-    for did, txt in rows:
-        t = txt or ""
-        wins = [
-            (pos, t[pos - 1 : pos - 1 + k])
-            for pos in range(1, len(t) - k + 2)
-        ]
-        dup = [
-            (p, p + k) for p, w in wins if len(occ[w]) >= 2
-        ]
-        rem = [
-            (p, p + k)
-            for p, w in wins
-            if sorted(occ[w]).index((did, p)) >= 1
-        ]
-        exp_stats[did] = (
-            len(wins),
-            len(dup),
-            len(rem),
-            round(union_len(dup) / len(t), 6) if t else 0.0,
-            round(union_len(rem) / len(t), 6) if t else 0.0,
-        )
-        keep = [True] * len(t)
-        for s, e in rem:
-            for i in range(s - 1, min(e - 1, len(t))):
-                keep[i] = False
-        exp_clean[did] = "".join(c for c, kp in zip(t, keep) if kp)
-
-    got = {
-        r["doc_id"]: (
-            r["n_windows"],
-            r["n_dup_windows"],
-            r["n_removable_windows"],
-            r["dup_char_frac"],
-            r["removable_char_frac"],
-        )
-        for r in substring_dup_stats(df, k=k, hash_family="md5").collect()
-    }
-    assert got == exp_stats
-    # doc 2's straddling duplicate must actually fire
-    assert got[2][2] > 0
-
-    cleaned = {
-        r["doc_id"]: r["cleaned_text"]
-        for r in substring_span_removal(df, k=k, hash_family="md5").collect()
-    }
-    assert cleaned == exp_clean
-    # both hash families agree on STATS (hash only keys the grouping)
-    got_xx = {
-        r["doc_id"]: (
-            r["n_windows"],
-            r["n_dup_windows"],
-            r["n_removable_windows"],
-            r["dup_char_frac"],
-            r["removable_char_frac"],
-        )
-        for r in substring_dup_stats(
-            df, k=k, hash_family="xxhash64"
-        ).collect()
-    }
-    assert got_xx == exp_stats
-
-
-def test_substring_content_defined_sampling_is_phase_free(spark):
-    """sample_mod keeps windows by CONTENT hash, so the two copies of a
-    shared span keep exactly the same windows even though their offsets
-    differ by amounts with every residue mod m — the property a positional
-    stride cannot provide. Verified against a hashlib replica of the
-    sampling rule."""
-    import hashlib
-
-    from ningaloo_turtle_etl_spark.operators.dedup import substring_dup_stats
-
-    k, m = 16, 3
-
-    def sampled(win: str) -> bool:
-        return int(hashlib.md5(win.encode()).hexdigest()[:15], 16) % m == 0
-
-    shared = "0123456789abcdefghijklmnop"
-    in_span = [
-        shared[i : i + k] for i in range(len(shared) - k + 1)
-    ]
-    n_sampled = sum(sampled(w) for w in in_span)
-    assert n_sampled > 0, "test corpus must contain a sampled window"
-
-    # offsets 0..m span every residue class mod m
-    rows = [
-        (i, "x" * i + shared + "y" * (8 - i)) for i in range(m + 1)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: (r["n_dup_windows"], r["n_removable_windows"])
-        for r in substring_dup_stats(
-            df, k=k, sample_mod=m, hash_family="md5"
-        ).collect()
-    }
-    for i in range(m + 1):
-        assert out[i][0] >= n_sampled, out
-    # first doc holds the kept copies; every later doc has removables
-    for i in range(1, m + 1):
-        assert out[i][1] >= n_sampled, out
-
-
 def test_edit_similarity_join_complete_vs_bruteforce(spark):
     """Prefix filtering must lose NOTHING versus brute-force levenshtein —
     the theorem says one edit disturbs at most q grams, so strings within
@@ -662,32 +315,6 @@ def test_edit_similarity_join_complete_vs_bruteforce(spark):
         assert got == exp, (k, got.keys() ^ exp.keys())
 
 
-def test_containment_catches_subset_jaccard_misses(spark):
-    """A short doc embedded verbatim in a much longer one: containment of
-    the short side is 1.0 while Jaccard stays under a symmetric 0.5
-    threshold — the case the containment operator exists for. Direction
-    matters: the long side is NOT contained in the short one."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    short = "alpha beta gamma delta"
-    long = short + " " + " ".join(f"filler{i}" for i in range(40))
-    df = spark.createDataFrame(
-        [(1, short, "en"), (2, long, "en")], "doc_id long, text string, lang string"
-    )
-    cont = ngram_containment_pairs(
-        df, block_col="lang", shingle_n=2, threshold=0.8
-    ).collect()
-    assert [(r["id_a"], r["id_b"]) for r in cont] == [(1, 2)]
-    assert cont[0]["containment"] == 1.0
-    jac = ngram_jaccard_pairs(
-        df, block_col="lang", shingle_n=2, threshold=0.5
-    ).collect()
-    assert jac == []
-
-
 def test_readability_flesch_hand_check(spark):
     from ningaloo_turtle_etl_spark.operators.text import readability_scores
 
@@ -705,21 +332,6 @@ def test_readability_flesch_hand_check(spark):
         spark.createDataFrame([(2, "")], "doc_id long, text string")
     ).collect()[0]
     assert empty["flesch"] is None
-
-
-def test_soft_dedup_weights_unit_mass_per_cluster(spark, docs):
-    from ningaloo_turtle_etl_spark.operators.dedup import soft_dedup_weights
-
-    rows = {r["doc_id"]: r for r in soft_dedup_weights(docs).collect()}
-    assert len(rows) == 5  # every copy survives
-    assert rows[1]["cluster_size"] == 2 and rows[2]["cluster_size"] == 2
-    assert rows[1]["weight"] == 0.5 and rows[2]["weight"] == 0.5
-    assert rows[3]["cluster_size"] == 1 and rows[3]["weight"] == 1.0
-    # alpha=2: heavier suppression, singletons untouched
-    sq = {r["doc_id"]: r for r in soft_dedup_weights(docs, alpha=2.0).collect()}
-    assert sq[1]["weight"] == 0.25 and sq[4]["weight"] == 1.0
-    # total gradient mass = number of distinct documents (alpha=1)
-    assert sum(r["weight"] for r in rows.values()) == 4.0
 
 
 def test_length_bucket_batches_policy(spark):
@@ -854,23 +466,6 @@ def test_oov_rate_hand_computed(spark):
     assert k1[1] == 1 and k1[2] == 2
 
 
-def test_ngram_novelty_hand_check(spark):
-    from ningaloo_turtle_etl_spark.operators.dedup import ngram_novelty
-
-    rows = [
-        (1, "a b c d"),   # grams: "a b c", "b c d" -> both novel
-        (2, "a b c d"),   # exact repeat -> nothing novel
-        (3, "a b c x"),   # "a b c" seen, "b c x" new -> 0.5
-        (4, "z"),         # sub-n doc: whole text is one novel gram
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in ngram_novelty(df, n=3).collect()}
-    assert out[1]["n_grams"] == 2 and out[1]["novelty"] == 1.0
-    assert out[2]["n_grams"] == 2 and out[2]["n_novel"] == 0
-    assert out[3]["novelty"] == 0.5
-    assert out[4]["n_grams"] == 1 and out[4]["novelty"] == 1.0
-
-
 def test_label_centroid_cosine_known_geometry(spark):
     from ningaloo_turtle_etl_spark.operators.similarity import (
         label_centroid_cosine,
@@ -916,68 +511,6 @@ def test_hard_negatives_excludes_same_label(spark):
     anch = df.filter(F.col("vec_id") == 5)
     got = {r["query_id"] for r in hard_negatives(df, k=2, anchors=anch).collect()}
     assert got == {5}
-
-
-def test_minhash_incremental_equals_full_run_restricted(spark):
-    from ningaloo_turtle_etl_spark.operators.cache import tracked_cache_scope
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        minhash_incremental_pairs,
-        minhash_near_dup_pairs,
-    )
-
-    # corpus with dups planted across the old/new split and inside each side
-    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
-    rows = []
-    for i in range(30):
-        base = " ".join(words[(i + j) % len(words)] for j in range(12))
-        rows.append((i, base))
-    rows.append((30, rows[5][1]))                     # new dup of old 5
-    rows.append((31, rows[12][1] + " extra tail"))    # new near-dup of old 12
-    rows.append((32, rows[30][1]))                    # new dup of new 30
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    old, new = df.filter(F.col("doc_id") < 28), df.filter(F.col("doc_id") >= 28)
-    with tracked_cache_scope():
-        full = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in minhash_near_dup_pairs(
-                df, threshold=0.3, hash_family="md5"
-            ).collect()
-        }
-        inc = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in minhash_incremental_pairs(
-                old, new, threshold=0.3, hash_family="md5"
-            ).collect()
-        }
-    expect = {k: v for k, v in full.items() if k[1] >= 28}
-    assert inc == expect and len(inc) >= 2
-    assert (5, 30) in inc and inc[(5, 30)] == 1.0
-    assert (30, 32) in inc  # new x new pair also surfaces
-    assert all(k[1] >= 28 for k in inc)  # never an old x old pair
-
-
-def test_cross_source_duplication_hand_matrix(spark):
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        cross_source_duplication,
-    )
-
-    rows = [
-        (1, "same text one", "A"),
-        (2, "same text one", "B"),      # A-B cluster, 2 docs
-        (3, "same text one", "B"),      # ...3 docs total, B has 2
-        (4, "other text", "A"),
-        (5, "other text", "A"),         # A-A within-source cluster
-        (6, "unique snowflake", "C"),   # singleton: no row
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {
-        (r["source_a"], r["source_b"]): (r["n_clusters"], r["n_docs"])
-        for r in cross_source_duplication(df).collect()
-    }
-    assert out[("A", "B")] == (1, 3)
-    assert out[("A", "A")] == (1, 2)
-    assert out[("B", "B")] == (1, 2)  # B holds 2 copies in the shared cluster
-    assert ("C", "C") not in out and len(out) == 3
 
 
 def test_source_scorecard_hand_computed(spark):
@@ -1652,55 +1185,6 @@ def test_jpeg_decode_ycbcr_subsampling_and_auto_dispatch(spark):
         _auto_decode(b"GIF89a notsupported")
 
 
-def test_winnowing_guarantee_and_containment_direction(spark):
-    """The winnowing guarantee: any shared token run of at least
-    k + window - 1 tokens yields at least one shared fingerprint; a
-    quoted fragment surfaces as a DIRECTED high-containment pair."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        winnowing_containment_pairs,
-        winnowing_fingerprints,
-    )
-
-    base = ["w%d" % i for i in range(30)]
-    fragment = base[10:21]  # 11 shared tokens >= k+window-1 = 6
-    rows = [
-        (1, " ".join(base)),
-        (2, " ".join(["x%d" % i for i in range(8)] + fragment)),
-        (3, " ".join(base)),  # exact copy of 1
-        (4, " ".join("z%d" % i for i in range(25))),  # disjoint
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = {
-        i: {r["fp"] for r in rows_}
-        for i, rows_ in (
-            (i, winnowing_fingerprints(
-                df.filter(F.col("doc_id") == i), k=3, window=4
-            ).collect())
-            for i in (1, 2, 3, 4)
-        )
-    }
-    assert fps[1] == fps[3]  # deterministic, content-only
-    assert fps[1] & fps[2]   # the guarantee: shared run -> shared fp
-    assert not (fps[1] & fps[4])
-    # density: ~2/(window+1) of the k-grams are selected, never all
-    assert 1 <= len(fps[1]) < 28
-    pairs = {
-        (r["id_a"], r["id_b"]): r
-        for r in winnowing_containment_pairs(
-            df, k=3, window=4, threshold=0.3, max_fp_docs=10
-        ).collect()
-    }
-    # exact copies: containment 1.0 in both directions
-    assert pairs[(1, 3)]["containment"] == 1.0
-    assert pairs[(3, 1)]["containment"] == 1.0
-    # the quoting doc is covered by the original far more than vice versa
-    assert (2, 1) in pairs
-    c_fwd = pairs[(2, 1)]["containment"]
-    c_rev = pairs.get((1, 2))
-    assert c_fwd >= 0.3 and (c_rev is None or c_rev["containment"] < c_fwd)
-    assert not any(4 in p for p in pairs)
-
-
 def test_corpus_bleu_rouge_matches_python_replica(spark):
     import math
     from collections import Counter
@@ -2029,30 +1513,6 @@ def test_ppjoin_max_token_docs_cap(spark):
     assert capped == {(1, 2)}
     with _pt.raises(ValueError):
         ppjoin_pairs(df, threshold=0.5, max_token_docs=0)
-
-
-def test_winnowing_sub_k_docs_emit_no_fingerprints(spark):
-    """Documents shorter than k tokens have no k-grams, hence NO
-    fingerprints — two tiny unrelated docs must not pair at containment
-    1.0 via a sub-k gram hash."""
-    from ningaloo_turtle_etl_spark.operators.dedup import (
-        winnowing_containment_pairs,
-        winnowing_fingerprints,
-    )
-
-    rows = [
-        (1, "lone"),
-        (2, "two words"),
-        (3, "three whole tokens"),   # exactly k=3 -> one k-gram
-        (4, "unrelated tiny"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = winnowing_fingerprints(df, k=3, window=4).collect()
-    assert {r["id"] for r in fps} == {3}
-    pairs = winnowing_containment_pairs(
-        df, k=3, window=4, threshold=0.5
-    ).collect()
-    assert pairs == []
 
 
 def test_pca_power_component_replica_and_planted_direction(spark):

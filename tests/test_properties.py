@@ -286,9 +286,7 @@ def test_minhash_md5_verify_stage_is_exact_on_random_docs(spark, texts):
 
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in minhash_near_dup_pairs(
-            df, threshold=0.0, hash_family="md5"
-        ).collect()
+        for r in minhash_near_dup_pairs(df, threshold=0.0).collect()
     }
     release_tracked_caches()
     for (a, b), j in got.items():

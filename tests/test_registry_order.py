@@ -61,11 +61,9 @@ def test_critical_components_inside_driver_window():
 
 def test_out_of_window_queries_are_redundant_or_pytest_pinned():
     beyond = list(registry.queries())[WINDOW:]
-    oracles = registry.oracle_sql()
     allowed = {
         # second forms of components the window carries: A3, J4, §2.5,
-        # J1, blocked linkage, A10, the Jaccard-pair near-dup shape and the
-        # SQL-form flagship
+        # J1, blocked linkage, A10 and the SQL-form flagship
         "pivot_event_types",
         "join_natural",
         "first_event_per_user",
@@ -73,11 +71,9 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "join_left_single",
         "fuzzy_part_pairs",
         "pairwise_site_distances",
-        "ngram_jaccard_near_dups",
         "sql_entry_point",
-        # near-dup detection; parity also pinned in tests/test_llm_ops.py
+        # MinHash near-dup pairs; recall also pinned in tests/test_llm_ops.py
         "minhash_near_dups",
-        "simhash_near_dups",
         # extension families beyond SURVEY §2
         "session_window_tally",
         "asof_join_rates",
@@ -85,19 +81,13 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "corpus_clean_pipeline",
         "geo_distance_stats",
         "geo_nearest_site",
-        "near_dup_clusters",
         "decontaminate_corpus",
         "repetition_metrics",
         "training_mix_sample",
-        "near_dup_dedup",
-        "dedup_audit",
         "doc_chunks",
         "sequence_packing",
         "packed_chunk_batches",
-        "chunk_dedup",
         "embedding_norm_stats",
-        "incremental_dedup",
-        "duplicate_passage_removal",
         "spatial_tag_regions_expr",
         "temperature_mix_sample",
         "stratified_sample_exact",
@@ -110,9 +100,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "training_shards",
         "varpart_fractions",
         "gopher_repetition_stats",
-        "substring_dup_stats",
-        "substring_span_removal",
-        "edit_similarity_pairs",
         "gap_fill_daily_values",
         "event_transition_probs",
         "url_domain_cap",
@@ -120,24 +107,19 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "hopping_window_tally",
         "scd2_user_state",
         "entity_resolution_clusters",
-        "containment_near_dups",
         "readability_scores",
         "rolling_weekly_value",
         "value_share_of_total",
         "data_quality_profile",
         "benford_first_digit",
         "interarrival_stats",
-        "soft_dedup_weights",
         "length_bucket_batches",
         "curriculum_order",
         "event_sessions",
         "cdc_apply_snapshot",
         "oov_rate",
-        "ngram_novelty",
         "label_centroid_cosine",
         "hard_negative_mining",
-        "minhash_incremental_near_dups",
-        "cross_source_duplication",
         "source_gini",
         "boilerplate_removal",
         "contrastive_negative_pairs",
@@ -153,7 +135,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "fuzzy_part_clusters",
         "fuzzy_part_soundex_pairs",
         "fuzzy_part_incremental_pairs",
-        "winnowing_quote_pairs",
         "bleu_rouge_by_source",
         "bitext_margin_pairs",
         "table_digest_by_flag",
@@ -166,8 +147,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "dp_value_median_exponential",
         "hmm_forward_first4",
         "cohens_kappa_langid",
-        "pq_train_codebooks",
-        "ann_trained_ivf_pq_topk",
         "hmm_viterbi_first4",
         "inequality_profile_by_source",
         # F9-F11, and the split forms of text_token_quality / patch_season /
@@ -180,7 +159,6 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "season_watershed",
         "timestamp_parse_multi",
     }
-    assert set(beyond) <= allowed
-    # Anything out-of-window with an oracle still gets swept by pytest.
-    for name in beyond:
-        assert name in allowed and (name in oracles or name in allowed)
+    assert set(beyond) == allowed, (
+        f"unlisted={set(beyond) - allowed}, stale={allowed - set(beyond)}"
+    )

@@ -14,6 +14,7 @@ from ningaloo_turtle_etl_spark.functions.scalars import (
     restore_southern_sign,
     sanitize_column_names,
     season,
+    season_by_isoweek,
 )
 from ningaloo_turtle_etl_spark.operators.relational import natural_join
 
@@ -26,6 +27,30 @@ def test_season_watershed_total_and_monotone(spark):
     out = {r["d"].month: r["s"] for r in df.select("d", season("d").alias("s")).collect()}
     for m in range(1, 13):
         assert out[m] == (2020 if m > 7 else 2019)
+
+
+def test_season_by_isoweek_pins_the_reference_formula(spark):
+    # isoweek > 27 → calendar year, else year - 1 (wastd-api.Rmd:48-50,67),
+    # including the non-monotone step at New Year: ISO week 53 of 2020 runs
+    # into January 2021 with the new calendar year, and week 1 steps back.
+    cases = {
+        datetime.date(2020, 7, 5): 2019,  # ISO week 27
+        datetime.date(2020, 7, 6): 2020,  # week 28
+        datetime.date(2020, 12, 31): 2020,  # week 53
+        datetime.date(2021, 1, 1): 2021,  # week 53, new calendar year
+        datetime.date(2021, 1, 4): 2020,  # week 1
+    }
+    df = spark.createDataFrame([(d,) for d in cases], "d date")
+    got = {
+        r["d"]: (r["w"], r["s"])
+        for r in df.select(
+            "d", F.weekofyear("d").alias("w"), season_by_isoweek("d").alias("s")
+        ).collect()
+    }
+    assert {d: w for d, (w, _) in got.items()} == {
+        d: d.isocalendar()[1] for d in cases
+    }
+    assert {d: s for d, (_, s) in got.items()} == cases
 
 
 def test_parse_date_time_order_precedence(spark):
