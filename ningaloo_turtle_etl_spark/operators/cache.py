@@ -2,7 +2,7 @@
 intermediate state their callers consume lazily.
 
 Several operators persist a frame that multiple plan branches reference
-(MinHash signature state, DSIR's per-doc bucket counts). The RESULT
+(MinHash signature state, q-gram prefix rows). The RESULT
 frames are lazy, so the operator cannot unpersist before the caller
 consumes them — instead every persist is registered here and released
 explicitly, so long-lived sessions issuing many calls don't accumulate

@@ -599,125 +599,6 @@ def pack_chunks(
     )
 
 
-# --- deterministic global shuffle + training shards -------------------------
-
-
-def _shard_hash60(id_col: str) -> Column:
-    """First 60 bits of md5(id-as-string) as a non-negative int64 — ONE
-    definition shared by assignment and manifest, so the two can never
-    disagree on which shard a row belongs to (the consistency
-    tests/test_curation.py pins)."""
-    return F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    )
-
-
-def assign_training_shards(
-    df: DataFrame,
-    n_shards: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic global shuffle for training output: every row gets a
-    ``shard_id`` (md5-hash mod n_shards — balanced in expectation,
-    engine-portable, stable under retries/re-runs, unlike
-    ``repartition(n)``'s round-robin which depends on input split order)
-    and a ``shard_pos`` (rank of the row's 60-bit hash within its shard —
-    hash order IS the reproducible pseudo-random training order; ties are
-    impossible while ids are unique because equal hashes fall back to id
-    order). Adds ``shard_id``, ``shard_pos``.
-
-    100 TB shape: the one shuffle is the shard_pos window, partitioned by
-    shard (n_shards partitions — size n_shards ≥ executor count
-    accordingly). A writer that doesn't need explicit positions should
-    instead ``repartition(n_shards, shard_id).sortWithinPartitions(hash)``
-    — same layout, no rank materialized, window-free."""
-    h = _shard_hash60(id_col)
-    with_shard = df.withColumns(
-        {"_shard_h": h, "shard_id": (h % F.lit(int(n_shards))).cast("int")}
-    )
-    w = Window.partitionBy("shard_id").orderBy(F.col("_shard_h"), F.col(id_col))
-    return with_shard.withColumn(
-        "shard_pos", (F.row_number().over(w) - F.lit(1)).cast("long")
-    ).drop("_shard_h")
-
-
-def training_shard_manifest(
-    df: DataFrame,
-    n_shards: int,
-    id_col: str = "doc_id",
-    weight_col: str = "n_chars",
-) -> DataFrame:
-    """Per-shard manifest — the sidecar a training job reads before the
-    shards: row count, total/max weight (chars or tokens), and the id range.
-    Window-free: shard assignment is a map-side expression and the manifest
-    is ONE n_shards-group aggregation, so this runs as a cheap audit pass
-    even when the positional form is skipped."""
-    shard = (_shard_hash60(id_col) % F.lit(int(n_shards))).cast("int")
-    return (
-        df.select(
-            shard.alias("shard_id"),
-            F.col(id_col).alias("_id"),
-            F.col(weight_col).alias("_w"),
-        )
-        .groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_w").alias("total_weight"),
-            F.max("_w").alias("max_weight"),
-            F.min("_id").alias("min_id"),
-            F.max("_id").alias("max_id"),
-        )
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "doc_id",
-    weight_col: str = "n_chars",
-) -> None:
-    """Materialize the deterministic global shuffle as a sharded training
-    layout: one parquet directory per ``shard_id`` with rows in ascending
-    ``shard_key`` (the 60-bit md5 hash — the reproducible pseudo-random
-    read order), plus a ``_manifest`` sidecar (underscore prefix → ignored
-    by parquet directory readers).
-
-    This is the window-free writer form assign_training_shards' docstring
-    promises: repartition(n_shards, shard_id) maps every shard wholly into
-    one task, sortWithinPartitions orders it, and the partitionBy writer
-    splits any task that received multiple shards into their directories
-    with order preserved — no shard_pos rank is ever materialized. Readers
-    get partition pruning on shard_id for free (one-shard reads touch one
-    directory) and can verify/resume from ``shard_key``."""
-    out = df.withColumns(
-        {
-            "shard_key": _shard_hash60(id_col),
-            "shard_id": (_shard_hash60(id_col) % F.lit(int(n_shards))).cast("int"),
-        }
-    )
-    (
-        out.repartition(n_shards, "shard_id")
-        .sortWithinPartitions("shard_id", "shard_key", id_col)
-        .write.partitionBy("shard_id")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    # Manifest from the WRITTEN data, not the source lineage — re-running
-    # training_shard_manifest(df) would rescan and re-hash the whole corpus
-    # a second time; the written shards already carry shard_id (free as the
-    # partition column) and every payload column.
-    back = df.sparkSession.read.parquet(path)
-    manifest = back.groupBy("shard_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(weight_col).alias("total_weight"),
-        F.max(weight_col).alias("max_weight"),
-        F.min(id_col).alias("min_id"),
-        F.max(id_col).alias("max_id"),
-    )
-    manifest.coalesce(1).write.mode("overwrite").parquet(f"{path}/_manifest")
-
-
 _LENGTH_BUCKETS = (16, 32, 64, 128, 256, 512, 1024)
 
 
@@ -826,8 +707,8 @@ def curriculum_order(
     within-stage shuffle key so a trainer can stream stage by stage without
     correlated ordering artifacts.
 
-    Output: input id + ``(stage, shuffle_key)``; feed to
-    ``write_training_shards`` partitioned by stage for stage-pruned reads.
+    Output: input id + ``(stage, shuffle_key)``; write it partitioned by
+    stage for stage-pruned reads.
 
     exact=True (default, oracle-parity path) assigns stages with NTILE over
     the total order (score desc, id) -- a single global sort, fine to ~1e8

@@ -32,35 +32,14 @@ from ningaloo_turtle_etl_spark.operators.text import tokens
 # don't accumulate storage.
 
 
-def spark_empty_pairs(df: DataFrame) -> DataFrame:
-    return df.sparkSession.createDataFrame([], "id_a long, id_b long, cosine double")
-
-
 # --- exact ------------------------------------------------------------------
-def exact_dedup(df: DataFrame) -> DataFrame:
-    """Keep the lowest-id representative of each exact-content group
-    (after whitespace/case normalization via the fingerprint)."""
-    from ningaloo_turtle_etl_spark.operators.text import with_fingerprint
-    from pyspark.sql.window import Window
-
-    fp = with_fingerprint(df)
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    return (
-        fp.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "fingerprint")
-    )
-
-
 def exact_dedup_semi(df: DataFrame) -> DataFrame:
-    """Exact dedup without shuffling document bodies: shuffle only
-    (fingerprint, doc_id) to elect keepers, then semi-join ids back.
-
-    vs exact_dedup (window): the window shuffles full rows once; this
-    variant shuffles two narrow columns plus an id semi-join. On a
-    high-duplication corpus the keeper set is much smaller than the input
-    and broadcasts, making the body side map-only — the right trade at
-    100 TB; at small scale the window form is simpler and equivalent."""
+    """Keep the lowest-id representative of each exact-content group (after
+    whitespace/case normalization via the fingerprint) without shuffling
+    document bodies: shuffle only (fingerprint, doc_id) to elect keepers,
+    then semi-join ids back. On a high-duplication corpus the keeper set is
+    much smaller than the input and broadcasts, making the body side
+    map-only."""
     from ningaloo_turtle_etl_spark.operators.text import with_fingerprint
 
     fp = with_fingerprint(df)
@@ -274,77 +253,28 @@ def minhash_near_dup_pairs(
 
 
 # --- embedding-cosine near-dup ---------------------------------------------
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    use_lsh_blocking: bool = True,
-    bits: int = 6,
-    tables: int = 6,
-) -> DataFrame:
-    """Near-duplicate ``vec_id`` pairs by ``embedding`` cosine ≥ threshold.
-
-    With ``use_lsh_blocking`` the candidate set comes from multi-table
-    sign-LSH bucket collisions (see operators.similarity) — at corpus scale
-    the all-pairs product never materializes; exact cosine verifies each
-    candidate. Without it, a plain self-join (only for oracle-sized inputs).
-
-    The hyperplane width is inferred from the data: hyperplanes of the
-    wrong width would null out every dot product (zip_with pads with NULL)
-    and silently collapse all vectors into one bucket.
-    """
+def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Near-duplicate ``vec_id`` pairs by ``embedding`` cosine ≥ threshold:
+    a plain ``id_a < id_b`` self-join verified by exact cosine, so the
+    input must be oracle-sized (the all-pairs product materializes)."""
     from ningaloo_turtle_etl_spark.operators.similarity import (
         _as_double,
         _dot,
-        _hyperplanes,
-        _bucket_expr,
         _norm,
     )
 
     base = df.select(
         F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
     ).withColumn("v_norm", _norm(F.col("v")))
-
-    if use_lsh_blocking:
-        first = df.select(F.size("embedding").alias("d")).first()
-        if first is None:
-            return spark_empty_pairs(df)
-        dim = int(first["d"])
-        tb = [
-            F.struct(
-                F.lit(t).alias("t"),
-                _bucket_expr(F.col("v"), _hyperplanes(dim, bits, 7 + 1000 * t)).alias("bk"),
-            )
-            for t in range(tables)
-        ]
-        exploded = base.withColumn("tb", F.explode(F.array(*tb))).select(
-            "id", "v", "v_norm", F.col("tb.t").alias("t"), F.col("tb.bk").alias("bk")
-        )
-        a, b = exploded.alias("a"), exploded.alias("b")
-        pairs = a.join(
-            b,
-            on=[
-                F.col("a.t") == F.col("b.t"),
-                F.col("a.bk") == F.col("b.bk"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.v").alias("va"),
-            F.col("b.v").alias("vb"),
-            F.col("a.v_norm").alias("na"),
-            F.col("b.v_norm").alias("nb"),
-        ).dropDuplicates(["id_a", "id_b"])
-    else:
-        a, b = base.alias("a"), base.alias("b")
-        pairs = a.join(b, on=[F.col("a.id") < F.col("b.id")]).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.v").alias("va"),
-            F.col("b.v").alias("vb"),
-            F.col("a.v_norm").alias("na"),
-            F.col("b.v_norm").alias("nb"),
-        )
+    a, b = base.alias("a"), base.alias("b")
+    pairs = a.join(b, on=[F.col("a.id") < F.col("b.id")]).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a.v").alias("va"),
+        F.col("b.v").alias("vb"),
+        F.col("a.v_norm").alias("na"),
+        F.col("b.v_norm").alias("nb"),
+    )
 
     cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     # Threshold the RAW cosine (matching the oracles and minhash); round

@@ -225,7 +225,7 @@ def _seeded_uniform(key: Column, seed: int) -> Column:
     """Deterministic uniform in (0,1) from md5(key # seed): 13 hex digits
     (52 bits) + a half-ulp offset so 0 and 1 are unreachable. The same
     md5-derived-hash family the sampling operators use for cross-engine
-    oracle parity (operators/selection.py)."""
+    oracle parity (operators/curation.py ``_sample_hash``)."""
     h = F.conv(
         F.substring(F.md5(F.concat_ws("#", key, F.lit(f"seed={int(seed)}"))), 1, 13),
         16,

@@ -361,8 +361,7 @@ def pq_train_codebooks_lloyd(
 class TrainedIvfPq:
     """Trained IVF+PQ parameters in integer micro-units — the driver-side
     artifact of the train stage (tiny: k_cells·dim + m·k_codes·(dim/m)
-    longs), consumed by encode and serve. Train once, serve many: persist
-    with ``write_trained_ivf_pq`` and reload in any later session."""
+    longs), consumed by encode and serve."""
 
     cents: list  # k_cells × dim coarse IVF centroids (micro ints)
     books: list  # m × k_codes × (dim/m) PQ codebooks (micro ints)
@@ -568,47 +567,6 @@ def _serve_from_index(
     )
 
 
-def train_ivf_pq(
-    corpus: DataFrame,
-    k_cells: int = 4,
-    coarse_iterations: int = 2,
-    m_subvectors: int = 4,
-    k_codes: int = 4,
-    pq_iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> TrainedIvfPq:
-    """The TRAIN stage alone: distributed Lloyd over the persisted
-    micro frame — coarse IVF centroids at full-vector grain (m=1) and
-    PQ codebooks at subvector grain. Returns the driver-side parameter
-    artifact; persist with ``write_trained_ivf_pq`` for
-    train-once/serve-many (r12 verdict item 7)."""
-    from pyspark import StorageLevel
-
-    base = _micro_base(corpus, id_col, vec_col)
-    if dim is None:
-        first = base.select(F.size("vm").alias("d")).first()
-        if first is None:
-            raise ValueError("train_ivf_pq: empty corpus")
-        dim = int(first["d"])
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        base.count()
-        cents, books = _train_coarse_and_pq(
-            base,
-            int(k_cells),
-            int(coarse_iterations),
-            int(m_subvectors),
-            int(k_codes),
-            int(pq_iterations),
-            dim,
-        )
-    finally:
-        base.unpersist()
-    return TrainedIvfPq(cents=cents, books=books, dim=dim)
-
-
 def _train_coarse_and_pq(
     base: DataFrame,
     k_cells: int,
@@ -644,111 +602,6 @@ def _train_coarse_and_pq(
             init_books=[books_p],
         )[0]
     return books_c[0], books_p
-
-
-def encode_ivf_pq(
-    corpus: DataFrame,
-    params: TrainedIvfPq,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Map-only ENCODE stage: corpus → (vec_id, cell, m codes) serving
-    index under trained parameters. Write with
-    ``write_ivf_pq_index`` (partitioned by cell) so probes prune.
-
-    ``id_col`` must be an integral type (the serving index carries
-    ``vec_id`` as long; smaller integer types widen losslessly) — a
-    non-integer id raises a clear TypeError up front instead of failing
-    inside the Arrow encode stage (r13 ADVICE)."""
-    return _encode_from_base(_micro_base(corpus, id_col, vec_col), params)
-
-
-def write_trained_ivf_pq(spark, params: TrainedIvfPq, path: str) -> None:
-    """Persist trained parameters as a tiny parquet of
-    (kind, subspace, idx, vec) rows — kind='coarse' rows carry the IVF
-    centroids (subspace = -1), kind='pq' rows the per-subspace
-    codebooks. Engine-portable (plain longs), reload with
-    ``load_trained_ivf_pq`` in any later session."""
-    rows = [
-        ("coarse", -1, j, [int(x) for x in c])
-        for j, c in enumerate(params.cents)
-    ] + [
-        ("pq", i, j, [int(x) for x in c])
-        for i, bk in enumerate(params.books)
-        for j, c in enumerate(bk)
-    ]
-    spark.createDataFrame(
-        rows, "kind string, subspace int, idx int, vec array<long>"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_trained_ivf_pq(spark, path: str) -> TrainedIvfPq:
-    """Reload ``write_trained_ivf_pq`` output into the driver-side
-    parameter artifact."""
-    rows = spark.read.parquet(path).collect()
-    cents = {
-        int(r["idx"]): [int(x) for x in r["vec"]]
-        for r in rows
-        if r["kind"] == "coarse"
-    }
-    by_sub: dict = {}
-    for r in rows:
-        if r["kind"] == "pq":
-            by_sub.setdefault(int(r["subspace"]), {})[int(r["idx"])] = [
-                int(x) for x in r["vec"]
-            ]
-    if not cents or not by_sub:
-        raise ValueError(f"load_trained_ivf_pq: no parameters at {path}")
-    books = [
-        [by_sub[i][j] for j in sorted(by_sub[i])] for i in sorted(by_sub)
-    ]
-    return TrainedIvfPq(
-        cents=[cents[j] for j in sorted(cents)],
-        books=books,
-        dim=len(cents[0]),
-    )
-
-
-def write_ivf_pq_index(enc: DataFrame, path: str) -> None:
-    """Persist the encoded serving index PARTITIONED BY cell (the
-    write_ivf_index convention): a probe reads only the matching cell
-    directories — partition pruning is the on-disk probe."""
-    enc.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def load_ivf_pq_index(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def serve_trained_ivf_pq_topk(
-    index: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    params: TrainedIvfPq,
-    k: int = 3,
-    nprobe: int = 2,
-    shortlist: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The SERVE stage over a prebuilt (possibly reloaded) index: IVF
-    cell probe → ADC shortlist → exact re-rank, identical tiers to the
-    fused ``trained_ivf_pq_topk`` — equality between the two is pinned
-    in tests (train-once/serve-many, r12 verdict item 7)."""
-    if k < 1 or nprobe < 1 or shortlist < k:
-        raise ValueError("need k >= 1, nprobe >= 1, shortlist >= k")
-    spark = corpus.sparkSession
-    return _serve_from_index(
-        index,
-        _micro_base(corpus, id_col, vec_col),
-        _collect_query_micros(queries, id_col, vec_col),
-        params,
-        k=int(k),
-        nprobe=int(nprobe),
-        shortlist=int(shortlist),
-        spark=spark,
-    )
-
 
 
 def trained_ivf_pq_topk(
@@ -813,11 +666,8 @@ def trained_ivf_pq_topk(
     try:
         base.count()
         # --- TRAIN: coarse centroids (m=1) + PQ codebooks (subspace),
-        # shared per-iteration scans (independent trajectories) ---
-        # (inlined against the SAME persisted base the encode and exact
-        # stages read — the standalone train_ivf_pq/encode_ivf_pq/
-        # serve_trained_ivf_pq_topk stages compose to the identical
-        # result, pinned in tests)
+        # shared per-iteration scans (independent trajectories), against
+        # the SAME persisted base the encode and exact stages read ---
         cents, books = _train_coarse_and_pq(
             base,
             int(k_cells),

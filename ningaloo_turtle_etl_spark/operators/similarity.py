@@ -5,9 +5,6 @@
   corpus is scanned map-side; per-query top-k via ranked window — no
   all-pairs shuffle. The approximate IVF-PQ loop lives in
   ``operators/quantize.py``.
-- ``_hyperplanes`` / ``_bucket_expr`` — seeded random-hyperplane sign
-  buckets as pure column expressions, the LSH blocking of
-  ``dedup.embedding_near_dup_pairs``.
 - Label centroids, hard negatives, embedding drift, margin bitext
   mining and deflated power-iteration PCA (``pca_power_components``).
 """
@@ -60,26 +57,6 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-# --- random-hyperplane LSH --------------------------------------------------
-def _hyperplanes(dim: int, bits: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.randn(bits, dim).astype(np.float64)
-
-
-def _bucket_expr(vec_col, planes: np.ndarray):
-    """Sign-bit bucket as a single integer column: bit i = (v · h_i) > 0."""
-    bits = [
-        F.when(
-            _dot(vec_col, F.array(*[F.lit(float(x)) for x in planes[i]])) > 0, 1
-        ).otherwise(0)
-        for i in range(planes.shape[0])
-    ]
-    bucket = F.lit(0)
-    for i, b in enumerate(bits):
-        bucket = bucket + (b * F.lit(int(2**i)))
-    return bucket
 
 
 def label_centroids(
@@ -203,10 +180,9 @@ def embedding_drift(
     stand-in for 'previous vs current snapshot'; pass pre-split frames
     through ``group_col`` when real snapshots exist): the cosine between
     the two halves' MEAN vectors, plus the mean-vector L2 shift. Text
-    drift monitors (`corpus_drift_metrics`) see vocabulary change; this
-    sees semantic change the vocabulary hides — an embedding model
-    upgrade, a topic shift, a scraper feeding different content under
-    the same words.
+    drift monitors see vocabulary change; this sees semantic change the
+    vocabulary hides — an embedding model upgrade, a topic shift, a
+    scraper feeding different content under the same words.
 
     Output: one row per group — (group, n_a, n_b, centroid_cosine,
     centroid_shift), 6dp. Cosine near 1 = stable; the alert threshold is

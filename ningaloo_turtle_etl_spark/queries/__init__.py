@@ -15,7 +15,6 @@ import ningaloo_turtle_etl_spark.queries.olap  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.privacy  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.projection  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.scalars  # noqa: F401
-import ningaloo_turtle_etl_spark.queries.selection  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.setops  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.spatial  # noqa: F401
 import ningaloo_turtle_etl_spark.queries.stats_queries  # noqa: F401

@@ -110,11 +110,10 @@ _NORM_X = "sqrt(list_sum(list_transform(CAST({0}.embedding AS DOUBLE[]), x -> x*
     """,
 )
 def embedding_near_dup_query(spark, sf_dir):
-    """Embedding-cosine near-dup (exact verify path, bounded candidate set
-    for the oracle; the LSH-blocked variant is the scale path and is
-    recall-tested in tests/test_llm_ops.py)."""
+    """Embedding-cosine near-dup pairs by exact cosine over a bounded
+    candidate set (the first 100 vectors)."""
     emb = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 100)
-    return embedding_near_dup_pairs(emb, threshold=0.3, use_lsh_blocking=False)
+    return embedding_near_dup_pairs(emb, threshold=0.3)
 
 
 @register(

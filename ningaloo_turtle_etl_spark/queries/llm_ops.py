@@ -50,10 +50,9 @@ _TOKENS = r"list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"
     """,
 )
 def dedup_exact(spark, sf_dir):
-    """Exact dedup via the zero-body-shuffle variant: only (fingerprint, id)
-    shuffles to elect keepers, then an id semi-join — document bodies stay
-    map-side. (The window form in operators.dedup.exact_dedup shuffles full
-    rows on the fingerprint; same answer, wrong trade at 100 TB.)"""
+    """Exact dedup: only (fingerprint, id) shuffles to elect keepers, then
+    an id semi-join — document bodies stay map-side. The oracle states the
+    same answer as a window over the fingerprint."""
     docs = load_table(spark, "documents", sf_dir)
     return exact_dedup_semi(docs).select("doc_id", "lang", "source", "n_chars")
 
@@ -2476,105 +2475,3 @@ def audio_wav_features(spark, sf_dir):
         F.round("e2", 6).alias("e2"),
         F.round("e3", 6).alias("e3"),
     ).orderBy("media_id")
-
-
-@register(
-    "cohens_kappa_langid",
-    f"""
-    WITH t AS (SELECT doc_id, lang, text, {_TOKENS} AS toks FROM documents),
-    s AS (SELECT doc_id, lang, {_SCORES_SQL} FROM t),
-    p AS (
-        SELECT lang,
-               CASE WHEN greatest(score_en,score_de,score_fr,score_es,score_zh) = 0
-                        THEN 'und'
-                    WHEN score_de = greatest(score_en,score_de,score_fr,score_es,score_zh) THEN 'de'
-                    WHEN score_en = greatest(score_en,score_de,score_fr,score_es,score_zh) THEN 'en'
-                    WHEN score_es = greatest(score_en,score_de,score_fr,score_es,score_zh) THEN 'es'
-                    WHEN score_fr = greatest(score_en,score_de,score_fr,score_es,score_zh) THEN 'fr'
-                    ELSE 'zh' END AS predicted_lang
-        FROM s
-    ),
-    cells AS (
-        SELECT lang AS a, predicted_lang AS b, CAST(COUNT(*) AS BIGINT) AS n
-        FROM p GROUP BY 1, 2
-    ),
-    tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nn FROM cells),
-    ra AS (SELECT a, CAST(SUM(n) AS BIGINT) AS na FROM cells GROUP BY a),
-    rb AS (SELECT b, CAST(SUM(n) AS BIGINT) AS nb FROM cells GROUP BY b),
-    ag AS (
-        SELECT CAST(COALESCE(SUM(CASE WHEN a = b THEN n END), 0) AS BIGINT)
-                   AS agree
-        FROM cells
-    ),
-    pc AS (
-        SELECT CAST(SUM(CAST(na AS HUGEINT) * CAST(nb AS HUGEINT))
-                    AS HUGEINT) AS pesum
-        FROM ra JOIN rb ON ra.a = rb.b
-    )
-    SELECT nn AS n_docs, agree AS n_agree,
-           ROUND(CAST(agree AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS po,
-           ROUND(CAST(pesum AS DOUBLE)
-                 / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)), 6) AS pe,
-           ROUND(CASE WHEN 1.0 - CAST(pesum AS DOUBLE)
-                              / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)) > 0
-                 THEN (CAST(agree AS DOUBLE) / CAST(nn AS DOUBLE)
-                       - CAST(pesum AS DOUBLE)
-                         / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)))
-                      / (1.0 - CAST(pesum AS DOUBLE)
-                               / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)))
-                 END, 6) AS kappa
-    FROM tot, ag, pc
-    """,
-)
-def cohens_kappa_langid(spark, sf_dir):
-    """Cohen's kappa between the labeled lang column and the marker-word
-    lang-ID prediction — the chance-corrected agreement scalar on top of
-    lang_id_confusion's matrix (raw accuracy rewards a degenerate
-    majority-class predictor; kappa subtracts the marginal-product
-    chance rate). All inputs are exact bigint cell counts from ONE
-    category-grain aggregate; po/pe/kappa run in one fixed double
-    association mirrored by the oracle. Category grain ≤ 6×6 — the
-    marginal join broadcasts trivially."""
-    from ningaloo_turtle_etl_spark.operators.text import with_lang_id
-
-    docs = load_table(spark, "documents", sf_dir)
-    cells = (
-        with_lang_id(docs)
-        .groupBy(F.col("lang").alias("a"), F.col("predicted_lang").alias("b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    ra = cells.groupBy("a").agg(F.sum("n").cast("long").alias("na"))
-    rb = cells.groupBy("b").agg(F.sum("n").cast("long").alias("nb"))
-    tot = cells.agg(
-        F.sum("n").cast("long").alias("nn"),
-        F.coalesce(
-            F.sum(F.when(F.col("a") == F.col("b"), F.col("n"))), F.lit(0)
-        ).cast("long").alias("agree"),
-    )
-    pe = (
-        ra.join(F.broadcast(rb), ra["a"] == rb["b"])
-        .agg(
-            F.sum(
-                F.col("na").cast("decimal(38,0)")
-                * F.col("nb").cast("decimal(38,0)")
-            ).alias("pesum")
-        )
-    )
-    j = tot.crossJoin(F.broadcast(pe))
-    nn = F.col("nn").cast("double")
-    po_raw = F.col("agree").cast("double") / nn
-    pe_raw = F.col("pesum").cast("double") / (nn * nn)
-    return j.select(
-        F.col("nn").alias("n_docs"),
-        F.col("agree").alias("n_agree"),
-        F.round(po_raw, 6).alias("po"),
-        F.round(pe_raw, 6).alias("pe"),
-        F.round(
-            F.when(
-                F.lit(1.0) - pe_raw > 0,
-                (po_raw - pe_raw) / (F.lit(1.0) - pe_raw),
-            ),
-            6,
-        ).alias("kappa"),
-    )

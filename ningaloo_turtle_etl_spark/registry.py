@@ -121,14 +121,9 @@ PRIORITY: list[str] = [
     "embedding_norm_stats",
     "spatial_tag_regions_expr",  # J7 as one Catalyst expression
     "temperature_mix_sample",
-    "stratified_sample_exact",
-    "corpus_drift_metrics",
-    "dsir_importance_select",
-    "weighted_sample_topn",
     "winsorized_value_stats",
     "forward_sel_step",  # M4 forward selection
     "snapshot_delta_report",
-    "training_shards",
     "varpart_fractions",  # M5 variation partitioning
     "gopher_repetition_stats",
     "gap_fill_daily_values",
@@ -153,14 +148,11 @@ PRIORITY: list[str] = [
     "hard_negative_mining",
     "source_gini",
     "boilerplate_removal",
-    "contrastive_negative_pairs",
     "spatial_hotspot_clusters",
     "event_trigram_sequences",
-    "leakage_safe_split",
     "source_quality_scorecard",
     "embedding_drift_by_label",
     "domain_reweight_mix",
-    "annotator_agreement",
     "k_anonymity_events",
     "k_anon_generalize_events",
     "fuzzy_part_clusters",
@@ -174,12 +166,10 @@ PRIORITY: list[str] = [
     "source_lang_diversity",
     "moment_profile_by_type",
     "entropy_l_diversity_events",
-    "kcenter_coreset_select",
     "audio_wav_features",
     "dp_value_median_exponential",
     "inequality_profile_by_source",
     "hmm_forward_first4",
-    "cohens_kappa_langid",
     "hmm_viterbi_first4",
 ]
 

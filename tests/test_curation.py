@@ -402,112 +402,6 @@ def test_pii_counts_match_redaction_markers(spark):
     assert r2["n_phone"] == 1 and r2["redacted_text"] == "call [PHONE] now"
 
 
-# --- training shards --------------------------------------------------------
-
-def test_assign_training_shards_deterministic_and_dense(spark):
-    from ningaloo_turtle_etl_spark.operators.curation import assign_training_shards
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, "documents", SF_DIR)
-    a = assign_training_shards(docs, n_shards=16)
-    rows = a.select("doc_id", "shard_id", "shard_pos").collect()
-    assert len(rows) == docs.count()
-    # positions are dense 0..n_i-1 within each shard
-    by_shard: dict[int, list[int]] = {}
-    for r in rows:
-        by_shard.setdefault(r["shard_id"], []).append(r["shard_pos"])
-    assert set(by_shard) == set(range(16))
-    for poss in by_shard.values():
-        assert sorted(poss) == list(range(len(poss)))
-    # stable under repartitioning of the input (retry/split-order stability)
-    b = assign_training_shards(docs.repartition(7), n_shards=16)
-    assert sorted(map(tuple, rows)) == sorted(
-        map(tuple, b.select("doc_id", "shard_id", "shard_pos").collect())
-    )
-
-
-def test_training_shard_manifest_consistent_with_assignment(spark):
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators.curation import (
-        assign_training_shards,
-        training_shard_manifest,
-    )
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, "documents", SF_DIR)
-    man = {r["shard_id"]: r for r in training_shard_manifest(docs, 16).collect()}
-    chk = {
-        r["shard_id"]: r
-        for r in assign_training_shards(docs, 16)
-        .groupBy("shard_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("w"))
-        .collect()
-    }
-    assert set(man) == set(chk)
-    for s in man:
-        assert man[s]["n_docs"] == chk[s]["n"]
-        assert man[s]["total_weight"] == chk[s]["w"]
-    total = sum(r["n_docs"] for r in man.values())
-    assert total == docs.count()
-    # balance: no shard more than 3x the mean at this n
-    mean = total / 16
-    assert max(r["n_docs"] for r in man.values()) < 3 * mean
-
-
-def test_training_shard_manifest_is_window_free(spark):
-    from ningaloo_turtle_etl_spark.operators.curation import training_shard_manifest
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, "documents", SF_DIR)
-    plan = training_shard_manifest(docs, 16)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "HashAggregate" in plan
-
-
-def test_write_training_shards_layout_order_and_pruning(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from ningaloo_turtle_etl_spark.operators.curation import (
-        assign_training_shards,
-        write_training_shards,
-    )
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, "documents", SF_DIR)
-    path = str(tmp_path / "shards")
-    write_training_shards(docs, path, n_shards=8)
-    back = spark.read.parquet(path)
-    assert back.count() == docs.count()
-    assert {r["shard_id"] for r in back.select("shard_id").distinct().collect()} \
-        == set(range(8))
-    # within a shard, file row order IS ascending shard_key (the promised
-    # reproducible read order, no shard_pos column needed)
-    one = spark.read.parquet(f"{path}/shard_id=3")
-    keys = [r["shard_key"] for r in one.collect()]
-    assert keys == sorted(keys) and len(keys) > 0
-    # membership matches the positional operator
-    expect = {
-        r["doc_id"]: r["shard_id"]
-        for r in assign_training_shards(docs, 8).select("doc_id", "shard_id").collect()
-    }
-    got = {r["doc_id"]: r["shard_id"] for r in back.select("doc_id", "shard_id").collect()}
-    assert got == expect
-    # manifest sidecar consistent and invisible to the directory reader
-    man = spark.read.parquet(f"{path}/_manifest")
-    assert man.count() == 8
-    assert "shard_key" not in man.columns
-    total = man.agg(F.sum("n_docs")).collect()[0][0]
-    assert total == docs.count()
-    # single-shard read prunes partitions at the scan
-    plan = back.filter(F.col("shard_id") == 3)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(shard_id" in plan
-
-
 def test_boilerplate_line_mode(spark):
     from ningaloo_turtle_etl_spark.operators.curation import (
         boilerplate_segment_removal,

@@ -8,7 +8,7 @@ import shutil
 
 import pyspark.sql.functions as F
 
-from ningaloo_turtle_etl_spark.operators.dedup import exact_dedup, exact_dedup_semi
+from ningaloo_turtle_etl_spark.operators.dedup import exact_dedup_semi
 from ningaloo_turtle_etl_spark.plans.dashboard import TracksDashboard
 from ningaloo_turtle_etl_spark.sources.tables import load_table, stream_table_dir
 from tests.conftest import SF_DIR
@@ -64,9 +64,21 @@ def test_streaming_ingest_feeds_dashboard(spark, tmp_path):
     assert batch_max.year > 2000
 
 
-def test_exact_dedup_semi_matches_window(spark):
+def test_exact_dedup_semi_matches_python_reference(spark):
+    """Keepers are the lowest doc_id per normalized text: case and runs of
+    whitespace (spaces, tabs, newlines, leading or trailing) do not
+    distinguish documents, any other character does."""
     rows = [(i, f"text {i % 7}") for i in range(50)]
+    rows += [
+        (50, "TEXT 3"),
+        (51, "  text\t\n 4 "),
+        (52, "Text  5\n"),
+        (53, "text 6."),
+        (54, "text6"),
+    ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(r["doc_id"] for r in exact_dedup(df).collect())
-    b = sorted(r["doc_id"] for r in exact_dedup_semi(df).collect())
-    assert a == b == list(range(7))
+    first: dict[str, int] = {}
+    for doc_id, text in sorted(rows):
+        first.setdefault(" ".join(text.split()).lower(), doc_id)
+    got = sorted(r["doc_id"] for r in exact_dedup_semi(df).collect())
+    assert got == sorted(first.values()) == [*range(7), 53, 54]

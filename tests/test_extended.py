@@ -1,6 +1,5 @@
 """Tests for extended coverage: JDBC reader construction, catalogue
-fetch/publish (offline), embedding near-dup LSH blocking, new relational
-helpers."""
+fetch/publish (offline), new relational helpers."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import zipfile
 import pyspark.sql.functions as F
 import pytest
 
-from ningaloo_turtle_etl_spark.operators.dedup import embedding_near_dup_pairs
 from ningaloo_turtle_etl_spark.operators.relational import (
     encounter_history_pivot,
     grouped_html_table,
@@ -65,28 +63,6 @@ def test_catalogue_publish_checks_path(tmp_path):
     assert cat.published["rid"] == str(p)
 
 
-def test_embedding_near_dup_lsh_blocking_recall(spark):
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, "embeddings", SF_DIR).filter(F.col("vec_id") < 200)
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            emb, threshold=0.3, use_lsh_blocking=False
-        ).collect()
-    }
-    blocked = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            emb, threshold=0.3, use_lsh_blocking=True, bits=4, tables=8
-        ).collect()
-    }
-    assert blocked <= exact  # verification makes blocking precision-exact
-    if exact:
-        assert len(blocked & exact) / len(exact) >= 0.5  # candidate recall
-
-
 def test_select_regex_no_match_raises(spark):
     df = spark.createDataFrame([(1,)], "x long")
     with pytest.raises(ValueError):
@@ -117,8 +93,7 @@ def test_encounter_history_clamps_to_binary(spark):
 
 
 def test_winsorize_clips_to_quantiles_exact_and_approx(spark):
-    import pyspark.sql.functions as F
-
+    
     from ningaloo_turtle_etl_spark.operators.relational import winsorize
     from ningaloo_turtle_etl_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
@@ -142,8 +117,7 @@ def test_winsorize_clips_to_quantiles_exact_and_approx(spark):
 
 
 def test_winsorize_auto_mode_and_sketch_plan(spark):
-    import pyspark.sql.functions as F
-
+    
     from ningaloo_turtle_etl_spark.operators import relational
     from ningaloo_turtle_etl_spark.operators.relational import winsorize
 

@@ -8,8 +8,8 @@ inside a function, and measure the closure. Importing ``a.b.c`` runs the
 
 The closure may reach only the operators the paper's batch ETL and feed
 use (``cache``, ``quality``, ``relational``), and stays within a line
-budget, so a helper borrowed from the curation, text or selection
-operators cannot pull thousands of lines into the paper layers unseen.
+budget, so a helper borrowed from the curation or text operators
+cannot pull thousands of lines into the paper layers unseen.
 """
 
 from __future__ import annotations

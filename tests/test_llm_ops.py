@@ -9,7 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from ningaloo_turtle_etl_spark.operators.dedup import (
-    exact_dedup,
+    exact_dedup_semi,
     minhash_near_dup_pairs,
 )
 from ningaloo_turtle_etl_spark.operators.multimodal import (
@@ -39,7 +39,7 @@ def docs(spark):
 
 
 def test_exact_dedup_keeps_lowest_id(spark, docs):
-    kept = sorted(r["doc_id"] for r in exact_dedup(docs).collect())
+    kept = sorted(r["doc_id"] for r in exact_dedup_semi(docs).collect())
     assert kept == [1, 3, 4, 5]  # 2 collapsed into 1
 
 
@@ -1682,37 +1682,6 @@ def test_jpeg_decoder_tolerates_fill_bytes():
     padded = jpg[:2] + b"\xff\xff" + jpg[2:]
     _, _, pix = _jpeg_decode(padded)
     assert (pix == base).all()
-
-
-def test_cohens_kappa_langid_reference(spark):
-    """Kappa pinned by an independent replay: collect the (lang,
-    predicted_lang) pairs from with_lang_id on sf0.001 and recompute
-    po/pe/kappa from the raw confusion counts in Python."""
-    from collections import Counter
-
-    from ningaloo_turtle_etl_spark.operators.text import with_lang_id
-    from ningaloo_turtle_etl_spark.registry import queries
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    got = queries()["cohens_kappa_langid"](spark, SF_DIR).collect()[0]
-
-    pairs = [
-        (r["lang"], r["predicted_lang"])
-        for r in with_lang_id(load_table(spark, "documents", SF_DIR))
-        .select("lang", "predicted_lang")
-        .collect()
-    ]
-    n = len(pairs)
-    agree = sum(1 for a, b in pairs if a == b)
-    ra = Counter(a for a, _ in pairs)
-    rb = Counter(b for _, b in pairs)
-    pesum = sum(ra[k] * rb[k] for k in ra if k in rb)
-    po, pe = agree / n, pesum / (n * n)
-    assert got["n_docs"] == n and got["n_agree"] == agree
-    assert got["po"] == round(po, 6)
-    assert got["pe"] == round(pe, 6)
-    assert got["kappa"] == round((po - pe) / (1 - pe), 6)
 
 
 def test_pca_round_half_up_matches_spark(spark):

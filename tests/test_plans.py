@@ -169,22 +169,6 @@ def test_spatial_tag_regions_expr_is_pure_codegen(spark):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
-def test_weighted_sample_plan_is_take_ordered(spark):
-    from ningaloo_turtle_etl_spark.operators.selection import weighted_sample_topn
-    from ningaloo_turtle_etl_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR
-
-    docs = load_table(spark, "documents", SF_DIR)
-    plan = (
-        weighted_sample_topn(docs, 50)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange" not in plan  # map-side keying + per-partition heaps only
-
-
 def test_minhash_md5_family_plan_shape(spark):
     # The pipeline must keep its scale-critical shapes: hash-joined band
     # buckets (never a nested loop / cartesian), payload-free candidate
@@ -249,16 +233,6 @@ def test_event_sessions_single_exchange_shared_by_windows_and_rollup(spark):
     plan = plan_of(spark, "event_sessions")
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Exchange rangepartitioning" not in plan
-
-
-def test_contrastive_negatives_plan_is_map_only(spark):
-    """The pool rides in as an array literal: no join, no window, no
-    exchange anywhere — pure map-side candidate selection."""
-    plan = plan_of(spark, "contrastive_negative_pairs")
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-    assert "Window" not in plan
-    assert "EvalPython" not in plan
 
 
 def test_boilerplate_plan_shape(spark):
@@ -328,7 +302,7 @@ def test_ppjoin_jaccard_pairs_prefix_equi_join_jvm_only(spark):
 
 def test_lloyd_assignment_scan_has_no_join(spark):
     """The trained Lloyd's assignment pass (the pass every
-    pq_train_codebooks_lloyd / train_ivf_pq iteration runs) must be a
+    pq_train_codebooks_lloyd / trained_ivf_pq_topk iteration runs) must be a
     MAP-SIDE scan against literal centroids: no join, and the one
     exchange carries only the merged (g, s, code) cell grid above the
     Arrow assignment stage — vectors never shuffle. Checked on the grid

@@ -213,54 +213,6 @@ def test_deterministic_sample_matches_md5_rule(spark, ids, rate):
     assert kept == expect
 
 
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=40), min_size=1, max_size=8),
-    st.integers(min_value=0, max_value=120),
-)
-def test_hamilton_quotas_exact_and_bounded(spark, counts, n):
-    """Largest-remainder quotas: each stratum gets ≥ its floor share,
-    ≤ its row count, and the total is exactly min(n, corpus)."""
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.selection import stratum_quotas
-
-    rows = [(f"s{i}_{j}", f"s{i}") for i, c in enumerate(counts) for j in range(c)]
-    df = spark.createDataFrame(rows, "doc_id string, source string")
-    got = {r["source"]: r["quota"] for r in stratum_quotas(df, n, "source").collect()}
-    total = sum(counts)
-    assert sum(got.values()) == min(n, total)
-    for i, c in enumerate(counts):
-        q = got[f"s{i}"]
-        # floor share is the lower bound until the stratum-size cap bites
-        # (n > corpus makes the floor share exceed the stratum).
-        assert min(math.floor(n * c / total), c) <= q <= c
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=30), min_size=5, max_size=40),
-    st.integers(min_value=1, max_value=10),
-)
-def test_weighted_sample_is_partition_invariant_and_nested(spark, weights, n):
-    """Efraimidis–Spirakis top-n: identical result under repartitioning
-    (the determinism a retry needs), and top-n is a prefix of top-(n+k)."""
-    from ningaloo_turtle_etl_spark.operators.selection import weighted_sample_topn
-
-    rows = [(i, w) for i, w in enumerate(weights)]
-    df = spark.createDataFrame(rows, "doc_id long, n_chars long")
-    a = [r["doc_id"] for r in weighted_sample_topn(df, n, "n_chars").collect()]
-    b = [
-        r["doc_id"]
-        for r in weighted_sample_topn(df.repartition(7), n, "n_chars").collect()
-    ]
-    big = [
-        r["doc_id"] for r in weighted_sample_topn(df, n + 5, "n_chars").collect()
-    ]
-    assert a == b
-    assert big[: len(a)] == a  # ranked by the same keys → nested prefixes
-
-
 _WORDS = st.sampled_from(
     "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
 )
@@ -296,40 +248,6 @@ def test_minhash_md5_verify_stage_is_exact_on_random_docs(spark, texts):
         for b in range(a + 1, len(texts)):
             if texts[a] == texts[b]:
                 assert got.get((a, b)) == 1.0, (a, b)
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 10**6), st.floats(1e-3, 1e12)),
-        min_size=5,
-        max_size=60,
-        unique_by=lambda t: t[0],
-    )
-)
-def test_weighted_sample_matches_numpy_reference_at_any_weight_scale(spark, rows):
-    # Property: the A-Res log-key selection equals the python reference for
-    # arbitrary positive weights spanning nine orders of magnitude — the
-    # regime where the old rounded raw key degenerated to id order.
-    import hashlib
-    import math
-
-    from ningaloo_turtle_etl_spark.operators.selection import weighted_sample_topn
-
-    df = spark.createDataFrame(rows, "doc_id long, n_chars double")
-    n = min(10, len(rows))
-    got = [
-        r["doc_id"] for r in weighted_sample_topn(df, n, weight_col="n_chars").collect()
-    ]
-
-    def logkey(doc_id, w):
-        h = int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16)
-        return round(math.log((h + 1.0) / 4294967297.0), 12) / w
-
-    expect = [
-        t[0] for t in sorted(rows, key=lambda t: (-logkey(t[0], t[1]), t[0]))[:n]
-    ]
-    assert got == expect
 
 
 # --- snapshot diff vs a dict reference --------------------------------------

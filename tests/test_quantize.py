@@ -1,7 +1,7 @@
 """Trained IVF-PQ tests: the distributed Lloyd trainer, the closed
-train→encode→serve loop and its recall vs brute force, train-once/
-serve-many persistence, and the Arrow stages pinned against the Catalyst
-expression forms they replaced, on the real embeddings table."""
+train→encode→serve loop and its recall vs brute force, and the Arrow
+stages pinned against the Catalyst expression forms they replaced, on the
+real embeddings table."""
 
 from __future__ import annotations
 
@@ -218,101 +218,6 @@ def test_trained_ivf_pq_topk_closed_loop(spark):
 
     with pytest.raises(ValueError):
         trained_ivf_pq_topk(emb, queries, k=5, shortlist=3)
-
-
-def test_trained_ivf_pq_train_once_serve_many(spark, tmp_path):
-    """Train-once/serve-many (r12 verdict item 7): the standalone
-    train / write / load / encode / write-index / load-index / serve
-    pipeline must produce EXACTLY the fused trained_ivf_pq_topk rows —
-    the persisted parquet artifacts (trained params + cell-partitioned
-    index) are a faithful serialization, not a parallel implementation.
-    Also pins: the reloaded params equal the trained ones value-for-
-    value, and the index parquet is laid out partitioned by cell."""
-    import os
-
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        encode_ivf_pq,
-        load_ivf_pq_index,
-        load_trained_ivf_pq,
-        serve_trained_ivf_pq_topk,
-        train_ivf_pq,
-        trained_ivf_pq_topk,
-        write_ivf_pq_index,
-        write_trained_ivf_pq,
-    )
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 6)
-    kw = dict(
-        k_cells=4, coarse_iterations=2, m_subvectors=4, k_codes=4,
-        pq_iterations=2,
-    )
-
-    params = train_ivf_pq(emb, **kw)
-    ppath = str(tmp_path / "trained_params")
-    write_trained_ivf_pq(spark, params, ppath)
-    loaded = load_trained_ivf_pq(spark, ppath)
-    assert loaded.dim == params.dim
-    assert loaded.cents == [[int(x) for x in c] for c in params.cents]
-    assert loaded.books == [
-        [[int(x) for x in c] for c in bk] for bk in params.books
-    ]
-
-    enc = encode_ivf_pq(emb, loaded)
-    ipath = str(tmp_path / "ivf_pq_index")
-    write_ivf_pq_index(enc, ipath)
-    # cell-partitioned layout: probe-side partition pruning is the
-    # on-disk probe
-    assert any(
-        d.startswith("cell=") for d in os.listdir(ipath)
-    ), "index parquet must be partitioned by cell"
-
-    served = serve_trained_ivf_pq_topk(
-        load_ivf_pq_index(spark, ipath), emb, queries, loaded,
-        k=5, nprobe=2, shortlist=100,
-    )
-    fused = trained_ivf_pq_topk(
-        emb, queries, k=5, nprobe=2, shortlist=100, **kw
-    )
-    cols = ["query_id", "vec_id", "distance", "rank"]
-    srows = sorted(tuple(r[c] for c in cols) for r in served.collect())
-    frows = sorted(tuple(r[c] for c in cols) for r in fused.collect())
-    assert srows == frows
-
-
-def test_trained_ivf_pq_incremental_encode_batches(spark, tmp_path):
-    """Production index maintenance under frozen trained params: new
-    corpus batches are encoded INDEPENDENTLY (map-only, no retrain, no
-    contact with earlier batches) and unioned into the index; because
-    encode is a deterministic per-row argmin under fixed parameters,
-    the batched union must equal the one-shot full encode row-for-row —
-    the property that makes incremental 100 TB index upserts safe."""
-    from ningaloo_turtle_etl_spark.operators.quantize import (
-        encode_ivf_pq,
-        train_ivf_pq,
-    )
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    params = train_ivf_pq(
-        emb, k_cells=4, coarse_iterations=2, m_subvectors=4, k_codes=4,
-        pq_iterations=2,
-    )
-    full = encode_ivf_pq(emb, params)
-    batched = encode_ivf_pq(
-        emb.filter(F.col("vec_id") % 3 == 0), params
-    ).unionByName(
-        encode_ivf_pq(emb.filter(F.col("vec_id") % 3 == 1), params)
-    ).unionByName(
-        encode_ivf_pq(emb.filter(F.col("vec_id") % 3 == 2), params)
-    )
-    cols = ["vec_id", "cell", "code"]
-
-    def rows(df):
-        return sorted(
-            (r["vec_id"], r["cell"], tuple(r["code"])) for r in df.collect()
-        )
-
-    assert rows(batched) == rows(full)
 
 
 def test_lloyd_arrow_grid_matches_catalyst_reference(spark):

@@ -4,6 +4,9 @@ keep it exhaustive and keep the critical components inside the window."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 from ningaloo_turtle_etl_spark import registry
 
 WINDOW = 50
@@ -17,6 +20,14 @@ def test_priority_list_matches_registry_exactly():
         f"stale={set(registry.PRIORITY) - names}"
     )
     assert len(registry.PRIORITY) == len(set(registry.PRIORITY))
+
+
+def test_readme_states_the_registry_size():
+    readme = (Path(__file__).resolve().parent.parent / "README.md").read_text()
+    counts = re.findall(r"[Tt]he registry holds (\d+) queries", readme)
+    assert counts == [str(len(registry.PRIORITY))], (
+        f"README states {counts}, the registry holds {len(registry.PRIORITY)}"
+    )
 
 
 def test_critical_components_inside_driver_window():
@@ -90,14 +101,9 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "embedding_norm_stats",
         "spatial_tag_regions_expr",
         "temperature_mix_sample",
-        "stratified_sample_exact",
-        "corpus_drift_metrics",
-        "dsir_importance_select",
-        "weighted_sample_topn",
         "winsorized_value_stats",
         "forward_sel_step",
         "snapshot_delta_report",
-        "training_shards",
         "varpart_fractions",
         "gopher_repetition_stats",
         "gap_fill_daily_values",
@@ -122,14 +128,11 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "hard_negative_mining",
         "source_gini",
         "boilerplate_removal",
-        "contrastive_negative_pairs",
         "spatial_hotspot_clusters",
         "event_trigram_sequences",
-        "leakage_safe_split",
         "source_quality_scorecard",
         "embedding_drift_by_label",
         "domain_reweight_mix",
-        "annotator_agreement",
         "k_anonymity_events",
         "k_anon_generalize_events",
         "fuzzy_part_clusters",
@@ -142,11 +145,9 @@ def test_out_of_window_queries_are_redundant_or_pytest_pinned():
         "source_lang_diversity",
         "moment_profile_by_type",
         "entropy_l_diversity_events",
-        "kcenter_coreset_select",
         "audio_wav_features",
         "dp_value_median_exponential",
         "hmm_forward_first4",
-        "cohens_kappa_langid",
         "hmm_viterbi_first4",
         "inequality_profile_by_source",
         # F9-F11, and the split forms of text_token_quality / patch_season /

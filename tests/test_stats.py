@@ -191,34 +191,6 @@ def test_gini_concentration_known_values(spark):
     assert r["gini"] == 0.25 and r["total_rows"] == 4 and r["n_keys"] == 2
 
 
-def test_contrastive_negatives_deterministic(spark):
-    import hashlib as _h
-
-    from ningaloo_turtle_etl_spark.operators.selection import (
-        contrastive_negatives,
-    )
-
-    rows = [(i, "abc"[i % 3]) for i in range(9)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = contrastive_negatives(df, "doc_id", "source", k=2, pool_n=100)
-    a = sorted(map(tuple, out.collect()))
-    assert a == sorted(map(tuple, out.collect()))  # retry-stable
-    per = {}
-    grp = dict(rows)
-    for anchor, neg, rank in a:
-        assert grp[anchor] != grp[neg]  # never an in-group negative
-        per.setdefault(anchor, []).append((rank, neg))
-    assert all(len(v) == 2 for v in per.values())
-    # anchor 0's picks replay the md5 pair order exactly
-    cands = [i for i in range(9) if grp[i] != grp[0]]
-    keyed = sorted(
-        (int(_h.md5(f"0#{c}".encode()).hexdigest()[:15], 16), str(c))
-        for c in cands
-    )
-    expect = [int(c) for _, c in keyed[:2]]
-    assert [n for _, n in sorted(per[0])] == expect
-
-
 def test_class_diversity_profile_hand_cases(spark):
     """Uniform 2-class group: H = ln2, effective = 2, simpson = hhi =
     0.5; monoculture: H = 0, effective = 1, hhi = 1."""
